@@ -62,38 +62,21 @@ object Bench {
     "q_identity_incremental", "q_dedup_jaccard_prefix",
     "q_dedup_decontam_incremental")
 
-  /** Drain the async listener bus before snapshotting task-metric
-    * counters: `onTaskEnd` events are delivered asynchronously, so
-    * without a drain the tail of rep N's events lands in rep N+1's
-    * deltas and the ledger misattributes exactly the stalls it exists
-    * to classify (ADVICE r13). `SparkContext.listenerBus` is
-    * `private[spark]`, which compiles to a public JVM method, so plain
-    * reflection reaches it; `waitUntilEmpty(timeout)` returns as soon
-    * as the bus is idle (usually <1 ms). Falls back to a short sleep
-    * if the internal shape ever changes or the drain times out —
-    * logging ONCE so a reflection regression is visible instead of
-    * silently degrading every rep to a sleep (ADVICE r14). Fatal
-    * errors propagate; an interrupt is re-flagged, not swallowed. */
-  @volatile private var drainFallbackLogged = false
-  private[graft] def drainListeners(spark: SparkSession): Unit =
-    try {
-      val sc = spark.sparkContext
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      val ms = bus.getClass.getMethods.filter(_.getName == "waitUntilEmpty")
-      ms.find(_.getParameterCount == 1) match {
-        case Some(m) => m.invoke(bus, java.lang.Long.valueOf(3000L))
-        case None => ms.find(_.getParameterCount == 0).foreach(_.invoke(bus))
-      }
-    } catch {
-      case _: InterruptedException => Thread.currentThread().interrupt()
-      case scala.util.control.NonFatal(e) =>
-        if (!drainFallbackLogged) {
-          drainFallbackLogged = true
-          System.err.println(
-            s"[bench] listener-bus drain fell back to sleep(250): $e")
-        }
-        Thread.sleep(250)
-    }
+  /** Isolate runs AND bound accumulated state: clearCache drops
+    * SQL-cached plans, but localCheckpoint/persist blocks survive it
+    * and pile up across ~200 queries until late queries pay eviction
+    * + GC (an early full bench ran 2-10x the local times for exactly
+    * the checkpoint-heavy late-positioned queries). Unpersist every
+    * RDD explicitly each run, and periodically force a GC so the
+    * ContextCleaner actually releases shuffle files / broadcasts
+    * (they are weak-reference-cleaned, i.e. only on GC — a 24g heap
+    * may otherwise not GC for the whole run). */
+  private val runs = new java.util.concurrent.atomic.AtomicInteger(0)
+  private[graft] def releaseState(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+    if (runs.incrementAndGet() % 8 == 0) System.gc()
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -123,62 +106,26 @@ object Bench {
     // the fact because wall time was the only record — this makes
     // every future stall self-describing at zero overhead (the
     // listener adds per-task counter bumps only).
-    val repSpillMem = new java.util.concurrent.atomic.AtomicLong(0)
-    val repSpillDisk = new java.util.concurrent.atomic.AtomicLong(0)
-    val repShufWrite = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) {
-          repSpillMem.addAndGet(m.memoryBytesSpilled)
-          repSpillDisk.addAndGet(m.diskBytesSpilled)
-          repShufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        }
-      }
-    })
-    def gcMillis: Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(_.getCollectionTime).sum
-    }
-
-    var nRun = 0
+    val metrics = QueryMetrics.install(spark)
     def timeOnce(q: graft.queries.QueryDef): Double = {
-      val (gc0, sm0, sd0, sw0) =
-        (gcMillis, repSpillMem.get(), repSpillDisk.get(), repShufWrite.get())
-      val t0 = System.nanoTime()
       // a per-query failure must be LOUD: print it, and record the
       // query as -1 in the map (a silent catch turns a red query into
       // a fast-looking number)
-      val err = try { q.fn(spark, sfDir).count(); None }
-                catch { case scala.util.control.NonFatal(e) => Some(e) }
-      val dt = (System.nanoTime() - t0) / 1e9
+      val (err, r) = metrics.measure {
+        try { q.fn(spark, sfDir).count(); None }
+        catch { case scala.util.control.NonFatal(e) => Some(e) }
+      }
       err.foreach { e =>
         System.err.println(s"[bench] FAILED ${q.name}: ${e.getClass.getName}: " +
           String.valueOf(e.getMessage).replaceAll("\\s+", " ").take(300))
       }
-      // late onTaskEnd events would otherwise land in the NEXT rep's
-      // deltas (the bus is async); drain costs <1 ms when idle
-      drainListeners(spark)
-      System.err.println(f"[bench-rep] q=${q.name} wall=$dt%.2fs " +
-        f"gc=${(gcMillis - gc0) / 1000.0}%.2fs " +
-        f"spill_mem=${(repSpillMem.get() - sm0) / 1048576}%dMB " +
-        f"spill_disk=${(repSpillDisk.get() - sd0) / 1048576}%dMB " +
-        f"shuffle_write=${(repShufWrite.get() - sw0) / 1048576}%dMB")
-      // Isolate queries AND bound accumulated state: clearCache drops
-      // SQL-cached plans, but localCheckpoint/persist blocks survive it
-      // and pile up across ~200 queries until late queries pay eviction
-      // + GC (driver's r2 bench ran 2-10x the local times for exactly
-      // the checkpoint-heavy late-positioned queries). Unpersist every
-      // RDD explicitly each run, and periodically force a GC so the
-      // ContextCleaner actually releases shuffle files / broadcasts
-      // (they are weak-reference-cleaned, i.e. only on GC — a 24g heap
-      // may otherwise not GC for the whole run).
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      nRun += 1
-      if (nRun % 8 == 0) System.gc()
-      if (err.isDefined) -1.0 else dt
+      System.err.println(f"[bench-rep] q=${q.name} wall=${r.wallS}%.2fs " +
+        f"gc=${r.gcMs / 1000.0}%.2fs " +
+        f"spill_mem=${r.memSpillBytes / 1048576}%dMB " +
+        f"spill_disk=${r.diskSpillBytes / 1048576}%dMB " +
+        f"shuffle_write=${r.shuffleWriteBytes / 1048576}%dMB")
+      releaseState(spark)
+      if (err.isDefined) -1.0 else r.wallS
     }
 
     // even-length medians take the MEAN of the two middles (r18): the

@@ -34,10 +34,11 @@ object GraftSession {
       // memory: with a static 32, 10× the rows makes every shuffle
       // partition 10× larger, and the sort-heavy plans go superlinear
       // once a partition outgrows cache (q_dedup_jaccard_prefix
-      // measured 15.3× wall for 10× rows at sf10). A/B'd via
-      // tools/ProfilePartitions at both scales before changing the
-      // default: at sf10, 8× initial partitions cut the worst query
-      // ~2× (105-175 s → 71-81 s) and minhash LSH ~20%; at sf0.1
+      // measured 15.3× wall for 10× rows at sf10). A/B'd at both
+      // scales before changing the default (tools.Profile with
+      // SPARK_GRAFT_EXTRA_CONF repeats it): at sf10, 8× initial
+      // partitions cut the worst query ~2× (105-175 s → 71-81 s) and
+      // minhash LSH ~20%; at sf0.1
       // (driver gate scale) every probe was neutral-to-faster —
       // parallelismFirst coalescing absorbs the small-stage overhead.
       // Same principle a cluster deployment uses: initialPartitionNum
@@ -49,7 +50,7 @@ object GraftSession {
       .config("spark.sql.parquet.aggregatePushdown", "true")
       // The generated-class cache defaults to 100 entries; this
       // engine's query surface compiles ~1,500 distinct codegen units
-      // (measured via CodegenMetrics, tools/CodegenCacheProbe), so at
+      // (measured via CodegenMetrics, tools.Profile's compilations), so at
       // the default every pass over the suite recompiles ~1,300
       // evicted units (~40 s of serialized driver-side janino work)
       // and even a single heavy query (90 units) can evict itself.

@@ -137,7 +137,12 @@ object IndexMaintenance {
     * Fails fast: on the first task failure no further items start,
     * in-flight items finish, and the first exception is rethrown
     * unwrapped. Serial when the pool or item count is 1 — same stack
-    * traces, no pool overhead. */
+    * traces, no pool overhead.
+    *
+    * Items run under the CALLER's Spark local properties and active
+    * session, captured per call the way Spark's own exchange threads
+    * capture them: a cached pool thread otherwise keeps the job group,
+    * description and tags of whichever caller created it. */
   def inParallel[A, B](items: Seq[A],
       parallelism: Int = FamilyApplyParallelism)(f: A => B): Seq[B] = {
     if (items.lengthCompare(1) <= 0 || parallelism <= 1) return items.map(f)
@@ -145,17 +150,21 @@ object IndexMaintenance {
     val results = new Array[Any](idx.size)
     val next = new java.util.concurrent.atomic.AtomicInteger(0)
     val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    def work(): Unit = {
+      var i = next.getAndIncrement()
+      while (i < idx.size && failure.get() == null) {
+        try results(i) = f(idx(i))
+        catch { case t: Throwable => failure.compareAndSet(null, t): Unit }
+        i = next.getAndIncrement()
+      }
+    }
+    val session = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
     val workers = (1 to math.min(idx.size, parallelism)).map(_ =>
-      familyPool.submit(new Runnable {
-        def run(): Unit = {
-          var i = next.getAndIncrement()
-          while (i < idx.size && failure.get() == null) {
-            try results(i) = f(idx(i))
-            catch { case t: Throwable => failure.compareAndSet(null, t): Unit }
-            i = next.getAndIncrement()
-          }
-        }
-      }))
+      session match {
+        case Some(s: org.apache.spark.sql.classic.SparkSession) =>
+          org.apache.spark.sql.execution.SQLExecution.withThreadLocalCaptured(s, familyPool)(work())
+        case _ => familyPool.submit(new Runnable { def run(): Unit = work() })
+      })
     workers.foreach(_.get())
     if (failure.get() != null) throw failure.get()
     results.toSeq.asInstanceOf[Seq[B]]

@@ -138,7 +138,7 @@ object LexicalIndex {
     // append-apply's oldLen keyed read otherwise scans every doclen
     // bucket AND pays the base dir's bloom build inside ITS wall (a
     // corpus-proportional 3.3 s at sf10 for a 500-doc delta — measured,
-    // ProfileIncrementalIndex). Built here the pass rides the build
+    // BenchScale x_bm25_*). Built here the pass rides the build
     // (which already scanned the corpus), every apply is
     // delta-proportional from apply #1, and indexBatchKeys stays
     // idempotent for the per-apply new-dir sidecars.

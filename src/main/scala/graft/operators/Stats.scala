@@ -36,7 +36,7 @@ object Stats {
     * columns `n`, `s_i` (Σxᵢ), `p_i_j` (Σxᵢxⱼ for i ≤ j), all exact —
     * one row per group (global when `groupCols` is empty).
     *
-    * TWO ACCUMULATION PATHS, measured not guessed (ProfileMoments
+    * TWO ACCUMULATION PATHS, measured not guessed (an
     * A/B at sf0.1 AND the generated sf1): the DEFAULT is the
     * DECIMAL(38,0) sums — Spark's Decimal is long-backed with
     * codegen'd arithmetic, and the decimal aggregate measured ~2×

@@ -1475,7 +1475,7 @@ object Sources {
     // file lookup (no partition discovery — the partition column is
     // not needed, underscore sidecars are filtered by Spark's listing
     // rules), so the WHOLE build is one non-adaptive aggregation job.
-    val scan = bulkScan(spark, tableDir, todo,
+    val scan = bulkScan(nonAdaptive(spark), tableDir, todo,
       counted.collectFirst { case (_, ms) if ms.nonEmpty => ms.head }, keyCol)
     val aggs: Seq[org.apache.spark.sql.Column] = sized.map { case (dir, n) =>
       val items = math.max(n, 1L)
@@ -1488,7 +1488,7 @@ object Sources {
           org.apache.spark.sql.catalyst.expressions.Literal(numBits), 0, 0)
           .toAggregateExpression()).as(dir)
     }
-    val row = withoutAqe(spark) { scan.agg(aggs.head, aggs.tail: _*).head() }
+    val row = scan.agg(aggs.head, aggs.tail: _*).head()
     sized.zipWithIndex.foreach { case ((dir, n), i) =>
       val bloom =
         if (row.isNullAt(i)) // zero-row dir: aggregate saw no input
@@ -1574,11 +1574,13 @@ object Sources {
       dir: org.apache.hadoop.fs.Path): (Long, Seq[org.apache.parquet.schema.MessageType]) = {
     var total = 0L
     val schemas = scala.collection.mutable.ArrayBuffer.empty[org.apache.parquet.schema.MessageType]
-    val it = fs.listFiles(dir, true)
-    while (it.hasNext) {
-      val st = it.next()
-      val name = st.getPath.getName
-      if (name.endsWith(".parquet") && !name.startsWith("_") && !name.startsWith(".")) {
+    // depth-first in listing order, as listFiles(dir, true) walks, but
+    // through listStatus: listFiles builds a LocatedFileStatus, which
+    // asks every entry for its permission — a forked `ls -ld` per file
+    // on a local filesystem without the native Hadoop library
+    def visit(p: org.apache.hadoop.fs.Path): Unit = fs.listStatus(p).foreach { st =>
+      if (st.isDirectory) visit(st.getPath)
+      else if (isDataFile(st.getPath.getName)) {
         val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
           org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
         try {
@@ -1587,6 +1589,7 @@ object Sources {
         } finally reader.close()
       }
     }
+    visit(dir)
     (total, schemas.toSeq)
   }
 
@@ -1615,40 +1618,15 @@ object Sources {
         col(wantedCol))
   }
 
-  /** Run `action` with adaptive execution OFF (restored after): AQE
-    * splits a single aggregation into per-stage jobs; the bulk index
-    * builders promise ONE job regardless of dir count.
-    *
-    * The flag is SESSION-GLOBAL mutable state, and these builders run
-    * CONCURRENTLY on the family pool (partitioned index builds and
-    * routed applies, grouped appends). A naive save/restore races
-    * there: entrant B can read A's in-flight "false" as its "previous"
-    * value and restore "false", wedging AQE off for the session's
-    * remainder — measured as a ~2x wall inflation on every later
-    * AQE-coalesced query (r19 full-suite bench: identity-family
-    * queries ran 33 jobs / 2181 tasks after the wedge vs 80 jobs /
-    * 92 tasks fresh). Depth-counted per session: the FIRST entrant
-    * saves the real outer value, only the LAST exit restores it.
-    * While any builder is inside, concurrent sibling publishes plan
-    * without AQE — perf-only, bounded to the publish window, and the
-    * builders' own one-job promise is exactly the point. */
-  private val aqeDepth =
-    new java.util.IdentityHashMap[SparkSession, (Int, String)]()
-  private[sources] def withoutAqe[T](spark: SparkSession)(action: => T): T = {
-    val key = "spark.sql.adaptive.enabled"
-    aqeDepth.synchronized {
-      val cur = aqeDepth.get(spark)
-      if (cur == null) {
-        val prev = spark.conf.get(key, "true")
-        spark.conf.set(key, "false")
-        aqeDepth.put(spark, (1, prev))
-      } else aqeDepth.put(spark, (cur._1 + 1, cur._2))
-    }
-    try action finally aqeDepth.synchronized {
-      val cur = aqeDepth.get(spark)
-      if (cur._1 <= 1) { aqeDepth.remove(spark); spark.conf.set(key, cur._2) }
-      else aqeDepth.put(spark, (cur._1 - 1, cur._2))
-    }
+  /** A clone of `spark` with adaptive execution OFF: AQE splits a
+    * single aggregation into per-stage jobs, and a bulk index build
+    * promises ONE job regardless of dir count. The flag is set on the
+    * clone's own conf, so index builds running concurrently on the
+    * family pool change nothing that any other query plans with. */
+  private def nonAdaptive(spark: SparkSession): SparkSession = {
+    val s = org.apache.spark.sql.graftbridge.Bridge.cloneSession(spark)
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    s
   }
 
   /** Loud schema-evolution check for the bulk index builders: EVERY
@@ -1820,11 +1798,11 @@ object Sources {
     // all-null zonemap from a missing column would mark the dir
     // 'empty' and range scans would silently skip its rows
     requireColumnEverywhere(todo, counted, statCol, "indexBatchStats")
-    val grouped = bulkScan(spark, tableDir, todo,
+    val grouped = bulkScan(nonAdaptive(spark), tableDir, todo,
       counted.collectFirst { case (_, ms) if ms.nonEmpty => ms.head }, statCol)
       .groupBy("_bdir")
       .agg(fmin(col(statCol)).as("_lo"), fmax(col(statCol)).as("_hi"))
-    val stats = withoutAqe(spark) { grouped.collect() }
+    val stats = grouped.collect()
       .map(r => r.getString(0) -> ((r.get(1), r.get(2)))).toMap
     todo.foreach { dir =>
       val body = stats.get(dir) match {
@@ -1920,8 +1898,8 @@ object Sources {
     assembleManifest(spark, tableDir, kept) match {
       case Some(df) => bounded(df)
       case None => // every dir excluded: schema-only plan, zero files
-        val schema = assembleManifest(spark, tableDir, entries)
-          .getOrElse(spark.read.parquet(tableDir)).schema
+        val schema = manifestSchema(spark, tableDir, entries)
+          .getOrElse(spark.read.parquet(tableDir).schema)
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     }
@@ -1970,8 +1948,8 @@ object Sources {
     assembleManifest(spark, tableDir, kept) match {
       case Some(df) => df.filter(col(keyCol).isin(keys: _*))
       case None => // every dir excluded: schema-only plan, zero files
-        val schema = assembleManifest(spark, tableDir, entries)
-          .getOrElse(spark.read.parquet(tableDir)).schema
+        val schema = manifestSchema(spark, tableDir, entries)
+          .getOrElse(spark.read.parquet(tableDir).schema)
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     }
@@ -2111,15 +2089,61 @@ object Sources {
     * unioned. None when the manifest is empty. */
   private def assembleManifest(spark: SparkSession, tableDir: String,
       entries: Seq[String]): Option[DataFrame] =
-    if (entries.isEmpty) None
-    else Some(entries.groupBy(e => e.splitAt(e.lastIndexOf('/') + 1)._1)
-      .toSeq.sortBy(_._1)
-      .map { case (parent, es) =>
-        val base = if (parent.isEmpty) tableDir else s"$tableDir/${parent.stripSuffix("/")}"
-        spark.read.option("basePath", base)
-          .parquet(es.map(e => s"$tableDir/$e"): _*)
+    manifestGroups(entries).map(readManifestGroup(spark, tableDir, _))
+      .reduceOption(_ unionByName _)
+
+  /** The schema [[assembleManifest]] gives `entries`, taken from their
+    * first batch dir alone (the union keeps its column order): what a
+    * read that excludes every dir plans over. */
+  private def manifestSchema(spark: SparkSession, tableDir: String,
+      entries: Seq[String]): Option[StructType] =
+    manifestGroups(entries).headOption.map(readManifestGroup(spark, tableDir, _).schema)
+
+  private def manifestGroups(entries: Seq[String]): Seq[(String, Seq[String])] =
+    entries.groupBy(e => e.splitAt(e.lastIndexOf('/') + 1)._1).toSeq.sortBy(_._1)
+
+  /** One batch dir's scan. A `b-*` dir is one `partitionBy` write, so
+    * any footer carries the schema inference would return and the read
+    * needs no inference job; adopted `col=val` dirs keep inference. */
+  private def readManifestGroup(spark: SparkSession, tableDir: String,
+      group: (String, Seq[String])): DataFrame = {
+    val (parent, es) = group
+    val base = if (parent.isEmpty) tableDir else s"$tableDir/${parent.stripSuffix("/")}"
+    val reader = spark.read.option("basePath", base)
+    val schema =
+      if (parent.startsWith("b-")) writtenSchema(spark, s"$tableDir/${es.head}") else None
+    schema.fold(reader)(reader.schema).parquet(es.map(e => s"$tableDir/$e"): _*)
+  }
+
+  /** The schema Spark's parquet inference returns for `dir`, read on
+    * the driver from the `org.apache.spark.sql.parquet.row.metadata`
+    * key of ONE footer (the key inference itself reads) — inference
+    * runs a Spark job on every read, even of one file. Exact only for
+    * a dir that ONE DataFrame write produced, whose footers all carry
+    * the same schema. None, to keep inference, when the dir holds no
+    * parquet file directly or the footer lacks the key. */
+  private def writtenSchema(spark: SparkSession, dir: String): Option[StructType] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(dir), conf)
+    fs.listStatus(new org.apache.hadoop.fs.Path(dir))
+      .find(st => st.isFile && isDataFile(st.getPath.getName)).flatMap { st =>
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+        val json = try Option(reader.getFileMetaData.getKeyValueMetaData
+            .get("org.apache.spark.sql.parquet.row.metadata"))
+          finally reader.close()
+        json.flatMap(j => scala.util.Try(org.apache.spark.sql.types.DataType.fromJson(j)).toOption)
+          .collect { case s: StructType => s }
       }
-      .reduce(_ unionByName _))
+  }
+
+  private def isDataFile(name: String): Boolean =
+    name.endsWith(".parquet") && !name.startsWith("_") && !name.startsWith(".")
+
+  /** Read a dir that one DataFrame write produced (a snapshot version
+    * or one member of a group version), schema per [[writtenSchema]]. */
+  private def readWritten(spark: SparkSession, dir: String): DataFrame =
+    writtenSchema(spark, dir).fold(spark.read)(spark.read.schema).parquet(dir)
 
   private def segmentOf(entry: String): String =
     entry.substring(entry.lastIndexOf('/') + 1)
@@ -2585,7 +2609,11 @@ object Sources {
   /** Resolve a snapshot root to its live data directory: follow the
     * `_current` pointer if present; otherwise (pre-versioning layout,
     * or a plain parquet dir) the root itself. */
-  def resolveSnapshot(spark: SparkSession, tableRoot: String): String = {
+  def resolveSnapshot(spark: SparkSession, tableRoot: String): String =
+    liveVersionDir(spark, tableRoot).getOrElse(tableRoot)
+
+  /** The version dir `_current` names, None when there is no pointer. */
+  private def liveVersionDir(spark: SparkSession, tableRoot: String): Option[String] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(tableRoot), conf)
     val ptr = new org.apache.hadoop.fs.Path(tableRoot, "_current")
@@ -2593,14 +2621,16 @@ object Sources {
       val in = fs.open(ptr)
       val v = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
               finally in.close()
-      s"$tableRoot/$v"
-    } else tableRoot
+      Some(s"$tableRoot/$v")
+    } else None
   }
 
   /** Read the live version of a snapshot table published by
-    * [[publishSnapshot]] (or a plain parquet dir — same call). */
+    * [[publishSnapshot]] (or a plain parquet dir — same call, which
+    * keeps schema inference). */
   def readSnapshot(spark: SparkSession, tableRoot: String): DataFrame =
-    spark.read.parquet(resolveSnapshot(spark, tableRoot))
+    liveVersionDir(spark, tableRoot).map(readWritten(spark, _))
+      .getOrElse(spark.read.parquet(tableRoot))
 
   /** Retained snapshot versions, ascending — the live one plus up to
     * two priors (publishSnapshot's retention window). */
@@ -2628,7 +2658,7 @@ object Sources {
     val chosen = currentPointer(fs, root)
       .flatMap(cur => dirs.find(_.getName == cur))
       .getOrElse(dirs.minBy(_.getName))
-    spark.read.parquet(chosen.toString)
+    readWritten(spark, chosen.toString)
   }
 
   /** True if the snapshot root has a live version (pointer or plain
@@ -2696,7 +2726,7 @@ object Sources {
     * computation. */
   def readSnapshotGroup(spark: SparkSession, tableRoot: String,
       member: String): DataFrame =
-    spark.read.parquet(s"${resolveSnapshot(spark, tableRoot)}/$member")
+    readSnapshotGroupAll(spark, tableRoot, Seq(member))(member)
 
   /** Every member of the live group version, resolved from ONE pointer
     * read — the consistent-view read for multi-member consumers (a
@@ -2704,8 +2734,10 @@ object Sources {
     * would hand the caller members from different versions). */
   def readSnapshotGroupAll(spark: SparkSession, tableRoot: String,
       members: Seq[String]): Map[String, DataFrame] = {
-    val live = resolveSnapshot(spark, tableRoot)
-    members.map(m => m -> spark.read.parquet(s"$live/$m")).toMap
+    liveVersionDir(spark, tableRoot) match {
+      case Some(live) => members.map(m => m -> readWritten(spark, s"$live/$m")).toMap
+      case None => members.map(m => m -> spark.read.parquet(s"$tableRoot/$m")).toMap
+    }
   }
 
   /** Time travel over a snapshot GROUP: all members of one RETAINED
@@ -2726,7 +2758,7 @@ object Sources {
     val chosen = currentPointer(fs, root)
       .flatMap(cur => dirs.find(_.getName == cur))
       .getOrElse(dirs.minBy(_.getName))
-    members.map(m => m -> spark.read.parquet(s"$chosen/$m")).toMap
+    members.map(m => m -> readWritten(spark, s"$chosen/$m")).toMap
   }
 
   // accepts both the uid-suffixed layout (`v-<n>-<uid>`) and the

@@ -2,6 +2,8 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
+import graft.QueryMetrics.Rep
+
 /** Standing scale-tier benchmark (VERDICT r13 top-next item): the
   * sf10 measurement as a REPEATABLE artifact instead of narrated
   * prose. The r13 round measured sf1→sf10 with `Bench` +
@@ -32,7 +34,7 @@ import org.apache.spark.sql.SparkSession
   * Round 15 adds the maintained-index pipeline as first-class ledger
   * rows (`x_bm25_*` / `x_ivfpq_*`: build, append-apply, search under
   * tombstones, compact, search compacted — fresh dirs per rep, the
-  * ProfileIncrementalIndex recipe), so the LSM walls are a diffable
+  * ~1% change-feed recipe), so the LSM walls are a diffable
   * artifact instead of SCALING prose.
   *
   * Usage: `runMain graft.tools.BenchScale [sfDir] [outFile]`
@@ -79,39 +81,15 @@ object BenchScale {
 
     graft.Tables.lineitem(spark, sfDir).count() // session warm-up
 
-    val spillDisk = new java.util.concurrent.atomic.AtomicLong(0)
-    val shufWrite = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) {
-          spillDisk.addAndGet(m.diskBytesSpilled)
-          shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        }
-      }
-    })
-    def gcMillis: Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(_.getCollectionTime).sum
-    }
-
-    case class Rep(wall: Double, gc: Double, spillMb: Long, shufMb: Long)
-    var nRun = 0
+    val metrics = graft.QueryMetrics.install(spark)
     def measure(f: => Long): (Rep, Long) = {
-      val (g0, d0, w0) = (gcMillis, spillDisk.get(), shufWrite.get())
-      val t0 = System.nanoTime()
-      val rows = f
-      val wall = (System.nanoTime() - t0) / 1e9
-      graft.Bench.drainListeners(spark) // async onTaskEnd events
-      val rep = Rep(wall, (gcMillis - g0) / 1000.0,
-        (spillDisk.get() - d0) / 1048576, (shufWrite.get() - w0) / 1048576)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      nRun += 1
-      if (nRun % 8 == 0) System.gc()
+      val (rows, rep) = metrics.measure(f)
+      graft.Bench.releaseState(spark)
       (rep, rows)
     }
+    def ledger(r: Rep): String =
+      f"wall=${r.wallS}%.2fs gc=${r.gcMs / 1000.0}%.2fs " +
+        f"spill_disk=${r.diskSpillBytes / 1048576}MB shuffle_write=${r.shuffleWriteBytes / 1048576}MB"
     def runOnce(q: graft.queries.QueryDef): (Rep, Long) =
       measure(q.fn(spark, sfDir).count())
 
@@ -136,14 +114,13 @@ object BenchScale {
     val results = chosen.map { name =>
       val q = byName(name)
       val (warm, rows) = runOnce(q)
-      System.err.println(f"[bench-sf] $name warm=${warm.wall}%.2fs rows=$rows")
+      System.err.println(f"[bench-sf] $name warm=${warm.wallS}%.2fs rows=$rows")
       val timed = (1 to reps).map { i =>
         val (r, _) = runOnce(q)
-        System.err.println(f"[bench-sf] $name rep=$i wall=${r.wall}%.2fs " +
-          f"gc=${r.gc}%.2fs spill_disk=${r.spillMb}MB shuffle_write=${r.shufMb}MB")
+        System.err.println(s"[bench-sf] $name rep=$i ${ledger(r)}")
         r
       }
-      val med = timed.map(_.wall).sorted.apply(timed.length / 2)
+      val med = timed.map(_.wallS).sorted.apply(timed.length / 2)
       name -> (med, timed, rows)
     }
 
@@ -151,7 +128,7 @@ object BenchScale {
     // Build → append-apply → search-through-tombstones → compact →
     // search-compacted, each phase its own ledger row, FRESH dirs per
     // rep (no warm-index reuse — the walls ARE the product here).
-    // Recipe pinned to ProfileIncrementalIndex's: constant ~500-doc /
+    // Recipe: constant ~500-doc /
     // ~200-vec feed whatever the tier, nBuckets/nLists = 64.
     // plain (un-checkpointed) inputs: measure() unpersists every
     // persistent RDD between phases, which would orphan
@@ -243,17 +220,16 @@ object BenchScale {
     val idxResults = if (only.isDefined) Seq.empty else {
       val idxWarm = indexPipelineRep() // same warm-up discipline
       idxWarm.foreach { case (n, (r, _)) =>
-        System.err.println(f"[bench-sf] $n warm=${r.wall}%.2fs") }
+        System.err.println(f"[bench-sf] $n warm=${r.wallS}%.2fs") }
       val idxReps = (1 to reps).map { i =>
         val rep = indexPipelineRep()
         rep.foreach { case (n, (r, _)) =>
-          System.err.println(f"[bench-sf] $n rep=$i wall=${r.wall}%.2fs " +
-            f"gc=${r.gc}%.2fs spill_disk=${r.spillMb}MB shuffle_write=${r.shufMb}MB") }
+          System.err.println(s"[bench-sf] $n rep=$i ${ledger(r)}") }
         rep.toMap
       }
       phaseNames.map { n =>
         val timed = idxReps.map(_(n)._1)
-        val med = timed.map(_.wall).sorted.apply(timed.length / 2)
+        val med = timed.map(_.wallS).sorted.apply(timed.length / 2)
         n -> (med, timed, idxReps.head(n)._2)
       }
     }
@@ -276,17 +252,16 @@ object BenchScale {
       }
       val warm = keyedRep()
       warm.foreach { case (n, (r, _)) =>
-        System.err.println(f"[bench-sf] $n warm=${r.wall}%.2fs") }
+        System.err.println(f"[bench-sf] $n warm=${r.wallS}%.2fs") }
       val kReps = (1 to reps).map { i =>
         val rr = keyedRep()
         rr.foreach { case (n, (r, _)) =>
-          System.err.println(f"[bench-sf] $n rep=$i wall=${r.wall}%.2fs " +
-            f"gc=${r.gc}%.2fs spill_disk=${r.spillMb}MB shuffle_write=${r.shufMb}MB") }
+          System.err.println(s"[bench-sf] $n rep=$i ${ledger(r)}") }
         rr.toMap
       }
       keyedPhases.map { n =>
         val timed = kReps.map(_(n)._1)
-        val med = timed.map(_.wall).sorted.apply(timed.length / 2)
+        val med = timed.map(_.wallS).sorted.apply(timed.length / 2)
         n -> (med, timed, kReps.head(n)._2)
       }
     }
@@ -295,10 +270,10 @@ object BenchScale {
     val total = results2.map(_._2._1).sum
     val qJson = results2.map { case (name, (med, timed, rows)) =>
       s""""$name":{"median":${f2(med)},"rows":$rows""" +
-        s""","wall":[${timed.map(r => f2(r.wall)).mkString(",")}]""" +
-        s""","gc":[${timed.map(r => f2(r.gc)).mkString(",")}]""" +
-        s""","spill_disk_mb":[${timed.map(_.spillMb).mkString(",")}]""" +
-        s""","shuffle_write_mb":[${timed.map(_.shufMb).mkString(",")}]}"""
+        s""","wall":[${timed.map(r => f2(r.wallS)).mkString(",")}]""" +
+        s""","gc":[${timed.map(r => f2(r.gcMs / 1000.0)).mkString(",")}]""" +
+        s""","spill_disk_mb":[${timed.map(_.diskSpillBytes / 1048576).mkString(",")}]""" +
+        s""","shuffle_write_mb":[${timed.map(_.shuffleWriteBytes / 1048576).mkString(",")}]}"""
     }.mkString("{", ",", "}")
     val json =
       s"""{"metric":"bench_scale","value":${f2(total)},"unit":"sec","sf":"$sfDir",""" +

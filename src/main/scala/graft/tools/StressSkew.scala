@@ -1,8 +1,5 @@
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -30,28 +27,12 @@ object StressSkew {
 
     // spill/shuffle ledger via task metrics — the measurement the
     // plan alone can't show
-    val memSpill = new AtomicLong(0); val diskSpill = new AtomicLong(0)
-    val shufWrite = new AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) {
-          memSpill.addAndGet(m.memoryBytesSpilled)
-          diskSpill.addAndGet(m.diskBytesSpilled)
-          shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        }
-      }
-    })
+    val metrics = graft.QueryMetrics.install(spark)
     def mb(b: Long): String = f"${b / 1024.0 / 1024.0}%.0f MB"
     def phase[T](name: String)(body: => T): T = {
-      val (m0, d0, s0) = (memSpill.get, diskSpill.get, shufWrite.get)
-      val t0 = System.nanoTime()
-      val r = body
-      val dt = (System.nanoTime() - t0) / 1e9
-      // listener events drain asynchronously; give them a beat
-      Thread.sleep(1500)
-      println(f"[skew] $name%-42s wall=$dt%7.1fs spill_mem=${mb(memSpill.get - m0)}%s " +
-        s"spill_disk=${mb(diskSpill.get - d0)} shuffle_write=${mb(shufWrite.get - s0)}")
+      val (r, m) = metrics.measure(body)
+      println(f"[skew] $name%-42s wall=${m.wallS}%7.1fs spill_mem=${mb(m.memSpillBytes)}%s " +
+        s"spill_disk=${mb(m.diskSpillBytes)} shuffle_write=${mb(m.shuffleWriteBytes)}")
       // clearCache only: the checkpointed corpus/build frames are
       // shared across phases and must survive
       spark.catalog.clearCache()

@@ -161,7 +161,7 @@ class IndexMaintenanceSpec extends SparkSpec {
       try {
         val r = IndexMaintenance.familyHealth(spark, root, "lang",
           Seq("postings" -> "_b"), countTombstoneRows = true).toMap
-        graft.Bench.drainListeners(spark)
+        graft.QueryMetrics.drain(spark)
         r
       } finally {
         spark.sparkContext.removeSparkListener(listener)
@@ -236,5 +236,33 @@ class IndexMaintenanceSpec extends SparkSpec {
       Seq((21L, "fresh spark doc", "new")).toDF("doc_id", "text", "_change"),
       mode = "append"): Unit
     assert(LexicalIndex.bm25IndexHealth(spark, dir).maxGenerations == 2)
+  }
+
+  test("family-pool items run under their caller's job description") {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        seen.add(Option(e.properties).map(_.getProperty("spark.job.description"))
+          .orNull): Unit
+      }
+    }
+    def call(desc: String): Seq[String] = {
+      graft.QueryMetrics.drain(spark)
+      seen.clear()
+      spark.sparkContext.setJobDescription(desc)
+      try IndexMaintenance.inParallel((1 to 4).toSeq, parallelism = 4) { i =>
+        spark.range(10 * i).count()
+      } finally spark.sparkContext.setJobDescription(null)
+      graft.QueryMetrics.drain(spark)
+      seen.toArray(Array.empty[String]).toSeq
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // the second call reuses the pool threads the first one created
+      val a = call("family-call-a")
+      val b = call("family-call-b")
+      assert(a.size >= 4 && a.forall(_ == "family-call-a"), a)
+      assert(b.size >= 4 && b.forall(_ == "family-call-b"), b)
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }

@@ -4,6 +4,8 @@ import java.nio.file.Files
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
+import org.apache.spark.sql.functions.col
+
 import graft.SparkSpec
 
 /** The round-10 bulk index builders: ONE Spark job indexes N batch
@@ -151,5 +153,35 @@ class IndexBulkSpec extends SparkSpec {
         lower = Some(100L), upper = Some(110L))
       .select("k").collect().map(_.getLong(0)).sorted
     assert(ranged.toSeq == (100L to 110L))
+  }
+
+  test("concurrent AQE queries never see the shared session's AQE flag change while builds run") {
+    val key = "spark.sql.adaptive.enabled"
+    assert(spark.conf.get(key) == "true") // GraftSession default
+    val tables = (1 to 3).map(i => mkTable(s"aqe$i"))
+    val builds = new java.util.concurrent.atomic.AtomicInteger(0)
+    val err = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    val indexer = new Thread(() =>
+      try tables.foreach { t =>
+        builds.addAndGet(Sources.indexBatchKeys(spark, t, "k") +
+          Sources.indexBatchStats(spark, t, "ts") +
+          Sources.indexBatchKeys(spark, t, "name") +
+          Sources.indexBatchStats(spark, t, "k")): Unit
+      } catch { case t: Throwable => err.set(t) })
+    indexer.start()
+    var checks = 0
+    while (indexer.isAlive) {
+      assert(spark.conf.get(key) == "true")
+      val q = spark.range(2000).groupBy((col("id") % 5).as("g")).count()
+      assert(q.collect().length == 5)
+      assert(q.queryExecution.executedPlan
+        .isInstanceOf[org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec])
+      checks += 1
+    }
+    indexer.join()
+    assert(err.get == null, String.valueOf(err.get))
+    assert(builds.get == 4 * 3 * 3) // every build of every dir ran
+    assert(checks > 0)
+    assert(spark.conf.get(key) == "true")
   }
 }
