@@ -63,6 +63,13 @@ object Gsid {
   def deterministic(key: Column): Column =
     concat(lit("GSID-"), upper(substring(md5(key), 1, 16)))
 
+  /** [[deterministic]] on the driver: the same md5 over the key's
+    * UTF-8 bytes, first 8 bytes as upper-case hex. */
+  def deterministic(key: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(key.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .take(8).map(b => f"${b & 0xff}%02X").mkString("GSID-", "", "")
+
   /** Column: GSID format validation (F13). */
   def isValid(c: Column): Column = c.rlike(FormatRegex)
 

@@ -18,8 +18,15 @@ import graft.sources.Sources
   * [[IdentityResolver]] (set-based resolve → links → applyBatch) —
   * so each cycle reads ONLY the rows that changed since the last
   * checkpoint, resolves them against the current registry snapshot,
-  * and publishes the evolved registry. Work per cycle is bounded by
-  * changed data, never table size.
+  * and publishes the evolved registry. READING and RESOLVING are
+  * bounded by the changed data; WRITING is not: every cycle rewrites
+  * both registry members (subjects, local_ids) in full, and
+  * [[UpsertWriter.mergeLocalSubjectIds]] aggregates the whole
+  * local_ids member to fold the batch in (as does the distributed
+  * path of [[IdentityResolver.links]] below its 64 MB filter gate). So
+  * a cycle's cost grows with the registry. ROADMAP O2's versioned log
+  * (add/remove actions over data files) is the fix: a cycle would then
+  * write only the rows it changes.
   *
   * Row-level (not partition-level) delivery is load-bearing here:
   * partition-level CDC re-delivers whole rewritten partitions, and an
@@ -47,9 +54,13 @@ import graft.sources.Sources
   *    subjects from cycle N beside local_ids from N−1 (a torn
   *    registry would re-mint duplicate subject rows on redelivery).
   *
-  * Scale shape: the delta→registry join is [[IdentityResolver]]'s J1
-  * (shuffle on normalized identifier, auto-armed salted skew
-  * fallback); the registry read is a pointer-resolved parquet scan;
+  * Scale shape: a micro-batch (at most
+  * [[IdentityResolver.DriverBatchRows]] changed rows) is collected
+  * once and resolved and linked on the driver against filtered scans
+  * of the registry; a larger delta takes [[IdentityResolver]]'s
+  * distributed J1 (shuffle on normalized identifier, auto-armed
+  * salted skew fallback); the registry read is a pointer-resolved
+  * parquet scan;
   * the publish rewrites the registry snapshot — at very large
   * registries pair this with [[graft.catalog.RegistryCatalog]]'s
   * bucketed layout, which resolve() auto-routes on.
@@ -134,12 +145,22 @@ object IncrementalIdentity {
         // this cycle refuses it either way (Sources.snapshotReadBasis).
         val basis = Sources.snapshotReadBasis(spark, registryRoot)
         val reg = readRegistry(spark, registryRoot)
-        val candidates = toCandidates(delta)
-        // materialized: resolutions feed links, applyBatch AND the
-        // caller — without truncation each consumer re-runs the whole
-        // delta-resolve lineage (batch-sized state, never registry-sized)
-        val res = IdentityResolver.resolve(candidates, reg,
-          deterministicMint, groupingIterations).localCheckpoint(false)
+        // the delta is read ONCE: a micro-batch comes back as a local
+        // relation and resolves on the driver; a larger one is
+        // checkpointed, so links and the registry writes reuse its
+        // blocks instead of re-scanning the batch dirs and redoing the
+        // change-feed anti-join. Either way resolve and links see the
+        // same rows.
+        val (candidates, res) = IdentityResolver.materializeBatch(toCandidates(delta)) match {
+          case Right(local) =>
+            (local, IdentityResolver.resolve(local, reg, deterministicMint, groupingIterations))
+          case Left(materialized) =>
+            // checkpointed: resolutions feed links, applyBatch AND the
+            // caller — without truncation each consumer re-runs the
+            // whole resolve lineage (batch-sized, never registry-sized)
+            (materialized, IdentityResolver.resolveDistributed(materialized, reg,
+              deterministicMint, groupingIterations).localCheckpoint(false))
+        }
         val links = IdentityResolver.links(candidates, res, reg.localIds)
         val evolved = IdentityResolver.applyBatch(reg, res, links, asOf)
         publishRegistry(evolved, registryRoot, basis = Some(basis))

@@ -152,7 +152,9 @@ object UpsertWriter {
     * identifier_type) ONLY; a center change deletes the old row and
     * inserts the new one (audited as a center_id change); multiple
     * existing rows for one key collapse to the single incoming row
-    * (dedup repair); a GSID change updates in place.
+    * (dedup repair); a GSID change updates in place. Several incoming
+    * rows for one key (two centers in one batch) resolve to the
+    * min(center_id, global_subject_id) row.
     */
   def mergeLocalSubjectIds(
       current: DataFrame,
@@ -161,10 +163,15 @@ object UpsertWriter {
       batchId: String = ""): MergeResult = {
 
     val key = Seq("local_subject_id", "identifier_type")
+    // one incoming row per key: when a batch links the same key from
+    // several centers, keep min(center_id, gsid) — the rule links()
+    // applies to existing rows — so the fold never depends on which
+    // row a shuffle happens to deliver first
     val inc = incoming
-      .dropDuplicates("local_subject_id", "identifier_type")
+      .groupBy("local_subject_id", "identifier_type")
+      .agg(min(struct(col("center_id"), col("global_subject_id"))).as("_in"))
       .select(col("local_subject_id"), col("identifier_type"),
-        col("center_id").as("_in_center"), col("global_subject_id").as("_in_gsid"),
+        col("_in.center_id").as("_in_center"), col("_in.global_subject_id").as("_in_gsid"),
         lit(true).as("_in_p"))
     // collapse multi-existing deterministically for the audit old-value
     val cur = current

@@ -582,6 +582,7 @@ object Sources {
       case Some(m) if m.startsWith("manifest-") => numberOf(m, "manifest-")
       case _ => return // unreadable/foreign pointer: nothing safe to do
     }
+    sweepTempChecksums(fs, root)
     val (protect, candidates) =
       manifestNames(fs, root).partition(m => numberOf(m, "manifest-") >= liveNum - 2)
     val now = System.currentTimeMillis()
@@ -2173,16 +2174,45 @@ object Sources {
         numberOf(st.getPath.getName, "b-")
     }
 
-  /** Raw (sidecar-free) small-file write via FileContext — see the
-    * checksum-sidecar note in [[publishSnapshot]]. */
+  /** Sidecar-free small-file write (create or overwrite, parents
+    * created). On file:// it goes through java.nio: Hadoop's local
+    * FileContext is a ChecksumFs, which writes a `.<name>.crc` beside
+    * the file — orphaned when [[atomicReplace]] then moves the file
+    * alone — and forks a `chmod` per create when the native library is
+    * not loaded. Elsewhere it is a FileContext create. */
   private def writeRaw(uri: java.net.URI, conf: org.apache.hadoop.conf.Configuration,
-      path: org.apache.hadoop.fs.Path, content: String): Unit = {
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(uri, conf)
-    val out = fc.create(path,
-      java.util.EnumSet.of(org.apache.hadoop.fs.CreateFlag.CREATE,
-        org.apache.hadoop.fs.CreateFlag.OVERWRITE),
-      org.apache.hadoop.fs.Options.CreateOpts.createParent())
-    try out.write(content.getBytes("UTF-8")) finally out.close()
+      path: org.apache.hadoop.fs.Path, content: String): Unit =
+    if (Option(uri.getScheme).forall(_ == "file")) {
+      val target = java.nio.file.Paths.get(path.toUri.getPath)
+      java.nio.file.Files.createDirectories(target.getParent)
+      java.nio.file.Files.write(target, content.getBytes("UTF-8")): Unit
+    } else {
+      val fc = org.apache.hadoop.fs.FileContext.getFileContext(uri, conf)
+      val out = fc.create(path,
+        java.util.EnumSet.of(org.apache.hadoop.fs.CreateFlag.CREATE,
+          org.apache.hadoop.fs.CreateFlag.OVERWRITE),
+        org.apache.hadoop.fs.Options.CreateOpts.createParent())
+      try out.write(content.getBytes("UTF-8")) finally out.close()
+    }
+
+  /** Delete the checksum sidecars of temp control files
+    * (`.<name>.tmp-<stamp>.crc`) whose file is gone — what
+    * [[atomicReplace]] left behind per swap while its temp write went
+    * through the checksummed local FS. The local FileSystem's listing
+    * hides `.crc` files, so this lists its raw FS. */
+  private def sweepTempChecksums(fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path): Unit = {
+    val raw = fs match {
+      case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
+      case other => other
+    }
+    raw.listStatus(root).foreach { st =>
+      val name = st.getPath.getName
+      if (st.isFile && name.startsWith(".") && name.endsWith(".crc") &&
+          name.contains(".tmp-") &&
+          !raw.exists(new org.apache.hadoop.fs.Path(root, name.drop(1).dropRight(4))))
+        deleteQuiet(raw, st.getPath, recursive = false)
+    }
   }
 
   /** Atomic `_current` pointer swap (temp write + atomic
@@ -2555,6 +2585,7 @@ object Sources {
           now - st.getModificationTime >= grace)
         deleteQuiet(fs, st.getPath, recursive = true)
     }
+    sweepTempChecksums(fs, root)
   }
 
   /** Snapshot-table publish, ATOMIC for readers and SERIALIZED across
@@ -2594,14 +2625,15 @@ object Sources {
       claimSnapshotVersion(fs, uri, root, tableRoot, basis)
     df.write.mode(SaveMode.Overwrite).parquet(s"$tableRoot/$vdir")
     // atomic pointer swap: write a temp pointer, rename OVER the live
-    // one. BOTH steps go through FileContext: the FileSystem API on a
-    // local FS is ChecksumFileSystem, whose create() leaves a .crc
-    // sidecar that rename() (raw FS) does NOT move — a concurrent
-    // reader then validates the new pointer against the stale sidecar
-    // and fails with a checksum error. FileContext writes raw (no
-    // sidecar); any sidecar left by an older writer is dropped first.
-    // Forward-only, and refused outright when this publish was
-    // overtaken while writing (swapSnapshotOrRefuse).
+    // one. Neither step may leave a checksum sidecar: the FileSystem
+    // API on a local FS is ChecksumFileSystem, whose create() writes a
+    // .crc that a raw rename does NOT move — a concurrent reader then
+    // validates the new pointer against the stale sidecar and fails
+    // with a checksum error. The temp file is written raw (java.nio on
+    // file://, see writeRaw) and any sidecar an older writer left on
+    // the live pointer is dropped first. Forward-only, and refused
+    // outright when this publish was overtaken while writing
+    // (swapSnapshotOrRefuse).
     swapSnapshotOrRefuse(fs, uri, conf, root, tableRoot, vdir, next, uid)
     pruneSnapshotVersions(fs, root, next)
   }

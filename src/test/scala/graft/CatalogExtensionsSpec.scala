@@ -192,12 +192,14 @@ class CatalogSpec extends SparkSpec {
     val prev = confs.map { case (k, _) => k -> spark.conf.get(k) }
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
-      val out = IdentityResolver.resolve(batch, catReg,
+      // the bucketed route is the distributed path's (a two-row batch
+      // would otherwise resolve on the driver)
+      val out = IdentityResolver.resolveDistributed(batch, catReg,
         deterministicMint = true, groupingIterations = 1)
       val got = out.select("request_id", "action", "gsid").collect()
         .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
       // same output as the uncataloged lower(...) route
-      val want = IdentityResolver.resolve(batch, plainReg,
+      val want = IdentityResolver.resolveDistributed(batch, plainReg,
           deterministicMint = true, groupingIterations = 1)
         .select("request_id", "action", "gsid").collect()
         .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet

@@ -68,8 +68,10 @@ class IdentityResolverSpec extends SparkSpec {
       subjects = Seq(("G-HOT", 5, "2019-01-01")),
       localIds = Seq((5, "hot-1", "primary", "G-HOT")))
 
+    // the salted fallback lives on the distributed path only (a
+    // 1000-row batch would otherwise resolve on the driver)
     def rows(threshold: Long) =
-      resolve(cands, hotReg, deterministicMint = true, groupingIterations = 2,
+      resolveDistributed(cands, hotReg, deterministicMint = true, groupingIterations = 2,
         skewSaltThreshold = threshold, skewSalt = 8)
         .collect().map(_.toSeq).toSet
 
@@ -389,5 +391,21 @@ class UpsertWriterSpec extends SparkSpec {
       "center_id", "1", "9")))
     assert(audit.contains(("""{"local_subject_id":"L3","identifier_type":"primary"}""",
       "global_subject_id", "G3", "G3x")))
+  }
+
+  test("local_subject_ids: two centers linking one key in one batch keep min(center_id, gsid)") {
+    val current = Seq((1, "K0", "primary", "G0"))
+      .toDF("center_id", "local_subject_id", "identifier_type", "global_subject_id")
+    val rows = Seq((7, "K", "primary", "G-B"), (3, "K", "primary", "G-Z"),
+      (3, "K", "primary", "G-A"), (1, "K0", "primary", "G0"))
+    // the same rows in any order and partitioning fold to one registry
+    for (order <- Seq(rows, rows.reverse); parts <- Seq(1, 3)) {
+      val incoming = order
+        .toDF("center_id", "local_subject_id", "identifier_type", "global_subject_id")
+        .repartition(parts)
+      val merged = UpsertWriter.mergeLocalSubjectIds(current, incoming).merged.collect()
+        .map(x => (x.getString(1), x.getInt(0), x.getString(3))).toSet
+      assert(merged == Set(("K", 3, "G-A"), ("K0", 1, "G0")))
+    }
   }
 }

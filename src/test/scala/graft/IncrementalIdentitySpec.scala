@@ -176,6 +176,26 @@ class IncrementalIdentitySpec extends SparkSpec {
       == idsAfter2)
   }
 
+  test("a delta above DriverBatchRows resolves on the distributed path, same fold") {
+    val root = tmp("big")
+    val (fragDir, ckDir, regRoot) = (s"$root/f", s"$root/ck", s"$root/r")
+    IncrementalIdentity.publishRegistry(reg0, regRoot)
+    val n = IdentityResolver.DriverBatchRows + 1
+    // every row new except one re-presenting the registry's "a"
+    val rows = (1 to n).map(i => (i.toLong, 1, if (i == 1) "A" else s"new-$i"))
+    Sources.publishMergePartitioned(spark, fragDir, frag(rows), cfg, "p")
+    val c = IncrementalIdentity.resolveCycle(spark, fragDir, ckDir, regRoot,
+      Seq("request_id"), day1, "p", groupingIterations = 1)(identity)
+    assert(c.isDefined && !IdentityResolver.isLocal(c.get.resolutions))
+    val res = c.get.resolutions
+    assert(res.count() == n)
+    assert(res.filter(col("action") === "link_existing" && col("gsid") === "G1").count() == 1)
+    val reg = IncrementalIdentity.readRegistry(spark, regRoot)
+    assert(reg.subjects.count() == 2 + n - 1)
+    // links are case-sensitive: "A" is a new key beside the registry's "a"
+    assert(reg.localIds.count() == 2 + n)
+  }
+
   test("publishSnapshotGroup: both members always resolve from one version") {
     val root = tmp("group")
     Sources.publishSnapshotGroup(

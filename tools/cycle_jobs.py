@@ -1,0 +1,138 @@
+#!/usr/bin/env python3
+"""Per-span Spark job table from a perfbench artifact and a Spark event log.
+
+Usage:
+    python3 tools/cycle_jobs.py ARTIFACT.json EVENTLOG [--span NAME ...] [--all-ops]
+
+ARTIFACT.json is a traced perfbench artifact (`run.py --trace 1`, kept
+under .bench_build/perfbench/results/). EVENTLOG is the event log of the
+same run: a file (plain or zstd-compressed, e.g. events_1_<app>.zstd) or
+the directory Spark wrote it to. Record one with
+
+    JAVA_TOOL_OPTIONS="-Dspark.eventLog.enabled=true \
+      -Dspark.eventLog.dir=file:///some/dir" python3 perfbench/run.py ...
+
+For every span of the fixed measured ops (op >= 0; --all-ops adds the
+warm-up and seeding spans) it prints one line per SQL execution that ran
+jobs inside the span: its jobs, its wall time (first job submitted to
+last job completed, ms) and the engine call site (the first `graft.`
+frame of the execution's call stack). Jobs outside any SQL execution
+are listed under `-`. A job belongs to a span when its `perfbench.span`
+property names the span's id, or, lacking the property, when it was
+submitted inside the span's [start_ms, end_ms] window.
+
+Only the standard library is used; `.zstd` logs are read through
+`zstd -dc`.
+"""
+import argparse
+import collections
+import json
+import os
+import re
+import subprocess
+import sys
+
+FRAME = re.compile(r"(graft\.[\w.$]+)\((\w+\.scala:\d+)\)")
+
+
+def event_lines(path):
+    if os.path.isdir(path):
+        logs = []
+        for root, _, files in os.walk(path):
+            logs += [os.path.join(root, f) for f in files if f.startswith("events_")
+                     or f.startswith("local-") or f.startswith("app-")]
+        if not logs:
+            sys.exit(f"no event log under {path}")
+        for p in sorted(logs):
+            yield from event_lines(p)
+        return
+    if path.endswith(".zstd") or path.endswith(".zst"):
+        out = subprocess.run(["zstd", "-dc", path], check=True, capture_output=True).stdout
+        yield from out.decode("utf-8").splitlines()
+    else:
+        with open(path, encoding="utf-8") as f:
+            yield from f
+
+
+def call_site(stack):
+    """The first engine frame of a call stack, as `Object.method (File.scala:N)`."""
+    for m in FRAME.finditer(stack or ""):
+        name = m.group(1).replace("$anonfun$", "").replace("$", ".")
+        name = re.sub(r"\.+", ".", name).rstrip(".")
+        name = re.sub(r"\.\d+$", "", name)
+        return f"{name.split('.', 1)[1] if name.startswith('graft.') else name} ({m.group(2)})"
+    return (stack or "?").splitlines()[0][:80] if stack else "?"
+
+
+def read_log(path):
+    executions = {}  # id -> call site
+    jobs = {}        # id -> dict
+    for line in event_lines(path):
+        line = line.strip()
+        if not line:
+            continue
+        e = json.loads(line)
+        kind = e["Event"]
+        if kind.endswith("SQLExecutionStart"):
+            executions[e["executionId"]] = call_site(e.get("details", ""))
+        elif kind == "SparkListenerJobStart":
+            props = e.get("Properties") or {}
+            stage_site = next((s.get("Details", "") for s in e.get("Stage Infos", [])), "")
+            jobs[e["Job ID"]] = {
+                "submit": e["Submission Time"],
+                "end": e["Submission Time"],
+                "exec": props.get("spark.sql.execution.id"),
+                "span": props.get("perfbench.span"),
+                "site": call_site(stage_site),
+            }
+        elif kind == "SparkListenerJobEnd" and e["Job ID"] in jobs:
+            jobs[e["Job ID"]]["end"] = e["Completion Time"]
+    return executions, jobs
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("artifact")
+    ap.add_argument("eventlog")
+    ap.add_argument("--span", action="append", help="only spans with this name (repeatable)")
+    ap.add_argument("--all-ops", action="store_true", help="include warm-up and seed spans")
+    a = ap.parse_args()
+
+    with open(a.artifact, encoding="utf-8") as f:
+        art = json.load(f)
+    executions, jobs = read_log(a.eventlog)
+    spans = [s for s in art["spans"]
+             if (a.all_ops or s.get("op", -1) >= 0) and (not a.span or s["name"] in a.span)]
+    by_id = {str(s["id"]): s for s in art["spans"]}
+
+    owned = collections.defaultdict(list)
+    for jid, j in sorted(jobs.items()):
+        if j["span"] is not None and j["span"] in by_id:
+            owned[j["span"]].append(j)
+        elif j["span"] is None:
+            for s in spans:
+                if s["start_ms"] <= j["submit"] <= s["end_ms"]:
+                    owned[str(s["id"])].append(j)
+                    break
+
+    totals = collections.defaultdict(list)
+    for s in spans:
+        mine = owned.get(str(s["id"]), [])
+        totals[s["name"]].append(len(mine))
+        print(f"== {s['name']} op={s.get('op')} span={s['id']} "
+              f"wall_ms={s['end_ms'] - s['start_ms']} jobs={len(mine)}")
+        groups = collections.OrderedDict()
+        for j in sorted(mine, key=lambda j: j["submit"]):
+            groups.setdefault(j["exec"], []).append(j)
+        print(f"   {'exec':>6} {'jobs':>4} {'wall_ms':>8}  call site")
+        for ex, js in groups.items():
+            wall = max(j["end"] for j in js) - min(j["submit"] for j in js)
+            site = executions.get(int(ex)) if ex is not None else js[0]["site"]
+            print(f"   {ex if ex is not None else '-':>6} {len(js):>4} {wall:>8}  {site}")
+    print("== jobs per span (fixed ops)")
+    for name, ns in totals.items():
+        print(f"   {name}: {' '.join(map(str, ns))}  (total {sum(ns)})")
+
+
+if __name__ == "__main__":
+    main()
