@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -530,35 +532,37 @@ object Dedup {
       numHashes: Int, mode: HashMode = Fast): DataFrame =
     signatureFromShingles(shingles(df, idCol, textCol, n), numHashes, mode)
 
-  /** Dev/profiling entry: signatures from a precomputed shingle table. */
-  def minhashSignatureFromShingles(sh: DataFrame, numHashes: Int,
-      mode: HashMode = Fast): DataFrame =
-    signatureFromShingles(sh, numHashes, mode)
+  /** The 64-bit words one shingle contributes to a MinHash signature:
+    * Fast one xxhash64, Portable the two md5 words. */
+  private def shingleWords(shingle: Column, mode: HashMode): Seq[Column] = mode match {
+    case Fast => Seq(xxhash64(shingle))
+    case Portable => Seq(md5h56(shingle), md5h53(shingle))
+  }
 
-  /** Dev/profiling entry: verification against a precomputed shingle table. */
-  def verifyPairsAgainstShingles(sh: DataFrame, candidates: DataFrame,
-      threshold: Double): DataFrame =
-    verifyAgainstShingles(sh, candidates, threshold)
+  /** Fast mode's universal-hash coefficients `(a_i odd, b_i)`, one
+    * fixed seed for every caller, so signatures taken at different
+    * times and on either path compare position by position. */
+  private def fastCoefficients(numHashes: Int): IndexedSeq[(Long, Long)] = {
+    val rnd = new scala.util.Random(20260812L)
+    IndexedSeq.fill(numHashes)((rnd.nextLong() | 1L, rnd.nextLong()))
+  }
 
   private def signatureFromShingles(sh: DataFrame, numHashes: Int,
       mode: HashMode = Fast, withN: Boolean = false): DataFrame = {
     // hash the shingle ONCE per row (projection below the aggregate);
     // the N min-aggs then fold cheap linear combinations of the words
-    val (hashed, aggs) = mode match {
+    val hashed = sh.select(col("_id") +: shingleWords(col("shingle"), mode).zipWithIndex
+      .map { case (w, i) => w.as(s"_h${i + 1}") }: _*)
+    val aggs = mode match {
       case Fast =>
-        val rnd = new scala.util.Random(20260812L)
-        val ab = Seq.fill(numHashes)((rnd.nextLong() | 1L, rnd.nextLong()))
-        (sh.select(col("_id"), xxhash64(col("shingle")).as("_h1"), lit(0L).as("_h2")),
-          ab.zipWithIndex.map { case ((a, b), i) =>
-            min(col("_h1") * a + b).as(s"_m$i")
-          })
+        fastCoefficients(numHashes).zipWithIndex.map { case ((a, b), i) =>
+          min(col("_h1") * a + b).as(s"_m$i")
+        }
       case Portable =>
         // Kirsch-Mitzenmacher family g_i = h1 + i * h2m over the two
         // independent md5 words — overflow-free, ANSI-reproducible
-        (sh.select(col("_id"), md5h56(col("shingle")).as("_h1"),
-            md5h53(col("shingle")).as("_h2")),
-          (0 until numHashes).map(i =>
-            min(col("_h1") + lit(i.toLong) * col("_h2")).as(s"_m$i")))
+        (0 until numHashes).map(i =>
+          min(col("_h1") + lit(i.toLong) * col("_h2")).as(s"_m$i"))
     }
     // `withN` folds the per-doc distinct-shingle count into the SAME
     // hash aggregate (r19, guide §2.4): the caller's separate
@@ -600,19 +604,35 @@ object Dedup {
   private def capBuckets(sizes: DataFrame, maxBucket: Int, what: String): DataFrame = {
     val keep = udf { (bsz: Long) =>
       val ok = bsz <= maxBucket
-      if (!ok) {
-        capEvents.increment()
-        val n = capLogged.incrementAndGet()
-        if (n <= 20 || n % 1000 == 0)
-          org.slf4j.LoggerFactory.getLogger("graft.caps").warn(
-            s"graft.cap.$what: bucket of $bsz rows exceeds cap $maxBucket — " +
-              "dropped wholesale; its candidate pairs were NOT generated " +
-              s"(drop #$n in this JVM)")
-      }
+      if (!ok) capDropped(bsz, maxBucket, what)
       ok
     }
     sizes.filter(keep(col("_bsz"))).localCheckpoint()
   }
+
+  /** Records one bucket of `bsz` rows dropped by the cap. */
+  private def capDropped(bsz: Long, maxBucket: Int, what: String): Unit = {
+    capEvents.increment()
+    val n = capLogged.incrementAndGet()
+    if (n <= 20 || n % 1000 == 0)
+      org.slf4j.LoggerFactory.getLogger("graft.caps").warn(
+        s"graft.cap.$what: bucket of $bsz rows exceeds cap $maxBucket — " +
+          "dropped wholesale; its candidate pairs were NOT generated " +
+          s"(drop #$n in this JVM)")
+  }
+
+  /** The LSH band keys of a `signature` column, one per band: Fast
+    * re-hashes the band slice (and the band index) to one 64-bit value;
+    * Portable joins the slice into a CSV string (exact, and trivially
+    * reproducible in SQL via string_agg ORDER BY hash index). */
+  private def bandKeys(bands: Int, rowsPerBand: Int, mode: HashMode): Column =
+    transform(sequence(lit(0), lit(bands - 1)), b => {
+      val band = slice(col("signature"), b * rowsPerBand + 1, lit(rowsPerBand))
+      mode match {
+        case Fast => xxhash64(band, b)
+        case Portable => concat_ws(",", transform(band, x => x.cast("string")))
+      }
+    })
 
   /** LSH banding: candidate pairs whose signatures agree on at least
     * one band of `rowsPerBand` consecutive hashes. Shuffle payload is
@@ -656,17 +676,6 @@ object Dedup {
     // over ALL rows, matching the batch semantics exactly; the emitted
     // pair set only loses pairs the consumer provably ignores.
     val storedFilter = signatures.columns.contains("_stored")
-    // band key: Fast re-hashes the band slice to one 64-bit value;
-    // Portable joins the slice into a CSV string (exact, and trivially
-    // reproducible in SQL via string_agg ORDER BY hash index)
-    def bandKey(b: Column): Column = mode match {
-      case Fast =>
-        xxhash64(slice(col("signature"), b * rowsPerBand + 1, lit(rowsPerBand)), b)
-      case Portable =>
-        concat_ws(",", transform(
-          slice(col("signature"), b * rowsPerBand + 1, lit(rowsPerBand)),
-          x => x.cast("string")))
-    }
     // (band_idx, band_hash, id) is tiny (`bands` rows/doc, no text) but
     // its lineage embeds the whole signature aggregation — and it feeds
     // FOUR scans below (bucket-size agg, cap join, self-join x and y).
@@ -676,8 +685,7 @@ object Dedup {
       (if (sizeFilter) Seq(col("_n")) else Seq.empty) ++
       (if (storedFilter) Seq(col("_stored")) else Seq.empty)
     val banded = signatures.select(carry :+
-      posexplode(transform(sequence(lit(0), lit(bands - 1)), bandKey(_)))
-        .as(Seq("band_idx", "band_hash")): _*)
+      posexplode(bandKeys(bands, rowsPerBand, mode)).as(Seq("band_idx", "band_hash")): _*)
       .localCheckpoint(false)
     val capped =
       if (maxBucket <= 0) banded
@@ -881,14 +889,30 @@ object Dedup {
     * then fold the survivors' signatures into the store.
     *
     * The retained state is signatures only — `numHashes` longs per
-    * document, never text or shingles — so the store stays a constant
-    * factor of the corpus row count and each batch costs
-    * O(|batch| + matched candidates), not a re-scan of the corpus.
-    * Candidates come from band buckets (new vs stored ∪ intra-batch);
-    * verification uses the signature-agreement Jaccard ESTIMATE
-    * (fraction of equal minhash components — the standard incremental
-    * trade-off: exact verification would require retaining shingle
-    * sets). Intra-batch duplicates collapse first-wins by id.
+    * document, never text or shingles. Candidates come from band
+    * buckets (new vs stored ∪ intra-batch, bucket sizes counted over
+    * both and capped at `maxBucket`); verification uses the
+    * signature-agreement Jaccard ESTIMATE (fraction of equal minhash
+    * components — the standard incremental trade-off: exact
+    * verification would require retaining shingle sets). Intra-batch
+    * duplicates collapse first-wins by id.
+    *
+    * Every batch reads the whole store, re-bands it to count bucket
+    * sizes, and publishes stored ∪ new as a fresh snapshot, so a
+    * batch costs O(|store| + |batch|). Two paths compute it, with the
+    * same survivors and the same store rows and schema:
+    *  - DRIVER, for a batch of at most [[DriverShardDocs]] documents
+    *    against a store whose plan-stats size is at most
+    *    [[DriverStoreBytes]], with an integral or string id: one
+    *    bounded collect of the batch; the new signatures' shingle words
+    *    from the engine's own expressions evaluated on the driver, their
+    *    minima in Scala; one scan of the store's signatures and band
+    *    keys; bucket sizes, the cap, candidate pairs, estimates and the
+    *    kill ladder in Scala; one publish. Survivors come back as a
+    *    local relation. A 200-document shard runs 3 Spark jobs instead
+    *    of 22.
+    *  - DISTRIBUTED otherwise ([[incrementalDistributed]]): the same
+    *    steps as joins and aggregates.
     *
     * Returns the surviving rows of `batch`. Pair this with
     * foreachBatch for a streaming corpus ingest.
@@ -898,14 +922,179 @@ object Dedup {
       threshold: Double = 0.8, maxBucket: Int = 256,
       mode: HashMode = Fast, maxStoreFiles: Int = 256): DataFrame = {
     val spark = batch.sparkSession
-    val storeExists = graft.sources.Sources.snapshotExists(spark, signatureStore)
+    val stored =
+      if (!graft.sources.Sources.snapshotExists(spark, signatureStore)) None
+      else Some(graft.sources.Sources.readSnapshot(spark, signatureStore))
+    val probe =
+      if (driverIdType(batch.schema(idCol).dataType) &&
+          stored.forall(planBytes(_) <= BigInt(DriverStoreBytes)))
+        DriverPath.batchRows(batch, DriverShardDocs)
+      else Left(batch)
+    val survivors = probe match {
+      case Right(rows) => incrementalOnDriver(rows, batch, idCol, textCol, signatureStore,
+        n, numHashes, bands, threshold, maxBucket, mode, stored)
+      case Left(_) => incrementalDistributed(batch, idCol, textCol, signatureStore,
+        n, numHashes, bands, threshold, maxBucket, mode, stored)
+    }
+    // Retention/compaction policy: every publish unions the prior
+    // store's partitions with the batch's, so files-per-version grows
+    // ~linearly with batch count while version COUNT is already
+    // bounded by publishSnapshot's 2-prior pruning. When the live
+    // version's file count crosses `maxStoreFiles`, rewrite it through
+    // Sources.compact (a fresh snapshot publish at ~128 MB/file) — a
+    // long-running ingest then holds a bounded file count forever at
+    // one amortized store rewrite per ~maxStoreFiles batches.
+    if (maxStoreFiles > 0) {
+      val live = graft.sources.Sources.resolveSnapshot(spark, signatureStore)
+      val fs = org.apache.hadoop.fs.FileSystem.get(
+        new java.net.URI(live), spark.sparkContext.hadoopConfiguration)
+      val nFiles = fs.listStatus(new org.apache.hadoop.fs.Path(live))
+        .count(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+      if (nFiles > maxStoreFiles)
+        graft.sources.Sources.compact(spark, signatureStore)
+    }
+    survivors
+  }
+
+  /** Largest batch, in documents, that [[incrementalMinhashDedup]]
+    * dedups on the driver. The batch's rows and its signatures are held
+    * on the driver, so B bounds driver memory by the batch's text.
+    * Measured on a 4-core host at B 60-word documents against a store
+    * at [[DriverStoreBytes]]: 4.9–5.9 s on the driver against 6.4–8.2 s
+    * distributed (`plans/r22/driver_bounds_at_b_and_s.txt`); the
+    * driver's share grows with the batch, so B sits where it still
+    * wins. Above B the extra cost is the bounded collect, one job. */
+  val DriverShardDocs: Int = 10000
+
+  /** Largest signature store, in plan-stats bytes, that
+    * [[incrementalMinhashDedup]] reads onto the driver. Never above
+    * [[MinhashSigBroadcastBytes]]: under that bound the distributed
+    * plan broadcasts the whole store anyway, so the driver already
+    * holds it once per batch. Measured at the bound (31k signatures,
+    * same file): a 200-document shard took 2.3–2.6 s on the driver
+    * against 5.1–6.8 s distributed, most of it the store scan. The
+    * store bound is checked before the probe, so a larger store costs
+    * no extra job. */
+  val DriverStoreBytes: Long = math.min(16L * 1024 * 1024, MinhashSigBroadcastBytes)
+
+  /** Plan-stats size of `df`; unknown counts as unbounded. */
+  private def planBytes(df: DataFrame): BigInt =
+    try df.queryExecution.optimizedPlan.stats.sizeInBytes
+    catch { case _: Throwable => BigInt(Long.MaxValue) }
+
+  /** Id types the driver path groups and orders exactly like Spark. */
+  private def driverIdType(dt: org.apache.spark.sql.types.DataType): Boolean = {
+    import org.apache.spark.sql.types._
+    dt match {
+      case ByteType | ShortType | IntegerType | LongType | StringType => true
+      case _ => false
+    }
+  }
+
+  /** The driver path of [[incrementalMinhashDedup]] (`rows`: the whole
+    * batch). Each step mirrors [[incrementalDistributed]] clause for
+    * clause: signatures grouped by id (null ids form one group), bucket
+    * sizes over every stored and new row, pairs with `id_a < id_b` in
+    * Spark's order from the uncapped buckets, stored×stored pairs
+    * dropped, then the estimate over every stored and new signature of
+    * both ids and the same kill ladder. */
+  private def incrementalOnDriver(rows: Array[Row], batch: DataFrame,
+      idCol: String, textCol: String, signatureStore: String, n: Int, numHashes: Int,
+      bands: Int, threshold: Double, maxBucket: Int, mode: HashMode,
+      stored: Option[DataFrame]): DataFrame = {
+    val spark = batch.sparkSession
+    // the shingle words, evaluated by the engine's own expressions: the
+    // optimizer folds this projection into the local relation, no job
+    val t = tokens(col(textCol))
+    val sh = when(size(t) >= n, graft.functions.VectorKernels.wordShinglesCol(t, n))
+    val hashed = DriverPath.localFrame(spark, rows.toSeq, batch.schema)
+      .select(col(idCol), transform(sh, s => struct(shingleWords(s, mode): _*)))
+      .collect()
+    // the minima in Scala, per id over all of its documents
+    val coef = fastCoefficients(numHashes)
+    val (ca, cb) = (coef.map(_._1).toArray, coef.map(_._2).toArray)
+    val sigs = mutable.LinkedHashMap.empty[Any, Array[Long]]
+    for (r <- hashed if !r.isNullAt(1) && r.getSeq[Row](1).nonEmpty) {
+      val m = sigs.getOrElseUpdate(r.get(0), Array.fill(numHashes)(Long.MaxValue))
+      for (w <- r.getSeq[Row](1); i <- 0 until numHashes) {
+        val v =
+          if (mode == Fast) w.getLong(0) * ca(i) + cb(i)
+          else w.getLong(0) + i.toLong * w.getLong(1)
+        if (v < m(i)) m(i) = v
+      }
+    }
+    val sigSchema = minhashSignature(batch, idCol, textCol, n, numHashes, mode).schema
+    def sigFrame(ids: Iterable[Any]) =
+      DriverPath.localFrame(spark, ids.map(id => Row(id, sigs(id).toSeq)).toSeq, sigSchema)
+
+    // one scan: every stored and new signature with its band keys
+    val all = (stored.map(_.select(col("_id"), col("signature"), lit(true).as("_stored"))) ++
+      Some(sigFrame(sigs.keys).select(col("_id"), col("signature"), lit(false).as("_stored"))))
+      .reduce(_ unionByName _)
+      .select(col("_id"), col("signature"), col("_stored"),
+        bandKeys(bands, numHashes / bands, mode).as("_keys"))
+      .collect()
+    val ids = all.map(_.get(0))
+    val isStored = all.map(_.getBoolean(2))
+    val sig = all.map(_.getSeq[Long](1).toArray)
+    val buckets = all.map(_.getSeq[Any](3).zipWithIndex.map { case (k, b) => (b, k) })
+    val bsz = mutable.HashMap.empty[(Int, Any), Long]
+    for (bs <- buckets; k <- bs) bsz(k) = bsz.getOrElse(k, 0L) + 1
+    if (maxBucket > 0)
+      bsz.valuesIterator.filter(_ > maxBucket).foreach(capDropped(_, maxBucket, "minhash"))
+    val kept = (k: (Int, Any)) => maxBucket <= 0 || bsz(k) <= maxBucket
+    // members of the kept buckets a new signature falls in
+    val members = mutable.HashMap.empty[(Int, Any), mutable.ArrayBuffer[Int]]
+    for (r <- all.indices if !isStored(r); k <- buckets(r) if kept(k))
+      members.getOrElseUpdate(k, mutable.ArrayBuffer.empty)
+    for (r <- all.indices; k <- buckets(r)) members.get(k).foreach(_ += r)
+    val idOrder = DriverPath.sparkOrdering(sigSchema("_id").dataType)
+    val pairs = mutable.LinkedHashSet.empty[(Any, Any)]
+    for (ms <- members.valuesIterator; x <- ms if !isStored(x); y <- ms) {
+      val (a, b) = (ids(x), ids(y))
+      if (a != null && b != null) {
+        val c = idOrder.compare(a, b)
+        if (c < 0) pairs += ((a, b)) else if (c > 0) pairs += ((b, a))
+      }
+    }
+    // the estimate over every (stored or new) row of both ids, then the
+    // kill ladder: a new doc dies if it matches a stored doc, or a
+    // smaller-id new doc
+    val rowsById = all.indices.groupBy(ids(_))
+    val dead = mutable.HashSet.empty[Any]
+    for ((a, b) <- pairs; x <- rowsById(a); y <- rowsById(b)) {
+      val (sa, sb) = (sig(x), sig(y))
+      var agree = 0
+      for (i <- 0 until math.min(sa.length, sb.length)) if (sa(i) == sb(i)) agree += 1
+      if (agree.toDouble / numHashes >= threshold) {
+        if (isStored(x) && !isStored(y)) dead += b
+        else if (!isStored(x)) dead += (if (isStored(y)) a else b)
+      }
+    }
+    // idempotent store update, as on the distributed path: new ids the
+    // store already holds are not written again
+    val storedIds = all.indices.collect { case r if isStored(r) && ids(r) != null => ids(r) }.toSet
+    val fresh = sigFrame(sigs.keys.filter(id => id == null || !(dead(id) || storedIds(id))))
+      // one file per batch: a local relation scans as up to
+      // defaultParallelism partitions
+      .coalesce(1)
+    graft.sources.Sources.publishSnapshot(
+      stored.fold(fresh)(_.select("_id", "signature").unionByName(fresh)), signatureStore)
+    val idAt = batch.schema.fieldIndex(idCol)
+    DriverPath.localFrame(spark,
+      rows.toSeq.filter(r => r.isNullAt(idAt) || !dead(r.get(idAt))), batch.schema)
+  }
+
+  /** The distributed path of [[incrementalMinhashDedup]] against the
+    * store read as `storedOpt`, without the compaction that follows. */
+  private[graft] def incrementalDistributed(batch: DataFrame, idCol: String, textCol: String,
+      signatureStore: String, n: Int, numHashes: Int, bands: Int, threshold: Double,
+      maxBucket: Int, mode: HashMode, storedOpt: Option[DataFrame]): DataFrame = {
     // lazy: the kill-set checkpoint below is the materializing action,
     // so signatures + candidates + kill set all land in ONE job
     val newSig = minhashSignature(batch, idCol, textCol, n, numHashes, mode)
       .localCheckpoint(false)
-    val stored =
-      if (storeExists) graft.sources.Sources.readSnapshot(spark, signatureStore)
-      else newSig.limit(0)
+    val stored = storedOpt.getOrElse(newSig.limit(0))
     // candidate pairs via shared band buckets, new-vs-(stored + earlier
     // new): stored ids are flagged so any stored match kills the new
     // doc, while intra-batch ties keep the smaller id
@@ -939,9 +1128,7 @@ object Dedup {
     // downstream consumer (banding, fetch, keepSig) reuses, and it
     // only runs at all once the store is already under the bound, so
     // the at-scale path pays neither the job nor the broadcast.
-    val storedBytes =
-      try stored.queryExecution.optimizedPlan.stats.sizeInBytes
-      catch { case _: Throwable => BigInt(Long.MaxValue) }
+    val storedBytes = planBytes(stored)
     val fetchable = storedBytes <= BigInt(MinhashSigBroadcastBytes) &&
       storedBytes + BigInt(newSig.count()) * (64L + 8L * numHashes) <=
         BigInt(MinhashSigBroadcastBytes)
@@ -981,23 +1168,6 @@ object Dedup {
       .unionByName(keepSig.select("_id", "signature")
         .join(stored.select("_id"), Seq("_id"), "left_anti"))
     graft.sources.Sources.publishSnapshot(merged, signatureStore)
-    // Retention/compaction policy: every publish unions the prior
-    // store's partitions with the batch's, so files-per-version grows
-    // ~linearly with batch count while version COUNT is already
-    // bounded by publishSnapshot's 2-prior pruning. When the live
-    // version's file count crosses `maxStoreFiles`, rewrite it through
-    // Sources.compact (a fresh snapshot publish at ~128 MB/file) — a
-    // long-running ingest then holds a bounded file count forever at
-    // one amortized store rewrite per ~maxStoreFiles batches.
-    if (maxStoreFiles > 0) {
-      val live = graft.sources.Sources.resolveSnapshot(spark, signatureStore)
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(live), spark.sparkContext.hadoopConfiguration)
-      val nFiles = fs.listStatus(new org.apache.hadoop.fs.Path(live))
-        .count(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      if (nFiles > maxStoreFiles)
-        graft.sources.Sources.compact(spark, signatureStore)
-    }
     survivors
   }
 

@@ -1,16 +1,12 @@
 package graft.operators
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.RowOrdering
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.Gsid
+import DriverPath.{isLocal, localFrame, sparkOrdering}
 
 /** Set-based identity resolution (SURVEY.md §2.9) — the reference's
   * centerpiece "query".
@@ -132,7 +128,7 @@ object IdentityResolver {
     val cand = candidateFrame(candidates)
     if (!driverTypes(cand.schema, registryIds(registry).schema))
       resolveDistributed(candidates, registry, deterministicMint, groupingIterations)
-    else batchRows(cand) match {
+    else DriverPath.batchRows(cand, DriverBatchRows) match {
       case Right(rows) =>
         lastResolveUsedSaltedJoin = false
         resolveOnDriver(rows, cand, registry, deterministicMint, groupingIterations)
@@ -155,33 +151,10 @@ object IdentityResolver {
     * it holds at most [[DriverBatchRows]] rows, else Left(the frame,
     * lazily checkpointed) for the distributed path. */
   def materializeBatch(candidates: DataFrame): Either[DataFrame, DataFrame] =
-    batchRows(candidates) match {
+    DriverPath.batchRows(candidates, DriverBatchRows) match {
       case Right(rows) => Right(localFrame(candidates.sparkSession, rows.toSeq, candidates.schema))
       case Left(_) => Left(candidates.localCheckpoint(false))
     }
-
-  /** The frame's rows when it holds at most [[DriverBatchRows]]
-    * (Right), else the frame itself (Left). A local relation is read
-    * in place, with no job; any other plan costs one bounded collect —
-    * one task over one coalesced partition that stops after B+1 rows.
-    * The probe does not checkpoint: a lazy local checkpoint that a job
-    * computes only in part runs a second job to finish it, which above
-    * B would double the probe's cost. */
-  private def batchRows(df: DataFrame): Either[DataFrame, Array[Row]] = {
-    val rows =
-      if (isLocal(df)) df.collect()
-      else df.coalesce(1).limit(DriverBatchRows + 1).collect()
-    if (rows.length <= DriverBatchRows) Right(rows) else Left(df)
-  }
-
-  /** True when the frame's optimized plan is a local relation: its
-    * rows are on the driver and collecting them runs no job. */
-  private[graft] def isLocal(df: DataFrame): Boolean =
-    df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
-
-  private def localFrame(spark: SparkSession, rows: Seq[Row],
-      schema: StructType): DataFrame =
-    spark.createDataFrame(rows.asJava, schema)
 
   private def candidateFrame(candidates: DataFrame): DataFrame =
     candidates.select(
@@ -285,18 +258,6 @@ object IdentityResolver {
   private def driverTypes(cand: StructType, ids: StructType): Boolean =
     integral(cand("center_id").dataType) && integral(ids("_id_center").dataType) &&
       RowOrdering.isOrderable(cand("request_id").dataType)
-
-  /** Spark's ascending order (nulls first) over external values of `dt`. */
-  private def sparkOrdering(dt: DataType): Ordering[Any] = {
-    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(dt)
-    val ord = PhysicalDataType.ordering(dt)
-    new Ordering[Any] {
-      def compare(a: Any, b: Any): Int =
-        if (a == null) { if (b == null) 0 else -1 }
-        else if (b == null) 1
-        else ord.compare(toCatalyst(a), toCatalyst(b))
-    }
-  }
 
   private def asLong(v: Any): Long = v.asInstanceOf[Number].longValue
 
@@ -533,7 +494,10 @@ object IdentityResolver {
     // intra-batch grouping of unmatched requests (see scaladoc):
     // iterated label propagation — leader(identifier) = min leader of
     // its requests; leader(request) = min leader of its identifiers.
-    val unmatchedCand = cand
+    // Null identifiers never join, so a request holding only those
+    // would leave the label set on the first hop; dropping them here
+    // keeps the set fixed, which the fixpoint's sum check relies on.
+    val unmatchedCand = cand.filter(col("_nid").isNotNull)
       .join(reqs.filter(col("_n") === 0).select("request_id"), Seq("request_id"), "left_semi")
       .localCheckpoint(false)
     var reqLeader = unmatchedCand.select(col("request_id"), col("request_id").as("_leader"))
@@ -553,12 +517,13 @@ object IdentityResolver {
         if (i < groupingIterations) reqLeader = reqLeader.localCheckpoint(false)
       }
     } else {
-      // groupingIterations ≤ 0: iterate to a FIXPOINT — labels are
-      // monotonically non-increasing, so the label SUM strictly
-      // decreases while anything changes and "sum unchanged" is global
-      // convergence; covers arbitrarily long identifier chains at ONE
-      // cheap aggregate job per hop (vs a join + count). DECIMAL sum so
-      // the invariant can't be confused by overflow at any batch size.
+      // groupingIterations ≤ 0: iterate to a FIXPOINT — over a fixed
+      // request set labels are monotonically non-increasing, so the
+      // label SUM strictly decreases while anything changes and "sum
+      // unchanged" is global convergence; covers arbitrarily long
+      // identifier chains at ONE cheap aggregate job per hop (vs a
+      // join + count). DECIMAL sum so the invariant can't be confused
+      // by overflow at any batch size.
       // NON-NUMERIC request ids (Pipelines mints md5 hex strings) have
       // no numeric sum: for those the check sums xxhash64 of the label
       // — any label change alters the sum up to a ~2^-64 per-hop

@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.catalog.RegistryCatalog
-import graft.operators.IdentityResolver
+import graft.operators.{DriverPath, IdentityResolver}
 import graft.operators.IdentityResolver.Registry
 
 /** The driver path of `IdentityResolver.resolve` / `links` against the
@@ -18,7 +18,7 @@ import graft.operators.IdentityResolver.Registry
   * case variants, duplicate registry keys, null keys and a cataloged
   * (`norm_id`) registry. The random mint is compared by structure: the
   * same groups, each with one valid GSID. */
-class IdentityDriverPathSpec extends SparkSpec {
+class IdentityDriverPathSpec extends DriverPathHarness {
   import spark.implicits._
   import IdentityResolver._
 
@@ -69,9 +69,6 @@ class IdentityDriverPathSpec extends SparkSpec {
   private def cands(rows: Seq[(Long, Int, String, String)]): DataFrame =
     rows.toDF("request_id", "center_id", "local_subject_id", "identifier_type")
 
-  private def rowsOf(df: DataFrame): Seq[String] =
-    df.collect().map(_.toString).toSeq.sorted
-
   /** Resolve and link one batch on both paths; rows and schemas must
     * match, and the driver path must have run. `candidates` is tried
     * both as given and behind a repartition (not a local relation, so
@@ -81,17 +78,14 @@ class IdentityDriverPathSpec extends SparkSpec {
     val wantLinks = linksDistributed(candidates, want, reg.localIds, "graft")
     for (input <- Seq(candidates, candidates.repartition(3))) {
       val got = resolve(input, reg, deterministicMint = true, iterations)
-      assert(isLocal(got), "the driver path did not run")
-      assert(got.schema == want.schema, s"${got.schema.treeString} vs ${want.schema.treeString}")
-      assert(rowsOf(got) == rowsOf(want))
+      assertOnDriver(got)
+      assertSameFrame(got, want)
     }
     val batch = materializeBatch(candidates).toOption.get
     val got = resolve(batch, reg, deterministicMint = true, iterations)
     val gotLinks = links(batch, got, reg.localIds)
-    assert(isLocal(gotLinks), "links did not run on the driver")
-    assert(gotLinks.schema == wantLinks.schema,
-      s"${gotLinks.schema.treeString} vs ${wantLinks.schema.treeString}")
-    assert(rowsOf(gotLinks) == rowsOf(wantLinks))
+    assertOnDriver(gotLinks, "links on the driver")
+    assertSameFrame(gotLinks, wantLinks)
   }
 
   test("resolver fixtures: triage, center ladder, multi-GSID, grouping") {
@@ -123,6 +117,20 @@ class IdentityDriverPathSpec extends SparkSpec {
     for (it <- Seq(1, 2, 3, 0)) same(chain, resolverReg, it)
     val fixed = resolve(chain, resolverReg, deterministicMint = true, groupingIterations = 0)
     assert(fixed.select("gsid").distinct().count() == 1)
+  }
+
+  test("fixpoint mode does not stop when an identifier-less request leaves the label set") {
+    // unmatched 10~15 share x and 15~20 share y; -10 carries only a
+    // null identifier. On the first hop -10 leaves the label set (+10)
+    // while 15 and 20 fall by 5 each (-10): a label-sum check sees no
+    // change after one hop and would mint two GSIDs for one chain.
+    val b = cands(Seq((10L, 5, "x", "primary"), (15L, 5, "x", "primary"),
+      (15L, 5, "y", "alias"), (20L, 5, "y", "primary"), (-10L, 5, null, "primary")))
+    val want = resolve(b, resolverReg, deterministicMint = true, groupingIterations = 0)
+    assertOnDriver(want)
+    val got = resolveDistributed(b, resolverReg, deterministicMint = true, 0)
+    assertSameFrame(got, want)
+    assert(got.filter(col("request_id") =!= -10).select("gsid").distinct().count() == 1)
   }
 
   test("the fixpoint cap fails loudly on the driver path too") {
@@ -215,7 +223,7 @@ class IdentityDriverPathSpec extends SparkSpec {
       (minted, linked)
     }
     val got = resolve(b, resolverReg, deterministicMint = false, groupingIterations = 2)
-    assert(isLocal(got))
+    assertOnDriver(got)
     val want = resolveDistributed(b, resolverReg, deterministicMint = false, 2)
     assert(got.schema == want.schema)
     assert(groups(got) == groups(want))
@@ -227,17 +235,15 @@ class IdentityDriverPathSpec extends SparkSpec {
     val big = spark.range(n).select(col("id").as("request_id"),
       lit(5).as("center_id"), concat(lit("id-"), col("id").cast("string")).as("local_subject_id"),
       lit("primary").as("identifier_type"))
-    val metrics = QueryMetrics.install(spark)
-    val (_, distributed) = metrics.measure(
+    val (_, distributed) = measured(
       resolveDistributed(big, resolverReg, deterministicMint = true, 1).count())
-    val (out, routed) = metrics.measure {
+    val (out, routed) = measured {
       val out = resolve(big, resolverReg, deterministicMint = true, groupingIterations = 1)
       assert(out.count() == n)
       out
     }
-    assert(!isLocal(out))
-    assert(routed.jobs == distributed.jobs + 1,
-      s"${routed.jobSites.mkString("\n")}\nvs\n${distributed.jobSites.mkString("\n")}")
+    assert(!DriverPath.isLocal(out))
+    assertExtraJobs(routed, distributed, 1)
     assert(materializeBatch(big).isLeft)
   }
 }

@@ -186,7 +186,7 @@ class IncrementalIdentitySpec extends SparkSpec {
     Sources.publishMergePartitioned(spark, fragDir, frag(rows), cfg, "p")
     val c = IncrementalIdentity.resolveCycle(spark, fragDir, ckDir, regRoot,
       Seq("request_id"), day1, "p", groupingIterations = 1)(identity)
-    assert(c.isDefined && !IdentityResolver.isLocal(c.get.resolutions))
+    assert(c.isDefined && !graft.operators.DriverPath.isLocal(c.get.resolutions))
     val res = c.get.resolutions
     assert(res.count() == n)
     assert(res.filter(col("action") === "link_existing" && col("gsid") === "G1").count() == 1)

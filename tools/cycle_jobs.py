@@ -21,11 +21,19 @@ are listed under `-`. A job belongs to a span when its `perfbench.span`
 property names the span's id, or, lacking the property, when it was
 submitted inside the span's [start_ms, end_ms] window.
 
+With --jfr FILE (a JFR recording of the same run, e.g. from
+`JAVA_TOOL_OPTIONS="-XX:StartFlightRecording=filename=run.jfr"`), each
+span header also counts the `jdk.ProcessStart` events submitted inside
+the span's window (`forks=`, by program, e.g. `chmod:16`), and a last
+table gives forks per span. EVENTLOG may then be left out to count forks
+alone.
+
 Only the standard library is used; `.zstd` logs are read through
-`zstd -dc`.
+`zstd -dc`, JFR recordings through `jfr print --json`.
 """
 import argparse
 import collections
+import datetime
 import json
 import os
 import re
@@ -90,17 +98,45 @@ def read_log(path):
     return executions, jobs
 
 
+def epoch_ms(stamp):
+    """Epoch milliseconds of a JFR timestamp such as
+    2026-10-18T20:25:01.123456789Z or 2026-10-18T20:25:01.123+01:00."""
+    m = re.match(r"(.+T\d\d:\d\d:\d\d)(?:\.(\d+))?(Z|[+-]\d\d:?\d\d)?$", stamp)
+    if not m:
+        sys.exit(f"unrecognised JFR timestamp {stamp!r}")
+    zone = m.group(3) or "Z"
+    t = datetime.datetime.fromisoformat(m.group(1) + ("+00:00" if zone == "Z" else zone))
+    return int(t.timestamp()) * 1000 + int((m.group(2) or "0")[:3].ljust(3, "0"))
+
+
+def process_starts(path):
+    """(epoch ms, program name) of every jdk.ProcessStart event in a JFR recording."""
+    out = subprocess.run(["jfr", "print", "--json", "--stack-depth", "1",
+                          "--events", "jdk.ProcessStart", path],
+                         check=True, capture_output=True).stdout
+    starts = []
+    for e in json.loads(out)["recording"]["events"]:
+        v = e["values"]
+        program = os.path.basename((v.get("command") or "?").split()[0])
+        starts.append((epoch_ms(v["startTime"]), program))
+    return starts
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("artifact")
-    ap.add_argument("eventlog")
+    ap.add_argument("eventlog", nargs="?")
     ap.add_argument("--span", action="append", help="only spans with this name (repeatable)")
     ap.add_argument("--all-ops", action="store_true", help="include warm-up and seed spans")
+    ap.add_argument("--jfr", metavar="FILE", help="count jdk.ProcessStart events per span")
     a = ap.parse_args()
+    if not a.eventlog and not a.jfr:
+        ap.error("give an EVENTLOG, a --jfr recording, or both")
 
     with open(a.artifact, encoding="utf-8") as f:
         art = json.load(f)
-    executions, jobs = read_log(a.eventlog)
+    executions, jobs = read_log(a.eventlog) if a.eventlog else ({}, {})
+    forks = process_starts(a.jfr) if a.jfr else []
     spans = [s for s in art["spans"]
              if (a.all_ops or s.get("op", -1) >= 0) and (not a.span or s["name"] in a.span)]
     by_id = {str(s["id"]): s for s in art["spans"]}
@@ -116,11 +152,23 @@ def main():
                     break
 
     totals = collections.defaultdict(list)
+    fork_totals = collections.defaultdict(list)
     for s in spans:
         mine = owned.get(str(s["id"]), [])
         totals[s["name"]].append(len(mine))
-        print(f"== {s['name']} op={s.get('op')} span={s['id']} "
-              f"wall_ms={s['end_ms'] - s['start_ms']} jobs={len(mine)}")
+        header = (f"== {s['name']} op={s.get('op')} span={s['id']} "
+                  f"wall_ms={s['end_ms'] - s['start_ms']}")
+        if a.eventlog:
+            header += f" jobs={len(mine)}"
+        if a.jfr:
+            programs = collections.Counter(
+                p for t, p in forks if s["start_ms"] <= t <= s["end_ms"])
+            fork_totals[s["name"]].append(sum(programs.values()))
+            header += f" forks={sum(programs.values())}" + "".join(
+                f" {p}:{n}" for p, n in programs.most_common())
+        print(header)
+        if not a.eventlog:
+            continue
         groups = collections.OrderedDict()
         for j in sorted(mine, key=lambda j: j["submit"]):
             groups.setdefault(j["exec"], []).append(j)
@@ -129,9 +177,15 @@ def main():
             wall = max(j["end"] for j in js) - min(j["submit"] for j in js)
             site = executions.get(int(ex)) if ex is not None else js[0]["site"]
             print(f"   {ex if ex is not None else '-':>6} {len(js):>4} {wall:>8}  {site}")
-    print("== jobs per span (fixed ops)")
-    for name, ns in totals.items():
-        print(f"   {name}: {' '.join(map(str, ns))}  (total {sum(ns)})")
+    if a.eventlog:
+        print("== jobs per span" + ("" if a.all_ops else " (fixed ops)"))
+        for name, ns in totals.items():
+            print(f"   {name}: {' '.join(map(str, ns))}  (total {sum(ns)})")
+    if a.jfr:
+        print("== forks per span" + ("" if a.all_ops else " (fixed ops)") +
+              f"; {len(forks)} in the whole recording")
+        for name, ns in fork_totals.items():
+            print(f"   {name}: {' '.join(map(str, ns))}  (total {sum(ns)})")
 
 
 if __name__ == "__main__":
