@@ -903,7 +903,7 @@ object Dedup {
     * same survivors and the same store rows and schema:
     *  - DRIVER, for a batch of at most [[DriverShardDocs]] documents
     *    against a store whose plan-stats size is at most
-    *    [[DriverStoreBytes]], with an integral or string id: one
+    *    [[DriverPath.DriverStoreBytes]], with an integral or string id: one
     *    bounded collect of the batch; the new signatures' shingle words
     *    from the engine's own expressions evaluated on the driver, their
     *    minima in Scala; one scan of the store's signatures and band
@@ -927,7 +927,7 @@ object Dedup {
       else Some(graft.sources.Sources.readSnapshot(spark, signatureStore))
     val probe =
       if (driverIdType(batch.schema(idCol).dataType) &&
-          stored.forall(planBytes(_) <= BigInt(DriverStoreBytes)))
+          stored.forall(DriverPath.fits(_)))
         DriverPath.batchRows(batch, DriverShardDocs)
       else Left(batch)
     val survivors = probe match {
@@ -960,27 +960,11 @@ object Dedup {
     * dedups on the driver. The batch's rows and its signatures are held
     * on the driver, so B bounds driver memory by the batch's text.
     * Measured on a 4-core host at B 60-word documents against a store
-    * at [[DriverStoreBytes]]: 4.9–5.9 s on the driver against 6.4–8.2 s
+    * at [[DriverPath.DriverStoreBytes]]: 4.9–5.9 s on the driver against 6.4–8.2 s
     * distributed (`plans/r22/driver_bounds_at_b_and_s.txt`); the
     * driver's share grows with the batch, so B sits where it still
     * wins. Above B the extra cost is the bounded collect, one job. */
   val DriverShardDocs: Int = 10000
-
-  /** Largest signature store, in plan-stats bytes, that
-    * [[incrementalMinhashDedup]] reads onto the driver. Never above
-    * [[MinhashSigBroadcastBytes]]: under that bound the distributed
-    * plan broadcasts the whole store anyway, so the driver already
-    * holds it once per batch. Measured at the bound (31k signatures,
-    * same file): a 200-document shard took 2.3–2.6 s on the driver
-    * against 5.1–6.8 s distributed, most of it the store scan. The
-    * store bound is checked before the probe, so a larger store costs
-    * no extra job. */
-  val DriverStoreBytes: Long = math.min(16L * 1024 * 1024, MinhashSigBroadcastBytes)
-
-  /** Plan-stats size of `df`; unknown counts as unbounded. */
-  private def planBytes(df: DataFrame): BigInt =
-    try df.queryExecution.optimizedPlan.stats.sizeInBytes
-    catch { case _: Throwable => BigInt(Long.MaxValue) }
 
   /** Id types the driver path groups and orders exactly like Spark. */
   private def driverIdType(dt: org.apache.spark.sql.types.DataType): Boolean = {
@@ -1074,12 +1058,26 @@ object Dedup {
     // idempotent store update, as on the distributed path: new ids the
     // store already holds are not written again
     val storedIds = all.indices.collect { case r if isStored(r) && ids(r) != null => ids(r) }.toSet
-    val fresh = sigFrame(sigs.keys.filter(id => id == null || !(dead(id) || storedIds(id))))
-      // one file per batch: a local relation scans as up to
-      // defaultParallelism partitions
-      .coalesce(1)
+    val fresh = sigs.keys.filter(id => id == null || !(dead(id) || storedIds(id)))
+    // stored ∪ fresh from the rows already on the driver, under the
+    // union's schema: a local relation, which the publish writes from
+    // the driver with no job instead of re-scanning the store
+    val storeSchema = stored.fold(sigSchema)(
+      _.select("_id", "signature").unionByName(sigFrame(Nil)).schema)
+    def conform(from: org.apache.spark.sql.types.StructType): Row => Row = {
+      val cs = storeSchema.fields.zip(from.fields)
+        .map { case (to, f) => DriverPath.castTo(f.dataType, to.dataType) }
+      r => Row(cs(0)(r.get(0)), cs(1)(r.get(1)))
+    }
+    val storeRows = stored.toSeq.flatMap { st =>
+      val c = conform(st.select("_id", "signature").schema)
+      all.indices.collect { case r if isStored(r) => c(all(r)) }
+    } ++ {
+      val c = conform(sigSchema)
+      fresh.map(id => c(Row(id, sigs(id).toSeq)))
+    }
     graft.sources.Sources.publishSnapshot(
-      stored.fold(fresh)(_.select("_id", "signature").unionByName(fresh)), signatureStore)
+      DriverPath.localFrame(spark, storeRows, storeSchema), signatureStore)
     val idAt = batch.schema.fieldIndex(idCol)
     DriverPath.localFrame(spark,
       rows.toSeq.filter(r => r.isNullAt(idAt) || !dead(r.get(idAt))), batch.schema)
@@ -1128,7 +1126,7 @@ object Dedup {
     // downstream consumer (banding, fetch, keepSig) reuses, and it
     // only runs at all once the store is already under the bound, so
     // the at-scale path pays neither the job nor the broadcast.
-    val storedBytes = planBytes(stored)
+    val storedBytes = DriverPath.planBytes(stored)
     val fetchable = storedBytes <= BigInt(MinhashSigBroadcastBytes) &&
       storedBytes + BigInt(newSig.count()) * (64L + 8L * numHashes) <=
         BigInt(MinhashSigBroadcastBytes)

@@ -4,6 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -15,8 +16,33 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * from that plan's analysis, never executed). On a bulk-synchronous
   * engine the fixed cost per job, not the data, bounds small-batch
   * latency; the distributed plan stays for everything above the bound.
-  * Used by [[IdentityResolver]] and [[Dedup.incrementalMinhashDedup]]. */
+  * Used by [[IdentityResolver]], [[IncrementalIdentity]],
+  * [[Dedup.incrementalMinhashDedup]] and the snapshot publishes of
+  * [[graft.sources.Sources]]. */
 private[graft] object DriverPath {
+
+  /** Largest stored table, in plan-stats bytes, that a driver path
+    * reads onto the driver or writes from it: the incremental dedup
+    * signature store, the identity registry's two members together,
+    * and a local-relation member of a snapshot publish. Never above
+    * [[Dedup.MinhashSigBroadcastBytes]]: under that bound the
+    * distributed dedup plan broadcasts the whole store anyway, so the
+    * driver already holds it once per batch. Measured at the bound
+    * (31k signatures, same file): a 200-document shard took 2.3–2.6 s
+    * on the driver against 5.1–6.8 s distributed, most of it the store
+    * scan (SCALING.md, round 22). */
+  val DriverStoreBytes: Long = math.min(16L * 1024 * 1024, Dedup.MinhashSigBroadcastBytes)
+
+  /** Plan-stats size of `df`; unknown counts as unbounded. A file scan
+    * reports its files' bytes; a local relation its rows times Spark's
+    * default row width. */
+  def planBytes(df: DataFrame): BigInt =
+    try df.queryExecution.optimizedPlan.stats.sizeInBytes
+    catch { case _: Throwable => BigInt(Long.MaxValue) }
+
+  /** Whether `dfs` together fit [[DriverStoreBytes]]. */
+  def fits(dfs: DataFrame*): Boolean =
+    dfs.map(planBytes).sum <= BigInt(DriverStoreBytes)
 
   /** The frame's rows when it holds at most `limit` (Right), else the
     * frame itself (Left). A local relation is read in place, with no
@@ -36,6 +62,54 @@ private[graft] object DriverPath {
     * rows are on the driver and collecting them runs no job. */
   def isLocal(df: DataFrame): Boolean =
     df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+
+  /** `df` read once onto the driver (one job unless it is already
+    * local), as a local relation under its own schema whose rows
+    * [[localRows]] hands back without another pass. */
+  def collectLocal(df: DataFrame): DataFrame =
+    if (isLocal(df)) df
+    else {
+      val rows = df.collect()
+      val local = localFrame(df.sparkSession, rows.toSeq, df.schema)
+      collected.put(local, rows)
+      local
+    }
+
+  /** The rows of a local relation, as `collect()` returns them: kept
+    * from [[collectLocal]] when it made the frame, else collected (no
+    * job). A driver path that filters a large local relation — a
+    * registry member — in Scala skips Spark's per-query conversions of
+    * every row. */
+  def localRows(df: DataFrame): Array[Row] =
+    Option(collected.get(df)).getOrElse(df.collect())
+
+  // frames are immutable, so their rows can be kept for as long as the
+  // frame is reachable; keyed by identity (Dataset keeps Object.equals)
+  private val collected = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[DataFrame, Array[Row]]())
+
+  /** Spark's cast from `from` to `to` over external values (what a
+    * union or a conditional inserts when it widens a column), the
+    * identity when the types are equal. */
+  def castTo(from: DataType, to: DataType): Any => Any =
+    if (from == to) identity
+    else {
+      val toCatalyst = CatalystTypeConverters.createToCatalystConverter(from)
+      val toScala = CatalystTypeConverters.createToScalaConverter(to)
+      val tz = Some(org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone)
+      v => if (v == null) null
+           else toScala(Cast(Literal(toCatalyst(v), from), to, tz).eval())
+    }
+
+  /** The schema `plan` analyzes to, kept by `key`: a driver path that
+    * answers under a distributed plan's schema builds and analyzes that
+    * plan (tens of frames) for its schema alone, which costs more than
+    * the micro-batch itself. The schema is a function of the input
+    * schemas, so `key` must carry every one of them. */
+  def schemaOf(key: Any)(plan: => StructType): StructType =
+    schemas.computeIfAbsent(key, _ => plan)
+
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[Any, StructType]()
 
   /** `rows` as a local relation under `schema`. */
   def localFrame(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =

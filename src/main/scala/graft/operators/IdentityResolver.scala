@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.Gsid
-import DriverPath.{isLocal, localFrame, sparkOrdering}
+import DriverPath.{castTo, isLocal, localFrame, sparkOrdering}
 
 /** Set-based identity resolution (SURVEY.md §2.9) — the reference's
   * centerpiece "query".
@@ -32,6 +32,17 @@ import DriverPath.{isLocal, localFrame, sparkOrdering}
   *  - DISTRIBUTED, above that ([[resolveDistributed]]): the registry
   *    join shuffles both sides on the normalized identifier, with a
   *    salted fallback for hot identifiers; no driver-side loops.
+  *
+  * The fold ([[applyBatch]]) has the same two paths. When the
+  * registry members, resolutions and links are all local relations —
+  * what [[IncrementalIdentity]] hands over for a micro-batch against a
+  * registry under [[DriverPath.DriverStoreBytes]], having read both
+  * members once as rows — the resolve and links filters above run over
+  * those rows with no job, the fold runs in Scala ([[applyOnDriver]])
+  * and the evolved members come back as local relations, which the
+  * snapshot publish writes from the driver with no job. The members
+  * are still rewritten in full every cycle; ROADMAP O2's append is the
+  * fix for table-sized registries.
   *
   * B = 10,000 rows: every collected row, registry match and resolution
   * row is held on the driver and each consumer plan carries the
@@ -287,17 +298,20 @@ object IdentityResolver {
     val spark = cand.sparkSession
     val li = registryIds(registry)
     val subj = subjectFlags(registry)
-    val reqSchema = requestAggregates(cand,
-      probeSide(cand).join(li, "_nid").join(subj, "_gsid")).schema
+    val reqSchema = DriverPath.schemaOf(("requestAggregates", cand.schema, li.schema, subj.schema))(
+      requestAggregates(cand, probeSide(cand).join(li, "_nid").join(subj, "_gsid")).schema)
     // rows: 0 request_id, 1 center_id, 2 local_subject_id,
     // 3 identifier_type, 4 _nid
     val nids = rows.iterator.map(_.getString(4)).filter(_ != null).toSeq.distinct
     val idRows =
       if (nids.isEmpty) Array.empty[Row]
+      else if (isLocal(registry.localIds)) localRegistryIds(registry.localIds, nids.toSet)
       else li.where(col("_nid").isin(nids: _*)).collect()
     val gsids = idRows.iterator.map(_.get(2)).filter(_ != null).toSeq.distinct
     val subjRows =
       if (gsids.isEmpty) Array.empty[Row]
+      else if (isLocal(registry.subjects) && localFlagTypes(registry.subjects.schema))
+        localSubjectFlags(registry.subjects, gsids.toSet)
       else subj.where(col("_gsid").isin(gsids: _*)).collect()
     val idsByNid = idRows.groupBy(_.getString(0))
     val subjByGsid = subjRows.groupBy(_.get(0))
@@ -381,6 +395,46 @@ object IdentityResolver {
     }
     val out = resolutionRows(localFrame(spark, inter, interSchema))
     localFrame(spark, out.collect().toSeq, out.schema)
+  }
+
+  /** [[registryIds]]' rows whose normalized identifier is in `nids`,
+    * filtered in Scala over a local `local_ids` member's rows: `norm_id`
+    * when the member has it, else Spark's own `lower` expression. */
+  private def localRegistryIds(localIds: DataFrame, nids: Set[String]): Array[Row] = {
+    val s = localIds.schema
+    val (li, ci, gi) = (s.fieldIndex("local_subject_id"), s.fieldIndex("center_id"),
+      s.fieldIndex("global_subject_id"))
+    val nidOf: Row => String =
+      if (s.fieldNames.contains("norm_id")) { val ni = s.fieldIndex("norm_id"); _.getString(ni) }
+      else {
+        val lower = org.apache.spark.sql.catalyst.expressions.Lower(
+          org.apache.spark.sql.catalyst.expressions.BoundReference(0, StringType, nullable = true))
+        r => if (r.isNullAt(li)) null else lower.eval(
+          org.apache.spark.sql.catalyst.InternalRow(
+            org.apache.spark.unsafe.types.UTF8String.fromString(r.getString(li)))).toString
+      }
+    DriverPath.localRows(localIds).flatMap { r =>
+      val n = nidOf(r)
+      if (n != null && nids(n)) Some(Row(n, r.get(ci), r.get(gi))) else None
+    }
+  }
+
+  /** Whether [[localSubjectFlags]] covers this subjects schema. */
+  private def localFlagTypes(s: StructType): Boolean =
+    s("global_subject_id").dataType == StringType &&
+      (!s.fieldNames.contains("withdrawn") || s("withdrawn").dataType == BooleanType)
+
+  /** [[subjectFlags]]' rows of the GSIDs in `gsids`, filtered in Scala
+    * over a local `subjects` member's rows. */
+  private def localSubjectFlags(subjects: DataFrame, gsids: Set[Any]): Array[Row] = {
+    val s = subjects.schema
+    val (gi, ci) = (s.fieldIndex("global_subject_id"), s.fieldIndex("created_at"))
+    val wi = if (s.fieldNames.contains("withdrawn")) s.fieldIndex("withdrawn") else -1
+    DriverPath.localRows(subjects).flatMap { r =>
+      val g = r.get(gi)
+      if (g == null || !gsids(g)) None
+      else Some(Row(g, r.get(ci), wi >= 0 && !r.isNullAt(wi) && r.getBoolean(wi)))
+    }
   }
 
   /** Diagnostic (spec-visible): whether the LAST resolve() call routed
@@ -623,20 +677,41 @@ object IdentityResolver {
     * guard keeps the rerun from duplicating its own conflict notes) —
     * the idempotent-rerun property `q_identity_rerun` gates. A later
     * batch's note carries a different date, so real note chains still
-    * append. */
+    * append.
+    *
+    * When all four inputs are local relations (integral centers,
+    * string keys) the fold runs on the driver ([[applyOnDriver]]) and
+    * returns local relations; otherwise [[applyDistributed]] plans it.
+    * Both return the same rows under the same schema. */
   def applyBatch(
+      registry: Registry,
+      resolutions: DataFrame,
+      links: DataFrame,
+      createdAt: java.sql.Date): Registry =
+    if (applyOnDriverCovers(registry, resolutions, links))
+      applyOnDriver(registry, resolutions, links, createdAt)
+    else applyDistributed(registry, resolutions, links, createdAt)
+
+  /** The distributed path of [[applyBatch]], whatever its inputs. */
+  private[graft] def applyDistributed(
       registry: Registry,
       resolutions: DataFrame,
       links: DataFrame,
       createdAt: java.sql.Date): Registry = {
     val base = withSubjectFlags(registry.subjects)
 
+    // one new subject per minted GSID, from the request with the
+    // smallest request_id (Spark's order, nulls first): the reference
+    // runs requests in order, so the first one creates the subject —
+    // a group whose requests came from several centers must not take
+    // whichever row a shuffle delivers first
     val newSubjects = resolutions.filter(col("action") === "create_new")
-      .select(col("gsid").as("global_subject_id"), col("center_id"),
+      .groupBy(col("gsid").as("global_subject_id"))
+      .agg(min(struct(col("request_id"), col("center_id"))).as("_first"))
+      .select(col("global_subject_id"), col("_first.center_id").as("center_id"),
         lit(createdAt).as("created_at"),
         lit(false).as("withdrawn"), lit(false).as("flagged_for_review"),
         lit(null).cast("string").as("review_notes"))
-      .dropDuplicates("global_subject_id")
 
     // ONE per-gsid delta frame (r19, guide §2.4): the pre-r19 shape
     // aggregated `resolutions` twice (upgrades, flags) and joined each
@@ -694,6 +769,142 @@ object IdentityResolver {
       links.select("center_id", "local_subject_id", "identifier_type", "global_subject_id"))
       .merged
     Registry(subjects, localIds)
+  }
+
+  /** Whether [[applyOnDriver]] covers these inputs: all four are local
+    * relations (what [[graft.operators.IncrementalIdentity]] hands over
+    * for a micro-batch against a registry under the driver bound), the
+    * centers are integral and the keys are strings. */
+  private def applyOnDriverCovers(registry: Registry, resolutions: DataFrame,
+      links: DataFrame): Boolean = {
+    val base = withSubjectFlags(registry.subjects).schema
+    def strings(s: StructType, cs: String*) = cs.forall(c => s(c).dataType == StringType)
+    Seq(registry.subjects, registry.localIds, resolutions, links).forall(isLocal) &&
+      Seq(base, registry.localIds.schema, resolutions.schema, links.schema)
+        .forall(s => integral(s("center_id").dataType)) &&
+      strings(base, "global_subject_id", "review_notes") &&
+      Seq("withdrawn", "flagged_for_review").forall(base(_).dataType == BooleanType) &&
+      strings(resolutions.schema, "gsid", "action") &&
+      Seq(registry.localIds.schema, links.schema).forall(
+        strings(_, "local_subject_id", "identifier_type", "global_subject_id"))
+  }
+
+  /** The driver path of [[applyBatch]]: the same fold over the rows of
+    * its four local inputs, in Scala, clause for clause with
+    * [[applyDistributed]] — new subjects from each GSID's smallest
+    * request, the per-subject upgrade center (min real center) and the
+    * sorted, de-duplicated dated notes with the already-present guard,
+    * and `UpsertWriter.mergeLocalSubjectIds`' delete-and-replace (one
+    * min(center_id, gsid) row per key on each side, keys with a null
+    * part never matching). Values are cast to the distributed plans'
+    * schemas (taken from their analysis, never executed), with Spark's
+    * own casts where a union or conditional widens a column, and come
+    * back as local relations, which the registry publish writes from
+    * the driver. */
+  private def applyOnDriver(registry: Registry, resolutions: DataFrame,
+      links: DataFrame, createdAt: java.sql.Date): Registry = {
+    val spark = resolutions.sparkSession
+    // the distributed plans' schemas: a function of the input schemas
+    val inputs = (registry.subjects.schema, registry.localIds.schema, resolutions.schema,
+      links.schema)
+    lazy val want = applyDistributed(registry, resolutions, links, createdAt)
+    val outS = DriverPath.schemaOf(("applyBatch.subjects", inputs))(want.subjects.schema)
+    val outL = DriverPath.schemaOf(("applyBatch.localIds", inputs))(want.localIds.schema)
+    val baseS = withSubjectFlags(registry.subjects).schema
+    val resS = resolutions.schema
+    val res = resolutions
+      .select("request_id", "center_id", "action", "gsid", "matched_gsids", "requires_review")
+      .collect()
+    val multiNote = s"MULTI-GSID CONFLICT detected on $createdAt"
+    val centerNote = s"CENTER CONFLICT detected on $createdAt"
+    val resCenter = resS("center_id").dataType
+    val centerOrder = sparkOrdering(resCenter)
+    val upgrade = scala.collection.mutable.HashMap.empty[Any, Any]
+    val notes = scala.collection.mutable.HashMap.empty[Any, Set[String]]
+    def note(g: Any, n: String): Unit =
+      if (g != null) notes(g) = notes.getOrElse(g, Set.empty[String]) + n
+    for (r <- res) {
+      val (c, action, g) = (r.get(1), r.get(2), r.get(3))
+      if (action == "link_existing" && c != null && asLong(c) != 0 && g != null)
+        upgrade(g) = upgrade.get(g).fold(c)(o => if (centerOrder.lt(c, o)) c else o)
+      if (r.get(5) == true && action != null && action != "create_new")
+        note(g, if (action == "conflict_resolved") multiNote else centerNote)
+      if (action == "conflict_resolved" && !r.isNullAt(4))
+        r.getSeq[Any](4).foreach(note(_, multiNote))
+    }
+    val noteBlock: Map[Any, String] = notes.map { case (g, ns) =>
+      g -> ns.toSeq.sorted(sparkOrdering(StringType)).mkString("\n") }.toMap
+
+    def castsFrom(from: StructType, to: StructType): Map[String, Any => Any] =
+      to.fields.collect { case f if from.fieldNames.contains(f.name) =>
+        f.name -> castTo(from(f.name).dataType, f.dataType) }.toMap
+    val fromBase = castsFrom(baseS, outS)
+    val upgradeCast = castTo(resCenter, outS("center_id").dataType)
+    // withSubjectFlags' columns, appended in its order when missing
+    val flagDefaults = Seq[(String, Any)]("withdrawn" -> false, "flagged_for_review" -> false,
+      "review_notes" -> null).filterNot(c => registry.subjects.columns.contains(c._1)).map(_._2)
+    // each output column's base position and cast (-1: not in base)
+    val outAt = outS.fieldNames.map(baseS.fieldNames.indexOf(_))
+    val outCast = outS.fieldNames.map(n => fromBase.getOrElse(n, (v: Any) => v))
+    val Seq(gAt, cAt, rnAt, flAt) = Seq("global_subject_id", "center_id", "review_notes",
+      "flagged_for_review").map(baseS.fieldIndex)
+    val updated = DriverPath.localRows(registry.subjects).toSeq.map { r0 =>
+      val v = (r0.toSeq ++ flagDefaults).toArray
+      val g = v(gAt)
+      val c = v(cAt)
+      val block = if (g == null) None else noteBlock.get(g)
+      val upgraded = c != null && asLong(c) == 0 && g != null && upgrade.contains(g)
+      Row.fromSeq(outAt.indices.map { j =>
+        val at = outAt(j)
+        if (at == cAt && upgraded) upgradeCast(upgrade(g))
+        else if (at == rnAt && block.isDefined) {
+          val (rn, b) = (v(rnAt).asInstanceOf[String], block.get)
+          outCast(j)(if (Option(rn).getOrElse("").contains(b)) rn
+                     else if (rn == null) b else rn + "\n" + b)
+        } else if (at == flAt && block.isDefined) outCast(j)(true)
+        else if (at < 0) null
+        else outCast(j)(v(at))
+      })
+    }
+    // one new subject per minted GSID, from its smallest request
+    val firstOrder = sparkOrdering(StructType(Seq(resS("request_id"), resS("center_id"))))
+    val gsidCast = castTo(resS("gsid").dataType, outS("global_subject_id").dataType)
+    val createdCast = castTo(DateType, outS("created_at").dataType)
+    val created = res.filter(_.get(2) == "create_new").groupBy(_.get(3)).values.toSeq
+      .map(_.minBy[Any](r => Row(r.get(0), r.get(1)))(firstOrder)).map { r =>
+        val v = Map[String, Any]("global_subject_id" -> gsidCast(r.get(3)),
+          "center_id" -> upgradeCast(r.get(1)), "created_at" -> createdCast(createdAt),
+          "withdrawn" -> false, "flagged_for_review" -> false)
+        Row.fromSeq(outS.fieldNames.toSeq.map(v.getOrElse(_, null)))
+      }
+
+    // mergeLocalSubjectIds: per (local_subject_id, identifier_type),
+    // the min(center_id, gsid) row of each side; a key with a null part
+    // never matches across sides
+    val cols = Seq("center_id", "local_subject_id", "identifier_type", "global_subject_id")
+    def side(df: DataFrame): (Map[(Any, Any), Row], Seq[Any => Any]) = {
+      val s = df.schema
+      val at = cols.map(s.fieldIndex)
+      val order = sparkOrdering(StructType(Seq(s("center_id"), s("global_subject_id"))))
+      val mins = DriverPath.localRows(df).toSeq.map(r => Row.fromSeq(at.map(r.get)))
+        .groupBy(r => (r.get(1), r.get(2)))
+        .map { case (k, rs) => k -> rs.minBy[Any](r => Row(r.get(0), r.get(3)))(order) }
+      (mins, cols.map(c => castTo(s(c).dataType, outL(c).dataType)))
+    }
+    val (inc, incCast) = side(links)
+    val (cur, curCast) = side(registry.localIds)
+    def conform(r: Row, cs: Seq[Any => Any]) = Row.fromSeq(cs.zip(r.toSeq).map { case (f, v) => f(v) })
+    def matchable(k: (Any, Any)) = k._1 != null && k._2 != null
+    val merged = inc.toSeq.map { case (k, in) =>
+      val ex = if (matchable(k)) cur.get(k) else None
+      val Seq(c, l, t, g) = conform(in, incCast).toSeq
+      val exOut = ex.map(conform(_, curCast))
+      Row(if (c != null) c else exOut.map(_.get(0)).orNull, l, t,
+        if (g != null) g else exOut.map(_.get(3)).orNull)
+    } ++ cur.toSeq.collect { case (k, ex) if !matchable(k) || !inc.contains(k) =>
+      conform(ex, curCast)
+    }
+    Registry(localFrame(spark, updated ++ created, outS), localFrame(spark, merged, outL))
   }
 
   /** Withdraw subjects (`gsid-service/api/routes.py:159-182`): set
@@ -832,13 +1043,23 @@ object IdentityResolver {
     * rows whose local_subject_id the batch carries. */
   private def linksOnDriver(rows: Array[Row], candidates: DataFrame,
       resolutions: DataFrame, localIds: DataFrame, createdBy: String): DataFrame = {
-    val schema = linkRows(candidates, resolutions, existingCenters(localIds), createdBy).schema
+    val schema = DriverPath.schemaOf(("linkRows", candidates.schema, resolutions.schema,
+        localIds.schema, createdBy))(
+      linkRows(candidates, resolutions, existingCenters(localIds), createdBy).schema)
     val chosen: Map[Any, Seq[Any]] = resolutions.select("request_id", "gsid").collect().toSeq
       .filter(_.get(0) != null).groupMap(_.get(0))(_.get(1))
     val ids = rows.iterator.map(_.get(2)).filter(_ != null).toSeq.distinct
     val registryRows =
       if (ids.isEmpty) Array.empty[Row]
-      else localIds.where(col("local_subject_id").isin(ids: _*))
+      else if (isLocal(localIds) && localIds.schema("local_subject_id").dataType == StringType &&
+          candidates.schema("local_subject_id").dataType == StringType) {
+        val (idSet, s) = (ids.toSet, localIds.schema)
+        val at = Seq("local_subject_id", "identifier_type", "center_id", "global_subject_id")
+          .map(s.fieldIndex)
+        DriverPath.localRows(localIds).collect {
+          case r if !r.isNullAt(at.head) && idSet(r.get(at.head)) => Row.fromSeq(at.map(r.get))
+        }
+      } else localIds.where(col("local_subject_id").isin(ids: _*))
         .select("local_subject_id", "identifier_type", "center_id", "global_subject_id")
         .collect()
     val exOrder = sparkOrdering(StructType(Seq(

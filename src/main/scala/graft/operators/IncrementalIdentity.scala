@@ -18,14 +18,14 @@ import graft.sources.Sources
   * [[IdentityResolver]] (set-based resolve → links → applyBatch) —
   * so each cycle reads ONLY the rows that changed since the last
   * checkpoint, resolves them against the current registry snapshot,
-  * and publishes the evolved registry. READING and RESOLVING are
-  * bounded by the changed data; WRITING is not: every cycle rewrites
-  * both registry members (subjects, local_ids) in full, and
-  * [[UpsertWriter.mergeLocalSubjectIds]] aggregates the whole
-  * local_ids member to fold the batch in (as does the distributed
-  * path of [[IdentityResolver.links]] below its 64 MB filter gate). So
-  * a cycle's cost grows with the registry. ROADMAP O2's versioned log
-  * (add/remove actions over data files) is the fix: a cycle would then
+  * and publishes the evolved registry. RESOLVING is bounded by the
+  * changed data; READING the registry and WRITING it are not: every
+  * cycle rewrites both registry members (subjects, local_ids) in
+  * full, and the fold ([[IdentityResolver.applyBatch]], with
+  * [[UpsertWriter.mergeLocalSubjectIds]]' delete-and-replace) passes
+  * over the whole local_ids member. So a cycle's cost grows with the
+  * registry. ROADMAP O2's versioned log (add/remove actions over data
+  * files) is the fix for table-sized registries: a cycle would then
   * write only the rows it changes.
   *
   * Row-level (not partition-level) delivery is load-bearing here:
@@ -54,15 +54,23 @@ import graft.sources.Sources
   *    subjects from cycle N beside local_ids from N−1 (a torn
   *    registry would re-mint duplicate subject rows on redelivery).
   *
-  * Scale shape: a micro-batch (at most
-  * [[IdentityResolver.DriverBatchRows]] changed rows) is collected
-  * once and resolved and linked on the driver against filtered scans
-  * of the registry; a larger delta takes [[IdentityResolver]]'s
-  * distributed J1 (shuffle on normalized identifier, auto-armed
-  * salted skew fallback); the registry read is a pointer-resolved
-  * parquet scan;
-  * the publish rewrites the registry snapshot — at very large
-  * registries pair this with [[graft.catalog.RegistryCatalog]]'s
+  * Scale shape, three tiers:
+  *  - a micro-batch (at most [[IdentityResolver.DriverBatchRows]]
+  *    changed rows) against a registry whose two members together fit
+  *    [[DriverPath.DriverStoreBytes]] (plan-stats bytes): the batch is
+  *    collected once and both members are read once as rows (two
+  *    single-task jobs); resolve, links and the fold run on the driver
+  *    over those rows, and the evolved members, local relations, are
+  *    written from the driver with no job. A 300-row cycle against a
+  *    12k-subject registry runs 4 jobs;
+  *  - a micro-batch against a larger registry: resolve and links on
+  *    the driver against filtered scans of the registry, the fold and
+  *    the member writes distributed;
+  *  - a larger delta: [[IdentityResolver]]'s distributed J1 (shuffle
+  *    on normalized identifier, auto-armed salted skew fallback).
+  * The registry read is a pointer-resolved parquet scan and the
+  * publish rewrites the registry snapshot on every tier — at very
+  * large registries pair this with [[graft.catalog.RegistryCatalog]]'s
   * bucketed layout, which resolve() auto-routes on.
   */
 object IncrementalIdentity {
@@ -144,22 +152,35 @@ object IncrementalIdentity {
         // — a rival mid-publish (claimed, unswapped) that lands during
         // this cycle refuses it either way (Sources.snapshotReadBasis).
         val basis = Sources.snapshotReadBasis(spark, registryRoot)
-        val reg = readRegistry(spark, registryRoot)
+        val stored = readRegistry(spark, registryRoot)
         // the delta is read ONCE: a micro-batch comes back as a local
         // relation and resolves on the driver; a larger one is
         // checkpointed, so links and the registry writes reuse its
         // blocks instead of re-scanning the batch dirs and redoing the
         // change-feed anti-join. Either way resolve and links see the
         // same rows.
-        val (candidates, res) = IdentityResolver.materializeBatch(toCandidates(delta)) match {
+        val (candidates, res, reg) = IdentityResolver.materializeBatch(toCandidates(delta)) match {
           case Right(local) =>
-            (local, IdentityResolver.resolve(local, reg, deterministicMint, groupingIterations))
+            // a registry under the driver bound is read once, both
+            // members as rows: resolve, links and the fold then filter
+            // and fold them in Scala, and the publish writes the
+            // evolved members from the driver — no further job
+            val reg =
+              if (!DriverPath.fits(stored.subjects, stored.localIds)) stored
+              else {
+                // two independent single-task jobs: overlap them
+                val Seq(subjects, localIds) = IndexMaintenance.inParallel(
+                  Seq(stored.subjects, stored.localIds))(DriverPath.collectLocal)
+                IdentityResolver.Registry(subjects, localIds)
+              }
+            (local, IdentityResolver.resolve(local, reg, deterministicMint, groupingIterations),
+              reg)
           case Left(materialized) =>
             // checkpointed: resolutions feed links, applyBatch AND the
             // caller — without truncation each consumer re-runs the
             // whole resolve lineage (batch-sized, never registry-sized)
-            (materialized, IdentityResolver.resolveDistributed(materialized, reg,
-              deterministicMint, groupingIterations).localCheckpoint(false))
+            (materialized, IdentityResolver.resolveDistributed(materialized, stored,
+              deterministicMint, groupingIterations).localCheckpoint(false), stored)
         }
         val links = IdentityResolver.links(candidates, res, reg.localIds)
         val evolved = IdentityResolver.applyBatch(reg, res, links, asOf)

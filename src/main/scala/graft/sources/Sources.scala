@@ -2623,7 +2623,7 @@ object Sources {
     val root = new org.apache.hadoop.fs.Path(tableRoot)
     val (next, uid, vdir) =
       claimSnapshotVersion(fs, uri, root, tableRoot, basis)
-    df.write.mode(SaveMode.Overwrite).parquet(s"$tableRoot/$vdir")
+    writeSnapshotMember(df, uri, fs, s"$tableRoot/$vdir")
     // atomic pointer swap: write a temp pointer, rename OVER the live
     // one. Neither step may leave a checksum sidecar: the FileSystem
     // API on a local FS is ChecksumFileSystem, whose create() writes a
@@ -2637,6 +2637,26 @@ object Sources {
     swapSnapshotOrRefuse(fs, uri, conf, root, tableRoot, vdir, next, uid)
     pruneSnapshotVersions(fs, root, next)
   }
+
+  /** Write one snapshot member into its still-unswapped version dir.
+    * A local relation under [[graft.operators.DriverPath.DriverStoreBytes]]
+    * is written from the driver as one parquet file through Spark's
+    * own output writer (`Bridge.writeLocalParquet`): no job, no output
+    * committer, no `_temporary` rename, and on file:// the dir is made
+    * through java.nio (Hadoop's local mkdirs forks a `chmod` per level
+    * when the native library is not loaded). Anything else is a
+    * `df.write`. Either way the pointer swap after it stays the only
+    * commit point: a failure here leaves an unswapped dir for the
+    * prune, as a crashed `df.write` does. */
+  private def writeSnapshotMember(df: DataFrame, uri: java.net.URI,
+      fs: org.apache.hadoop.fs.FileSystem, dir: String): Unit =
+    if (graft.operators.DriverPath.isLocal(df) && graft.operators.DriverPath.fits(df)) {
+      val path = new org.apache.hadoop.fs.Path(dir)
+      if (Option(uri.getScheme).forall(_ == "file"))
+        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(path.toUri.getPath)): Unit
+      else fs.mkdirs(path): Unit
+      org.apache.spark.sql.graftbridge.Bridge.writeLocalParquet(df, dir): Unit
+    } else df.write.mode(SaveMode.Overwrite).parquet(dir)
 
   /** Resolve a snapshot root to its live data directory: follow the
     * `_current` pointer if present; otherwise (pre-versioning layout,
@@ -2737,7 +2757,8 @@ object Sources {
       require(member.nonEmpty && !member.contains("/"),
         s"member name must be a plain dir name, got '$member'")
     }
-    // member writes are independent jobs into disjoint dirs: run them
+    // member writes are independent writes into disjoint dirs (jobs,
+    // or driver writes for small local relations): run them
     // CONCURRENTLY on the shared family pool (guide §2.6 — the next
     // write's tasks back-fill executors freed by the current write's
     // tail; at gate scale the fixed per-write job overheads overlap).
@@ -2745,7 +2766,7 @@ object Sources {
     // failure propagates before the swap, leaving an unswapped v-dir
     // for the prune — the identical crash story.
     graft.operators.IndexMaintenance.inParallel(frames) { case (member, df) =>
-      df.write.mode(SaveMode.Overwrite).parquet(s"$tableRoot/$vdir/$member")
+      writeSnapshotMember(df, uri, fs, s"$tableRoot/$vdir/$member")
     }: Unit
     swapSnapshotOrRefuse(fs, uri, conf, root, tableRoot, vdir, next, uid)
     pruneSnapshotVersions(fs, root, next)

@@ -100,7 +100,7 @@ class DedupDriverPathSpec extends DriverPathHarness {
     assert(drops.forall(_ == 16), s"cap drops per batch: $drops")
   }
 
-  test("a shard on the driver runs three jobs: probe, store scan, publish") {
+  test("a driver-path shard runs two jobs: probe and store scan") {
     val dir = newStore()
     Dedup.incrementalMinhashDedup(docs((1L, texts(0)), (2L, texts(1))), "doc_id", "text", dir)
     // a file scan, as a shard read from storage: the probe is one job
@@ -110,7 +110,8 @@ class DedupDriverPathSpec extends DriverPathHarness {
     val (out, rep) = measured(
       Dedup.incrementalMinhashDedup(batch, "doc_id", "text", dir).collect())
     assert(out.map(_.getLong(0)).toSet == Set(4L))
-    assert(rep.jobs == 3, rep.jobSites.mkString("\n"))
+    // the store publish writes stored ∪ fresh from the driver: no job
+    assert(rep.jobs == 2, rep.jobSites.mkString("\n"))
   }
 
   /** Jobs of the routed call and of the distributed path alone, each on
@@ -147,12 +148,12 @@ class DedupDriverPathSpec extends DriverPathHarness {
 
   test("above DriverStoreBytes the distributed path runs, with no probe") {
     // 64 hash-like longs per row barely compress: ~0.5 KB per row
-    val rows = (Dedup.DriverStoreBytes / 400).toInt
+    val rows = (DriverPath.DriverStoreBytes / 400).toInt
     val store = spark.range(rows).select(col("id").as("_id"),
       array((0 until 64).map(i => xxhash64(col("id"), lit(i))): _*).as("signature"))
     val (routed, distributed, storeBytes) = routedVsDistributed(
       docs((-1L, texts(0)), (-2L, texts(1))).repartition(2), Some(store))
-    assert(storeBytes > BigInt(Dedup.DriverStoreBytes))
+    assert(storeBytes > BigInt(DriverPath.DriverStoreBytes))
     assertExtraJobs(routed, distributed, 0)
   }
 }

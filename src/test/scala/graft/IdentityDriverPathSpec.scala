@@ -6,7 +6,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.catalog.RegistryCatalog
-import graft.operators.{DriverPath, IdentityResolver}
+import graft.sources.Sources
+import graft.operators.{DriverPath, IdentityResolver, IncrementalIdentity}
 import graft.operators.IdentityResolver.Registry
 
 /** The driver path of `IdentityResolver.resolve` / `links` against the
@@ -86,7 +87,22 @@ class IdentityDriverPathSpec extends DriverPathHarness {
     val gotLinks = links(batch, got, reg.localIds)
     assertOnDriver(gotLinks, "links on the driver")
     assertSameFrame(gotLinks, wantLinks)
+    // the fold, twice: the second re-applies the same batch to the
+    // evolved registry (notes already present, centers upgraded)
+    var onDriver = Registry(DriverPath.collectLocal(reg.subjects),
+      DriverPath.collectLocal(reg.localIds))
+    var distributed = reg
+    for (_ <- 1 to 2) {
+      onDriver = applyBatch(onDriver, got, gotLinks, foldDay)
+      distributed = applyDistributed(distributed, want, wantLinks, foldDay)
+      assertOnDriver(onDriver.subjects, "applyBatch on the driver")
+      assertOnDriver(onDriver.localIds, "applyBatch on the driver")
+      assertSameFrame(onDriver.subjects, distributed.subjects)
+      assertSameFrame(onDriver.localIds, distributed.localIds)
+    }
   }
+
+  private val foldDay = Date.valueOf("2024-07-01")
 
   test("resolver fixtures: triage, center ladder, multi-GSID, grouping") {
     val triage = cands(Seq(
@@ -228,6 +244,94 @@ class IdentityDriverPathSpec extends DriverPathHarness {
     assert(got.schema == want.schema)
     assert(groups(got) == groups(want))
     assert(groups(got)._1 == Set(Set(1L, 2L, 3L), Set(4L)))
+  }
+
+  test("a GSID minted by several requests takes the smallest request's center, on both paths") {
+    // 1 and 2 share an identifier across two centers and mint one GSID
+    val twins = cands(Seq((1L, 5, "t1", "primary"), (2L, 7, "T1", "alias"),
+      (3L, 6, "other", "primary")))
+    val res = resolve(twins, resolverReg, deterministicMint = true, groupingIterations = 1)
+    val rows = res.collect().toSeq
+    val minted = rows.filter(_.getLong(0) <= 2).map(_.getAs[String]("gsid")).distinct
+    assert(minted.size == 1 && rows.forall(_.getAs[String]("action") == "create_new"))
+    val lk = links(twins, res, resolverReg.localIds)
+    for (order <- Seq(rows.sortBy(_.getLong(0)), rows.sortBy(-_.getLong(0)))) {
+      val local = DriverPath.localFrame(spark, order, res.schema)
+      for (input <- Seq(local, local.coalesce(1), local.repartition(3))) {
+        val subjects = applyBatch(resolverReg, input, lk, foldDay).subjects
+        val centers = subjects.filter(col("global_subject_id") === minted.head)
+          .select("center_id").as[Int].collect().toSeq
+        assert(centers == Seq(5), s"${order.map(_.getLong(0))}, " +
+          s"${input.rdd.getNumPartitions} partitions: $centers")
+      }
+    }
+  }
+
+  /** A fragments table holding `rows` and a registry seeded with
+    * `reg`, under a fresh root: (fragments, checkpoint, registry). */
+  private def cycleTables(reg: Registry, rows: Seq[(Long, Int, String)])
+      : (String, String, String) = {
+    val root = java.nio.file.Files.createTempDirectory("graft_idp_cycle").toString
+    val (fragDir, ckDir, regRoot) = (s"$root/f", s"$root/ck", s"$root/r")
+    IncrementalIdentity.publishRegistry(reg, regRoot)
+    Sources.publishMergePartitioned(spark, fragDir,
+      rows.toDF("request_id", "center_id", "local_subject_id")
+        .withColumn("identifier_type", lit("primary"))
+        .withColumn("p", (col("request_id") % 2).cast("int")),
+      graft.types.TableConfig("fragments", Seq("request_id"), Seq.empty), "p")
+    (fragDir, ckDir, regRoot)
+  }
+
+  private val cycleRows = Seq((1L, 9, "DUP-1"), (2L, 0, "Solo-1"), (3L, 5, "new-1"),
+    (4L, 6, "NEW-1"), (5L, 7, "other"))
+
+  test("a micro-batch cycle under the bound reads the registry once; the fold and publish run no job") {
+    val (fragDir, ckDir, regRoot) = cycleTables(resolverReg, cycleRows)
+    val (cycle, rep) = measured(IncrementalIdentity.resolveCycle(spark, fragDir, ckDir,
+      regRoot, Seq("request_id"), foldDay, "p")(identity))
+    assert(cycle.exists(_.resolutions.count() == cycleRows.size))
+    // every job is the batch probe or one of the two registry reads
+    val (_, read) = measured(DriverPath.collectLocal(
+      IncrementalIdentity.readRegistry(spark, regRoot).subjects))
+    val readSite = read.jobSites.map(_.callSite).distinct
+    val sites = rep.jobSites.map(_.callSite)
+    assert(readSite.size == 1 && sites.count(_ == readSite.head) == 2, sites.mkString("\n"))
+    assert(sites.forall(_.contains("DriverPath.scala")), sites.mkString("\n"))
+  }
+
+  test("a registry above DriverStoreBytes folds and publishes at exactly today's job count") {
+    // incompressible 1 MiB notes put the subjects member above the bound
+    val rnd = new scala.util.Random(7)
+    val width = 1 << 20
+    val pad = (DriverPath.DriverStoreBytes / width).toInt + 4
+    val blobs = (0 until pad).map(i => (s"G-PAD-$i", 3, Date.valueOf("2020-01-01"),
+      rnd.alphanumeric.take(width).mkString))
+    val big = Registry(
+      resolverReg.subjects.withColumn("blob", lit(null).cast("string"))
+        .unionByName(blobs.toDF("global_subject_id", "center_id", "created_at", "blob")),
+      resolverReg.localIds)
+    val (fRouted, ckRouted, rRouted) = cycleTables(big, cycleRows)
+    val (fToday, ckToday, rToday) = cycleTables(big, cycleRows)
+    val stored = IncrementalIdentity.readRegistry(spark, rRouted)
+    assert(!DriverPath.fits(stored.subjects, stored.localIds))
+    val (_, routed) = measured(IncrementalIdentity.resolveCycle(spark, fRouted, ckRouted,
+      rRouted, Seq("request_id"), foldDay, "p")(identity))
+    // the cycle as it ran before the registry had a driver path
+    val (_, today) = measured(Sources.processMergeRowChanges(spark, fToday, ckToday,
+        Seq("request_id"), "p") { (delta, _) =>
+      val basis = Sources.snapshotReadBasis(spark, rToday)
+      val reg = IncrementalIdentity.readRegistry(spark, rToday)
+      val batch = materializeBatch(delta).toOption.get
+      val res = resolve(batch, reg, deterministicMint = true, groupingIterations = 2)
+      val evolved = applyDistributed(reg, res, links(batch, res, reg.localIds), foldDay)
+      IncrementalIdentity.publishRegistry(evolved, rToday, Some(basis))
+      IncrementalIdentity.readRegistry(spark, rToday)
+    })
+    assertExtraJobs(routed, today, 0)
+    val (a, b) = (IncrementalIdentity.readRegistry(spark, rRouted),
+      IncrementalIdentity.readRegistry(spark, rToday))
+    assertSameFrame(a.subjects.drop("blob"), b.subjects.drop("blob"))
+    assertSameFrame(a.localIds, b.localIds)
   }
 
   test("above DriverBatchRows the distributed path runs, one bounded collect more") {

@@ -959,23 +959,34 @@ class VectorSpec extends SparkSpec {
   }
 
   test("long incremental ingest keeps the signature store's file and version counts bounded") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sigstore_long").toString + "/sigs"
-    def liveFiles(): Int = {
+    def liveFiles(dir: String): Int = {
       val live = new java.io.File(graft.sources.Sources.resolveSnapshot(spark, dir))
       live.listFiles().count(f => f.isFile && f.getName.endsWith(".parquet"))
     }
+    // ten 5-doc batches; `idType` picks the path: decimal ids take the
+    // distributed path, whose publish adds files to the store's live
+    // version every batch, long ids the driver path, which writes the
+    // store as one file
+    def ingest(dir: String, idType: String, maxStoreFiles: Int)(check: Int => Unit): Unit =
+      for (b <- 1 to 10) {
+        val batch = (1 to 5).map(i =>
+          (b * 100L + i, s"novel batch $b doc $i with enough words to shingle " +
+            s"alpha beta gamma delta epsilon zeta")).toDF("doc_id", "text")
+          .withColumn("doc_id", col("doc_id").cast(idType))
+        Dedup.incrementalMinhashDedup(batch, "doc_id", "text", dir,
+          threshold = 0.9, maxStoreFiles = maxStoreFiles)
+        check(b)
+        // version retention stays at publishSnapshot's bound
+        assert(graft.sources.Sources.snapshotVersions(spark, dir).length <= 3)
+      }
+    def newDir(tag: String): String =
+      java.nio.file.Files.createTempDirectory(s"graft_sigstore_$tag").toString + "/sigs"
     val cap = 2 // control run measures 4 natural files; 2 forces compaction
-    for (b <- 1 to 10) {
-      val batch = (1 to 5).map(i =>
-        (b * 100L + i, s"novel batch $b doc $i with enough words to shingle " +
-          s"alpha beta gamma delta epsilon zeta")).toDF("doc_id", "text")
-      Dedup.incrementalMinhashDedup(batch, "doc_id", "text", dir,
-        threshold = 0.9, maxStoreFiles = cap)
+    val dir = newDir("long")
+    ingest(dir, "decimal(10,0)", cap) { b =>
       // the post-publish policy compacts whenever the live version
       // crosses the cap, so the observed count never exceeds it
-      assert(liveFiles() <= cap, s"batch $b: ${liveFiles()} files > cap $cap")
-      // and version retention stays at publishSnapshot's bound
-      assert(graft.sources.Sources.snapshotVersions(spark, dir).length <= 3)
+      assert(liveFiles(dir) <= cap, s"batch $b: ${liveFiles(dir)} files > cap $cap")
     }
     // all 50 novel docs' signatures survived every compaction
     assert(graft.sources.Sources.readSnapshot(spark, dir).count() == 50)
@@ -983,21 +994,17 @@ class VectorSpec extends SparkSpec {
     // exceed `cap` files — otherwise the capped run's bound could be
     // natural write coalescing and the assertions above would prove
     // nothing about compaction
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_sigstore_ctl").toString + "/sigs"
-    for (b <- 1 to 10) {
-      val batch = (1 to 5).map(i =>
-        (b * 100L + i, s"novel batch $b doc $i with enough words to shingle " +
-          s"alpha beta gamma delta epsilon zeta")).toDF("doc_id", "text")
-      Dedup.incrementalMinhashDedup(batch, "doc_id", "text", dir2,
-        threshold = 0.9, maxStoreFiles = 1000000)
-    }
-    val uncapped = {
-      val live = new java.io.File(graft.sources.Sources.resolveSnapshot(spark, dir2))
-      live.listFiles().count(f => f.isFile && f.getName.endsWith(".parquet"))
-    }
-    assert(uncapped > cap,
-      s"control run produced only $uncapped files (cap $cap) — the capped " +
+    val dir2 = newDir("ctl")
+    ingest(dir2, "decimal(10,0)", 1000000)(_ => ())
+    assert(liveFiles(dir2) > cap,
+      s"control run produced only ${liveFiles(dir2)} files (cap $cap) — the capped " +
         "run's bound would not demonstrate compaction")
+    // the driver path rewrites the store as one file every batch
+    val dir3 = newDir("driver")
+    ingest(dir3, "long", 1000000) { b =>
+      assert(liveFiles(dir3) == 1, s"batch $b: ${liveFiles(dir3)} files")
+    }
+    assert(graft.sources.Sources.readSnapshot(spark, dir3).count() == 50)
   }
 
   test("near-dup collapse: components get min-id cluster, one survivor each") {
