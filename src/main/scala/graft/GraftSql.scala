@@ -23,31 +23,13 @@ object GraftSql {
       }
     }
 
-  /** Register the LIVE state of a [[graft.sources.Sources.publishMergePartitioned]]
-    * table as a SQL view: the manifest pointer is resolved at
-    * registration (snapshot-isolation semantics — re-register to pick
-    * up later publishes). Partition pruning and column pruning flow
-    * through exactly as for the DataFrame read; SQL users query
-    * published tables like any other view. */
-  def registerMergeTable(spark: SparkSession, name: String, tableDir: String,
-      partitionCol: String = ""): Unit =
-    graft.sources.Sources.readMergePartitioned(spark, tableDir, partitionCol)
-      .createOrReplaceTempView(name)
-
-  /** Register the live version of a [[graft.sources.Sources.publishSnapshot]]
-    * table as a SQL view (same pointer-resolution semantics). */
-  def registerSnapshotTable(spark: SparkSession, name: String,
-      tableRoot: String): Unit =
-    graft.sources.Sources.readSnapshot(spark, tableRoot)
-      .createOrReplaceTempView(name)
-
   /** Register the LIVE state of a maintained BM25 index
     * ([[graft.operators.LexicalIndex]]) for SQL (round 16 — the index
     * layer joins the pure-SQL proof surface): `<prefix>_postings`
     * `(doc_id, dl, term, tf, _b)` and `<prefix>_stats`
     * `(n_docs, tot)`, generation pointer resolved and tombstones
-    * applied at registration (the same snapshot-isolation semantics as
-    * [[registerMergeTable]] — re-register to pick up later applies).
+    * applied at registration (snapshot-isolation semantics —
+    * re-register to pick up later applies).
     * Any lexical scoring is then plain SQL over the index tables,
     * never a corpus rescan. */
   def registerBm25Index(spark: SparkSession, prefix: String,

@@ -51,19 +51,6 @@ object Tables {
     }
   }
 
-  /** As [[events]], but with a raw epoch-nanos column kept as `ts_ns`
-    * (physical in the INT64-nanos layout, derived via `unix_micros`
-    * otherwise) for consumers that want a plain long time axis. */
-  def eventsWithRawTs(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.functions.{col, expr}
-    import org.apache.spark.sql.types.LongType
-    val raw = rawEvents(s, d)
-    raw.schema("ts").dataType match {
-      case LongType => normalizeEventTs(raw.withColumn("ts_ns", col("ts")))
-      case _        => normalizeEventTs(raw).withColumn("ts_ns", expr("unix_micros(ts) * 1000"))
-    }
-  }
-
   /** Incremental pull ("Modified > last_sync", the LabKey-style sync
     * in docs/data-flow.md) planned against the PHYSICAL events
     * layout: the since-filter must reach the parquet scan as a pushed
@@ -73,7 +60,8 @@ object Tables {
     * predicate on the derived timestamp wraps it in
     * `timestamp_micros(... div 1000)`); in the native layout the
     * timestamp column itself does, provided the comparison happens
-    * BEFORE the NTZ → TZ cast. Output schema matches [[eventsWithRawTs]]. */
+    * BEFORE the NTZ → TZ cast. Output: [[events]]' columns plus the
+    * epoch-nanos long `ts_ns`. */
   def eventsSince(s: SparkSession, d: String, lastSync: java.sql.Timestamp): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr, lit}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType}

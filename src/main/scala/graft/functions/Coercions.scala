@@ -49,9 +49,8 @@ object Coercions {
   /** F3: `float(s)`, null on failure (`data_transformer.py:178-183`). */
   def toDoubleLenient(c: Column): Column = numeric(c)
 
-  /** Truthy / falsy token sets (`data_transformer.py:184-185,205-208`). */
-  val TrueTokens: Seq[String]  = Seq("true", "t", "yes", "y", "1")
-  val FalseTokens: Seq[String] = Seq("false", "f", "no", "n", "0")
+  /** Truthy token set (`data_transformer.py:184-185`). */
+  val TrueTokens: Seq[String] = Seq("true", "t", "yes", "y", "1")
 
   /** F4: boolean-typed target — token in the true-set, else false
     * (reference returns false for unrecognized tokens, null only for
@@ -60,14 +59,6 @@ object Coercions {
     val t = normalizeNullTokens(c)
     when(t.isNull, lit(null).cast("boolean"))
       .otherwise(lower(t).isin(TrueTokens.map(lit): _*))
-  }
-
-  /** F4 strict variant: true-set → true, false-set → false, else null
-    * (the fallback-path semantics, `data_transformer.py:205-208`). */
-  def toBooleanStrict(c: Column): Column = {
-    val t = lower(normalizeNullTokens(c))
-    when(t.isin(TrueTokens.map(lit): _*), lit(true))
-      .when(t.isin(FalseTokens.map(lit): _*), lit(false))
   }
 
   /** F5: strict `%Y-%m-%d` date, null on failure

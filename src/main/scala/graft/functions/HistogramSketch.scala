@@ -148,20 +148,6 @@ object Histograms {
         first(col("_lo")).as("lo"), first(col("_width")).as("width"))
   }
 
-  /** Element-wise merge of two same-layout counts arrays — the
-    * incremental-maintenance primitive: a stored corpus histogram
-    * plus a delta batch's histogram IS the updated corpus histogram,
-    * so the distribution profile of a 100 TB table stays current
-    * without ever rescanning it. Counts are reversible (unlike a
-    * percentile's sort state): [[histSubtract]] retracts a deleted
-    * batch the same way. */
-  def histMerge(a: Column, b: Column): Column =
-    zip_with(a, b, (x, y) => x + y)
-
-  /** Retract `b`'s counts from `a` (deleted/compacted-away batch). */
-  def histSubtract(a: Column, b: Column): Column =
-    zip_with(a, b, (x, y) => x - y)
-
   /** Exact integer L1 drift between two [[histFixed]] counts columns
     * over the SAME bucket layout: `Σ_i |cA_i·N_B − cB_i·N_A|`, where
     * N = the histogram's total count. Cross-multiplying by the totals

@@ -257,10 +257,9 @@ object KllQuantiles {
   * the incremental-maintenance half of the family. A nightly job
   * stores one sketch row per (batch, group); refreshing the corpus
   * profile then aggregates the tiny sketch rows with
-  * [[KllMergeQuantiles]] and never rescans data — the same
-  * histogram-merge play ([[Histograms.histMerge]]) for unknown-range
-  * quantiles (mergeable-summaries property: merged ladder ≡ ladder
-  * of the union, exactly so below capacity). */
+  * [[KllMergeQuantiles]] and never rescans data (mergeable-summaries
+  * property: merged ladder ≡ ladder of the union, exactly so below
+  * capacity). */
 case class KllSketchAgg(
     child: Expression,
     k: Int,
@@ -388,16 +387,11 @@ object Kll {
       KllSketchAgg(Bridge.expression(c.cast("double")), k)
         .toAggregateExpression())
 
-  /** Merge stored sketch states and read quantiles — see
-    * [[KllMergeQuantiles]]. */
-  def kllMerge(state: Column, k: Int, probs: Seq[Double]): Column =
-    Bridge.column(
-      KllMergeQuantiles(Bridge.expression(state), k, probs)
-        .toAggregateExpression())
-
-  /** [[kllMerge]] with the exact-regime precondition ENFORCED (see
-    * [[kllQuantilesExact]]): throws if the MERGED ladder compacted —
-    * catches both oversized stored sketches and an oversized union. */
+  /** Merge stored sketch states and read quantiles (see
+    * [[KllMergeQuantiles]]) with the exact-regime precondition
+    * ENFORCED (see [[kllQuantilesExact]]): throws if the MERGED ladder
+    * compacted — catches both oversized stored sketches and an
+    * oversized union. */
   def kllMergeExact(state: Column, k: Int, probs: Seq[Double]): Column =
     Bridge.column(
       KllMergeQuantiles(Bridge.expression(state), k, probs,

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.functions.{col, conv, lit, md5, substr}
+import org.apache.spark.sql.functions.{conv, lit, md5, substr}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{DataType, LongType}
 

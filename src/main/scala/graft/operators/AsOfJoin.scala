@@ -56,16 +56,6 @@ object AsOfJoin {
     asOf(left, right, keys, leftTsCol, rightTsCol, payloadCols, fwd = false,
       toleranceMicros = Some(toleranceMicros))
 
-  /** Forward counterpart of [[backwardWithin]]: the next-at-or-after
-    * match is discarded if it lies more than `toleranceMicros` AFTER
-    * the left timestamp. */
-  def forwardWithin(
-      left: DataFrame, right: DataFrame, keys: Seq[String],
-      leftTsCol: String, rightTsCol: String, payloadCols: Seq[String],
-      toleranceMicros: Long): DataFrame =
-    asOf(left, right, keys, leftTsCol, rightTsCol, payloadCols, fwd = true,
-      toleranceMicros = Some(toleranceMicros))
-
   private def asOf(
       left: DataFrame, right: DataFrame, keys: Seq[String],
       leftTsCol: String, rightTsCol: String, payloadCols: Seq[String],

@@ -19,9 +19,6 @@ object ConflictResolver {
   /** Actions that exclude the incoming row from the load. */
   val ExcludeIncomingActions: Seq[String] = Seq("keep_existing", "delete_both", "pending", "merge")
 
-  /** Actions that delete the existing row. */
-  val DeleteExistingActions: Seq[String] = Seq("use_incoming", "delete_both")
-
   private def keys(resolutions: DataFrame, actions: Seq[String]) =
     resolutions.filter(col("resolution_action").isin(actions.map(lit): _*))
       .select("local_subject_id", "identifier_type").distinct()
@@ -30,11 +27,6 @@ object ConflictResolver {
   def applyToIncoming(incoming: DataFrame, resolutions: DataFrame): DataFrame =
     incoming.join(keys(resolutions, ExcludeIncomingActions),
       Seq("local_subject_id", "identifier_type"), "left_anti")
-
-  /** U4: existing rows that must be deleted before loading. */
-  def deletionsForExisting(existing: DataFrame, resolutions: DataFrame): DataFrame =
-    existing.join(keys(resolutions, DeleteExistingActions),
-      Seq("local_subject_id", "identifier_type"), "left_semi")
 
   /** U5: cascade `use_incoming` center resolutions onto subjects — the
     * reference's guarded UPDATE (`fragment_resolution.py:389-565`):

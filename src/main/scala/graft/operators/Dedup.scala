@@ -57,19 +57,16 @@ object Dedup {
     * candidate pairs never cross an exchange carrying a 64-long array.
     * Sizing: store side measured as parquet plan-stats bytes (64-bit
     * minhash minima barely compress, so compressed ≈ raw), batch side
-    * as exact rows × the 576-byte signature row — at the 256 MB
-    * default the BUILT relation is ~300 MB, inside guide §3.1's
+    * as exact rows × the 576-byte signature row — at 256 MB the BUILT
+    * relation is ~300 MB, inside guide §3.1's
     * "few hundred MB is usually fine" and far under the 8 GB / 512M
     * row broadcast cap (the bound is a MEMORY constant per executor,
     * not a scale fraction — hence a byte ceiling, not a row ratio).
     * A/B at sf10 (store grown to ~230 MB estimated by the last
     * cycle): shuffle write 3 238 → 2 575 MB. Above the bound (a
     * 100 TB-corpus store) or on estimation failure the r18 sort-merge
-    * shape runs unchanged. Join strategy only — output identical.
-    * Override: `-Dgraft.minhash.sig.broadcast.bytes`. */
-  val MinhashSigBroadcastBytes: Long =
-    sys.props.get("graft.minhash.sig.broadcast.bytes").map(_.toLong)
-      .getOrElse(256L * 1024 * 1024)
+    * shape runs unchanged. Join strategy only — output identical. */
+  val MinhashSigBroadcastBytes: Long = 256L * 1024 * 1024
 
   /** First 56 bits of md5 as a non-negative BIGINT (see [[Portable]]). */
   private def md5h56(c: Column): Column =
@@ -79,12 +76,6 @@ object Dedup {
     * `h1 + i * h2m` stays < 2^60 for i ≤ 63. */
   private def md5h53(c: Column): Column =
     conv(substr(md5(c), lit(15), lit(14)), 16, 10).cast("long") % lit(1L << 53)
-
-  /** Exact-duplicate groups: fingerprint, surviving (min) id, count. */
-  def exactDuplicates(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.groupBy(fingerprint(col(textCol)).as("fingerprint"))
-      .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("dup_count"))
-      .filter(col("dup_count") > 1)
 
   /** First-wins keyed dedup (reference semantics made deterministic:
     * min id survives — `subject_id_resolver.py:150-161` note in
@@ -548,7 +539,7 @@ object Dedup {
   }
 
   private def signatureFromShingles(sh: DataFrame, numHashes: Int,
-      mode: HashMode = Fast, withN: Boolean = false): DataFrame = {
+      mode: HashMode, withN: Boolean = false): DataFrame = {
     // hash the shingle ONCE per row (projection below the aggregate);
     // the N min-aggs then fold cheap linear combinations of the words
     val hashed = sh.select(col("_id") +: shingleWords(col("shingle"), mode).zipWithIndex
@@ -650,7 +641,7 @@ object Dedup {
     * column and a threshold is given, any banded collision whose size
     * ratio falls below the threshold (minus a 1e-9 rounding slack) is
     * dropped AT the self-join — before the candidate `distinct` and
-    * before [[verifyPairs]] expands the pair by its left side's
+    * before [[verifyAgainstShingles]] expands the pair by its left side's
     * shingles. Verification is exact either way, so the filter only
     * removes pairs the verifier would reject; emitted pairs are
     * bit-for-bit unchanged (spec-pinned).
@@ -725,30 +716,12 @@ object Dedup {
     kept.select(outCols: _*).distinct()
   }
 
-  /** Exact Jaccard verification restricted to given candidate pairs —
-    * the LSH-scalable path: expand candidates by the left side's
-    * shingles, then an equi-join on (right id, shingle) computes the
-    * intersection without ever materializing all-pairs. */
-  def verifyPairs(df: DataFrame, candidates: DataFrame, idCol: String, textCol: String,
-      n: Int, threshold: Double): DataFrame = {
-    val sh = shingles(df, idCol, textCol, n)
-    val sizes = sh.groupBy("_id").agg(count(lit(1)).as("_n"))
-    val inter = candidates
-      .join(sh.select(col("_id").as("id_a"), col("shingle")), "id_a")
-      .join(sh.select(col("_id").as("id_b"), col("shingle")), Seq("id_b", "shingle"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_common"))
-    inter
-      .join(sizes.select(col("_id").as("id_a"), col("_n").as("n_a")), "id_a")
-      .join(sizes.select(col("_id").as("id_b"), col("_n").as("n_b")), "id_b")
-      .withColumn("jaccard",
-        col("n_common").cast("double") /
-          (col("n_a") + col("n_b") - col("n_common")).cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
-  }
-
-  /** Exact Jaccard verification against a precomputed shingle table
-    * (same contract as [[verifyPairs]] but shares the shingle scan).
+  /** Exact Jaccard verification restricted to given candidate pairs,
+    * against a precomputed shingle table (`shingles` output): expand
+    * candidates by the left side's shingles, then an equi-join on
+    * (right id, shingle) computes the intersection without ever
+    * materializing all-pairs. Emits `(id_a, id_b, jaccard)` for the
+    * pairs at or above `threshold`.
     *
     * When the candidate frame carries `n_a`/`n_b` (the signature
     * aggregate's per-doc distinct-shingle counts, emitted by
@@ -758,7 +731,7 @@ object Dedup {
     * the (pair-keyed) candidate frame once instead (r19, §2.4). The
     * jaccard arithmetic is bit-identical — same integers in, same one
     * IEEE division. */
-  private def verifyAgainstShingles(sh: DataFrame, candidates: DataFrame,
+  private[graft] def verifyAgainstShingles(sh: DataFrame, candidates: DataFrame,
       threshold: Double): DataFrame = {
     val carried = candidates.columns.contains("n_a") &&
       candidates.columns.contains("n_b")
@@ -1305,32 +1278,9 @@ object Dedup {
       .select("id_a", "id_b", "cosine")
   }
 
-  /** Bit masks 1L << 0..63 as an array literal (so lambdas can index
-    * them instead of shifting by a non-literal amount). */
-  private val bitMasks: Column = array((0 until 64).map(j => lit(1L << j)): _*)
-
-  /** 64-bit SimHash per row: token hashes vote per bit position.
-    * ONE fold over the tokens with a 64-wide vote accumulator — the
-    * per-bit formulation would re-evaluate the tokenizer 64× per row
-    * after projection collapsing (measured: ~1000× slower). */
-  def simhash64(text: Column): Column = {
-    val votes = aggregate(
-      tokens(text),
-      array_repeat(lit(0L), 64),
-      (acc, tok) => {
-        val h = xxhash64(tok)
-        zip_with(acc, bitMasks,
-          (a, mask) => a + when(h.bitwiseAND(mask) =!= 0L, 1L).otherwise(-1L))
-      })
-    aggregate(
-      zip_with(votes, bitMasks, (v, mask) => when(v > 0, mask).otherwise(lit(0L))),
-      lit(0L), (acc, x) => acc.bitwiseOR(x))
-  }
-
   /** DataFrame-level SimHash: explode tokens once, hash each token
     * once, and let a codegen'd 64-sum hash aggregate produce the bit
-    * votes — the whole computation stays in whole-stage codegen
-    * (the pure-Column [[simhash64]] form is interpreted lambda work).
+    * votes — the whole computation stays in whole-stage codegen.
     * Token-less documents drop out (no meaningful fingerprint). */
   def simhashTable(df: DataFrame, idCol: String, textCol: String,
       mode: HashMode = Fast): DataFrame = {

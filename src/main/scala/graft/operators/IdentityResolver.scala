@@ -82,11 +82,8 @@ object IdentityResolver {
     * aggregation — below it the whole registry aggregates directly
     * (measured faster at gate scale; see the comment in [[links]]).
     * 64 MB ≈ the point where a per-cycle registry shuffle stops being
-    * noise; override via `-Dgraft.links.filter.bytes` for deployments
-    * whose batch/registry ratio differs. */
-  val LinksRegistryFilterBytes: Long =
-    sys.props.get("graft.links.filter.bytes").map(_.toLong)
-      .getOrElse(64L * 1024 * 1024)
+    * noise. */
+  val LinksRegistryFilterBytes: Long = 64L * 1024 * 1024
 
   /** Optional subject columns (withdrawn / flagged_for_review /
     * review_notes — `01-schema.sql:26-29`) defaulted when the snapshot
@@ -173,23 +170,9 @@ object IdentityResolver {
       col("local_subject_id"), col("identifier_type"),
       lower(col("local_subject_id")).as("_nid"))
 
-  // AUTO-ROUTE on a cataloged registry: RegistryCatalog persists
-  // local_subject_ids with a precomputed `norm_id` =
-  // lower(local_subject_id), bucketed + sorted on it. When that
-  // column is present, join on the ATTRIBUTE itself — re-deriving
-  // lower(...) would hide the bucketing from the planner and put an
-  // Exchange back under the registry side of J1. With the attribute,
-  // the bucketed scan's output partitioning satisfies the join and
-  // only the (batch-sized) probe reshuffles. norm_id's content is
-  // the catalog's write-time contract (CatalogSpec pins equality of
-  // both routes). The driver path filters on the same column.
-  private def registryIds(registry: Registry): DataFrame = {
-    val nid =
-      if (registry.localIds.columns.contains("norm_id")) col("norm_id")
-      else lower(col("local_subject_id"))
-    registry.localIds.select(nid.as("_nid"),
+  private def registryIds(registry: Registry): DataFrame =
+    registry.localIds.select(lower(col("local_subject_id")).as("_nid"),
       col("center_id").as("_id_center"), col("global_subject_id").as("_gsid"))
-  }
 
   private def subjectFlags(registry: Registry): DataFrame =
     withSubjectFlags(registry.subjects).select(
@@ -398,21 +381,18 @@ object IdentityResolver {
   }
 
   /** [[registryIds]]' rows whose normalized identifier is in `nids`,
-    * filtered in Scala over a local `local_ids` member's rows: `norm_id`
-    * when the member has it, else Spark's own `lower` expression. */
+    * filtered in Scala over a local `local_ids` member's rows with
+    * Spark's own `lower` expression. */
   private def localRegistryIds(localIds: DataFrame, nids: Set[String]): Array[Row] = {
     val s = localIds.schema
     val (li, ci, gi) = (s.fieldIndex("local_subject_id"), s.fieldIndex("center_id"),
       s.fieldIndex("global_subject_id"))
-    val nidOf: Row => String =
-      if (s.fieldNames.contains("norm_id")) { val ni = s.fieldIndex("norm_id"); _.getString(ni) }
-      else {
-        val lower = org.apache.spark.sql.catalyst.expressions.Lower(
-          org.apache.spark.sql.catalyst.expressions.BoundReference(0, StringType, nullable = true))
-        r => if (r.isNullAt(li)) null else lower.eval(
-          org.apache.spark.sql.catalyst.InternalRow(
-            org.apache.spark.unsafe.types.UTF8String.fromString(r.getString(li)))).toString
-      }
+    val lower = org.apache.spark.sql.catalyst.expressions.Lower(
+      org.apache.spark.sql.catalyst.expressions.BoundReference(0, StringType, nullable = true))
+    val nidOf: Row => String = r =>
+      if (r.isNullAt(li)) null else lower.eval(
+        org.apache.spark.sql.catalyst.InternalRow(
+          org.apache.spark.unsafe.types.UTF8String.fromString(r.getString(li)))).toString
     DriverPath.localRows(localIds).flatMap { r =>
       val n = nidOf(r)
       if (n != null && nids(n)) Some(Row(n, r.get(ci), r.get(gi))) else None

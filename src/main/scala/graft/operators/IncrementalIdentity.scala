@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.sources.Sources
 
@@ -69,9 +68,7 @@ import graft.sources.Sources
   *  - a larger delta: [[IdentityResolver]]'s distributed J1 (shuffle
   *    on normalized identifier, auto-armed salted skew fallback).
   * The registry read is a pointer-resolved parquet scan and the
-  * publish rewrites the registry snapshot on every tier — at very
-  * large registries pair this with [[graft.catalog.RegistryCatalog]]'s
-  * bucketed layout, which resolve() auto-routes on.
+  * publish rewrites the registry snapshot on every tier.
   */
 object IncrementalIdentity {
 

@@ -103,15 +103,13 @@ object IndexMaintenance {
   }
 
   /** Per-partition concurrency for FAMILY operations (the partitioned
-    * index families' routed applies, builds, maintenance sweeps and
-    * health rollups — each touches one disjoint partition-index dir,
-    * so they compose safely). A full-fan-out delta at the partition
-    * cap was previously thousands of SERIAL multi-job applies
-    * (VERDICT r16); a small pool keeps the driver loop off the
-    * critical path without flooding the scheduler. Overridable via
-    * the `graft.index.familyParallelism` system property. */
-  def FamilyApplyParallelism: Int =
-    sys.props.get("graft.index.familyParallelism").map(_.toInt).getOrElse(8)
+    * index families' routed applies, builds and maintenance sweeps —
+    * each touches one disjoint partition-index dir, so they compose
+    * safely). A full-fan-out delta at the partition cap was previously
+    * thousands of SERIAL multi-job applies (VERDICT r16); a small pool
+    * keeps the driver loop off the critical path without flooding the
+    * scheduler. */
+  val FamilyApplyParallelism: Int = 8
 
   /** Shared daemon pool behind [[inParallel]]: a cached executor, so
     * the partitioned streaming sinks (one family call per micro-batch)
@@ -168,75 +166,6 @@ object IndexMaintenance {
     workers.foreach(_.get())
     if (failure.get() != null) throw failure.get()
     results.toSeq.asInstanceOf[Seq[B]]
-  }
-
-  /** Partition segments (`filterCol=value` dir names) of a partitioned
-    * index FAMILY root — one listing. */
-  def familySegments(spark: SparkSession, rootDir: String,
-      filterCol: String): Seq[String] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(rootDir), spark.sparkContext.hadoopConfiguration)
-    val root = new org.apache.hadoop.fs.Path(rootDir)
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq.collect {
-      case st if st.isDirectory &&
-          st.getPath.getName.startsWith(s"$filterCol=") =>
-        st.getPath.getName
-    }.sorted
-  }
-
-  /** Health rollup for a partitioned index FAMILY: per-partition
-    * [[IndexHealth]] keyed by segment, generation-pointer resolved,
-    * gathered on the family pool — the one-call monitoring surface a
-    * 4096-partition family needs (VERDICT r16 #7). LISTING-ONLY by
-    * default: with `countTombstoneRows = true` the exact per-partition
-    * tombstone row counts run as ONE Spark job (r18, VERDICT r17 #4) —
-    * every partition's live tombstone segments are unioned under a
-    * segment tag and counted in a single aggregation, instead of one
-    * count job per partition (4096 jobs at the family cap, each paying
-    * full job-submission overhead for a delta-scale scan). Pass it
-    * only when the rollup feeds a maintenance decision rather than a
-    * dashboard; otherwise rows report -1 (not counted) and every other
-    * field (generations, batch dirs, tombstone segments/bytes) is
-    * exact from listings. */
-  def familyHealth(spark: SparkSession, rootDir: String, filterCol: String,
-      tables: Seq[(String, String)],
-      countTombstoneRows: Boolean = false): Seq[(String, IndexHealth)] = {
-    val base = inParallel(familySegments(spark, rootDir, filterCol)) { seg =>
-      val live = IndexGenerations.resolve(spark, s"$rootDir/$seg")
-      val th = tables.map { case (t, pc) =>
-        val gens = Sources.mergeGenerations(spark, s"$live/$t", pc)
-        TableHealth(t, gens.size, (gens.values.toSeq :+ 0).max,
-          Sources.mergeBatchDirCount(spark, s"$live/$t", pc))
-      }
-      val (segs, bytes) = LsmTombstones.segmentStats(spark, live)
-      (seg, live, th, segs, bytes)
-    }
-    val rowsBySeg: Map[String, Long] =
-      if (!countTombstoneRows) Map.empty
-      else {
-        // ONE scan over every partition's segment dirs, rows tagged by
-        // the family segment component of their file path — a
-        // per-partition read would pay per-read schema/footer/listing
-        // jobs, re-introducing O(partitions) jobs through the back door
-        val paths = base.flatMap { case (_, live, _, _, _) =>
-          LsmTombstones.segmentPaths(spark, live)
-        }
-        if (paths.isEmpty) Map.empty
-        else {
-          import org.apache.spark.sql.functions.{input_file_name, regexp_extract}
-          val segRe = "/(" + java.util.regex.Pattern.quote(filterCol) + "=[^/]*)/"
-          spark.read.parquet(paths: _*)
-            .select(regexp_extract(input_file_name(), segRe, 1).as("_family_seg"))
-            .groupBy("_family_seg").count()
-            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        }
-      }
-    base.map { case (seg, live, th, segs, bytes) =>
-      val rows =
-        if (countTombstoneRows) rowsBySeg.getOrElse(seg, 0L) else -1L
-      seg -> IndexHealth(live, th, segs, rows, bytes)
-    }
   }
 
   /** The threshold trigger: report health, compact via `compact` when

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Multi-dimensional data layout for scan pruning — the write-side
@@ -54,29 +54,4 @@ object Layout {
     }
     terms.mkString("(", " | ", ")")
   }
-
-  /** Write `df` clustered on the Z-curve of (xCol, yCol): range-
-    * partition on the curve value (contiguous curve segments per
-    * output file — this is the shuffle that buys every later scan its
-    * pruning), sort within partitions, drop the helper column. At
-    * 100 TB you would size `numFiles` so files land near the FS block
-    * size; pruning effectiveness is independent of the file count. */
-  def writeZOrdered(df: DataFrame, xCol: String, yCol: String,
-      dir: String, numFiles: Int, bits: Int = 16): Unit = {
-    df.withColumn("_z", zValue(col(xCol), col(yCol), bits))
-      .repartitionByRange(numFiles, col("_z"))
-      .sortWithinPartitions("_z")
-      .drop("_z")
-      .write.mode("overwrite").parquet(dir)
-  }
-
-  /** Per-file min/max width of `valueCol` under a layout — the
-    * pruning diagnostic: a scan with a predicate on `valueCol` can
-    * skip a file iff the predicate misses its [min, max] envelope, so
-    * the mean envelope width (normalized by the global range) is the
-    * expected fraction of files a point query must read. */
-  def fileEnvelopes(df: DataFrame, valueCol: String): DataFrame =
-    df.withColumn("_f", input_file_name())
-      .groupBy("_f")
-      .agg(min(col(valueCol)).as("lo"), max(col(valueCol)).as("hi"))
 }

@@ -50,16 +50,6 @@ object LexicalIndex {
   final case class Bm25Maintenance(
       removedPostings: Long, addedPostings: Long, docsTouched: Long)
 
-  // -Dgraft.lsm.profile=true → one stderr line per apply phase
-  private def lsmProfile = sys.props.get("graft.lsm.profile").contains("true")
-  private def phase[A](name: String)(f: => A): A = {
-    val t0 = System.nanoTime()
-    val a = f
-    if (lsmProfile)
-      System.err.println(f"[lsm-phase] $name%-22s ${(System.nanoTime() - t0) / 1e9}%.1fs")
-    a
-  }
-
   /** (table, partitionCol) of the index's data tables — the shape the
     * health/maintenance machinery works over. */
   private val Bm25Tables =
@@ -229,23 +219,20 @@ object LexicalIndex {
       // the ONE read this mode keeps: live doclen rows of the changed
       // ids (doc-bucket pruned point lookups) — the stats delta needs
       // the outgoing lengths and membership, nothing else does
-      val oldLen = phase("oldLen-read") {
-        LsmTombstones.filterLive(spark, dir,
-            Sources.readMergePartitionedKeyedFrame(
-              spark, s"$dir/doclen", "_db", "doc_id", ids),
-            "doc_id")
-          .select("doc_id", "dl").localCheckpoint(false)
-      }
-      val (docsRemoved, dlRemoved) = phase("oldLen-agg")(addAgg(oldLen))
-      phase("tombstone-publish")(LsmTombstones.append(spark, dir, ids, "doc_id", n))
-      val addLen = phase("addLen")(
-        doclenOf(adds, idCol, textCol).localCheckpoint(false))
+      val oldLen = LsmTombstones.filterLive(spark, dir,
+          Sources.readMergePartitionedKeyedFrame(
+            spark, s"$dir/doclen", "_db", "doc_id", ids),
+          "doc_id")
+        .select("doc_id", "dl").localCheckpoint(false)
+      val (docsRemoved, dlRemoved) = addAgg(oldLen)
+      LsmTombstones.append(spark, dir, ids, "doc_id", n)
+      val addLen = doclenOf(adds, idCol, textCol).localCheckpoint(false)
       val (docsAdded, dlAdded) = addAgg(addLen)
       var addedPostings = 0L
       if (docsAdded > 0) {
         val post = postingsOf(adds, idCol, textCol).withColumn("_seq", lit(n))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        addedPostings = phase("postings-compute")(post.count())
+        addedPostings = post.count()
         // the three table appends are INDEPENDENT publishes into
         // disjoint dirs under this apply's already-durable tombstone
         // wave, so they overlap on the family pool (r19, guide §2.6 —
@@ -265,8 +252,7 @@ object LexicalIndex {
           ("doclen" -> (() => Sources.publishMergeAppend(spark, s"$dir/doclen",
             addLen.withColumn("_seq", lit(n)).withColumn("_db", docBucket(nBuckets)),
             "_db")))
-        phase("table-appends")(
-          IndexMaintenance.inParallel(appends)(_._2()): Unit)
+        IndexMaintenance.inParallel(appends)(_._2()): Unit
         post.unpersist(): Unit
         // bloom sidecars on doclen's unindexed dirs (idempotent): the
         // next apply's oldLen keyed read then DIR-SKIPS the base and
@@ -278,11 +264,9 @@ object LexicalIndex {
         // first-apply bill at sf10) and only rewrite mode keyed-reads
         // it, which is forbidden until compaction — whose fold builds
         // the forward sidecars itself. Off the read path entirely.
-        phase("bloom-sidecars") {
-          Sources.indexBatchKeys(spark, s"$dir/doclen", "doc_id", fpp = Sources.BatchLookupFpp): Unit
-        }
+        Sources.indexBatchKeys(spark, s"$dir/doclen", "doc_id", fpp = Sources.BatchLookupFpp): Unit
       }
-      phase("stats-publish")(publishStats(docsRemoved, dlRemoved, docsAdded, dlAdded))
+      publishStats(docsRemoved, dlRemoved, docsAdded, dlAdded)
       // listing-only degradation check: loud when nobody is running
       // the compaction trigger (see IndexMaintenance)
       IndexMaintenance.warnIfDegraded(spark, dir, Bm25Tables,
@@ -615,7 +599,7 @@ object LexicalIndex {
     * then the `_gen` pointer swaps onto it ([[IndexGenerations]]) —
     * in-place overwrite would tear concurrent searches between old
     * postings and new stats; the swap never does. Readers mid-search
-    * keep the old generation (on disk until [[vacuumBm25Generations]]);
+    * keep the old generation (on disk until [[IndexGenerations.vacuum]]);
     * subsequent applies/searches/compactions resolve the new one
     * transparently. Quiesce the incremental applier across the
     * cutover — an in-flight delta survives only in the outgoing
@@ -630,10 +614,4 @@ object LexicalIndex {
     IndexGenerations.swap(spark, dir, gen)
     gen
   }
-
-  /** Delete index generations superseded by [[rebuildBm25Index]]
-    * swaps (grace-period contract — see [[IndexGenerations.vacuum]]). */
-  def vacuumBm25Generations(spark: SparkSession, dir: String,
-      graceMs: Long = 0L): Int =
-    IndexGenerations.vacuum(spark, dir, graceMs)
 }

@@ -252,16 +252,4 @@ object Linkage {
     }
     EmParams(lambda, m, u, nPairs, counts, cappedBlocks, droppedRows)
   }
-
-  /** Integer log-odds for [[selfScore]] from learned [[EmParams]]:
-    * `wAgree = round(scale·ln(m/u))`, `wDisagree =
-    * round(scale·ln((1−m)/(1−u)))` — the pre-scaled-integer contract
-    * selfScore ships with, now self-contained. ln lives HERE (driver
-    * side, feeding integer weights into the plan), never in a
-    * hash-gated output. */
-  def scaledWeights(params: EmParams, scale: Double = 4.0): Seq[(Int, Int)] =
-    params.m.zip(params.u).map { case (mf, uf) =>
-      (math.round(scale * math.log(mf / uf)).toInt,
-        math.round(scale * math.log((1.0 - mf) / (1.0 - uf))).toInt)
-    }.toSeq
 }

@@ -102,13 +102,6 @@ private[operators] object LsmTombstones {
     else Some(spark.read.parquet(segs.map(_._2.toString): _*))
   }
 
-  /** Live segment dir paths, for callers that scan MANY indexes'
-    * tombstones in one `spark.read` ([[IndexMaintenance.familyHealth]]'s
-    * one-job family count — a per-index [[read]] pays per-index
-    * schema/footer jobs, O(partitions) at family fan-out). */
-  def segmentPaths(spark: SparkSession, indexDir: String): Seq[String] =
-    segments(spark, indexDir).map(_._2.toString)
-
   /** The apply sequence the NEXT append-apply should stamp:
     * max(live segment seq, compaction floor) + 1. Derived from dir
     * NAMES and the floor file — no data read. */

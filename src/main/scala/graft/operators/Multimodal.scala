@@ -374,11 +374,6 @@ object Multimodal {
     }
   }
 
-  /** Resize metadata transform (stub: real pixel work happens in the
-    * decode kernel; this maintains the metadata contract). */
-  def resizeMeta(df: DataFrame, w: Int, h: Int): DataFrame =
-    df.withColumn("width", lit(w)).withColumn("height", lit(h))
-
   /** Frame sampling plan for video rows: one output row per sampled
     * frame index — an explode, so it parallelizes with the data. */
   def sampleFrames(df: DataFrame, everyMs: Long): DataFrame =

@@ -41,18 +41,6 @@ object Robust {
         sum(clipped.cast("decimal(18,6)")).cast("double").as("sum_clipped"))
   }
 
-  /** Per-row winsorized value: the input frame plus `q_lo`, `q_hi`
-    * and the clipped `<valueCol>_w` column. */
-  def winsorize(df: DataFrame, valueCol: String, groupCols: Seq[String],
-      pLo: Double, pHi: Double): DataFrame = {
-    val bounds = df.groupBy(groupCols.map(col): _*).agg(
-      expr(s"percentile(CAST($valueCol AS DOUBLE), $pLo)").as("q_lo"),
-      expr(s"percentile(CAST($valueCol AS DOUBLE), $pHi)").as("q_hi"))
-    df.join(broadcast(bounds), groupCols)
-      .withColumn(s"${valueCol}_w",
-        least(greatest(col(valueCol).cast("double"), col("q_lo")), col("q_hi")))
-  }
-
   /** Per-group robust outlier profile by the median/MAD rule: a value
     * is an outlier when `|x − median| > k · 1.4826 · MAD` (1.4826
     * scales the median absolute deviation to the stddev of a normal —

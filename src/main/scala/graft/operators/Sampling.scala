@@ -30,13 +30,6 @@ object Sampling {
       .otherwise(lit("test"))
   }
 
-  /** Deterministic fraction sample: keep rows whose 10k-bucket falls
-    * under the fraction. Rounded, not truncated: 0.29 * 10000 is
-    * 2899.999… in binary — truncation would silently shift the keep
-    * threshold off the intended integer. */
-  def sampleByHash(df: DataFrame, keyCol: String, fraction: Double): DataFrame =
-    df.filter(hashBucket(col(keyCol), 10000) < lit(math.round(fraction * 10000)))
-
   /** Stratified (per-domain) sampling: each stratum keeps its own
     * fraction — how a training mix is re-weighted (up/down-weighting
     * web vs books vs code) without an RNG. `rates` maps stratum value →
@@ -154,20 +147,6 @@ object Sampling {
       .withColumn("_rk", row_number().over(w))
       .filter(col("_rk") <= k)
       .drop("_es", "_rk")
-  }
-
-  /** Global (single-stratum) weighted sample without replacement:
-    * the same A-ES key, ranked corpus-wide. Planned as a sort-limit
-    * (per-partition top-k, then a k-row merge — no full shuffle). */
-  def weightedSampleK(df: DataFrame, keyCol: String, weightCol: String,
-      k: Int): DataFrame = {
-    val u = (hashBucket(col(keyCol), 10000).cast("double") + lit(0.5)) / lit(10000.0)
-    val es = log(u) / col(weightCol).cast("double")
-    df.filter(col(weightCol).isNotNull && col(weightCol) > 0)
-      .withColumn("_es", es)
-      .orderBy(col("_es").desc, col(keyCol).asc)
-      .limit(k)
-      .drop("_es")
   }
 
   /** Deterministic corpus shuffle into `nShards` output shards — the

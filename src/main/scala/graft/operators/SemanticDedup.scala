@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -41,9 +41,9 @@ object SemanticDedup {
     *
     * `centroidIds` designates data rows as medoid-style centroids
     * (ascending id order = list index), keeping the whole derivation
-    * deterministic and SQL-reproducible — swap in KMeans centers via
-    * [[SimilaritySearch.ivfTopK]]'s bounded-sample fit for production
-    * (same plan shape; the assignment kernel takes any literals).
+    * deterministic and SQL-reproducible — swap in KMeans centers from
+    * a bounded-sample fit for production (same plan shape; the
+    * assignment kernel takes any literals).
     */
   /** `maxCluster` bounds the quadratic core on adversarial corpora
     * (every embedding identical → one cluster → |corpus|² pairs):

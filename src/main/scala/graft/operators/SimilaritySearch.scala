@@ -113,43 +113,11 @@ object SimilaritySearch {
       d * d
     }), lit(0.0), (acc, x) => acc + x)
 
-  /** IVF (inverted-file) ANN: a KMeans coarse quantizer assigns every
-    * vector to its nearest of `nLists` centroid lists; queries probe
-    * their `nProbe` nearest lists and rerank candidates with exact
-    * cosine. The scale path for ANN beyond LSH: centroids are learned
-    * from the data (seeded, deterministic), the list assignment is
-    * per-row expression work against broadcast centroid literals, and
-    * the probe join shuffles only (list, id, vec). `nProbe = nLists`
-    * degrades gracefully to exact brute force. */
-  def ivfTopK(
-      table: DataFrame, queries: DataFrame, k: Int, nLists: Int = 16, nProbe: Int = 2,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      maxTrainRows: Int = 100000): DataFrame = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-
-    // Train the coarse quantizer on a bounded sample: centroid quality
-    // saturates long before 100k rows, and an iterative ML fit over the
-    // FULL table would be the scale-killer at 100 TB (the assignment
-    // below stays per-row against broadcast centroid literals, which is
-    // the part that must see every vector). limit() not sample(): it is
-    // deterministic for a fixed input layout, and a prefix is unbiased
-    // here because bucket quality only needs coverage of the metric
-    // space, not a uniform row sample.
-    val train = table.select(array_to_vector(col(vecCol).cast("array<float>")).as("features"))
-      .limit(maxTrainRows)
-    val model = new KMeans().setK(nLists).setSeed(42L).setMaxIter(5)
-      .setInitMode("random").fit(train)
-    ivfTopKWithCentroids(table, queries, k,
-      model.clusterCenters.map(_.toArray.toSeq).toSeq, nProbe, idCol, vecCol)
-  }
-
   /** IVF with the coarse quantizer seeded from designated DATA rows
     * (`centroidIds`, ordered ascending) instead of a KMeans fit — the
     * k-medoid-style degenerate training. Deterministic across scale
     * factors and expressible in plain SQL (a join against the centroid
-    * rows), so this variant carries the driver's hash gate; the KMeans
-    * variant is pinned by spec (equals-brute-force at full probe). */
+    * rows), so this variant carries the driver's hash gate. */
   def ivfTopKSeeded(
       table: DataFrame, queries: DataFrame, k: Int, centroidIds: Seq[Long],
       nProbe: Int = 2, idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
@@ -416,52 +384,6 @@ object SimilaritySearch {
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select("query_id", "rank", "neighbor_id", "sq_dist")
-  }
-
-  /** IVF-PQ: the billion-scale composition — vectors live in IVF lists
-    * as PQ codes, queries probe `nProbe` lists and evaluate ADC against
-    * only the probed candidates. Index memory is m codes + 1 list id
-    * per vector; per-query work is |probed lists| · (m lookups), and
-    * the candidate join shuffles (list, id, codes) — never raw vectors.
-    * Both layers are the independently hash-gated pieces
-    * ([[ivfTopKWithCentroids]] probe, [[pqTopK]] ADC); recall is pinned
-    * by spec. `coarseIds`/`pqIds` designate data rows for the coarse
-    * quantizer and subspace codebooks (production: bounded-sample
-    * KMeans literals, same plans). */
-  def ivfPqTopK(table: DataFrame, queries: DataFrame, k: Int,
-      coarseIds: Seq[Long], pqIds: Seq[Long], m: Int = 4, nProbe: Int = 2,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val cents = table.filter(col(idCol).isin(coarseIds: _*))
-      .select(col(idCol).cast("long"), col(vecCol)).collect() // nLists tiny rows
-      .sortBy(_.getLong(0))
-      .map(_.getSeq[Float](1).map(_.toDouble).toSeq).toSeq
-    val cbs = pqCodebooks(table, pqIds, m, idCol, vecCol)
-    val nLists = cents.length
-
-    val enc = pqEncode(table, cbs, idCol, vecCol)
-      .select(col(idCol).as("neighbor_id"), col("codes"),
-        graft.functions.VectorKernels.nearestCentroidCol(col("_v"), cents)
-          .as("_list"))
-
-    val centroids = planesLit(cents)
-    val probeLists = {
-      val pairs = zip_with(
-        transform(centroids, c => dist2(col(vecCol), c)),
-        sequence(lit(0), lit(nLists - 1)),
-        (d, i) => struct(d.as("d"), i.as("i")))
-      transform(slice(sort_array(pairs), 1, nProbe), s => s("i").cast("int"))
-    }
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("_qv"),
-      explode(probeLists).as("_list"))
-
-    val adc = adcDist(cbs, col("_qv"), col("codes"))
-    val w = Window.partitionBy("query_id").orderBy(col("adc_dist"), col("neighbor_id"))
-    enc.join(broadcast(q), "_list")
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("adc_dist", adc)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "adc_dist")
   }
 
   /** Persist the IVF-PQ index: codes land in parquet PARTITIONED BY
@@ -919,7 +841,7 @@ object SimilaritySearch {
     * lost to the rebuild input, the documented moving-corpus lost
     * update. Cost is one full [[writeIvfPqIndex]] build; the old
     * generation stays on disk for in-flight readers until
-    * [[vacuumIvfPqGenerations]]. Returns the new generation dir. */
+    * [[IndexGenerations.vacuum]]. Returns the new generation dir. */
   def retrainIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, corpus: DataFrame, coarseIds: Seq[Long], pqIds: Seq[Long],
       m: Int = 4, idCol: String = "vec_id",
@@ -929,12 +851,6 @@ object SimilaritySearch {
     IndexGenerations.swap(spark, dir, gen)
     gen
   }
-
-  /** Delete index generations superseded by [[retrainIvfPqIndex]]
-    * swaps (grace-period contract — see [[IndexGenerations.vacuum]]). */
-  def vacuumIvfPqGenerations(spark: org.apache.spark.sql.SparkSession,
-      dir: String, graceMs: Long = 0L): Int =
-    IndexGenerations.vacuum(spark, dir, graceMs)
 
   /** LIVE logical state of the code table — generation pointer
     * resolved, tombstone kills applied: `(_id, codes, _list)`. The SQL

@@ -63,7 +63,7 @@ object Stats {
     * the parity — so the choice is pure performance tuning for the
     * deployment's decimal performance profile. */
   private def moments(df: DataFrame, cols: Seq[(String, Int)],
-      groupCols: Seq[String] = Nil, longPath: Boolean = false): DataFrame = {
+      groupCols: Seq[String], longPath: Boolean): DataFrame = {
     if (!longPath) {
       val sc = cols.map { case (c, d) => scaled(col(c), d) }
       val aggs =

@@ -136,17 +136,6 @@ object UpsertWriter {
     MergeResult(merged, audit, preview)
   }
 
-  /** U6 full document shape: fold the exploded audit rows back into
-    * the reference's JSONB layout — one row per changed record with a
-    * canonical (field-name-sorted) `changes` map, so payloads are
-    * hash-stable (SURVEY.md §7.5.6). */
-  def auditDocuments(audit: DataFrame): DataFrame =
-    audit.groupBy("table_name", "record_key", "changed_by", "batch_id")
-      .agg(to_json(map_from_entries(sort_array(collect_list(struct(
-        col("field"),
-        struct(col("old_value").as("old"), col("new_value").as("new")))))))
-        .as("changes"))
-
   /** U3: the `local_subject_ids` delete-and-replace variant
     * (`load_strategies.py:196-352`): match on (local_subject_id,
     * identifier_type) ONLY; a center change deletes the old row and

@@ -181,8 +181,8 @@ object Pipelines {
     "local_subject_ids" -> Seq.empty)
 
   /** V5: the validation report document (`validator.py:180-264`),
-    * materialized as ONE data row so it can flow to the JSON report
-    * sink ([[writeReport]]) and the driver gate alike. Success shape:
+    * materialized as ONE data row so it can flow to a JSON report
+    * sink and the driver gate alike. Success shape:
     * status/approval/row stats + the gsid_resolution and
     * conflict_summary rollups; failure shape (schema errors) carries
     * the error list instead. `timestamp` is caller-supplied — the
@@ -263,11 +263,6 @@ object Pipelines {
         col("gsid_multi_conflicts"), col("gsid_center_conflicts"),
         col("local_id_records_count"))
   }
-
-  /** V5 sink: upload the report row(s) as a JSON document directory
-    * (the reference PUTs `validation-reports/{batch}.json` to S3). */
-  def writeReport(report: DataFrame, path: String): Unit =
-    Sources.writeJson(report.coalesce(1), path)
 
   private def emptyResolutions(spark: SparkSession): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],

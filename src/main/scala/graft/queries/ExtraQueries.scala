@@ -346,10 +346,8 @@ object ExtraQueries {
     },
 
     // Z-order (Morton) curve value over (customer, order-day) — the
-    // multi-dimensional clustering key behind writeZOrdered's
-    // scan-pruning layout. Pure bit arithmetic, replayed term-for-term
-    // in the oracle; the layout win itself (per-file min/max envelope
-    // shrinkage) is asserted in LayoutSpec.
+    // multi-dimensional clustering key of a scan-pruning layout. Pure
+    // bit arithmetic, replayed term-for-term in the oracle.
     QueryDef.sql(
       "q_layout_zorder",
       s"""SELECT o_orderkey,

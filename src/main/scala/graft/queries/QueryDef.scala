@@ -43,10 +43,4 @@ object QueryDef {
     * is by-name and must only be forced post-run. */
   def sqlDeferred(name: String)(fn: (SparkSession, String) => DataFrame)(
       oracle: => String): QueryDef =
-    QueryDef(name, fn, Some(() => oracle))
-  /** Non-SQL-expressible op: driver records a weaker rows-only check.
-    * `reason` says why no oracle exists — every oracle-less def must
-    * declare one. */
-  def rowsOnly(name: String, reason: String)(fn: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, fn, None, Some(reason))
-}
+    QueryDef(name, fn, Some(() => oracle))}

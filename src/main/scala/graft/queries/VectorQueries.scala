@@ -38,7 +38,7 @@ object VectorQueries {
     pqIndexCache.computeIfAbsent(s"$datasetDir@${sourceStamp(datasetDir)}", _ => {
       val p = java.nio.file.Files.createTempDirectory("graft_pqidx")
       sys.addShutdownHook {
-        import java.nio.file.{Files, Path}
+        import java.nio.file.Files
         import scala.jdk.CollectionConverters._
         if (Files.exists(p)) {
           val all = Files.walk(p).iterator().asScala.toSeq

@@ -19,9 +19,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *
   * The reference pulls pages sequentially on one process; here every
   * page is an [[InputPartition]], so a 1000-page export is fetched by
-  * the cluster in parallel and rows never pass through the driver —
-  * the scale path the driver-side [[Sources.restSnapshot]] stopgap
-  * cannot offer. Column pruning is pushed into the reader (projected
+  * the cluster in parallel and rows never pass through the driver. Column pruning is pushed into the reader (projected
   * before row conversion), which for wide REDCap exports is the
   * difference between shipping 600 fields and the 5 you selected.
   *

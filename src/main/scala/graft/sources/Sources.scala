@@ -22,11 +22,8 @@ object Sources {
     * frame touching more partitions than this is a table rewrite
     * mis-spelled as a targeted delete (or the key column passed as the
     * partition column) and is refused loudly instead of materializing a
-    * data-proportional set on the driver. Overridable via the
-    * `graft.merge.maxTouchedPartitions` system property. */
-  def MaxTouchedPartitions: Int =
-    Option(System.getProperty("graft.merge.maxTouchedPartitions"))
-      .map(_.toInt).getOrElse(10000)
+    * data-proportional set on the driver. */
+  val MaxTouchedPartitions: Int = 10000
 
   /** S1/S2: CSV fragment scan (header row, reference null tokens
     * preserved as raw strings for the coercion layer to normalize). */
@@ -35,13 +32,8 @@ object Sources {
     schema.fold(r.option("inferSchema", "false"))(r.schema).csv(path)
   }
 
-  /** S3 (operator): JSON document scan (validation reports, per-subject
-    * fragments). */
-  def readJson(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("multiLine", "true").json(path)
-
-  /** S3 (operator): line-delimited JSON scan — the format [[writeJson]]
-    * and [[writePartitionedJson]] produce (one record per line, the
+  /** S3 (operator): line-delimited JSON scan — the format
+    * [[writePartitionedJson]] produces (one record per line, the
     * splittable-at-scale layout; `multiLine` documents are not). */
   def readJsonLines(spark: SparkSession, path: String,
       schema: Option[StructType] = None): DataFrame = {
@@ -59,28 +51,9 @@ object Sources {
     spark.read.option("pushDownPredicate", "true").jdbc(url, table, p)
   }
 
-  /** S4/S5 stopgap: REST snapshot as a driver-side fetch wrapped in a
-    * DataFrame. Prefer [[RestDataSource]] (DataSourceV2,
-    * partition-per-page, executor-side fetch, column pruning) — this
-    * form remains for one-page exports where a V2 scan is overkill. */
-  def restSnapshot(spark: SparkSession, schema: StructType)(
-      fetch: () => Seq[org.apache.spark.sql.Row]): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(fetch(), math.max(1, spark.sparkContext.defaultParallelism / 4)),
-      schema)
-
-  /** S9/S11: bulk append sink (parquet/csv/json by extension of use). */
+  /** S9/S11: bulk CSV sink. */
   def writeCsv(df: DataFrame, path: String, mode: SaveMode = SaveMode.Overwrite): Unit =
     df.write.mode(mode).option("header", "true").csv(path)
-
-  def writeJson(df: DataFrame, path: String, mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.write.mode(mode).json(path)
-
-  def writeParquet(df: DataFrame, path: String, mode: SaveMode = SaveMode.Overwrite,
-      partitionBy: Seq[String] = Seq.empty): Unit = {
-    val w = df.write.mode(mode)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path)
-  }
 
   /** S12: per-entity JSON documents, one directory partition per key
     * (`subjects/{gsid}/…` layout). */
@@ -337,7 +310,6 @@ object Sources {
       partitionCol: String,
       partitions: Seq[Any],
       basisVersion: Option[Long] = None): Unit = {
-    import org.apache.spark.sql.functions.col
     require(partitions.nonEmpty, "publishMergeReplace: empty partition list")
     // Same guard as publishMergeDeletes: replaced partitions are matched
     // against manifest dir segments by VALUE STRING, and Spark
@@ -1444,7 +1416,7 @@ object Sources {
 
   def indexBatchKeys(spark: SparkSession, tableDir: String, keyCol: String,
       fpp: Double = 0.01): Int = {
-    import org.apache.spark.sql.functions.{col, input_file_name, regexp_extract, when, lit}
+    import org.apache.spark.sql.functions.{col, when, lit}
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(tableDir), spark.sparkContext.hadoopConfiguration)
     val root = new org.apache.hadoop.fs.Path(tableDir)
@@ -1781,7 +1753,7 @@ object Sources {
     * watermark without opening a single parquet footer. Zone maps
     * have no false positives, so skipping is deterministic. */
   def indexBatchStats(spark: SparkSession, tableDir: String, statCol: String): Int = {
-    import org.apache.spark.sql.functions.{max => fmax, min => fmin, col, input_file_name, regexp_extract}
+    import org.apache.spark.sql.functions.{max => fmax, min => fmin, col}
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(tableDir), spark.sparkContext.hadoopConfiguration)
     val root = new org.apache.hadoop.fs.Path(tableDir)
@@ -2623,7 +2595,9 @@ object Sources {
     val root = new org.apache.hadoop.fs.Path(tableRoot)
     val (next, uid, vdir) =
       claimSnapshotVersion(fs, uri, root, tableRoot, basis)
-    writeSnapshotMember(df, uri, fs, s"$tableRoot/$vdir")
+    releaseClaimOnFailure(fs, uri, conf, root, next, uid, vdir) {
+      writeSnapshotMember(df, uri, fs, s"$tableRoot/$vdir")
+    }
     // atomic pointer swap: write a temp pointer, rename OVER the live
     // one. Neither step may leave a checksum sidecar: the FileSystem
     // API on a local FS is ChecksumFileSystem, whose create() writes a
@@ -2638,6 +2612,30 @@ object Sources {
     pruneSnapshotVersions(fs, root, next)
   }
 
+  /** Run a snapshot publish's member writes under its claim. A write
+    * that throws leaves the process knowing the claim is dead (unlike a
+    * crash): the unswapped version dir is deleted, then the
+    * `commit-<n>` marker is atomically rewritten to a content that is
+    * not a version dir name. That marks a burned number:
+    * [[snapshotClaimsAbovePointer]] ignores it, so the next publish
+    * need not wait out [[snapshotGraceMs]], and [[snapshotCommittedNum]]
+    * still counts it, so the number is never handed out again. The
+    * write's own exception is rethrown. */
+  private def releaseClaimOnFailure(fs: org.apache.hadoop.fs.FileSystem,
+      uri: java.net.URI, conf: org.apache.hadoop.conf.Configuration,
+      root: org.apache.hadoop.fs.Path, next: Long, uid: String, vdir: String)(
+      write: => Unit): Unit =
+    try write
+    catch {
+      case t: Throwable =>
+        try {
+          deleteQuiet(fs, new org.apache.hadoop.fs.Path(root, vdir), recursive = true)
+          atomicReplace(fs, uri, conf, root, f"$CommitPrefix$next%012d",
+            s"burned-$vdir", uid)
+        } catch { case scala.util.control.NonFatal(e) => t.addSuppressed(e) }
+        throw t
+    }
+
   /** Write one snapshot member into its still-unswapped version dir.
     * A local relation under [[graft.operators.DriverPath.DriverStoreBytes]]
     * is written from the driver as one parquet file through Spark's
@@ -2646,8 +2644,9 @@ object Sources {
     * through java.nio (Hadoop's local mkdirs forks a `chmod` per level
     * when the native library is not loaded). Anything else is a
     * `df.write`. Either way the pointer swap after it stays the only
-    * commit point: a failure here leaves an unswapped dir for the
-    * prune, as a crashed `df.write` does. */
+    * commit point: a failure here releases the claim
+    * ([[releaseClaimOnFailure]]); a crash leaves an unswapped dir for
+    * the prune. */
   private def writeSnapshotMember(df: DataFrame, uri: java.net.URI,
       fs: org.apache.hadoop.fs.FileSystem, dir: String): Unit =
     if (graft.operators.DriverPath.isLocal(df) && graft.operators.DriverPath.fits(df)) {
@@ -2751,23 +2750,25 @@ object Sources {
     val uri = new java.net.URI(tableRoot)
     val fs = org.apache.hadoop.fs.FileSystem.get(uri, conf)
     val root = new org.apache.hadoop.fs.Path(tableRoot)
-    val (next, uid, vdir) =
-      claimSnapshotVersion(fs, uri, root, tableRoot, basis)
     frames.foreach { case (member, _) =>
       require(member.nonEmpty && !member.contains("/"),
         s"member name must be a plain dir name, got '$member'")
     }
+    val (next, uid, vdir) =
+      claimSnapshotVersion(fs, uri, root, tableRoot, basis)
     // member writes are independent writes into disjoint dirs (jobs,
     // or driver writes for small local relations): run them
     // CONCURRENTLY on the shared family pool (guide §2.6 — the next
     // write's tasks back-fill executors freed by the current write's
     // tail; at gate scale the fixed per-write job overheads overlap).
     // Fail-fast like the sequential loop it replaces: any member's
-    // failure propagates before the swap, leaving an unswapped v-dir
-    // for the prune — the identical crash story.
-    graft.operators.IndexMaintenance.inParallel(frames) { case (member, df) =>
-      writeSnapshotMember(df, uri, fs, s"$tableRoot/$vdir/$member")
-    }: Unit
+    // failure propagates before the swap, once every in-flight member
+    // write has finished, and releases the claim.
+    releaseClaimOnFailure(fs, uri, conf, root, next, uid, vdir) {
+      graft.operators.IndexMaintenance.inParallel(frames) { case (member, df) =>
+        writeSnapshotMember(df, uri, fs, s"$tableRoot/$vdir/$member")
+      }: Unit
+    }
     swapSnapshotOrRefuse(fs, uri, conf, root, tableRoot, vdir, next, uid)
     pruneSnapshotVersions(fs, root, next)
   }

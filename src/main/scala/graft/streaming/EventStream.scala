@@ -119,20 +119,6 @@ object EventStream {
         graft.functions.Histograms.tvDistance(col("h"), col("hb")).as("tvd"))
       .filter(col("tvd") > threshold)
 
-  /** The LabKey-style incremental pull (`Modified > last_sync`,
-    * docs data-flow.md:496-523) as a batch filter. */
-  def incrementalSince(df: DataFrame, tsCol: String, lastSync: Timestamp): DataFrame =
-    df.filter(col(tsCol) > lit(lastSync))
-
-  /** [[incrementalSince]] against a raw INT64-nanos column (see
-    * `Tables.eventsWithRawTs`): the plain long comparison reaches the
-    * parquet scan as a pushed filter + row-group pruning, where a
-    * predicate on the derived timestamp cannot. */
-  def incrementalSinceNanos(df: DataFrame, nsCol: String, lastSync: Timestamp): DataFrame = {
-    val ns = lastSync.getTime * 1000000L + lastSync.getNanos % 1000000L
-    df.filter(col(nsCol) > lit(ns))
-  }
-
   /** Watermarked streaming dedup: keep the first occurrence of each
     * key (at-least-once ingestion → exactly-once downstream).
     * `dropDuplicatesWithinWatermark`, not `dropDuplicates(keys)`: with

@@ -52,7 +52,6 @@ object VerifyScale {
     val spark = graft.GraftSession.configure(
       SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
 
     val docs = Tables.documents(spark, sfDir).localCheckpoint(false)
     val li = Tables.lineitem(spark, sfDir)

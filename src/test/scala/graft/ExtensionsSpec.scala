@@ -1,9 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-import graft.catalog.RegistryCatalog
-
 class ExtensionsSpec extends SparkSpec {
 
   test("extension injection registers without error") {
@@ -132,91 +128,5 @@ class ExtensionsSpec extends SparkSpec {
       spark.sql("SELECT hist_fixed(v, 0.0, 10.0, v) FROM hist_in").collect()
     }
     assert(err.getMessage.contains("nBuckets"))
-  }
-}
-
-class CatalogSpec extends SparkSpec {
-  import spark.implicits._
-
-  test("bucketed registry join plans without an Exchange on the registry side") {
-    val localIds = Seq(
-      (3, "ID-1", "primary", "G1"),
-      (4, "ID-2", "primary", "G2"))
-      .toDF("center_id", "local_subject_id", "identifier_type", "global_subject_id")
-    val subjects = Seq(("G1", 3), ("G2", 4)).toDF("global_subject_id", "center_id")
-    RegistryCatalog.publish(spark, subjects, localIds, buckets = 4)
-
-    val candidates = Seq((1L, "id-1")).toDF("request_id", "local_subject_id")
-    // force a shuffle-worthy join (a broadcast join would bypass
-    // bucketing entirely on this tiny fixture)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val out = RegistryCatalog.matchCandidates(spark, candidates)
-      assert(out.collect().map(_.getAs[String]("global_subject_id")).toSeq == Seq("G1"))
-      // AQE prints Final + Initial plans; audit the final section only
-      val plan = out.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
-      // registry-side scan uses its buckets; the only Exchange belongs
-      // to the candidate side
-      assert(plan.contains("Bucketed: true"), plan.take(1500))
-      assert("Exchange hashpartitioning".r.findAllIn(plan).size == 1, plan.take(1500))
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-  }
-
-  test("resolve auto-routes a cataloged registry: no Exchange above the bucketed scan, same output") {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import graft.operators.IdentityResolver
-
-    val localIds = Seq(
-      (3, "ID-1", "primary", "G1"),
-      (4, "ID-2", "primary", "G2"))
-      .toDF("center_id", "local_subject_id", "identifier_type", "global_subject_id")
-    val subjects = Seq(
-      ("G1", 3, java.sql.Date.valueOf("2020-01-01")),
-      ("G2", 4, java.sql.Date.valueOf("2021-01-01")))
-      .toDF("global_subject_id", "center_id", "created_at")
-    RegistryCatalog.publish(spark, subjects, localIds, buckets = 4)
-
-    val batch = Seq(
-      (1L, 3, "id-1", "primary"),
-      (2L, 9, "never", "primary"))
-      .toDF("request_id", "center_id", "local_subject_id", "identifier_type")
-
-    val catReg = IdentityResolver.Registry(
-      RegistryCatalog.subjects(spark), RegistryCatalog.localIds(spark))
-    val plainReg = IdentityResolver.Registry(subjects, localIds)
-
-    val confs = Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.enabled" -> "false")
-    val prev = confs.map { case (k, _) => k -> spark.conf.get(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
-      // the bucketed route is the distributed path's (a two-row batch
-      // would otherwise resolve on the driver)
-      val out = IdentityResolver.resolveDistributed(batch, catReg,
-        deterministicMint = true, groupingIterations = 1)
-      val got = out.select("request_id", "action", "gsid").collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
-      // same output as the uncataloged lower(...) route
-      val want = IdentityResolver.resolveDistributed(batch, plainReg,
-          deterministicMint = true, groupingIterations = 1)
-        .select("request_id", "action", "gsid").collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
-      assert(got == want && got.exists(_._2 == "link_existing"))
-
-      // no shuffle anywhere above the bucketed local-ids scan (AQE off
-      // so the physical tree is directly walkable)
-      def hasRegistryScan(p: SparkPlan): Boolean = p.collectLeaves().exists {
-        case f: FileSourceScanExec =>
-          f.tableIdentifier.exists(_.table == RegistryCatalog.LocalIdsTable)
-        case _ => false
-      }
-      val offending = out.queryExecution.executedPlan.collect {
-        case e: ShuffleExchangeExec if hasRegistryScan(e.child) => e
-      }
-      assert(offending.isEmpty,
-        s"registry side reshuffled:\n${offending.headOption}")
-    } finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
   }
 }

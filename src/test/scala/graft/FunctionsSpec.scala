@@ -37,14 +37,12 @@ class CoercionsSpec extends SparkSpec {
     assert(run1(Coercions.toDoubleLenient($"x"), "x") == null)
   }
 
-  test("F4 boolean: lenient (false fallback) and strict (null fallback)") {
+  test("F4 boolean: lenient (false fallback, null only for null tokens)") {
     for (v <- Seq("true", "T", "yes", "Y", "1"))
       assert(run1(Coercions.toBooleanLenient($"x"), v) == true, v)
     for (v <- Seq("false", "f", "no", "N", "0", "garbage", "2"))
       assert(run1(Coercions.toBooleanLenient($"x"), v) == false, v)
     assert(run1(Coercions.toBooleanLenient($"x"), "NA") == null)
-    assert(run1(Coercions.toBooleanStrict($"x"), "garbage") == null)
-    assert(run1(Coercions.toBooleanStrict($"x"), "f") == false)
   }
 
   test("F5/F6 date and timestamp parsing, null on fail") {
@@ -236,24 +234,6 @@ class HistogramSpec extends SparkSpec {
       Seq("p50" -> 0.5, "p90" -> 0.9)).collect()(0)
     assert(q.getAs[Double]("p50") == 50.0)
     assert(q.getAs[Double]("p90") == 90.0)
-  }
-
-  test("incremental maintenance: stored + delta − retracted == full recompute") {
-    import org.apache.spark.sql.functions.col
-    def hist(d: org.apache.spark.sql.DataFrame) =
-      d.agg(Histograms.histFixed(col("v"), 0.0, 10.0, 4).as("h"))
-    val stored = (1 to 300).map(i => (i % 45).toDouble)
-    val delta = (1 to 80).map(i => (i % 37).toDouble + 0.5)
-    val retract = stored.take(60)                  // a compacted-away batch
-    val incremental = hist(stored.toDF("v")).select(col("h").as("ha"))
-      .crossJoin(hist(delta.toDF("v")).select(col("h").as("hd")))
-      .crossJoin(hist(retract.toDF("v")).select(col("h").as("hr")))
-      .select(Histograms.histSubtract(
-        Histograms.histMerge(col("ha"), col("hd")), col("hr")).as("h"))
-      .collect()(0).getSeq[Long](0)
-    val full = hist((stored.drop(60) ++ delta).toDF("v"))
-      .collect()(0).getSeq[Long](0)
-    assert(incremental == full)
   }
 
   test("drift: scale-free zero for same shape, TV=1 on disjoint support, exact midpoint") {

@@ -5,7 +5,6 @@ import java.sql.Date
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.catalog.RegistryCatalog
 import graft.sources.Sources
 import graft.operators.{DriverPath, IdentityResolver, IncrementalIdentity}
 import graft.operators.IdentityResolver.Registry
@@ -16,9 +15,9 @@ import graft.operators.IdentityResolver.Registry
   * IdentityRerunSpec and IncrementalIdentitySpec, plus numeric, string
   * and struct request ids, chains longer than the grouping depth,
   * fixpoint mode, multi-GSID and withdrawn subjects, center-0 upgrades,
-  * case variants, duplicate registry keys, null keys and a cataloged
-  * (`norm_id`) registry. The random mint is compared by structure: the
-  * same groups, each with one valid GSID. */
+  * case variants, duplicate registry keys and null keys. The random
+  * mint is compared by structure: the same groups, each with one valid
+  * GSID. */
 class IdentityDriverPathSpec extends DriverPathHarness {
   import spark.implicits._
   import IdentityResolver._
@@ -208,16 +207,6 @@ class IdentityDriverPathSpec extends DriverPathHarness {
       resolverReg.localIds.withColumn("center_id", col("center_id").cast("long")))
     same(cands(Seq((1L, 0, "Solo-1", "primary"), (2L, 5, "DUP-1", "primary"),
       (3L, 3, "n", "primary"))), longReg, 1)
-  }
-
-  test("a cataloged registry filters on norm_id, same rows as the plain registry") {
-    RegistryCatalog.publish(spark, messyReg.subjects, messyReg.localIds, buckets = 4)
-    val catReg = Registry(RegistryCatalog.subjects(spark), RegistryCatalog.localIds(spark))
-    val b = cands(Seq((1L, 3, "DUP", "primary"), (2L, 2, "case-x", "primary"),
-      (3L, 7, "new", "primary")))
-    same(b, catReg, 1)
-    assert(rowsOf(resolve(b, catReg, deterministicMint = true, groupingIterations = 1)) ==
-      rowsOf(resolve(b, messyReg, deterministicMint = true, groupingIterations = 1)))
   }
 
   test("an empty batch resolves to no rows under the same schema") {

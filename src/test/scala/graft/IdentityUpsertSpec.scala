@@ -343,17 +343,6 @@ class UpsertWriterSpec extends SparkSpec {
     assert(p.getLong(2) == 1L) // unchanged
   }
 
-  test("audit documents fold to canonical sorted JSONB shape") {
-    val current = Seq(("k1", "a1", "b1")).toDF("k", "b", "a")
-    val incoming = Seq(("k1", "a2", "b2")).toDF("k", "b", "a")
-    val r = UpsertWriter.merge(current, incoming, cfg, "t", "batch9")
-    val docs = UpsertWriter.auditDocuments(r.audit).collect()
-    assert(docs.length == 1)
-    assert(docs(0).getAs[String]("changes") ==
-      """{"a":{"old":"b1","new":"b2"},"b":{"old":"a1","new":"a2"}}""")
-    assert(docs(0).getAs[String]("batch_id") == "batch9")
-  }
-
   test("dimension get-or-create resolves existing and mints sequential ids") {
     val dim = Seq((1, "Mount Sinai"), (2, "Cedars")).toDF("center_id", "name")
     val incoming = Seq((10L, "mount_sinai"), (11L, "Brand New"), (12L, "Another New"),

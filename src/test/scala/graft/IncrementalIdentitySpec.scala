@@ -243,18 +243,37 @@ class IncrementalIdentitySpec extends SparkSpec {
       Seq("a" -> Seq((0, "seed")).toDF("k", "tag"), "b" -> Seq((0, "seed")).toDF("k", "tag")),
       root)
     val bad = new java.util.concurrent.atomic.AtomicInteger(0)
+    val consistent = new java.util.concurrent.atomic.AtomicInteger(0)
+    val publishing = new java.util.concurrent.atomic.AtomicBoolean(false)
     val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val readerFailure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    def vOf(p: String): Long = p.split("/v-").last.takeWhile(_.isDigit).toLong
     val reader = new Thread(() => {
-      while (!stop.get()) {
-        val m = Sources.readSnapshotGroupAll(spark, root, Seq("a", "b"))
-        val ta = m("a").collect()(0).getAs[String]("tag")
-        val tb = m("b").collect()(0).getAs[String]("tag")
-        // both members must come from ONE version — a mismatch means a
-        // reader observed a half-published group
-        if (ta != tb) bad.incrementAndGet()
-      }
+      try {
+        while (!stop.get()) {
+          val began = publishing.get()
+          // resolve first so a failed read can be judged against the
+          // retention contract: only a reader lagging 3+ versions behind
+          // the live pointer may see its version pruned mid-scan, and
+          // then it reads again; any other failure fails the test
+          val resolvedAtLeast = vOf(Sources.resolveSnapshot(spark, root))
+          try {
+            val m = Sources.readSnapshotGroupAll(spark, root, Seq("a", "b"))
+            val ta = m("a").collect()(0).getAs[String]("tag")
+            val tb = m("b").collect()(0).getAs[String]("tag")
+            // both members must come from ONE version — a mismatch means
+            // a reader observed a half-published group
+            if (ta != tb) bad.incrementAndGet()
+            else if (began) consistent.incrementAndGet()
+          } catch {
+            case _: Throwable
+                if vOf(Sources.resolveSnapshot(spark, root)) - resolvedAtLeast >= 3 => ()
+          }
+        }
+      } catch { case t: Throwable => readerFailure.set(t) }
     })
     reader.start()
+    publishing.set(true)
     // two publisher threads, interleaved tagged versions; r18 fully
     // serializes snapshot publishes (an in-flight rival's claim
     // refuses loudly instead of racing swaps), so each publish runs
@@ -275,8 +294,14 @@ class IncrementalIdentitySpec extends SparkSpec {
       }
     }))
     pubs.foreach(_.start()); pubs.foreach(_.join())
-    Thread.sleep(300)
+    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+    while (consistent.get() == 0 && readerFailure.get() == null &&
+        System.nanoTime() < deadline)
+      Thread.sleep(50)
     stop.set(true); reader.join()
+    Option(readerFailure.get()).foreach(t => fail(s"reader thread failed: $t", t))
+    assert(consistent.get() > 0,
+      "the reader completed no consistent read after publishing began")
     assert(bad.get() == 0, s"${bad.get()} mixed-version reads observed")
     // the surviving pointer names a complete version (both members)
     val m = Sources.readSnapshotGroupAll(spark, root, Seq("a", "b"))

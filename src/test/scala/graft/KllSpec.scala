@@ -145,7 +145,7 @@ class KllSpec extends SparkSpec {
     val states = Seq(a, b).map(part => part.toDF("v")
       .agg(Kll.kllSketch(col("v"), 4096).as("s")).collect()(0).getAs[Array[Byte]](0))
     val merged = states.map(Tuple1(_)).toDF("s")
-      .agg(Kll.kllMerge(col("s"), 4096, Seq(0.25, 0.5, 0.9)).as("q"))
+      .agg(Kll.kllMergeExact(col("s"), 4096, Seq(0.25, 0.5, 0.9)).as("q"))
       .collect()(0).getSeq[Double](0)
     assert(merged == direct)
     // compacted regime: weight is still conserved through store+merge

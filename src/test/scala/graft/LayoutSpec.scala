@@ -25,47 +25,4 @@ class LayoutSpec extends SparkSpec {
       .as[Long].collect().toSeq
     assert(out == Seq(1L, 2L, 4L, 8L, 63L))
   }
-
-  test("z-ordered layout shrinks per-file envelopes in BOTH dimensions vs linear sort") {
-    val orders = Tables.orders(spark, sf001)
-      .select(col("o_orderkey"), col("o_custkey"),
-        datediff(col("o_orderdate"), lit("1992-01-01")).as("o_day"))
-    val base = java.nio.file.Files.createTempDirectory("graft_layout").toString
-    val nFiles = 16
-
-    // linear sort clusters o_custkey perfectly and scatters o_day
-    orders.repartitionByRange(nFiles, col("o_custkey"))
-      .sortWithinPartitions("o_custkey")
-      .write.mode("overwrite").parquet(s"$base/linear")
-    Layout.writeZOrdered(orders, "o_custkey", "o_day", s"$base/zorder", nFiles)
-
-    // mean fraction of the global range a per-file [min,max] envelope
-    // spans = expected fraction of files a point predicate must read
-    def meanFrac(dir: String, vcol: String): Double = {
-      val df = spark.read.parquet(dir)
-      val Array(lo, hi) = df.agg(min(col(vcol)), max(col(vcol))).collect()(0)
-        .toSeq.map(_.toString.toDouble).toArray
-      val env = Layout.fileEnvelopes(df, vcol)
-        .agg(avg(col("hi").cast("double") - col("lo").cast("double")))
-        .collect()(0).getDouble(0)
-      env / (hi - lo)
-    }
-
-    val linCust = meanFrac(s"$base/linear", "o_custkey")
-    val linDay = meanFrac(s"$base/linear", "o_day")
-    val zCust = meanFrac(s"$base/zorder", "o_custkey")
-    val zDay = meanFrac(s"$base/zorder", "o_day")
-
-    // linear: near-perfect on the sort key, useless (~full range) on
-    // the other dimension
-    assert(linCust < 0.2, s"linear layout should cluster its sort key: $linCust")
-    assert(linDay > 0.8, s"linear layout scatters the second dim: $linDay")
-    // z-order: BOTH dimensions prunable — each envelope well under the
-    // full range, and the envelope AREA (product) far below linear's
-    assert(zCust < 0.6, s"z-order custkey envelope too wide: $zCust")
-    assert(zDay < 0.6, s"z-order day envelope too wide: $zDay")
-    assert(zCust * zDay < 0.5 * linCust * linDay ||
-      zCust * zDay < 0.25,
-      s"z-order area $zCust*$zDay should beat linear ${linCust * linDay}")
-  }
 }

@@ -54,16 +54,13 @@ class SchemaContractSpec extends SparkSpec {
           "than widening this contract.")
     }
 
-  test("eventsWithRawTs derives a long ts_ns axis in every layout") {
-    val df = Tables.eventsWithRawTs(spark, sf0001)
-    assert(df.schema("ts_ns").dataType.simpleString == "bigint")
-    assert(df.schema("ts").dataType.simpleString == "timestamp")
-  }
-
   test("eventsSince matches a post-hoc filter on the normalized ts") {
     val since = java.sql.Timestamp.valueOf("2024-01-20 00:00:00")
-    val viaScan = Tables.eventsSince(spark, sf0001, since)
-      .select("event_id").collect().map(_.getLong(0)).sorted.toSeq
+    val scan = Tables.eventsSince(spark, sf0001, since)
+    // a long ts_ns axis next to the normalized ts, in every layout
+    assert(scan.schema("ts_ns").dataType.simpleString == "bigint")
+    assert(scan.schema("ts").dataType.simpleString == "timestamp")
+    val viaScan = scan.select("event_id").collect().map(_.getLong(0)).sorted.toSeq
     val viaFilter = Tables.events(spark, sf0001)
       .filter(org.apache.spark.sql.functions.col("ts") > since)
       .select("event_id").collect().map(_.getLong(0)).sorted.toSeq

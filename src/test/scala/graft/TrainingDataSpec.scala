@@ -245,9 +245,6 @@ class DedupSpec extends SparkSpec {
     .toDF("doc_id", "text")
 
   test("exact duplicates found; first-wins keeps min id") {
-    val groups = Dedup.exactDuplicates(docs, "doc_id", "text").collect()
-    assert(groups.length == 1 && groups(0).getAs[Long]("keep_id") == 1L &&
-      groups(0).getAs[Long]("dup_count") == 2L)
     val kept = Dedup.dropExactDuplicates(docs, "doc_id", "text")
       .select("doc_id").collect().map(_.getLong(0)).sorted
     assert(kept.toSeq == Seq(1L, 3L, 4L, 5L))
@@ -469,8 +466,9 @@ class DedupSpec extends SparkSpec {
     val filtered = Dedup.minhashCandidates(sigN, 16, 1, sizeThreshold = 0.5)
     assert(filtered.count() < unfiltered.count(),
       "length filter never fired — the corpus no longer exercises it")
+    val sh = Dedup.shingles(skew, "doc_id", "text", 3)
     def verified(c: org.apache.spark.sql.DataFrame) =
-      Dedup.verifyPairs(skew, c, "doc_id", "text", 3, 0.5)
+      Dedup.verifyAgainstShingles(sh, c, 0.5)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val v = verified(unfiltered)
     assert(v.nonEmpty)
@@ -651,19 +649,6 @@ class VectorSpec extends SparkSpec {
     assert(recall(multi) > 0.5, s"multiprobe recall ${recall(multi)}")
   }
 
-  test("ivf with full probing equals brute force; partial probing finds the twin") {
-    val brute = SimilaritySearch.bruteForceTopK(vecs, vecs.filter($"vec_id" === 0), 4)
-      .collect().map(r => (r.getAs[Int]("rank"), r.getAs[Long]("neighbor_id"))).toSet
-    val full = SimilaritySearch.ivfTopK(vecs, vecs.filter($"vec_id" === 0), k = 4,
-        nLists = 2, nProbe = 2)
-      .collect().map(r => (r.getAs[Int]("rank"), r.getAs[Long]("neighbor_id"))).toSet
-    assert(full == brute)
-    val partial = SimilaritySearch.ivfTopK(vecs, vecs.filter($"vec_id" === 0), k = 2,
-        nLists = 2, nProbe = 1).collect()
-    assert(partial.exists(r => r.getAs[Long]("neighbor_id") == 1L &&
-      r.getAs[Double]("score") == 1.0))
-  }
-
   test("seeded ivf with full probing also equals brute force") {
     val brute = SimilaritySearch.bruteForceTopK(vecs, vecs.filter($"vec_id" === 0), 4)
       .collect().map(r => (r.getAs[Int]("rank"), r.getAs[Long]("neighbor_id"))).toSet
@@ -691,23 +676,6 @@ class VectorSpec extends SparkSpec {
     assert(adc.toSeq.sorted == Seq((1, 1L, 0.0), (2, 2L, 0.0), (3, 4L, 1.0), (4, 3L, 2.0)))
   }
 
-  test("IVF-PQ: full probe reproduces ADC ranking; nProbe=1 restricts to own list") {
-    val cbs = SimilaritySearch.pqCodebooks(vecs, Seq(0L, 3L), m = 2)
-    val adcFull = SimilaritySearch.pqTopK(vecs, vecs.filter($"vec_id" === 0), cbs, k = 4)
-      .collect().map(r => (r.getAs[Int]("rank"), r.getAs[Long]("neighbor_id"),
-        r.getAs[Double]("adc_dist"))).toSet
-    val ivfpqFull = SimilaritySearch.ivfPqTopK(vecs, vecs.filter($"vec_id" === 0), k = 4,
-        coarseIds = Seq(0L, 3L), pqIds = Seq(0L, 3L), m = 2, nProbe = 2)
-      .collect().map(r => (r.getAs[Int]("rank"), r.getAs[Long]("neighbor_id"),
-        r.getAs[Double]("adc_dist"))).toSet
-    assert(ivfpqFull == adcFull) // probing every list degrades to plain ADC
-    // nProbe=1: query 0 sees only its own coarse list {1, 2}
-    val own = SimilaritySearch.ivfPqTopK(vecs, vecs.filter($"vec_id" === 0), k = 4,
-        coarseIds = Seq(0L, 3L), pqIds = Seq(0L, 3L), m = 2, nProbe = 1)
-      .collect().map(_.getAs[Long]("neighbor_id")).toSet
-    assert(own == Set(1L, 2L))
-  }
-
   test("IVF-PQ index on disk: search matches in-memory, scan prunes to probed lists") {
     val dir = java.nio.file.Files.createTempDirectory("ivfpq").toString
     SimilaritySearch.writeIvfPqIndex(vecs, dir,
@@ -716,8 +684,9 @@ class VectorSpec extends SparkSpec {
         vecs.filter($"vec_id" === 0), k = 4, nProbe = 2)
       .collect().map(r => (r.getAs[Int]("rank"), r.getAs[Long]("neighbor_id"),
         r.getAs[Double]("adc_dist"))).toSet
-    val inMemory = SimilaritySearch.ivfPqTopK(vecs, vecs.filter($"vec_id" === 0), k = 4,
-        coarseIds = Seq(0L, 3L), pqIds = Seq(0L, 3L), m = 2, nProbe = 2)
+    // probing every list degrades to plain ADC over the same codebooks
+    val inMemory = SimilaritySearch.pqTopK(vecs, vecs.filter($"vec_id" === 0),
+        SimilaritySearch.pqCodebooks(vecs, Seq(0L, 3L), m = 2), k = 4)
       .collect().map(r => (r.getAs[Int]("rank"), r.getAs[Long]("neighbor_id"),
         r.getAs[Double]("adc_dist"))).toSet
     assert(fromIndex == inMemory)
@@ -858,12 +827,6 @@ class VectorSpec extends SparkSpec {
     val a = ids.select(Sampling.hashSplit($"doc_id").as("s")).collect().map(_.getString(0)).toSeq
     val b = ids.select(Sampling.hashSplit($"doc_id").as("s")).collect().map(_.getString(0)).toSeq
     assert(a == b)
-    // sampleByHash subset is stable under table growth
-    val small = Sampling.sampleByHash(ids.filter($"doc_id" < 500), "doc_id", 0.2)
-      .collect().map(_.getLong(0)).toSet
-    val big = Sampling.sampleByHash(ids, "doc_id", 0.2)
-      .collect().map(_.getLong(0)).toSet
-    assert(small == big.filter(_ < 500L))
   }
 
   test("temperature mix: tail domains upweighted, head capped, budget honored") {
@@ -1158,10 +1121,6 @@ class VectorSpec extends SparkSpec {
     val picks = Sampling.weightedSampleKPerStratum(few, "id", "w", "dom", 5)
       .collect().map(_.getLong(0)).toSet
     assert(picks == Set(1L, 2L, 3L))
-    // the global variant agrees with the windowed one on a single stratum
-    val g = Sampling.weightedSampleK(df.filter($"dom" === "a"), "id", "w", 5)
-      .collect().map(_.getLong(0)).toSet
-    assert(g == out.filter(_._1 == "a").map(_._2).toSet)
   }
 
   test("rrf fusion: exact reciprocal-rank scores, absent lists contribute zero, k cut") {

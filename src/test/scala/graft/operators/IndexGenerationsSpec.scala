@@ -116,7 +116,7 @@ class IndexGenerationsSpec extends SparkSpec {
     // (codes/centroids/codebooks/drift — pre-r16 they leaked forever)
     val gen2 = SimilaritySearch.retrainIvfPqIndex(spark, dir, finalCorpus,
       Seq(8L, 9L, 10L, 11L), Seq(14L, 15L, 16L, 17L), m = 4)
-    assert(SimilaritySearch.vacuumIvfPqGenerations(spark, dir) == 5)
+    assert(IndexGenerations.vacuum(spark, dir) == 5)
     assert(IndexGenerations.resolve(spark, dir) == gen2)
     assert(searchOf(dir).nonEmpty)
     assert(!new java.io.File(dir, "codes").exists(),
@@ -143,7 +143,7 @@ class IndexGenerationsSpec extends SparkSpec {
     Seq("codes", "centroids", "codebooks", "drift", "tombstones")
       .map(new java.io.File(dir, _)).filter(_.exists())
       .foreach(f => assert(f.setLastModified(aged)))
-    SimilaritySearch.vacuumIvfPqGenerations(spark, dir,
+    IndexGenerations.vacuum(spark, dir,
       graceMs = 3600L * 1000): Unit
     assert(new java.io.File(inflight).exists(),
       "in-flight rebuild dir deleted by vacuum")
@@ -157,7 +157,7 @@ class IndexGenerationsSpec extends SparkSpec {
       0L until 4L, 0L until 4L, m = 4): Unit
     assert(new java.io.File(dir, "_gen").setLastModified(aged))
     // gen1 is now superseded but its own mtime is fresh → spared
-    assert(SimilaritySearch.vacuumIvfPqGenerations(spark, dir,
+    assert(IndexGenerations.vacuum(spark, dir,
       graceMs = 3600L * 1000) == 0)
     assert(new java.io.File(gen1).exists(),
       "fresh-mtime superseded gen deleted inside its own grace")
@@ -229,10 +229,10 @@ class IndexGenerationsSpec extends SparkSpec {
 
     // one live gen; the first vacuum reclaims the 6 superseded
     // plain-layout dirs (postings/forward/doclen/stats/meta/tombstones)
-    assert(LexicalIndex.vacuumBm25Generations(spark, dir) == 6)
+    assert(IndexGenerations.vacuum(spark, dir) == 6)
     val gen2 = LexicalIndex.rebuildBm25Index(spark, dir,
       purged.filter(col("doc_id") =!= 2L), nBuckets = 4)
-    assert(LexicalIndex.vacuumBm25Generations(spark, dir) == 1)
+    assert(IndexGenerations.vacuum(spark, dir) == 1)
     assert(IndexGenerations.resolve(spark, dir) == gen2)
     assert(search(dir) == after)
   }

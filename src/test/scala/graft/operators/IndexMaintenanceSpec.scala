@@ -109,15 +109,13 @@ class IndexMaintenanceSpec extends SparkSpec {
     assert(codes(dir) == codes(reb))
   }
 
-  test("family health rollup: per-partition generations/tombstones in one call; routed applies land in parallel (VERDICT r16 #5/#7)") {
+  test("routed applies land in parallel on every partition; per-partition health is exact (VERDICT r16 #5)") {
     val root = freshDir() + "/fam"
     val docs = (1L to 30L).map { i =>
       (i, s"term$i spark family doc$i", if (i % 3 == 0) "de" else if (i % 3 == 1) "en" else "fr")
     }.toDF("doc_id", "text", "lang")
     val segs = LexicalIndex.writePartitionedBm25Index(docs, root, "lang", nBuckets = 4)
     assert(segs.toSet == Set("lang=en", "lang=de", "lang=fr"))
-    assert(IndexMaintenance.familySegments(spark, root, "lang") ==
-      Seq("lang=de", "lang=en", "lang=fr"))
 
     // a routed delta touching every partition (the full-fan-out shape
     // the family pool exists for): one apply per partition, in parallel
@@ -129,52 +127,18 @@ class IndexMaintenanceSpec extends SparkSpec {
       spark, root, "lang", delta, mode = "append")
     assert(applied.keySet == Set("lang=en", "lang=de", "lang=fr"))
 
-    // rollup: listing-only by default (tombstoneRows = -1, no count
-    // job), every other field exact per partition
-    val h = IndexMaintenance.familyHealth(spark, root, "lang",
-      Seq("postings" -> "_b", "forward" -> "_db", "doclen" -> "_db")).toMap
-    assert(h.keySet == Set("lang=en", "lang=de", "lang=fr"))
-    assert(h.values.forall(_.tombstoneRows == -1L))
+    // each partition's live generation: exact generations and tombstones
+    val h = segs.map(seg => seg -> IndexMaintenance.health(spark,
+      IndexGenerations.resolve(spark, s"$root/$seg"),
+      Seq("postings" -> "_b", "forward" -> "_db", "doclen" -> "_db"))).toMap
     assert(h("lang=en").maxGenerations == 2) // base + 1 apply
     assert(h("lang=de").maxGenerations == 2)
     // fr's change was a pure retraction: tombstone only, no new postings
     assert(h("lang=fr").maxGenerations == 1)
     assert(h("lang=fr").tombstoneSegments == 1)
     assert(h("lang=fr").tombstoneBytes > 0L)
-
-    // counted rollup: exact kill-set sizes per partition — and ONE
-    // Spark job at full fan-out (r18, VERDICT r17 #4: the per-partition
-    // count job design was 4096 jobs at the family cap). AQE off for
-    // the assertion so stage materialization doesn't split the one
-    // action into per-stage jobs.
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(): Unit
-      }
-    }
-    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.sparkContext.addSparkListener(listener)
-    val hc =
-      try {
-        val r = IndexMaintenance.familyHealth(spark, root, "lang",
-          Seq("postings" -> "_b"), countTombstoneRows = true).toMap
-        graft.QueryMetrics.drain(spark)
-        r
-      } finally {
-        spark.sparkContext.removeSparkListener(listener)
-        spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      }
-    // one count action; parquet footer/schema inference may add one
-    // constant job — the pre-r18 design ran one count job PER
-    // partition (plus its per-read inference), O(partitions)
-    assert(jobs.get() <= 2,
-      s"counted familyHealth ran ${jobs.get()} Spark jobs (want <= 2, " +
-        "independent of partition count)")
-    assert(hc("lang=fr").tombstoneRows == 1L)
-    assert(hc("lang=en").tombstoneRows == 1L) // 'new' tombstones its own id
+    assert(h("lang=fr").tombstoneRows == 1L)
+    assert(h("lang=en").tombstoneRows == 1L) // 'new' tombstones its own id
     // parallel applies produced the same search results as the routed
     // semantics promise: partitioned search over en equals a fresh
     // index over the en slice

@@ -120,17 +120,18 @@ class DriverWriteSpec extends DriverPathHarness {
     def versionDirs(): Set[String] =
       root.listFiles().map(_.getName).filter(_.startsWith("v-")).toSet
     val liveDir = new java.io.File(Sources.resolveSnapshot(spark, dir)).getName
-    val unswapped = versionDirs() - liveDir
-    assert(unswapped.size == 1, s"${versionDirs()}")
-    // the failed member's partial file is gone; its finished sibling
-    // sits in the unswapped dir, which no reader resolves
-    val failed = new java.io.File(root, s"${unswapped.head}/q")
-    assert(Option(failed.listFiles()).toSeq.flatten.forall(!_.getName.endsWith(".parquet")))
-    sys.props("graft.snapshot.graceMs") = "0"
-    try {
-      Sources.publishSnapshotGroup(Seq("p" -> Seq(3).toDF("x"), "q" -> Seq("c").toDF("y")), dir)
-      assert(live() == (Seq(3), Seq("c")))
-      assert(!versionDirs().contains(unswapped.head), s"${versionDirs()}")
-    } finally sys.props.remove("graft.snapshot.graceMs"): Unit
+    // the failed publish released its claim: its version dir (with the
+    // failed member's partial file and its finished sibling) is gone,
+    // and its commit-2 marker names no version dir, a burned number
+    assert(versionDirs() == Set(liveDir), s"${versionDirs()}")
+    val marker = new java.io.File(root, "commit-000000000002")
+    assert(!Files.readString(marker.toPath).trim.startsWith("v-"))
+    // so the next publish lands at once under the default grace, and
+    // the burned number is not handed out again
+    Sources.publishSnapshotGroup(Seq("p" -> Seq(3).toDF("x"), "q" -> Seq("c").toDF("y")), dir)
+    assert(live() == (Seq(3), Seq("c")))
+    assert(new java.io.File(Sources.resolveSnapshot(spark, dir)).getName
+      .startsWith("v-000000000003-"))
+    assert(versionDirs().size == 2, s"${versionDirs()}")
   }
 }

@@ -187,14 +187,12 @@ class MergePruneSpec extends SparkSpec {
     assert(e2b.getMessage.contains("empty-string partition value"), e2b.getMessage)
     // touched-partition cardinality above the bound = table rewrite in
     // disguise — refused before any driver-side materialization
-    System.setProperty("graft.merge.maxTouchedPartitions", "2")
-    try {
-      val e3 = intercept[IllegalArgumentException] {
-        Sources.publishMergeDeletes(spark, dir,
-          Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "p"), cfg, "p")
-      }
-      assert(e3.getMessage.contains("targeted"), e3.getMessage)
-    } finally System.clearProperty("graft.merge.maxTouchedPartitions")
+    val e3 = intercept[IllegalArgumentException] {
+      Sources.publishMergeDeletes(spark, dir,
+        spark.range(Sources.MaxTouchedPartitions + 1)
+          .select($"id", $"id".cast("string").as("p")), cfg, "p")
+    }
+    assert(e3.getMessage.contains("targeted"), e3.getMessage)
     // the table is untouched by all three refusals
     assert(Sources.readMergePartitioned(spark, dir, "p")
       .select("id").as[Long].collect().toSet == Set(1L, 2L, 3L))
