@@ -16,17 +16,15 @@ import org.apache.spark.sql.SparkSession
   *
   * So a rebuild is a new GENERATION: the full index layout (codes +
   * quantizers + stats + its own fresh tombstone log) is built complete
-  * and cold in `<dir>/gen-<n>-<uid>/`, then ONE control file (`_gen`,
-  * the same tmp-write + atomic-rename-over discipline as the merge
-  * tables' `_current` pointer — [[graft.sources.Sources.atomicReplace]])
-  * is swapped to name it. Every reader and every maintenance entry
-  * point resolves the pointer first, so the swap is atomic for all of
-  * them: a reader mid-search keeps the OLD generation (untouched until
-  * [[vacuum]]), the next resolve gets the new one, and incremental
-  * maintenance simply continues against whichever generation it
-  * resolved. A directory with no pointer IS its own generation (the
-  * legacy/plain layout), which keeps every pre-generation index
-  * readable unchanged.
+  * and cold in `<dir>/gen-<n>-<uid>/`, then ONE swap claim
+  * (`genswap-<k>`, an atomic put-if-absent naming it — the primitive
+  * the merge tables' `commit-<n>` markers use) makes it live. Every
+  * reader and every maintenance entry point resolves the claims first,
+  * so the swap is atomic for all of them: a reader mid-search keeps the
+  * OLD generation (untouched until [[vacuum]]), the next resolve gets
+  * the new one, and incremental maintenance simply continues against
+  * whichever generation it resolved. A directory with no claim IS its
+  * own generation (the plain layout an initial build writes).
   *
   * Writer discipline: generation builds write only their own cold
   * subdir, so a rebuild may overlap live SEARCHES freely. It must not
@@ -40,15 +38,16 @@ import org.apache.spark.sql.SparkSession
   * contract). */
 private[graft] object IndexGenerations {
 
-  private val PointerName = "_gen"
   private val GenPrefix = "gen-"
   /** Dense swap-claim markers (r18): `genswap-<k>` files whose content
-    * is a generation dir name. The AUTHORITATIVE pointer is the claim
-    * set, resolved by highest GENERATION number among claim contents
-    * (generation numbers are monotonic via [[next]]); `_gen` remains a
-    * best-effort mirror for legacy layouts, hand-crafted nests, and
-    * vacuum's swap-age stamp. */
+    * is a generation dir name. The live generation is the claimed one
+    * with the highest GENERATION number (generation numbers are
+    * monotonic via [[next]]). */
   private val SwapPrefix = "genswap-"
+  /** The control file the pre-r18 swap renamed into place. It is no
+    * longer written or read; a root holding it without any claim is
+    * refused ([[swapClaims]]). */
+  private val PreClaimPointer = "_gen"
 
   private def fsOf(spark: SparkSession, d: String) =
     org.apache.hadoop.fs.FileSystem.get(
@@ -59,109 +58,92 @@ private[graft] object IndexGenerations {
     if (d.isEmpty) 0L else d.toLong
   }
 
-  /** Swap-claim markers under `root`: (slot k, generation name),
-    * invalid contents dropped. One listing. */
+  /** One swap claim: its slot k, the generation it names ("" when
+    * unreadable) and the marker's status (its mtime is the swap time). */
+  private final case class Claim(slot: Long, gen: String,
+      status: org.apache.hadoop.fs.FileStatus) {
+    def valid: Boolean =
+      gen.startsWith(GenPrefix) && !gen.contains("/") && !gen.contains("..")
+  }
+
+  /** The swap claims in a listing of an index root. A root that holds
+    * the pre-claim `_gen` pointer but no claim was written by a swap
+    * this code no longer reads: refused loudly instead of being served
+    * as a plain layout. */
   private def swapClaims(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Seq[(Long, String)] =
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq.collect {
+      root: org.apache.hadoop.fs.Path,
+      listing: Seq[org.apache.hadoop.fs.FileStatus]): Seq[Claim] = {
+    val claims = listing.collect {
       case st if st.isFile && st.getPath.getName.startsWith(SwapPrefix) =>
         val k = st.getPath.getName.drop(SwapPrefix.length).takeWhile(_.isDigit)
-        val content =
-          try {
-            val in = fs.open(st.getPath)
-            try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-            finally in.close()
-          } catch { case _: java.io.IOException => "" }
-        (if (k.isEmpty) 0L else k.toLong, content)
-    }.filter { case (_, g) =>
-      g.startsWith(GenPrefix) && !g.contains("/") && !g.contains("..")
+        Claim(if (k.isEmpty) 0L else k.toLong,
+          graft.sources.Sources.readControlQuiet(fs, st.getPath), st)
     }
-
-  /** ONE level of pointer resolution: the gen name the claim set (by
-    * highest generation number — claim ORDER is irrelevant, so a stale
-    * claim landing late can never shadow a newer generation) or, with
-    * no claims, the `_gen` file names. None = plain layout. */
-  private def pointeeOf(fs: org.apache.hadoop.fs.FileSystem,
-      cur: String): Option[String] = {
-    val root = new org.apache.hadoop.fs.Path(cur)
-    val claims = swapClaims(fs, root)
-    if (claims.nonEmpty) Some(claims.maxBy { case (k, g) => (genNumOf(g), k) }._2)
-    else {
-      val p = new org.apache.hadoop.fs.Path(root, PointerName)
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val name =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-          finally in.close()
-        require(name.nonEmpty && !name.contains("/") && !name.contains(".."),
-          s"index generation pointer $p names an invalid generation '$name'")
-        Some(name)
-      }
-    }
+    if (claims.isEmpty && listing.exists(_.getPath.getName == PreClaimPointer))
+      throw new IllegalStateException(
+        s"index root $root holds a $PreClaimPointer pointer but no " +
+          s"$SwapPrefix* claim — a pre-claim generation layout this " +
+          "version cannot resolve; rebuild the index")
+    claims
   }
 
-  /** The live generation dir: the pointee (swap-claim set, else `_gen`
-    * pointer) when present, else `dir` itself (plain / pre-generation
-    * layout). Resolution is RECURSIVE: if a caller mistakenly rebuilt
-    * against a generation dir instead of the logical root (creating a
-    * nested pointer inside a `gen-*` dir), readers addressing the root
-    * still converge
-    * on the newest data instead of silently serving the stale middle
-    * generation. Bounded so a pointer cycle (hand-edited control
-    * files) fails loudly instead of spinning. */
+  private def listing(fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
+    if (!fs.exists(root)) Seq.empty else fs.listStatus(root).toSeq
+
+  /** The live generation's claim: among valid claims, the highest
+    * generation number — claim ORDER is irrelevant, so a stale claim
+    * landing late can never shadow a newer generation. None = plain
+    * layout. */
+  private def liveClaim(claims: Seq[Claim]): Option[Claim] =
+    claims.filter(_.valid).maxByOption(c => (genNumOf(c.gen), c.slot))
+
+  /** The live generation dir: the one the swap claims name, else `dir`
+    * itself (a plain layout, as an initial build writes it). */
   def resolve(spark: SparkSession, dir: String): String = {
     val fs = fsOf(spark, dir)
-    var cur = dir
-    var hops = 0
-    while (hops < 16) {
-      pointeeOf(fs, cur) match {
-        case None => return cur
-        case Some(name) =>
-          val gen = new org.apache.hadoop.fs.Path(cur, name)
-          require(fs.exists(gen),
-            s"index generation pointer under $cur names $name, which does " +
-              "not exist — vacuumed too eagerly?")
-          cur = gen.toString
-          hops += 1
-      }
+    val root = new org.apache.hadoop.fs.Path(dir)
+    liveClaim(swapClaims(fs, root, listing(fs, root))) match {
+      case None => dir
+      case Some(c) =>
+        val gen = new org.apache.hadoop.fs.Path(root, c.gen)
+        require(fs.exists(gen),
+          s"index generation claim under $dir names ${c.gen}, which does " +
+            "not exist — vacuumed too eagerly?")
+        gen.toString
     }
-    throw new IllegalStateException(
-      s"index generation pointers under $dir nest deeper than 16 levels — " +
-        "pointer cycle or rebuilds addressed at generation dirs; " +
-        "address the logical index root instead")
   }
+
+  private def requireLogicalRoot(dir: String): Unit =
+    require(!new org.apache.hadoop.fs.Path(dir).getName.startsWith(GenPrefix),
+      s"$dir is itself a generation dir — rebuild/retrain against the " +
+        "logical index root (the dir holding the generation claims), not " +
+        "the generation it currently resolves to")
 
   /** Path for the next generation build (monotonic over live gen dirs;
     * uid suffix keeps racing builders from colliding on a dir). The
     * caller builds the full layout there, then [[swap]]s. */
   def next(spark: SparkSession, dir: String): String = {
+    requireLogicalRoot(dir)
     val fs = fsOf(spark, dir)
     val root = new org.apache.hadoop.fs.Path(dir)
-    require(!root.getName.startsWith(GenPrefix),
-      s"$dir is itself a generation dir — rebuild/retrain against the " +
-        "logical index root (the dir holding the _gen pointer), not the " +
-        "generation it currently resolves to")
-    val n =
-      if (!fs.exists(root)) 1L
-      else fs.listStatus(root).toSeq.collect {
-        case st if st.isDirectory && st.getPath.getName.startsWith(GenPrefix) =>
-          val num = st.getPath.getName.drop(GenPrefix.length).takeWhile(_.isDigit)
-          if (num.isEmpty) 0L else num.toLong
-      }.foldLeft(0L)(math.max) + 1L
+    val n = listing(fs, root).collect {
+      case st if st.isDirectory && st.getPath.getName.startsWith(GenPrefix) =>
+        genNumOf(st.getPath.getName)
+    }.foldLeft(0L)(math.max) + 1L
     val uid = java.util.UUID.randomUUID().toString.take(8)
     new org.apache.hadoop.fs.Path(root, s"$GenPrefix$n-$uid").toString
   }
 
   /** Atomically point the index at a fully-built generation dir
-    * (must be a direct child of `dir`, as [[next]] returns).
+    * (must be a direct child of `dir`, as [[next]] returns; `dir`
+    * itself must not be a generation dir).
     *
     * A STALE SWAP GENUINELY CANNOT LAND (r18 — the r17 read-then-
     * rename forward check left the check-to-rename window, so two
     * truly concurrent swaps could still regress the pointer). The
-    * swap is now a dense-claim commit, the same createExclusive
-    * primitive the merge tables serialize on:
+    * swap is a dense-claim commit, the same createExclusive primitive
+    * the merge tables serialize on:
     *
     *  1. refuse-if-stale pre-check: the resolved live generation is
     *     already newer → `ConcurrentModificationException`;
@@ -175,11 +157,10 @@ private[graft] object IndexGenerations {
     * Readers resolve the claim set by highest GENERATION number, not
     * by slot or rename order, so even a stale claim that lands in the
     * verify window (its owner crashing mid-swap) can never shadow a
-    *     newer generation — regression is impossible by construction,
-    * not merely unlikely. The `_gen` file remains as a best-effort
-    * mirror: legacy readers, hand-crafted nested layouts, and
-    * [[vacuum]]'s swap-age stamp. */
+    * newer generation — regression is impossible by construction, not
+    * merely unlikely. The claim is the whole commit. */
   def swap(spark: SparkSession, dir: String, genDir: String): Unit = {
+    requireLogicalRoot(dir)
     val root = new org.apache.hadoop.fs.Path(dir)
     val gen = new org.apache.hadoop.fs.Path(genDir)
     require(gen.getParent != null &&
@@ -191,27 +172,17 @@ private[graft] object IndexGenerations {
       s"generation $genDir does not exist — build it before swapping")
     val uri = new java.net.URI(dir)
     val myNum = genNumOf(gen.getName)
-    def newestClaimed(): Option[String] = {
-      val claims = swapClaims(fs, root)
-      if (claims.isEmpty) {
-        val p = new org.apache.hadoop.fs.Path(root, PointerName)
-        if (!fs.exists(p)) None
-        else {
-          val in = fs.open(p)
-          Some(try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-               finally in.close())
-        }
-      } else Some(claims.maxBy { case (k, g) => (genNumOf(g), k) }._2)
-    }
-    def refuseIfStale(): Unit = newestClaimed().foreach { live =>
-      if (live.startsWith(GenPrefix) && genNumOf(live) > myNum)
+    def claims(): Seq[Claim] = swapClaims(fs, root, listing(fs, root))
+    def refuseIfStale(cs: Seq[Claim]): Unit = liveClaim(cs).foreach { live =>
+      if (genNumOf(live.gen) > myNum)
         throw new java.util.ConcurrentModificationException(
-          s"index generation swap on $dir: the pointer already names $live " +
+          s"index generation swap on $dir: the claims already name ${live.gen} " +
             s"(newer than ${gen.getName}) — a rival rebuild finished first; " +
             "this build is stale, rebuild from the current corpus instead " +
             "of regressing readers to it")
     }
-    refuseIfStale()
+    var cs = claims()
+    refuseIfStale(cs)
     var attempts = 0
     var claimed = false
     while (!claimed) {
@@ -219,39 +190,34 @@ private[graft] object IndexGenerations {
       if (attempts > 20) throw new IllegalStateException(
         s"index generation swap on $dir lost ${attempts - 1} consecutive " +
           "slot claims — pathological swap contention; back off and retry")
-      val k = (swapClaims(fs, root).map(_._1) :+ 0L).max + 1
+      val k = (cs.map(_.slot) :+ 0L).max + 1
       claimed = graft.sources.Sources.createExclusiveClaim(fs, uri,
         new org.apache.hadoop.fs.Path(root, f"$SwapPrefix$k%012d"),
         gen.getName)
-      if (!claimed) refuseIfStale()
+      // post-claim verify (and the lost-slot re-check): a rival that
+      // landed since the pre-check is visible now; a won claim that
+      // turns out stale stays but is never resolved
+      cs = claims()
+      refuseIfStale(cs)
     }
-    // post-claim verify: a rival landing between the pre-check and the
-    // claim is visible now; my inert claim stays but is never resolved
-    refuseIfStale()
-    // legacy mirror + vacuum's swap-age stamp (best-effort: readers do
-    // not depend on it once a claim exists)
-    val stamp = java.util.UUID.randomUUID().toString.take(8)
-    graft.sources.Sources.atomicReplace(fs, uri,
-      spark.sparkContext.hadoopConfiguration, root, PointerName,
-      gen.getName, stamp)
   }
 
   /** Root-level table dirs a plain (pre-generation) index layout may
     * hold — the union of the IVF-PQ and BM25 layouts plus the
-    * tombstone log. Once a `_gen` pointer exists these are by
-    * definition superseded (the first swap replaced the whole
-    * layout), so [[vacuum]] may reclaim them; before r16 they leaked
-    * forever after the first rebuild of a plain index. */
+    * tombstone log. Once a swap claim exists these are by definition
+    * superseded (the first swap replaced the whole layout), so
+    * [[vacuum]] may reclaim them; before r16 they leaked forever after
+    * the first rebuild of a plain index. */
   private val PlainLayoutDirs = Set(
     "codes", "centroids", "codebooks", "drift", // IVF-PQ
     "postings", "forward", "doclen", "stats", "meta", // BM25
     "tombstones")
 
-  /** Delete superseded index state: `gen-*` dirs the pointer does not
-    * name, the plain-layout table dirs the first swap superseded, and
-    * stale `_gen.tmp-*` files a crashed swap left behind. No-op on a
-    * plain layout (no pointer → nothing is superseded). Returns dirs
-    * deleted (tmp files not counted).
+  /** Delete superseded index state: `gen-*` dirs the claims do not
+    * name as live, the plain-layout table dirs the first swap
+    * superseded, and swap claims naming an older generation. No-op on
+    * a plain layout (no claim → nothing is superseded). Returns dirs
+    * deleted (claim files not counted).
     *
     * Two classes of gen dir are NEVER deleted regardless of age:
     * the live generation, and any generation NUMBERED at or above it.
@@ -265,56 +231,39 @@ private[graft] object IndexGenerations {
     * number can.
     *
     * `graceMs` is the reader grace period: a superseded candidate is
-    * deleted only when BOTH the last swap (the `_gen` pointer's
-    * mtime) and the candidate's own mtime are `graceMs` in the past —
-    * any reader that resolved before the swap has had `graceMs` to
-    * finish its scan, and a dir whose own mtime is fresh is still
-    * being written by someone. `0` keeps the legacy eager behavior
-    * (caller asserts no in-flight readers). */
+    * deleted only when BOTH the last swap (the live generation's claim
+    * marker mtime) and the candidate's own mtime are `graceMs` in the
+    * past — any reader that resolved before the swap has had `graceMs`
+    * to finish its scan, and a dir whose own mtime is fresh is still
+    * being written by someone. `0` deletes eagerly (caller asserts no
+    * in-flight readers). */
   def vacuum(spark: SparkSession, dir: String, graceMs: Long = 0L): Int = {
     val fs = fsOf(spark, dir)
     val root = new org.apache.hadoop.fs.Path(dir)
-    // resolve ONE level here, not recursively: a nested generation's
-    // children belong to that generation's own vacuum pass.
-    val live = pointeeOf(fs, root.toString).getOrElse { return 0 }
-    val ptr = new org.apache.hadoop.fs.Path(dir, PointerName)
+    val sts = listing(fs, root)
+    val claims = swapClaims(fs, root, sts)
+    val live = liveClaim(claims).getOrElse { return 0 }
     val now = System.currentTimeMillis()
-    // swap-age stamp: the mirror's mtime; with claims but no mirror
-    // (a swap crashed between its claim and the mirror write) fall
-    // back to the newest claim marker's mtime
-    val swapAge = now - (
-      if (fs.exists(ptr)) fs.getFileStatus(ptr).getModificationTime
-      else fs.listStatus(root).toSeq
-        .filter(st => st.isFile && st.getPath.getName.startsWith(SwapPrefix))
-        .map(_.getModificationTime).foldLeft(0L)(math.max))
-    val liveNum = genNumOf(live)
+    val swapAge = now - live.status.getModificationTime
+    val liveNum = genNumOf(live.gen)
+    // superseded swap claims: any claim naming a generation older than
+    // live is inert (resolution is by max gen number) — only marker
+    // litter. The live generation's claim(s) stay.
+    claims.foreach { c =>
+      if ((!c.valid || genNumOf(c.gen) < liveNum) &&
+          now - c.status.getModificationTime >= graceMs)
+        fs.delete(c.status.getPath, false): Unit
+    }
     var deleted = 0
-    fs.listStatus(root).toSeq.foreach { st =>
+    sts.foreach { st =>
       val name = st.getPath.getName
       val age = now - st.getModificationTime
-      if (st.isDirectory && name.startsWith(GenPrefix) && name != live &&
+      if (st.isDirectory && name.startsWith(GenPrefix) && name != live.gen &&
           genNumOf(name) < liveNum && swapAge >= graceMs && age >= graceMs) {
         fs.delete(st.getPath, true); deleted += 1
       } else if (st.isDirectory && PlainLayoutDirs.contains(name) &&
           swapAge >= graceMs && age >= graceMs) {
         fs.delete(st.getPath, true); deleted += 1
-      } else if (st.isFile && name.startsWith(s"$PointerName.tmp-") &&
-          age >= graceMs) {
-        // a completed swap renames its tmp away within milliseconds;
-        // one still here past the grace period is a crashed swap's
-        fs.delete(st.getPath, false): Unit
-      } else if (st.isFile && name.startsWith(SwapPrefix) && age >= graceMs) {
-        // superseded swap claims: any claim naming a generation older
-        // than live is inert (resolution is by max gen number) — only
-        // marker litter. The live generation's claim(s) stay.
-        val content =
-          try {
-            val in = fs.open(st.getPath)
-            try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-            finally in.close()
-          } catch { case _: java.io.IOException => "" }
-        if (!content.startsWith(GenPrefix) || genNumOf(content) < liveNum)
-          fs.delete(st.getPath, false): Unit
       }
     }
     deleted

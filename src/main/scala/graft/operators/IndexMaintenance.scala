@@ -73,7 +73,7 @@ object IndexMaintenance {
     * [[IndexGenerations.vacuum]] run from the same maintenance loop as
     * the compaction trigger, so "vacuum sometimes" is code, not a
     * runbook. `rootDir` is the LOGICAL index root (the dir holding the
-    * `_gen` pointer), not the live generation. Listing-only; deletes
+    * `genswap-*` claims), not the live generation. Listing-only; deletes
     * nothing until the last swap is `generationGraceMs` old, so any
     * reader that resolved before the swap has had the grace period to
     * finish. Returns dirs reclaimed (0 on plain / freshly-swapped
@@ -114,9 +114,9 @@ object IndexMaintenance {
   /** Shared daemon pool behind [[inParallel]]: a cached executor, so
     * the partitioned streaming sinks (one family call per micro-batch)
     * reuse threads instead of building and tearing down a fixed pool
-    * per batch. Only `parallelism` workers are ever submitted per
-    * call, so the pool's live thread count is bounded by the busiest
-    * concurrent callers, never by item count. */
+    * per batch. At most [[FamilyApplyParallelism]] workers are
+    * submitted per call, so the pool's live thread count is bounded by
+    * the busiest concurrent callers, never by item count. */
   private lazy val familyPool =
     java.util.concurrent.Executors.newCachedThreadPool(
       new java.util.concurrent.ThreadFactory {
@@ -134,16 +134,15 @@ object IndexMaintenance {
     * thread-safe and the scheduler interleaves the branches' jobs.
     * Fails fast: on the first task failure no further items start,
     * in-flight items finish, and the first exception is rethrown
-    * unwrapped. Serial when the pool or item count is 1 — same stack
-    * traces, no pool overhead.
+    * unwrapped. Serial for a single item — same stack traces, no pool
+    * overhead.
     *
     * Items run under the CALLER's Spark local properties and active
     * session, captured per call the way Spark's own exchange threads
     * capture them: a cached pool thread otherwise keeps the job group,
     * description and tags of whichever caller created it. */
-  def inParallel[A, B](items: Seq[A],
-      parallelism: Int = FamilyApplyParallelism)(f: A => B): Seq[B] = {
-    if (items.lengthCompare(1) <= 0 || parallelism <= 1) return items.map(f)
+  def inParallel[A, B](items: Seq[A])(f: A => B): Seq[B] = {
+    if (items.lengthCompare(1) <= 0) return items.map(f)
     val idx = items.toIndexedSeq
     val results = new Array[Any](idx.size)
     val next = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -157,7 +156,7 @@ object IndexMaintenance {
       }
     }
     val session = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-    val workers = (1 to math.min(idx.size, parallelism)).map(_ =>
+    val workers = (1 to math.min(idx.size, FamilyApplyParallelism)).map(_ =>
       session match {
         case Some(s: org.apache.spark.sql.classic.SparkSession) =>
           org.apache.spark.sql.execution.SQLExecution.withThreadLocalCaptured(s, familyPool)(work())

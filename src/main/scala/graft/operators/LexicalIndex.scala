@@ -596,7 +596,7 @@ object LexicalIndex {
     * that must drop documents from every bucket (pass the purged
     * corpus). The new index (all three tables + stats + an empty
     * tombstone log) is built complete and cold in a generation dir,
-    * then the `_gen` pointer swaps onto it ([[IndexGenerations]]) —
+    * then a generation swap claim names it ([[IndexGenerations]]) —
     * in-place overwrite would tear concurrent searches between old
     * postings and new stats; the swap never does. Readers mid-search
     * keep the old generation (on disk until [[IndexGenerations.vacuum]]);

@@ -78,13 +78,8 @@ private[operators] object LsmTombstones {
   def floor(spark: SparkSession, indexDir: String): Long = {
     val d = dirOf(indexDir)
     val fs = fsOf(spark, d)
-    val p = new org.apache.hadoop.fs.Path(d, FloorName)
-    if (!fs.exists(p)) 0L
-    else {
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
-      finally in.close()
-    }
+    graft.sources.Sources.readControl(fs, new org.apache.hadoop.fs.Path(d, FloorName))
+      .fold(0L)(_.toLong)
   }
 
   /** True iff live (un-folded) tombstone segments exist. Listing-only

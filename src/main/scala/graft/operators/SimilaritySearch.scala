@@ -829,7 +829,7 @@ object SimilaritySearch {
     * complete NEW index (fresh coarse centroids + PQ codebooks trained
     * on `corpus`, every vector re-encoded, a new drift baseline, an
     * empty tombstone log) as a cold generation dir and atomically
-    * swaps the index's `_gen` pointer onto it
+    * swaps the index onto it with a generation claim
     * ([[IndexGenerations]]) — readers are never torn between old codes
     * and new codebooks, a reader mid-search keeps the old generation,
     * and subsequent [[applyIvfPqIndexChanges]] / [[searchIvfPqIndex]] /
@@ -1026,7 +1026,7 @@ object SimilaritySearch {
     * writer. Offline per-family rebuilds (a retrain of every
     * partition, one generation swap each) between micro-batches are
     * picked up transparently — each partition dir resolves its own
-    * `_gen` pointer per apply. */
+    * live generation per apply. */
   def partitionedIvfPqIndexSink(changes: DataFrame, rootDir: String,
       filterCol: String, checkpointDir: String, idCol: String = "vec_id",
       vecCol: String = "embedding", changeCol: String = "_change",

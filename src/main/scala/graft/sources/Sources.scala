@@ -554,7 +554,6 @@ object Sources {
       case Some(m) if m.startsWith("manifest-") => numberOf(m, "manifest-")
       case _ => return // unreadable/foreign pointer: nothing safe to do
     }
-    sweepTempChecksums(fs, root)
     val (protect, candidates) =
       manifestNames(fs, root).partition(m => numberOf(m, "manifest-") >= liveNum - 2)
     val now = System.currentTimeMillis()
@@ -595,16 +594,9 @@ object Sources {
       if (st.isFile && name.startsWith(ClaimTmpPrefix) && aged)
         deleteQuiet(fs, st.getPath, recursive = false)
       else if (st.isFile && name.startsWith(CommitPrefix) &&
-          numberOf(name, CommitPrefix) < liveNum - 2 && aged) {
-        val valid =
-          try {
-            val in = fs.open(st.getPath)
-            val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-                    finally in.close()
-            s.startsWith("manifest-")
-          } catch { case _: java.io.FileNotFoundException => true }
-        if (!valid) deleteQuiet(fs, st.getPath, recursive = false)
-      }
+          numberOf(name, CommitPrefix) < liveNum - 2 && aged &&
+          !readControl(fs, st.getPath).forall(_.startsWith("manifest-")))
+        deleteQuiet(fs, st.getPath, recursive = false)
     }
   }
 
@@ -616,24 +608,39 @@ object Sources {
     try { fs.delete(p, recursive); () }
     catch { case _: java.io.FileNotFoundException => () }
 
+  /** The trimmed UTF-8 content of a small control file (a pointer, a
+    * claim marker, a checkpoint, a sidecar); None when it does not
+    * exist. Any other I/O error propagates. */
+  private[graft] def readControl(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path): Option[String] =
+    try {
+      val in = fs.open(p)
+      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim)
+      finally in.close()
+    } catch { case _: java.io.FileNotFoundException => None }
+
+  /** [[readControl]] that maps every I/O error to "" (no valid
+    * content) — for claim markers a scan only classifies. */
+  private[graft] def readControlQuiet(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path): String =
+    try readControl(fs, p).getOrElse("")
+    catch { case _: java.io.IOException => "" }
+
+  /** The table's `_current` pointer; None when absent or unreadable. */
   private[sources] def currentPointer(fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path): Option[String] =
-    try {
-      val in = fs.open(new org.apache.hadoop.fs.Path(root, "_current"))
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-              finally in.close()
-      Some(s)
-    } catch { case _: java.io.IOException => None }
+    try readControl(fs, new org.apache.hadoop.fs.Path(root, "_current"))
+    catch { case _: java.io.IOException => None }
 
   /** [[swapPointer]] guarded to never move the pointer BACKWARDS by
     * manifest number: with concurrent publishers, a slow swap landing
     * after a faster rival's would otherwise regress the pointer —
     * time travel for readers and a shrunk window for the
-    * pointer-anchored retention math. Skipping the swap degrades this
-    * publish to the same documented lost update as losing the swap
-    * race. (read-then-rename is not a CAS; the residual regression
-    * window is the gap between the two, which the abort-on-doubt
-    * prune tolerates.) */
+    * pointer-anchored retention math. Skipping the swap loses nothing:
+    * every caller claimed its number first, so a rival numbered above
+    * it was derived from, or rebased onto, this commit. (read-then-
+    * rename is not a CAS; the residual regression window is the gap
+    * between the two, which the abort-on-doubt prune tolerates.) */
   private[sources] def swapPointerForward(fs: org.apache.hadoop.fs.FileSystem,
       uri: java.net.URI, conf: org.apache.hadoop.conf.Configuration,
       root: org.apache.hadoop.fs.Path, content: String, stamp: String,
@@ -782,33 +789,26 @@ object Sources {
   }
 
   /** The highest COMMITTED state of a merge table: the manifest named by
-    * the largest claimed commit marker, or by the pointer when that is
-    * newer (legacy publishes swapped without claiming). This is the
-    * publisher-side read — unlike the reader's pointer resolve it sees a
-    * commit whose pointer swap has not landed yet (or whose publisher
-    * crashed between claim and swap), so a rebase can never silently
-    * drop a durably-claimed rival batch. Pre-manifest tables return the
-    * adoption listing at number 0. */
+    * the largest claimed commit marker. Every merge-table pointer swap
+    * follows a claim, so the marker is never older than the pointer.
+    * This is the publisher-side read — unlike the reader's pointer
+    * resolve it sees a commit whose pointer swap has not landed yet (or
+    * whose publisher crashed between claim and swap), so a rebase can
+    * never silently drop a durably-claimed rival batch. Pre-manifest
+    * tables return the adoption listing at number 0; a manifest pointer
+    * with no claim behind it is refused. */
   private def latestCommitted(fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path,
       partitionCol: String): (Long, Seq[String]) = {
     // walk DOWN from the largest marker past any with unreadable/invalid
-    // content: a crashed legacy (pre-r17) claimer left content-less
-    // markers, and those numbers are claimed-DEAD (a burned slot, no
-    // manifest) — the newest marker that actually names a manifest is
-    // the committed state
-    val markerManifest = commitNames(fs, root)
-      .sortBy(numberOf(_, CommitPrefix)).reverseIterator.map { c =>
-        try {
-          val in = fs.open(new org.apache.hadoop.fs.Path(root, c))
-          val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-                  finally in.close()
-          if (s.startsWith("manifest-")) Some(s) else None
-        } catch { case _: java.io.FileNotFoundException => None }
-      }.collectFirst { case Some(m) => m }
-    val ptrManifest = currentPointer(fs, root).filter(_.startsWith("manifest-"))
-    (markerManifest.toSeq ++ ptrManifest.toSeq)
-      .sortBy(numberOf(_, "manifest-")).lastOption match {
+    // content: a crashed pre-r17 claimer left content-less markers, and
+    // those numbers are claimed-DEAD (a burned slot, no manifest) — the
+    // newest marker that actually names a manifest is the committed
+    // state
+    commitNames(fs, root).sortBy(numberOf(_, CommitPrefix)).reverseIterator
+      .map(c => readControl(fs, new org.apache.hadoop.fs.Path(root, c))
+        .filter(_.startsWith("manifest-")))
+      .collectFirst { case Some(m) => m } match {
       case Some(m) => readManifestOpt(fs, root, m) match {
         case Some(es) => (numberOf(m, "manifest-"), es)
         case None =>
@@ -816,7 +816,14 @@ object Sources {
           // pointer-resolved read retries / fails loudly
           (numberOf(m, "manifest-"), manifestEntries(fs, root, partitionCol))
       }
-      case None => (0L, manifestEntries(fs, root, partitionCol))
+      case None =>
+        currentPointer(fs, root).filter(_.startsWith("manifest-")).foreach { m =>
+          throw new IllegalStateException(
+            s"merge table $root points at $m but holds no commit claim for " +
+              "it — an unclaimed layout no current writer produces; refusing " +
+              "to take a publish basis from it")
+        }
+        (0L, manifestEntries(fs, root, partitionCol))
     }
   }
 
@@ -842,29 +849,15 @@ object Sources {
     latestCommitted(fs, new org.apache.hadoop.fs.Path(tableDir), "")._1
   }
 
-  /** Reference list of the commit CLAIMED at `version` (marker first —
-    * it names the one manifest that won the number; unclaimed legacy
-    * manifests fall back to a unique name match). None when the
-    * version is no longer resolvable (pruned past retention, or
-    * ambiguous rivals). */
+  /** Reference list of the commit CLAIMED at `version`: the manifest its
+    * `commit-<n>` marker names, the one that won the number. None when
+    * the version is no longer resolvable (pruned past retention) or was
+    * never committed. */
   private def committedEntriesAt(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, version: Long): Option[Seq[String]] = {
-    val viaMarker =
-      try {
-        val in = fs.open(new org.apache.hadoop.fs.Path(root,
-          f"$CommitPrefix$version%012d"))
-        val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-                finally in.close()
-        if (s.startsWith("manifest-")) Some(s) else None
-      } catch { case _: java.io.FileNotFoundException => None }
-    val name = viaMarker.orElse {
-      manifestNames(fs, root).filter(numberOf(_, "manifest-") == version) match {
-        case Seq(one) => Some(one)
-        case _ => None
-      }
-    }
-    name.flatMap(readManifestOpt(fs, root, _))
-  }
+      root: org.apache.hadoop.fs.Path, version: Long): Option[Seq[String]] =
+    readControl(fs, new org.apache.hadoop.fs.Path(root, f"$CommitPrefix$version%012d"))
+      .filter(_.startsWith("manifest-"))
+      .flatMap(readManifestOpt(fs, root, _))
 
   /** Optimistic-concurrency manifest commit — the engine's answer to the
     * reference's per-load Postgres transaction
@@ -955,14 +948,8 @@ object Sources {
       refuseIfConflicting(committed)
       val next = cNum + 1
       val markerPath = new org.apache.hadoop.fs.Path(root, f"$CommitPrefix$next%012d")
-      val corpse =
-        try {
-          val in = fs.open(markerPath)
-          val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-                  finally in.close()
-          !s.startsWith("manifest-")
-        } catch { case _: java.io.FileNotFoundException => false }
-      if (corpse) reclaimCorpseMarker(fs, uri, root, markerPath, next)
+      if (readControl(fs, markerPath).exists(!_.startsWith("manifest-")))
+        reclaimCorpseMarker(fs, uri, root, markerPath, next)
       val mfile = f"manifest-$next%012d-$uid"
       writeRaw(uri, conf, new org.apache.hadoop.fs.Path(root, mfile),
         mkEntries(committed).sorted.mkString("\n"))
@@ -973,8 +960,7 @@ object Sources {
       }
       // the lost attempt's manifest is claimed by nothing and referenced
       // by nothing — reclaim it now rather than leaking one file per
-      // lost race (and keeping committedEntriesAt's unique-name
-      // fallback unambiguous)
+      // lost race
       deleteQuiet(fs, new org.apache.hadoop.fs.Path(root, mfile),
         recursive = false)
       log.info(s"merge commit on $tableDir: claim $next lost to a rival " +
@@ -1372,15 +1358,9 @@ object Sources {
     val ckUri = new java.net.URI(checkpointDir)
     val ckFs = org.apache.hadoop.fs.FileSystem.get(ckUri, conf)
     val ckRoot = new org.apache.hadoop.fs.Path(checkpointDir)
-    val ckFile = new org.apache.hadoop.fs.Path(ckRoot, "_version")
-    val last: Option[Long] =
-      if (!ckFs.exists(ckFile)) None
-      else {
-        val in = ckFs.open(ckFile)
-        val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-                finally in.close()
-        s.toLongOption // unreadable checkpoint → full re-read
-      }
+    // unreadable checkpoint → full re-read
+    val last: Option[Long] = readControl(ckFs,
+      new org.apache.hadoop.fs.Path(ckRoot, "_version")).flatMap(_.toLongOption)
     if (last.contains(live)) return None
     val out = f(deltaOf(last), live)
     atomicReplace(ckFs, ckUri, conf, ckRoot, "_version", live.toString,
@@ -1655,20 +1635,26 @@ object Sources {
   }
 
   /** Compaction for [[publishMergePartitioned]] tables: rewrite the
-    * LIVE manifest's state into one fresh batch dir (one file per
-    * partition via a partition-column repartition) and publish a
-    * manifest referencing only it; the standard pointer-anchored
-    * retention then reclaims the old batch dirs after two more
-    * publishes. Content is bit-identical — compaction exists because
-    * per-batch MERGE publishes accrete a batch dir per publish, and
-    * at 100 TB the manifest's dir fan-out (footer reads, sidecar
-    * opens, task scheduling) degrades scans long before data volume
-    * does. Concurrency degrades exactly like a rival publisher: the
-    * forward-only pointer swap makes one side a whole lost update,
-    * never a torn table. Index sidecars are not carried over — the
-    * idempotent indexers rebuild them for the new dir on their next
-    * run. Returns the number of partition dirs written (0 = empty
-    * table, nothing to do). */
+    * latest committed state into one fresh batch dir (one file per
+    * partition via a partition-column repartition) and commit a
+    * manifest in which that dir replaces every compacted entry; the
+    * standard pointer-anchored retention then reclaims the old batch
+    * dirs after two more publishes. Content is bit-identical —
+    * compaction exists because per-batch MERGE publishes accrete a
+    * batch dir per publish, and at 100 TB the manifest's dir fan-out
+    * (footer reads, sidecar opens, task scheduling) degrades scans
+    * long before data volume does.
+    *
+    * It commits through the same claimed `commit-<n>` protocol as
+    * every other merge publish ([[commitMergeManifest]]): a rival that
+    * adds a partition this compaction did not read rebases in beside
+    * it; a rival that changed a compacted partition after the read
+    * makes compaction refuse with `ConcurrentModificationException`
+    * (its batch dir is reclaimed), so no committed batch is ever
+    * folded away. Index sidecars are not carried over — the idempotent
+    * indexers rebuild them for the new dir on their next run. Returns
+    * the number of partition dirs written (0 = empty table, nothing to
+    * do). */
   def compactMergePartitioned(spark: SparkSession, tableDir: String,
       partitionCol: String): Int = {
     import org.apache.spark.sql.functions.col
@@ -1676,11 +1662,13 @@ object Sources {
     val uri = new java.net.URI(tableDir)
     val fs = org.apache.hadoop.fs.FileSystem.get(uri, conf)
     val root = new org.apache.hadoop.fs.Path(tableDir)
-    val entries = manifestEntries(fs, root, partitionCol)
+    adoptMergePartitioned(spark, tableDir, partitionCol): Unit
+    val (_, entries) = latestCommitted(fs, root, partitionCol)
     val state = assembleManifest(spark, tableDir, entries).getOrElse(return 0)
     val uid = java.util.UUID.randomUUID().toString.take(8)
-    val next = (manifestNumbers(fs, root) ++ batchNumbers(fs, root) :+ 0L).max + 1
-    val bdir = f"b-$next%012d-$uid"
+    val bnum = (manifestNumbers(fs, root) ++ batchNumbers(fs, root) ++
+      commitNumbers(fs, root) :+ 0L).max + 1
+    val bdir = f"b-$bnum%012d-$uid"
     state.repartition(col(partitionCol))
       .write.mode(SaveMode.Overwrite)
       .partitionBy(partitionCol).parquet(s"$tableDir/$bdir")
@@ -1688,11 +1676,12 @@ object Sources {
       .collect { case st if st.isDirectory &&
         st.getPath.getName.startsWith(s"$partitionCol=") => st.getPath.getName }
       .toSeq
-    val mfile = f"manifest-$next%012d-$uid"
-    writeRaw(uri, conf, new org.apache.hadoop.fs.Path(root, mfile),
-      written.map(s => s"$bdir/$s").sorted.mkString("\n"))
-    swapPointerForward(fs, uri, conf, root, mfile, s"$next-$uid-c")
-    pruneMergePartitioned(fs, root)
+    val compacted = entries.map(segmentOf).toSet
+    commitMergeManifestOrReclaim(fs, uri, conf, root, tableDir, partitionCol,
+      entries, compacted ++ written, rebaseOnOverlap = false, uid, bdir) { es =>
+      es.filterNot(e => compacted.contains(segmentOf(e))) ++
+        written.map(s => s"$bdir/$s")
+    }
     written.size
   }
 
@@ -1847,20 +1836,17 @@ object Sources {
       case (top, es) =>
         val sidecar = new org.apache.hadoop.fs.Path(root, s"$top/_zonemap-$statCol")
         val overlaps =
-          if (!top.startsWith("b-") || !fs.exists(sidecar)) true // unindexed: read
-          else {
-            val in = fs.open(sidecar)
-            val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-                       finally in.close()
-            if (body == "empty") false
-            else {
+          if (!top.startsWith("b-")) true
+          else readControl(fs, sidecar) match {
+            case None => true // unindexed: read
+            case Some("empty") => false
+            case Some(body) =>
               val Array(tag, minS, maxS) = body.split("\n", 3)
               val dirLo = zoneParse(tag, minS)
               val dirHi = zoneParse(tag, maxS)
               // no overlap iff dirHi < lower or upper < dirLo
               lo.forall { case (_, l) => zoneLeq(l, dirHi) } &&
                 hi.forall { case (_, u) => zoneLeq(dirLo, u) }
-            }
           }
         if (overlaps) es else Nil
     }
@@ -2008,17 +1994,9 @@ object Sources {
     val ptr = new org.apache.hadoop.fs.Path(root, "_current")
     var attempt = 0
     while (true) {
-      val live =
-        if (fs.exists(ptr)) {
-          val in = fs.open(ptr)
-          val m = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-                  finally in.close()
-          if (m.startsWith("manifest-")) Some(m) else None
-        } else None
-      live match {
+      readControl(fs, ptr).filter(_.startsWith("manifest-")) match {
         case Some(m) =>
-          if (fs.exists(new org.apache.hadoop.fs.Path(root, m)))
-            return readManifest(fs, root, m)
+          readManifestOpt(fs, root, m).foreach(es => return es)
           attempt += 1
           if (attempt >= 3)
             throw new IllegalStateException(
@@ -2043,16 +2021,12 @@ object Sources {
     * prune, never silently shrink the protection set. */
   private def readManifestOpt(fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path, name: String): Option[Seq[String]] =
-    try {
-      val in = fs.open(new org.apache.hadoop.fs.Path(root, name))
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-              finally in.close()
-      Some(s.split("\n").toSeq.map(_.trim).filter(_.nonEmpty))
-    } catch { case _: java.io.FileNotFoundException => None }
+    readControl(fs, new org.apache.hadoop.fs.Path(root, name))
+      .map(_.split("\n").toSeq.map(_.trim).filter(_.nonEmpty))
 
   /** [[readManifestOpt]] where vanished-reads-as-empty is safe (the
-    * rotated-out side of a prune, the reader's already-validated live
-    * manifest). */
+    * rotated-out side of a prune, a manifest just found in a
+    * listing). */
   private def readManifest(fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path, name: String): Seq[String] =
     readManifestOpt(fs, root, name).getOrElse(Seq.empty)
@@ -2150,8 +2124,10 @@ object Sources {
     * created). On file:// it goes through java.nio: Hadoop's local
     * FileContext is a ChecksumFs, which writes a `.<name>.crc` beside
     * the file — orphaned when [[atomicReplace]] then moves the file
-    * alone — and forks a `chmod` per create when the native library is
-    * not loaded. Elsewhere it is a FileContext create. */
+    * alone, and stale for the file it replaces — and forks a `chmod`
+    * per create when the native library is not loaded. Elsewhere it is
+    * a FileContext create. Every control file goes through here or
+    * [[createExclusive]], so none carries a sidecar. */
   private def writeRaw(uri: java.net.URI, conf: org.apache.hadoop.conf.Configuration,
       path: org.apache.hadoop.fs.Path, content: String): Unit =
     if (Option(uri.getScheme).forall(_ == "file")) {
@@ -2167,28 +2143,8 @@ object Sources {
       try out.write(content.getBytes("UTF-8")) finally out.close()
     }
 
-  /** Delete the checksum sidecars of temp control files
-    * (`.<name>.tmp-<stamp>.crc`) whose file is gone — what
-    * [[atomicReplace]] left behind per swap while its temp write went
-    * through the checksummed local FS. The local FileSystem's listing
-    * hides `.crc` files, so this lists its raw FS. */
-  private def sweepTempChecksums(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Unit = {
-    val raw = fs match {
-      case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
-      case other => other
-    }
-    raw.listStatus(root).foreach { st =>
-      val name = st.getPath.getName
-      if (st.isFile && name.startsWith(".") && name.endsWith(".crc") &&
-          name.contains(".tmp-") &&
-          !raw.exists(new org.apache.hadoop.fs.Path(root, name.drop(1).dropRight(4))))
-        deleteQuiet(raw, st.getPath, recursive = false)
-    }
-  }
-
   /** Atomic `_current` pointer swap (temp write + atomic
-    * rename-over; stale checksum sidecars dropped first).
+    * rename-over).
     *
     * The rename must be ATOMIC-OVERWRITE: concurrent publishers race
     * their swaps, and readers resolve the pointer unlocked. On HDFS,
@@ -2213,7 +2169,6 @@ object Sources {
       stamp: String): Unit = {
     val tmp = new org.apache.hadoop.fs.Path(root, s"$name.tmp-$stamp")
     writeRaw(uri, conf, tmp, content)
-    fs.delete(new org.apache.hadoop.fs.Path(root, s".$name.crc"), false)
     val dst = new org.apache.hadoop.fs.Path(root, name)
     if (Option(uri.getScheme).forall(_ == "file"))
       java.nio.file.Files.move(
@@ -2245,9 +2200,11 @@ object Sources {
 
   /** The committed version number of a snapshot table (or snapshot
     * GROUP) right now: the highest number any publisher has claimed or
-    * swapped — claim markers (valid or crashed — a dead claim still
-    * burned its number), the live pointer, and the version-dir listing
-    * (legacy publishes never claimed). 0 = never published.
+    * swapped — claim markers (valid, burned or crashed — a dead claim
+    * still burned its number) and the live pointer. Every version dir
+    * is claimed before it is written, and the prune removes dirs and
+    * markers below live−2 together, so the dirs add no number the
+    * markers and the pointer lack. 0 = never published.
     *
     * NOT sufficient as a transactional read basis on its own: a rival
     * that has CLAIMED but not yet SWAPPED counts here while the
@@ -2318,8 +2275,7 @@ object Sources {
       root: org.apache.hadoop.fs.Path): Long = {
     val ptrNum = currentPointer(fs, root)
       .filter(_.startsWith("v-")).map(numberOf(_, "v-"))
-    (commitNumbers(fs, root) ++ ptrNum.toSeq ++
-      listVersions(fs, root).map(_._1) :+ 0L).max
+    (commitNumbers(fs, root) ++ ptrNum.toSeq :+ 0L).max
   }
 
   /** Claim the next snapshot version for this publisher (r17, the
@@ -2457,14 +2413,6 @@ object Sources {
     (inFlight.result().sortBy(_._1), dead.result())
   }
 
-  private def readControlQuiet(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): String =
-    try {
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
-    } catch { case _: java.io.IOException => "" }
-
   /** The snapshot publish's pointer swap, refused loudly when the
     * publish has been OVERTAKEN (r18 rule 4, the zombie-writer guard):
     * a publisher whose data write outlived [[snapshotGraceMs]] was
@@ -2557,7 +2505,6 @@ object Sources {
           now - st.getModificationTime >= grace)
         deleteQuiet(fs, st.getPath, recursive = true)
     }
-    sweepTempChecksums(fs, root)
   }
 
   /** Snapshot-table publish, ATOMIC for readers and SERIALIZED across
@@ -2598,16 +2545,10 @@ object Sources {
     releaseClaimOnFailure(fs, uri, conf, root, next, uid, vdir) {
       writeSnapshotMember(df, uri, fs, s"$tableRoot/$vdir")
     }
-    // atomic pointer swap: write a temp pointer, rename OVER the live
-    // one. Neither step may leave a checksum sidecar: the FileSystem
-    // API on a local FS is ChecksumFileSystem, whose create() writes a
-    // .crc that a raw rename does NOT move — a concurrent reader then
-    // validates the new pointer against the stale sidecar and fails
-    // with a checksum error. The temp file is written raw (java.nio on
-    // file://, see writeRaw) and any sidecar an older writer left on
-    // the live pointer is dropped first. Forward-only, and refused
-    // outright when this publish was overtaken while writing
-    // (swapSnapshotOrRefuse).
+    // atomic pointer swap: write a temp pointer raw (java.nio on
+    // file://, no checksum sidecar — see writeRaw), rename it OVER the
+    // live one. Forward-only, and refused outright when this publish
+    // was overtaken while writing (swapSnapshotOrRefuse).
     swapSnapshotOrRefuse(fs, uri, conf, root, tableRoot, vdir, next, uid)
     pruneSnapshotVersions(fs, root, next)
   }
@@ -2667,13 +2608,8 @@ object Sources {
   private def liveVersionDir(spark: SparkSession, tableRoot: String): Option[String] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(tableRoot), conf)
-    val ptr = new org.apache.hadoop.fs.Path(tableRoot, "_current")
-    if (fs.exists(ptr)) {
-      val in = fs.open(ptr)
-      val v = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-              finally in.close()
-      Some(s"$tableRoot/$v")
-    } else None
+    readControl(fs, new org.apache.hadoop.fs.Path(tableRoot, "_current"))
+      .map(v => s"$tableRoot/$v")
   }
 
   /** Read the live version of a snapshot table published by

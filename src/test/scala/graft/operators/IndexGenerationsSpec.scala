@@ -136,7 +136,7 @@ class IndexGenerationsSpec extends SparkSpec {
     val inflight = IndexGenerations.next(spark, dir)
     assert(new java.io.File(inflight).mkdirs())
     val aged = System.currentTimeMillis() - 2L * 3600 * 1000
-    assert(new java.io.File(dir, "_gen").setLastModified(aged))
+    IndexGenerationsSpec.ageLiveClaim(spark, dir, aged)
     assert(new java.io.File(inflight).setLastModified(aged)) // even aged: number protects it
     // superseded state (plain layout) is aged and reclaimed; the
     // in-flight build and the live gen survive
@@ -155,7 +155,7 @@ class IndexGenerationsSpec extends SparkSpec {
     assert(new java.io.File(inflight).delete()) // build abandoned
     SimilaritySearch.retrainIvfPqIndex(spark, dir, corpus(baseIds),
       0L until 4L, 0L until 4L, m = 4): Unit
-    assert(new java.io.File(dir, "_gen").setLastModified(aged))
+    IndexGenerationsSpec.ageLiveClaim(spark, dir, aged)
     // gen1 is now superseded but its own mtime is fresh → spared
     assert(IndexGenerations.vacuum(spark, dir,
       graceMs = 3600L * 1000) == 0)
@@ -310,37 +310,44 @@ class IndexGenerationsSpec extends SparkSpec {
     assert(IndexGenerations.resolve(spark, dir) == fast)
   }
 
-  test("nested generations: root readers resolve recursively; gen-dir rebuilds are refused (ADVICE r15)") {
-    val dir = Files.createTempDirectory("graft_gen_nest").toString
+  test("swap refuses a gen-* root; resolve refuses a claimless _gen") {
+    val dir = Files.createTempDirectory("graft_gen_root").toString
     val gen1 = IndexGenerations.next(spark, dir)
     new java.io.File(gen1).mkdirs()
     IndexGenerations.swap(spark, dir, gen1)
-    // the misuse next()/swap() now refuse: rebuilding "against the
-    // index" with the GENERATION dir a resolve returned
+    // rebuilding "against the index" with the GENERATION dir a resolve
+    // returned is refused by next() and swap() alike
     intercept[IllegalArgumentException] {
       IndexGenerations.next(spark, gen1)
     }
-    // ...but an already-nested layout (pre-guard data) still converges:
-    // hand-craft gen1/_gen -> gen1/gen-1-x and resolve from the root
     val nested = new java.io.File(gen1, "gen-1-nested")
     assert(nested.mkdirs())
-    java.nio.file.Files.write(java.nio.file.Paths.get(gen1, "_gen"),
-      "gen-1-nested".getBytes("UTF-8")): Unit
-    assert(IndexGenerations.resolve(spark, dir) == nested.toString,
-      "root readers must converge on the innermost (newest) generation, " +
-        "not silently serve the stale middle one")
-    // a pointer CYCLE fails loudly instead of spinning
-    java.nio.file.Files.write(java.nio.file.Paths.get(nested.toString, "_gen"),
-      "gen-1-self".getBytes("UTF-8")): Unit
-    assert(new java.io.File(nested, "gen-1-self").mkdirs())
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(nested.toString, "gen-1-self", "_gen"),
-      "gen-1-self2".getBytes("UTF-8")): Unit
-    assert(new java.io.File(new java.io.File(nested, "gen-1-self"),
-      "gen-1-self2").mkdirs())
-    // 16-deep chain: just assert deep nests are bounded via the two
-    // extra levels (resolve succeeds — bound not hit) and that the
-    // bound exists for a true runaway
-    assert(IndexGenerations.resolve(spark, dir).endsWith("gen-1-self2"))
+    intercept[IllegalArgumentException] {
+      IndexGenerations.swap(spark, gen1, nested.toString)
+    }
+    assert(IndexGenerations.resolve(spark, dir) == gen1)
+    // a root holding the pre-claim _gen pointer and no swap claim is
+    // refused loudly, not served as a plain layout
+    val old = Files.createTempDirectory("graft_gen_preclaim").toString
+    assert(new java.io.File(old, "gen-1-x").mkdirs())
+    Files.write(java.nio.file.Paths.get(old, "_gen"), "gen-1-x".getBytes("UTF-8")): Unit
+    val e = intercept[IllegalStateException] {
+      IndexGenerations.resolve(spark, old)
+    }
+    assert(e.getMessage.contains("_gen"), e.getMessage)
+  }
+}
+
+object IndexGenerationsSpec {
+  /** Set the mtime of the swap claim(s) naming `dir`'s live generation
+    * — the swap time [[IndexGenerations.vacuum]] ages against. */
+  def ageLiveClaim(spark: org.apache.spark.sql.SparkSession, dir: String,
+      at: Long): Unit = {
+    val live = new java.io.File(IndexGenerations.resolve(spark, dir)).getName
+    val claims = new java.io.File(dir).listFiles().toSeq.filter(f =>
+      f.getName.startsWith("genswap-") &&
+        new String(Files.readAllBytes(f.toPath), "UTF-8").trim == live)
+    assert(claims.nonEmpty, s"no swap claim names $live under $dir")
+    claims.foreach(f => assert(f.setLastModified(at)))
   }
 }

@@ -169,29 +169,21 @@ class IndexMaintenanceSpec extends SparkSpec {
       "young superseded plain layout reclaimed")
     assert(searchNow() == expected)
 
-    // age the last swap (the _gen pointer's mtime IS the swap time) AND
-    // the superseded candidates themselves (r17: vacuum requires both —
-    // a fresh-mtime dir is someone's in-flight write), and drop in a
-    // crashed-swap tmp pointer: the same maintenance loop now reclaims
-    // gen1, the plain-layout tables and the stale tmp — and leaves the
-    // live generation serving identical results
+    // age the last swap (the live generation's swap claim mtime IS the
+    // swap time) AND the superseded candidates themselves (r17: vacuum
+    // requires both — a fresh-mtime dir is someone's in-flight write):
+    // the same maintenance loop now reclaims gen1 and the plain-layout
+    // tables — and leaves the live generation serving identical results
     val aged = System.currentTimeMillis() - 2L * 3600 * 1000
-    assert(new java.io.File(dir, "_gen").setLastModified(aged))
+    IndexGenerationsSpec.ageLiveClaim(spark, dir, aged)
     assert(new java.io.File(gen1).setLastModified(aged))
     Seq("postings", "forward", "doclen", "stats", "meta", "tombstones")
       .map(new java.io.File(dir, _)).filter(_.exists())
       .foreach(f => assert(f.setLastModified(aged)))
-    val staleTmp = new java.io.File(dir, "_gen.tmp-deadbeef")
-    assert(staleTmp.createNewFile())
-    assert(staleTmp.setLastModified(aged))
-    val youngTmp = new java.io.File(dir, "_gen.tmp-feedface")
-    assert(youngTmp.createNewFile())
     LexicalIndex.maintainBm25IfNeeded(spark, dir): Unit
     assert(!new java.io.File(gen1).exists(), "aged superseded gen kept")
     assert(!new java.io.File(dir, "postings").exists(),
       "aged superseded plain layout kept")
-    assert(!staleTmp.exists(), "stale crashed-swap tmp pointer kept")
-    assert(youngTmp.exists(), "in-flight tmp pointer deleted")
     assert(new java.io.File(gen2).exists(), "live generation deleted")
     assert(searchNow() == expected)
 
@@ -214,7 +206,7 @@ class IndexMaintenanceSpec extends SparkSpec {
       graft.QueryMetrics.drain(spark)
       seen.clear()
       spark.sparkContext.setJobDescription(desc)
-      try IndexMaintenance.inParallel((1 to 4).toSeq, parallelism = 4) { i =>
+      try IndexMaintenance.inParallel((1 to 4).toSeq) { i =>
         spark.range(10 * i).count()
       } finally spark.sparkContext.setJobDescription(null)
       graft.QueryMetrics.drain(spark)

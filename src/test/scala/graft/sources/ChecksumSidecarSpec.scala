@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
@@ -40,25 +40,15 @@ class ChecksumSidecarSpec extends SparkSpec {
       assert(Sources.processMergeRowChanges(spark, s"$root/merge", s"$root/ck",
         Seq("k"), "p")((_, v) => v).isDefined)
     }
+    assert(Sources.compactMergePartitioned(spark, s"$root/merge", "p") == 2)
+    Sources.publishMergePartitioned(spark, s"$root/merge",
+      Seq((9, "v9", 1)).toDF("k", "v", "p"), cfg, "p")
+    for (_ <- 1 to 2) {
+      val gen = graft.operators.IndexGenerations.next(spark, s"$root/index")
+      assert(new java.io.File(gen).mkdirs())
+      graft.operators.IndexGenerations.swap(spark, s"$root/index", gen)
+    }
+    graft.operators.IndexGenerations.vacuum(spark, s"$root/index"): Unit
     assert(orphanedChecksums(root).isEmpty, orphanedChecksums(root).mkString("\n"))
-  }
-
-  test("the prune sweeps temp-file sidecars an older writer left, and keeps live ones") {
-    val root = fresh()
-    val df = Seq((1, "a")).toDF("k", "v")
-    Sources.publishSnapshot(df, s"$root/snap")
-    Sources.publishMergePartitioned(spark, s"$root/merge",
-      Seq((1, "a", 0)).toDF("k", "v", "p"), cfg, "p")
-    def touch(p: Path): Path = Files.write(p, Array[Byte](1, 2))
-    val orphans = Seq(s"$root/snap", s"$root/merge")
-      .map(d => touch(Paths.get(d, "._current.tmp-deadbeef.crc")))
-    // a temp file still being written keeps its sidecar
-    val live = touch(Paths.get(root, "snap", "_current.tmp-inflight"))
-    val liveCrc = touch(Paths.get(root, "snap", "._current.tmp-inflight.crc"))
-    Sources.publishSnapshot(df, s"$root/snap")
-    Sources.publishMergePartitioned(spark, s"$root/merge",
-      Seq((2, "b", 0)).toDF("k", "v", "p"), cfg, "p")
-    assert(orphans.forall(!Files.exists(_)))
-    assert(Files.exists(live) && Files.exists(liveCrc))
   }
 }

@@ -42,10 +42,13 @@ class MergePruneSpec extends SparkSpec {
     name
   }
 
+  /** `_current` written as the engine writes it: raw, no checksum
+    * sidecar (see `Sources.writeRaw`). */
   private def pointTo(fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path, name: String): Unit = {
-    val out = fs.create(new org.apache.hadoop.fs.Path(root, "_current"), true)
-    out.write(name.getBytes("UTF-8")); out.close()
+    fs.mkdirs(root): Unit
+    Files.write(java.nio.file.Paths.get(root.toUri.getPath, "_current"),
+      name.getBytes("UTF-8")): Unit
   }
 
   private def names(fs: org.apache.hadoop.fs.FileSystem,

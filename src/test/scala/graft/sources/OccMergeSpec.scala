@@ -248,6 +248,63 @@ class OccMergeSpec extends SparkSpec {
     }
   }
 
+  test("compaction commits a claim marker naming the live manifest") {
+    val dir = freshDir()
+    for (b <- 1 to 3)
+      Sources.publishMergeAppend(spark, dir,
+        Seq((s"k$b", b % 2, "v")).toDF("k", "p", "v"), "p")
+    val before = Sources.mergeCommittedVersion(spark, dir)
+    assert(Sources.compactMergePartitioned(spark, dir, "p") == 2)
+    def text(name: String) =
+      new String(Files.readAllBytes(java.nio.file.Paths.get(dir, name)), "UTF-8").trim
+    val live = text("_current")
+    // the compaction claimed the next dense number, and that marker
+    // names exactly the manifest readers now resolve
+    assert(Sources.mergeCommittedVersion(spark, dir) == before + 1)
+    assert(text(f"commit-${before + 1}%012d") == live, live)
+    assert(rowsOf(dir) == Set(("k1", 1, "v"), ("k2", 0, "v"), ("k3", 1, "v")))
+  }
+
+  test("compaction racing an append: the appended rows never vanish") {
+    // rounds 1-2 append into the compacted partition p=1 (compaction
+    // refuses if the append committed after its read, else the append
+    // rebases onto it); round 3 appends into p=2, which is not live, so
+    // either order must land both
+    for (round <- 1 to 3) {
+      val dir = freshDir()
+      Sources.publishMergeAppend(spark, dir,
+        Seq(("seed", 1, "s")).toDF("k", "p", "v"), "p")
+      Sources.publishMergeAppend(spark, dir,
+        Seq(("seed2", 1, "t")).toDF("k", "p", "v"), "p")
+      val p = if (round == 3) 2 else 1
+      val gate = new java.util.concurrent.CountDownLatch(1)
+      val compactRefused = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+      val tAppend = new Thread(() => {
+        try { gate.await()
+          Sources.publishMergeAppend(spark, dir,
+            Seq((s"app-$round", p, "x")).toDF("k", "p", "v"), "p")
+        } catch { case t: Throwable => errs.add(t): Unit }
+      })
+      val tCompact = new Thread(() => {
+        try { gate.await()
+          Sources.compactMergePartitioned(spark, dir, "p"): Unit
+        } catch {
+          case _: java.util.ConcurrentModificationException =>
+            compactRefused.set(true)
+          case t: Throwable => errs.add(t): Unit
+        }
+      })
+      Seq(tAppend, tCompact).foreach(_.start()); gate.countDown()
+      Seq(tAppend, tCompact).foreach(_.join(180000))
+      assert(errs.isEmpty, s"unexpected error: ${errs.peek()}")
+      if (round == 3) assert(!compactRefused.get(), "a disjoint append refused compaction")
+      assert(rowsOf(dir) == Set(("seed", 1, "s"), ("seed2", 1, "t"),
+        (s"app-$round", p, "x")),
+        s"round $round lost rows (compactRefused=${compactRefused.get()})")
+    }
+  }
+
   test("corpse reclaim is exclusive: a paused rival's resumed reclaim cannot destroy the winner's valid marker (ADVICE r17 #2)") {
     val dir = freshDir()
     Sources.publishMergePartitioned(spark, dir,
