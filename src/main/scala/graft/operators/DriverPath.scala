@@ -17,8 +17,14 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * engine the fixed cost per job, not the data, bounds small-batch
   * latency; the distributed plan stays for everything above the bound.
   * Used by [[IdentityResolver]], [[IncrementalIdentity]],
-  * [[Dedup.incrementalMinhashDedup]] and the snapshot publishes of
-  * [[graft.sources.Sources]]. */
+  * [[Dedup.incrementalMinhashDedup]], and in [[graft.sources.Sources]]
+  * by the snapshot publishes, the merge-table publish
+  * (`publishMergePartitioned`: a batch of at most [[DriverBatchRows]]
+  * rows against touched partitions of at most [[DriverMergeBytes]] file
+  * bytes merges in Scala and is written from the driver) and the key
+  * index (`indexBatchKeys`: un-indexed dirs of at most
+  * [[DriverStoreBytes]] file bytes are read and their bloom filters
+  * built on the driver). */
 private[graft] object DriverPath {
 
   /** Largest stored table, in plan-stats bytes, that a driver path
@@ -30,8 +36,28 @@ private[graft] object DriverPath {
     * driver already holds it once per batch. Measured at the bound
     * (31k signatures, same file): a 200-document shard took 2.3–2.6 s
     * on the driver against 5.1–6.8 s distributed, most of it the store
-    * scan (SCALING.md, round 22). */
+    * scan (SCALING.md, round 22). The key index applies it to the
+    * un-indexed dirs' parquet file bytes: at the bound it builds in
+    * 0.10–0.13 s against 0.59–0.76 s for its job
+    * (plans/r26/driver_bounds_at_b_and_s.txt). */
   val DriverStoreBytes: Long = math.min(16L * 1024 * 1024, Dedup.MinhashSigBroadcastBytes)
+
+  /** Largest parquet file bytes of the touched partitions that a
+    * merge-table publish reads onto the driver, merges there and writes
+    * back from it. Half of [[DriverStoreBytes]]: the one touched
+    * partition is written by one writer on either path, and the driver
+    * adds a single-threaded read, row conversions and merge that grow
+    * with the partition while the job's fixed cost does not. For a
+    * 300-row batch into one partition the driver path took 0.53–0.68 s
+    * against 0.72–0.77 s at 8 MiB, 0.76–0.99 s against 0.96–1.16 s at
+    * 12 MiB, and at 16 MiB from 10% faster to 30% slower across two
+    * runs (plans/r26/merge_crossover.txt). */
+  val DriverMergeBytes: Long = DriverStoreBytes / 2
+
+  /** Largest incoming batch, in rows, that a driver path collects: the
+    * identity resolve's candidates ([[IdentityResolver]]'s header says
+    * why this value) and a merge-table publish's incoming rows. */
+  val DriverBatchRows: Int = 10000
 
   /** Plan-stats size of `df`; unknown counts as unbounded. A file scan
     * reports its files' bytes; a local relation its rows times Spark's

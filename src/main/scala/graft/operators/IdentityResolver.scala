@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.Gsid
-import DriverPath.{castTo, isLocal, localFrame, sparkOrdering}
+import DriverPath.{DriverBatchRows, castTo, isLocal, localFrame, sparkOrdering}
 
 /** Set-based identity resolution (SURVEY.md §2.9) — the reference's
   * centerpiece "query".
@@ -144,10 +144,6 @@ object IdentityResolver {
         resolveDistributed(candidates, registry, deterministicMint, groupingIterations)
     }
   }
-
-  /** Largest candidate batch, in rows, that [[resolve]] resolves on the
-    * driver (see the object header for why this value). */
-  val DriverBatchRows: Int = 10000
 
   private val DefaultSkewSaltThreshold = 2000000L
   private val DefaultSkewSalt = 32

@@ -54,7 +54,7 @@ import graft.sources.Sources
   *    registry would re-mint duplicate subject rows on redelivery).
   *
   * Scale shape, three tiers:
-  *  - a micro-batch (at most [[IdentityResolver.DriverBatchRows]]
+  *  - a micro-batch (at most [[DriverPath.DriverBatchRows]]
   *    changed rows) against a registry whose two members together fit
   *    [[DriverPath.DriverStoreBytes]] (plan-stats bytes): the batch is
   *    collected once and both members are read once as rows (two

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.RowOrdering
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, FloatType, StringType}
+import org.apache.spark.sql.types._
 
 import graft.types.TableConfig
 
@@ -23,6 +24,10 @@ import graft.types.TableConfig
   * `update_only` strategy (subjects, U2): incoming rows without a
   * current match are dropped instead of inserted
   * (`table_configs.json:37-45`).
+  *
+  * [[mergedOnDriver]] computes the same post-merge rows in Scala for a
+  * micro-batch whose touched state is already on the driver (the
+  * merge-table publish's driver path).
   */
 object UpsertWriter {
 
@@ -31,7 +36,7 @@ object UpsertWriter {
       audit: DataFrame,       // exploded per-field audit rows (U6)
       preview: DataFrame)     // single-row counts (U7 dry-run)
 
-  private def normTyped(c: Column, dt: org.apache.spark.sql.types.DataType): Column =
+  private def normTyped(c: Column, dt: DataType): Column =
     dt match {
       case StringType => when(c === "", lit(null)).otherwise(c)
       case DoubleType | FloatType => when(isnan(c), lit(null)).otherwise(c)
@@ -134,6 +139,101 @@ object UpsertWriter {
       sum(when(col("_status") === "orphaned", 1L).otherwise(0L)).as("orphaned"))
 
     MergeResult(merged, audit, preview)
+  }
+
+  /** Whether [[mergedOnDriver]] covers a merge of `incoming` into
+    * `current`: every key column in both at one integral, boolean,
+    * decimal, date, timestamp or (uncollated) string type — not float,
+    * double, binary, a collated string or a complex type (their Scala
+    * equality is not the join's), every column the two share at one
+    * orderable type with no map inside, and no two column names that
+    * differ only in case (the plan resolves names without case). */
+  def coversOnDriver(current: StructType, incoming: StructType, cfg: TableConfig): Boolean = {
+    val names = current.fieldNames ++ incoming.fieldNames
+    val shared = incoming.fieldNames.filter(current.fieldNames.contains)
+    names.map(_.toLowerCase(java.util.Locale.ROOT)).distinct.length == names.distinct.length &&
+      cfg.naturalKey.forall(k => shared.contains(k) && (incoming(k).dataType match {
+        case BooleanType | ByteType | ShortType | IntegerType | LongType | DateType |
+             TimestampType | TimestampNTZType | _: DecimalType => true
+        case s: StringType => s.collationId == StringType.collationId
+        case _ => false
+      })) &&
+      shared.forall { c =>
+        val dt = incoming(c).dataType
+        dt == current(c).dataType && RowOrdering.isOrderable(dt) && !holdsMap(dt)
+      }
+  }
+
+  private def holdsMap(dt: DataType): Boolean = dt match {
+    case _: MapType => true
+    case a: ArrayType => holdsMap(a.elementType)
+    case s: StructType => s.fields.exists(f => holdsMap(f.dataType))
+    case _ => false
+  }
+
+  /** `merge(current, incoming, cfg).merged` computed in Scala over
+    * collected rows, row for row, for schemas [[coversOnDriver]]
+    * accepts; rows in the merged column order (key, then current's
+    * other columns). Full-outer semantics: a key held by m incoming and
+    * n current rows yields m·n rows, a key with a null part never
+    * matches, an unmatched current row is kept as it is (orphaned), an
+    * unmatched incoming row is an insert (dropped under `update_only`).
+    * A matched pair is an update when an updatable field differs after
+    * the `""`/NaN → null normalization, compared null-safely in Spark's
+    * value order; an update takes the incoming value of the updatable
+    * fields, an insert takes every incoming field, all else keeps the
+    * current value. */
+  def mergedOnDriver(current: Seq[Row], currentSchema: StructType,
+      incoming: Seq[Row], incomingSchema: StructType, cfg: TableConfig): Seq[Row] = {
+    val key = cfg.naturalKey
+    val incCols = incomingSchema.fieldNames.toSeq
+    val updatable = incCols.filter(c =>
+      currentSchema.fieldNames.contains(c) && !key.contains(c) &&
+        !cfg.immutableFields.contains(c) && !TableConfig.systemColumns.contains(c))
+    val curKey = key.map(currentSchema.fieldIndex)
+    val incKey = key.map(incomingSchema.fieldIndex)
+    def keyOf(r: Row, idx: Seq[Int]): Option[Seq[Any]] =
+      if (idx.exists(r.isNullAt)) None else Some(idx.map(r.get))
+    val differs: Seq[(Row, Row) => Boolean] = updatable.map { c =>
+      val dt = incomingSchema(c).dataType
+      val ord = DriverPath.sparkOrdering(dt)
+      val norm: Any => Any = dt match {
+        case StringType => v => if (v == "") null else v
+        case DoubleType | FloatType => {
+          case d: Double if d.isNaN => null
+          case f: Float if f.isNaN => null
+          case v => v
+        }
+        case _ => identity
+      }
+      val (i, j) = (incomingSchema.fieldIndex(c), currentSchema.fieldIndex(c))
+      (in: Row, ex: Row) => ord.compare(norm(in.get(i)), norm(ex.get(j))) != 0
+    }
+    // each non-key merged column: its index in current and in incoming
+    // (-1 when incoming lacks it), and whether an update takes it
+    val cols = currentSchema.fieldNames.toSeq.filterNot(key.contains).map(c =>
+      (currentSchema.fieldIndex(c), incCols.indexOf(c), updatable.contains(c)))
+    def insert(in: Row): Row = Row.fromSeq(incKey.map(in.get) ++
+      cols.map { case (_, i, _) => if (i < 0) null else in.get(i) })
+    def matched(in: Row, ex: Row): Row = {
+      val update = differs.exists(_(in, ex))
+      Row.fromSeq(incKey.map(in.get) ++
+        cols.map { case (j, i, upd) => if (update && upd) in.get(i) else ex.get(j) })
+    }
+    // a current row whose key the batch holds pairs with every incoming
+    // row of that key; any other is kept as it is — reordered only when
+    // current's columns are not already key-first
+    val keyFirst = curKey ++ cols.map(_._1) == currentSchema.indices
+    val incKeys = incoming.flatMap(keyOf(_, incKey)).toSet
+    val (paired, kept) = current.partition(ex => keyOf(ex, curKey).exists(incKeys))
+    val byKey = paired.groupBy(keyOf(_, curKey).get)
+    incoming.flatMap { in =>
+      keyOf(in, incKey).flatMap(byKey.get) match {
+        case Some(exs) => exs.map(matched(in, _))
+        case None => if (cfg.strategy == "update_only") Nil else Seq(insert(in))
+      }
+    } ++ (if (keyFirst) kept
+          else kept.map(ex => Row.fromSeq(curKey.map(ex.get) ++ cols.map(c => ex.get(c._1)))))
   }
 
   /** U3: the `local_subject_ids` delete-and-replace variant

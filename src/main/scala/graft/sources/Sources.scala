@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, StructType}
 
 /** Sources & sinks (SURVEY.md §2.1 S1-S12).
   *
@@ -99,6 +99,22 @@ object Sources {
     * adopted as the baseline manifest on first publish; its untouched
     * partition dirs are left byte-identical in place.
     *
+    * A micro-batch runs on the driver, with no job but one bounded
+    * collect of `incoming` (`DriverPath.batchRows`), when the batch is
+    * at most `DriverPath.DriverBatchRows` rows, the touched partitions'
+    * live files (from the listing the read plans over) are at most
+    * `DriverPath.DriverMergeBytes`, each batch dir's partition type as
+    * Spark infers it from the directory names is the incoming column's
+    * (and not a float or double), and
+    * [[graft.operators.UpsertWriter.coversOnDriver]] accepts the key
+    * and compared column types: those files are read with Spark's own
+    * parquet reader (`Bridge.readLocalParquet`), merged in Scala
+    * ([[graft.operators.UpsertWriter.mergedOnDriver]]) and written one
+    * file per partition (`Bridge.writeLocalParquetPartitioned`), then
+    * committed through the same claim. Above any bound the distributed
+    * merge and rebalanced write below run unchanged. Both paths return
+    * the same rows under the same schema.
+    *
     * Returns the merged frame for the touched partitions (post-merge
     * state), mirroring [[graft.operators.UpsertWriter.merge]]. */
   def publishMergePartitioned(
@@ -106,8 +122,17 @@ object Sources {
       tableDir: String,
       incoming: DataFrame,
       cfg: graft.types.TableConfig,
-      partitionCol: String): DataFrame = {
+      partitionCol: String): DataFrame =
+    publishMergePartitioned(spark, tableDir, incoming, cfg, partitionCol, mayUseDriver = true)
+
+  /** [[publishMergePartitioned]], with the driver path off when
+    * `mayUseDriver` is false: the distributed path the driver path
+    * must agree with. */
+  private[sources] def publishMergePartitioned(spark: SparkSession, tableDir: String,
+      incoming: DataFrame, cfg: graft.types.TableConfig, partitionCol: String,
+      mayUseDriver: Boolean): DataFrame = {
     import org.apache.spark.sql.functions.col
+    import graft.operators.{DriverPath, UpsertWriter}
     val conf = spark.sparkContext.hadoopConfiguration
     val uri = new java.net.URI(tableDir)
     val fs = org.apache.hadoop.fs.FileSystem.get(uri, conf)
@@ -119,52 +144,138 @@ object Sources {
     // version (otherwise the first publish would prune a dir a
     // concurrent reader of the pre-manifest layout is still scanning).
     adoptMergePartitioned(spark, tableDir, partitionCol): Unit
-    val (_, entries) = latestCommitted(fs, root, partitionCol)
+    val basis @ (_, entries) = latestCommitted(fs, root, partitionCol)
     // batch dirs and manifest files carry a per-publisher unique
     // suffix: two concurrent publishers that read the same max number
     // then write DISTINCT files instead of clobbering each other's
     // batch dir / manifest mid-write
     val uid = java.util.UUID.randomUUID().toString.take(8)
+    val pType = incoming.schema(partitionCol).dataType
+    val groups = manifestGroups(entries).map(readManifestGroup(spark, tableDir, _))
+    // pruned scan of the touched partitions. Null and "" are both
+    // written to the default partition, which reads back as null: a
+    // batch holding either rewrites that segment, so its current rows
+    // must enter the merge (an `isin` never matches a null)
+    def current(touched: Seq[Any]): DataFrame =
+      groups.reduceOption(_ unionByName _)
+        .map { all =>
+          val p = col(partitionCol)
+          all.filter(if (touchesDefault(touched)) p.isin(touched: _*) || p.isNull
+                     else p.isin(touched: _*))
+            .withColumn(partitionCol, p.cast(pType))
+        }
+        .getOrElse(incoming.limit(0))
+    val currentSchema = current(Nil).schema
+    val batch =
+      if (!mayUseDriver || !UpsertWriter.coversOnDriver(currentSchema, incoming.schema, cfg)) None
+      else DriverPath.batchRows(incoming, DriverPath.DriverBatchRows).toOption
     // touched partitions: bounded by the incoming batch, never by the
     // table — a driver-side collect of partition VALUES only, probed
     // with a limit first (same guard as publishMergeDeletes) so a
     // mis-declared high-cardinality partition column refuses loudly
     // instead of funneling the driver
-    val touchedProbe = incoming.select(partitionCol).distinct()
-      .limit(MaxTouchedPartitions + 1).collect().map(_.get(0))
-    require(touchedProbe.length <= MaxTouchedPartitions,
+    val touched = batch match {
+      case Some(rows) =>
+        val p = incoming.schema.fieldIndex(partitionCol)
+        rows.map(_.get(p)).distinct.toSeq
+      case None =>
+        incoming.select(partitionCol).distinct()
+          .limit(MaxTouchedPartitions + 1).collect().map(_.get(0)).toSeq
+    }
+    require(touched.length <= MaxTouchedPartitions,
       s"publishMergePartitioned: incoming batch touches > " +
         s"$MaxTouchedPartitions distinct '$partitionCol' values — that is a " +
         "table rewrite, not a targeted merge; pick a coarser partition " +
         "column or split the publish")
-    val touched = touchedProbe
-    val current = assembleManifest(spark, tableDir, entries)
-      .map(_.filter(col(partitionCol).isin(touched: _*)) // pruned scan
-        .withColumn(partitionCol,
-          col(partitionCol).cast(incoming.schema(partitionCol).dataType)))
-      .getOrElse(incoming.limit(0))
-    val merged = graft.operators.UpsertWriter.merge(current, incoming, cfg).merged
-
-    val bnum = (manifestNumbers(fs, root) ++ batchNumbers(fs, root) ++
-      commitNumbers(fs, root) :+ 0L).max + 1
-    val bdir = f"b-$bnum%012d-$uid"
-    writePartitionedBatch(merged, partitionCol, s"$tableDir/$bdir")
-    // the segments Spark just wrote ARE the touched partitions, in its
-    // own path encoding — so replacement matches old entries by name
-    val written = fs.listStatus(new org.apache.hadoop.fs.Path(root, bdir))
-      .collect { case st if st.isDirectory &&
-        st.getPath.getName.startsWith(s"$partitionCol=") => st.getPath.getName }
-      .toSeq
+    val bdir = f"b-${nextNumber(fs, root)}%012d-$uid"
+    val onDriver = batch.flatMap(rows =>
+      touchedScans(groups, partitionCol, pType, touched).map(rows -> _))
+    val (merged, written) = onDriver match {
+      case Some((rows, scans)) =>
+        val curRows = scans.flatMap { scan =>
+          val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+            .createToScalaConverter(scan.schema)
+          org.apache.spark.sql.graftbridge.Bridge.readLocalParquet(spark, scan, scan.dataSchema)
+            .flatten.map(toRow(_).asInstanceOf[org.apache.spark.sql.Row])
+        }
+        val schema = DriverPath.schemaOf(("publishMergePartitioned", currentSchema,
+          incoming.schema, cfg))(UpsertWriter.merge(current(Nil), incoming, cfg).merged.schema)
+        val merged = DriverPath.localFrame(spark, UpsertWriter.mergedOnDriver(
+          curRows, currentSchema, rows.toSeq, incoming.schema, cfg), schema)
+        val written =
+          try org.apache.spark.sql.graftbridge.Bridge.writeLocalParquetPartitioned(
+            merged, partitionCol, s"$tableDir/$bdir")
+          catch { case t: Throwable =>
+            try deleteQuiet(fs, new org.apache.hadoop.fs.Path(root, bdir), recursive = true)
+            catch { case s: Throwable => t.addSuppressed(s) }
+            throw t
+          }
+        (merged, written)
+      case None =>
+        val merged = UpsertWriter.merge(current(touched), incoming, cfg).merged
+        writePartitionedBatch(merged, partitionCol, s"$tableDir/$bdir")
+        // the segments Spark just wrote ARE the touched partitions, in its
+        // own path encoding — so replacement matches old entries by name
+        (merged, fs.listStatus(new org.apache.hadoop.fs.Path(root, bdir))
+          .collect { case st if st.isDirectory &&
+            st.getPath.getName.startsWith(s"$partitionCol=") => st.getPath.getName }
+          .toSeq)
+    }
     // OCC commit: merged content was derived from `entries`' touched
     // partitions, so a rival commit to any of them refuses (stale
     // snapshot); disjoint rival commits rebase and retry.
     commitMergeManifestOrReclaim(fs, uri, conf, root, tableDir, partitionCol,
-      entries, written.toSet, rebaseOnOverlap = false, uid, bdir) { es =>
+      basis, entries, written.toSet, rebaseOnOverlap = false, uid, bdir) { es =>
       es.filterNot(e => written.contains(segmentOf(e))) ++
         written.map(s => s"$bdir/$s")
     }
     merged
   }
+
+  /** The driver reads of the touched partitions of a merge table whose
+    * batch dirs `groups` reads ([[readManifestGroup]], one frame per
+    * dir): per dir, the files whose partition value is a member of
+    * `touched`, and the default partition's when `touched` holds null
+    * or "" — what the distributed filter keeps. None — so the publish
+    * stays distributed — when a dir's frame is not one plain parquet
+    * relation partitioned by `partitionCol` alone, when the dirs'
+    * schemas differ (their union would widen or reorder), when the
+    * files exceed `DriverPath.DriverMergeBytes`, or when a dir's
+    * partition type, inferred from the directory names, is not the
+    * incoming column's `pType` or is a float or double. Then Scala
+    * equality on the two sides' values is Spark's equality; across
+    * types only the distributed `isin` applies Spark's coercion (a
+    * string '2024-01-01' against a date inferred from the path), and
+    * on doubles Spark's equality and Scala's part on NaN. */
+  private def touchedScans(groups: Seq[DataFrame], partitionCol: String, pType: DataType,
+      touched: Seq[Any]): Option[Seq[org.apache.spark.sql.graftbridge.Bridge.LocalParquetScan]] = {
+    val keep = touched.filter(_ != null).toSet
+    val keepDefault = touchesDefault(touched)
+    val fields = groups.headOption.map(_.schema.map(f => (f.name, f.dataType)))
+    val comparable = pType != FloatType && pType != DoubleType
+    val scans = groups.map { g =>
+      org.apache.spark.sql.graftbridge.Bridge.parquetScan(g).filter(s =>
+        comparable && s.partitionSchema.fieldNames.toSeq == Seq(partitionCol) &&
+          s.partitionSchema(0).dataType == pType &&
+          fields.contains(g.schema.map(f => (f.name, f.dataType))))
+        .map { s =>
+          val value = org.apache.spark.sql.catalyst.CatalystTypeConverters
+            .createToScalaConverter(pType)
+          s.copy(files = s.files.filter(f =>
+            if (f.partition.isNullAt(0)) keepDefault
+            else keep(value(f.partition.get(0, pType)))))
+        }
+    }
+    if (scans.forall(_.isDefined) &&
+        scans.flatten.map(_.bytes).sum <= graft.operators.DriverPath.DriverMergeBytes)
+      Some(scans.flatten.filter(_.files.nonEmpty))
+    else None
+  }
+
+  /** Whether a merge batch's partition values `touched` include one
+    * Spark writes to the default partition (null, or ""). */
+  private def touchesDefault(touched: Seq[Any]): Boolean =
+    touched.exists(v => v == null || v == "")
 
   /** Partitioned batch-dir write with §6 file sizing (r19): REBALANCE
     * by the partition column before the dynamic-partition write.
@@ -214,8 +325,7 @@ object Sources {
       val entries = manifestEntries(fs, root, partitionCol)
       if (entries.isEmpty) return false
       val uid = java.util.UUID.randomUUID().toString.take(8)
-      val next = (manifestNumbers(fs, root) ++ batchNumbers(fs, root) ++
-        commitNumbers(fs, root) :+ 0L).max + 1
+      val next = nextNumber(fs, root)
       val mfile0 = f"manifest-$next%012d-$uid"
       writeRaw(uri, conf, new org.apache.hadoop.fs.Path(root, mfile0),
         entries.sorted.mkString("\n"))
@@ -260,10 +370,9 @@ object Sources {
     val fs = org.apache.hadoop.fs.FileSystem.get(uri, conf)
     val root = new org.apache.hadoop.fs.Path(tableDir)
     adoptMergePartitioned(spark, tableDir, partitionCol): Unit
-    val (_, entries) = latestCommitted(fs, root, partitionCol)
+    val basis @ (_, entries) = latestCommitted(fs, root, partitionCol)
     val uid = java.util.UUID.randomUUID().toString.take(8)
-    val bnum = (manifestNumbers(fs, root) ++ batchNumbers(fs, root) ++
-      commitNumbers(fs, root) :+ 0L).max + 1
+    val bnum = nextNumber(fs, root)
     val bdir = f"b-$bnum%012d-$uid"
     // one segment file per partition per publish: without the
     // repartition, T tasks × P touched partitions emit T·P tiny files
@@ -280,7 +389,7 @@ object Sources {
     // always rebase, never refuse (rebaseOnOverlap). Both racing
     // appends' rows land (OccMergeSpec races this).
     commitMergeManifestOrReclaim(fs, uri, conf, root, tableDir, partitionCol,
-      entries, Set.empty, rebaseOnOverlap = true, uid, bdir) { es =>
+      basis, entries, Set.empty, rebaseOnOverlap = true, uid, bdir) { es =>
       es ++ written.map(s => s"$bdir/$s")
     }
   }
@@ -340,10 +449,9 @@ object Sources {
     val fs = org.apache.hadoop.fs.FileSystem.get(uri, conf)
     val root = new org.apache.hadoop.fs.Path(tableDir)
     adoptMergePartitioned(spark, tableDir, partitionCol): Unit
-    val (_, entries) = latestCommitted(fs, root, partitionCol)
+    val basis @ (_, entries) = latestCommitted(fs, root, partitionCol)
     val uid = java.util.UUID.randomUUID().toString.take(8)
-    val bnum = (manifestNumbers(fs, root) ++ batchNumbers(fs, root) ++
-      commitNumbers(fs, root) :+ 0L).max + 1
+    val bnum = nextNumber(fs, root)
     val bdir = f"b-$bnum%012d-$uid"
     // compaction output: advisory-sized files per partition via the
     // rebalanced write (r19) — the previous one-task-per-partition
@@ -374,7 +482,7 @@ object Sources {
             "re-read and retry"))
     }
     commitMergeManifestOrReclaim(fs, uri, conf, root, tableDir, partitionCol,
-      basisEntries, touchedSegs, rebaseOnOverlap = false, uid, bdir) { es =>
+      basis, basisEntries, touchedSegs, rebaseOnOverlap = false, uid, bdir) { es =>
       val newEntries =
         es.filterNot(e => replacedStr.contains(valueOfSeg(segmentOf(e)))) ++
           written.map(s => s"$bdir/$s")
@@ -425,7 +533,7 @@ object Sources {
     val root = new org.apache.hadoop.fs.Path(tableDir)
     require(fs.exists(new org.apache.hadoop.fs.Path(root, "_current")),
       s"publishMergeDeletes: '$tableDir' is not a manifest-published table")
-    val (_, entries) = latestCommitted(fs, root, partitionCol)
+    val basis @ (_, entries) = latestCommitted(fs, root, partitionCol)
     if (entries.isEmpty) return 0L
     // Bounded metadata collect: touched-partition cardinality is the ONLY
     // thing collected, and even that is probed with a limit first so a
@@ -482,8 +590,7 @@ object Sources {
       return 0L
     }
     val uid = java.util.UUID.randomUUID().toString.take(8)
-    val bnum = (manifestNumbers(fs, root) ++ batchNumbers(fs, root) ++
-      commitNumbers(fs, root) :+ 0L).max + 1
+    val bnum = nextNumber(fs, root)
     val current = assembleManifest(spark, tableDir, entries).get
       .filter(col(partitionCol).isin(touched: _*))
       .withColumn(partitionCol,
@@ -506,7 +613,7 @@ object Sources {
     // silent stale-snapshot commit would RESURRECT the rival's deleted
     // rows or drop its merged ones). Disjoint rivals rebase.
     commitMergeManifestOrReclaim(fs, uri, conf, root, tableDir, partitionCol,
-      entries, dropSegs ++ written, rebaseOnOverlap = false, uid, bdir) { es =>
+      basis, entries, dropSegs ++ written, rebaseOnOverlap = false, uid, bdir) { es =>
       // drop EVERY old entry of a touched partition (including ones the
       // rewrite emptied — merge publishes never empty a partition, so
       // this is the one place entries vanish by value, not by name)
@@ -894,14 +1001,20 @@ object Sources {
     * swap is folded in by the next publisher's rebase (the marker names
     * its manifest; readers see it at that publisher's swap).
     *
-    * `touchedSegs` = partition segments whose current content the caller
-    * consumed or replaces (by Spark-escaped segment name). `mkEntries`
-    * re-derives the new reference list from any base — it runs once per
-    * attempt. */
+    * `read` = the [[latestCommitted]] state the caller read on entry:
+    * the first attempt claims its successor without reading it again
+    * (sound by the dense-claim argument below — winning `commit-<n+1>`
+    * proves nothing committed since that read, however long ago it
+    * was); every later attempt re-reads. `basisEntries` = the reference
+    * list the caller's content derives from (its `read` entries, or an
+    * older pinned version). `touchedSegs` = partition segments whose
+    * current content the caller consumed or replaces (by Spark-escaped
+    * segment name). `mkEntries` re-derives the new reference list from
+    * any base — it runs once per attempt. */
   private def commitMergeManifest(fs: org.apache.hadoop.fs.FileSystem,
       uri: java.net.URI, conf: org.apache.hadoop.conf.Configuration,
       root: org.apache.hadoop.fs.Path, tableDir: String, partitionCol: String,
-      basisEntries: Seq[String], touchedSegs: Set[String],
+      read: (Long, Seq[String]), basisEntries: Seq[String], touchedSegs: Set[String],
       rebaseOnOverlap: Boolean, uid: String)(
       mkEntries: Seq[String] => Seq[String]): Unit = {
     // conflicts are ALWAYS judged against the caller's read basis (the
@@ -944,7 +1057,8 @@ object Sources {
       // content can never be a rival mid-write — it is provably dead,
       // and the fix that preserves density is to RECLAIM the corpse
       // and contest its number, not to number past it.
-      val (cNum, committed) = latestCommitted(fs, root, partitionCol)
+      val (cNum, committed) =
+        if (attempts == 1) read else latestCommitted(fs, root, partitionCol)
       refuseIfConflicting(committed)
       val next = cNum + 1
       val markerPath = new org.apache.hadoop.fs.Path(root, f"$CommitPrefix$next%012d")
@@ -979,11 +1093,11 @@ object Sources {
   private def commitMergeManifestOrReclaim(fs: org.apache.hadoop.fs.FileSystem,
       uri: java.net.URI, conf: org.apache.hadoop.conf.Configuration,
       root: org.apache.hadoop.fs.Path, tableDir: String, partitionCol: String,
-      basisEntries: Seq[String], touchedSegs: Set[String],
+      read: (Long, Seq[String]), basisEntries: Seq[String], touchedSegs: Set[String],
       rebaseOnOverlap: Boolean, uid: String, bdir: String)(
       mkEntries: Seq[String] => Seq[String]): Unit =
     try commitMergeManifest(fs, uri, conf, root, tableDir, partitionCol,
-      basisEntries, touchedSegs, rebaseOnOverlap, uid)(mkEntries)
+      read, basisEntries, touchedSegs, rebaseOnOverlap, uid)(mkEntries)
     catch {
       case e @ (_: java.util.ConcurrentModificationException |
                 _: IllegalStateException) =>
@@ -1063,41 +1177,29 @@ object Sources {
     * a specific RETAINED manifest number published (see
     * [[mergeVersions]]) — the merge-table twin of
     * [[readSnapshotVersion]], with the same pin-the-start-state /
-    * audit-the-pre-load-state uses. Fails loudly if pruned. When
-    * rival same-numbered manifests exist (lost swap races) the
-    * pointer-named one wins, else the choice is name-deterministic. */
+    * audit-the-pre-load-state uses. Fails loudly if pruned or never
+    * committed. Same-numbered manifests of lost claim races are never
+    * read: the version's `commit-<n>` marker names the one that won. */
   def readMergePartitionedVersion(spark: SparkSession, tableDir: String,
-      version: Long): DataFrame = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(tableDir), spark.sparkContext.hadoopConfiguration)
-    val root = new org.apache.hadoop.fs.Path(tableDir)
-    val named = manifestNames(fs, root).filter(numberOf(_, "manifest-") == version)
-    require(named.nonEmpty,
-      s"manifest $version not retained (have: ${mergeVersions(spark, tableDir).mkString(",")})")
-    val chosen = currentPointer(fs, root)
-      .filter(named.contains).getOrElse(named.min)
-    assembleManifest(spark, tableDir, readManifest(fs, root, chosen))
+      version: Long): DataFrame =
+    assembleManifest(spark, tableDir, retainedEntries(spark, tableDir, version))
       .getOrElse(spark.emptyDataFrame)
-  }
 
-  /** A retained manifest's reference list, chosen with the same
-    * rival-resolution rule as [[readMergePartitionedVersion]]; fails
-    * loudly when `version` was pruned (the incremental consumer
-    * lagged past retention — it must fall back to a full re-read, and
+  /** The reference list of retained manifest `version`: the one its
+    * `commit-<n>` marker names, never a losing attempt's same-numbered
+    * manifest (a publisher that crashed before deleting it leaves one
+    * behind, and its uid may sort first). Fails loudly when `version`
+    * was pruned or never committed (the incremental consumer lagged
+    * past retention — it must fall back to a full re-read, and
     * silently diffing against an empty list would report the whole
     * table as changed without saying so). */
   private def retainedEntries(spark: SparkSession, tableDir: String,
       version: Long): Seq[String] = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(tableDir), spark.sparkContext.hadoopConfiguration)
-    val root = new org.apache.hadoop.fs.Path(tableDir)
-    val named = manifestNames(fs, root).filter(numberOf(_, "manifest-") == version)
-    require(named.nonEmpty,
-      s"manifest $version not retained (have: ${mergeVersions(spark, tableDir).mkString(",")})")
-    val chosen = currentPointer(fs, root)
-      .filter(named.contains).getOrElse(named.min)
-    readManifestOpt(fs, root, chosen).getOrElse(throw new IllegalStateException(
-      s"manifest $chosen vanished mid-read — pruned during the changes scan"))
+    committedEntriesAt(fs, new org.apache.hadoop.fs.Path(tableDir), version).getOrElse(
+      throw new IllegalArgumentException(s"manifest $version not retained or never " +
+        s"committed (have: ${mergeVersions(spark, tableDir).mkString(",")})"))
   }
 
   /** Changed-partition feed (partition-level CDC) over a
@@ -1368,6 +1470,16 @@ object Sources {
     Some(out)
   }
 
+  /** Sidecar fpp for BATCH-shaped keyed reads (an index apply's
+    * ~feed-sized id set): dir-skipping needs the whole KEY SET to
+    * miss, so the per-dir read probability is 1-(1-fpp)^keys — at the
+    * default 0.01 a 500-key lookup reads ~every dir (99.3%), at 1e-4
+    * it reads ~5% of non-matching dirs. Costs 2× the sidecar bytes
+    * (~19 vs ~10 bits/key — still KBs for doclen, tens of MB for a
+    * postings-sized table at sf10). The index maintenance layers
+    * build with this; single-key point lookups are fine either way. */
+  val BatchLookupFpp: Double = 1e-4
+
   /** Build per-dir Bloom key filters for a
     * [[publishMergePartitioned]] table: every immutable top-level dir
     * (`b-*` batch dirs AND adopted `col=val` partition dirs — round
@@ -1383,20 +1495,24 @@ object Sources {
     * Spark's sketch hashes are fixed-seed), so the tmp+rename race is
     * benign. At 100 TB this is the off-critical-path index build: the
     * publish stays lean, and a nightly indexer touches only the new
-    * batch dirs' key columns. Returns the number of filters built. */
-  /** Sidecar fpp for BATCH-shaped keyed reads (an index apply's
-    * ~feed-sized id set): dir-skipping needs the whole KEY SET to
-    * miss, so the per-dir read probability is 1-(1-fpp)^keys — at the
-    * default 0.01 a 500-key lookup reads ~every dir (99.3%), at 1e-4
-    * it reads ~5% of non-matching dirs. Costs 2× the sidecar bytes
-    * (~19 vs ~10 bits/key — still KBs for doclen, tens of MB for a
-    * postings-sized table at sf10). The index maintenance layers
-    * build with this; single-key point lookups are fine either way. */
-  val BatchLookupFpp: Double = 1e-4
-
+    * batch dirs' key columns. Returns the number of filters built.
+    *
+    * When the un-indexed dirs' parquet files total at most
+    * `DriverPath.DriverStoreBytes` and the key type is one the bloom
+    * aggregate takes, the key column is read on the driver
+    * (`Bridge.readLocalParquet`) and each dir's filter built there by
+    * the same `BloomFilterAggregate` calls a job would make (same
+    * sizing, same updater), so the sidecar bytes are those of the
+    * one-job build and no job runs. Above the bound, one job builds
+    * them all ([[bloomsInOneJob]]). */
   def indexBatchKeys(spark: SparkSession, tableDir: String, keyCol: String,
-      fpp: Double = 0.01): Int = {
-    import org.apache.spark.sql.functions.{col, when, lit}
+      fpp: Double = 0.01): Int =
+    indexBatchKeys(spark, tableDir, keyCol, fpp, mayUseDriver = true)
+
+  /** [[indexBatchKeys]], with the driver build off when `mayUseDriver`
+    * is false: the one-job build the driver build must agree with. */
+  private[sources] def indexBatchKeys(spark: SparkSession, tableDir: String, keyCol: String,
+      fpp: Double, mayUseDriver: Boolean): Int = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(tableDir), spark.sparkContext.hadoopConfiguration)
     val root = new org.apache.hadoop.fs.Path(tableDir)
@@ -1408,51 +1524,102 @@ object Sources {
     // dir's key column once to COUNT and once more to build, plus one
     // driver-serialized Spark job pair per dir
     val conf = spark.sparkContext.hadoopConfiguration
-    val counted = todo.map { dir =>
+    val footers = todo.map { dir =>
       footerStats(fs, conf, new org.apache.hadoop.fs.Path(root, dir))
     }
-    val sized = todo.zip(counted.map(_._1))
     // schema-evolution guard: a dir whose files LACK the key column
     // must fail LOUDLY like the per-dir build would (the bulk scan's
     // union schema would otherwise read it as null and write an empty
     // bloom — keyed lookups would then silently SKIP that dir's rows)
-    requireColumnEverywhere(todo, counted, keyCol, "indexBatchKeys")
-    // ONE Spark job builds every filter: a single scan of the
-    // un-indexed dirs with one bloom_filter_agg PER DIR (each sized
-    // exactly as the per-dir build would be, each fed only its dir's
-    // rows via a null-gated child — aggregate updates skip nulls).
-    // Insertion is commutative, so the bits are byte-identical to the
-    // serial per-dir stat.bloomFilter build, which rides the SAME
-    // BloomFilterAggregate expression underneath. The scan carries
-    // the footer-derived schema (no inference job) and a recursive
-    // file lookup (no partition discovery — the partition column is
-    // not needed, underscore sidecars are filtered by Spark's listing
-    // rules), so the WHOLE build is one non-adaptive aggregation job.
-    val scan = bulkScan(nonAdaptive(spark), tableDir, todo,
-      counted.collectFirst { case (_, ms) if ms.nonEmpty => ms.head }, keyCol)
-    val aggs: Seq[org.apache.spark.sql.Column] = sized.map { case (dir, n) =>
-      val items = math.max(n, 1L)
-      val numBits = org.apache.spark.util.sketch.BloomFilter.optimalNumOfBits(items, fpp)
-      org.apache.spark.sql.graftbridge.Bridge.column(
-        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-          org.apache.spark.sql.graftbridge.Bridge.expression(
-            when(col("_bdir") === lit(dir), col(keyCol))),
-          org.apache.spark.sql.catalyst.expressions.Literal(items),
-          org.apache.spark.sql.catalyst.expressions.Literal(numBits), 0, 0)
-          .toAggregateExpression()).as(dir)
-    }
-    val row = scan.agg(aggs.head, aggs.tail: _*).head()
-    sized.zipWithIndex.foreach { case ((dir, n), i) =>
-      val bloom =
-        if (row.isNullAt(i)) // zero-row dir: aggregate saw no input
-          org.apache.spark.util.sketch.BloomFilter.create(math.max(n, 1L), fpp)
-        else
-          org.apache.spark.util.sketch.BloomFilter.readFrom(
-            new java.io.ByteArrayInputStream(row.getAs[Array[Byte]](i)))
+    requireColumnEverywhere(todo, footers, keyCol, "indexBatchKeys")
+    val firstSchema = footers.collectFirst { case f if f.schemas.nonEmpty => f.schemas.head }
+    val onDriver =
+      if (mayUseDriver &&
+          footers.map(_.bytes).sum <= graft.operators.DriverPath.DriverStoreBytes)
+        bloomsOnDriver(spark, footers, firstSchema, keyCol, fpp)
+      else None
+    val blooms = onDriver.getOrElse(
+      bloomsInOneJob(spark, tableDir, todo, footers, firstSchema, keyCol, fpp))
+    todo.zip(blooms).foreach { case (dir, bloom) =>
       writeSidecar(fs, new org.apache.hadoop.fs.Path(root, dir),
         s"_keybloom-$keyCol")(out => bloom.writeTo(out))
     }
-    sized.size
+    todo.size
+  }
+
+  /** The bloom filter aggregate [[bloomsInOneJob]] runs for a dir of
+    * `rows` rows, over `child`: sized from the footer row count. */
+  private def bloomAggregate(child: org.apache.spark.sql.catalyst.expressions.Expression,
+      rows: Long, fpp: Double) = {
+    val items = math.max(rows, 1L)
+    new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(child,
+      org.apache.spark.sql.catalyst.expressions.Literal(items),
+      org.apache.spark.sql.catalyst.expressions.Literal(
+        org.apache.spark.util.sketch.BloomFilter.optimalNumOfBits(items, fpp)), 0, 0)
+  }
+
+  /** A dir's filter from the aggregate's result: a dir whose aggregate
+    * saw no non-null key (zero rows) gets an empty filter of the same
+    * requested size. */
+  private def bloomOf(bytes: Option[Array[Byte]], rows: Long,
+      fpp: Double): org.apache.spark.util.sketch.BloomFilter =
+    bytes.fold(org.apache.spark.util.sketch.BloomFilter.create(math.max(rows, 1L), fpp))(b =>
+      org.apache.spark.util.sketch.BloomFilter.readFrom(new java.io.ByteArrayInputStream(b)))
+
+  /** Every dir's filter from ONE Spark job: a single scan of the
+    * un-indexed dirs with one bloom_filter_agg PER DIR (each sized
+    * exactly as the per-dir build would be, each fed only its dir's
+    * rows via a null-gated child — aggregate updates skip nulls).
+    * Insertion is commutative, so the bits are byte-identical to the
+    * serial per-dir stat.bloomFilter build, which rides the SAME
+    * BloomFilterAggregate expression underneath. The scan carries the
+    * footer-derived schema (no inference job) and a recursive file
+    * lookup (no partition discovery — the partition column is not
+    * needed, underscore sidecars are filtered by Spark's listing
+    * rules), so the WHOLE build is one non-adaptive aggregation job. */
+  private def bloomsInOneJob(spark: SparkSession, tableDir: String,
+      dirs: Seq[String], footers: Seq[Footers],
+      firstSchema: Option[org.apache.parquet.schema.MessageType], keyCol: String,
+      fpp: Double): Seq[org.apache.spark.util.sketch.BloomFilter] = {
+    import org.apache.spark.sql.functions.{col, when, lit}
+    import org.apache.spark.sql.graftbridge.Bridge
+    val scan = bulkScan(nonAdaptive(spark), tableDir, dirs, firstSchema, keyCol)
+    val aggs = dirs.zip(footers).map { case (dir, f) =>
+      Bridge.column(bloomAggregate(Bridge.expression(when(col("_bdir") === lit(dir),
+        col(keyCol))), f.rows, fpp).toAggregateExpression()).as(dir)
+    }
+    val row = scan.agg(aggs.head, aggs.tail: _*).head()
+    footers.indices.map(i =>
+      bloomOf(if (row.isNullAt(i)) None else Some(row.getAs[Array[Byte]](i)), footers(i).rows, fpp))
+  }
+
+  /** Every dir's filter built on the driver: the key column of the
+    * footers' files read with Spark's parquet reader, fed per dir to
+    * the aggregate [[bloomsInOneJob]] runs, through its own buffer,
+    * update and result calls. None when no dir holds a data file or
+    * the aggregate does not take the key's type (the job then runs,
+    * or fails on it as loudly as before). */
+  private def bloomsOnDriver(spark: SparkSession, footers: Seq[Footers],
+      firstSchema: Option[org.apache.parquet.schema.MessageType], keyCol: String,
+      fpp: Double): Option[Seq[org.apache.spark.util.sketch.BloomFilter]] = {
+    import org.apache.spark.sql.graftbridge.Bridge
+    import org.apache.spark.sql.types.StructField
+    val key = firstSchema.map(m => org.apache.spark.sql.catalyst.expressions.BoundReference(0,
+      new org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter()
+        .convert(m)(keyCol).dataType, true))
+    key.filter(bloomAggregate(_, 1L, fpp).checkInputDataTypes().isSuccess).map { k =>
+      val required = StructType(Seq(StructField(keyCol, k.dataType)))
+      val rows = Bridge.readLocalParquet(spark, Bridge.LocalParquetScan(
+        footers.flatMap(_.files.map(st => Bridge.ParquetFile(st.getPath, st.getLen,
+          org.apache.spark.sql.catalyst.InternalRow.empty))),
+        required, StructType(Nil), Map.empty), required).iterator
+      footers.map { f =>
+        val agg = bloomAggregate(k, f.rows, fpp)
+        val bloom = f.files.iterator.flatMap(_ => rows.next())
+          .foldLeft(agg.createAggregationBuffer())(agg.update)
+        bloomOf(Option(agg.eval(bloom).asInstanceOf[Array[Byte]]), f.rows, fpp)
+      }
+    }
   }
 
   /** Round-9 shape of [[indexBatchKeys]] (serial driver loop, one
@@ -1524,9 +1691,10 @@ object Sources {
     * whose first file does. */
   private def footerStats(fs: org.apache.hadoop.fs.FileSystem,
       conf: org.apache.hadoop.conf.Configuration,
-      dir: org.apache.hadoop.fs.Path): (Long, Seq[org.apache.parquet.schema.MessageType]) = {
+      dir: org.apache.hadoop.fs.Path): Footers = {
     var total = 0L
     val schemas = scala.collection.mutable.ArrayBuffer.empty[org.apache.parquet.schema.MessageType]
+    val files = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.FileStatus]
     // depth-first in listing order, as listFiles(dir, true) walks, but
     // through listStatus: listFiles builds a LocatedFileStatus, which
     // asks every entry for its permission — a forked `ls -ld` per file
@@ -1539,11 +1707,20 @@ object Sources {
         try {
           total += reader.getRecordCount
           schemas += reader.getFileMetaData.getSchema
+          files += st
         } finally reader.close()
       }
     }
     visit(dir)
-    (total, schemas.toSeq)
+    Footers(total, schemas.toSeq, files.toSeq)
+  }
+
+  /** What [[footerStats]] read of one dir: its row count, every data
+    * file's parquet schema, and the files themselves. */
+  private[sources] final case class Footers(rows: Long,
+      schemas: Seq[org.apache.parquet.schema.MessageType],
+      files: Seq[org.apache.hadoop.fs.FileStatus]) {
+    def bytes: Long = files.map(_.getLen).sum
   }
 
   /** One tagged scan over all `dirs`: footer-derived schema (no
@@ -1592,10 +1769,10 @@ object Sources {
     * already opened by [[footerStats]], so intra-dir drift (a LATER
     * file missing the column) is caught, not just the first file. */
   private def requireColumnEverywhere(dirs: Seq[String],
-      stats: Seq[(Long, Seq[org.apache.parquet.schema.MessageType])],
+      stats: Seq[Footers],
       colName: String, caller: String): Unit = {
     var refType: Option[String] = None
-    dirs.zip(stats).foreach { case (dir, (rows, schemas)) =>
+    dirs.zip(stats).foreach { case (dir, Footers(rows, schemas, _)) =>
       if (rows > 0) schemas.foreach { m =>
         val idx = (0 until m.getFieldCount).find(i => m.getType(i).getName == colName)
         require(idx.isDefined,
@@ -1663,11 +1840,10 @@ object Sources {
     val fs = org.apache.hadoop.fs.FileSystem.get(uri, conf)
     val root = new org.apache.hadoop.fs.Path(tableDir)
     adoptMergePartitioned(spark, tableDir, partitionCol): Unit
-    val (_, entries) = latestCommitted(fs, root, partitionCol)
+    val basis @ (_, entries) = latestCommitted(fs, root, partitionCol)
     val state = assembleManifest(spark, tableDir, entries).getOrElse(return 0)
     val uid = java.util.UUID.randomUUID().toString.take(8)
-    val bnum = (manifestNumbers(fs, root) ++ batchNumbers(fs, root) ++
-      commitNumbers(fs, root) :+ 0L).max + 1
+    val bnum = nextNumber(fs, root)
     val bdir = f"b-$bnum%012d-$uid"
     state.repartition(col(partitionCol))
       .write.mode(SaveMode.Overwrite)
@@ -1678,7 +1854,7 @@ object Sources {
       .toSeq
     val compacted = entries.map(segmentOf).toSet
     commitMergeManifestOrReclaim(fs, uri, conf, root, tableDir, partitionCol,
-      entries, compacted ++ written, rebaseOnOverlap = false, uid, bdir) { es =>
+      basis, entries, compacted ++ written, rebaseOnOverlap = false, uid, bdir) { es =>
       es.filterNot(e => compacted.contains(segmentOf(e))) ++
         written.map(s => s"$bdir/$s")
     }
@@ -1753,15 +1929,15 @@ object Sources {
     // one-aggregation-job-per-dir driver loop): (dir, min, max) rows,
     // one per dir, collected driver-side — dir count, never data
     val conf = spark.sparkContext.hadoopConfiguration
-    val counted = todo.map { d =>
+    val footers = todo.map { d =>
       footerStats(fs, conf, new org.apache.hadoop.fs.Path(root, d))
     }
     // same loud schema-evolution guard as the bloom builder: an
     // all-null zonemap from a missing column would mark the dir
     // 'empty' and range scans would silently skip its rows
-    requireColumnEverywhere(todo, counted, statCol, "indexBatchStats")
+    requireColumnEverywhere(todo, footers, statCol, "indexBatchStats")
     val grouped = bulkScan(nonAdaptive(spark), tableDir, todo,
-      counted.collectFirst { case (_, ms) if ms.nonEmpty => ms.head }, statCol)
+      footers.collectFirst { case f if f.schemas.nonEmpty => f.schemas.head }, statCol)
       .groupBy("_bdir")
       .agg(fmin(col(statCol)).as("_lo"), fmax(col(statCol)).as("_hi"))
     val stats = grouped.collect()
@@ -2071,8 +2247,10 @@ object Sources {
     * parquet file directly or the footer lacks the key. */
   private def writtenSchema(spark: SparkSession, dir: String): Option[StructType] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(dir), conf)
-    fs.listStatus(new org.apache.hadoop.fs.Path(dir))
+    // through a Path: a partition segment may hold a character a URI
+    // may not (Spark's path escaping leaves a space as it is)
+    val path = new org.apache.hadoop.fs.Path(dir)
+    path.getFileSystem(conf).listStatus(path)
       .find(st => st.isFile && isDataFile(st.getPath.getName)).flatMap { st =>
         val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
           org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
@@ -2109,16 +2287,22 @@ object Sources {
     val digits = name.stripPrefix(prefix).takeWhile(_.isDigit)
     if (digits.isEmpty) 0L else java.lang.Long.parseLong(digits)
   }
-  private def manifestNumbers(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Seq[Long] =
-    manifestNames(fs, root).map(numberOf(_, "manifest-"))
-  private def batchNumbers(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Seq[Long] =
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq.collect {
-      case st if st.isDirectory && st.getPath.getName.startsWith("b-") =>
-        numberOf(st.getPath.getName, "b-")
-    }
+  /** One above every number a merge table's root holds — manifests,
+    * batch dirs and commit markers — from one listing: the number a
+    * new batch dir takes. */
+  private def nextNumber(fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path): Long = {
+    val listed =
+      try fs.listStatus(root).toSeq
+      catch { case _: java.io.FileNotFoundException => Seq.empty }
+    (listed.map { st =>
+      val name = st.getPath.getName
+      if (st.isFile && name.startsWith("manifest-")) numberOf(name, "manifest-")
+      else if (st.isDirectory && name.startsWith("b-")) numberOf(name, "b-")
+      else if (st.isFile && name.startsWith(CommitPrefix)) numberOf(name, CommitPrefix)
+      else 0L
+    } :+ 0L).max + 1
+  }
 
   /** Sidecar-free small-file write (create or overwrite, parents
     * created). On file:// it goes through java.nio: Hadoop's local
@@ -2543,7 +2727,7 @@ object Sources {
     val (next, uid, vdir) =
       claimSnapshotVersion(fs, uri, root, tableRoot, basis)
     releaseClaimOnFailure(fs, uri, conf, root, next, uid, vdir) {
-      writeSnapshotMember(df, uri, fs, s"$tableRoot/$vdir")
+      writeSnapshotMember(df, s"$tableRoot/$vdir")
     }
     // atomic pointer swap: write a temp pointer raw (java.nio on
     // file://, no checksum sidecar — see writeRaw), rename it OVER the
@@ -2588,15 +2772,10 @@ object Sources {
     * commit point: a failure here releases the claim
     * ([[releaseClaimOnFailure]]); a crash leaves an unswapped dir for
     * the prune. */
-  private def writeSnapshotMember(df: DataFrame, uri: java.net.URI,
-      fs: org.apache.hadoop.fs.FileSystem, dir: String): Unit =
-    if (graft.operators.DriverPath.isLocal(df) && graft.operators.DriverPath.fits(df)) {
-      val path = new org.apache.hadoop.fs.Path(dir)
-      if (Option(uri.getScheme).forall(_ == "file"))
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(path.toUri.getPath)): Unit
-      else fs.mkdirs(path): Unit
+  private def writeSnapshotMember(df: DataFrame, dir: String): Unit =
+    if (graft.operators.DriverPath.isLocal(df) && graft.operators.DriverPath.fits(df))
       org.apache.spark.sql.graftbridge.Bridge.writeLocalParquet(df, dir): Unit
-    } else df.write.mode(SaveMode.Overwrite).parquet(dir)
+    else df.write.mode(SaveMode.Overwrite).parquet(dir)
 
   /** Resolve a snapshot root to its live data directory: follow the
     * `_current` pointer if present; otherwise (pre-versioning layout,
@@ -2702,7 +2881,7 @@ object Sources {
     // write has finished, and releases the claim.
     releaseClaimOnFailure(fs, uri, conf, root, next, uid, vdir) {
       graft.operators.IndexMaintenance.inParallel(frames) { case (member, df) =>
-        writeSnapshotMember(df, uri, fs, s"$tableRoot/$vdir/$member")
+        writeSnapshotMember(df, s"$tableRoot/$vdir/$member")
       }: Unit
     }
     swapSnapshotOrRefuse(fs, uri, conf, root, tableRoot, vdir, next, uid)

@@ -324,7 +324,7 @@ class IdentityDriverPathSpec extends DriverPathHarness {
   }
 
   test("above DriverBatchRows the distributed path runs, one bounded collect more") {
-    val n = DriverBatchRows + 1
+    val n = DriverPath.DriverBatchRows + 1
     val big = spark.range(n).select(col("id").as("request_id"),
       lit(5).as("center_id"), concat(lit("id-"), col("id").cast("string")).as("local_subject_id"),
       lit("primary").as("identifier_type"))

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{IdentityResolver, IncrementalIdentity}
+import graft.operators.{DriverPath, IdentityResolver, IncrementalIdentity}
 import graft.sources.Sources
 
 /** The continuous-MDM composition: checkpointed row-level change-feed
@@ -180,7 +180,7 @@ class IncrementalIdentitySpec extends SparkSpec {
     val root = tmp("big")
     val (fragDir, ckDir, regRoot) = (s"$root/f", s"$root/ck", s"$root/r")
     IncrementalIdentity.publishRegistry(reg0, regRoot)
-    val n = IdentityResolver.DriverBatchRows + 1
+    val n = DriverPath.DriverBatchRows + 1
     // every row new except one re-presenting the registry's "a"
     val rows = (1 to n).map(i => (i.toLong, 1, if (i == 1) "A" else s"new-$i"))
     Sources.publishMergePartitioned(spark, fragDir, frag(rows), cfg, "p")

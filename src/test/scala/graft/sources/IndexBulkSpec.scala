@@ -6,15 +6,18 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import org.apache.spark.sql.functions.col
 
-import graft.SparkSpec
+import graft.DriverPathHarness
+import graft.operators.DriverPath
 
 /** The round-10 bulk index builders: ONE Spark job indexes N batch
   * dirs (footer-metadata sizing, no per-dir count pass), and the
   * sidecar bytes are IDENTICAL to the round-9 serial per-dir build —
   * bloom (same BloomFilterAggregate expression, same per-dir
   * n/numBits, commutative insertion) and zonemap (same min/max, same
-  * repr writer). */
-class IndexBulkSpec extends SparkSpec {
+  * repr writer). Un-indexed dirs of at most `DriverPath.DriverStoreBytes`
+  * build their bloom filters on the driver with no job, through the
+  * same aggregate, so the bytes are the same there too. */
+class IndexBulkSpec extends DriverPathHarness {
   import spark.implicits._
 
   private def mkTable(tag: String): String = {
@@ -27,6 +30,7 @@ class IndexBulkSpec extends SparkSpec {
     def batch(lo: Long, hi: Long, pBase: Int) =
       (lo to hi).map(i => (i, s"name-$i", java.sql.Timestamp.valueOf(
         f"2024-01-${(i % 27) + 1}%02d 00:00:00"))).toDF("k", "name", "ts")
+        .withColumn("ki", (org.apache.spark.sql.functions.col("k") * 7).cast("int"))
         .withColumn("p",
           (org.apache.spark.sql.functions.col("k") % 2 + pBase).cast("int"))
     Sources.publishMergePartitioned(spark, dir, batch(1, 40, 0), cfg, "p")
@@ -52,21 +56,54 @@ class IndexBulkSpec extends SparkSpec {
     }.toMap
   }
 
+  /** A plain (pre-manifest) `p=<v>` layout whose `p=9` dir holds one
+    * zero-row parquet file: every `p=` dir is indexed, the empty one
+    * from a footer count of 0. */
+  private def mkPlainWithEmptyDir(tag: String): String = {
+    val dir = Files.createTempDirectory(s"graft_idx_$tag").toString + "/t"
+    val rows = (1L to 30L).map(i => (i, s"name-$i", (i * 7).toInt, (i % 2).toInt))
+      .toDF("k", "name", "ki", "p")
+    rows.write.partitionBy("p").parquet(dir)
+    rows.drop("p").limit(0).coalesce(1).write.parquet(s"$dir/p=9")
+    dir
+  }
+
+  private def plainSidecars(dir: String, name: String): Seq[Array[Byte]] =
+    new java.io.File(dir).listFiles().filter(_.getName.startsWith("p=")).sortBy(_.getName)
+      .map(d => Files.readAllBytes(new java.io.File(d, name).toPath)).toSeq
+
   test("bulk bloom build is byte-identical to the serial build (long and string keys)") {
-    Seq("k", "name").foreach { keyCol =>
+    // serial per-dir jobs, the one-job build and the driver build, over
+    // long, int and string keys; then the same over a layout holding a
+    // zero-row dir
+    Seq("k", "ki", "name").foreach { keyCol =>
       val a = mkTable(s"ser_$keyCol")
       val b = mkTable(s"blk_$keyCol")
+      val c = mkTable(s"drv_$keyCol")
       assert(Sources.indexBatchKeysSerial(spark, a, keyCol) == 3)
-      assert(Sources.indexBatchKeys(spark, b, keyCol) == 3)
-      val sa = sidecars(a, s"_keybloom-$keyCol")
-      val sb = sidecars(b, s"_keybloom-$keyCol")
-      assert(sa.keySet.size == 3 && sb.keySet.size == 3)
-      // dir names differ across tables (uid suffix) — compare the
-      // SORTED byte blobs (publish order fixes the content per slot)
-      val ba = sa.toSeq.sortBy(_._1).map(_._2)
-      val bb = sb.toSeq.sortBy(_._1).map(_._2)
-      ba.zip(bb).foreach { case (x, y) =>
+      assert(Sources.indexBatchKeys(spark, b, keyCol, 0.01, mayUseDriver = false) == 3)
+      val (built, rep) = measured(Sources.indexBatchKeys(spark, c, keyCol))
+      assert(built == 3 && rep.jobs == 0, rep.jobSites.mkString("\n"))
+      val blobs = Seq(a, b, c).map { t =>
+        val sc = sidecars(t, s"_keybloom-$keyCol")
+        assert(sc.keySet.size == 3)
+        // dir names differ across tables (uid suffix) — compare the
+        // SORTED byte blobs (publish order fixes the content per slot)
+        sc.toSeq.sortBy(_._1).map(_._2)
+      }
+      blobs.tail.foreach(_.zip(blobs.head).foreach { case (x, y) =>
         assert(java.util.Arrays.equals(x, y), s"bloom bytes differ for keyCol=$keyCol")
+      })
+      // the serial build cannot size a zero-row dir (its aggregate
+      // returns null): the one-job and driver builds must agree there
+      val (pb, pc) = (mkPlainWithEmptyDir(s"pblk_$keyCol"), mkPlainWithEmptyDir(s"pdrv_$keyCol"))
+      assert(Sources.indexBatchKeys(spark, pb, keyCol, 0.01, mayUseDriver = false) == 3)
+      val (plainBuilt, plainRep) = measured(Sources.indexBatchKeys(spark, pc, keyCol))
+      assert(plainBuilt == 3 && plainRep.jobs == 0, plainRep.jobSites.mkString("\n"))
+      val (sb, sc) = (plainSidecars(pb, s"_keybloom-$keyCol"), plainSidecars(pc, s"_keybloom-$keyCol"))
+      assert(sb.size == 3)
+      sb.zip(sc).foreach { case (x, y) =>
+        assert(java.util.Arrays.equals(x, y), s"bloom bytes differ for keyCol=$keyCol (plain)")
       }
     }
   }
@@ -90,8 +127,31 @@ class IndexBulkSpec extends SparkSpec {
   // the listener bus is async; a short settle keeps the count exact
   private def waitForListeners(): Unit = Thread.sleep(500)
 
+  /** Three batch dirs whose parquet files together exceed
+    * `DriverPath.DriverStoreBytes` by a quarter: random longs do not
+    * compress. */
+  private def mkTableAboveDriverBound(): String = {
+    import org.apache.spark.sql.functions.{lit, xxhash64}
+    val dir = Files.createTempDirectory("graft_idx_big").toString + "/t"
+    val rows = DriverPath.DriverStoreBytes * 5 / 4 / 8 / 3
+    (0 until 3).foreach { b =>
+      Sources.publishMergeAppend(spark, dir,
+        spark.range(b * rows, (b + 1) * rows)
+          .select(xxhash64(col("id")).as("k"), lit(b).as("p")), "p")
+    }
+    dir
+  }
+
   test("bulk key index runs ONE Spark job for N dirs; idempotent re-run runs none") {
-    val dir = mkTable("onejob")
+    // under DriverStoreBytes the filters build on the driver: no job
+    val small = mkTable("onejob_small")
+    val (built, underBound) = measured(Sources.indexBatchKeys(spark, small, "k"))
+    assert(built == 3 && underBound.jobs == 0, underBound.jobSites.mkString("\n"))
+    val dir = mkTableAboveDriverBound()
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
+    assert(fs.getContentSummary(new org.apache.hadoop.fs.Path(dir)).getLength >
+      DriverPath.DriverStoreBytes)
     @volatile var jobs = 0
     val listener = new SparkListener {
       override def onJobStart(jobStart: SparkListenerJobStart): Unit = jobs += 1
@@ -119,10 +179,13 @@ class IndexBulkSpec extends SparkSpec {
     Sources.publishMergePartitioned(spark, dir,
       (11L to 20L).map(i => (i, s"v$i", i * 2)).toDF("k", "v", "extra")
         .withColumn("p", (col("k") % 2).cast("int")), cfg, "p")
-    val e1 = intercept[IllegalArgumentException] {
-      Sources.indexBatchKeys(spark, dir, "extra")
+    // both bloom builds: on the driver and in one job
+    Seq(true, false).foreach { onDriver =>
+      val e1 = intercept[IllegalArgumentException] {
+        Sources.indexBatchKeys(spark, dir, "extra", 0.01, mayUseDriver = onDriver)
+      }
+      assert(e1.getMessage.contains("no column 'extra'"))
     }
-    assert(e1.getMessage.contains("no column 'extra'"))
     val e2 = intercept[IllegalArgumentException] {
       Sources.indexBatchStats(spark, dir, "extra")
     }

@@ -346,4 +346,29 @@ class OccMergeSpec extends SparkSpec {
       Seq(("after", 2, "c")).toDF("k", "p", "v"), "p")
     assert(rowsOf(dir).contains(("after", 2, "c")))
   }
+
+  test("time travel and the change feed read the committed manifest, never a losing attempt's") {
+    val dir = freshDir()
+    Sources.publishMergePartitioned(spark, dir,
+      Seq(("a", 1, "v1"), ("b", 2, "v1")).toDF("k", "p", "v"), cfg, "p"): Unit
+    for (v <- Seq("v2", "v3"))
+      Sources.publishMergePartitioned(spark, dir, Seq(("a", 1, v)).toDF("k", "p", "v"),
+        cfg, "p"): Unit
+    // a publisher that lost the claim for version 2 and crashed before
+    // deleting its attempt: its manifest names only the partition it
+    // rewrote, and its uid sorts before the committed one's
+    val committed2 = Files.readString(java.nio.file.Paths.get(dir, "commit-000000000002")).trim
+    val entries2 = Files.readString(java.nio.file.Paths.get(dir, committed2))
+    val loser = "manifest-000000000002-00000000"
+    assert(loser < committed2)
+    Files.write(java.nio.file.Paths.get(dir, loser),
+      entries2.split("\n").filter(_.endsWith("/p=1")).mkString("\n").getBytes("UTF-8")): Unit
+    def rows(df: org.apache.spark.sql.DataFrame): Set[(String, Int, String)] =
+      df.select(col("k"), col("p").cast("int"), col("v")).collect()
+        .map(r => (r.getString(0), r.getInt(1), r.getString(2))).toSet
+    assert(rows(Sources.readMergePartitionedVersion(spark, dir, 2L)) ==
+      Set(("a", 1, "v2"), ("b", 2, "v1")))
+    assert(rows(Sources.readMergePartitionedChanges(spark, dir, 2L, "p")) ==
+      Set(("a", 1, "v3")))
+  }
 }

@@ -1,8 +1,8 @@
 #!/usr/bin/env python3
-"""Per-span Spark job table from a perfbench artifact and a Spark event log.
+"""Per-span Spark job, file-operation and fork tables from a perfbench artifact.
 
 Usage:
-    python3 tools/cycle_jobs.py ARTIFACT.json EVENTLOG [--span NAME ...] [--all-ops]
+    python3 tools/cycle_jobs.py ARTIFACT.json [EVENTLOG] [--jfr FILE] [--span NAME ...] [--all-ops]
 
 ARTIFACT.json is a traced perfbench artifact (`run.py --trace 1`, kept
 under .bench_build/perfbench/results/). EVENTLOG is the event log of the
@@ -21,12 +21,17 @@ are listed under `-`. A job belongs to a span when its `perfbench.span`
 property names the span's id, or, lacking the property, when it was
 submitted inside the span's [start_ms, end_ms] window.
 
+Every span header also carries the artifact's own facets for the span,
+`fs_ops=` (Hadoop FileSystem/FileContext calls the traced run counted)
+and `written_mb=`, and the tool ends with an "fs_ops per span" table
+beside "jobs per span", so the artifact alone (no EVENTLOG, no --jfr)
+already gives the per-occurrence fs_ops of every span.
+
 With --jfr FILE (a JFR recording of the same run, e.g. from
 `JAVA_TOOL_OPTIONS="-XX:StartFlightRecording=filename=run.jfr"`), each
 span header also counts the `jdk.ProcessStart` events submitted inside
 the span's window (`forks=`, by program, e.g. `chmod:16`), and a last
-table gives forks per span. EVENTLOG may then be left out to count forks
-alone.
+table gives forks per span. EVENTLOG may then be left out.
 
 Only the standard library is used; `.zstd` logs are read through
 `zstd -dc`, JFR recordings through `jfr print --json`.
@@ -130,8 +135,6 @@ def main():
     ap.add_argument("--all-ops", action="store_true", help="include warm-up and seed spans")
     ap.add_argument("--jfr", metavar="FILE", help="count jdk.ProcessStart events per span")
     a = ap.parse_args()
-    if not a.eventlog and not a.jfr:
-        ap.error("give an EVENTLOG, a --jfr recording, or both")
 
     with open(a.artifact, encoding="utf-8") as f:
         art = json.load(f)
@@ -153,11 +156,16 @@ def main():
 
     totals = collections.defaultdict(list)
     fork_totals = collections.defaultdict(list)
+    fs_totals = collections.defaultdict(list)
     for s in spans:
         mine = owned.get(str(s["id"]), [])
         totals[s["name"]].append(len(mine))
+        facets = s.get("facets", {})
+        fs_totals[s["name"]].append(int(facets.get("fs_ops", 0)))
         header = (f"== {s['name']} op={s.get('op')} span={s['id']} "
-                  f"wall_ms={s['end_ms'] - s['start_ms']}")
+                  f"wall_ms={s['end_ms'] - s['start_ms']} "
+                  f"fs_ops={int(facets.get('fs_ops', 0))} "
+                  f"written_mb={facets.get('written_mb', 0.0):.3f}")
         if a.eventlog:
             header += f" jobs={len(mine)}"
         if a.jfr:
@@ -181,6 +189,9 @@ def main():
         print("== jobs per span" + ("" if a.all_ops else " (fixed ops)"))
         for name, ns in totals.items():
             print(f"   {name}: {' '.join(map(str, ns))}  (total {sum(ns)})")
+    print("== fs_ops per span" + ("" if a.all_ops else " (fixed ops)"))
+    for name, ns in fs_totals.items():
+        print(f"   {name}: {' '.join(map(str, ns))}  (total {sum(ns)})")
     if a.jfr:
         print("== forks per span" + ("" if a.all_ops else " (fixed ops)") +
               f"; {len(forks)} in the whole recording")
