@@ -73,6 +73,11 @@ object GraftSession {
       // gate-scale groupings sit far below both). Beyond it the
       // designed sort fallback engages exactly as stock.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
+      // `events.ts` ships as INT64 TIMESTAMP(NANOS) in some testdata
+      // generations, which Spark's reader rejects unless it reads the
+      // raw nanos as a long (see Tables.events); a no-op for every other
+      // parquet layout. Set here, once, so no read mutates the session.
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
 
   def local(cores: Int = 32): SparkSession = {

@@ -35,11 +35,10 @@ object Tables {
     * NTZ → TZ cast is value-preserving). */
   def events(s: SparkSession, d: String): DataFrame = normalizeEventTs(rawEvents(s, d))
 
-  private def rawEvents(s: SparkSession, d: String): DataFrame = {
-    // no-op for native-timestamp layouts; required for the nanos one
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    load(s, d, "events")
-  }
+  /** The nanos layout reads as raw longs under
+    * `spark.sql.legacy.parquet.nanosAsLong`, which
+    * [[GraftSession.configure]] sets. */
+  private def rawEvents(s: SparkSession, d: String): DataFrame = load(s, d, "events")
 
   private def normalizeEventTs(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr}

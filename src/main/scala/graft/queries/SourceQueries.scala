@@ -570,6 +570,10 @@ object SourceQueries {
         .select(col("o_orderkey"), col("o_totalprice"),
           (col("o_orderkey") % 4).cast("int").as("p"))
       val dir = scratch(d, "pmergedel")
+      // a fresh table per run, as the seeded merge queries get: a table
+      // left by an earlier build may be in a format this one refuses
+      org.apache.hadoop.fs.FileSystem.get(new java.net.URI(dir), s.sparkContext.hadoopConfiguration)
+        .delete(new org.apache.hadoop.fs.Path(dir), true): Unit
       Sources.publishMergePartitioned(s, dir, base, cfg, "p")
       val since = Sources.mergeVersions(s, dir).max
       val dels = base.filter(col("o_orderkey") % 13 === 0).select("o_orderkey", "p")

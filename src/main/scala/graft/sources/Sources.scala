@@ -74,8 +74,11 @@ object Sources {
     * pointer): data lives in IMMUTABLE batch dirs
     * `tableDir/b-<n>/<col>=<val>/…parquet` (one `partitionBy` write
     * per publish, never rewritten in place); a MANIFEST file
-    * `tableDir/manifest-<n>` lists the live dir of every partition
-    * (one relative path per line); `_current` points at the live
+    * `tableDir/manifest-<n>` states its format version, records the
+    * schema each batch dir reads under (partition column typed as
+    * written, so no read infers a type from a directory name) and lists
+    * the live dir of every partition (one relative path per line; see
+    * [[Manifest]]); `_current` points at the live
     * manifest and is swapped with the same raw-write + atomic-rename
     * mechanics as [[publishSnapshot]]. A reader ([[readMergePartitioned]])
     * resolves the pointer once and then scans a frozen, fully-written
@@ -87,7 +90,7 @@ object Sources {
     * a reader lagging up to two publishes keeps its files.
     *
     * Concurrent publishers serialize through the optimistic commit
-    * protocol ([[commitMergeManifest]], round 16): each publish claims
+    * protocol ([[claimMergeManifest]], round 16): each publish claims
     * its manifest number with an atomic put-if-absent marker; a loser
     * REBASES when the winner's partitions are disjoint from the ones
     * it read, and REFUSES with `ConcurrentModificationException` when
@@ -104,8 +107,8 @@ object Sources {
     * at most `DriverPath.DriverBatchRows` rows, the touched partitions'
     * live files (from the listing the read plans over) are at most
     * `DriverPath.DriverMergeBytes`, each batch dir's partition type as
-    * Spark infers it from the directory names is the incoming column's
-    * (and not a float or double), and
+    * the manifest records it is the incoming column's (and not a float
+    * or double), and
     * [[graft.operators.UpsertWriter.coversOnDriver]] accepts the key
     * and compared column types: those files are read with Spark's own
     * parquet reader (`Bridge.readLocalParquet`), merged in Scala
@@ -133,103 +136,71 @@ object Sources {
       mayUseDriver: Boolean): DataFrame = {
     import org.apache.spark.sql.functions.col
     import graft.operators.{DriverPath, UpsertWriter}
-    val conf = spark.sparkContext.hadoopConfiguration
-    val uri = new java.net.URI(tableDir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(uri, conf)
-    val root = new org.apache.hadoop.fs.Path(tableDir)
-    // Pre-manifest adoption must be DURABLE before the first rewrite:
-    // materialize the legacy layout as its own baseline manifest, so
-    // the legacy partition dirs are referenced by a retained manifest
-    // and inherit the same two-publish retention slack as any other
-    // version (otherwise the first publish would prune a dir a
-    // concurrent reader of the pre-manifest layout is still scanning).
-    adoptMergePartitioned(spark, tableDir, partitionCol): Unit
-    val basis @ (_, entries) = latestCommitted(fs, root, partitionCol)
-    // batch dirs and manifest files carry a per-publisher unique
-    // suffix: two concurrent publishers that read the same max number
-    // then write DISTINCT files instead of clobbering each other's
-    // batch dir / manifest mid-write
-    val uid = java.util.UUID.randomUUID().toString.take(8)
     val pType = incoming.schema(partitionCol).dataType
-    val groups = manifestGroups(entries).map(readManifestGroup(spark, tableDir, _))
-    // pruned scan of the touched partitions. Null and "" are both
-    // written to the default partition, which reads back as null: a
-    // batch holding either rewrites that segment, so its current rows
-    // must enter the merge (an `isin` never matches a null)
-    def current(touched: Seq[Any]): DataFrame =
-      groups.reduceOption(_ unionByName _)
-        .map { all =>
-          val p = col(partitionCol)
-          all.filter(if (touchesDefault(touched)) p.isin(touched: _*) || p.isNull
-                     else p.isin(touched: _*))
-            .withColumn(partitionCol, p.cast(pType))
-        }
-        .getOrElse(incoming.limit(0))
-    val currentSchema = current(Nil).schema
-    val batch =
-      if (!mayUseDriver || !UpsertWriter.coversOnDriver(currentSchema, incoming.schema, cfg)) None
-      else DriverPath.batchRows(incoming, DriverPath.DriverBatchRows).toOption
-    // touched partitions: bounded by the incoming batch, never by the
-    // table — a driver-side collect of partition VALUES only, probed
-    // with a limit first (same guard as publishMergeDeletes) so a
-    // mis-declared high-cardinality partition column refuses loudly
-    // instead of funneling the driver
-    val touched = batch match {
-      case Some(rows) =>
-        val p = incoming.schema.fieldIndex(partitionCol)
-        rows.map(_.get(p)).distinct.toSeq
-      case None =>
-        incoming.select(partitionCol).distinct()
-          .limit(MaxTouchedPartitions + 1).collect().map(_.get(0)).toSeq
-    }
-    require(touched.length <= MaxTouchedPartitions,
-      s"publishMergePartitioned: incoming batch touches > " +
-        s"$MaxTouchedPartitions distinct '$partitionCol' values — that is a " +
-        "table rewrite, not a targeted merge; pick a coarser partition " +
-        "column or split the publish")
-    val bdir = f"b-${nextNumber(fs, root)}%012d-$uid"
-    val onDriver = batch.flatMap(rows =>
-      touchedScans(groups, partitionCol, pType, touched).map(rows -> _))
-    val (merged, written) = onDriver match {
-      case Some((rows, scans)) =>
-        val curRows = scans.flatMap { scan =>
-          val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
-            .createToScalaConverter(scan.schema)
-          org.apache.spark.sql.graftbridge.Bridge.readLocalParquet(spark, scan, scan.dataSchema)
-            .flatten.map(toRow(_).asInstanceOf[org.apache.spark.sql.Row])
-        }
-        val schema = DriverPath.schemaOf(("publishMergePartitioned", currentSchema,
-          incoming.schema, cfg))(UpsertWriter.merge(current(Nil), incoming, cfg).merged.schema)
-        val merged = DriverPath.localFrame(spark, UpsertWriter.mergedOnDriver(
-          curRows, currentSchema, rows.toSeq, incoming.schema, cfg), schema)
-        val written =
-          try org.apache.spark.sql.graftbridge.Bridge.writeLocalParquetPartitioned(
-            merged, partitionCol, s"$tableDir/$bdir")
-          catch { case t: Throwable =>
-            try deleteQuiet(fs, new org.apache.hadoop.fs.Path(root, bdir), recursive = true)
-            catch { case s: Throwable => t.addSuppressed(s) }
-            throw t
+    commitMergeBatch(spark, tableDir, partitionCol) { basis =>
+      val groups = manifestGroups(basis.entries).map(readManifestGroup(spark, tableDir, basis, _))
+      // pruned scan of the touched partitions. Null and "" are both
+      // written to the default partition, which reads back as null: a
+      // batch holding either rewrites that segment, so its current rows
+      // must enter the merge (an `isin` never matches a null)
+      def current(touched: Seq[Any]): DataFrame =
+        groups.reduceOption(_ unionByName _)
+          .map { all =>
+            val p = col(partitionCol)
+            all.filter(if (touchesDefault(touched)) p.isin(touched: _*) || p.isNull
+                       else p.isin(touched: _*))
+              .withColumn(partitionCol, p.cast(pType))
           }
-        (merged, written)
-      case None =>
-        val merged = UpsertWriter.merge(current(touched), incoming, cfg).merged
-        writePartitionedBatch(merged, partitionCol, s"$tableDir/$bdir")
-        // the segments Spark just wrote ARE the touched partitions, in its
-        // own path encoding — so replacement matches old entries by name
-        (merged, fs.listStatus(new org.apache.hadoop.fs.Path(root, bdir))
-          .collect { case st if st.isDirectory &&
-            st.getPath.getName.startsWith(s"$partitionCol=") => st.getPath.getName }
-          .toSeq)
-    }
-    // OCC commit: merged content was derived from `entries`' touched
-    // partitions, so a rival commit to any of them refuses (stale
-    // snapshot); disjoint rival commits rebase and retry.
-    commitMergeManifestOrReclaim(fs, uri, conf, root, tableDir, partitionCol,
-      basis, entries, written.toSet, rebaseOnOverlap = false, uid, bdir) { es =>
-      es.filterNot(e => written.contains(segmentOf(e))) ++
-        written.map(s => s"$bdir/$s")
-    }
-    merged
+          .getOrElse(incoming.limit(0))
+      val currentSchema = current(Nil).schema
+      val batch =
+        if (!mayUseDriver || !UpsertWriter.coversOnDriver(currentSchema, incoming.schema, cfg)) None
+        else DriverPath.batchRows(incoming, DriverPath.DriverBatchRows).toOption
+      // touched partitions: bounded by the incoming batch, never by the
+      // table — a driver-side collect of partition VALUES only, probed
+      // with a limit first (same guard as publishMergeDeletes) so a
+      // mis-declared high-cardinality partition column refuses loudly
+      // instead of funneling the driver
+      val touched = batch match {
+        case Some(rows) =>
+          val p = incoming.schema.fieldIndex(partitionCol)
+          rows.map(_.get(p)).distinct.toSeq
+        case None =>
+          incoming.select(partitionCol).distinct()
+            .limit(MaxTouchedPartitions + 1).collect().map(_.get(0)).toSeq
+      }
+      require(touched.length <= MaxTouchedPartitions,
+        s"publishMergePartitioned: incoming batch touches > " +
+          s"$MaxTouchedPartitions distinct '$partitionCol' values — that is a " +
+          "table rewrite, not a targeted merge; pick a coarser partition " +
+          "column or split the publish")
+      val onDriver = batch.flatMap(rows =>
+        touchedScans(groups, partitionCol, pType, touched).map(rows -> _))
+      // the merged content derives from the touched partitions' current
+      // rows, so a rival commit to any written segment refuses, and the
+      // written segments replace their old entries by name (they are
+      // Spark's own path encoding of the touched values)
+      val replaces = (written: Seq[String]) => written.toSet
+      onDriver match {
+        case Some((rows, scans)) =>
+          val curRows = scans.flatMap { scan =>
+            val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+              .createToScalaConverter(scan.schema)
+            org.apache.spark.sql.graftbridge.Bridge.readLocalParquet(spark, scan, scan.dataSchema)
+              .flatten.map(toRow(_).asInstanceOf[org.apache.spark.sql.Row])
+          }
+          val schema = DriverPath.schemaOf(("publishMergePartitioned", currentSchema,
+            incoming.schema, cfg))(UpsertWriter.merge(current(Nil), incoming, cfg).merged.schema)
+          val merged = DriverPath.localFrame(spark, UpsertWriter.mergedOnDriver(
+            curRows, currentSchema, rows.toSeq, incoming.schema, cfg), schema)
+          Some(MergeBatch(merged.schema, dir => Some(org.apache.spark.sql.graftbridge.Bridge
+            .writeLocalParquetPartitioned(merged, partitionCol, dir)), replaces, _ => merged))
+        case None =>
+          val merged = UpsertWriter.merge(current(touched), incoming, cfg).merged
+          Some(MergeBatch(merged.schema, dir => {
+            writePartitionedBatch(merged, partitionCol, dir); None }, replaces, _ => merged))
+      }
+    }.get
   }
 
   /** The driver reads of the touched partitions of a merge table whose
@@ -241,12 +212,12 @@ object Sources {
     * relation partitioned by `partitionCol` alone, when the dirs'
     * schemas differ (their union would widen or reorder), when the
     * files exceed `DriverPath.DriverMergeBytes`, or when a dir's
-    * partition type, inferred from the directory names, is not the
-    * incoming column's `pType` or is a float or double. Then Scala
-    * equality on the two sides' values is Spark's equality; across
-    * types only the distributed `isin` applies Spark's coercion (a
-    * string '2024-01-01' against a date inferred from the path), and
-    * on doubles Spark's equality and Scala's part on NaN. */
+    * partition type, as its manifest records it, is not the incoming
+    * column's `pType` or is a float or double. Then Scala equality on
+    * the two sides' values is Spark's equality; across types only the
+    * distributed `isin` applies Spark's coercion (a long batch against
+    * an adopted dir inference typed as int), and on doubles Spark's
+    * equality and Scala's part on NaN. */
   private def touchedScans(groups: Seq[DataFrame], partitionCol: String, pType: DataType,
       touched: Seq[Any]): Option[Seq[org.apache.spark.sql.graftbridge.Bridge.LocalParquetScan]] = {
     val keep = touched.filter(_ != null).toSet
@@ -299,8 +270,11 @@ object Sources {
 
   /** Adopt a plain `<col>=<val>` partitioned parquet layout into the
     * manifest/pointer discipline WITHOUT rewriting any data: write a
-    * baseline manifest referencing the existing partition dirs and
-    * swap `_current` onto it. This is the adoption step
+    * baseline manifest referencing the existing partition dirs, under
+    * the schema Spark's partition inference gives them (the one
+    * inference a merge table runs: every later read takes the schema
+    * the manifest records), and swap `_current` onto it. This is the
+    * adoption step
     * [[publishMergePartitioned]] performs implicitly on its first
     * publish, exposed for callers that need a manifest table BEFORE
     * their first merge — e.g. [[publishMergeDeletes]] (which refuses
@@ -322,13 +296,12 @@ object Sources {
       // (the first committed manifest embeds the baseline entries) —
       // the rival's swap just hasn't landed yet
       if (commitNames(fs, root).nonEmpty) return false
-      val entries = manifestEntries(fs, root, partitionCol)
-      if (entries.isEmpty) return false
+      val baseline = plainLayout(spark, tableDir, partitionCol)
+      if (baseline.entries.isEmpty) return false
       val uid = java.util.UUID.randomUUID().toString.take(8)
       val next = nextNumber(fs, root)
       val mfile0 = f"manifest-$next%012d-$uid"
-      writeRaw(uri, conf, new org.apache.hadoop.fs.Path(root, mfile0),
-        entries.sorted.mkString("\n"))
+      writeRaw(uri, conf, new org.apache.hadoop.fs.Path(root, mfile0), baseline.text)
       // adoption is a commit like any other (two racing adopters must
       // not both swap baselines): claim the number, loser re-checks
       if (createExclusive(fs, uri,
@@ -365,33 +338,20 @@ object Sources {
       incoming: DataFrame,
       partitionCol: String): Unit = {
     import org.apache.spark.sql.functions.col
-    val conf = spark.sparkContext.hadoopConfiguration
-    val uri = new java.net.URI(tableDir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(uri, conf)
-    val root = new org.apache.hadoop.fs.Path(tableDir)
-    adoptMergePartitioned(spark, tableDir, partitionCol): Unit
-    val basis @ (_, entries) = latestCommitted(fs, root, partitionCol)
-    val uid = java.util.UUID.randomUUID().toString.take(8)
-    val bnum = nextNumber(fs, root)
-    val bdir = f"b-$bnum%012d-$uid"
     // one segment file per partition per publish: without the
     // repartition, T tasks × P touched partitions emit T·P tiny files
     // and the serial job-commit rename dominates the apply wall
-    // (measured 48 of 57 s at sf10 — the delta write itself is ~1 s)
-    incoming.repartition(col(partitionCol)).write.mode(SaveMode.Overwrite)
-      .partitionBy(partitionCol).parquet(s"$tableDir/$bdir")
-    val written = fs.listStatus(new org.apache.hadoop.fs.Path(root, bdir))
-      .collect { case st if st.isDirectory &&
-        st.getPath.getName.startsWith(s"$partitionCol=") => st.getPath.getName }
-      .toSeq
-    // OCC commit: an append never reads current content, so rival
-    // commits — even to the same partitions — are just more segments;
-    // always rebase, never refuse (rebaseOnOverlap). Both racing
-    // appends' rows land (OccMergeSpec races this).
-    commitMergeManifestOrReclaim(fs, uri, conf, root, tableDir, partitionCol,
-      basis, entries, Set.empty, rebaseOnOverlap = true, uid, bdir) { es =>
-      es ++ written.map(s => s"$bdir/$s")
-    }
+    // (measured 48 of 57 s at sf10 — the delta write itself is ~1 s).
+    // An append never reads current content, so rival commits — even
+    // to the same partitions — are just more segments: it always
+    // rebases, never refuses (OccMergeSpec races this)
+    commitMergeBatch(spark, tableDir, partitionCol) { _ =>
+      Some(MergeBatch(incoming.schema, dir => {
+        incoming.repartition(col(partitionCol)).write.mode(SaveMode.Overwrite)
+          .partitionBy(partitionCol).parquet(dir)
+        None
+      }, _ => Set.empty, _ => (), appendOnly = true))
+    }: Unit
   }
 
   /** Whole-partition REPLACEMENT publish: `content` becomes the entire
@@ -420,77 +380,44 @@ object Sources {
       partitions: Seq[Any],
       basisVersion: Option[Long] = None): Unit = {
     require(partitions.nonEmpty, "publishMergeReplace: empty partition list")
-    // Same guard as publishMergeDeletes: replaced partitions are matched
-    // against manifest dir segments by VALUE STRING, and Spark
-    // percent-encodes exotic partition values (and renders null/empty as
-    // the default-partition sentinel) on write — a value that does not
-    // round-trip escapePathName would silently match no live entry and
-    // RETAIN the stale rows beside the replacement batch (duplicates
-    // after compaction). Refuse loudly instead.
-    locally {
-      import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-      partitions.foreach { v =>
-        require(v != null,
-          "publishMergeReplace: null partition value — republish the whole " +
-            "table instead")
-        val s = String.valueOf(v)
-        require(s.nonEmpty,
-          "publishMergeReplace: empty-string partition value — Spark writes " +
-            "it as the default-partition sentinel; republish the whole table " +
-            "instead")
-        require(ExternalCatalogUtils.escapePathName(s) == s,
-          s"publishMergeReplace: partition value '$s' does not round-trip " +
-            "Spark's partition-path encoding — replace by a path-safe " +
-            "partition value")
-      }
-    }
-    val conf = spark.sparkContext.hadoopConfiguration
-    val uri = new java.net.URI(tableDir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(uri, conf)
-    val root = new org.apache.hadoop.fs.Path(tableDir)
-    adoptMergePartitioned(spark, tableDir, partitionCol): Unit
-    val basis @ (_, entries) = latestCommitted(fs, root, partitionCol)
-    val uid = java.util.UUID.randomUUID().toString.take(8)
-    val bnum = nextNumber(fs, root)
-    val bdir = f"b-$bnum%012d-$uid"
+    // replaced partitions are matched against manifest dir segments by
+    // value string: see requirePathSafe
+    requirePathSafe("publishMergeReplace", partitions,
+      "replace by a path-safe partition value, or republish the whole table")
+    val replaced = partitions.map(v => s"$partitionCol=$v").toSet
     // compaction output: advisory-sized files per partition via the
-    // rebalanced write (r19) — the previous one-task-per-partition
-    // repartition settled small files but serialized the fold of a
-    // big partition through one task (and would emit one enormous
-    // file per partition at scale)
-    writePartitionedBatch(content, partitionCol, s"$tableDir/$bdir")
-    val written = fs.listStatus(new org.apache.hadoop.fs.Path(root, bdir))
-      .collect { case st if st.isDirectory &&
-        st.getPath.getName.startsWith(s"$partitionCol=") => st.getPath.getName }
-      .toSeq
-    val replacedStr = partitions.map(String.valueOf).toSet
-    val valueOfSeg = (s: String) => s.split("=", 2).lift(1).getOrElse("")
-    // OCC commit: `content` asserts the whole truth for the replaced
-    // partitions, derived from a read of their current content
-    // (compaction) — a rival commit touching any of them refuses.
-    // Touched = the replaced values' canonical segment names (values
-    // are guard-checked to round-trip Spark's path escaping above, so
-    // name == s"$partitionCol=$value") plus whatever was written.
-    val touchedSegs =
-      replacedStr.map(v => s"$partitionCol=$v") ++ written
-    val basisEntries = basisVersion match {
-      case None => entries
-      case Some(v) => committedEntriesAt(fs, root, v).getOrElse(
-        throw new java.util.ConcurrentModificationException(
-          s"publishMergeReplace on $tableDir: basis version $v is no longer " +
-            "retained — the content read is older than the retention window; " +
-            "re-read and retry"))
-    }
-    commitMergeManifestOrReclaim(fs, uri, conf, root, tableDir, partitionCol,
-      basis, basisEntries, touchedSegs, rebaseOnOverlap = false, uid, bdir) { es =>
-      val newEntries =
-        es.filterNot(e => replacedStr.contains(valueOfSeg(segmentOf(e)))) ++
-          written.map(s => s"$bdir/$s")
-      require(newEntries.nonEmpty,
-        "publishMergeReplace would empty the table — republish it instead")
-      newEntries
-    }
+    // rebalanced write (r19). `content` asserts the whole truth for the
+    // replaced partitions, derived from a read of their current content
+    // (compaction): a rival commit touching any of them refuses
+    commitMergeBatch(spark, tableDir, partitionCol) { basis =>
+      Some(MergeBatch(content.schema, dir => {
+        writePartitionedBatch(content, partitionCol, dir); None
+      }, written => {
+        require(written.nonEmpty || basis.entries.exists(e => !replaced(segmentOf(e))),
+          "publishMergeReplace would empty the table — republish it instead")
+        replaced
+      }, _ => (), basisVersion = basisVersion))
+    }: Unit
   }
+
+  /** Refuses partition values that a commit could not match against a
+    * manifest segment by value string (`<col>=<value>`): null and ""
+    * (Spark writes both as the default-partition sentinel) and any value
+    * whose string Spark's partition-path escaping changes (it
+    * percent-encodes ':', '=', '#', '*', '?', quotes, brackets, …).
+    * Such a value would silently match no live entry, so its stale rows
+    * would survive beside the rewrite; `caller` names the publish in
+    * the message and `instead` says what to do. */
+  private def requirePathSafe(caller: String, values: Iterable[Any], instead: String): Unit =
+    values.foreach { v =>
+      require(v != null, s"$caller: null partition value — $instead")
+      val s = String.valueOf(v)
+      require(s.nonEmpty, s"$caller: empty-string partition value — Spark writes it as " +
+        s"the default-partition sentinel; $instead")
+      require(org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(s) == s,
+        s"$caller: partition value '$s' does not round-trip Spark's partition-path " +
+          s"encoding — $instead")
+    }
 
   /** Row-level DELETE publish for a [[publishMergePartitioned]] table —
     * the retraction half MERGE alone can't express (GDPR erasure,
@@ -527,100 +454,58 @@ object Sources {
       s"deletes frame must carry the partition column '$partitionCol'")
     cfg.naturalKey.foreach(k => require(deletes.columns.contains(k),
       s"deletes frame must carry natural-key column '$k'"))
-    val conf = spark.sparkContext.hadoopConfiguration
-    val uri = new java.net.URI(tableDir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(uri, conf)
-    val root = new org.apache.hadoop.fs.Path(tableDir)
-    require(fs.exists(new org.apache.hadoop.fs.Path(root, "_current")),
+    val fs = fsOf(spark, tableDir)
+    require(fs.exists(new org.apache.hadoop.fs.Path(tableDir, "_current")),
       s"publishMergeDeletes: '$tableDir' is not a manifest-published table")
-    val basis @ (_, entries) = latestCommitted(fs, root, partitionCol)
-    if (entries.isEmpty) return 0L
-    // Bounded metadata collect: touched-partition cardinality is the ONLY
-    // thing collected, and even that is probed with a limit first so a
-    // mis-specified deletes frame (e.g. the key column passed as the
-    // partition column) refuses loudly instead of materializing a
-    // data-proportional set on the driver.
-    val maxTouched = MaxTouchedPartitions
-    val touchedProbe = deletes.select(partitionCol).distinct()
-      .limit(maxTouched + 1).collect().map(_.get(0))
-    require(touchedProbe.length <= maxTouched,
-      s"publishMergeDeletes: deletes touch > $maxTouched distinct " +
-        s"'$partitionCol' values — that is a table rewrite, not a targeted " +
-        "delete; split the job or republish the table instead")
-    val touched = touchedProbe
-    // Spark percent-encodes far more than '/' and '%' on partition paths
-    // (':', '=', '#', '*', '?', quotes, brackets, …) and renders null as
-    // __HIVE_DEFAULT_PARTITION__. Guard with the SAME escaping Spark uses:
-    // a value that does not round-trip identity through escapePathName
-    // would silently match no manifest segment and retain rows meant for
-    // erasure — refuse loudly instead.
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    touched.foreach { v =>
-      require(v != null,
-        "publishMergeDeletes: null partition value — delete null-partition " +
-          "rows by republishing the table without them")
-      val s = String.valueOf(v)
-      // escapePathName("") == "" passes the round-trip, but the writer
-      // renders empty (like null) as __HIVE_DEFAULT_PARTITION__
-      // (ExternalCatalogUtils.getPartitionPathString) — an empty-string
-      // delete would silently match no segment and RETAIN the rows
-      require(s.nonEmpty,
-        "publishMergeDeletes: empty-string partition value — Spark writes " +
-          "it as the default-partition sentinel; delete those rows by " +
-          "republishing the table without them")
-      require(ExternalCatalogUtils.escapePathName(s) == s,
-        s"partition value '$s' does not round-trip Spark's partition-path " +
-          "encoding — delete by a path-safe partition value")
-    }
-    val touchedStr = touched.map(String.valueOf).toSet
-    val valueOfSeg = (s: String) => s.split("=", 2).lift(1).getOrElse("")
-    val liveVals = entries.map(e => valueOfSeg(segmentOf(e))).toSet
-    val dropSegs = entries.map(segmentOf)
-      .filter(s => touchedStr.contains(valueOfSeg(s))).toSet
-    if (dropSegs.isEmpty) {
-      // Every touched value missed the manifest. The escapePathName
-      // round-trip guard above already rules out the silent-rendering
-      // mismatch class, so this is genuinely "partition not live" —
-      // e.g. an idempotent re-run after the delete emptied it. Keep the
-      // no-op contract but say so loudly in the log.
-      log.warn(
-        s"publishMergeDeletes: none of the ${touchedStr.size} touched " +
-          s"'$partitionCol' values match a live partition " +
-          s"(live sample: ${liveVals.take(5).mkString(", ")}); no-op")
-      return 0L
-    }
-    val uid = java.util.UUID.randomUUID().toString.take(8)
-    val bnum = nextNumber(fs, root)
-    val current = assembleManifest(spark, tableDir, entries).get
-      .filter(col(partitionCol).isin(touched: _*))
-      .withColumn(partitionCol,
-        col(partitionCol).cast(deletes.schema(partitionCol).dataType))
-    val delKeys = deletes.select(cfg.naturalKey.map(col): _*).distinct()
-    val remaining = current.join(delKeys, cfg.naturalKey, "left_anti")
-      .localCheckpoint(false) // count + write off one materialization
-    val nDeleted = current.count() - remaining.count()
-    if (nDeleted == 0L) return 0L
-    val bdir = f"b-$bnum%012d-$uid"
-    writePartitionedBatch(remaining, partitionCol, s"$tableDir/$bdir")
-    val written =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(root, bdir))) Seq.empty[String]
-      else fs.listStatus(new org.apache.hadoop.fs.Path(root, bdir))
-        .collect { case st if st.isDirectory &&
-          st.getPath.getName.startsWith(s"$partitionCol=") => st.getPath.getName }
-        .toSeq
-    // OCC commit: the rewrite was derived from the touched partitions'
-    // current content — a rival commit to any of them refuses (a
-    // silent stale-snapshot commit would RESURRECT the rival's deleted
-    // rows or drop its merged ones). Disjoint rivals rebase.
-    commitMergeManifestOrReclaim(fs, uri, conf, root, tableDir, partitionCol,
-      basis, entries, dropSegs ++ written, rebaseOnOverlap = false, uid, bdir) { es =>
-      // drop EVERY old entry of a touched partition (including ones the
-      // rewrite emptied — merge publishes never empty a partition, so
-      // this is the one place entries vanish by value, not by name)
-      es.filterNot(e => dropSegs.contains(segmentOf(e))) ++
-        written.map(s => s"$bdir/$s")
-    }
-    nDeleted
+    commitMergeBatch(spark, tableDir, partitionCol) { basis =>
+      // Bounded metadata collect: touched-partition cardinality is the
+      // ONLY thing collected, and even that is probed with a limit first
+      // so a mis-specified deletes frame (e.g. the key column passed as
+      // the partition column) refuses loudly instead of materializing a
+      // data-proportional set on the driver.
+      val touched = if (basis.entries.isEmpty) Array.empty[Any]
+        else deletes.select(partitionCol).distinct()
+          .limit(MaxTouchedPartitions + 1).collect().map(_.get(0))
+      require(touched.length <= MaxTouchedPartitions,
+        s"publishMergeDeletes: deletes touch > $MaxTouchedPartitions distinct " +
+          s"'$partitionCol' values — that is a table rewrite, not a targeted " +
+          "delete; split the job or republish the table instead")
+      // a value that Spark's path escaping changes would match no
+      // manifest segment and silently retain rows meant for erasure
+      requirePathSafe("publishMergeDeletes", touched,
+        "delete those rows by republishing the table without them")
+      val touchedSegs = touched.map(v => s"$partitionCol=$v").toSet
+      val dropSegs = basis.entries.map(segmentOf).filter(touchedSegs).toSet
+      if (dropSegs.isEmpty) {
+        // Every touched value missed the manifest: the partition is not
+        // live (e.g. an idempotent re-run after the delete emptied it).
+        // Keep the no-op contract but say so loudly in the log.
+        if (touched.nonEmpty) log.warn(
+          s"publishMergeDeletes: none of the ${touched.length} touched " +
+            s"'$partitionCol' values match a live partition (live sample: " +
+            s"${basis.entries.map(segmentOf).distinct.take(5).mkString(", ")}); no-op")
+        None
+      } else {
+        val current = assembleManifest(spark, tableDir, basis).get
+          .filter(col(partitionCol).isin(touched.toSeq: _*))
+          .withColumn(partitionCol,
+            col(partitionCol).cast(deletes.schema(partitionCol).dataType))
+        val delKeys = deletes.select(cfg.naturalKey.map(col): _*).distinct()
+        val remaining = current.join(delKeys, cfg.naturalKey, "left_anti")
+          .localCheckpoint(false) // count + write off one materialization
+        val nDeleted = current.count() - remaining.count()
+        // the rewrite derives from the touched partitions' current
+        // content: a rival commit to any of them refuses (a stale commit
+        // would resurrect the rival's deleted rows or drop its merged
+        // ones). Every old entry of a touched partition goes, including
+        // the ones the delete emptied: the one place entries vanish by
+        // value, not by name
+        if (nDeleted == 0L) None
+        else Some(MergeBatch(remaining.schema, dir => {
+          writePartitionedBatch(remaining, partitionCol, dir); None
+        }, _ => dropSegs, _ => nDeleted))
+      }
+    }.getOrElse(0L)
   }
 
   /** Prune rotated manifests and the batch dirs only they reference.
@@ -649,7 +534,10 @@ object Sources {
     * whether aged or inside the grace) just drops out of both the
     * protection and the deletion sets — no in-window reader can be
     * holding it, by the pointer arithmetic above, and a concurrent
-    * pruner deleting it means its dirs were already adjudicated.
+    * pruner deleting it means its dirs were already adjudicated. A
+    * manifest of any of the three sets that states no format version,
+    * or one this engine does not read, also defers the whole pass: its
+    * reference list is unknown.
     *
     * Deletion order is dirs-then-manifests: a crash between the two
     * leaves a still-readable rotated manifest whose next prune is
@@ -672,12 +560,19 @@ object Sources {
     val young = aged.collect { case (m, true) => m }
     val old   = aged.collect { case (m, false) => m }
     if (old.isEmpty) return
-    val protectRefs = protect.map(readManifestOpt(fs, root, _))
+    // a manifest in a format this engine does not read may reference
+    // anything: the pass defers, as for a vanished protected manifest,
+    // and never throws (it runs after a publish already committed)
+    val refs = (ms: Seq[String]) => ms.map(readManifestOpt(fs, root, _).map(_.entries))
+    val (protectRefs, youngRefs, oldRefs) =
+      try (refs(protect), refs(young), refs(old))
+      catch { case e: IllegalStateException =>
+        log.warn(s"merge prune on $root deferred: ${e.getMessage}")
+        return
+      }
     if (protectRefs.exists(_.isEmpty)) return // abort-on-doubt
-    val youngRefs = young.flatMap(readManifestOpt(fs, root, _)).flatten
-    val referenced = (protectRefs.flatMap(_.get) ++ youngRefs).map(topSegmentOf).toSet
-    val dead = old.flatMap(readManifest(fs, root, _))
-      .map(topSegmentOf).toSet -- referenced
+    val referenced = (protectRefs.flatten ++ youngRefs.flatten).flatten.map(topSegmentOf).toSet
+    val dead = oldRefs.flatten.flatten.map(topSegmentOf).toSet -- referenced
     dead.foreach(d =>
       deleteQuiet(fs, new org.apache.hadoop.fs.Path(root, d), recursive = true))
     old.foreach(m =>
@@ -706,6 +601,10 @@ object Sources {
         deleteQuiet(fs, st.getPath, recursive = false)
     }
   }
+
+  /** The filesystem of the table or dir at `path`. */
+  private def fsOf(spark: SparkSession, path: String): org.apache.hadoop.fs.FileSystem =
+    org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
 
   /** delete() tolerating concurrent-pruner races: on a vanished path
     * it returns false on most filesystems, but some object-store
@@ -901,12 +800,11 @@ object Sources {
     * This is the publisher-side read — unlike the reader's pointer
     * resolve it sees a commit whose pointer swap has not landed yet (or
     * whose publisher crashed between claim and swap), so a rebase can
-    * never silently drop a durably-claimed rival batch. Pre-manifest
-    * tables return the adoption listing at number 0; a manifest pointer
+    * never silently drop a durably-claimed rival batch. A table with no
+    * claim reads as the empty manifest at number 0; a manifest pointer
     * with no claim behind it is refused. */
   private def latestCommitted(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path,
-      partitionCol: String): (Long, Seq[String]) = {
+      root: org.apache.hadoop.fs.Path): (Long, Manifest) = {
     // walk DOWN from the largest marker past any with unreadable/invalid
     // content: a crashed pre-r17 claimer left content-less markers, and
     // those numbers are claimed-DEAD (a burned slot, no manifest) — the
@@ -916,13 +814,10 @@ object Sources {
       .map(c => readControl(fs, new org.apache.hadoop.fs.Path(root, c))
         .filter(_.startsWith("manifest-")))
       .collectFirst { case Some(m) => m } match {
-      case Some(m) => readManifestOpt(fs, root, m) match {
-        case Some(es) => (numberOf(m, "manifest-"), es)
-        case None =>
-          // the named manifest vanished (pruned mid-read): the
-          // pointer-resolved read retries / fails loudly
-          (numberOf(m, "manifest-"), manifestEntries(fs, root, partitionCol))
-      }
+      // the named manifest vanished (pruned mid-read): the live one
+      // stands in, and the claim that follows retries or fails loudly
+      case Some(m) => (numberOf(m, "manifest-"), readManifestOpt(fs, root, m)
+        .orElse(liveManifest(fs, root)).getOrElse(Manifest.Empty))
       case None =>
         currentPointer(fs, root).filter(_.startsWith("manifest-")).foreach { m =>
           throw new IllegalStateException(
@@ -930,7 +825,7 @@ object Sources {
               "it — an unclaimed layout no current writer produces; refusing " +
               "to take a publish basis from it")
         }
-        (0L, manifestEntries(fs, root, partitionCol))
+        (0L, Manifest.Empty)
     }
   }
 
@@ -951,17 +846,16 @@ object Sources {
     * committed to the same partitions after this moment (instead of
     * silently folding the rival's rows away). */
   def mergeCommittedVersion(spark: SparkSession, tableDir: String): Long = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(tableDir), spark.sparkContext.hadoopConfiguration)
-    latestCommitted(fs, new org.apache.hadoop.fs.Path(tableDir), "")._1
+    val fs = fsOf(spark, tableDir)
+    latestCommitted(fs, new org.apache.hadoop.fs.Path(tableDir))._1
   }
 
-  /** Reference list of the commit CLAIMED at `version`: the manifest its
+  /** The manifest of the commit CLAIMED at `version`: the one its
     * `commit-<n>` marker names, the one that won the number. None when
     * the version is no longer resolvable (pruned past retention) or was
     * never committed. */
-  private def committedEntriesAt(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, version: Long): Option[Seq[String]] =
+  private def committedAt(fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path, version: Long): Option[Manifest] =
     readControl(fs, new org.apache.hadoop.fs.Path(root, f"$CommitPrefix$version%012d"))
       .filter(_.startsWith("manifest-"))
       .flatMap(readManifestOpt(fs, root, _))
@@ -1010,13 +904,16 @@ object Sources {
     * older pinned version). `touchedSegs` = partition segments whose
     * current content the caller consumed or replaces (by Spark-escaped
     * segment name). `mkEntries` re-derives the new reference list from
-    * any base — it runs once per attempt. */
-  private def commitMergeManifest(fs: org.apache.hadoop.fs.FileSystem,
+    * any base — it runs once per attempt; the manifest records the
+    * schema of each dir group it keeps, `batch` (the new batch dir and
+    * its schema) among them. Returns the claimed manifest's name: the
+    * caller swaps the pointer onto it. */
+  private def claimMergeManifest(fs: org.apache.hadoop.fs.FileSystem,
       uri: java.net.URI, conf: org.apache.hadoop.conf.Configuration,
-      root: org.apache.hadoop.fs.Path, tableDir: String, partitionCol: String,
-      read: (Long, Seq[String]), basisEntries: Seq[String], touchedSegs: Set[String],
-      rebaseOnOverlap: Boolean, uid: String)(
-      mkEntries: Seq[String] => Seq[String]): Unit = {
+      root: org.apache.hadoop.fs.Path, tableDir: String,
+      read: (Long, Manifest), basisEntries: Seq[String], touchedSegs: Set[String],
+      rebaseOnOverlap: Boolean, uid: String, batch: (String, StructType))(
+      mkEntries: Seq[String] => Seq[String]): String = {
     // conflicts are ALWAYS judged against the caller's read basis (the
     // reference list its content derives from), never a rebased view —
     // a commit landing between the basis read and the first claim is
@@ -1032,7 +929,8 @@ object Sources {
             "re-derive the publish (stale-snapshot write refused, not lost)")
     }
     var attempts = 0
-    while (true) {
+    var claimed = Option.empty[String]
+    while (claimed.isEmpty) {
       attempts += 1
       if (attempts > 20) throw new IllegalStateException(
         s"merge commit on $tableDir lost ${attempts - 1} consecutive claim " +
@@ -1057,68 +955,119 @@ object Sources {
       // content can never be a rival mid-write — it is provably dead,
       // and the fix that preserves density is to RECLAIM the corpse
       // and contest its number, not to number past it.
-      val (cNum, committed) =
-        if (attempts == 1) read else latestCommitted(fs, root, partitionCol)
-      refuseIfConflicting(committed)
+      val (cNum, committed) = if (attempts == 1) read else latestCommitted(fs, root)
+      refuseIfConflicting(committed.entries)
       val next = cNum + 1
       val markerPath = new org.apache.hadoop.fs.Path(root, f"$CommitPrefix$next%012d")
       if (readControl(fs, markerPath).exists(!_.startsWith("manifest-")))
         reclaimCorpseMarker(fs, uri, root, markerPath, next)
       val mfile = f"manifest-$next%012d-$uid"
       writeRaw(uri, conf, new org.apache.hadoop.fs.Path(root, mfile),
-        mkEntries(committed).sorted.mkString("\n"))
-      if (createExclusive(fs, uri, markerPath, mfile)) {
-        swapPointerForward(fs, uri, conf, root, mfile, s"$next-$uid-1")
-        pruneMergePartitioned(fs, root)
-        return
+        Manifest(mfile, committed.schemas + batch, mkEntries(committed.entries)).text)
+      if (createExclusive(fs, uri, markerPath, mfile)) claimed = Some(mfile)
+      else {
+        // the lost attempt's manifest is claimed by nothing and
+        // referenced by nothing — reclaim it now rather than leaking one
+        // file per lost race
+        deleteQuiet(fs, new org.apache.hadoop.fs.Path(root, mfile), recursive = false)
+        log.info(s"merge commit on $tableDir: claim $next lost to a rival " +
+          s"publisher; rebasing (attempt $attempts)")
       }
-      // the lost attempt's manifest is claimed by nothing and referenced
-      // by nothing — reclaim it now rather than leaking one file per
-      // lost race
-      deleteQuiet(fs, new org.apache.hadoop.fs.Path(root, mfile),
-        recursive = false)
-      log.info(s"merge commit on $tableDir: claim $next lost to a rival " +
-        s"publisher; rebasing (attempt $attempts)")
+    }
+    claimed.get
+  }
+
+  /** A merge-table write as [[commitMergeBatch]] stages it. `write`
+    * writes a frame of schema `frame` in the `partitionBy` layout into
+    * the batch dir whose path it is given, and returns the segments
+    * (`col=value` dir names) it wrote when it knows them; None lists the
+    * dir. The commit drops the basis entries of the segments
+    * `replaces(written)` names and adds the written ones; a rival commit
+    * after the basis read to any of those segments, or to a written
+    * one, refuses, unless the write is `appendOnly` (its content never
+    * read the table, so it always rebases). `basisVersion` pins the
+    * basis to an older committed version ([[publishMergeReplace]]).
+    * `result` is what the publish returns, given the written segments. */
+  private final case class MergeBatch[T](frame: StructType,
+      write: String => Option[Seq[String]], replaces: Seq[String] => Set[String],
+      result: Seq[String] => T, appendOnly: Boolean = false,
+      basisVersion: Option[Long] = None)
+
+  /** The one commit path of every merge-table write: adopt a plain
+    * layout, read the committed basis ([[latestCommitted]]), let `stage`
+    * derive the write from it (None: nothing to commit), name the batch
+    * dir, run the write, and claim the next manifest
+    * ([[claimMergeManifest]]), which records the batch dir's schema as
+    * the dir reads it: the frame's columns with the partition column,
+    * typed as written, last. Then the pointer swaps and the prune runs.
+    * A write or claim that throws (a failed write, a stale-snapshot
+    * refusal, claim-retry exhaustion, an unreadable basis) reclaims the
+    * batch dir, which no committed manifest references: the prune only
+    * reclaims dirs of deleted manifests. */
+  private def commitMergeBatch[T](spark: SparkSession, tableDir: String, partitionCol: String)(
+      stage: Manifest => Option[MergeBatch[T]]): Option[T] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val uri = new java.net.URI(tableDir)
+    val fs = org.apache.hadoop.fs.FileSystem.get(uri, conf)
+    val root = new org.apache.hadoop.fs.Path(tableDir)
+    // adoption is durable before the first rewrite: the plain layout's
+    // dirs are then referenced by a retained manifest and get the same
+    // two-publish retention slack as any other version (the first
+    // publish cannot prune a dir a pre-manifest reader is scanning)
+    adoptMergePartitioned(spark, tableDir, partitionCol): Unit
+    val read @ (_, basis) = latestCommitted(fs, root)
+    stage(basis).map { b =>
+      val basisEntries = b.basisVersion.fold(basis.entries)(v =>
+        committedAt(fs, root, v).getOrElse(throw new java.util.ConcurrentModificationException(
+          s"merge commit on $tableDir: basis version $v is no longer retained — the " +
+            "content read is older than the retention window; re-read and retry")).entries)
+      // batch dirs and manifest files carry a per-publisher unique
+      // suffix: two concurrent publishers that read the same max number
+      // then write DISTINCT files instead of clobbering each other's
+      val uid = java.util.UUID.randomUUID().toString.take(8)
+      val bdir = f"b-${nextNumber(fs, root)}%012d-$uid"
+      val dir = new org.apache.hadoop.fs.Path(root, bdir)
+      val schema = org.apache.spark.sql.graftbridge.Bridge.nullable(StructType(
+        b.frame.filterNot(_.name == partitionCol) :+ b.frame(partitionCol)))
+      val (written, claimed) =
+        try {
+          val written = b.write(s"$tableDir/$bdir").getOrElse(
+            try fs.listStatus(dir).toSeq.collect {
+              case st if st.isDirectory && st.getPath.getName.startsWith(s"$partitionCol=") =>
+                st.getPath.getName
+            } catch { case _: java.io.FileNotFoundException => Seq.empty })
+          val replaced = b.replaces(written)
+          (written, claimMergeManifest(fs, uri, conf, root, tableDir, read, basisEntries,
+              replaced ++ written, b.appendOnly, uid, bdir -> schema) { es =>
+            es.filterNot(e => replaced(segmentOf(e))) ++ written.map(s => s"$bdir/$s")
+          })
+        } catch { case t: Throwable =>
+          try deleteQuiet(fs, dir, recursive = true)
+          catch { case s: Throwable => t.addSuppressed(s) }
+          throw t
+        }
+      swapPointerForward(fs, uri, conf, root, claimed, s"${numberOf(claimed, "manifest-")}-$uid-1")
+      pruneMergePartitioned(fs, root)
+      b.result(written)
     }
   }
 
-  /** [[commitMergeManifest]] that reclaims the caller's just-written
-    * batch dir when the commit throws — a stale-snapshot REFUSE
-    * (`ConcurrentModificationException`) or claim-retry exhaustion
-    * (`IllegalStateException`). On those paths no COMMITTED manifest
-    * references the dir (loser-attempt manifests are deleted inside the
-    * commit loop), and [[pruneMergePartitioned]] only reclaims dirs
-    * referenced by deleted manifests — without this a first-attempt
-    * refuse would orphan the full merged batch dir on disk forever. */
-  private def commitMergeManifestOrReclaim(fs: org.apache.hadoop.fs.FileSystem,
-      uri: java.net.URI, conf: org.apache.hadoop.conf.Configuration,
-      root: org.apache.hadoop.fs.Path, tableDir: String, partitionCol: String,
-      read: (Long, Seq[String]), basisEntries: Seq[String], touchedSegs: Set[String],
-      rebaseOnOverlap: Boolean, uid: String, bdir: String)(
-      mkEntries: Seq[String] => Seq[String]): Unit =
-    try commitMergeManifest(fs, uri, conf, root, tableDir, partitionCol,
-      read, basisEntries, touchedSegs, rebaseOnOverlap, uid)(mkEntries)
-    catch {
-      case e @ (_: java.util.ConcurrentModificationException |
-                _: IllegalStateException) =>
-        deleteQuiet(fs, new org.apache.hadoop.fs.Path(root, bdir),
-          recursive = true)
-        throw e
-    }
-
   /** Read the live state of a [[publishMergePartitioned]] table:
     * resolve the manifest pointer once, then scan exactly the dirs it
-    * lists (grouped per batch dir so Spark's partition discovery
-    * restores the partition column, and Catalyst partition pruning
-    * still prunes reader-side filters to the touched dirs). A
-    * pre-manifest or plain parquet dir reads as-is. */
+    * lists (one scan per batch dir under the schema the manifest
+    * records for it, so the partition column comes back as written and
+    * Catalyst partition pruning still prunes reader-side filters to the
+    * touched dirs). A pre-manifest `col=val` layout reads its partition
+    * dirs as inference types them; a plain parquet dir reads as-is. */
   def readMergePartitioned(spark: SparkSession, tableDir: String,
       partitionCol: String = ""): DataFrame = {
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(tableDir), conf)
-    val root = new org.apache.hadoop.fs.Path(tableDir)
-    assembleManifest(spark, tableDir, manifestEntries(fs, root, partitionCol))
-      .getOrElse(spark.read.parquet(tableDir))
+    liveManifest(fs, new org.apache.hadoop.fs.Path(tableDir)) match {
+      case Some(m) => assembleManifest(spark, tableDir, m).getOrElse(spark.emptyDataFrame)
+      case None => assembleManifest(spark, tableDir, plainLayout(spark, tableDir, partitionCol))
+        .getOrElse(spark.read.parquet(tableDir))
+    }
   }
 
   /** Per-partition live GENERATION counts of a merge table: partition
@@ -1131,20 +1080,11 @@ object Sources {
     * the manifest pointer, no Spark job. */
   def mergeGenerations(spark: SparkSession, tableDir: String,
       partitionCol: String): Map[String, Int] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(tableDir), spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, tableDir)
     val root = new org.apache.hadoop.fs.Path(tableDir)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(root, "_current"))) {
-      // pre-adoption plain layout: one top-level dir per partition =
-      // one generation each
-      if (!fs.exists(root)) Map.empty
-      else fs.listStatus(root).toSeq.collect {
-        case st if st.isDirectory &&
-          st.getPath.getName.startsWith(s"$partitionCol=") =>
-          st.getPath.getName -> 1
-      }.toMap
-    }
-    else manifestEntries(fs, root, partitionCol)
+    // pre-adoption plain layout: one top-level dir per partition = one
+    // generation each
+    liveManifest(fs, root).map(_.entries).getOrElse(plainDirs(fs, root, partitionCol))
       .groupBy(segmentOf)
       .view.mapValues(_.map(topSegmentOf).distinct.size).toMap
   }
@@ -1154,21 +1094,20 @@ object Sources {
     * [[mergeGenerations]]. Listing-only. */
   def mergeBatchDirCount(spark: SparkSession, tableDir: String,
       partitionCol: String): Int = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(tableDir), spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, tableDir)
     val root = new org.apache.hadoop.fs.Path(tableDir)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(root, "_current")))
+    liveManifest(fs, root) match {
+      case Some(m) => m.entries.map(topSegmentOf).distinct.size
       // pre-adoption plain layout: the table root is the one batch
-      if (mergeGenerations(spark, tableDir, partitionCol).isEmpty) 0 else 1
-    else manifestEntries(fs, root, partitionCol).map(topSegmentOf).distinct.size
+      case None => if (plainDirs(fs, root, partitionCol).isEmpty) 0 else 1
+    }
   }
 
   /** Retained manifest versions of a [[publishMergePartitioned]]
     * table, ascending — the live-pointer number and the two-publish
     * slack below it (plus any pending/unpruned rivals). */
   def mergeVersions(spark: SparkSession, tableDir: String): Seq[Long] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(tableDir), spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, tableDir)
     manifestNames(fs, new org.apache.hadoop.fs.Path(tableDir))
       .map(numberOf(_, "manifest-")).distinct.sorted
   }
@@ -1182,10 +1121,10 @@ object Sources {
     * read: the version's `commit-<n>` marker names the one that won. */
   def readMergePartitionedVersion(spark: SparkSession, tableDir: String,
       version: Long): DataFrame =
-    assembleManifest(spark, tableDir, retainedEntries(spark, tableDir, version))
+    assembleManifest(spark, tableDir, retainedManifest(spark, tableDir, version))
       .getOrElse(spark.emptyDataFrame)
 
-  /** The reference list of retained manifest `version`: the one its
+  /** Retained manifest `version`: the one its
     * `commit-<n>` marker names, never a losing attempt's same-numbered
     * manifest (a publisher that crashed before deleting it leaves one
     * behind, and its uid may sort first). Fails loudly when `version`
@@ -1193,11 +1132,10 @@ object Sources {
     * past retention — it must fall back to a full re-read, and
     * silently diffing against an empty list would report the whole
     * table as changed without saying so). */
-  private def retainedEntries(spark: SparkSession, tableDir: String,
-      version: Long): Seq[String] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(tableDir), spark.sparkContext.hadoopConfiguration)
-    committedEntriesAt(fs, new org.apache.hadoop.fs.Path(tableDir), version).getOrElse(
+  private def retainedManifest(spark: SparkSession, tableDir: String,
+      version: Long): Manifest = {
+    val fs = fsOf(spark, tableDir)
+    committedAt(fs, new org.apache.hadoop.fs.Path(tableDir), version).getOrElse(
       throw new IllegalArgumentException(s"manifest $version not retained or never " +
         s"committed (have: ${mergeVersions(spark, tableDir).mkString(",")})"))
   }
@@ -1219,11 +1157,9 @@ object Sources {
     * fallback is a full re-read, never a silent whole-table "delta". */
   def readMergePartitionedChanges(spark: SparkSession, tableDir: String,
       sinceVersion: Long, partitionCol: String = ""): DataFrame = {
-    val from = retainedEntries(spark, tableDir, sinceVersion).toSet
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(tableDir), conf)
-    val live = manifestEntries(fs, new org.apache.hadoop.fs.Path(tableDir), partitionCol)
-    assembleManifest(spark, tableDir, live.filterNot(from))
+    val from = retainedManifest(spark, tableDir, sinceVersion).entries.toSet
+    val live = readableManifest(spark, tableDir, "")
+    assembleManifest(spark, tableDir, live.withEntries(live.entries.filterNot(from)))
       .getOrElse(spark.emptyDataFrame)
   }
 
@@ -1245,7 +1181,7 @@ object Sources {
       sinceVersion: Long, naturalKey: Seq[String],
       partitionCol: String = ""): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val (changed, oldDirs) = changeDirSets(spark, tableDir, sinceVersion, partitionCol)
+    val (changed, oldDirs) = changeDirSets(spark, tableDir, sinceVersion)
     (assembleManifest(spark, tableDir, changed),
         assembleManifest(spark, tableDir, oldDirs)) match {
       case (Some(newState), Some(oldState)) =>
@@ -1268,17 +1204,15 @@ object Sources {
     * state must still enter the diff, where every row classifies
     * `orphaned`). */
   private def changeDirSets(spark: SparkSession, tableDir: String,
-      sinceVersion: Long, partitionCol: String): (Seq[String], Seq[String]) = {
-    val from = retainedEntries(spark, tableDir, sinceVersion)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(tableDir), conf)
-    val live = manifestEntries(fs, new org.apache.hadoop.fs.Path(tableDir), partitionCol)
-    val changed = live.filterNot(from.toSet)
+      sinceVersion: Long): (Manifest, Manifest) = {
+    val from = retainedManifest(spark, tableDir, sinceVersion)
+    val live = readableManifest(spark, tableDir, "")
+    val changed = live.entries.filterNot(from.entries.toSet)
     val changedSegs = changed.map(segmentOf).toSet
-    val liveSegs = live.map(segmentOf).toSet
-    val oldDirs = from.filter(e =>
+    val liveSegs = live.entries.map(segmentOf).toSet
+    val oldDirs = from.entries.filter(e =>
       changedSegs.contains(segmentOf(e)) || !liveSegs.contains(segmentOf(e)))
-    (changed, oldDirs)
+    (live.withEntries(changed), from.withEntries(oldDirs))
   }
 
   /** The row-level delta FUSED into one anti-join (r18, guide §2.4):
@@ -1409,7 +1343,7 @@ object Sources {
           // side replaces full-outer diff → changed keys → re-scan →
           // semi-join; see [[changedRowsOnly]] for the equivalence
           // argument (rows identical by construction, spec-pinned)
-          val (changed, oldDirs) = changeDirSets(spark, tableDir, v, partitionCol)
+          val (changed, oldDirs) = changeDirSets(spark, tableDir, v)
           (assembleManifest(spark, tableDir, changed),
               assembleManifest(spark, tableDir, oldDirs)) match {
             case (Some(newState), Some(oldState)) =>
@@ -1513,8 +1447,7 @@ object Sources {
     * is false: the one-job build the driver build must agree with. */
   private[sources] def indexBatchKeys(spark: SparkSession, tableDir: String, keyCol: String,
       fpp: Double, mayUseDriver: Boolean): Int = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(tableDir), spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, tableDir)
     val root = new org.apache.hadoop.fs.Path(tableDir)
     if (!fs.exists(root)) return 0
     val todo = unindexedBatchDirs(fs, root, s"_keybloom-$keyCol")
@@ -1627,13 +1560,10 @@ object Sources {
     * that pins the bulk build byte-identical. */
   private[sources] def indexBatchKeysSerial(spark: SparkSession, tableDir: String,
       keyCol: String, fpp: Double = 0.01): Int = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(tableDir), spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, tableDir)
     val root = new org.apache.hadoop.fs.Path(tableDir)
     if (!fs.exists(root)) return 0
-    val referenced: Option[Set[String]] =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(root, "_current"))) None
-      else Some(manifestEntries(fs, root, "").map(topSegmentOf).toSet)
+    val referenced = liveManifest(fs, root).map(_.entries.map(topSegmentOf).toSet)
     var built = 0
     fs.listStatus(root).foreach { st =>
       if (st.isDirectory && indexableDir(st.getPath.getName) &&
@@ -1670,9 +1600,7 @@ object Sources {
     * pre-manifest plain layout indexes all its partition dirs. */
   private def unindexedBatchDirs(fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path, sidecarName: String): Seq[String] = {
-    val referenced: Option[Set[String]] =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(root, "_current"))) None
-      else Some(manifestEntries(fs, root, "").map(topSegmentOf).toSet)
+    val referenced = liveManifest(fs, root).map(_.entries.map(topSegmentOf).toSet)
     fs.listStatus(root).toSeq.collect {
       case st if st.isDirectory && indexableDir(st.getPath.getName) &&
         referenced.forall(_.contains(st.getPath.getName)) &&
@@ -1823,7 +1751,7 @@ object Sources {
     * long before data volume does.
     *
     * It commits through the same claimed `commit-<n>` protocol as
-    * every other merge publish ([[commitMergeManifest]]): a rival that
+    * every other merge publish ([[claimMergeManifest]]): a rival that
     * adds a partition this compaction did not read rebases in beside
     * it; a rival that changed a compacted partition after the read
     * makes compaction refuse with `ConcurrentModificationException`
@@ -1835,30 +1763,15 @@ object Sources {
   def compactMergePartitioned(spark: SparkSession, tableDir: String,
       partitionCol: String): Int = {
     import org.apache.spark.sql.functions.col
-    val conf = spark.sparkContext.hadoopConfiguration
-    val uri = new java.net.URI(tableDir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(uri, conf)
-    val root = new org.apache.hadoop.fs.Path(tableDir)
-    adoptMergePartitioned(spark, tableDir, partitionCol): Unit
-    val basis @ (_, entries) = latestCommitted(fs, root, partitionCol)
-    val state = assembleManifest(spark, tableDir, entries).getOrElse(return 0)
-    val uid = java.util.UUID.randomUUID().toString.take(8)
-    val bnum = nextNumber(fs, root)
-    val bdir = f"b-$bnum%012d-$uid"
-    state.repartition(col(partitionCol))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy(partitionCol).parquet(s"$tableDir/$bdir")
-    val written = fs.listStatus(new org.apache.hadoop.fs.Path(root, bdir))
-      .collect { case st if st.isDirectory &&
-        st.getPath.getName.startsWith(s"$partitionCol=") => st.getPath.getName }
-      .toSeq
-    val compacted = entries.map(segmentOf).toSet
-    commitMergeManifestOrReclaim(fs, uri, conf, root, tableDir, partitionCol,
-      basis, entries, compacted ++ written, rebaseOnOverlap = false, uid, bdir) { es =>
-      es.filterNot(e => compacted.contains(segmentOf(e))) ++
-        written.map(s => s"$bdir/$s")
-    }
-    written.size
+    commitMergeBatch(spark, tableDir, partitionCol) { basis =>
+      assembleManifest(spark, tableDir, basis).map { state =>
+        MergeBatch(state.schema, dir => {
+          state.repartition(col(partitionCol)).write.mode(SaveMode.Overwrite)
+            .partitionBy(partitionCol).parquet(dir)
+          None
+        }, _ => basis.entries.map(segmentOf).toSet, _.size)
+      }
+    }.getOrElse(0)
   }
 
   // ---- zone-map sidecars: dir-level min/max for range skipping ----
@@ -1919,8 +1832,7 @@ object Sources {
     * have no false positives, so skipping is deterministic. */
   def indexBatchStats(spark: SparkSession, tableDir: String, statCol: String): Int = {
     import org.apache.spark.sql.functions.{max => fmax, min => fmin, col}
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(tableDir), spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, tableDir)
     val root = new org.apache.hadoop.fs.Path(tableDir)
     if (!fs.exists(root)) return 0
     val todo = unindexedBatchDirs(fs, root, s"_zonemap-$statCol")
@@ -1962,8 +1874,7 @@ object Sources {
   private[sources] def indexBatchStatsSerial(spark: SparkSession, tableDir: String,
       statCol: String): Int = {
     import org.apache.spark.sql.functions.{max => fmax, min => fmin, col}
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(tableDir), spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, tableDir)
     val root = new org.apache.hadoop.fs.Path(tableDir)
     if (!fs.exists(root)) return 0
     var built = 0
@@ -2002,13 +1913,12 @@ object Sources {
       partitionCol: String, statCol: String,
       lower: Option[Any], upper: Option[Any]): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(tableDir), spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, tableDir)
     val root = new org.apache.hadoop.fs.Path(tableDir)
-    val entries = manifestEntries(fs, root, partitionCol)
+    val m = readableManifest(spark, tableDir, partitionCol)
     val lo = lower.map(zoneKey)
     val hi = upper.map(zoneKey)
-    val kept = entries.groupBy(topSegmentOf).toSeq.sortBy(_._1).flatMap {
+    val kept = m.entries.groupBy(topSegmentOf).toSeq.sortBy(_._1).flatMap {
       case (top, es) =>
         val sidecar = new org.apache.hadoop.fs.Path(root, s"$top/_zonemap-$statCol")
         val overlaps =
@@ -2030,14 +1940,8 @@ object Sources {
       val afterLo = lower.map(v => df.filter(col(statCol) >= lit(v))).getOrElse(df)
       upper.map(v => afterLo.filter(col(statCol) <= lit(v))).getOrElse(afterLo)
     }
-    assembleManifest(spark, tableDir, kept) match {
-      case Some(df) => bounded(df)
-      case None => // every dir excluded: schema-only plan, zero files
-        val schema = manifestSchema(spark, tableDir, entries)
-          .getOrElse(spark.read.parquet(tableDir).schema)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    }
+    assembleManifest(spark, tableDir, m.withEntries(kept)).map(bounded)
+      .getOrElse(emptyRead(spark, m))
   }
 
   /** Keyed lookup over a [[publishMergePartitioned]] table that skips
@@ -2054,11 +1958,10 @@ object Sources {
   def readMergePartitionedKeyed(spark: SparkSession, tableDir: String,
       partitionCol: String, keyCol: String, keys: Seq[Any]): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(tableDir), spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, tableDir)
     val root = new org.apache.hadoop.fs.Path(tableDir)
-    val entries = manifestEntries(fs, root, partitionCol)
-    val kept = entries.groupBy(topSegmentOf).toSeq.sortBy(_._1).flatMap {
+    val m = readableManifest(spark, tableDir, partitionCol)
+    val kept = m.entries.groupBy(topSegmentOf).toSeq.sortBy(_._1).flatMap {
       case (top, es) =>
         val sidecar = new org.apache.hadoop.fs.Path(root, s"$top/_keybloom-$keyCol")
         val mayContain =
@@ -2080,14 +1983,9 @@ object Sources {
           }
         if (mayContain) es else Nil
     }
-    assembleManifest(spark, tableDir, kept) match {
-      case Some(df) => df.filter(col(keyCol).isin(keys: _*))
-      case None => // every dir excluded: schema-only plan, zero files
-        val schema = manifestSchema(spark, tableDir, entries)
-          .getOrElse(spark.read.parquet(tableDir).schema)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    }
+    assembleManifest(spark, tableDir, m.withEntries(kept))
+      .map(_.filter(col(keyCol).isin(keys: _*)))
+      .getOrElse(emptyRead(spark, m))
   }
 
   /** Keyed read whose key set is a DATAFRAME — the shape that never
@@ -2138,16 +2036,17 @@ object Sources {
     * update. A referenced-dir set read from a vanishing manifest is
     * safe here: only a prune deletes manifests, and its pointer
     * arithmetic already adjudicated that manifest's dirs — and any
-    * dir young enough to be mid-publish is spared by mtime anyway.
+    * dir young enough to be mid-publish is spared by mtime anyway. A
+    * manifest in a format this engine does not read refuses the vacuum
+    * ([[parseManifest]]): its references are unknown.
     * Returns the deleted dir names. */
   def vacuumOrphans(spark: SparkSession, tableDir: String,
       olderThanMs: Long = 24L * 3600 * 1000): Seq[String] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(tableDir), spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, tableDir)
     val root = new org.apache.hadoop.fs.Path(tableDir)
     if (!fs.exists(root)) return Seq.empty
     val referenced = manifestNames(fs, root)
-      .flatMap(readManifest(fs, root, _)).map(topSegmentOf).toSet
+      .flatMap(readManifestOpt(fs, root, _).toSeq.flatMap(_.entries)).map(topSegmentOf).toSet
     val now = System.currentTimeMillis()
     val orphans = fs.listStatus(root).toSeq.filter { st =>
       st.isDirectory && st.getPath.getName.startsWith("b-") &&
@@ -2158,84 +2057,149 @@ object Sources {
     orphans.map(_.getPath.getName)
   }
 
-  /** Live manifest entries (relative dir paths), resolving `_current`;
-    * falls back to adopting a plain partitioned layout's root-level
-    * `<col>=<val>` dirs when no manifest exists yet. A pointer naming
-    * a manifest that no longer exists means the reader lagged past the
-    * two-publish retention window: re-resolve (the pointer has moved
-    * on) and fail LOUDLY if the table stays unreadable — never fall
-    * back to a raw directory scan of a half-pruned layout. */
-  private def manifestEntries(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, partitionCol: String): Seq[String] = {
-    val ptr = new org.apache.hadoop.fs.Path(root, "_current")
-    var attempt = 0
-    while (true) {
-      readControl(fs, ptr).filter(_.startsWith("manifest-")) match {
-        case Some(m) =>
-          readManifestOpt(fs, root, m).foreach(es => return es)
-          attempt += 1
-          if (attempt >= 3)
-            throw new IllegalStateException(
-              s"manifest $m named by $root/_current no longer exists — " +
-                "reader lagged beyond the two-publish retention window")
-        case None if fs.exists(root) =>
-          return fs.listStatus(root).toSeq.collect {
-            case st if st.isDirectory && st.getPath.getName.contains("=") &&
-              (partitionCol.isEmpty ||
-                st.getPath.getName.startsWith(s"$partitionCol=")) =>
-              st.getPath.getName
-          }
-        case None => return Seq.empty
-      }
+  /** The format version a merge manifest states on its first line
+    * (README, "Storage format"). A manifest stating another version, or
+    * none, is refused by every read and every publish. */
+  private val ManifestFormat = 1
+
+  /** One merge-table manifest: its file name, the schema each dir group
+    * reads under (by group dir: a batch dir, or "" for adopted
+    * root-level `col=val` dirs), and its entries, the live partition
+    * dirs relative to the table root. */
+  private final case class Manifest(name: String, schemas: Map[String, StructType],
+      entries: Seq[String]) {
+    def withEntries(es: Seq[String]): Manifest = copy(entries = es)
+
+    /** The manifest file: the format-version line, one `schema` line per
+      * dir group the entries use (tab-separated; Spark's path escaping
+      * leaves no tab in an entry), then the entries. */
+    def text: String = {
+      val groups = entries.map(groupOf).toSet
+      (s"version\t$ManifestFormat" +: schemas.toSeq.filter(g => groups(g._1)).sortBy(_._1)
+        .map { case (g, schema) => s"schema\t$g\t${schema.json}" } ++: entries.sorted)
+        .mkString("\n")
     }
-    Seq.empty // unreachable
   }
 
-  /** A manifest's reference list, or None if it vanished (a
-    * concurrent pruner deleted it mid-pass). Callers must distinguish
-    * the two: for a PROTECTED manifest a vanished read must abort the
-    * prune, never silently shrink the protection set. */
+  private object Manifest {
+    val Empty: Manifest = Manifest("", Map.empty, Nil)
+  }
+
+  /** Parse manifest `name`'s content; refuses, naming the manifest, one
+    * that states no format version or one this engine does not read. */
+  private def parseManifest(root: org.apache.hadoop.fs.Path, name: String,
+      content: String): Manifest = {
+    val lines = content.split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
+    def refuse(what: String) = throw new IllegalStateException(
+      s"merge manifest $root/$name $what; this engine reads format version " +
+        s"$ManifestFormat only — refusing a layout it does not know")
+    lines.headOption.filter(_.startsWith("version\t")).map(_.stripPrefix("version\t")) match {
+      case Some(v) if v == ManifestFormat.toString =>
+      case Some(v) => refuse(s"states format version $v")
+      case None => refuse("states no format version")
+    }
+    val (schemas, entries) = lines.tail.partition(_.startsWith("schema\t"))
+    Manifest(name, schemas.map { line =>
+      val Array(_, group, json) = line.split("\t", 3)
+      group -> org.apache.spark.sql.types.DataType.fromJson(json).asInstanceOf[StructType]
+    }.toMap, entries)
+  }
+
+  /** The live manifest, resolving `_current`; None when the table has
+    * no manifest pointer. A pointer naming a manifest that no longer
+    * exists means the reader lagged past the two-publish retention
+    * window: re-resolve (the pointer has moved on) and fail LOUDLY if
+    * the table stays unreadable — never fall back to a raw directory
+    * scan of a half-pruned layout. */
+  private def liveManifest(fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path): Option[Manifest] = {
+    val ptr = new org.apache.hadoop.fs.Path(root, "_current")
+    var attempt = 0
+    var live = Option.empty[Manifest]
+    while (live.isEmpty) {
+      val m = readControl(fs, ptr).filter(_.startsWith("manifest-")).getOrElse(return None)
+      live = readManifestOpt(fs, root, m)
+      attempt += 1
+      if (live.isEmpty && attempt >= 3)
+        throw new IllegalStateException(
+          s"manifest $m named by $root/_current no longer exists — " +
+            "reader lagged beyond the two-publish retention window")
+    }
+    live
+  }
+
+  /** The root-level `col=val` dirs of a plain partitioned layout (of
+    * `partitionCol` when it is given). */
+  private def plainDirs(fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path, partitionCol: String): Seq[String] =
+    if (!fs.exists(root)) Seq.empty
+    else fs.listStatus(root).toSeq.collect {
+      case st if st.isDirectory && st.getPath.getName.contains("=") &&
+        (partitionCol.isEmpty || st.getPath.getName.startsWith(s"$partitionCol=")) =>
+        st.getPath.getName
+    }
+
+  /** A plain partitioned layout as the manifest its adoption writes: its
+    * `col=val` dirs under the schema Spark's inference gives them (a
+    * Spark job), the one read of a merge table that infers a type. */
+  private def plainLayout(spark: SparkSession, tableDir: String,
+      partitionCol: String): Manifest = {
+    val dirs = plainDirs(fsOf(spark, tableDir), new org.apache.hadoop.fs.Path(tableDir), partitionCol)
+    if (dirs.isEmpty) Manifest.Empty
+    else Manifest("", Map("" -> spark.read.option("basePath", tableDir)
+      .parquet(dirs.map(d => s"$tableDir/$d"): _*).schema), dirs)
+  }
+
+  /** The live manifest, or for a table not adopted yet its
+    * [[plainLayout]]. */
+  private def readableManifest(spark: SparkSession, tableDir: String,
+      partitionCol: String): Manifest =
+    liveManifest(fsOf(spark, tableDir), new org.apache.hadoop.fs.Path(tableDir))
+      .getOrElse(plainLayout(spark, tableDir, partitionCol))
+
+  /** A manifest, or None if it vanished (a concurrent pruner deleted it
+    * mid-pass). Callers must distinguish the two: for a PROTECTED
+    * manifest a vanished read must abort the prune, never silently
+    * shrink the protection set. Refused per [[parseManifest]]. */
   private def readManifestOpt(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, name: String): Option[Seq[String]] =
-    readControl(fs, new org.apache.hadoop.fs.Path(root, name))
-      .map(_.split("\n").toSeq.map(_.trim).filter(_.nonEmpty))
+      root: org.apache.hadoop.fs.Path, name: String): Option[Manifest] =
+    readControl(fs, new org.apache.hadoop.fs.Path(root, name)).map(parseManifest(root, name, _))
 
-  /** [[readManifestOpt]] where vanished-reads-as-empty is safe (the
-    * rotated-out side of a prune, a manifest just found in a
-    * listing). */
-  private def readManifest(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, name: String): Seq[String] =
-    readManifestOpt(fs, root, name).getOrElse(Seq.empty)
-
-  /** One DataFrame over a manifest's dirs: one basePath-scan per batch
-    * dir (partition discovery restores the typed partition column),
-    * unioned. None when the manifest is empty. */
+  /** One DataFrame over a manifest's dirs: one basePath-scan per dir
+    * group under the schema the manifest records for it, unioned. None
+    * when the manifest lists no dir. */
   private def assembleManifest(spark: SparkSession, tableDir: String,
-      entries: Seq[String]): Option[DataFrame] =
-    manifestGroups(entries).map(readManifestGroup(spark, tableDir, _))
+      m: Manifest): Option[DataFrame] =
+    manifestGroups(m.entries).map(readManifestGroup(spark, tableDir, m, _))
       .reduceOption(_ unionByName _)
 
-  /** The schema [[assembleManifest]] gives `entries`, taken from their
-    * first batch dir alone (the union keeps its column order): what a
-    * read that excludes every dir plans over. */
-  private def manifestSchema(spark: SparkSession, tableDir: String,
-      entries: Seq[String]): Option[StructType] =
-    manifestGroups(entries).headOption.map(readManifestGroup(spark, tableDir, _).schema)
+  /** What a read of `m` that excludes every dir plans over: no rows,
+    * under the schema of `m`'s first dir group (the union keeps its
+    * column order); no column when `m` lists no dir. */
+  private def emptyRead(spark: SparkSession, m: Manifest): DataFrame =
+    manifestGroups(m.entries).headOption.fold(spark.emptyDataFrame) { case (group, _) =>
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        m.schemas(group))
+    }
 
   private def manifestGroups(entries: Seq[String]): Seq[(String, Seq[String])] =
-    entries.groupBy(e => e.splitAt(e.lastIndexOf('/') + 1)._1).toSeq.sortBy(_._1)
+    entries.groupBy(groupOf).toSeq.sortBy(_._1)
 
-  /** One batch dir's scan. A `b-*` dir is one `partitionBy` write, so
-    * any footer carries the schema inference would return and the read
-    * needs no inference job; adopted `col=val` dirs keep inference. */
-  private def readManifestGroup(spark: SparkSession, tableDir: String,
+  /** The dir group of a manifest entry: its batch dir, "" for an adopted
+    * root-level dir. */
+  private def groupOf(entry: String): String =
+    entry.substring(0, math.max(entry.lastIndexOf('/'), 0))
+
+  /** One dir group's scan, under the schema `m` records for it: no
+    * footer read, no inference, and the partition column comes back as
+    * written (`p=01` of a string column reads as "01"). */
+  private def readManifestGroup(spark: SparkSession, tableDir: String, m: Manifest,
       group: (String, Seq[String])): DataFrame = {
-    val (parent, es) = group
-    val base = if (parent.isEmpty) tableDir else s"$tableDir/${parent.stripSuffix("/")}"
-    val reader = spark.read.option("basePath", base)
-    val schema =
-      if (parent.startsWith("b-")) writtenSchema(spark, s"$tableDir/${es.head}") else None
-    schema.fold(reader)(reader.schema).parquet(es.map(e => s"$tableDir/$e"): _*)
+    val (dir, es) = group
+    val schema = m.schemas.getOrElse(dir, throw new IllegalStateException(
+      s"merge manifest $tableDir/${m.name} records no schema for dir group '$dir'"))
+    spark.read.option("basePath", if (dir.isEmpty) tableDir else s"$tableDir/$dir")
+      .schema(schema).parquet(es.map(e => s"$tableDir/$e"): _*)
   }
 
   /** The schema Spark's parquet inference returns for `dir`, read on
@@ -2374,8 +2338,7 @@ object Sources {
   def compact(spark: SparkSession, tableDir: String,
       targetBytes: Long = 128L * 1024 * 1024): Int = {
     val live = resolveSnapshot(spark, tableDir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(live), spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, live)
     val bytes = fs.getContentSummary(new org.apache.hadoop.fs.Path(live)).getLength
     val n = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
     publishSnapshot(spark.read.parquet(live).repartition(n), tableDir)
@@ -2398,8 +2361,7 @@ object Sources {
     * fold (ADVICE r17). Use [[snapshotReadBasis]], which also pins the
     * pointer version the content reads actually resolved. */
   def snapshotCommittedVersion(spark: SparkSession, tableRoot: String): Long = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(tableRoot), spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, tableRoot)
     snapshotCommittedNum(fs, new org.apache.hadoop.fs.Path(tableRoot))
   }
 
@@ -2424,8 +2386,7 @@ object Sources {
     *
     * A publish refuses unless BOTH still match at claim time. */
   def snapshotReadBasis(spark: SparkSession, tableRoot: String): SnapshotBasis = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(tableRoot), spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, tableRoot)
     val root = new org.apache.hadoop.fs.Path(tableRoot)
     SnapshotBasis(snapshotCommittedNum(fs, root), snapshotPointerNum(fs, root))
   }
@@ -2463,7 +2424,7 @@ object Sources {
   }
 
   /** Claim the next snapshot version for this publisher (r17, the
-    * dense-claim OCC protocol [[commitMergeManifest]] built for merge
+    * dense-claim OCC protocol [[claimMergeManifest]] built for merge
     * tables, applied to whole-snapshot publishes): derive
     * `next = committed + 1` and take `commit-<next>` with an atomic
     * put-if-absent. Exactly one publisher owns each number, so
@@ -2799,33 +2760,48 @@ object Sources {
       .getOrElse(spark.read.parquet(tableRoot))
 
   /** Retained snapshot versions, ascending — the live one plus up to
-    * two priors (publishSnapshot's retention window). */
+    * two priors (publishSnapshot's retention window): the versions at
+    * or below the live pointer whose `commit-<n>` marker names a version
+    * dir that still exists, the ones time travel reads. */
   def snapshotVersions(spark: SparkSession, tableRoot: String): Seq[Long] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(tableRoot), spark.sparkContext.hadoopConfiguration)
-    listVersions(fs, new org.apache.hadoop.fs.Path(tableRoot)).map(_._1).distinct.sorted
+    val fs = fsOf(spark, tableRoot)
+    val root = new org.apache.hadoop.fs.Path(tableRoot)
+    val dirs = listVersions(fs, root).map(_._2.getName).toSet
+    commitNumbers(fs, root).sorted.filter(n => claimedVersion(fs, root, n).exists(dirs))
+  }
+
+  /** The version dir the `commit-<n>` marker of snapshot version `n`
+    * names — the publish that won the number — when the marker names
+    * one (not a burned number) and `n` is not above the live pointer
+    * (an unswapped claim). */
+  private def claimedVersion(fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path, n: Long): Option[String] =
+    readControl(fs, new org.apache.hadoop.fs.Path(root, f"$CommitPrefix$n%012d"))
+      .filter(v => v.startsWith("v-") && n <= snapshotPointerNum(fs, root))
+
+  /** The dir time travel reads for snapshot version `version`: the one
+    * its claim names ([[claimedVersion]]). A burned, missing, unswapped
+    * or pruned version is refused, naming the retained ones: never a
+    * same-numbered dir the claim does not name, such as the partial
+    * leftover of a failed publish. */
+  private def versionDir(spark: SparkSession, tableRoot: String, version: Long): String = {
+    val fs = fsOf(spark, tableRoot)
+    val root = new org.apache.hadoop.fs.Path(tableRoot)
+    claimedVersion(fs, root, version)
+      .filter(v => fs.exists(new org.apache.hadoop.fs.Path(root, v)))
+      .map(v => s"$tableRoot/$v")
+      .getOrElse(throw new IllegalArgumentException(s"version $version of $tableRoot not " +
+        s"retained or never committed (have: ${snapshotVersions(spark, tableRoot).mkString(",")})"))
   }
 
   /** Time travel: read a specific RETAINED version (see
     * [[snapshotVersions]]) — what lets a long job pin the table state
     * it started from across concurrent publishes, and an audit re-read
-    * the pre-load state. Fails loudly if the version was pruned. When
-    * rival same-numbered dirs exist (a lost concurrent publish), the
-    * one the live pointer names wins; otherwise the choice is
-    * name-deterministic. */
+    * the pre-load state. Reads the dir the version's claim names, and
+    * fails loudly when the version was pruned or never committed. */
   def readSnapshotVersion(spark: SparkSession, tableRoot: String,
-      version: Long): DataFrame = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(tableRoot), spark.sparkContext.hadoopConfiguration)
-    val root = new org.apache.hadoop.fs.Path(tableRoot)
-    val dirs = listVersions(fs, root).collect { case (v, p) if v == version => p }
-    require(dirs.nonEmpty,
-      s"version $version not retained (have: ${snapshotVersions(spark, tableRoot).mkString(",")})")
-    val chosen = currentPointer(fs, root)
-      .flatMap(cur => dirs.find(_.getName == cur))
-      .getOrElse(dirs.minBy(_.getName))
-    readWritten(spark, chosen.toString)
-  }
+      version: Long): DataFrame =
+    readWritten(spark, versionDir(spark, tableRoot, version))
 
   /** True if the snapshot root has a live version (pointer or plain
     * parquet files) — the existence probe incremental consumers use. */
@@ -2913,21 +2889,12 @@ object Sources {
     * prior version (see [[snapshotVersions]] — same retention as
     * single-frame snapshots). The audit read the incremental-identity
     * registry needs: "what did subjects AND local_ids look like
-    * before cycle N", mutually consistent by construction. Fails
-    * loudly when the version was pruned; rival same-numbered dirs
-    * resolve with the [[readSnapshotVersion]] rule. */
+    * before cycle N", mutually consistent by construction. Resolves
+    * and fails as [[readSnapshotVersion]] does. */
   def readSnapshotGroupVersion(spark: SparkSession, tableRoot: String,
       version: Long, members: Seq[String]): Map[String, DataFrame] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(tableRoot), spark.sparkContext.hadoopConfiguration)
-    val root = new org.apache.hadoop.fs.Path(tableRoot)
-    val dirs = listVersions(fs, root).collect { case (v, p) if v == version => p }
-    require(dirs.nonEmpty,
-      s"group version $version not retained (have: ${snapshotVersions(spark, tableRoot).mkString(",")})")
-    val chosen = currentPointer(fs, root)
-      .flatMap(cur => dirs.find(_.getName == cur))
-      .getOrElse(dirs.minBy(_.getName))
-    members.map(m => m -> readWritten(spark, s"$chosen/$m")).toMap
+    val dir = versionDir(spark, tableRoot, version)
+    members.map(m => m -> readWritten(spark, s"$dir/$m")).toMap
   }
 
   // accepts both the uid-suffixed layout (`v-<n>-<uid>`) and the

@@ -41,9 +41,9 @@ object GenScale {
       SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // events.ts is INT64 TIMESTAMP(NANOS) parquet (see Tables.events):
-    // read it as raw nanos and write it back as a plain INT64 — the
-    // Tables loaders handle both representations identically
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // the session reads it as raw nanos (GraftSession.configure) and it
+    // is written back as a plain INT64 — the Tables loaders handle both
+    // representations identically
 
     def read(t: String): DataFrame = spark.read.parquet(s"$in/$t.parquet")
     def write(df: DataFrame, t: String): Unit =

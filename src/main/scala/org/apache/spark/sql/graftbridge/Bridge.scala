@@ -32,6 +32,10 @@ object Bridge {
   def cloneSession(s: SparkSession): SparkSession =
     s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
 
+  /** `schema` with every field, nested ones included, nullable: the
+    * schema a file source reads under whatever schema it is given. */
+  def nullable(schema: StructType): StructType = schema.asNullable
+
   private def classic(s: SparkSession) =
     s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
 

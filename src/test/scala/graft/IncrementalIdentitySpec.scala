@@ -108,6 +108,23 @@ class IncrementalIdentitySpec extends SparkSpec {
     assert(bOwner.getAs[Boolean]("flagged_for_review")) // 201's center conflict
   }
 
+  test("an events read, a merge publish, a key index and a cycle leave the session conf as it was") {
+    val root = tmp("conf")
+    val (fragDir, ckDir, regRoot) = (s"$root/f", s"$root/ck", s"$root/r")
+    IncrementalIdentity.publishRegistry(reg0, regRoot)
+    def unchanged(what: String)(f: => Any): Unit = {
+      val before = spark.conf.getAll
+      f
+      assert(spark.conf.getAll == before, what)
+    }
+    unchanged("events read")(Tables.events(spark, sf0001).count())
+    unchanged("merge publish")(
+      Sources.publishMergePartitioned(spark, fragDir, frag(batch1), cfg, "p").count())
+    unchanged("key index")(Sources.indexBatchKeys(spark, fragDir, "request_id"))
+    unchanged("identity cycle")(IncrementalIdentity.resolveCycle(spark, fragDir, ckDir, regRoot,
+      Seq("request_id"), day1, "p", groupingIterations = 1)(identity).map(_.resolutions.count()))
+  }
+
   test("third cycle with no new publish is a no-op returning None") {
     val root = tmp("noop")
     val (fragDir, ckDir, regRoot) = (s"$root/f", s"$root/ck", s"$root/r")

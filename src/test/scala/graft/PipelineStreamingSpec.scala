@@ -283,7 +283,7 @@ class SourcesSpec extends SparkSpec {
     new java.io.File(root, "b-000000000002-zz/center=c9").mkdirs()
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(dir, "manifest-000000000002-zz"),
-      "b-000000000002-zz/center=c9")
+      "version\t1\nb-000000000002-zz/center=c9")
     // an in-flight dir referenced by NO manifest at all
     new java.io.File(root, "b-000000000777-inflight").mkdirs()
     for (v <- 2 to 6) // manifests 778.. (in-flight dir bumps the counter)

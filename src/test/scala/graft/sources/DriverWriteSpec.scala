@@ -134,4 +134,25 @@ class DriverWriteSpec extends DriverPathHarness {
       .startsWith("v-000000000003-"))
     assert(versionDirs().size == 2, s"${versionDirs()}")
   }
+
+  test("time travel reads the claimed dir and refuses a burned version's leftover") {
+    val dir = freshDir()
+    for ((x, y) <- Seq(1 -> "a", 2 -> "b"))
+      Sources.publishSnapshotGroup(Seq("p" -> Seq(x).toDF("x"), "q" -> Seq(y).toDF("y")), dir)
+    // a publish claimed version 3 and failed in member q's write; its
+    // dir delete failed too, so member p's files stay beside the burned
+    // marker
+    val leftover = "v-000000000003-deadbeef"
+    Seq(3).toDF("x").write.parquet(s"$dir/$leftover/p")
+    Files.writeString(java.nio.file.Paths.get(dir, "commit-000000000003"), s"burned-$leftover")
+    Sources.publishSnapshotGroup(Seq("p" -> Seq(4).toDF("x"), "q" -> Seq("d").toDF("y")), dir)
+    assert(Sources.snapshotVersions(spark, dir) == Seq(2L, 4L))
+    val e = intercept[IllegalArgumentException] {
+      Sources.readSnapshotGroupVersion(spark, dir, 3L, Seq("p", "q"))
+    }
+    assert(e.getMessage.contains("have: 2,4"), e.getMessage)
+    intercept[IllegalArgumentException](Sources.readSnapshotVersion(spark, dir, 3L))
+    val v2 = Sources.readSnapshotGroupVersion(spark, dir, 2L, Seq("p", "q"))
+    assert(v2("p").as[Int].collect().toSeq == Seq(2) && v2("q").as[String].collect().toSeq == Seq("b"))
+  }
 }

@@ -15,9 +15,8 @@ import graft.types.TableConfig
   * merged rows under its schema, leave a table that the plain and the
   * keyed reader read back exactly as the distributed path's, commit
   * through the same claim, and leave nothing behind when its write
-  * fails. Above each bound, for key or column types the Scala merge
-  * does not cover, and for partition values Spark infers back as
-  * another type, today's distributed plan runs, at a known number of
+  * fails. Above each bound, and for key or column types the Scala merge
+  * does not cover, today's distributed plan runs, at a known number of
   * jobs. */
 class MergeDriverPathSpec extends DriverPathHarness {
   import spark.implicits._
@@ -148,28 +147,26 @@ class MergeDriverPathSpec extends DriverPathHarness {
     }
   }
 
-  test("a partition column that Spark reads back as another type takes today's plan") {
-    // the b-* dirs are read with a partition-less footer schema, so the
-    // partition type is inferred from the directory names: '2024-01-01'
-    // reads back as a date, '01' as an int, a long as an int
+  test("a recorded partition type keeps its rows on both paths") {
+    // each batch dir reads under the schema its manifest records, so
+    // `p=01` stays the string '01' (inference: the int 1),
+    // `p=2024-01-01` a string (a date) and `p=7` a long (an int): the
+    // touched partition's current rows enter the merge on both paths
     def keys(dir: String): Seq[Long] =
       Sources.readMergePartitioned(spark, dir, "p").select("k").as[Long].collect().toSeq.sorted
-    def check(tag: String, p: Any, kept: Boolean): Unit = {
+    def check(tag: String, p: Any): Unit = {
       val seed = Seq((1L, "a"), (2L, "b")).toDF("k", "v").withColumn("p", lit(p))
       val incoming = Seq((2L, "B"), (3L, "c")).toDF("k", "v").withColumn("p", lit(p))
       var dirs = Seq.empty[String]
-      // a local batch: its rows stand in for the two-job partition probe
-      today(tag, incoming, extra = -2) { dir =>
+      agree(tag, incoming, Seq(1L, 2L, 3L, 4L)) { dir =>
         dirs :+= dir
         Sources.publishMergePartitioned(spark, dir, seed, cfg, "p", mayUseDriver = false): Unit
       }
-      if (kept) dirs.foreach(d => assert(keys(d) == Seq(1L, 2L, 3L), s"$tag: $d"))
+      dirs.foreach(d => assert(keys(d) == Seq(1L, 2L, 3L), s"$tag: $d"))
     }
-    check("date_string", "2024-01-01", kept = true)
-    check("long", 7L, kept = true)
-    // today's plan matches no current row of '01' (the int 1 inferred
-    // from `p=01` is not '01'), so both paths alike drop key 1 here
-    check("zero_padded", "01", kept = false)
+    check("date_string", "2024-01-01")
+    check("long", 7L)
+    check("zero_padded", "01")
   }
 
   test("a partition spread over several batch dirs is read from all of them") {

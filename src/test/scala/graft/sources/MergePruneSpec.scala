@@ -23,8 +23,9 @@ class MergePruneSpec extends SparkSpec {
     (fs, new org.apache.hadoop.fs.Path(dir), dir)
   }
 
-  /** manifest-<n>-test referencing `dirs`; dirs materialized with one
-    * marker file each; mtime optionally aged past the grace window. */
+  /** manifest-<n>-test referencing `dirs` (format version 1, no schema
+    * lines: the prune reads only the entries); dirs materialized with
+    * one marker file each; mtime optionally aged past the grace window. */
   private def manifest(fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path, n: Int, dirs: Seq[String],
       aged: Boolean): String = {
@@ -34,7 +35,7 @@ class MergePruneSpec extends SparkSpec {
       out.write(1); out.close()
     }
     val out = fs.create(new org.apache.hadoop.fs.Path(root, name), true)
-    out.write(dirs.mkString("\n").getBytes("UTF-8")); out.close()
+    out.write(("version\t1" +: dirs).mkString("\n").getBytes("UTF-8")); out.close()
     if (aged) {
       val f = new java.io.File(root.toUri.getPath, name)
       assert(f.setLastModified(System.currentTimeMillis() - 11L * 60 * 1000))

@@ -356,13 +356,14 @@ class OccMergeSpec extends SparkSpec {
         cfg, "p"): Unit
     // a publisher that lost the claim for version 2 and crashed before
     // deleting its attempt: its manifest names only the partition it
-    // rewrote, and its uid sorts before the committed one's
+    // rewrote (beside the committed one's version and schema lines),
+    // and its uid sorts before the committed one's
     val committed2 = Files.readString(java.nio.file.Paths.get(dir, "commit-000000000002")).trim
-    val entries2 = Files.readString(java.nio.file.Paths.get(dir, committed2))
+    val lines2 = Files.readString(java.nio.file.Paths.get(dir, committed2)).split("\n")
     val loser = "manifest-000000000002-00000000"
     assert(loser < committed2)
-    Files.write(java.nio.file.Paths.get(dir, loser),
-      entries2.split("\n").filter(_.endsWith("/p=1")).mkString("\n").getBytes("UTF-8")): Unit
+    Files.write(java.nio.file.Paths.get(dir, loser), lines2.filter(l =>
+      l.contains("\t") || l.endsWith("/p=1")).mkString("\n").getBytes("UTF-8")): Unit
     def rows(df: org.apache.spark.sql.DataFrame): Set[(String, Int, String)] =
       df.select(col("k"), col("p").cast("int"), col("v")).collect()
         .map(r => (r.getString(0), r.getInt(1), r.getString(2))).toSet

@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
 
 import graft.{QueryMetrics, SparkSpec}
 
-/** Engine-written tables are read with the schema of one footer, not
+/** Engine-written tables are read with the schema their manifest
+  * records (merge tables) or the schema of one footer (snapshots), not
   * Spark's schema inference, which runs a Spark job on every read.
   * Each read below must give the schema and rows of the inferred read
   * of the same dirs, and building the frame must schedule no job. */
@@ -34,9 +35,15 @@ class ReadSchemaSpec extends SparkSpec {
     new String(Files.readAllBytes(p), "UTF-8").trim
   }
 
+  /** The live manifest's entries: its lines after the format-version
+    * line and the per-group schema lines. */
+  private def liveEntries(dir: String): Seq[String] =
+    readText(s"$dir/${readText(s"$dir/_current")}").split("\n").toSeq
+      .filterNot(l => l.startsWith("version\t") || l.startsWith("schema\t"))
+
   /** The live manifest's dirs read per batch dir with inference. */
   private def inferredMerge(dir: String): DataFrame = {
-    val entries = readText(s"$dir/${readText(s"$dir/_current")}").split("\n").toSeq
+    val entries = liveEntries(dir)
     entries.groupBy(e => e.splitAt(e.lastIndexOf('/') + 1)._1).toSeq.sortBy(_._1)
       .map { case (parent, es) =>
         val base = if (parent.isEmpty) dir else s"$dir/${parent.stripSuffix("/")}"
@@ -88,7 +95,7 @@ class ReadSchemaSpec extends SparkSpec {
       (20L to 23L).map(i => (i, s"x$i", i * 3)).toDF("k", "v", "extra")
         .withColumn("p", lit(2)), "p")
     Sources.indexBatchKeys(spark, dir, "k")
-    val entries = readText(s"$dir/${readText(s"$dir/_current")}").split("\n").toSeq
+    val entries = liveEntries(dir)
     def inferredDir(top: String) = spark.read.option("basePath", s"$dir/$top")
       .parquet(entries.filter(_.startsWith(top + "/")).map(e => s"$dir/$e"): _*)
     val Seq(older, newer) = entries.map(_.takeWhile(_ != '/')).distinct.sorted
@@ -101,7 +108,7 @@ class ReadSchemaSpec extends SparkSpec {
     assert(b.columns.toSeq == Seq("k", "v", "extra", "p"))
   }
 
-  test("adopted plain col=val layout keeps inference and reads the same frame") {
+  test("adopted col=val layout reads under its recorded schema, no job") {
     val dir = fresh("adopted")
     (1L to 12L).map(i => (i, s"v$i")).toDF("k", "v")
       .withColumn("p", (col("k") % 3).cast("int"))
@@ -109,7 +116,9 @@ class ReadSchemaSpec extends SparkSpec {
     // one publish: the live manifest mixes adopted p=0/p=2 with a b-* dir
     Sources.publishMergePartitioned(spark, dir,
       Seq((4L, "new")).toDF("k", "v").withColumn("p", lit(1)), cfg, "p")
-    assertSame(Sources.readMergePartitioned(spark, dir, "p"), inferredMerge(dir))
+    val (all, jobs) = jobsToBuild(Sources.readMergePartitioned(spark, dir, "p"))
+    assert(jobs == 0)
+    assertSame(all, inferredMerge(dir))
   }
 
   test("snapshot, snapshot group and version reads: no inference job, same frame") {

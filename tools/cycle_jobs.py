@@ -3,6 +3,7 @@
 
 Usage:
     python3 tools/cycle_jobs.py ARTIFACT.json [EVENTLOG] [--jfr FILE] [--span NAME ...] [--all-ops]
+    python3 tools/cycle_jobs.py --compare PARENT.json CHANGE.json [--span NAME ...]
 
 ARTIFACT.json is a traced perfbench artifact (`run.py --trace 1`, kept
 under .bench_build/perfbench/results/). EVENTLOG is the event log of the
@@ -32,6 +33,12 @@ With --jfr FILE (a JFR recording of the same run, e.g. from
 span header also counts the `jdk.ProcessStart` events submitted inside
 the span's window (`forks=`, by program, e.g. `chmod:16`), and a last
 table gives forks per span. EVENTLOG may then be left out.
+
+With --compare PARENT.json CHANGE.json (two traced artifacts, e.g. of
+the parent commit and of a change, same workload and seed) it prints,
+for each span name, "fs_ops/jobs per occurrence" of both artifacts:
+every occurrence of the span in run order, warm-up and seeding spans
+included, from the artifacts' own facets (no event log needed).
 
 Only the standard library is used; `.zstd` logs are read through
 `zstd -dc`, JFR recordings through `jfr print --json`.
@@ -127,14 +134,49 @@ def process_starts(path):
     return starts
 
 
+def occurrences(art, names):
+    """span name -> "fs_ops/jobs" of each of its spans, in run order."""
+    out = collections.OrderedDict()
+    for s in sorted(art["spans"], key=lambda s: (s["start_ms"], s["id"])):
+        if names and s["name"] not in names:
+            continue
+        f = s.get("facets", {})
+        out.setdefault(s["name"], []).append(
+            f"{int(f.get('fs_ops', 0))}/{int(f.get('jobs', 0))}")
+    return out
+
+
+def compare(paths, names):
+    arts = []
+    for p in paths:
+        with open(p, encoding="utf-8") as f:
+            arts.append(json.load(f))
+    print("# fs_ops/jobs per occurrence, every occurrence of each span in run order")
+    for label, p, art in zip(("parent", "change"), paths, arts):
+        print(f"# {label}: {p} ({art.get('workload')} seed {art.get('seed')})")
+    tables = [occurrences(a, names) for a in arts]
+    for name in dict.fromkeys(n for t in tables for n in t):
+        print(name)
+        for label, t in zip(("parent", "change"), tables):
+            print(f"  {label}: {' '.join(t.get(name, [])) or '-'}")
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
-    ap.add_argument("artifact")
+    ap.add_argument("artifact", nargs="?")
     ap.add_argument("eventlog", nargs="?")
     ap.add_argument("--span", action="append", help="only spans with this name (repeatable)")
     ap.add_argument("--all-ops", action="store_true", help="include warm-up and seed spans")
     ap.add_argument("--jfr", metavar="FILE", help="count jdk.ProcessStart events per span")
+    ap.add_argument("--compare", nargs=2, metavar=("PARENT", "CHANGE"),
+                    help="fs_ops/jobs per occurrence of each span, for both artifacts")
     a = ap.parse_args()
+    if a.compare:
+        if a.artifact or a.jfr:
+            ap.error("--compare takes its two artifacts only")
+        return compare(a.compare, a.span)
+    if not a.artifact:
+        ap.error("an artifact is required")
 
     with open(a.artifact, encoding="utf-8") as f:
         art = json.load(f)
