@@ -3,10 +3,11 @@ package graft.operators
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.types.PhysicalDataType
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** The plumbing of the operators' driver paths: a small batch is read
@@ -16,15 +17,21 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * from that plan's analysis, never executed). On a bulk-synchronous
   * engine the fixed cost per job, not the data, bounds small-batch
   * latency; the distributed plan stays for everything above the bound.
-  * Used by [[IdentityResolver]], [[IncrementalIdentity]],
-  * [[Dedup.incrementalMinhashDedup]], and in [[graft.sources.Sources]]
-  * by the snapshot publishes, the merge-table publish
-  * (`publishMergePartitioned`: a batch of at most [[DriverBatchRows]]
-  * rows against touched partitions of at most [[DriverMergeBytes]] file
-  * bytes merges in Scala and is written from the driver) and the key
-  * index (`indexBatchKeys`: un-indexed dirs of at most
-  * [[DriverStoreBytes]] file bytes are read and their bloom filters
-  * built on the driver). */
+  * Used by [[IdentityResolver]], [[IncrementalIdentity]] (a registry
+  * whose two members' files total at most [[DriverStoreBytes]] is read
+  * on the driver), [[Dedup.incrementalMinhashDedup]], and in
+  * [[graft.sources.Sources]] by the snapshot publishes, the merge-table
+  * publish (`publishMergePartitioned`: a batch of at most
+  * [[DriverBatchRows]] rows against touched partitions of at most
+  * [[DriverMergeBytes]] file bytes merges in Scala and is written from
+  * the driver), the key index (`indexBatchKeys`: un-indexed dirs of at
+  * most [[DriverStoreBytes]] file bytes are read and their bloom
+  * filters built on the driver) and the row-level change feed
+  * (`processMergeRowChangesWithDeletes`: changed and old entry files of
+  * at most [[DriverMergeBytes]] are read and diffed on the driver).
+  * Every one of these reads of files is `Sources.scanOnDriver`: Spark's
+  * own parquet reader run on the calling thread, its rows handed on as
+  * Catalyst rows ([[localRelation]]). */
 private[graft] object DriverPath {
 
   /** Largest stored table, in plan-stats bytes, that a driver path
@@ -51,7 +58,12 @@ private[graft] object DriverPath {
     * 300-row batch into one partition the driver path took 0.53–0.68 s
     * against 0.72–0.77 s at 8 MiB, 0.76–0.99 s against 0.96–1.16 s at
     * 12 MiB, and at 16 MiB from 10% faster to 30% slower across two
-    * runs (plans/r26/merge_crossover.txt). */
+    * runs (plans/r26/merge_crossover.txt). The row-level change feed
+    * applies it to the changed and old files it diffs on the driver:
+    * delivering a 300-row change of one fragment-shaped partition took
+    * 0.26–0.32 s against 0.40–0.47 s distributed with 8 MiB of such
+    * files, and 0.67–0.90 s against 0.70–0.94 s (the driver's median
+    * the slower) with 16 MiB (plans/r28/feed_bound_at_s.txt). */
   val DriverMergeBytes: Long = DriverStoreBytes / 2
 
   /** Largest incoming batch, in rows, that a driver path collects: the
@@ -89,30 +101,35 @@ private[graft] object DriverPath {
   def isLocal(df: DataFrame): Boolean =
     df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
 
-  /** `df` read once onto the driver (one job unless it is already
-    * local), as a local relation under its own schema whose rows
-    * [[localRows]] hands back without another pass. */
-  def collectLocal(df: DataFrame): DataFrame =
-    if (isLocal(df)) df
-    else {
-      val rows = df.collect()
-      val local = localFrame(df.sparkSession, rows.toSeq, df.schema)
-      collected.put(local, rows)
-      local
-    }
+  /** `rows`, Catalyst rows of `schema` read on the driver, as a local
+    * relation built straight from them (`Bridge.localRelation`): no
+    * job, and [[localRows]] converts them to external rows once, when
+    * first asked. */
+  def localRelation(spark: SparkSession, schema: StructType, rows: Seq[InternalRow]): DataFrame = {
+    val df = Bridge.localRelation(spark, schema, rows)
+    converted.put(df, new External(schema, rows))
+    df
+  }
 
-  /** The rows of a local relation, as `collect()` returns them: kept
-    * from [[collectLocal]] when it made the frame, else collected (no
-    * job). A driver path that filters a large local relation — a
-    * registry member — in Scala skips Spark's per-query conversions of
-    * every row. */
+  /** The rows of a local relation, as `collect()` returns them: those
+    * of a frame [[localRelation]] made are converted once and kept,
+    * any other's are collected (no job). A driver path that filters a
+    * large local relation — a registry member — in Scala skips Spark's
+    * per-query conversions of every row. */
   def localRows(df: DataFrame): Array[Row] =
-    Option(collected.get(df)).getOrElse(df.collect())
+    Option(converted.get(df)).fold(df.collect())(_.rows)
+
+  private final class External(schema: StructType, data: Seq[InternalRow]) {
+    lazy val rows: Array[Row] = {
+      val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+      data.iterator.map(toRow(_).asInstanceOf[Row]).toArray
+    }
+  }
 
   // frames are immutable, so their rows can be kept for as long as the
   // frame is reachable; keyed by identity (Dataset keeps Object.equals)
-  private val collected = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[DataFrame, Array[Row]]())
+  private val converted = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[DataFrame, External]())
 
   /** Spark's cast from `from` to `to` over external values (what a
     * union or a conditional inserts when it widens a column), the

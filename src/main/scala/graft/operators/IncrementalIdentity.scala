@@ -55,13 +55,18 @@ import graft.sources.Sources
   *
   * Scale shape, three tiers:
   *  - a micro-batch (at most [[DriverPath.DriverBatchRows]]
-  *    changed rows) against a registry whose two members together fit
-  *    [[DriverPath.DriverStoreBytes]] (plan-stats bytes): the batch is
-  *    collected once and both members are read once as rows (two
-  *    single-task jobs); resolve, links and the fold run on the driver
-  *    over those rows, and the evolved members, local relations, are
-  *    written from the driver with no job. A 300-row cycle against a
-  *    12k-subject registry runs 4 jobs;
+  *    changed rows) against a registry whose two members' files
+  *    together fit [[DriverPath.DriverStoreBytes]]: the change feed's
+  *    delta, when its changed and old files fit
+  *    [[DriverPath.DriverMergeBytes]], is diffed on the driver and
+  *    arrives as a local relation
+  *    ([[Sources.processMergeRowChangesWithDeletes]]); both members are
+  *    read once on the driver with Spark's own parquet reader
+  *    ([[Sources.readOnDriver]]); resolve, links and the fold run on
+  *    the driver over those rows, and the evolved members, local
+  *    relations, are written from the driver and handed back as the
+  *    cycle's registry without a re-read. A 300-row cycle against a
+  *    12k-subject registry runs no job;
   *  - a micro-batch against a larger registry: resolve and links on
   *    the driver against filtered scans of the registry, the fold and
   *    the member writes distributed;
@@ -158,18 +163,16 @@ object IncrementalIdentity {
         // same rows.
         val (candidates, res, reg) = IdentityResolver.materializeBatch(toCandidates(delta)) match {
           case Right(local) =>
-            // a registry under the driver bound is read once, both
-            // members as rows: resolve, links and the fold then filter
-            // and fold them in Scala, and the publish writes the
-            // evolved members from the driver — no further job
-            val reg =
-              if (!DriverPath.fits(stored.subjects, stored.localIds)) stored
-              else {
-                // two independent single-task jobs: overlap them
-                val Seq(subjects, localIds) = IndexMaintenance.inParallel(
-                  Seq(stored.subjects, stored.localIds))(DriverPath.collectLocal)
-                IdentityResolver.Registry(subjects, localIds)
-              }
+            // a registry under the driver bound is read once on the
+            // driver, both members as local relations, with no job:
+            // resolve, links and the fold then filter and fold their
+            // rows in Scala, and the publish writes the evolved members
+            // from the driver
+            val reg = Sources.readOnDriver(spark, Seq(stored.subjects, stored.localIds),
+                DriverPath.DriverStoreBytes) match {
+              case Some(Seq(subjects, localIds)) => IdentityResolver.Registry(subjects, localIds)
+              case _ => stored
+            }
             (local, IdentityResolver.resolve(local, reg, deterministicMint, groupingIterations),
               reg)
           case Left(materialized) =>
@@ -182,8 +185,16 @@ object IncrementalIdentity {
         val links = IdentityResolver.links(candidates, res, reg.localIds)
         val evolved = IdentityResolver.applyBatch(reg, res, links, asOf)
         publishRegistry(evolved, registryRoot, basis = Some(basis))
-        // hand back the PUBLISHED state (re-read, not the lazy plan):
-        // the caller's reads must not re-trigger the apply lineage
-        Cycle(res, version, readRegistry(spark, registryRoot))
+        // hand back the PUBLISHED state, not the lazy plan: the caller's
+        // reads must not re-trigger the apply lineage. Members written
+        // from the driver are that state already, as the re-read would
+        // give them; members written by a job are re-read
+        val members = Seq(evolved.subjects, evolved.localIds)
+        val published =
+          if (members.forall(Sources.writesOnDriver)) {
+            val Seq(subjects, localIds) = members.map(Sources.asWrittenOnDriver)
+            IdentityResolver.Registry(subjects, localIds)
+          } else readRegistry(spark, registryRoot)
+        Cycle(res, version, published)
     }
 }

@@ -959,7 +959,7 @@ object PipelineQueries {
         |ORDER BY global_subject_id""".stripMargin) { (s, d) =>
       import graft.operators.IncrementalIdentity
       import graft.sources.Sources
-      val root = s"/root/repo/target/roundtrip/${new java.io.File(d).getName}_incrid"
+      val root = QueryDef.scratch(d, "incrid")
       val (fragDir, ckDir, regRoot) = (s"$root/frags", s"$root/ck", s"$root/registry")
       // fresh scenario per run (Verify re-runs at multiple SFs)
       val fs = org.apache.hadoop.fs.FileSystem.get(

@@ -43,4 +43,23 @@ object QueryDef {
     * is by-name and must only be forced post-run. */
   def sqlDeferred(name: String)(fn: (SparkSession, String) => DataFrame)(
       oracle: => String): QueryDef =
-    QueryDef(name, fn, Some(() => oracle))}
+    QueryDef(name, fn, Some(() => oracle))
+
+  /** A query's scratch table dir, per scale factor so sf0.01 and sf0.1
+    * runs don't collide: `<checkout>/target/roundtrip/<sf dir name>_<tag>`,
+    * where `<checkout>` is the nearest dir holding a `build.sbt` above the
+    * running compiled classes (sbt may run a copy of them under
+    * `target/bg-jobs`), so two checkouts on one host never share a
+    * table; the working dir when no such dir is found. */
+  def scratch(sfDir: String, tag: String): String =
+    s"$ScratchRoot/${new java.io.File(sfDir).getName}_$tag"
+
+  private lazy val ScratchRoot: String = {
+    val classes = scala.util.Try(new java.io.File(
+      getClass.getProtectionDomain.getCodeSource.getLocation.toURI)).toOption
+    val checkout = Iterator.iterate(classes.orNull)(_.getParentFile).takeWhile(_ != null)
+      .find(d => new java.io.File(d, "build.sbt").isFile)
+      .getOrElse(new java.io.File(System.getProperty("user.dir")))
+    s"${checkout.getAbsolutePath}/target/roundtrip"
+  }
+}

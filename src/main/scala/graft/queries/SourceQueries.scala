@@ -12,10 +12,7 @@ import graft.sources.Sources
   * formats, partition-column restoration) breaks the value hash. */
 object SourceQueries {
 
-  /** Scratch dir inside the repo (the driver may not allow writes
-    * elsewhere); per-SF so sf0.01 and sf0.1 runs don't collide. */
-  private def scratch(sfDir: String, tag: String): String =
-    s"/root/repo/target/roundtrip/${new java.io.File(sfDir).getName}_$tag"
+  import QueryDef.scratch
 
   /** Merge-table SEED write with §6 file sizing (r19): rebalance by the
     * partition column so the dynamic-partition write emits

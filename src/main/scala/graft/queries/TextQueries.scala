@@ -1030,7 +1030,7 @@ object TextQueries {
          |GROUP BY 1, 2
          |HAVING COUNT(*) >= 1
          |ORDER BY c.doc_id, bench_id""".stripMargin) { (s, d) =>
-      val root = s"/root/repo/target/roundtrip/${new java.io.File(d).getName}_decontam"
+      val root = QueryDef.scratch(d, "decontam")
       val fs = org.apache.hadoop.fs.FileSystem.get(
         new java.net.URI(root), s.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(root), true)

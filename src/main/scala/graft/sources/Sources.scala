@@ -1,6 +1,8 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, StructType}
 
 /** Sources & sinks (SURVEY.md §2.1 S1-S12).
@@ -174,26 +176,27 @@ object Sources {
           s"$MaxTouchedPartitions distinct '$partitionCol' values — that is a " +
           "table rewrite, not a targeted merge; pick a coarser partition " +
           "column or split the publish")
-      val onDriver = batch.flatMap(rows =>
-        touchedScans(groups, partitionCol, pType, touched).map(rows -> _))
+      val onDriver = for {
+        rows <- batch
+        scans <- touchedScans(groups, partitionCol, pType, touched)
+        cur <- scanOnDriver(spark, scans, DriverPath.DriverMergeBytes)
+      } yield rows -> scans.zip(cur).flatMap { case (scan, rs) =>
+        val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+          .createToScalaConverter(scan.schema)
+        rs.map(toRow(_).asInstanceOf[org.apache.spark.sql.Row])
+      }
       // the merged content derives from the touched partitions' current
       // rows, so a rival commit to any written segment refuses, and the
       // written segments replace their old entries by name (they are
       // Spark's own path encoding of the touched values)
       val replaces = (written: Seq[String]) => written.toSet
       onDriver match {
-        case Some((rows, scans)) =>
-          val curRows = scans.flatMap { scan =>
-            val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
-              .createToScalaConverter(scan.schema)
-            org.apache.spark.sql.graftbridge.Bridge.readLocalParquet(spark, scan, scan.dataSchema)
-              .flatten.map(toRow(_).asInstanceOf[org.apache.spark.sql.Row])
-          }
+        case Some((rows, curRows)) =>
           val schema = DriverPath.schemaOf(("publishMergePartitioned", currentSchema,
             incoming.schema, cfg))(UpsertWriter.merge(current(Nil), incoming, cfg).merged.schema)
           val merged = DriverPath.localFrame(spark, UpsertWriter.mergedOnDriver(
             curRows, currentSchema, rows.toSeq, incoming.schema, cfg), schema)
-          Some(MergeBatch(merged.schema, dir => Some(org.apache.spark.sql.graftbridge.Bridge
+          Some(MergeBatch(merged.schema, dir => Some(Bridge
             .writeLocalParquetPartitioned(merged, partitionCol, dir)), replaces, _ => merged))
         case None =>
           val merged = UpsertWriter.merge(current(touched), incoming, cfg).merged
@@ -203,6 +206,43 @@ object Sources {
     }.get
   }
 
+  /** The one driver read of parquet files: `scans`' files read on the
+    * calling thread with Spark's own parquet reader
+    * (`Bridge.readLocalParquet`), giving per scan its rows, as Catalyst
+    * rows, under `required(scan)` followed by the scan's partition
+    * values. Values decode as a distributed scan decodes them, and no
+    * job runs. None, reading nothing, when the files total more than
+    * `bound` bytes. A file that vanished since it was listed fails the
+    * read loudly. The merge publish's read of its touched partitions,
+    * the key index's read of its key column, the registry read and the
+    * row-level change feed all read through here. */
+  private def scanOnDriver(spark: SparkSession, scans: Seq[Bridge.LocalParquetScan],
+      bound: Long, required: Bridge.LocalParquetScan => StructType = _.dataSchema)
+      : Option[Seq[Seq[InternalRow]]] =
+    if (scans.map(_.bytes).sum > bound) None
+    else Some(scans.map(s => Bridge.readLocalParquet(spark, s, required(s)).flatten))
+
+  /** [[scanOnDriver]] over `frames`, each one plain parquet relation (a
+    * merge-table dir group as [[readManifestGroup]] reads it, a snapshot
+    * member): per frame its rows under its own schema, from the listing
+    * the frame made when it was built. None when a frame is not such a
+    * relation or the files exceed `bound` bytes. */
+  private def rowsOnDriver(spark: SparkSession, frames: Seq[DataFrame],
+      bound: Long): Option[Seq[Seq[InternalRow]]] = {
+    val scans = frames.map(Bridge.parquetScan)
+    if (scans.forall(_.isDefined)) scanOnDriver(spark, scans.flatten, bound) else None
+  }
+
+  /** `frames` read on the driver by [[rowsOnDriver]], each handed back
+    * as a local relation under its own schema built straight from its
+    * rows (`DriverPath.localRelation`), in order. None when
+    * [[rowsOnDriver]] declines. */
+  private[graft] def readOnDriver(spark: SparkSession, frames: Seq[DataFrame],
+      bound: Long): Option[Seq[DataFrame]] =
+    rowsOnDriver(spark, frames, bound).map(_.zip(frames).map { case (rows, df) =>
+      graft.operators.DriverPath.localRelation(spark, df.schema, rows)
+    })
+
   /** The driver reads of the touched partitions of a merge table whose
     * batch dirs `groups` reads ([[readManifestGroup]], one frame per
     * dir): per dir, the files whose partition value is a member of
@@ -210,22 +250,21 @@ object Sources {
     * or "" — what the distributed filter keeps. None — so the publish
     * stays distributed — when a dir's frame is not one plain parquet
     * relation partitioned by `partitionCol` alone, when the dirs'
-    * schemas differ (their union would widen or reorder), when the
-    * files exceed `DriverPath.DriverMergeBytes`, or when a dir's
-    * partition type, as its manifest records it, is not the incoming
-    * column's `pType` or is a float or double. Then Scala equality on
+    * schemas differ (their union would widen or reorder), or when a
+    * dir's partition type, as its manifest records it, is not the
+    * incoming column's `pType` or is a float or double. Then Scala equality on
     * the two sides' values is Spark's equality; across types only the
     * distributed `isin` applies Spark's coercion (a long batch against
     * an adopted dir inference typed as int), and on doubles Spark's
     * equality and Scala's part on NaN. */
   private def touchedScans(groups: Seq[DataFrame], partitionCol: String, pType: DataType,
-      touched: Seq[Any]): Option[Seq[org.apache.spark.sql.graftbridge.Bridge.LocalParquetScan]] = {
+      touched: Seq[Any]): Option[Seq[Bridge.LocalParquetScan]] = {
     val keep = touched.filter(_ != null).toSet
     val keepDefault = touchesDefault(touched)
     val fields = groups.headOption.map(_.schema.map(f => (f.name, f.dataType)))
     val comparable = pType != FloatType && pType != DoubleType
     val scans = groups.map { g =>
-      org.apache.spark.sql.graftbridge.Bridge.parquetScan(g).filter(s =>
+      Bridge.parquetScan(g).filter(s =>
         comparable && s.partitionSchema.fieldNames.toSeq == Seq(partitionCol) &&
           s.partitionSchema(0).dataType == pType &&
           fields.contains(g.schema.map(f => (f.name, f.dataType))))
@@ -237,10 +276,7 @@ object Sources {
             else keep(value(f.partition.get(0, pType)))))
         }
     }
-    if (scans.forall(_.isDefined) &&
-        scans.flatten.map(_.bytes).sum <= graft.operators.DriverPath.DriverMergeBytes)
-      Some(scans.flatten.filter(_.files.nonEmpty))
-    else None
+    if (scans.forall(_.isDefined)) Some(scans.flatten.filter(_.files.nonEmpty)) else None
   }
 
   /** Whether a merge batch's partition values `touched` include one
@@ -1181,9 +1217,9 @@ object Sources {
       sinceVersion: Long, naturalKey: Seq[String],
       partitionCol: String = ""): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val (changed, oldDirs) = changeDirSets(spark, tableDir, sinceVersion)
-    (assembleManifest(spark, tableDir, changed),
-        assembleManifest(spark, tableDir, oldDirs)) match {
+    val dirs = changeDirSets(spark, tableDir, sinceVersion)
+    (assembleManifest(spark, tableDir, dirs.changed),
+        assembleManifest(spark, tableDir, dirs.oldDirs)) match {
       case (Some(newState), Some(oldState)) =>
         graft.operators.ChangeDetector.compare(newState, oldState, naturalKey)
           .filter(col("change_status") =!= "unchanged")
@@ -1204,7 +1240,7 @@ object Sources {
     * state must still enter the diff, where every row classifies
     * `orphaned`). */
   private def changeDirSets(spark: SparkSession, tableDir: String,
-      sinceVersion: Long): (Manifest, Manifest) = {
+      sinceVersion: Long): ChangeDirs = {
     val from = retainedManifest(spark, tableDir, sinceVersion)
     val live = readableManifest(spark, tableDir, "")
     val changed = live.entries.filterNot(from.entries.toSet)
@@ -1212,8 +1248,12 @@ object Sources {
     val liveSegs = live.entries.map(segmentOf).toSet
     val oldDirs = from.entries.filter(e =>
       changedSegs.contains(segmentOf(e)) || !liveSegs.contains(segmentOf(e)))
-    (live.withEntries(changed), from.withEntries(oldDirs))
+    ChangeDirs(live, live.withEntries(changed), from.withEntries(oldDirs))
   }
+
+  /** What [[changeDirSets]] found: the live manifest it read, and the
+    * changed and old entries as manifests. */
+  private final case class ChangeDirs(live: Manifest, changed: Manifest, oldDirs: Manifest)
 
   /** The row-level delta FUSED into one anti-join (r18, guide §2.4):
     * the changed rows' current state = new-state rows with NO old-state
@@ -1255,6 +1295,138 @@ object Sources {
       .foldLeft(keyEq)(_ && _)
     newState.join(oldState, cond, "left_anti")
       .filter(naturalKey.map(col(_).isNotNull).reduce(_ && _))
+  }
+
+  /** The retracted keys of the fused delta: the old state's key tuples
+    * that no new-state row carries. A null-keyed old row never matches,
+    * so it stays, as does every repeat of a key. */
+  private def orphanedKeys(newState: DataFrame, oldState: DataFrame,
+      naturalKey: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    oldState.select(naturalKey.map(col): _*)
+      .join(newState.select(naturalKey.map(col): _*), naturalKey, "left_anti")
+  }
+
+  /** The row-level delta of a change feed whose new and old sides
+    * `newGroups` and `oldGroups` read (one frame per dir group of the
+    * changed and old entries of `live`), computed on the driver: both
+    * sides' files read by [[scanOnDriver]] and diffed in Scala with the
+    * distributed plans' semantics ([[changedRowsOnly]], [[orphanedKeys]],
+    * and the one-sided deltas when a side is empty), both results
+    * handed back as local relations under those plans' schemas (from
+    * their analysis, never executed), with no job.
+    * A new row is delivered unless an old row carries its key (Spark's
+    * equality, so a null key never matches) and is equal to it on every
+    * compared column (all but the key and
+    * [[graft.operators.ChangeDetector.IgnoreFields]]) under Spark's
+    * null-safe equality over Catalyst values, "" and NaN counting as
+    * null; a null-keyed new row is dropped. An old row's key tuple is
+    * retracted unless a new row carries it, so a null-keyed old row is.
+    * Each row is matched on its own, so a key repeated on either side
+    * gives exactly the anti-joins' rows. None — the distributed plans
+    * run — when the two sides' files exceed
+    * [[graft.operators.DriverPath.DriverMergeBytes]], when the dir groups'
+    * schemas differ, when a group is not one plain parquet relation, or
+    * when [[feedCovers]] refuses the schema. */
+  private def rowDeltaOnDriver(spark: SparkSession, tableDir: String, live: Manifest,
+      newGroups: Seq[DataFrame], oldGroups: Seq[DataFrame],
+      naturalKey: Seq[String]): Option[RowDelta] = {
+    import org.apache.spark.sql.functions.col
+    import graft.operators.DriverPath
+    val groups = newGroups ++ oldGroups
+    val schema = groups.headOption.map(_.schema)
+    if (!schema.exists(s => groups.forall(_.schema == s) && feedCovers(s, naturalKey))) None
+    else rowsOnDriver(spark, groups, DriverPath.DriverMergeBytes).map { rows =>
+      val s = schema.get
+      val (newRows, oldRows) = (rows.take(newGroups.size).flatten, rows.drop(newGroups.size).flatten)
+      val keyAt = naturalKey.map(s.fieldIndex)
+      val keyOf = (r: InternalRow) => keyAt.map(i => r.get(i, s(i).dataType))
+      val keyed = (r: InternalRow) => keyAt.forall(!r.isNullAt(_))
+      val same = s.fields.indices
+        .filterNot(i => naturalKey.contains(s(i).name) ||
+          graft.operators.ChangeDetector.IgnoreFields.contains(s(i).name))
+        .map(i => feedEquality(i, s(i).dataType))
+      val oldByKey = oldRows.filter(keyed).groupBy(keyOf)
+      val newKeys = newRows.filter(keyed).map(keyOf).toSet
+      val delta = newRows.filter(r => keyed(r) &&
+        !oldByKey.get(keyOf(r)).exists(_.exists(o => same.forall(_(r, o)))))
+      val orphans = oldRows.filterNot(o => keyed(o) && newKeys(keyOf(o)))
+        .map(o => InternalRow.fromSeq(keyOf(o)))
+      def local(schema: StructType, rows: Seq[InternalRow]) =
+        DriverPath.localRelation(spark, schema, rows)
+      def union(gs: Seq[DataFrame]) = gs.reduce(_ unionByName _)
+      val keys = naturalKey.map(col)
+      (newGroups.nonEmpty, oldGroups.nonEmpty) match {
+        case (true, true) => RowDelta(
+          local(DriverPath.schemaOf(("rowDelta", s, naturalKey))(
+            changedRowsOnly(union(newGroups), union(oldGroups), naturalKey).schema), delta),
+          local(DriverPath.schemaOf(("orphanedKeys", s, naturalKey))(
+            orphanedKeys(union(newGroups), union(oldGroups), naturalKey).schema), orphans),
+          fullResync = false)
+        case (true, false) => RowDelta(
+          local(DriverPath.schemaOf(("insertsOnly", s, naturalKey))(union(newGroups)
+            .filter(naturalKey.map(col(_).isNotNull).reduce(_ && _)).schema), delta),
+          // the distributed plan's keys come from a read of the live table
+          local(manifestGroups(live.entries).map(g => recordedSchema(tableDir, live, g._1)).distinct
+            .map(Bridge.localRelation(spark, _, Nil)).reduce(_ unionByName _)
+            .select(keys: _*).schema, Nil),
+          fullResync = false)
+        case _ => RowDelta(
+          local(DriverPath.schemaOf(("dropsOnly", s, naturalKey))(
+            union(oldGroups).limit(0).schema), Nil),
+          local(DriverPath.schemaOf(("droppedKeys", s, naturalKey))(
+            union(oldGroups).select(keys: _*).schema), orphans),
+          fullResync = false)
+      }
+    }
+  }
+
+  /** Whether [[rowDeltaOnDriver]] covers `schema`: every key of a type
+    * whose Catalyst values Scala's equality equates exactly as Spark's
+    * does (integral, boolean, date and timestamp types, strings),
+    * every compared column of a type Spark's ordering covers (no map,
+    * interval or variant, at any depth), and every string, at any depth,
+    * under the default binary collation. */
+  private def feedCovers(schema: StructType, naturalKey: Seq[String]): Boolean = {
+    import org.apache.spark.sql.types._
+    def all(dt: DataType)(p: DataType => Boolean): Boolean = p(dt) && (dt match {
+      case a: ArrayType => all(a.elementType)(p)
+      case m: MapType => all(m.keyType)(p) && all(m.valueType)(p)
+      case st: StructType => st.fields.forall(f => all(f.dataType)(p))
+      case _ => true
+    })
+    val keyTypes = Set[DataType](ByteType, ShortType, IntegerType, LongType, BooleanType,
+      DateType, TimestampType, TimestampNTZType, StringType)
+    naturalKey.forall(k => schema.fieldNames.contains(k) && keyTypes(schema(k).dataType)) &&
+      schema.fields.forall(f => all(f.dataType) {
+        case st: StringType => st == StringType
+        case _ => true
+      }) &&
+      schema.fields.filterNot(f => naturalKey.contains(f.name)).forall(f => all(f.dataType) {
+        case _: MapType | _: CalendarIntervalType | _: VariantType => false
+        case _: ArrayType | _: StructType => true
+        case dt => scala.util.Try(
+          org.apache.spark.sql.catalyst.types.PhysicalDataType.ordering(dt)).isSuccess
+      })
+  }
+
+  /** [[changedRowsOnly]]'s column match at field `i` of type `dt` over
+    * Catalyst rows: "" (a string) and NaN (a float or double) count as
+    * null, two nulls match, and two values match when Spark's ordering
+    * of `dt` ranks them equal — the equality `<=>` evaluates. */
+  private def feedEquality(i: Int, dt: DataType): (InternalRow, InternalRow) => Boolean = {
+    import org.apache.spark.sql.types.StringType
+    val ord = org.apache.spark.sql.catalyst.types.PhysicalDataType.ordering(dt)
+    val isNull: InternalRow => Boolean = dt match {
+      case StringType => r => r.isNullAt(i) || r.getUTF8String(i).numBytes == 0
+      case DoubleType => r => r.isNullAt(i) || r.getDouble(i).isNaN
+      case FloatType => r => r.isNullAt(i) || r.getFloat(i).isNaN
+      case _ => r => r.isNullAt(i)
+    }
+    (a, b) => {
+      val (na, nb) = (isNull(a), isNull(b))
+      if (na || nb) na && nb else ord.equiv(a.get(i, dt), b.get(i, dt))
+    }
   }
 
   /** At-least-once incremental consumer over a
@@ -1307,9 +1479,15 @@ object Sources {
     * full table, every row as-new — the same documented fallbacks.
     *
     * Scale shape: the row diff prunes both sides BY DIR NAME to the
-    * touched partitions, and the delta is a key-semi-join of the
-    * changed partitions' current state — cost bounded by changed
-    * data, never table size. */
+    * touched partitions, and the delta is one anti-join of the changed
+    * partitions' current state against their checkpointed state — cost
+    * bounded by changed data, never table size. When the changed and
+    * old files total at most `DriverPath.DriverMergeBytes` (a
+    * micro-batch's touched partitions) and their schema is one the
+    * Scala diff covers, both sides are read on the driver and diffed
+    * there: the delta is a local relation and the delivery runs no job
+    * ([[processMergeRowChangesWithDeletes]]). Above the bound the
+    * distributed anti-join runs. */
   def processMergeRowChanges[T](spark: SparkSession, tableDir: String,
       checkpointDir: String, naturalKey: Seq[String], partitionCol: String = "")
       (f: (DataFrame, Long) => T): Option[T] =
@@ -1327,48 +1505,69 @@ object Sources {
     * the orphan set cannot be derived from a diff — a consumer seeing
     * `fullResync` must rebuild its state from the delta alone, which
     * is exactly what makes those paths safe. Same at-least-once
-    * checkpoint loop as [[processMergeRowChanges]]. */
+    * checkpoint loop as [[processMergeRowChanges]].
+    *
+    * When the changed and old entry files total at most
+    * `DriverPath.DriverMergeBytes`, the delta and the orphaned keys are
+    * computed on the driver ([[rowDeltaOnDriver]]) and delivered as
+    * local relations under the distributed plans' schemas, with no
+    * job; first run, lag past retention, larger feeds, dir groups
+    * under different schemas and types the Scala diff does not cover
+    * take the distributed plans. */
   def processMergeRowChangesWithDeletes[T](spark: SparkSession,
       tableDir: String, checkpointDir: String, naturalKey: Seq[String],
       partitionCol: String = "")
+      (f: (RowDelta, Long) => T): Option[T] =
+    processMergeRowChangesWithDeletes(spark, tableDir, checkpointDir, naturalKey, partitionCol,
+      mayUseDriver = true)(f)
+
+  /** [[processMergeRowChangesWithDeletes]], with the driver delta off
+    * when `mayUseDriver` is false: the distributed plans the driver
+    * delta must agree with. */
+  private[sources] def processMergeRowChangesWithDeletes[T](spark: SparkSession,
+      tableDir: String, checkpointDir: String, naturalKey: Seq[String],
+      partitionCol: String, mayUseDriver: Boolean)
       (f: (RowDelta, Long) => T): Option[T] = {
     import org.apache.spark.sql.functions.col
-    val emptyKeys = () => readMergePartitioned(spark, tableDir, partitionCol)
+    def emptyKeys() = readMergePartitioned(spark, tableDir, partitionCol)
       .select(naturalKey.map(col): _*).limit(0)
-    processCheckpointed(spark, tableDir, checkpointDir,
-        (d: RowDelta, v: Long) => f(d, v)) {
-      case Some(v) =>
-        try {
+    processCheckpointed(spark, tableDir, checkpointDir, f) { last =>
+      // a checkpoint lagged past retention names a manifest no longer
+      // retained: only that degrades to a full resync
+      val dirs = last.flatMap(v =>
+        try Some(changeDirSets(spark, tableDir, v))
+        catch { case _: IllegalArgumentException => None })
+      dirs match {
+        case Some(d) =>
+          val (newGroups, oldGroups) =
+            (groupFrames(spark, tableDir, d.changed), groupFrames(spark, tableDir, d.oldDirs))
+          val onDriver =
+            if (mayUseDriver) rowDeltaOnDriver(spark, tableDir, d.live, newGroups, oldGroups,
+              naturalKey)
+            else None
           // fused delta (r18): one anti-join over one scan of each
           // side replaces full-outer diff → changed keys → re-scan →
           // semi-join; see [[changedRowsOnly]] for the equivalence
           // argument (rows identical by construction, spec-pinned)
-          val (changed, oldDirs) = changeDirSets(spark, tableDir, v)
-          (assembleManifest(spark, tableDir, changed),
-              assembleManifest(spark, tableDir, oldDirs)) match {
+          onDriver.getOrElse((newGroups.reduceOption(_ unionByName _),
+              oldGroups.reduceOption(_ unionByName _)) match {
             case (Some(newState), Some(oldState)) =>
-              val orphaned = oldState.select(naturalKey.map(col): _*)
-                .join(newState.select(naturalKey.map(col): _*), naturalKey, "left_anti")
               RowDelta(changedRowsOnly(newState, oldState, naturalKey),
-                orphaned, fullResync = false)
+                orphanedKeys(newState, oldState, naturalKey), fullResync = false)
             case (Some(newState), None) => // all-new partitions: every row inserts
-              RowDelta(newState.filter(
-                  naturalKey.map(col(_).isNotNull).reduce(_ && _)),
+              RowDelta(newState.filter(naturalKey.map(col(_).isNotNull).reduce(_ && _)),
                 emptyKeys(), fullResync = false)
             case (None, Some(oldState)) => // only whole-partition drops
-              RowDelta(oldState.limit(0),
-                oldState.select(naturalKey.map(col): _*), fullResync = false)
+              RowDelta(oldState.limit(0), oldState.select(naturalKey.map(col): _*),
+                fullResync = false)
             case _ =>
               RowDelta(readMergePartitioned(spark, tableDir, partitionCol).limit(0),
                 emptyKeys(), fullResync = false)
-          }
-        } catch { case _: IllegalArgumentException => // lagged past retention
+          })
+        case None =>
           RowDelta(readMergePartitioned(spark, tableDir, partitionCol),
             emptyKeys(), fullResync = true)
-        }
-      case None =>
-        RowDelta(readMergePartitioned(spark, tableDir, partitionCol),
-          emptyKeys(), fullResync = true)
+      }
     }
   }
 
@@ -1467,10 +1666,7 @@ object Sources {
     requireColumnEverywhere(todo, footers, keyCol, "indexBatchKeys")
     val firstSchema = footers.collectFirst { case f if f.schemas.nonEmpty => f.schemas.head }
     val onDriver =
-      if (mayUseDriver &&
-          footers.map(_.bytes).sum <= graft.operators.DriverPath.DriverStoreBytes)
-        bloomsOnDriver(spark, footers, firstSchema, keyCol, fpp)
-      else None
+      if (mayUseDriver) bloomsOnDriver(spark, footers, firstSchema, keyCol, fpp) else None
     val blooms = onDriver.getOrElse(
       bloomsInOneJob(spark, tableDir, todo, footers, firstSchema, keyCol, fpp))
     todo.zip(blooms).foreach { case (dir, bloom) =>
@@ -1515,7 +1711,6 @@ object Sources {
       firstSchema: Option[org.apache.parquet.schema.MessageType], keyCol: String,
       fpp: Double): Seq[org.apache.spark.util.sketch.BloomFilter] = {
     import org.apache.spark.sql.functions.{col, when, lit}
-    import org.apache.spark.sql.graftbridge.Bridge
     val scan = bulkScan(nonAdaptive(spark), tableDir, dirs, firstSchema, keyCol)
     val aggs = dirs.zip(footers).map { case (dir, f) =>
       Bridge.column(bloomAggregate(Bridge.expression(when(col("_bdir") === lit(dir),
@@ -1527,30 +1722,31 @@ object Sources {
   }
 
   /** Every dir's filter built on the driver: the key column of the
-    * footers' files read with Spark's parquet reader, fed per dir to
-    * the aggregate [[bloomsInOneJob]] runs, through its own buffer,
-    * update and result calls. None when no dir holds a data file or
-    * the aggregate does not take the key's type (the job then runs,
-    * or fails on it as loudly as before). */
+    * footers' files read by [[scanOnDriver]], fed per dir to the
+    * aggregate [[bloomsInOneJob]] runs, through its own buffer, update
+    * and result calls. None when no dir holds a data file, when the
+    * files exceed `DriverPath.DriverStoreBytes`, or when the aggregate
+    * does not take the key's type (the job then runs, or fails on it as
+    * loudly as before). */
   private def bloomsOnDriver(spark: SparkSession, footers: Seq[Footers],
       firstSchema: Option[org.apache.parquet.schema.MessageType], keyCol: String,
       fpp: Double): Option[Seq[org.apache.spark.util.sketch.BloomFilter]] = {
-    import org.apache.spark.sql.graftbridge.Bridge
     import org.apache.spark.sql.types.StructField
     val key = firstSchema.map(m => org.apache.spark.sql.catalyst.expressions.BoundReference(0,
       new org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter()
         .convert(m)(keyCol).dataType, true))
-    key.filter(bloomAggregate(_, 1L, fpp).checkInputDataTypes().isSuccess).map { k =>
+    key.filter(bloomAggregate(_, 1L, fpp).checkInputDataTypes().isSuccess).flatMap { k =>
       val required = StructType(Seq(StructField(keyCol, k.dataType)))
-      val rows = Bridge.readLocalParquet(spark, Bridge.LocalParquetScan(
-        footers.flatMap(_.files.map(st => Bridge.ParquetFile(st.getPath, st.getLen,
-          org.apache.spark.sql.catalyst.InternalRow.empty))),
-        required, StructType(Nil), Map.empty), required).iterator
-      footers.map { f =>
-        val agg = bloomAggregate(k, f.rows, fpp)
-        val bloom = f.files.iterator.flatMap(_ => rows.next())
-          .foldLeft(agg.createAggregationBuffer())(agg.update)
-        bloomOf(Option(agg.eval(bloom).asInstanceOf[Array[Byte]]), f.rows, fpp)
+      // one scan per dir: its rows feed its own filter
+      val scans = footers.map(f => Bridge.LocalParquetScan(
+        f.files.map(st => Bridge.ParquetFile(st.getPath, st.getLen, InternalRow.empty)),
+        required, StructType(Nil), Map.empty))
+      scanOnDriver(spark, scans, graft.operators.DriverPath.DriverStoreBytes).map { perDir =>
+        footers.zip(perDir).map { case (f, rows) =>
+          val agg = bloomAggregate(k, f.rows, fpp)
+          val bloom = rows.foldLeft(agg.createAggregationBuffer())(agg.update)
+          bloomOf(Option(agg.eval(bloom).asInstanceOf[Array[Byte]]), f.rows, fpp)
+        }
       }
     }
   }
@@ -2170,8 +2366,12 @@ object Sources {
     * when the manifest lists no dir. */
   private def assembleManifest(spark: SparkSession, tableDir: String,
       m: Manifest): Option[DataFrame] =
+    groupFrames(spark, tableDir, m).reduceOption(_ unionByName _)
+
+  /** One scan per dir group of `m` ([[readManifestGroup]]), in group
+    * order: what [[assembleManifest]] unions. */
+  private def groupFrames(spark: SparkSession, tableDir: String, m: Manifest): Seq[DataFrame] =
     manifestGroups(m.entries).map(readManifestGroup(spark, tableDir, m, _))
-      .reduceOption(_ unionByName _)
 
   /** What a read of `m` that excludes every dir plans over: no rows,
     * under the schema of `m`'s first dir group (the union keeps its
@@ -2196,11 +2396,15 @@ object Sources {
   private def readManifestGroup(spark: SparkSession, tableDir: String, m: Manifest,
       group: (String, Seq[String])): DataFrame = {
     val (dir, es) = group
-    val schema = m.schemas.getOrElse(dir, throw new IllegalStateException(
-      s"merge manifest $tableDir/${m.name} records no schema for dir group '$dir'"))
     spark.read.option("basePath", if (dir.isEmpty) tableDir else s"$tableDir/$dir")
-      .schema(schema).parquet(es.map(e => s"$tableDir/$e"): _*)
+      .schema(recordedSchema(tableDir, m, dir)).parquet(es.map(e => s"$tableDir/$e"): _*)
   }
+
+  /** The schema `m` records for dir group `group`: the one its scan
+    * reads under. */
+  private def recordedSchema(tableDir: String, m: Manifest, group: String): StructType =
+    m.schemas.getOrElse(group, throw new IllegalStateException(
+      s"merge manifest $tableDir/${m.name} records no schema for dir group '$group'"))
 
   /** The schema Spark's parquet inference returns for `dir`, read on
     * the driver from the `org.apache.spark.sql.parquet.row.metadata`
@@ -2734,9 +2938,24 @@ object Sources {
     * ([[releaseClaimOnFailure]]); a crash leaves an unswapped dir for
     * the prune. */
   private def writeSnapshotMember(df: DataFrame, dir: String): Unit =
-    if (graft.operators.DriverPath.isLocal(df) && graft.operators.DriverPath.fits(df))
-      org.apache.spark.sql.graftbridge.Bridge.writeLocalParquet(df, dir): Unit
+    if (writesOnDriver(df)) Bridge.writeLocalParquet(df, dir): Unit
     else df.write.mode(SaveMode.Overwrite).parquet(dir)
+
+  /** Whether a snapshot publish writes member `df` from the driver
+    * ([[writeSnapshotMember]]): a local relation of at most
+    * `DriverPath.DriverStoreBytes`. */
+  private[graft] def writesOnDriver(df: DataFrame): Boolean =
+    graft.operators.DriverPath.isLocal(df) && graft.operators.DriverPath.fits(df)
+
+  /** A member `df` that a snapshot publish wrote from the driver
+    * ([[writesOnDriver]]) as a read of the member gives it back: the
+    * same rows, in the one file's order, under `df`'s schema made
+    * nullable (a file source reads every column nullable). A local
+    * relation, so a caller that hands back what it just published need
+    * not list, open and plan the member again. */
+  private[graft] def asWrittenOnDriver(df: DataFrame): DataFrame =
+    graft.operators.DriverPath.localRelation(df.sparkSession, Bridge.nullable(df.schema),
+      Bridge.localData(df))
 
   /** Resolve a snapshot root to its live data directory: follow the
     * `_current` pointer if present; otherwise (pre-versioning layout,

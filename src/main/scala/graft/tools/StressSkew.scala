@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.{GraftSession, Tables}
 import graft.operators.{Dedup, SkewJoin}
@@ -127,17 +128,18 @@ object StressSkew {
         md5(col("id").cast("string")).as("payload"))
       .localCheckpoint(false)
     build.count()
-    def noBroadcast[T](body: => T): T = {
-      val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try body finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    // the threshold is set on a clone of the session: the shared
+    // session's conf, and every query planned on it, stay as they were
+    val noBroadcast = Bridge.cloneSession(spark)
+    noBroadcast.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val (shuffledDocs, shuffledBuild) =
+      (Bridge.inSession(docs, noBroadcast), Bridge.inSession(build, noBroadcast))
+    val plainN = phase("plain shuffle join (AQE skew-split on)") {
+      shuffledDocs.join(shuffledBuild, "domain").count()
     }
-    val plainN = noBroadcast(phase("plain shuffle join (AQE skew-split on)") {
-      docs.join(build, "domain").count()
-    })
-    val saltedN = noBroadcast(phase("salted join (salt=32)") {
-      SkewJoin.saltedEquiJoin(docs, build, "domain", 32, col("doc_id")).count()
-    })
+    val saltedN = phase("salted join (salt=32)") {
+      SkewJoin.saltedEquiJoin(shuffledDocs, shuffledBuild, "domain", 32, col("doc_id")).count()
+    }
     require(plainN == saltedN, s"salted join diverged: $plainN vs $saltedN")
     println(s"[skew] join parity: $plainN rows from both plans")
 

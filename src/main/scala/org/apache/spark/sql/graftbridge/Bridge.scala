@@ -11,7 +11,8 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.classic.{Dataset, ExpressionUtils}
 import org.apache.spark.sql.execution.datasources.{FileFormat, HadoopFsRelation, LogicalRelation,
   OutputWriterFactory, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
@@ -32,12 +33,34 @@ object Bridge {
   def cloneSession(s: SparkSession): SparkSession =
     s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
 
+  /** `df`'s plan as a frame of session `s` (one sharing `df`'s
+    * SparkContext, such as a [[cloneSession]] clone): planned and run
+    * under `s`'s SQL conf. */
+  def inSession(df: DataFrame, s: SparkSession): DataFrame =
+    Dataset.ofRows(classic(s), df.queryExecution.logical)
+
   /** `schema` with every field, nested ones included, nullable: the
     * schema a file source reads under whatever schema it is given. */
   def nullable(schema: StructType): StructType = schema.asNullable
 
   private def classic(s: SparkSession) =
     s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+
+  /** A frame over `rows`, Catalyst rows of `schema`: a local relation
+    * built straight from them (`Dataset.ofRows` over a `LocalRelation`),
+    * with none of the conversions to and from external rows that
+    * `createDataFrame` makes. Collecting it runs no job. */
+  def localRelation(spark: SparkSession, schema: StructType, rows: Seq[InternalRow]): DataFrame =
+    Dataset.ofRows(classic(spark), LocalRelation(DataTypeUtils.toAttributes(schema), rows))
+
+  /** The rows of `df`, whose optimized plan is a local relation, as
+    * Catalyst rows. */
+  def localData(df: DataFrame): Seq[InternalRow] =
+    df.queryExecution.optimizedPlan match {
+      case l: LocalRelation => l.data
+      case other => throw new IllegalArgumentException(
+        s"a driver-side read of a frame's rows needs a local relation, got ${other.nodeName}")
+    }
 
   /** Write the rows of `df`, whose optimized plan is a local relation,
     * as ONE parquet file in `dir` (made when missing), from the calling
@@ -94,13 +117,6 @@ object Bridge {
         throw t
     }
   }
-
-  private def localData(df: DataFrame): Seq[InternalRow] =
-    df.queryExecution.optimizedPlan match {
-      case l: LocalRelation => l.data
-      case other => throw new IllegalArgumentException(
-        s"a driver-side parquet write needs a local relation, got ${other.nodeName}")
-    }
 
   /** Spark's parquet output writer for `schema`, set up as one task of
     * a `df.write` job; [[write]] makes one file per call. */

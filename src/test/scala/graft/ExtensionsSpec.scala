@@ -10,6 +10,22 @@ class ExtensionsSpec extends SparkSpec {
     new GraftExtensions().apply(ext)
   }
 
+  test("a frame moved onto a session clone plans under the clone's conf, the shared conf untouched") {
+    import org.apache.spark.sql.graftbridge.Bridge
+    val left = spark.range(1000).toDF("k").localCheckpoint(false)
+    val right = spark.range(10).toDF("k")
+    val before = spark.conf.getAll
+    val clone = Bridge.cloneSession(spark)
+    clone.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    def broadcasts(l: org.apache.spark.sql.DataFrame, r: org.apache.spark.sql.DataFrame) =
+      l.join(r, "k").queryExecution.executedPlan.toString.contains("BroadcastHashJoin")
+    assert(broadcasts(left, right))
+    val (l2, r2) = (Bridge.inSession(left, clone), Bridge.inSession(right, clone))
+    assert(!broadcasts(l2, r2))
+    assert(l2.join(r2, "k").count() == 10)
+    assert(spark.conf.getAll == before)
+  }
+
   test("gen_gsid and base32_encode work through SQL") {
     import graft.functions.{Base32Encode, GenerateGsid}
     val reg = spark.sessionState.functionRegistry

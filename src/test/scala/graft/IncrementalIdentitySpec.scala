@@ -125,6 +125,24 @@ class IncrementalIdentitySpec extends SparkSpec {
       Seq("request_id"), day1, "p", groupingIterations = 1)(identity).map(_.resolutions.count()))
   }
 
+  test("a cycle hands back the registry a fresh read returns, rows and schema") {
+    val root = tmp("handback")
+    val (fragDir, ckDir, regRoot) = (s"$root/f", s"$root/ck", s"$root/r")
+    IncrementalIdentity.publishRegistry(reg0, regRoot)
+    for ((batch, day) <- Seq(batch1 -> day1, batch2 -> day2)) {
+      Sources.publishMergePartitioned(spark, fragDir, frag(batch), cfg, "p")
+      val c = IncrementalIdentity.resolveCycle(spark, fragDir, ckDir, regRoot,
+        Seq("request_id"), day, "p", groupingIterations = 1)(identity).get
+      val fresh = IncrementalIdentity.readRegistry(spark, regRoot)
+      for ((got, want) <- Seq(c.registry.subjects -> fresh.subjects,
+          c.registry.localIds -> fresh.localIds)) {
+        assert(DriverPath.isLocal(got), "the members written from the driver were re-read")
+        assert(got.schema == want.schema, s"${got.schema.treeString} vs ${want.schema.treeString}")
+        assert(sortedRows(got) == sortedRows(want))
+      }
+    }
+  }
+
   test("third cycle with no new publish is a no-op returning None") {
     val root = tmp("noop")
     val (fragDir, ckDir, regRoot) = (s"$root/f", s"$root/ck", s"$root/r")

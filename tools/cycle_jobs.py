@@ -36,9 +36,11 @@ table gives forks per span. EVENTLOG may then be left out.
 
 With --compare PARENT.json CHANGE.json (two traced artifacts, e.g. of
 the parent commit and of a change, same workload and seed) it prints,
-for each span name, "fs_ops/jobs per occurrence" of both artifacts:
-every occurrence of the span in run order, warm-up and seeding spans
-included, from the artifacts' own facets (no event log needed).
+for each span name and both artifacts, every occurrence of the span in
+run order, warm-up and seeding spans included, from the artifacts' own
+facets (no event log needed): "fs_ops/jobs", then the timed layers
+`wall_ms` (the span's wall) and `driver_ms` (its wall outside any
+Spark job), so a speed claim names the layer that moved.
 
 Only the standard library is used; `.zstd` logs are read through
 `zstd -dc`, JFR recordings through `jfr print --json`.
@@ -135,15 +137,20 @@ def process_starts(path):
 
 
 def occurrences(art, names):
-    """span name -> "fs_ops/jobs" of each of its spans, in run order."""
+    """span name -> the facets of each of its spans, in run order."""
     out = collections.OrderedDict()
     for s in sorted(art["spans"], key=lambda s: (s["start_ms"], s["id"])):
         if names and s["name"] not in names:
             continue
-        f = s.get("facets", {})
-        out.setdefault(s["name"], []).append(
-            f"{int(f.get('fs_ops', 0))}/{int(f.get('jobs', 0))}")
+        out.setdefault(s["name"], []).append(s.get("facets", {}))
     return out
+
+
+COMPARED = (
+    ("fs_ops/jobs", lambda f: f"{int(f.get('fs_ops', 0))}/{int(f.get('jobs', 0))}"),
+    ("wall_ms", lambda f: f"{f.get('wall_ms', 0.0):.0f}"),
+    ("driver_ms", lambda f: f"{f.get('driver_ms', 0.0):.0f}"),
+)
 
 
 def compare(paths, names):
@@ -151,14 +158,17 @@ def compare(paths, names):
     for p in paths:
         with open(p, encoding="utf-8") as f:
             arts.append(json.load(f))
-    print("# fs_ops/jobs per occurrence, every occurrence of each span in run order")
+    print("# per occurrence, every occurrence of each span in run order:"
+          " fs_ops/jobs, wall_ms, driver_ms")
     for label, p, art in zip(("parent", "change"), paths, arts):
         print(f"# {label}: {p} ({art.get('workload')} seed {art.get('seed')})")
     tables = [occurrences(a, names) for a in arts]
     for name in dict.fromkeys(n for t in tables for n in t):
         print(name)
-        for label, t in zip(("parent", "change"), tables):
-            print(f"  {label}: {' '.join(t.get(name, [])) or '-'}")
+        for facet, show in COMPARED:
+            for label, t in zip(("parent", "change"), tables):
+                cells = " ".join(show(f) for f in t.get(name, [])) or "-"
+                print(f"  {facet:<11} {label}: {cells}")
 
 
 def main():
@@ -169,7 +179,8 @@ def main():
     ap.add_argument("--all-ops", action="store_true", help="include warm-up and seed spans")
     ap.add_argument("--jfr", metavar="FILE", help="count jdk.ProcessStart events per span")
     ap.add_argument("--compare", nargs=2, metavar=("PARENT", "CHANGE"),
-                    help="fs_ops/jobs per occurrence of each span, for both artifacts")
+                    help="fs_ops/jobs, wall_ms and driver_ms per occurrence of each span, "
+                         "for both artifacts")
     a = ap.parse_args()
     if a.compare:
         if a.artifact or a.jfr:
