@@ -49,7 +49,7 @@ import graft.sources.Sources
   *    reruns from duplicating review notes.
   *  - the registry snapshot itself is published with
   *    [[Sources.publishSnapshotGroup]]: subjects and local_ids move
-  *    under ONE atomic pointer swap, so a crash can never leave
+  *    under ONE claimed commit, so a crash can never leave
   *    subjects from cycle N beside local_ids from N−1 (a torn
   *    registry would re-mint duplicate subject rows on redelivery).
   *
@@ -72,7 +72,7 @@ import graft.sources.Sources
   *    the member writes distributed;
   *  - a larger delta: [[IdentityResolver]]'s distributed J1 (shuffle
   *    on normalized identifier, auto-armed salted skew fallback).
-  * The registry read is a pointer-resolved parquet scan and the
+  * The registry read is a claim-resolved parquet scan and the
   * publish rewrites the registry snapshot on every tier.
   */
 object IncrementalIdentity {
@@ -92,17 +92,16 @@ object IncrementalIdentity {
   /** Seed (or forcibly reset) the registry snapshot group.
     * `basis`: the [[Sources.snapshotReadBasis]] of the registry the
     * published state was DERIVED from — with it, a rival cycle
-    * committing OR swapping in between refuses loudly instead of
-    * having this publish silently replace its fold (see
-    * [[resolveCycle]]). */
+    * committing in between refuses loudly instead of having this
+    * publish silently replace its fold (see [[resolveCycle]]). */
   def publishRegistry(reg: IdentityResolver.Registry, registryRoot: String,
-      basis: Option[Sources.SnapshotBasis] = None): Unit =
+      basis: Option[Long] = None): Unit =
     Sources.publishSnapshotGroup(
       Seq(SubjectsMember -> reg.subjects, LocalIdsMember -> reg.localIds),
       registryRoot, basis)
 
-  /** The live registry snapshot, both members resolved from ONE
-    * pointer read (mutually consistent by construction). */
+  /** The live registry snapshot, both members resolved from ONE read of
+    * its highest claim (mutually consistent by construction). */
   def readRegistry(spark: SparkSession, registryRoot: String): IdentityResolver.Registry = {
     val m = Sources.readSnapshotGroupAll(spark, registryRoot,
       Seq(SubjectsMember, LocalIdsMember))
@@ -121,9 +120,12 @@ object IncrementalIdentity {
     *  1. read delta (row-level changes since the checkpoint),
     *  2. resolve against the live registry snapshot, materialize the
     *     resolution rows (they feed links + applyBatch + the caller),
-    *  3. publish the evolved registry (atomic group swap — crash
-    *     before this leaves the old registry; crash after re-applies
-    *     an idempotent batch on redelivery),
+    *  3. publish the evolved registry against the committed version
+    *     read before step 2 (one group claim, taken after both members
+    *     are written: a crash before it leaves the old registry and an
+    *     unclaimed dir that blocks no later cycle; a crash after it
+    *     re-applies an idempotent batch on redelivery; a rival cycle
+    *     that committed first refuses this one),
     *  4. advance the change-feed checkpoint (inside
     *     processMergeRowChanges, after this body returns).
     */
@@ -149,10 +151,10 @@ object IncrementalIdentity {
         // ConcurrentModificationException, its checkpoint does not
         // advance, and a re-driven cycle re-reads the winner's registry
         // and converges (usually to a no-op: resolution is match-first
-        // idempotent over an already-folded batch). The basis pins both
-        // the claim count AND the pointer version readRegistry resolves
-        // — a rival mid-publish (claimed, unswapped) that lands during
-        // this cycle refuses it either way (Sources.snapshotReadBasis).
+        // idempotent over an already-folded batch). The basis is the
+        // registry's committed version: the publish claims the number
+        // after it, so a rival that commits during this cycle — however
+        // early its write began — refuses it (Sources.snapshotReadBasis).
         val basis = Sources.snapshotReadBasis(spark, registryRoot)
         val stored = readRegistry(spark, registryRoot)
         // the delta is read ONCE: a micro-batch comes back as a local

@@ -137,14 +137,17 @@ object SourceQueries {
     },
 
     // Small-file compaction under the gate: publish a fragmented
-    // snapshot (32 files), compact to one through the versioned
-    // pointer swap, read the live version back row-for-row. Any loss
-    // or duplication in the rewrite breaks the value hash.
+    // snapshot (32 files), compact to one through a claimed commit,
+    // read the live version back row-for-row. Any loss or duplication
+    // in the rewrite breaks the value hash. The table starts fresh on
+    // every run: one an older build wrote may be in a refused layout.
     QueryDef.sql(
       "q_source_compaction",
       """SELECT doc_id, n_chars FROM documents
         |ORDER BY doc_id""".stripMargin) { (s, d) =>
       val dir = scratch(d, "compact")
+      org.apache.hadoop.fs.FileSystem.get(new java.net.URI(dir), s.sparkContext.hadoopConfiguration)
+        .delete(new org.apache.hadoop.fs.Path(dir), true): Unit
       val docs = Tables.documents(s, d).select("doc_id", "n_chars")
       Sources.publishSnapshot(docs.repartition(32), dir)
       Sources.compact(s, dir, targetBytes = Long.MaxValue)

@@ -73,23 +73,23 @@ object Sources {
     * survive as a duplicate.
     *
     * Layout (the Iceberg/Delta idea reduced to plain parquet + one
-    * pointer): data lives in IMMUTABLE batch dirs
+    * claim per commit): data lives in IMMUTABLE batch dirs
     * `tableDir/b-<n>/<col>=<val>/…parquet` (one `partitionBy` write
     * per publish, never rewritten in place); a MANIFEST file
     * `tableDir/manifest-<n>` states its format version, records the
     * schema each batch dir reads under (partition column typed as
     * written, so no read infers a type from a directory name) and lists
     * the live dir of every partition (one relative path per line; see
-    * [[Manifest]]); `_current` points at the live
-    * manifest and is swapped with the same raw-write + atomic-rename
-    * mechanics as [[publishSnapshot]]. A reader ([[readMergePartitioned]])
-    * resolves the pointer once and then scans a frozen, fully-written
-    * set of dirs — it can never observe a partition mid-rewrite or a
-    * mix of old and new partitions, the two windows the previous
-    * in-place dynamic-partition-overwrite left open. Retention is
-    * anchored to the live pointer (see [[pruneMergePartitioned]]):
-    * the two manifests below the swapped-live one keep their dirs, so
-    * a reader lagging up to two publishes keeps its files.
+    * [[Manifest]]); the table's state is the manifest its highest
+    * `commit-<n>` claim names, and the claim, taken after the manifest
+    * is written, is the whole commit. A reader ([[readMergePartitioned]])
+    * resolves the highest claim once and then scans a frozen,
+    * fully-written set of dirs — it can never observe a partition
+    * mid-rewrite or a mix of old and new partitions, the two windows the
+    * previous in-place dynamic-partition-overwrite left open. Retention
+    * is anchored to the highest claim (see [[pruneMergePartitioned]]):
+    * the two manifests below it keep their dirs, so a reader lagging up
+    * to two publishes keeps its files.
     *
     * Concurrent publishers serialize through the optimistic commit
     * protocol ([[claimMergeManifest]], round 16): each publish claims
@@ -305,49 +305,38 @@ object Sources {
       .partitionBy(partitionCol).parquet(dir)
 
   /** Adopt a plain `<col>=<val>` partitioned parquet layout into the
-    * manifest/pointer discipline WITHOUT rewriting any data: write a
+    * manifest/claim discipline WITHOUT rewriting any data: write a
     * baseline manifest referencing the existing partition dirs, under
     * the schema Spark's partition inference gives them (the one
     * inference a merge table runs: every later read takes the schema
-    * the manifest records), and swap `_current` onto it. This is the
+    * the manifest records), and claim `commit-1` for it. This is the
     * adoption step
     * [[publishMergePartitioned]] performs implicitly on its first
     * publish, exposed for callers that need a manifest table BEFORE
     * their first merge — e.g. [[publishMergeDeletes]] (which refuses
     * pre-manifest tables) when the first delta against a bulk-written
     * table is a retraction. Idempotent: returns false (no-op) when the
-    * table already has a live pointer or has no partition dirs to
-    * adopt. The adopted dirs are left byte-identical in place. */
+    * table already holds a claim (a rival adopting at the same time
+    * included) or has no partition dirs to adopt. The adopted dirs are
+    * left byte-identical in place. */
   def adoptMergePartitioned(spark: SparkSession, tableDir: String,
       partitionCol: String): Boolean = {
     val conf = spark.sparkContext.hadoopConfiguration
     val uri = new java.net.URI(tableDir)
     val fs = org.apache.hadoop.fs.FileSystem.get(uri, conf)
     val root = new org.apache.hadoop.fs.Path(tableDir)
-    var attempts = 0
-    while (attempts < 20) {
-      attempts += 1
-      if (fs.exists(new org.apache.hadoop.fs.Path(root, "_current"))) return false
-      // a claimed-but-unswapped commit exists: the table IS adopted
-      // (the first committed manifest embeds the baseline entries) —
-      // the rival's swap just hasn't landed yet
-      if (commitNames(fs, root).nonEmpty) return false
-      val baseline = plainLayout(spark, tableDir, partitionCol)
-      if (baseline.entries.isEmpty) return false
-      val uid = java.util.UUID.randomUUID().toString.take(8)
-      val next = nextNumber(fs, root)
-      val mfile0 = f"manifest-$next%012d-$uid"
-      writeRaw(uri, conf, new org.apache.hadoop.fs.Path(root, mfile0), baseline.text)
-      // adoption is a commit like any other (two racing adopters must
-      // not both swap baselines): claim the number, loser re-checks
-      if (createExclusive(fs, uri,
-          new org.apache.hadoop.fs.Path(root, f"$CommitPrefix$next%012d"), mfile0)) {
-        swapPointerForward(fs, uri, conf, root, mfile0, s"$next-$uid-0")
-        return true
-      }
-    }
-    throw new IllegalStateException(
-      s"adoptMergePartitioned on $tableDir lost 20 consecutive claim races")
+    // any claim means the table is adopted: the first committed
+    // manifest embeds the baseline entries
+    if (claimNumbers(fs, root).nonEmpty) return false
+    val baseline = plainLayout(spark, tableDir, partitionCol)
+    if (baseline.entries.isEmpty) return false
+    val mfile = f"manifest-${1}%012d-${java.util.UUID.randomUUID().toString.take(8)}"
+    writeRaw(uri, conf, new org.apache.hadoop.fs.Path(root, mfile), baseline.text)
+    // adoption is a commit like any other: of two racing adopters one
+    // claims, and the other finds the table adopted
+    val won = claimNext(fs, uri, root, 0L, mfile)((_, _) => ())
+    if (!won) deleteQuiet(fs, new org.apache.hadoop.fs.Path(root, mfile), recursive = false)
+    won
   }
 
   /** APPEND-ONLY publish for a [[publishMergePartitioned]] table: the
@@ -399,7 +388,7 @@ object Sources {
     * (minus tombstoned rows, applied by the CALLER) back to one dir.
     * Unlike [[publishMergePartitioned]] there is NO merge with current
     * content — the caller asserts `content` is the truth for those
-    * partitions. Same manifest/pointer/retention discipline. */
+    * partitions. Same manifest/claim/retention discipline. */
   /** `basisVersion`: the [[mergeCommittedVersion]] snapshotted BEFORE
     * reading the content being folded. With it, a rival commit to the
     * replaced partitions between that read and this commit REFUSES
@@ -459,7 +448,7 @@ object Sources {
     * the retraction half MERGE alone can't express (GDPR erasure,
     * eval-set eviction, takedowns): rewrite the touched partitions
     * WITHOUT the rows matching `deletes` on `cfg.naturalKey`, under
-    * the exact same manifest/forward-pointer/retention discipline as
+    * the exact same manifest/claim/retention discipline as
     * a merge publish. Deleted keys then surface as `orphaned` in
     * [[mergeRowChangesSince]], so keyed downstream state (e.g.
     * [[graft.operators.Dedup.decontaminateChanges]]'s status
@@ -490,8 +479,7 @@ object Sources {
       s"deletes frame must carry the partition column '$partitionCol'")
     cfg.naturalKey.foreach(k => require(deletes.columns.contains(k),
       s"deletes frame must carry natural-key column '$k'"))
-    val fs = fsOf(spark, tableDir)
-    require(fs.exists(new org.apache.hadoop.fs.Path(tableDir, "_current")),
+    require(claimNumbers(fsOf(spark, tableDir), new org.apache.hadoop.fs.Path(tableDir)).nonEmpty,
       s"publishMergeDeletes: '$tableDir' is not a manifest-published table")
     commitMergeBatch(spark, tableDir, partitionCol) { basis =>
       // Bounded metadata collect: touched-partition cardinality is the
@@ -546,47 +534,64 @@ object Sources {
 
   /** Prune rotated manifests and the batch dirs only they reference.
     *
-    * The retention contract is anchored to the LIVE POINTER, not the
-    * file listing: a reader that resolved `_current` at manifest
-    * number k keeps every dir k references until at least two newer
-    * manifests have been SWAPPED live (the two-publish reader slack).
-    * Written-but-not-yet-swapped manifests therefore cannot consume
-    * the slack — the round-8 N×M stress failure was `takeRight(3)`
-    * counting three in-flight publishers' manifests as the retained
-    * set and rotating out a manifest a live reader had just resolved.
-    * Protection set = every manifest numbered ≥ live−2 (the live one,
-    * the two-publish slack below it, anything newer or pending) plus
-    * any younger-than-grace candidate (a stalled publisher whose
-    * number fell behind; past the grace it degrades to the documented
-    * lost update).
+    * The retention contract is anchored to the HIGHEST CLAIM, not the
+    * file listing: a reader that resolved claim k keeps every dir
+    * manifest k references until at least two newer manifests have been
+    * claimed (the two-publish reader slack). Written-but-unclaimed
+    * manifests therefore cannot consume the slack — the round-8 N×M
+    * stress failure was `takeRight(3)` counting three in-flight
+    * publishers' manifests as the retained set and rotating out a
+    * manifest a live reader had just resolved. Protection set = every
+    * manifest numbered ≥ top−2 (the live one, the two-publish slack
+    * below it, anything newer or pending) plus any younger-than-grace
+    * candidate (a recently rotated version a slow reader may still
+    * scan, or a stalled publisher's attempt whose dirs it will rebase
+    * with; past the grace it degrades to the documented lost update).
+    * A candidate is a manifest below top−2, or an unclaimed one whose
+    * number another manifest's claim holds (a crashed or lost attempt:
+    * it can never commit).
     *
-    * The pass is ABORT-ON-DOUBT: if any manifest in the ≥ live−2
+    * The pass is ABORT-ON-DOUBT: if any manifest in the ≥ top−2
     * protection set vanishes before its reference list is read (a
     * concurrent pruner won a race), this pass deletes NOTHING — the
     * round-8 failure's second ingredient was a vanished retained
     * manifest silently reading as an empty reference list, shrinking
     * the protection set. Deferral leaks nothing: the next publish
-    * re-runs the prune. A vanished CANDIDATE (number < live−2,
-    * whether aged or inside the grace) just drops out of both the
+    * re-runs the prune. A vanished CANDIDATE just drops out of both the
     * protection and the deletion sets — no in-window reader can be
-    * holding it, by the pointer arithmetic above, and a concurrent
-    * pruner deleting it means its dirs were already adjudicated. A
-    * manifest of any of the three sets that states no format version,
-    * or one this engine does not read, also defers the whole pass: its
-    * reference list is unknown.
+    * holding it, and a concurrent pruner deleting it means its dirs were
+    * already adjudicated. A manifest of any of the three sets that
+    * states no format version, or one this engine does not read, also
+    * defers the whole pass: its reference list is unknown.
     *
-    * Deletion order is dirs-then-manifests: a crash between the two
-    * leaves a still-readable rotated manifest whose next prune is
-    * idempotent, never an orphan dir referenced by no manifest (which
-    * the in-flight-batch rule would preserve forever). */
+    * Deletion order is dirs, then manifests, then the claims below the
+    * lowest retained manifest in ascending order (see [[claimNext]]): a
+    * crash between the two leaves a still-readable rotated manifest
+    * whose next prune is idempotent, never an orphan dir referenced by
+    * no manifest (which only [[vacuumOrphans]] would reclaim). */
   private[sources] def pruneMergePartitioned(fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path, graceMs: Long = 10L * 60 * 1000): Unit = {
-    val liveNum = currentPointer(fs, root) match {
-      case Some(m) if m.startsWith("manifest-") => numberOf(m, "manifest-")
-      case _ => return // unreadable/foreign pointer: nothing safe to do
+    val listed = fs.listStatus(root).toSeq
+    val names = listed.filter(_.isFile).map(_.getPath.getName)
+    val claims = names.filter(_.startsWith(CommitPrefix)).map(numberOf(_, CommitPrefix))
+    if (claims.isEmpty) return
+    val top = claims.max
+    val manifests = names.filter(_.startsWith("manifest-"))
+    // a number in the window that two manifests carry: the claim names
+    // the one that committed
+    val contested = manifests.groupBy(numberOf(_, "manifest-")).collect {
+      case (n, ms) if ms.size > 1 && n >= top - 2 && claims.contains(n) => n
+    }.toSeq
+    val winners =
+      try contested.flatMap(n => readControl(fs, claimPath(root, n))).toSet
+      catch { case e: java.io.IOException =>
+        log.warn(s"merge prune on $root deferred: ${e.getMessage}")
+        return
+      }
+    val (protect, candidates) = manifests.partition { m =>
+      val n = numberOf(m, "manifest-")
+      n >= top - 2 && (!contested.contains(n) || winners(m))
     }
-    val (protect, candidates) =
-      manifestNames(fs, root).partition(m => numberOf(m, "manifest-") >= liveNum - 2)
     val now = System.currentTimeMillis()
     val aged = candidates.flatMap { m =>
       try Some(m -> (now - fs.getFileStatus(
@@ -595,6 +600,12 @@ object Sources {
     }
     val young = aged.collect { case (m, true) => m }
     val old   = aged.collect { case (m, false) => m }
+    // crashed claimers' temps go whatever else the pass decides
+    listed.foreach { st =>
+      if (st.isFile && st.getPath.getName.startsWith(ClaimTmpPrefix) &&
+          now - st.getModificationTime >= ClaimTmpGraceMs)
+        deleteQuiet(fs, st.getPath, recursive = false)
+    }
     if (old.isEmpty) return
     // a manifest in a format this engine does not read may reference
     // anything: the pass defers, as for a vanished protected manifest,
@@ -613,29 +624,8 @@ object Sources {
       deleteQuiet(fs, new org.apache.hadoop.fs.Path(root, d), recursive = true))
     old.foreach(m =>
       deleteQuiet(fs, new org.apache.hadoop.fs.Path(root, m), recursive = false))
-    // retire the OCC commit markers alongside the manifests they claimed
-    // (same retention floor; newer markers keep serving latestCommitted
-    // and the monotonic-number max). Only numbers of deleted manifests —
-    // a marker inside the protection window stays.
-    old.map(numberOf(_, "manifest-")).distinct.foreach(n =>
-      deleteQuiet(fs,
-        new org.apache.hadoop.fs.Path(root, f"$CommitPrefix$n%012d"),
-        recursive = false))
-    // reclaim crashed-claimer litter: aged _claim-* temps (a completed
-    // claim moves its temp away within milliseconds) and aged
-    // claimed-DEAD markers below the protection floor (content never
-    // names a manifest — a legacy crash's corpse; the commit loop
-    // already numbers past them, this just stops the listing growing)
-    fs.listStatus(root).toSeq.foreach { st =>
-      val name = st.getPath.getName
-      lazy val aged = now - st.getModificationTime >= graceMs
-      if (st.isFile && name.startsWith(ClaimTmpPrefix) && aged)
-        deleteQuiet(fs, st.getPath, recursive = false)
-      else if (st.isFile && name.startsWith(CommitPrefix) &&
-          numberOf(name, CommitPrefix) < liveNum - 2 && aged &&
-          !readControl(fs, st.getPath).forall(_.startsWith("manifest-")))
-        deleteQuiet(fs, st.getPath, recursive = false)
-    }
+    val floor = ((protect ++ young).map(numberOf(_, "manifest-")) :+ (top - 2)).min
+    claims.filter(_ < floor).sorted.foreach(n => deleteQuiet(fs, claimPath(root, n), recursive = false))
   }
 
   /** The filesystem of the table or dir at `path`. */
@@ -650,8 +640,8 @@ object Sources {
     try { fs.delete(p, recursive); () }
     catch { case _: java.io.FileNotFoundException => () }
 
-  /** The trimmed UTF-8 content of a small control file (a pointer, a
-    * claim marker, a checkpoint, a sidecar); None when it does not
+  /** The trimmed UTF-8 content of a small control file (a claim
+    * marker, a checkpoint, a sidecar); None when it does not
     * exist. Any other I/O error propagates. */
   private[graft] def readControl(fs: org.apache.hadoop.fs.FileSystem,
       p: org.apache.hadoop.fs.Path): Option[String] =
@@ -668,46 +658,74 @@ object Sources {
     try readControl(fs, p).getOrElse("")
     catch { case _: java.io.IOException => "" }
 
-  /** The table's `_current` pointer; None when absent or unreadable. */
-  private[sources] def currentPointer(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Option[String] =
-    try readControl(fs, new org.apache.hadoop.fs.Path(root, "_current"))
-    catch { case _: java.io.IOException => None }
-
-  /** [[swapPointer]] guarded to never move the pointer BACKWARDS by
-    * manifest number: with concurrent publishers, a slow swap landing
-    * after a faster rival's would otherwise regress the pointer —
-    * time travel for readers and a shrunk window for the
-    * pointer-anchored retention math. Skipping the swap loses nothing:
-    * every caller claimed its number first, so a rival numbered above
-    * it was derived from, or rebased onto, this commit. (read-then-
-    * rename is not a CAS; the residual regression window is the gap
-    * between the two, which the abort-on-doubt prune tolerates.) */
-  private[sources] def swapPointerForward(fs: org.apache.hadoop.fs.FileSystem,
-      uri: java.net.URI, conf: org.apache.hadoop.conf.Configuration,
-      root: org.apache.hadoop.fs.Path, content: String, stamp: String,
-      prefix: String = "manifest-"): Unit = {
-    val newer = currentPointer(fs, root).exists(cur =>
-      cur.startsWith(prefix) && content.startsWith(prefix) &&
-        numberOf(cur, prefix) > numberOf(content, prefix))
-    if (!newer) swapPointer(fs, uri, conf, root, content, stamp)
-  }
-
   // ─────────────── optimistic-concurrency commit (round 16) ───────────────
 
   private val CommitPrefix = "commit-"
 
-  private def commitNames(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Seq[String] =
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq.collect {
+  private def claimPath(root: org.apache.hadoop.fs.Path, n: Long): org.apache.hadoop.fs.Path =
+    new org.apache.hadoop.fs.Path(root, f"$CommitPrefix$n%012d")
+
+  /** The numbers of a table root's `commit-<n>` claims, from one
+    * listing; none for an absent root. A root that holds a `_current`
+    * pointer but no claim is a layout from before claimed commits (a
+    * table's state is its highest claim, and such a root has none):
+    * refused, naming the root. */
+  private def claimNumbers(fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path): Seq[Long] = {
+    val listed =
+      try fs.listStatus(root).toSeq
+      catch { case _: java.io.FileNotFoundException => Seq.empty }
+    val claims = listed.collect {
       case st if st.isFile && st.getPath.getName.startsWith(CommitPrefix) =>
-        st.getPath.getName
+        numberOf(st.getPath.getName, CommitPrefix)
+    }
+    if (claims.isEmpty && listed.exists(_.getPath.getName == "_current"))
+      throw new IllegalStateException(s"table $root holds a _current pointer but no " +
+        "commit-<n> claim: a layout from before claimed commits, which this engine does " +
+        "not read (a table's state is the one its highest claim names) — refusing")
+    claims
+  }
+
+  /** The committed state of a table root: its highest `commit-<n>`
+    * claim, as `named` reads what the claim's content names (a merge
+    * manifest, a snapshot version dir). None when the root holds no
+    * claim. This one rule resolves every merge and snapshot read and
+    * every publish basis: a commit is visible the moment its claim
+    * exists, and nothing else is swapped. A claim, or what it names,
+    * that vanishes between the listing and the read was pruned because
+    * rivals committed past it: the resolve lists again, and fails loudly
+    * when that keeps happening. */
+  private def resolveClaim[T](fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path, attempt: Int = 1)(
+      named: (Long, String) => Option[T]): Option[(Long, T)] =
+    claimNumbers(fs, root).maxOption.flatMap { n =>
+      readControl(fs, claimPath(root, n)).flatMap(named(n, _)) match {
+        case Some(t) => Some(n -> t)
+        case None if attempt < 3 => resolveClaim(fs, root, attempt + 1)(named)
+        case None => throw new IllegalStateException(
+          s"claim $root/${claimPath(root, n).getName} or what it names no longer exists — " +
+            "the reader lagged beyond the two-publish retention window")
+      }
     }
 
-  private def commitNumbers(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Seq[Long] =
-    commitNames(fs, root).map(numberOf(_, CommitPrefix))
+  /** Take `commit-<c+1>` for `content`, where `c` is the committed
+    * number the claimer's basis read: true iff this claimer took it.
+    * Claim numbers are DENSE, so winning `c+1` proves no rival committed
+    * since the basis read — provided the slot was never claimed and
+    * pruned. Retention deletes claims below the retained window in
+    * ascending order, so while `commit-<c>` stands `commit-<c+1>` has
+    * not been pruned: the basis claim is read first (its content
+    * checked by `held`, which refuses a claim in an unknown format), and
+    * a basis claim that is gone (or, for `c` = 0, any claim at all)
+    * means rivals committed past the basis: nothing is claimed. */
+  private def claimNext(fs: org.apache.hadoop.fs.FileSystem, uri: java.net.URI,
+      root: org.apache.hadoop.fs.Path, c: Long, content: String)(
+      held: (Long, String) => Unit): Boolean = {
+    val basisHeld =
+      if (c == 0) claimNumbers(fs, root).isEmpty
+      else readControl(fs, claimPath(root, c)).exists { text => held(c, text); true }
+    basisHeld && createExclusive(fs, uri, claimPath(root, c + 1), content)
+  }
 
   /** Atomic create-EXCLUSIVE of a small control file — the put-if-absent
     * the optimistic commit serializes on. True iff this caller created
@@ -760,110 +778,36 @@ object Sources {
 
   /** Temp-file prefix for in-flight [[createExclusive]] claims. Deliberately
     * outside every control-file namespace (`commit-*`, `manifest-*`, `b-*`,
-    * `_current`); a crashed claimer's leftover is reclaimed by
-    * [[pruneMergePartitioned]] once aged. */
+    * `v-*`); a crashed claimer's leftover is reclaimed by the prune once
+    * aged ([[ClaimTmpGraceMs]]). */
   private val ClaimTmpPrefix = "_claim-"
 
-  /** Deterministic tombstone a reclaimed corpse marker is renamed to —
-    * see [[reclaimCorpseMarker]]. PERMANENT by design: its existence is
-    * what makes a second reclaim of the same number impossible. */
-  private val CorpseTombPrefix = "_corpse-"
+  /** Age after which a `_claim-*` temp is a crashed claimer's leftover: a
+    * completing claim moves its temp away within milliseconds. */
+  private val ClaimTmpGraceMs = 10L * 60 * 1000
 
-  /** Exclusive reclaim of a content-less/garbage `commit-<n>` marker (a
-    * pre-content-atomic crash corpse) — ADVICE r17 #2. The blind
-    * read-then-delete it replaces was a TOCTOU on a shared name:
-    * publisher A reads the corpse, pauses (GC, scheduler); rival B
-    * reads the same corpse, deletes it, wins the number with a VALID
-    * marker and swaps; A resumes and its delete destroys B's committed
-    * marker, A re-claims the number and commits a manifest rebased on
-    * the pre-B state — B's batch silently dropped (the forward-only
-    * pointer guard does not block an equal-numbered swap). The
-    * read-to-delete window is unbounded, so "unlikely" is not an
-    * argument.
-    *
-    * The delete is therefore an atomic no-replace RENAME to the
-    * deterministic tombstone `_corpse-<n>`:
-    *  - exactly one renamer of a single source inode wins; the loser
-    *    sees the source vanish (or the tombstone already present) and
-    *    simply re-contests the number through the normal claim;
-    *  - the tombstone is PERMANENT: a second reclaim of number n fails
-    *    on dest-exists, so once n transitions corpse→valid nothing can
-    *    ever rename the valid marker away — the exact hole the blind
-    *    delete had. Corpses cannot re-form post-r17 ([[createExclusive]]
-    *    links full content atomically), so the litter bound is one
-    *    ~40-byte tombstone per LEGACY corpse, ever;
-    *  - a crash after the rename leaves the number open (marker gone)
-    *    for any publisher to contest normally — never a wedge.
-    * Belt-and-braces: if the renamed content turns out VALID (a state
-    * the tombstone discipline makes unreachable), it is restored via
-    * the same atomic put-if-absent; a failed restore throws loudly —
-    * never a silently dropped committed manifest. */
-  private[sources] def reclaimCorpseMarker(fs: org.apache.hadoop.fs.FileSystem,
-      uri: java.net.URI, root: org.apache.hadoop.fs.Path,
-      markerPath: org.apache.hadoop.fs.Path, next: Long): Unit = {
-    val tomb = new org.apache.hadoop.fs.Path(root, f"$CorpseTombPrefix$next%012d")
-    val won =
-      if (Option(uri.getScheme).forall(_ == "file"))
-        try {
-          java.nio.file.Files.move(
-            java.nio.file.Paths.get(markerPath.toUri.getPath),
-            java.nio.file.Paths.get(tomb.toUri.getPath)): Unit
-          true
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException => false
-          case _: java.nio.file.NoSuchFileException => false
-        }
-      else
-        try fs.rename(markerPath, tomb)
-        catch {
-          case _: java.io.FileNotFoundException => false
-          case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-        }
-    if (won) {
-      val content = readControlQuiet(fs, tomb)
-      if (content.startsWith("manifest-") &&
-          !createExclusive(fs, uri, markerPath, content))
-        throw new IllegalStateException(
-          s"corpse reclaim on $markerPath renamed a marker that turned " +
-            s"VALID and could not restore it ($content) — refusing loudly " +
-            "rather than dropping a committed manifest reference")
-    }
-  }
+  /** The committed state of a merge table: the manifest its highest
+    * claim names ([[resolveClaim]]), with the claim's number; None when
+    * the table holds no claim. Every read of the live table and every
+    * publish basis resolves through here, so a publish sees exactly what
+    * readers see and can never rebase past a claimed rival batch. A
+    * claim that names no manifest is refused, naming it. */
+  private def committedManifest(fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path): Option[(Long, Manifest)] =
+    resolveClaim(fs, root)((n, m) => readManifestOpt(fs, root, requireManifestClaim(root, n, m)))
 
-  /** The highest COMMITTED state of a merge table: the manifest named by
-    * the largest claimed commit marker. Every merge-table pointer swap
-    * follows a claim, so the marker is never older than the pointer.
-    * This is the publisher-side read — unlike the reader's pointer
-    * resolve it sees a commit whose pointer swap has not landed yet (or
-    * whose publisher crashed between claim and swap), so a rebase can
-    * never silently drop a durably-claimed rival batch. A table with no
-    * claim reads as the empty manifest at number 0; a manifest pointer
-    * with no claim behind it is refused. */
+  /** `content` of merge claim `n`, refused unless it names a manifest. */
+  private def requireManifestClaim(root: org.apache.hadoop.fs.Path, n: Long,
+      content: String): String =
+    if (content.startsWith("manifest-")) content
+    else throw new IllegalStateException(s"merge claim $root/${claimPath(root, n).getName} " +
+      s"names no manifest ('${content.take(80)}') — refusing a layout this engine does not know")
+
+  /** [[committedManifest]], the empty manifest at number 0 for a table
+    * with no claim: a publisher's basis. */
   private def latestCommitted(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): (Long, Manifest) = {
-    // walk DOWN from the largest marker past any with unreadable/invalid
-    // content: a crashed pre-r17 claimer left content-less markers, and
-    // those numbers are claimed-DEAD (a burned slot, no manifest) — the
-    // newest marker that actually names a manifest is the committed
-    // state
-    commitNames(fs, root).sortBy(numberOf(_, CommitPrefix)).reverseIterator
-      .map(c => readControl(fs, new org.apache.hadoop.fs.Path(root, c))
-        .filter(_.startsWith("manifest-")))
-      .collectFirst { case Some(m) => m } match {
-      // the named manifest vanished (pruned mid-read): the live one
-      // stands in, and the claim that follows retries or fails loudly
-      case Some(m) => (numberOf(m, "manifest-"), readManifestOpt(fs, root, m)
-        .orElse(liveManifest(fs, root)).getOrElse(Manifest.Empty))
-      case None =>
-        currentPointer(fs, root).filter(_.startsWith("manifest-")).foreach { m =>
-          throw new IllegalStateException(
-            s"merge table $root points at $m but holds no commit claim for " +
-              "it — an unclaimed layout no current writer produces; refusing " +
-              "to take a publish basis from it")
-        }
-        (0L, Manifest.Empty)
-    }
-  }
+      root: org.apache.hadoop.fs.Path): (Long, Manifest) =
+    committedManifest(fs, root).getOrElse(0L -> Manifest.Empty)
 
   /** Segment names (`col=value`) whose live dir-set differs between two
     * manifest reference lists — the partitions rival commits changed
@@ -892,9 +836,8 @@ object Sources {
     * never committed. */
   private def committedAt(fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path, version: Long): Option[Manifest] =
-    readControl(fs, new org.apache.hadoop.fs.Path(root, f"$CommitPrefix$version%012d"))
-      .filter(_.startsWith("manifest-"))
-      .flatMap(readManifestOpt(fs, root, _))
+    readControl(fs, claimPath(root, version))
+      .flatMap(m => readManifestOpt(fs, root, requireManifestClaim(root, version, m)))
 
   /** Optimistic-concurrency manifest commit — the engine's answer to the
     * reference's per-load Postgres transaction
@@ -926,10 +869,11 @@ object Sources {
     *    rows: Delta's write-conflict semantics, refuse-and-recompute).
     *
     * Either way a claimed batch is never silently lost — the pre-r16
-    * contract documented exactly that loss. A commit is durable at
-    * marker creation: a publisher crashing between claim and pointer
-    * swap is folded in by the next publisher's rebase (the marker names
-    * its manifest; readers see it at that publisher's swap).
+    * contract documented exactly that loss. The claim IS the commit:
+    * the manifest is written complete before it, and readers and the
+    * next publisher's basis resolve the highest claim
+    * ([[resolveClaim]]), so a publisher crashing right after its claim
+    * has committed, and one crashing before it has not.
     *
     * `read` = the [[latestCommitted]] state the caller read on entry:
     * the first attempt claims its successor without reading it again
@@ -942,14 +886,13 @@ object Sources {
     * segment name). `mkEntries` re-derives the new reference list from
     * any base — it runs once per attempt; the manifest records the
     * schema of each dir group it keeps, `batch` (the new batch dir and
-    * its schema) among them. Returns the claimed manifest's name: the
-    * caller swaps the pointer onto it. */
+    * its schema) among them. */
   private def claimMergeManifest(fs: org.apache.hadoop.fs.FileSystem,
       uri: java.net.URI, conf: org.apache.hadoop.conf.Configuration,
       root: org.apache.hadoop.fs.Path, tableDir: String,
       read: (Long, Manifest), basisEntries: Seq[String], touchedSegs: Set[String],
       rebaseOnOverlap: Boolean, uid: String, batch: (String, StructType))(
-      mkEntries: Seq[String] => Seq[String]): String = {
+      mkEntries: Seq[String] => Seq[String]): Unit = {
     // conflicts are ALWAYS judged against the caller's read basis (the
     // reference list its content derives from), never a rebased view —
     // a commit landing between the basis read and the first claim is
@@ -965,8 +908,8 @@ object Sources {
             "re-derive the publish (stale-snapshot write refused, not lost)")
     }
     var attempts = 0
-    var claimed = Option.empty[String]
-    while (claimed.isEmpty) {
+    var claimed = false
+    while (!claimed) {
       attempts += 1
       if (attempts > 20) throw new IllegalStateException(
         s"merge commit on $tableDir lost ${attempts - 1} consecutive claim " +
@@ -974,34 +917,21 @@ object Sources {
       // DENSE claim numbers — the load-bearing detail. The claim must
       // be EXACTLY lastCommitted + 1: winning it PROVES no rival
       // committed between this latestCommitted read and the claim (any
-      // rival would have had to take the same number first). Numbering
-      // past anything by a listing max — the first r16 cut, and
-      // briefly an r17 corpse-skipping variant — leaves a gap a rival
-      // can commit into without ever contesting our claim: its fresh
-      // VALID marker lands between our latestCommitted read and the
-      // listing, we claim past it uncontested, and the later
-      // forward-guarded pointer swap silently drops whichever publish
-      // holds the smaller number (OccMergeSpec's same-partition race
-      // caught exactly this as "succeeded but silently lost").
-      //
-      // A crashed claimer's content-less marker at next would instead
-      // wedge this loop forever (its number is owned by a corpse). r17
-      // claims are content-ATOMIC (createExclusive links the full
-      // content into place), so an existing marker with invalid
-      // content can never be a rival mid-write — it is provably dead,
-      // and the fix that preserves density is to RECLAIM the corpse
-      // and contest its number, not to number past it.
+      // rival would have had to take the same number first; see
+      // claimNext). Numbering past anything by a listing max — the
+      // first r16 cut — leaves a gap a rival can commit into without
+      // ever contesting our claim, and whichever publish holds the
+      // smaller number is silently not the state (OccMergeSpec's
+      // same-partition race caught exactly this as "succeeded but
+      // silently lost").
       val (cNum, committed) = if (attempts == 1) read else latestCommitted(fs, root)
       refuseIfConflicting(committed.entries)
       val next = cNum + 1
-      val markerPath = new org.apache.hadoop.fs.Path(root, f"$CommitPrefix$next%012d")
-      if (readControl(fs, markerPath).exists(!_.startsWith("manifest-")))
-        reclaimCorpseMarker(fs, uri, root, markerPath, next)
       val mfile = f"manifest-$next%012d-$uid"
       writeRaw(uri, conf, new org.apache.hadoop.fs.Path(root, mfile),
         Manifest(mfile, committed.schemas + batch, mkEntries(committed.entries)).text)
-      if (createExclusive(fs, uri, markerPath, mfile)) claimed = Some(mfile)
-      else {
+      claimed = claimNext(fs, uri, root, cNum, mfile)((n, m) => requireManifestClaim(root, n, m): Unit)
+      if (!claimed) {
         // the lost attempt's manifest is claimed by nothing and
         // referenced by nothing — reclaim it now rather than leaking one
         // file per lost race
@@ -1010,7 +940,6 @@ object Sources {
           s"publisher; rebasing (attempt $attempts)")
       }
     }
-    claimed.get
   }
 
   /** A merge-table write as [[commitMergeBatch]] stages it. `write`
@@ -1035,8 +964,8 @@ object Sources {
     * dir, run the write, and claim the next manifest
     * ([[claimMergeManifest]]), which records the batch dir's schema as
     * the dir reads it: the frame's columns with the partition column,
-    * typed as written, last. Then the pointer swaps and the prune runs.
-    * A write or claim that throws (a failed write, a stale-snapshot
+    * typed as written, last: the claim is the commit. Then the prune
+    * runs. A write or claim that throws (a failed write, a stale-snapshot
     * refusal, claim-retry exhaustion, an unreadable basis) reclaims the
     * batch dir, which no committed manifest references: the prune only
     * reclaims dirs of deleted manifests. */
@@ -1065,7 +994,7 @@ object Sources {
       val dir = new org.apache.hadoop.fs.Path(root, bdir)
       val schema = org.apache.spark.sql.graftbridge.Bridge.nullable(StructType(
         b.frame.filterNot(_.name == partitionCol) :+ b.frame(partitionCol)))
-      val (written, claimed) =
+      val written =
         try {
           val written = b.write(s"$tableDir/$bdir").getOrElse(
             try fs.listStatus(dir).toSeq.collect {
@@ -1073,23 +1002,23 @@ object Sources {
                 st.getPath.getName
             } catch { case _: java.io.FileNotFoundException => Seq.empty })
           val replaced = b.replaces(written)
-          (written, claimMergeManifest(fs, uri, conf, root, tableDir, read, basisEntries,
+          claimMergeManifest(fs, uri, conf, root, tableDir, read, basisEntries,
               replaced ++ written, b.appendOnly, uid, bdir -> schema) { es =>
             es.filterNot(e => replaced(segmentOf(e))) ++ written.map(s => s"$bdir/$s")
-          })
+          }
+          written
         } catch { case t: Throwable =>
           try deleteQuiet(fs, dir, recursive = true)
           catch { case s: Throwable => t.addSuppressed(s) }
           throw t
         }
-      swapPointerForward(fs, uri, conf, root, claimed, s"${numberOf(claimed, "manifest-")}-$uid-1")
       pruneMergePartitioned(fs, root)
       b.result(written)
     }
   }
 
   /** Read the live state of a [[publishMergePartitioned]] table:
-    * resolve the manifest pointer once, then scan exactly the dirs it
+    * resolve the highest claim once, then scan exactly the dirs its manifest
     * lists (one scan per batch dir under the schema the manifest
     * records for it, so the partition column comes back as written and
     * Catalyst partition pruning still prunes reader-side filters to the
@@ -1113,7 +1042,7 @@ object Sources {
     * dir a scan of that partition opens — and the signal the
     * index-maintenance trigger compacts on
     * ([[graft.operators.IndexMaintenance]]). Listing-only: resolves
-    * the manifest pointer, no Spark job. */
+    * the highest claim, no Spark job. */
   def mergeGenerations(spark: SparkSession, tableDir: String,
       partitionCol: String): Map[String, Int] = {
     val fs = fsOf(spark, tableDir)
@@ -1140,7 +1069,7 @@ object Sources {
   }
 
   /** Retained manifest versions of a [[publishMergePartitioned]]
-    * table, ascending — the live-pointer number and the two-publish
+    * table, ascending — the highest claim's number and the two-publish
     * slack below it (plus any pending/unpruned rivals). */
   def mergeVersions(spark: SparkSession, tableDir: String): Seq[Long] = {
     val fs = fsOf(spark, tableDir)
@@ -1259,7 +1188,8 @@ object Sources {
     * the changed rows' current state = new-state rows with NO old-state
     * row that matches on the natural key AND on every compared column
     * under [[graft.operators.ChangeDetector]]'s normalization (""/NaN
-    * → null, null-safe equality, system fields ignored). Equivalent to
+    * → null, null-safe equality, system fields ignored, maps compared
+    * by their sorted entries: [[canonicalMaps]]). Equivalent to
     * the classify-then-rejoin formulation (full-outer diff → changed
     * keys → re-scan changed dirs → semi-join) the consumer used before
     * — `new` rows have no key match, `updated` rows have a key match
@@ -1285,7 +1215,7 @@ object Sources {
       df.schema(name).dataType match {
         case StringType => when(c === "", lit(null)).otherwise(c)
         case DoubleType | FloatType => when(isnan(c), lit(null)).otherwise(c)
-        case _ => c
+        case dt => canonicalMaps(c, dt)
       }
     }
     val keyEq = naturalKey.map(k => newState(k) === oldState(k))
@@ -1295,6 +1225,33 @@ object Sources {
       .foldLeft(keyEq)(_ && _)
     newState.join(oldState, cond, "left_anti")
       .filter(naturalKey.map(col(_).isNotNull).reduce(_ && _))
+  }
+
+  /** `c` of type `dt` with every map in it, at any depth, replaced by its
+    * entries sorted (keys are unique, so by key): a form `<=>` compares,
+    * which Spark refuses for a map, and under which two maps holding the
+    * same entries in another order are equal. Other values are left as
+    * they are. */
+  private def canonicalMaps(c: org.apache.spark.sql.Column,
+      dt: DataType): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions.{array_sort, lit, map_entries, struct,
+      transform, transform_values, when}
+    import org.apache.spark.sql.types.{ArrayType, MapType}
+    def hasMap(t: DataType): Boolean = t match {
+      case _: MapType => true
+      case a: ArrayType => hasMap(a.elementType)
+      case st: StructType => st.fields.exists(f => hasMap(f.dataType))
+      case _ => false
+    }
+    dt match {
+      case _ if !hasMap(dt) => c
+      case m: MapType =>
+        array_sort(map_entries(transform_values(c, (_, v) => canonicalMaps(v, m.valueType))))
+      case a: ArrayType => transform(c, canonicalMaps(_, a.elementType))
+      case st: StructType => when(c.isNull, lit(null)).otherwise(struct(st.fields.toSeq.map(f =>
+        canonicalMaps(c.getField(f.name), f.dataType).as(f.name)): _*))
+      case _ => c
+    }
   }
 
   /** The retracted keys of the fused delta: the old state's key tuples
@@ -1445,12 +1402,12 @@ object Sources {
     *     re-read, never a silent partial delta.
     *
     * The checkpoint (`<checkpointDir>/_version`) is written AFTER `f`
-    * returns, with the same atomic rename-over as the table pointer: a
+    * returns, with an atomic rename-over ([[atomicReplace]]): a
     * crash inside `f` re-delivers the delta next run (at-least-once —
     * `f` must be idempotent, which every MERGE-shaped sink here is).
     * Publishes landing between the version resolution and the read
     * are delivered again next cycle for the same reason. The table
-    * must be manifest-published; `live` is its pointer version. */
+    * must be manifest-published; `live` is its committed version. */
   def processMergeChanges[T](spark: SparkSession, tableDir: String,
       checkpointDir: String, partitionCol: String = "")
       (f: (DataFrame, Long) => T): Option[T] =
@@ -1578,18 +1535,18 @@ object Sources {
       fullResync: Boolean)
 
   /** The shared checkpoint loop under both incremental consumers:
-    * resolve the live pointer, read the durable checkpoint, build the
-    * delta for the gap, run `f`, then advance the checkpoint with the
-    * same atomic rename-over as the table pointer (crash inside `f`
-    * ⇒ redelivery next run; `f` must be idempotent). */
+    * resolve the committed version (the highest claim), read the
+    * durable checkpoint, build the delta for the gap, run `f`, then
+    * advance the checkpoint with an atomic rename-over (crash inside
+    * `f` ⇒ redelivery next run; `f` must be idempotent). */
   private def processCheckpointed[D, T](spark: SparkSession, tableDir: String,
       checkpointDir: String, f: (D, Long) => T)
       (deltaOf: Option[Long] => D): Option[T] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val tFs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(tableDir), conf)
-    val live = currentPointer(tFs, new org.apache.hadoop.fs.Path(tableDir))
-      .map(numberOf(_, "manifest-"))
-      .getOrElse(return None) // nothing published yet
+    val claims = claimNumbers(tFs, new org.apache.hadoop.fs.Path(tableDir))
+    if (claims.isEmpty) return None // nothing published yet
+    val live = claims.max
     val ckUri = new java.net.URI(checkpointDir)
     val ckFs = org.apache.hadoop.fs.FileSystem.get(ckUri, conf)
     val ckRoot = new org.apache.hadoop.fs.Path(checkpointDir)
@@ -1939,7 +1896,7 @@ object Sources {
     * latest committed state into one fresh batch dir (one file per
     * partition via a partition-column repartition) and commit a
     * manifest in which that dir replaces every compacted entry; the
-    * standard pointer-anchored retention then reclaims the old batch
+    * standard claim-anchored retention then reclaims the old batch
     * dirs after two more publishes. Content is bit-identical —
     * compaction exists because per-batch MERGE publishes accrete a
     * batch dir per publish, and at 100 TB the manifest's dir fan-out
@@ -2230,7 +2187,7 @@ object Sources {
     * files). The age threshold keeps live in-flight publishes safe: a
     * publisher stalled past it degrades to the documented lost
     * update. A referenced-dir set read from a vanishing manifest is
-    * safe here: only a prune deletes manifests, and its pointer
+    * safe here: only a prune deletes manifests, and its claim
     * arithmetic already adjudicated that manifest's dirs — and any
     * dir young enough to be mid-publish is spared by mtime anyway. A
     * manifest in a format this engine does not read refuses the vacuum
@@ -2285,44 +2242,35 @@ object Sources {
     * that states no format version or one this engine does not read. */
   private def parseManifest(root: org.apache.hadoop.fs.Path, name: String,
       content: String): Manifest = {
-    val lines = content.split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
-    def refuse(what: String) = throw new IllegalStateException(
-      s"merge manifest $root/$name $what; this engine reads format version " +
-        s"$ManifestFormat only — refusing a layout it does not know")
-    lines.headOption.filter(_.startsWith("version\t")).map(_.stripPrefix("version\t")) match {
-      case Some(v) if v == ManifestFormat.toString =>
-      case Some(v) => refuse(s"states format version $v")
-      case None => refuse("states no format version")
-    }
-    val (schemas, entries) = lines.tail.partition(_.startsWith("schema\t"))
+    val (schemas, entries) = afterVersionLine(s"merge manifest $root/$name", ManifestFormat,
+      content).partition(_.startsWith("schema\t"))
     Manifest(name, schemas.map { line =>
       val Array(_, group, json) = line.split("\t", 3)
       group -> org.apache.spark.sql.types.DataType.fromJson(json).asInstanceOf[StructType]
     }.toMap, entries)
   }
 
-  /** The live manifest, resolving `_current`; None when the table has
-    * no manifest pointer. A pointer naming a manifest that no longer
-    * exists means the reader lagged past the two-publish retention
-    * window: re-resolve (the pointer has moved on) and fail LOUDLY if
-    * the table stays unreadable — never fall back to a raw directory
-    * scan of a half-pruned layout. */
-  private def liveManifest(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Option[Manifest] = {
-    val ptr = new org.apache.hadoop.fs.Path(root, "_current")
-    var attempt = 0
-    var live = Option.empty[Manifest]
-    while (live.isEmpty) {
-      val m = readControl(fs, ptr).filter(_.startsWith("manifest-")).getOrElse(return None)
-      live = readManifestOpt(fs, root, m)
-      attempt += 1
-      if (live.isEmpty && attempt >= 3)
-        throw new IllegalStateException(
-          s"manifest $m named by $root/_current no longer exists — " +
-            "reader lagged beyond the two-publish retention window")
+  /** The non-empty trimmed lines of a versioned control file (a merge
+    * manifest, a snapshot claim) after its first, format-version line;
+    * refuses, naming the file as `what`, content that states no format
+    * version or one other than `format`. */
+  private def afterVersionLine(what: String, format: Int, content: String): Seq[String] = {
+    val lines = content.split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
+    def refuse(why: String) = throw new IllegalStateException(
+      s"$what $why; this engine reads format version $format only — refusing a layout " +
+        "it does not know")
+    lines.headOption.filter(_.startsWith("version\t")).map(_.stripPrefix("version\t")) match {
+      case Some(v) if v == format.toString => lines.tail
+      case Some(v) => refuse(s"states format version $v")
+      case None => refuse("states no format version")
     }
-    live
   }
+
+  /** The live manifest ([[committedManifest]]); None when the table
+    * holds no claim. */
+  private def liveManifest(fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path): Option[Manifest] =
+    committedManifest(fs, root).map(_._2)
 
   /** The root-level `col=val` dirs of a plain partitioned layout (of
     * `partitionCol` when it is given). */
@@ -2495,26 +2443,16 @@ object Sources {
       try out.write(content.getBytes("UTF-8")) finally out.close()
     }
 
-  /** Atomic `_current` pointer swap (temp write + atomic
-    * rename-over).
+  /** Temp-write + atomic rename-over of a small control file (a
+    * change-feed checkpoint, an LSM floor).
     *
-    * The rename must be ATOMIC-OVERWRITE: concurrent publishers race
-    * their swaps, and readers resolve the pointer unlocked. On HDFS,
-    * `FileContext.rename(OVERWRITE)` is a single NameNode op. On the
-    * local FS Hadoop EMULATES overwrite as delete-then-rename, which
-    * both leaves a no-pointer window for readers and throws
-    * FileAlreadyExistsException when two publishers interleave
-    * (delete A, delete B, rename A, rename B → dest exists) — so
-    * file:// swaps go through POSIX rename(2) via NIO ATOMIC_MOVE,
-    * which replaces in one syscall. The N×M publisher/reader stress
-    * spec is what flushed this out. */
-  private def swapPointer(fs: org.apache.hadoop.fs.FileSystem,
-      uri: java.net.URI, conf: org.apache.hadoop.conf.Configuration,
-      root: org.apache.hadoop.fs.Path, content: String, stamp: String): Unit =
-    atomicReplace(fs, uri, conf, root, "_current", content, stamp)
-
-  /** Temp-write + atomic rename-over of a small control file (the
-    * [[swapPointer]] mechanics, generalized to any name). */
+    * The rename must be ATOMIC-OVERWRITE: readers read the file
+    * unlocked. On HDFS, `FileContext.rename(OVERWRITE)` is a single
+    * NameNode op. On the local FS Hadoop EMULATES overwrite as
+    * delete-then-rename, which leaves a window with no file and throws
+    * FileAlreadyExistsException when two writers interleave — so
+    * file:// goes through POSIX rename(2) via NIO ATOMIC_MOVE, which
+    * replaces in one syscall. */
   private[graft] def atomicReplace(fs: org.apache.hadoop.fs.FileSystem,
       uri: java.net.URI, conf: org.apache.hadoop.conf.Configuration,
       root: org.apache.hadoop.fs.Path, name: String, content: String,
@@ -2549,394 +2487,190 @@ object Sources {
     n
   }
 
-  /** The committed version number of a snapshot table (or snapshot
-    * GROUP) right now: the highest number any publisher has claimed or
-    * swapped — claim markers (valid, burned or crashed — a dead claim
-    * still burned its number) and the live pointer. Every version dir
-    * is claimed before it is written, and the prune removes dirs and
-    * markers below live−2 together, so the dirs add no number the
-    * markers and the pointer lack. 0 = never published.
-    *
-    * NOT sufficient as a transactional read basis on its own: a rival
-    * that has CLAIMED but not yet SWAPPED counts here while the
-    * content a reader resolves (the pointer) is still the prior
-    * version — a basis carrying only this number would pass the
-    * commit check after the rival's swap and silently replace its
-    * fold (ADVICE r17). Use [[snapshotReadBasis]], which also pins the
-    * pointer version the content reads actually resolved. */
-  def snapshotCommittedVersion(spark: SparkSession, tableRoot: String): Long = {
-    val fs = fsOf(spark, tableRoot)
-    snapshotCommittedNum(fs, new org.apache.hadoop.fs.Path(tableRoot))
+  /** The format version a snapshot claim states on its first line
+    * (README, "Storage format"). A claim stating another version, or
+    * none, is refused by every snapshot read, publish, time-travel read
+    * and prune. */
+  private val SnapshotClaimFormat = 1
+
+  /** The content of the claim that commits snapshot version dir `vdir`:
+    * the format-version line, then the dir's name. */
+  private def snapshotClaimText(vdir: String): String =
+    s"version\t$SnapshotClaimFormat\n$vdir"
+
+  /** The version dir snapshot claim `n` (content `content`) names.
+    * Refuses, naming the claim, one that states no format version, one
+    * this engine does not read, or one that names no version dir. */
+  private def claimedDir(root: org.apache.hadoop.fs.Path, n: Long, content: String): String = {
+    val what = s"snapshot claim $root/${claimPath(root, n).getName}"
+    afterVersionLine(what, SnapshotClaimFormat, content) match {
+      case Seq(v) if v.startsWith("v-") => v
+      case _ => throw new IllegalStateException(s"$what names no version dir — refusing")
+    }
   }
 
-  /** The transactional READ BASIS of a snapshot table (or GROUP): take
-    * it BEFORE reading the content a publish derives from, pass it
-    * back as `basis` to [[publishSnapshot]] / [[publishSnapshotGroup]].
-    * Two numbers, because claims and visibility move separately:
-    *
-    *  - `committed` ([[snapshotCommittedVersion]]): the highest number
-    *    any publisher has CLAIMED. A rival claiming after this moment
-    *    makes the publish refuse (it may commit content this publish
-    *    never saw).
-    *  - `pointer`: the version the `_current` pointer RESOLVES right
-    *    now — the version [[readSnapshot]] / [[readSnapshotGroupAll]]
-    *    actually serve. A rival that claimed BEFORE this basis (so
-    *    `committed` already counts it) but swaps its content live
-    *    AFTER the content read leaves `committed` unchanged — only the
-    *    pointer records that the content this publish derived from is
-    *    no longer the live state (the claim-to-swap window, ADVICE
-    *    r17: the whole data write sits between a rival's claim and its
-    *    swap).
-    *
-    * A publish refuses unless BOTH still match at claim time. */
-  def snapshotReadBasis(spark: SparkSession, tableRoot: String): SnapshotBasis = {
-    val fs = fsOf(spark, tableRoot)
+  /** The committed version of a snapshot table (or GROUP): the number
+    * of its highest claim and the version dir it names
+    * ([[resolveClaim]]); None when the root holds no claim. */
+  private def committedSnapshot(fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path): Option[(Long, String)] =
+    resolveClaim(fs, root)((n, content) => Some(claimedDir(root, n, content)))
+
+  /** The transactional READ BASIS of a snapshot table (or GROUP): its
+    * committed version, the number of its highest claim (0 = never
+    * published). Take it BEFORE reading the content a publish derives
+    * from, and pass it back as `basis` to [[publishSnapshot]] /
+    * [[publishSnapshotGroup]]: the publish claims exactly the number
+    * after it, so a rival that commits after this moment — however
+    * early its own write began — has taken that number first, and the
+    * publish refuses. One number is the whole basis, because a commit
+    * is visible exactly when its claim exists: the version a reader
+    * resolves is the one this number counts. */
+  def snapshotReadBasis(spark: SparkSession, tableRoot: String): Long =
+    claimNumbers(fsOf(spark, tableRoot), new org.apache.hadoop.fs.Path(tableRoot))
+      .maxOption.getOrElse(0L)
+
+  /** The one commit path of snapshot and snapshot-group publishes
+    * (claim-after-write, as merge commits are): take the basis `c` as one
+    * committed number (`basis`, or the committed version now), let
+    * `write` write the whole version dir `v-<c+1>-<uid>` whose path it
+    * is given, then claim `commit-<c+1>` naming it ([[claimNext]]). The
+    * claim is the commit: readers resolve the highest claim, so they see
+    * the old version or the new one, never a partial dir. Exactly one
+    * publisher owns each number, so publishes SERIALIZE — a raced rival
+    * REFUSES loudly (`ConcurrentModificationException`). Refuse-and-
+    * redrive, never rebase: snapshot content derives from the prior
+    * snapshot (the registry fold, the stats delta, a compaction), so
+    * committing a loser on top of a rival's commit would publish state
+    * derived from a stale snapshot — the caller must re-read and
+    * re-derive (the reference serializes the same way through its
+    * per-load Postgres txn, table-loader/services/loader.py:102). A
+    * lost claim, a write that throws, or a basis claim in an unknown
+    * format deletes the publish's own dir before the error propagates;
+    * a crash leaves an unclaimed dir, which blocks no publish and which
+    * the prune reclaims once another commit holds its number. Then the
+    * prune runs. */
+  private def commitSnapshot(spark: SparkSession, tableRoot: String, basis: Option[Long])(
+      write: String => Unit): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val uri = new java.net.URI(tableRoot)
+    val fs = org.apache.hadoop.fs.FileSystem.get(uri, conf)
     val root = new org.apache.hadoop.fs.Path(tableRoot)
-    SnapshotBasis(snapshotCommittedNum(fs, root), snapshotPointerNum(fs, root))
-  }
-
-  /** See [[snapshotReadBasis]]. */
-  final case class SnapshotBasis(committed: Long, pointer: Long)
-
-  /** Liveness grace for snapshot-publish claims (shared by the
-    * in-flight-rival refusal in [[claimSnapshotVersion]] and the
-    * crashed-publisher litter reclaim in [[pruneSnapshotVersions]]): a
-    * valid claim above the live pointer is IN-FLIGHT (its owner is
-    * between claim and swap — the data write) until its freshest
-    * evidence (marker or version-dir mtime) is this old, after which
-    * it is declared dead: its number may be passed, its litter
-    * reclaimed. MUST exceed the longest expected publish write (the
-    * same contract a table format's VACUUM retention has with job
-    * duration) — a publisher still writing past the grace is treated
-    * as crashed, and its late swap refuses loudly rather than landing
-    * ([[swapSnapshotOrRefuse]]). Default 30 min; operators of
-    * long-write deployments raise `graft.snapshot.graceMs`. */
-  private[sources] def snapshotGraceMs: Long =
-    sys.props.get("graft.snapshot.graceMs").map(_.toLong)
-      .getOrElse(30L * 60 * 1000)
-
-  private def snapshotPointerNum(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Long =
-    currentPointer(fs, root)
-      .filter(_.startsWith("v-")).map(numberOf(_, "v-")).getOrElse(0L)
-
-  private def snapshotCommittedNum(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Long = {
-    val ptrNum = currentPointer(fs, root)
-      .filter(_.startsWith("v-")).map(numberOf(_, "v-"))
-    (commitNumbers(fs, root) ++ ptrNum.toSeq :+ 0L).max
-  }
-
-  /** Claim the next snapshot version for this publisher (r17, the
-    * dense-claim OCC protocol [[claimMergeManifest]] built for merge
-    * tables, applied to whole-snapshot publishes): derive
-    * `next = committed + 1` and take `commit-<next>` with an atomic
-    * put-if-absent. Exactly one publisher owns each number, so
-    * publishes SERIALIZE — a raced rival REFUSES loudly
-    * (`ConcurrentModificationException`) instead of degrading to the
-    * pre-r17 whole lost update (last pointer swap silently replaced
-    * the loser's table). Refuse-and-redrive, never rebase: snapshot
-    * content derives from the prior snapshot (the registry fold, the
-    * stats delta, a compaction), so committing a loser on top of a
-    * rival's commit would publish state derived from a stale snapshot
-    * — the caller must re-read and re-derive (the reference serializes
-    * the same way through its per-load Postgres txn,
-    * table-loader/services/loader.py:102).
-    *
-    * Claim-BEFORE-write: the number is owned before the (expensive)
-    * data write starts, so a raced loser fails in milliseconds, and a
-    * crash between claim and write merely burns a number (the marker
-    * names a dir the pointer never swaps to; readers never resolve
-    * it). A burned number is passed once its claim ages past
-    * [[snapshotGraceMs]] — never a wedge.
-    *
-    * Three refusal rules (r18 — the first alone left the claim-to-swap
-    * window open, ADVICE r17):
-    *  1. `committed != basis.committed`: a rival CLAIMED since the
-    *     basis read — it may commit content this publish never saw.
-    *  2. `pointer != basis.pointer`: a rival that claimed BEFORE the
-    *     basis read (so rule 1 cannot see it) SWAPPED its content live
-    *     after this publish read the prior version — the content this
-    *     publish derived from is no longer the live state.
-    *  3. a VALID claim above the live pointer younger than
-    *     [[snapshotGraceMs]] exists: its owner is mid-write. Claiming
-    *     past it would let this publish (derived from the pre-rival
-    *     pointer) swap OVER the rival's fold when the rival lands
-    *     during this publish's own data write — the one interleaving
-    *     rules 1-2 cannot order, because both checks pass before
-    *     either swap exists. Applies with or without a basis. Once the
-    *     claim ages past the grace its owner is declared dead: the
-    *     number is passed, and the zombie's own late swap refuses
-    *     ([[swapSnapshotOrRefuse]]). */
-  private def claimSnapshotVersion(fs: org.apache.hadoop.fs.FileSystem,
-      uri: java.net.URI, root: org.apache.hadoop.fs.Path, tableRoot: String,
-      basis: Option[SnapshotBasis]): (Long, String, String) = {
-    if (!fs.exists(root)) fs.mkdirs(root): Unit
-    val committed = snapshotCommittedNum(fs, root)
-    val ptrNum = snapshotPointerNum(fs, root)
-    basis.foreach { b =>
-      if (committed != b.committed)
-        throw new java.util.ConcurrentModificationException(
-          s"snapshot publish on $tableRoot: table moved from version " +
-            s"${b.committed} (this publish's read basis) to $committed — a " +
-            "concurrent publisher committed after this content was derived; " +
-            "re-read and re-derive (stale-snapshot write refused, not lost)")
-      if (ptrNum != b.pointer)
-        throw new java.util.ConcurrentModificationException(
-          s"snapshot publish on $tableRoot: the live pointer moved from " +
-            s"version ${b.pointer} (the version this publish's content reads " +
-            s"resolved) to $ptrNum — a rival that had already claimed before " +
-            "the basis read swapped its content live afterwards (the " +
-            "claim-to-swap window); this publish derives from a version " +
-            "that is no longer live; re-read and re-derive")
-    }
-    val (inFlight, dead) = snapshotClaimsAbovePointer(fs, root, ptrNum)
-    inFlight.headOption.foreach { case (n, age) =>
-      throw new java.util.ConcurrentModificationException(
-        s"snapshot publish on $tableRoot: version $n is claimed by an " +
-          s"in-flight rival publisher (claim age ${age / 1000}s < grace " +
-          s"${snapshotGraceMs / 1000}s) that has not swapped yet; claiming " +
-          "past it would silently replace its fold when it lands — retry " +
-          "after its swap (then re-read and re-derive) or after it ages out")
-    }
-    // dead claims above the pointer (aged past the grace, or
-    // content-less): their numbers stay burned — the markers are tiny
-    // and the below-live retention collects them once the pointer
-    // passes (re-opening a number would hand it to a fresh claimer
-    // while a slower-than-grace zombie still holds an equal-numbered
-    // swap) — but their never-swapped version DIRS are reclaimed NOW,
-    // while they are still provably never-live (above the pointer):
-    // once the pointer numbers past them they would squat in the
-    // time-travel retention window as partial garbage
-    // (VERDICT r17 #3: crash-loop litter is bounded to one small
-    // marker per crash, reclaimed as live advances).
-    dead.foreach { vd =>
-      deleteQuiet(fs, new org.apache.hadoop.fs.Path(root, vd), recursive = true)
-    }
-    val next = committed + 1
-    val uid = java.util.UUID.randomUUID().toString.take(8)
-    val vdir = f"v-$next%012d-$uid"
-    if (!createExclusive(fs, uri,
-        new org.apache.hadoop.fs.Path(root, f"$CommitPrefix$next%012d"), vdir))
-      throw new java.util.ConcurrentModificationException(
-        s"snapshot publish on $tableRoot: version $next was claimed by a " +
-          "concurrent publisher between this publish's read and its claim; " +
-          "re-read and re-derive (stale-snapshot write refused, not lost)")
-    (next, uid, vdir)
-  }
-
-  /** Classify claims above the live pointer: IN-FLIGHT (valid content,
-    * liveness evidence younger than [[snapshotGraceMs]] — a publisher
-    * presumed mid-write between claim and swap) vs DEAD (aged past the
-    * grace, or content-less from a pre-content-atomic crash). Liveness
-    * evidence is the freshest of the marker mtime and its named
-    * version dir's mtime (a long data write keeps touching the dir).
-    * Returns (in-flight (version, ageMs) ascending, dead claims'
-    * named version-dir names). Normally both EMPTY — a swapped
-    * publish's marker sits at or below the pointer — so the content
-    * reads here cost nothing on the happy path. */
-  private def snapshotClaimsAbovePointer(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path,
-      ptrNum: Long): (Seq[(Long, Long)], Seq[String]) = {
-    val now = System.currentTimeMillis()
-    val grace = snapshotGraceMs
-    if (!fs.exists(root)) return (Seq.empty, Seq.empty)
-    val inFlight = Seq.newBuilder[(Long, Long)]
-    val dead = Seq.newBuilder[String]
-    fs.listStatus(root).toSeq.foreach { st =>
-      if (st.isFile && st.getPath.getName.startsWith(CommitPrefix) &&
-          numberOf(st.getPath.getName, CommitPrefix) > ptrNum) {
-        val content = readControlQuiet(fs, st.getPath)
-        if (content.startsWith("v-")) {
-          val vdirMt =
-            try fs.getFileStatus(new org.apache.hadoop.fs.Path(root, content))
-              .getModificationTime
-            catch { case _: java.io.FileNotFoundException => 0L }
-          val age = now - math.max(st.getModificationTime, vdirMt)
-          if (age < grace)
-            inFlight += ((numberOf(st.getPath.getName, CommitPrefix), age))
-          else dead += content
-        }
+    val c = basis.getOrElse(committedSnapshot(fs, root).fold(0L)(_._1))
+    val vdir = f"v-${c + 1}%012d-${java.util.UUID.randomUUID().toString.take(8)}"
+    val dir = new org.apache.hadoop.fs.Path(root, vdir)
+    def lost() = new java.util.ConcurrentModificationException(
+      s"snapshot publish on $tableRoot: version ${c + 1} was committed by a concurrent " +
+        s"publisher after this publish's basis (version $c) was read; re-read and " +
+        "re-derive (stale-snapshot write refused, not lost)")
+    val won =
+      try {
+        write(s"$tableRoot/$vdir")
+        claimNext(fs, uri, root, c, snapshotClaimText(vdir))((n, text) =>
+          claimedDir(root, n, text): Unit)
+      } catch { case t: Throwable =>
+        try deleteQuiet(fs, dir, recursive = true)
+        catch { case s: Throwable => t.addSuppressed(s) }
+        // a rival that committed the number first reclaims this dir as
+        // soon as its prune runs, which can fail the write mid-way: the
+        // publish lost its race either way
+        val raced = scala.util.Try(fs.exists(claimPath(root, c + 1))).getOrElse(false)
+        throw (if (raced) { val e = lost(); e.addSuppressed(t); e } else t)
       }
+    if (!won) {
+      deleteQuiet(fs, dir, recursive = true)
+      throw lost()
     }
-    (inFlight.result().sortBy(_._1), dead.result())
+    pruneSnapshotVersions(fs, root)
   }
 
-  /** The snapshot publish's pointer swap, refused loudly when the
-    * publish has been OVERTAKEN (r18 rule 4, the zombie-writer guard):
-    * a publisher whose data write outlived [[snapshotGraceMs]] was
-    * declared dead — rivals may have claimed past it
-    * ([[claimSnapshotVersion]] rule 3's age-out) or the litter reclaim
-    * may have re-opened its number. Landing its swap anyway would
-    * silently replace the rival's fold (higher number still unswapped)
-    * or point readers at a reclaimed dir (equal number, different
-    * uid). Refusing instead keeps the invariant that NO snapshot
-    * publish is ever silently lost: the zombie gets the same
-    * `ConcurrentModificationException` redrive contract as a raced
-    * claim, and its data dir is reclaimed inline. Within the grace the
-    * check never fires — rule 3 kept rivals from claiming past a live
-    * writer. */
-  private[sources] def swapSnapshotOrRefuse(fs: org.apache.hadoop.fs.FileSystem,
-      uri: java.net.URI, conf: org.apache.hadoop.conf.Configuration,
-      root: org.apache.hadoop.fs.Path, tableRoot: String, vdir: String,
-      myNum: Long, uid: String): Unit = {
-    val committed = snapshotCommittedNum(fs, root)
-    val ptr = currentPointer(fs, root)
-    val ptrNum = ptr.filter(_.startsWith("v-")).map(numberOf(_, "v-")).getOrElse(0L)
-    if (committed > myNum || ptrNum > myNum ||
-        (ptrNum == myNum && ptr.exists(_ != vdir))) {
-      deleteQuiet(fs, new org.apache.hadoop.fs.Path(root, vdir), recursive = true)
-      throw new java.util.ConcurrentModificationException(
-        s"snapshot publish on $tableRoot: version $myNum was overtaken " +
-          s"before its swap (committed=$committed, pointer=$ptrNum) — this " +
-          s"publisher's write outlived the ${snapshotGraceMs / 1000}s " +
-          "liveness grace and was declared dead (raise " +
-          "graft.snapshot.graceMs above the longest publish write); the " +
-          "swap is refused and the data dir reclaimed — re-read and " +
-          "re-derive (never a silent replace)")
+  /** Claim-anchored retention for snapshot tables (and GROUPs): version
+    * dirs numbered below top−2 go with their claims (claims in ascending
+    * order, see [[claimNext]]) — a reader that resolved an older claim
+    * may still be scanning, and two committed publishes of slack is the
+    * retention window, the same bounded-retention trade a table format's
+    * VACUUM makes. Counting the listing instead would let concurrent
+    * publishers' written-but-unclaimed versions consume the slack. A
+    * version dir `v-<k>-*` whose `commit-<k>` names another dir can never
+    * be committed (a publish that loses its claim refuses): it goes at
+    * once, with no age test, so a crashed publisher's dir is reclaimed by
+    * the prune of the publish that takes its number. Dirs above the
+    * highest claim may be in-flight writes and are never touched. The
+    * pass deletes nothing, and logs why, when a claim it reads is in a
+    * format this engine does not read; it never throws (it runs after a
+    * publish already committed). Aged claim temps go alongside. */
+  private[sources] def pruneSnapshotVersions(fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path): Unit = {
+    val listed = fs.listStatus(root).toSeq
+    def named(prefix: String, dir: Boolean) = listed.collect {
+      case st if st.isDirectory == dir && st.getPath.getName.startsWith(prefix) =>
+        numberOf(st.getPath.getName, prefix) -> st.getPath.getName
     }
-    swapPointerForward(fs, uri, conf, root, vdir, s"$myNum-$uid", prefix = "v-")
-  }
-
-  /** Pointer-anchored retention for snapshot tables: versions (and
-    * their claim markers) numbered below live−2 go — a reader that
-    * resolved the pointer may still be scanning, two SWAPPED publish
-    * cycles of slack is the retention window, the same
-    * bounded-retention trade a table format's VACUUM makes. Counting
-    * the listing instead would let concurrent publishers'
-    * written-but-unswapped versions consume the slack and delete the
-    * version the pointer still names. An unclaimed/unswapped rival
-    * below the slack was refused loudly (r17) or is legacy litter no
-    * reader ever resolved — deletable. deleteQuiet: a concurrent
-    * pruner may have won the race. Aged claim temps (crashed
-    * claimers) are reclaimed alongside.
-    *
-    * ABOVE live (r18, VERDICT r17 #3): a crashed publisher strands one
-    * claim marker and possibly one never-swapped version dir past the
-    * pointer, which retention below live never reaches. The DIR — the
-    * expensive half — is reclaimed by [[claimSnapshotVersion]] the
-    * moment the claim is classified dead (aged past
-    * [[snapshotGraceMs]] or content-less), while it is still provably
-    * never-live; the marker stays as a burned number (tiny; re-opening
-    * it would hand the number to a fresh claimer while a
-    * slower-than-grace zombie still holds an equal-numbered swap) and
-    * is collected by the below-live rule once the pointer numbers
-    * past it. Here, as belt-and-braces, aged version dirs above live
-    * that NO claim references (a refused swap whose inline reclaim
-    * crashed, manual litter) are swept too; anything younger than the
-    * grace may be an in-flight write and is never touched. */
-  private def pruneSnapshotVersions(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, fallbackLive: Long): Unit = {
-    val liveNum = currentPointer(fs, root)
-      .filter(_.startsWith("v-")).map(numberOf(_, "v-")).getOrElse(fallbackLive)
-    listVersions(fs, root).collect { case (v, p) if v < liveNum - 2 => p }
-      .foreach(p => deleteQuiet(fs, p, recursive = true))
+    val claims = named(CommitPrefix, dir = false).map(_._1)
+    if (claims.isEmpty) return
+    val top = claims.max
+    val dirs = named("v-", dir = true)
+    val contested = dirs.groupBy(_._1).collect {
+      case (n, ds) if ds.size > 1 && n >= top - 2 && n <= top => n
+    }.toSeq
+    val committed =
+      try (top +: contested).distinct
+        .flatMap(n => readControl(fs, claimPath(root, n)).map(claimedDir(root, n, _))).toSet
+      catch { case e @ (_: IllegalStateException | _: java.io.IOException) =>
+        log.warn(s"snapshot prune on $root deferred: ${e.getMessage}")
+        return
+      }
+    dirs.foreach { case (n, name) =>
+      if (n < top - 2 || (contested.contains(n) && !committed(name)))
+        deleteQuiet(fs, new org.apache.hadoop.fs.Path(root, name), recursive = true)
+    }
+    claims.filter(_ < top - 2).sorted.foreach(n =>
+      deleteQuiet(fs, claimPath(root, n), recursive = false))
     val now = System.currentTimeMillis()
-    val grace = snapshotGraceMs
-    val sts = fs.listStatus(root).toSeq
-    val claimed = scala.collection.mutable.Set.empty[String]
-    sts.foreach { st =>
-      val name = st.getPath.getName
-      if (st.isFile && name.startsWith(CommitPrefix) &&
-          numberOf(name, CommitPrefix) < liveNum - 2)
+    listed.foreach { st =>
+      if (st.isFile && st.getPath.getName.startsWith(ClaimTmpPrefix) &&
+          now - st.getModificationTime >= ClaimTmpGraceMs)
         deleteQuiet(fs, st.getPath, recursive = false)
-      else if (st.isFile && name.startsWith(CommitPrefix) &&
-          numberOf(name, CommitPrefix) > liveNum)
-        claimed += readControlQuiet(fs, st.getPath)
-      else if (st.isFile && name.startsWith(ClaimTmpPrefix) &&
-          now - st.getModificationTime >= 10L * 60 * 1000)
-        deleteQuiet(fs, st.getPath, recursive = false)
-    }
-    sts.foreach { st =>
-      val name = st.getPath.getName
-      if (st.isDirectory && name.startsWith("v-") &&
-          numberOf(name, "v-") > liveNum && !claimed.contains(name) &&
-          now - st.getModificationTime >= grace)
-        deleteQuiet(fs, st.getPath, recursive = true)
     }
   }
 
   /** Snapshot-table publish, ATOMIC for readers and SERIALIZED across
-    * publishers: versioned-directory layout with a pointer-file swap,
-    * committed through the dense-claim OCC protocol — the
-    * plain-parquet stand-in for the reference's Postgres transaction
-    * boundary (`table-loader/services/loader.py:213-234`).
+    * publishers: versioned-directory layout committed by one claim —
+    * the plain-parquet stand-in for the reference's Postgres
+    * transaction boundary (`table-loader/services/loader.py:213-234`).
     *
-    * Layout: `tableRoot/_current` (pointer, contains the live version
-    * dir name) + `tableRoot/v-<n>-<uid>/…parquet` + one `commit-<n>`
-    * claim marker per committed version. A publish claims its version
-    * number ([[claimSnapshotVersion]] — a raced rival refuses loudly
-    * with `ConcurrentModificationException`, never a silent lost
-    * update), writes a NEW version dir, then swaps the pointer with
-    * `FileContext.rename(OVERWRITE)` (atomic on HDFS and POSIX local
-    * FS). Readers resolve the pointer first ([[readSnapshot]]), so
-    * they observe either the old or the new version — never a missing
-    * or partially-written table. Live data is never deleted in-line:
-    * only versions below the two-publish retention window are pruned,
-    * so a reader mid-scan of a prior version keeps its files.
+    * Layout: `tableRoot/v-<n>-<uid>/…parquet` plus one `commit-<n>`
+    * claim per committed version, naming its dir under a format-version
+    * line (README, "Storage format"). The publish writes a NEW version
+    * dir in full, then claims the number after its basis
+    * ([[commitSnapshot]]): a raced rival refuses loudly with
+    * `ConcurrentModificationException`, never a silent lost update.
+    * Readers resolve the highest claim ([[readSnapshot]]), so they
+    * observe either the old or the new version — never a missing or
+    * partially-written table. Live data is never deleted in-line: only
+    * versions below the two-publish retention window are pruned, so a
+    * reader mid-scan of a prior version keeps its files.
     *
     * `basis`: the [[snapshotReadBasis]] taken BEFORE reading the
-    * content this publish derives from — with it, a rival commit OR
-    * swap between that read and this publish refuses instead of being
+    * content this publish derives from — with it, a rival commit
+    * between that read and this publish refuses instead of being
     * silently replaced (the transactional read-derive-publish
     * contract; [[graft.operators.IncrementalIdentity]] pins its
-    * registry fold with exactly this). Without it the basis defaults
-    * to publish-entry time, which still serializes raced publishers
-    * but cannot see a rival that landed before entry. */
-  def publishSnapshot(df: DataFrame, tableRoot: String,
-      basis: Option[SnapshotBasis] = None): Unit = {
-    val conf = df.sparkSession.sparkContext.hadoopConfiguration
-    val uri = new java.net.URI(tableRoot)
-    val fs = org.apache.hadoop.fs.FileSystem.get(uri, conf)
-    val root = new org.apache.hadoop.fs.Path(tableRoot)
-    val (next, uid, vdir) =
-      claimSnapshotVersion(fs, uri, root, tableRoot, basis)
-    releaseClaimOnFailure(fs, uri, conf, root, next, uid, vdir) {
-      writeSnapshotMember(df, s"$tableRoot/$vdir")
-    }
-    // atomic pointer swap: write a temp pointer raw (java.nio on
-    // file://, no checksum sidecar — see writeRaw), rename it OVER the
-    // live one. Forward-only, and refused outright when this publish
-    // was overtaken while writing (swapSnapshotOrRefuse).
-    swapSnapshotOrRefuse(fs, uri, conf, root, tableRoot, vdir, next, uid)
-    pruneSnapshotVersions(fs, root, next)
-  }
+    * registry fold with exactly this). Without it the basis is the
+    * committed version at publish entry, which still serializes raced
+    * publishers but cannot see a rival that landed before entry. */
+  def publishSnapshot(df: DataFrame, tableRoot: String, basis: Option[Long] = None): Unit =
+    commitSnapshot(df.sparkSession, tableRoot, basis)(writeSnapshotMember(df, _))
 
-  /** Run a snapshot publish's member writes under its claim. A write
-    * that throws leaves the process knowing the claim is dead (unlike a
-    * crash): the unswapped version dir is deleted, then the
-    * `commit-<n>` marker is atomically rewritten to a content that is
-    * not a version dir name. That marks a burned number:
-    * [[snapshotClaimsAbovePointer]] ignores it, so the next publish
-    * need not wait out [[snapshotGraceMs]], and [[snapshotCommittedNum]]
-    * still counts it, so the number is never handed out again. The
-    * write's own exception is rethrown. */
-  private def releaseClaimOnFailure(fs: org.apache.hadoop.fs.FileSystem,
-      uri: java.net.URI, conf: org.apache.hadoop.conf.Configuration,
-      root: org.apache.hadoop.fs.Path, next: Long, uid: String, vdir: String)(
-      write: => Unit): Unit =
-    try write
-    catch {
-      case t: Throwable =>
-        try {
-          deleteQuiet(fs, new org.apache.hadoop.fs.Path(root, vdir), recursive = true)
-          atomicReplace(fs, uri, conf, root, f"$CommitPrefix$next%012d",
-            s"burned-$vdir", uid)
-        } catch { case scala.util.control.NonFatal(e) => t.addSuppressed(e) }
-        throw t
-    }
-
-  /** Write one snapshot member into its still-unswapped version dir.
+  /** Write one snapshot member into its still-unclaimed version dir.
     * A local relation under [[graft.operators.DriverPath.DriverStoreBytes]]
     * is written from the driver as one parquet file through Spark's
     * own output writer (`Bridge.writeLocalParquet`): no job, no output
     * committer, no `_temporary` rename, and on file:// the dir is made
     * through java.nio (Hadoop's local mkdirs forks a `chmod` per level
     * when the native library is not loaded). Anything else is a
-    * `df.write`. Either way the pointer swap after it stays the only
-    * commit point: a failure here releases the claim
-    * ([[releaseClaimOnFailure]]); a crash leaves an unswapped dir for
-    * the prune. */
+    * `df.write`. Either way the claim after it stays the only commit
+    * point ([[commitSnapshot]]). */
   private def writeSnapshotMember(df: DataFrame, dir: String): Unit =
     if (writesOnDriver(df)) Bridge.writeLocalParquet(df, dir): Unit
     else df.write.mode(SaveMode.Overwrite).parquet(dir)
@@ -2957,19 +2691,17 @@ object Sources {
     graft.operators.DriverPath.localRelation(df.sparkSession, Bridge.nullable(df.schema),
       Bridge.localData(df))
 
-  /** Resolve a snapshot root to its live data directory: follow the
-    * `_current` pointer if present; otherwise (pre-versioning layout,
-    * or a plain parquet dir) the root itself. */
+  /** Resolve a snapshot root to its live data directory: the version
+    * dir its highest claim names; for a root with no claim (a plain
+    * parquet dir) the root itself. */
   def resolveSnapshot(spark: SparkSession, tableRoot: String): String =
     liveVersionDir(spark, tableRoot).getOrElse(tableRoot)
 
-  /** The version dir `_current` names, None when there is no pointer. */
-  private def liveVersionDir(spark: SparkSession, tableRoot: String): Option[String] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(tableRoot), conf)
-    readControl(fs, new org.apache.hadoop.fs.Path(tableRoot, "_current"))
-      .map(v => s"$tableRoot/$v")
-  }
+  /** The version dir the highest claim names, None when there is no
+    * claim. */
+  private def liveVersionDir(spark: SparkSession, tableRoot: String): Option[String] =
+    committedSnapshot(fsOf(spark, tableRoot), new org.apache.hadoop.fs.Path(tableRoot))
+      .map { case (_, v) => s"$tableRoot/$v" }
 
   /** Read the live version of a snapshot table published by
     * [[publishSnapshot]] (or a plain parquet dir — same call, which
@@ -2979,28 +2711,25 @@ object Sources {
       .getOrElse(spark.read.parquet(tableRoot))
 
   /** Retained snapshot versions, ascending — the live one plus up to
-    * two priors (publishSnapshot's retention window): the versions at
-    * or below the live pointer whose `commit-<n>` marker names a version
-    * dir that still exists, the ones time travel reads. */
+    * two priors (publishSnapshot's retention window): the claimed
+    * versions whose claim names a version dir that still exists, the
+    * ones time travel reads. */
   def snapshotVersions(spark: SparkSession, tableRoot: String): Seq[Long] = {
     val fs = fsOf(spark, tableRoot)
     val root = new org.apache.hadoop.fs.Path(tableRoot)
     val dirs = listVersions(fs, root).map(_._2.getName).toSet
-    commitNumbers(fs, root).sorted.filter(n => claimedVersion(fs, root, n).exists(dirs))
+    claimNumbers(fs, root).sorted.filter(n => claimedVersion(fs, root, n).exists(dirs))
   }
 
-  /** The version dir the `commit-<n>` marker of snapshot version `n`
-    * names — the publish that won the number — when the marker names
-    * one (not a burned number) and `n` is not above the live pointer
-    * (an unswapped claim). */
+  /** The version dir the claim of snapshot version `n` names — the
+    * publish that committed the number — when there is such a claim. */
   private def claimedVersion(fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path, n: Long): Option[String] =
-    readControl(fs, new org.apache.hadoop.fs.Path(root, f"$CommitPrefix$n%012d"))
-      .filter(v => v.startsWith("v-") && n <= snapshotPointerNum(fs, root))
+    readControl(fs, claimPath(root, n)).map(claimedDir(root, n, _))
 
   /** The dir time travel reads for snapshot version `version`: the one
-    * its claim names ([[claimedVersion]]). A burned, missing, unswapped
-    * or pruned version is refused, naming the retained ones: never a
+    * its claim names ([[claimedVersion]]). A missing, never-committed or
+    * pruned version is refused, naming the retained ones: never a
     * same-numbered dir the claim does not name, such as the partial
     * leftover of a failed publish. */
   private def versionDir(spark: SparkSession, tableRoot: String, version: Long): String = {
@@ -3022,69 +2751,57 @@ object Sources {
       version: Long): DataFrame =
     readWritten(spark, versionDir(spark, tableRoot, version))
 
-  /** True if the snapshot root has a live version (pointer or plain
-    * parquet files) — the existence probe incremental consumers use. */
-  def snapshotExists(spark: SparkSession, tableRoot: String): Boolean = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    try {
-      val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(tableRoot), conf)
-      val root = new org.apache.hadoop.fs.Path(tableRoot)
-      fs.exists(new org.apache.hadoop.fs.Path(root, "_current")) || fs.exists(root)
-    } catch { case _: Throwable => false }
-  }
+  /** True if the snapshot root exists (a committed table or a plain
+    * parquet dir) — the existence probe incremental consumers use.
+    * Only an absent root reads as false: any other error while probing
+    * propagates, so a caller never takes an unreadable table for an
+    * absent one and republishes it holding only its new batch. */
+  def snapshotExists(spark: SparkSession, tableRoot: String): Boolean =
+    fsOf(spark, tableRoot).exists(new org.apache.hadoop.fs.Path(tableRoot))
 
   /** Multi-frame snapshot publish, ATOMIC across ALL members: the
     * [[publishSnapshot]] mechanics generalized to a GROUP of frames
     * that must evolve together — an identity registry's subjects +
     * local_ids, a model's weights + vocab. Every member is written
     * under ONE new version dir
-    * (`tableRoot/v-<n>-<uid>/<member>/…parquet`) and the single
-    * `_current` pointer swaps only after the LAST member is fully
-    * written, so a reader can never observe member states from
-    * different versions — the torn window a per-member snapshot pair
-    * leaves open (crash between the two swaps ⇒ subjects from version
-    * N beside local_ids from N−1, which re-mints duplicate subject
-    * rows on the next incremental identity cycle). A crash mid-publish
-    * strands an unswapped version dir that the normal pointer-anchored
-    * prune collects later; the live version is untouched. Commit
-    * (dense-claim OCC, raced rivals refuse loudly — the registry
-    * evolution path [[graft.operators.IncrementalIdentity.resolveCycle]]
-    * publishes through here, where a double-fired scheduler used to be
-    * a whole lost registry update), retention, rival resolution and
-    * prune rules are [[publishSnapshot]]'s verbatim, including
-    * `basis`. */
+    * (`tableRoot/v-<n>-<uid>/<member>/…parquet`) and the single claim
+    * is taken only after the LAST member is fully written, so a reader
+    * can never observe member states from different versions — the torn
+    * window a per-member snapshot pair leaves open (crash between the
+    * two commits ⇒ subjects from version N beside local_ids from N−1,
+    * which re-mints duplicate subject rows on the next incremental
+    * identity cycle). A crash mid-publish strands an unclaimed version
+    * dir that the prune reclaims once another commit holds its number;
+    * the live version is untouched. Commit (claim-after-write, raced
+    * rivals refuse loudly — the registry evolution path
+    * [[graft.operators.IncrementalIdentity.resolveCycle]] publishes
+    * through here, where a double-fired scheduler used to be a whole
+    * lost registry update), retention and prune rules are
+    * [[publishSnapshot]]'s verbatim, including `basis`. */
   def publishSnapshotGroup(frames: Seq[(String, DataFrame)], tableRoot: String,
-      basis: Option[SnapshotBasis] = None): Unit = {
+      basis: Option[Long] = None): Unit = {
     require(frames.nonEmpty, "publishSnapshotGroup needs at least one member frame")
-    val conf = frames.head._2.sparkSession.sparkContext.hadoopConfiguration
-    val uri = new java.net.URI(tableRoot)
-    val fs = org.apache.hadoop.fs.FileSystem.get(uri, conf)
-    val root = new org.apache.hadoop.fs.Path(tableRoot)
     frames.foreach { case (member, _) =>
       require(member.nonEmpty && !member.contains("/"),
         s"member name must be a plain dir name, got '$member'")
     }
-    val (next, uid, vdir) =
-      claimSnapshotVersion(fs, uri, root, tableRoot, basis)
     // member writes are independent writes into disjoint dirs (jobs,
     // or driver writes for small local relations): run them
     // CONCURRENTLY on the shared family pool (guide §2.6 — the next
     // write's tasks back-fill executors freed by the current write's
     // tail; at gate scale the fixed per-write job overheads overlap).
     // Fail-fast like the sequential loop it replaces: any member's
-    // failure propagates before the swap, once every in-flight member
-    // write has finished, and releases the claim.
-    releaseClaimOnFailure(fs, uri, conf, root, next, uid, vdir) {
+    // failure propagates before the claim, once every in-flight member
+    // write has finished.
+    commitSnapshot(frames.head._2.sparkSession, tableRoot, basis) { vdir =>
       graft.operators.IndexMaintenance.inParallel(frames) { case (member, df) =>
-        writeSnapshotMember(df, s"$tableRoot/$vdir/$member")
+        writeSnapshotMember(df, s"$vdir/$member")
       }: Unit
     }
-    swapSnapshotOrRefuse(fs, uri, conf, root, tableRoot, vdir, next, uid)
-    pruneSnapshotVersions(fs, root, next)
   }
 
   /** Read one member frame of the live [[publishSnapshotGroup]]
-    * version. All members read against the same resolved pointer are
+    * version. All members read against the same resolved claim are
     * mutually consistent only if resolved ONCE — use
     * [[readSnapshotGroupAll]] when more than one member feeds the same
     * computation. */
@@ -3092,8 +2809,8 @@ object Sources {
       member: String): DataFrame =
     readSnapshotGroupAll(spark, tableRoot, Seq(member))(member)
 
-  /** Every member of the live group version, resolved from ONE pointer
-    * read — the consistent-view read for multi-member consumers (a
+  /** Every member of the live group version, resolved from ONE read of
+    * the highest claim — the consistent-view read for multi-member consumers (a
     * publish landing between two separate [[readSnapshotGroup]] calls
     * would hand the caller members from different versions). */
   def readSnapshotGroupAll(spark: SparkSession, tableRoot: String,
@@ -3120,9 +2837,8 @@ object Sources {
   // legacy plain one (`v-<n>`) — numeric prefix only
   private def listVersions(fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path): Seq[(Long, org.apache.hadoop.fs.Path)] =
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq.collect {
+    try fs.listStatus(root).toSeq.collect {
       case st if st.isDirectory && st.getPath.getName.startsWith("v-") =>
         (numberOf(st.getPath.getName, "v-"), st.getPath)
-    }
+    } catch { case _: java.io.FileNotFoundException => Seq.empty }
 }

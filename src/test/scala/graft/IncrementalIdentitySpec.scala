@@ -243,14 +243,14 @@ class IncrementalIdentitySpec extends SparkSpec {
     val tags = Seq(m("a"), m("b")).map(_.collect()(0).getAs[String]("tag"))
     assert(tags == Seq("v2", "v2"))
     // a stranded half-written version dir (crash mid-publish) is
-    // invisible: the pointer still names the complete version
+    // invisible: the highest claim still names the complete version
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
     Seq((1, "torn")).toDF("k", "tag").write
       .parquet(s"$root/v-000000000099-dead/a") // member b never written
     val m2 = Sources.readSnapshotGroupAll(spark, root, Seq("a", "b"))
     assert(Seq(m2("a"), m2("b")).map(_.collect()(0).getAs[String]("tag")) == Seq("v2", "v2"))
-    assert(fs.exists(new org.apache.hadoop.fs.Path(root, "_current")))
+    assert(fs.exists(new org.apache.hadoop.fs.Path(root, graft.sources.Claims.live(root))))
   }
 
   test("snapshot-group time travel: a retained prior version reads both members consistently") {

@@ -159,7 +159,7 @@ class SourcesSpec extends SparkSpec {
     // completing proves each refusal was loud and redrivable)
     val fin = Sources.readSnapshot(spark, dir).collect()
     assert(fin.length == 50 && fin.map(_.getInt(0)).distinct.length == 1)
-    assert(Sources.snapshotCommittedVersion(spark, dir) >= 13L)
+    assert(Sources.snapshotReadBasis(spark, dir) >= 13L)
     info(s"observed ${refusals.get()} loud claim refusals across the race")
   }
 
@@ -324,14 +324,7 @@ class SourcesSpec extends SparkSpec {
     val cfg = TableConfig("t", Seq("id"), Seq.empty)
     @volatile var failure: Option[String] = None
     @volatile var stop = false
-    def liveManifest(): Long =
-      try {
-        val src = scala.io.Source.fromFile(s"$dir/_current", "UTF-8")
-        // names carry a "-<uid>" suffix: parse the numeric prefix
-        try src.mkString.trim.stripPrefix("manifest-")
-          .takeWhile(_.isDigit).toLong
-        finally src.close()
-      } catch { case _: Throwable => 0L }
+    def liveManifest(): Long = graft.sources.Claims.top(dir)
     val reader = new Thread(() => {
       while (!stop && failure.isEmpty) {
         val resolvedAtLeast = liveManifest() // lower bound on what the read resolves
@@ -393,13 +386,7 @@ class SourcesSpec extends SparkSpec {
     val cfg = TableConfig("t", Seq("id"), Seq.empty)
     @volatile var failure: Option[String] = None
     @volatile var stop = false
-    def liveManifest(): Long =
-      try {
-        val src = scala.io.Source.fromFile(s"$dir/_current", "UTF-8")
-        try src.mkString.trim.stripPrefix("manifest-")
-          .takeWhile(_.isDigit).toLong
-        finally src.close()
-      } catch { case _: Throwable => 0L }
+    def liveManifest(): Long = graft.sources.Claims.top(dir)
 
     val publishers = (1 to 3).map { k =>
       new Thread(() => {

@@ -240,5 +240,31 @@ class ChangeFeedDriverPathSpec extends DriverPathHarness {
     } { dir =>
       Sources.publishMergeAppend(spark, dir, Seq((2L, "b", 7L, 1)).toDF("k", "v", "w", "p"), "p")
     }
+    distributed("map_column") { dir =>
+      Sources.publishMergeAppend(spark, dir, Seq((1L, Map("x" -> 1), 1)).toDF("k", "m", "p"), "p")
+    } { dir =>
+      Sources.publishMergeAppend(spark, dir, Seq((2L, Map("y" -> 2), 1)).toDF("k", "m", "p"), "p")
+    }
+  }
+
+  test("map columns, at any depth, compare by their entries: a new entry order is no change") {
+    // key 1 keeps its entries in another order, key 2 changes a value,
+    // key 3 a value inside an array of maps, key 4 is new
+    def row(k: Long, m: Seq[(String, Int)], nested: Seq[(String, Int)]) =
+      (k, scala.collection.immutable.ListMap(m: _*), Seq(scala.collection.immutable.ListMap(nested: _*)), 1)
+    val r = root("maps")
+    val dir = s"$r/t"
+    val cols = Seq("k", "m", "ms", "p")
+    Sources.publishMergeAppend(spark, dir, Seq(row(1L, Seq("a" -> 1, "b" -> 2), Seq("x" -> 1)),
+      row(2L, Seq("a" -> 1), Seq("x" -> 1)), row(3L, Seq("a" -> 1), Seq("x" -> 1, "y" -> 2)))
+      .toDF(cols: _*), "p")
+    assert(feed(dir, s"$r/ck", mayUseDriver = true).exists(_.fullResync))
+    Sources.publishMergeAppend(spark, dir, Seq(row(1L, Seq("b" -> 2, "a" -> 1), Seq("x" -> 1)),
+      row(2L, Seq("a" -> 9), Seq("x" -> 1)), row(3L, Seq("a" -> 1), Seq("y" -> 2, "x" -> 3)),
+      row(4L, Seq("a" -> 1), Nil)).toDF(cols: _*), "p")
+    // the driver delta declines map columns: the distributed plans deliver
+    val got = feed(dir, s"$r/ck", mayUseDriver = true).get
+    assert(!DriverPath.isLocal(got.delta))
+    assert(got.delta.select("k").as[Long].collect().toSet == Set(2L, 3L, 4L))
   }
 }

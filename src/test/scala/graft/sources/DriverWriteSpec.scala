@@ -120,38 +120,39 @@ class DriverWriteSpec extends DriverPathHarness {
     def versionDirs(): Set[String] =
       root.listFiles().map(_.getName).filter(_.startsWith("v-")).toSet
     val liveDir = new java.io.File(Sources.resolveSnapshot(spark, dir)).getName
-    // the failed publish released its claim: its version dir (with the
-    // failed member's partial file and its finished sibling) is gone,
-    // and its commit-2 marker names no version dir, a burned number
+    // the failed publish never claimed: its version dir (with the failed
+    // member's partial file and its finished sibling) is gone, and no
+    // claim names version 2
     assert(versionDirs() == Set(liveDir), s"${versionDirs()}")
-    val marker = new java.io.File(root, "commit-000000000002")
-    assert(!Files.readString(marker.toPath).trim.startsWith("v-"))
-    // so the next publish lands at once under the default grace, and
-    // the burned number is not handed out again
+    assert(!new java.io.File(root, "commit-000000000002").exists())
+    // so the next publish lands at once, at version 2
     Sources.publishSnapshotGroup(Seq("p" -> Seq(3).toDF("x"), "q" -> Seq("c").toDF("y")), dir)
     assert(live() == (Seq(3), Seq("c")))
     assert(new java.io.File(Sources.resolveSnapshot(spark, dir)).getName
-      .startsWith("v-000000000003-"))
+      .startsWith("v-000000000002-"))
     assert(versionDirs().size == 2, s"${versionDirs()}")
   }
 
-  test("time travel reads the claimed dir and refuses a burned version's leftover") {
+  test("time travel reads the claimed dir and refuses an unclaimed leftover") {
     val dir = freshDir()
     for ((x, y) <- Seq(1 -> "a", 2 -> "b"))
       Sources.publishSnapshotGroup(Seq("p" -> Seq(x).toDF("x"), "q" -> Seq(y).toDF("y")), dir)
-    // a publish claimed version 3 and failed in member q's write; its
-    // dir delete failed too, so member p's files stay beside the burned
-    // marker
-    val leftover = "v-000000000003-deadbeef"
+    // a publish wrote version 3 and failed in member q's write; its dir
+    // delete failed too, so member p's files stay, claimed by nothing
+    val leftover = "v-000000000003-00000000"
     Seq(3).toDF("x").write.parquet(s"$dir/$leftover/p")
-    Files.writeString(java.nio.file.Paths.get(dir, "commit-000000000003"), s"burned-$leftover")
     Sources.publishSnapshotGroup(Seq("p" -> Seq(4).toDF("x"), "q" -> Seq("d").toDF("y")), dir)
-    assert(Sources.snapshotVersions(spark, dir) == Seq(2L, 4L))
+    assert(Sources.snapshotVersions(spark, dir) == Seq(1L, 2L, 3L))
+    // version 3 is the claimed dir, never the same-numbered leftover
+    val v3 = Sources.readSnapshotGroupVersion(spark, dir, 3L, Seq("p", "q"))
+    assert(v3("p").as[Int].collect().toSeq == Seq(4) && v3("q").as[String].collect().toSeq == Seq("d"))
+    // a version that no claim names is refused, naming the retained ones
+    Seq(5).toDF("x").write.parquet(s"$dir/v-000000000005-00000000/p")
     val e = intercept[IllegalArgumentException] {
-      Sources.readSnapshotGroupVersion(spark, dir, 3L, Seq("p", "q"))
+      Sources.readSnapshotGroupVersion(spark, dir, 5L, Seq("p", "q"))
     }
-    assert(e.getMessage.contains("have: 2,4"), e.getMessage)
-    intercept[IllegalArgumentException](Sources.readSnapshotVersion(spark, dir, 3L))
+    assert(e.getMessage.contains("have: 1,2,3"), e.getMessage)
+    intercept[IllegalArgumentException](Sources.readSnapshotVersion(spark, dir, 5L))
     val v2 = Sources.readSnapshotGroupVersion(spark, dir, 2L, Seq("p", "q"))
     assert(v2("p").as[Int].collect().toSeq == Seq(2) && v2("q").as[String].collect().toSeq == Seq("b"))
   }

@@ -44,7 +44,7 @@ class ManifestFormatSpec extends SparkSpec {
   for ((tag, plant) <- plants) {
     test(s"a live manifest with $tag is refused by every read and every write") {
       val dir = table(tag.replace(' ', '_'), 3)
-      val live = Files.readString(Paths.get(dir, "_current")).trim
+      val live = Claims.live(dir)
       rewrite(dir, live)(plant): Unit
       val before = names(dir)
       val ck = Files.createTempDirectory("graft_mfmt_ck").toString

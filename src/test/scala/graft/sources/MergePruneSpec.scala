@@ -4,15 +4,14 @@ import java.nio.file.Files
 
 import graft.SparkSpec
 
-/** Deterministic unit coverage for the merge-publish prune and
-  * pointer-swap invariants the N×M stress spec exercises
-  * statistically (the round-8 reader-data-loss race):
+/** Deterministic unit coverage for the merge-publish prune
+  * invariants the N×M stress spec exercises statistically (the round-8
+  * reader-data-loss race):
   *
-  *  - retention is anchored to the LIVE POINTER, so in-flight
-  *    (written-but-unswapped) manifests cannot consume the
+  *  - retention is anchored to the HIGHEST CLAIM, so in-flight
+  *    (written-but-unclaimed) manifests cannot consume the
   *    two-publish reader slack;
-  *  - candidates younger than the grace window survive with dirs;
-  *  - the pointer never swaps BACKWARDS by manifest number.
+  *  - candidates younger than the grace window survive with dirs.
   */
 class MergePruneSpec extends SparkSpec {
 
@@ -43,13 +42,13 @@ class MergePruneSpec extends SparkSpec {
     name
   }
 
-  /** `_current` written as the engine writes it: raw, no checksum
-    * sidecar (see `Sources.writeRaw`). */
-  private def pointTo(fs: org.apache.hadoop.fs.FileSystem,
+  /** Commits manifest `name` as a publish does: its `commit-<n>` claim
+    * names it. */
+  private def claim(fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path, name: String): Unit = {
     fs.mkdirs(root): Unit
-    Files.write(java.nio.file.Paths.get(root.toUri.getPath, "_current"),
-      name.getBytes("UTF-8")): Unit
+    Claims.plant(root.toUri.getPath, name.stripPrefix("manifest-").takeWhile(_.isDigit).toLong,
+      name)
   }
 
   private def names(fs: org.apache.hadoop.fs.FileSystem,
@@ -59,7 +58,7 @@ class MergePruneSpec extends SparkSpec {
   test("prune keeps live-2 slack and deletes older aged manifests with their exclusive dirs") {
     val (fs, root, _) = fsRoot()
     (1 to 5).foreach(i => manifest(fs, root, i, Seq(s"b-$i/p=1"), aged = true))
-    pointTo(fs, root, f"manifest-${5}%012d-test")
+    claim(fs, root, f"manifest-${5}%012d-test")
     Sources.pruneMergePartitioned(fs, root)
     val left = names(fs, root)
     // protected: numbers >= live-2 = 3; deleted: 1, 2 and their dirs
@@ -74,7 +73,7 @@ class MergePruneSpec extends SparkSpec {
     val (fs, root, _) = fsRoot()
     manifest(fs, root, 1, Seq("b-1/p=1", "shared/p=1"), aged = true)
     (4 to 6).foreach(i => manifest(fs, root, i, Seq(s"b-$i/p=1", "shared/p=1"), aged = true))
-    pointTo(fs, root, f"manifest-${6}%012d-test")
+    claim(fs, root, f"manifest-${6}%012d-test")
     Sources.pruneMergePartitioned(fs, root)
     val left = names(fs, root)
     assert(!left.contains("b-1") && left.contains("shared"), left.toSeq.sorted.mkString(","))
@@ -82,12 +81,12 @@ class MergePruneSpec extends SparkSpec {
 
   test("in-flight manifests above the live pointer do not consume the reader slack") {
     val (fs, root, _) = fsRoot()
-    // live = 3; manifests 4 and 5 are written but NOT swapped (three
+    // live = 3; manifests 4 and 5 are written but NOT claimed (three
     // concurrent publishers). takeRight(3) would have retained {3,4,5}
     // and pruned 1 and 2 — dirs a reader that just resolved the
-    // pointer chain may still be scanning.
+    // highest claim may still be scanning.
     (1 to 5).foreach(i => manifest(fs, root, i, Seq(s"b-$i/p=1"), aged = true))
-    pointTo(fs, root, f"manifest-${3}%012d-test")
+    claim(fs, root, f"manifest-${3}%012d-test")
     Sources.pruneMergePartitioned(fs, root)
     val left = names(fs, root)
     (1 to 5).foreach { i =>
@@ -101,7 +100,7 @@ class MergePruneSpec extends SparkSpec {
     manifest(fs, root, 1, Seq("b-1/p=1"), aged = true)
     manifest(fs, root, 2, Seq("b-2/p=1"), aged = false) // young straggler
     (5 to 7).foreach(i => manifest(fs, root, i, Seq(s"b-$i/p=1"), aged = true))
-    pointTo(fs, root, f"manifest-${7}%012d-test")
+    claim(fs, root, f"manifest-${7}%012d-test")
     Sources.pruneMergePartitioned(fs, root)
     val left = names(fs, root)
     assert(!left.contains("b-1"))
@@ -205,7 +204,7 @@ class MergePruneSpec extends SparkSpec {
   test("vacuum reclaims aged unreferenced batch dirs, spares referenced and young ones") {
     val (fs, root, dir) = fsRoot()
     manifest(fs, root, 5, Seq("b-5/p=1"), aged = false)
-    pointTo(fs, root, f"manifest-${5}%012d-test")
+    claim(fs, root, f"manifest-${5}%012d-test")
     def mkOrphan(name: String, old: Boolean): Unit = {
       val out = fs.create(new org.apache.hadoop.fs.Path(root, s"$name/p=1/part-0"), true)
       out.write(1); out.close()
@@ -405,18 +404,6 @@ class MergePruneSpec extends SparkSpec {
       Seq((999L, 1, "z")).toDF("k", "p", "v"), cfg, "p")
     val rows = Sources.readMergePartitioned(spark, dir, "p")
     assert(rows.count() == before.size + 1)
-  }
-
-  test("pointer never swaps backwards by manifest number") {
-    val (fs, root, dir) = fsRoot()
-    val uri = new java.net.URI(dir)
-    val conf = spark.sparkContext.hadoopConfiguration
-    fs.mkdirs(root)
-    pointTo(fs, root, f"manifest-${7}%012d-test")
-    Sources.swapPointerForward(fs, uri, conf, root, f"manifest-${6}%012d-late", "t1")
-    assert(Sources.currentPointer(fs, root).contains(f"manifest-${7}%012d-test"))
-    Sources.swapPointerForward(fs, uri, conf, root, f"manifest-${8}%012d-next", "t2")
-    assert(Sources.currentPointer(fs, root).contains(f"manifest-${8}%012d-next"))
   }
 
   test("replace guards: exotic/empty/null partition values refuse loudly (ADVICE r14)") {

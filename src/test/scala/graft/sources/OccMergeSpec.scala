@@ -127,50 +127,44 @@ class OccMergeSpec extends SparkSpec {
     val dir = freshDir()
     Sources.publishMergeAppend(spark, dir, Seq(("one", 1, "a")).toDF("k", "p", "v"), "p")
     Sources.publishMergeAppend(spark, dir, Seq(("two", 1, "b")).toDF("k", "p", "v"), "p")
-    // simulate a publisher that claimed + wrote but whose pointer swap
-    // never landed (crash between claim and swap): regress _current to
-    // the oldest retained manifest by hand
-    val root = new java.io.File(dir)
-    val manifests = root.listFiles().map(_.getName)
+    // a `_current` pointer lagging at the oldest manifest, as a table
+    // written before claims became the whole commit may hold it: nothing
+    // resolves it any more
+    val manifests = new java.io.File(dir).listFiles().map(_.getName)
       .filter(_.startsWith("manifest-")).sorted
     assert(manifests.length >= 2)
     Files.write(java.nio.file.Paths.get(dir, "_current"),
       manifests.head.getBytes("UTF-8")): Unit
-    // a reader resolving the stale pointer sees the old state...
-    assert(!rowsOf(dir).contains(("two", 1, "b")))
-    // ...but the next PUBLISH must fold in the durably-claimed commit,
-    // not rebase history from the stale pointer
+    // a reader resolves the highest claim...
+    assert(rowsOf(dir) == Set(("one", 1, "a"), ("two", 1, "b")))
+    // ...and so does the next PUBLISH: it folds in the committed state,
+    // never rebases history from the stale pointer
     Sources.publishMergeAppend(spark, dir, Seq(("three", 1, "c")).toDF("k", "p", "v"), "p")
     assert(rowsOf(dir) == Set(("one", 1, "a"), ("two", 1, "b"), ("three", 1, "c")))
   }
 
-  test("a content-less claim marker (crashed legacy claimer) never wedges publishing (ADVICE r16)") {
+  test("a claim that names no manifest is refused loudly by reads and publishes, naming it") {
     val dir = freshDir()
     Sources.publishMergePartitioned(spark, dir,
       Seq(("seed", 1, "s")).toDF("k", "p", "v"), cfg, "p"): Unit
-    // simulate the pre-r17 crash window: a marker created at
-    // lastCommitted+1 whose content never got written. Before the fix
-    // every later publish re-derived exactly this number, lost the
-    // claim to the corpse 20 times, and threw — a PERMANENT wedge.
-    val committed = Sources.mergeCommittedVersion(spark, dir)
-    val poison = java.nio.file.Paths.get(dir, f"commit-${committed + 1}%012d")
-    Files.write(poison, Array.emptyByteArray): Unit
-    // publishes must number PAST the claimed-dead slot and land
-    Sources.publishMergePartitioned(spark, dir,
-      Seq(("after", 1, "x")).toDF("k", "p", "v"), cfg, "p"): Unit
-    Sources.publishMergeAppend(spark, dir,
-      Seq(("more", 2, "y")).toDF("k", "p", "v"), "p")
-    assert(rowsOf(dir) == Set(("seed", 1, "s"), ("after", 1, "x"),
-      ("more", 2, "y")))
-    assert(Sources.mergeCommittedVersion(spark, dir) > committed + 1,
-      "commits did not advance past the dead claim")
-    // a garbage-content marker (crash mid-write) is the same class
-    val committed2 = Sources.mergeCommittedVersion(spark, dir)
-    Files.write(java.nio.file.Paths.get(dir, f"commit-${committed2 + 1}%012d"),
-      "garbage".getBytes("UTF-8")): Unit
-    Sources.publishMergePartitioned(spark, dir,
-      Seq(("again", 1, "z")).toDF("k", "p", "v"), cfg, "p"): Unit
-    assert(rowsOf(dir).contains(("again", 1, "z")))
+    // claims are content-atomic, so no writer leaves such a claim: an
+    // empty or garbage highest claim is a layout this engine does not know
+    for (content <- Seq("", "garbage")) {
+      val committed = Sources.mergeCommittedVersion(spark, dir)
+      val claim = f"commit-${committed + 1}%012d"
+      Claims.plant(dir, committed + 1, content)
+      def refused(what: String)(f: => Any): Unit = {
+        val e = intercept[IllegalStateException](f)
+        assert(e.getMessage.contains(s"$dir/$claim"), s"$what: ${e.getMessage}")
+      }
+      refused("read")(rowsOf(dir))
+      refused("merge")(Sources.publishMergePartitioned(spark, dir,
+        Seq(("after", 1, "x")).toDF("k", "p", "v"), cfg, "p"))
+      refused("append")(Sources.publishMergeAppend(spark, dir,
+        Seq(("more", 2, "y")).toDF("k", "p", "v"), "p"))
+      Files.delete(java.nio.file.Paths.get(dir, claim))
+      assert(rowsOf(dir) == Set(("seed", 1, "s")))
+    }
   }
 
   test("a refused publish leaves no orphan batch dir or loser manifest behind (ADVICE r16)") {
@@ -257,11 +251,12 @@ class OccMergeSpec extends SparkSpec {
     assert(Sources.compactMergePartitioned(spark, dir, "p") == 2)
     def text(name: String) =
       new String(Files.readAllBytes(java.nio.file.Paths.get(dir, name)), "UTF-8").trim
-    val live = text("_current")
-    // the compaction claimed the next dense number, and that marker
-    // names exactly the manifest readers now resolve
+    // the compaction claimed the next dense number, and that claim, the
+    // highest, names a complete manifest: the one readers now resolve
     assert(Sources.mergeCommittedVersion(spark, dir) == before + 1)
-    assert(text(f"commit-${before + 1}%012d") == live, live)
+    val live = text(f"commit-${before + 1}%012d")
+    assert(Claims.live(dir) == live && live.startsWith("manifest-"), live)
+    assert(text(live).startsWith("version\t1"), live)
     assert(rowsOf(dir) == Set(("k1", 1, "v"), ("k2", 0, "v"), ("k3", 1, "v")))
   }
 
@@ -305,46 +300,97 @@ class OccMergeSpec extends SparkSpec {
     }
   }
 
-  test("corpse reclaim is exclusive: a paused rival's resumed reclaim cannot destroy the winner's valid marker (ADVICE r17 #2)") {
-    val dir = freshDir()
+  test("a publisher whose basis claim is pruned mid-publish claims past the rivals, never the freed slot") {
+    HookFs.register(spark.sparkContext.hadoopConfiguration)
+    val local = s"${freshDir()}/t"
+    val dir = s"${HookFs.Scheme}://$local"
     Sources.publishMergePartitioned(spark, dir,
       Seq(("seed", 1, "s")).toDF("k", "p", "v"), cfg, "p"): Unit
-    val committed = Sources.mergeCommittedVersion(spark, dir)
-    val n = committed + 1
-    // a legacy corpse at lastCommitted+1: publisher A reads it as a
-    // corpse, then pauses indefinitely (GC) before its delete
-    Files.write(java.nio.file.Paths.get(dir, f"commit-$n%012d"),
-      Array.emptyByteArray): Unit
-    // rival B publishes meanwhile: reclaims the corpse (rename to the
-    // permanent tombstone), wins number n with a VALID marker, swaps
-    Sources.publishMergeAppend(spark, dir,
-      Seq(("bwin", 1, "b")).toDF("k", "p", "v"), "p")
-    assert(Sources.mergeCommittedVersion(spark, dir) == n,
-      "B did not win the reclaimed number")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val uri = new java.net.URI(dir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(uri, conf)
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val marker = new org.apache.hadoop.fs.Path(root, f"commit-$n%012d")
-    assert(fs.exists(new org.apache.hadoop.fs.Path(root, f"_corpse-$n%012d")),
-      "reclaim left no tombstone")
-    def markerContent(): String = {
-      val in = fs.open(marker)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
+    // while the publish below reads its basis partition, rivals commit
+    // to another partition and their prunes retire the basis claim and
+    // the one above it: commit-2 is a free slot again
+    HookFs.arm { _ =>
+      for (v <- 2 to 5)
+        Sources.publishMergePartitioned(spark, dir, Seq((s"r$v", 2, "r")).toDF("k", "p", "v"),
+          cfg, "p"): Unit
+      val aged = System.currentTimeMillis() - 11L * 60 * 1000
+      new java.io.File(local).listFiles().foreach(_.setLastModified(aged): Unit)
+      Sources.publishMergePartitioned(spark, dir, Seq(("r6", 2, "r")).toDF("k", "p", "v"),
+        cfg, "p"): Unit
+      assert(!new java.io.File(local, "commit-000000000002").exists(), "setup: slot not freed")
     }
-    val valid = markerContent()
-    assert(valid.startsWith("manifest-"))
-    // A resumes: pre-r18 its blind deleteQuiet destroyed B's valid
-    // marker here, A re-claimed n and silently dropped B's batch. The
-    // tombstoned reclaim loses on dest-exists and touches nothing.
-    Sources.reclaimCorpseMarker(fs, uri, root, marker, n)
-    assert(markerContent() == valid, "resumed reclaim touched the valid marker")
-    assert(rowsOf(dir) == Set(("seed", 1, "s"), ("bwin", 1, "b")))
-    // and the table stays fully publishable afterwards
-    Sources.publishMergeAppend(spark, dir,
-      Seq(("after", 2, "c")).toDF("k", "p", "v"), "p")
-    assert(rowsOf(dir).contains(("after", 2, "c")))
+    try Sources.publishMergePartitioned(spark, dir,
+      Seq(("late", 1, "l")).toDF("k", "p", "v"), cfg, "p"): Unit
+    finally HookFs.disarm()
+    assert(!HookFs.pending, "the rivals never ran")
+    // claiming the freed slot would have committed below the highest
+    // claim, where no reader resolves it: the batch silently lost. The
+    // rivals touched only p=2, so the publish rebased and landed on top
+    assert(Claims.top(local) == 7)
+    assert(rowsOf(dir) == Set(("seed", 1, "s"), ("late", 1, "l")) ++
+      (2 to 6).map(v => (s"r$v", 2, "r")))
+  }
+
+  test("a crash before the merge claim: readers keep the old state, the next publish lands at once") {
+    val dir = freshDir()
+    Sources.publishMergePartitioned(spark, dir,
+      Seq(("a", 1, "v1"), ("b", 2, "v1")).toDF("k", "p", "v"), cfg, "p"): Unit
+    val c = Sources.mergeCommittedVersion(spark, dir)
+    // the crashed publish wrote its batch dir and its manifest, then
+    // died before taking commit-<c+1>
+    val live = Claims.live(dir)
+    val crashDir = f"b-${c + 1}%012d-crashed0"
+    Seq(("a", "v9")).toDF("k", "v").write.parquet(s"$dir/$crashDir/p=1")
+    val crashManifest = f"manifest-${c + 1}%012d-crashed0"
+    val entries = Files.readString(java.nio.file.Paths.get(dir, live)).split("\n").toSeq
+      .filterNot(_.endsWith("/p=1")) :+ s"$crashDir/p=1"
+    Files.write(java.nio.file.Paths.get(dir, crashManifest),
+      entries.mkString("\n").getBytes("UTF-8")): Unit
+    // a fresh reader sees the old state: nothing committed the manifest
+    assert(rowsOf(dir) == Set(("a", 1, "v1"), ("b", 2, "v1")))
+    // the next publish takes the crashed publish's number at once
+    Sources.publishMergePartitioned(spark, dir, Seq(("b", 2, "v2")).toDF("k", "p", "v"),
+      cfg, "p"): Unit
+    assert(Sources.mergeCommittedVersion(spark, dir) == c + 1)
+    assert(rowsOf(dir) == Set(("a", 1, "v1"), ("b", 2, "v2")))
+    // its litter is an attempt that can never commit (another manifest
+    // holds its number); a lost attempt that is still running rebases
+    // with the same batch dir, so the litter goes once past the grace
+    def names() = new java.io.File(dir).list().toSet
+    assert(names()(crashManifest) && names()(crashDir), "young litter was touched")
+    val aged = System.currentTimeMillis() - 11L * 60 * 1000
+    Seq(crashManifest, crashDir).foreach(n =>
+      new java.io.File(dir, n).setLastModified(aged): Unit)
+    Sources.publishMergePartitioned(spark, dir, Seq(("b", 2, "v3")).toDF("k", "p", "v"),
+      cfg, "p"): Unit
+    assert(!names()(crashManifest) && !names()(crashDir), s"litter survived: ${names()}")
+    assert(rowsOf(dir) == Set(("a", 1, "v1"), ("b", 2, "v3")))
+  }
+
+  test("a crash after the merge claim: the claim is the commit, readers and the next publish see it") {
+    val dir = freshDir()
+    Sources.publishMergePartitioned(spark, dir,
+      Seq(("a", 1, "v1"), ("b", 2, "v1")).toDF("k", "p", "v"), cfg, "p"): Unit
+    val c = Sources.mergeCommittedVersion(spark, dir)
+    // the crashed publish wrote its batch dir and manifest, took
+    // commit-<c+1>, and died before its prune
+    val live = Claims.live(dir)
+    val crashDir = f"b-${c + 1}%012d-crashed1"
+    Seq(("a", "v2")).toDF("k", "v").write.parquet(s"$dir/$crashDir/p=1")
+    val lines = Files.readString(java.nio.file.Paths.get(dir, live)).split("\n").toSeq
+    val schema = lines.find(_.startsWith("schema\t")).get.split("\t", 3)(2)
+    val crashManifest = f"manifest-${c + 1}%012d-crashed1"
+    Files.write(java.nio.file.Paths.get(dir, crashManifest), (lines.filterNot(_.endsWith("/p=1")) ++
+      Seq(s"schema\t$crashDir\t$schema", s"$crashDir/p=1")).mkString("\n").getBytes("UTF-8")): Unit
+    Claims.plant(dir, c + 1, crashManifest)
+    // a fresh reader sees the new state at once
+    assert(rowsOf(dir) == Set(("a", 1, "v2"), ("b", 2, "v1")))
+    // the next publish builds on it with no wait, and its prune runs
+    for (v <- Seq("v3", "v4", "v5"))
+      Sources.publishMergePartitioned(spark, dir, Seq(("b", 2, v)).toDF("k", "p", "v"),
+        cfg, "p"): Unit
+    assert(Sources.mergeCommittedVersion(spark, dir) == c + 4)
+    assert(rowsOf(dir) == Set(("a", 1, "v2"), ("b", 2, "v5")))
   }
 
   test("time travel and the change feed read the committed manifest, never a losing attempt's") {

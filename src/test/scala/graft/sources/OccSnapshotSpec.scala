@@ -92,19 +92,21 @@ class OccSnapshotSpec extends SparkSpec {
       .map(_.getInt(0)).toSeq == Seq(2))
   }
 
-  test("a content-less claim marker (crashed claimer) never wedges snapshot publishing") {
+  test("a crash before the group claim blocks no publish, and that publish's prune reclaims the dir") {
     val dir = freshDir()
-    Sources.publishSnapshot(Seq(1).toDF("x"), dir)
-    val committed = Sources.snapshotCommittedVersion(spark, dir)
-    // crash window: claim created, data never written, swap never
-    // landed — the marker burns its number but must not wedge anyone
-    Files.write(java.nio.file.Paths.get(dir, f"commit-${committed + 1}%012d"),
-      Array.emptyByteArray): Unit
-    Sources.publishSnapshot(Seq(2).toDF("x"), dir)
-    assert(Sources.readSnapshot(spark, dir).collect()
-      .map(_.getInt(0)).toSeq == Seq(2))
-    assert(Sources.snapshotCommittedVersion(spark, dir) == committed + 2,
-      "the publish did not number past the dead claim")
+    Sources.publishSnapshotGroup(Seq("a" -> Seq(1).toDF("x"), "b" -> Seq(1).toDF("x")), dir)
+    val committed = Sources.snapshotReadBasis(spark, dir)
+    // crash window: the version dir written (member b only partly),
+    // the claim never taken
+    val crashed = crashedWrite(dir, committed + 1, "crashed0", 2, members = Seq("a"))
+    assert(group(dir) == (Seq(1), Seq(1)), "a fresh reader saw the unclaimed dir")
+    // the next publish lands at once, at the number the crash never took
+    Sources.publishSnapshotGroup(Seq("a" -> Seq(3).toDF("x"), "b" -> Seq(3).toDF("x")), dir)
+    assert(group(dir) == (Seq(3), Seq(3)))
+    assert(Sources.snapshotReadBasis(spark, dir) == committed + 1)
+    // another claim holds the crashed dir's number, so no writer can
+    // commit it any more: the prune took it with no age test
+    assert(!names(dir)(crashed), s"crashed dir survived: ${names(dir)}")
   }
 
   test("double-fired resolve cycle: the losing cycle refuses loudly; a redriven cycle converges (VERDICT r16 #1)") {
@@ -215,46 +217,42 @@ class OccSnapshotSpec extends SparkSpec {
       "redriven cycle was not an idempotent re-apply")
   }
 
-  // ────────────────────── r18: the claim-to-swap window ──────────────────────
+  // ──────────────── claim-after-write: crash and race points ────────────────
 
-  private def hadoopBits(dir: String) = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val uri = new java.net.URI(dir)
-    (org.apache.hadoop.fs.FileSystem.get(uri, conf), uri, conf,
-      new org.apache.hadoop.fs.Path(dir))
+  private def names(dir: String): Set[String] = new java.io.File(dir).list().toSet
+
+  /** Both members of a two-member group's live version. */
+  private def group(dir: String): (Seq[Int], Seq[Int]) = {
+    val m = Sources.readSnapshotGroupAll(spark, dir, Seq("a", "b"))
+    (m("a").as[Int].collect().toSeq, m("b").as[Int].collect().toSeq)
   }
 
-  /** Simulate a rival publisher's claim exactly as claimSnapshotVersion
-    * leaves it: a content-atomic `commit-<n>` marker naming a fully
-    * written (but UNSWAPPED) version dir. */
-  private def rivalClaim(dir: String, n: Long, uid: String, value: Int): String = {
-    import spark.implicits._
+  /** A publish's version dir `v-<n>-<uid>` as a write that has not
+    * claimed leaves it: `value` in each of `members` (a single-frame
+    * snapshot when `members` is empty). Returns the dir's name. */
+  private def crashedWrite(dir: String, n: Long, uid: String, value: Int,
+      members: Seq[String] = Nil): String = {
     val vdir = f"v-$n%012d-$uid"
-    Seq(value).toDF("x").write.parquet(s"$dir/$vdir")
-    Files.write(java.nio.file.Paths.get(dir, f"commit-$n%012d"),
-      vdir.getBytes("UTF-8")): Unit
+    if (members.isEmpty) Seq(value).toDF("x").write.parquet(s"$dir/$vdir")
+    else members.foreach(m => Seq(value).toDF("x").write.parquet(s"$dir/$vdir/$m"))
     vdir
   }
 
-  test("ADVICE r17: a rival's swap landing inside the basis's claim-to-swap window refuses (pointer pin)") {
+  test("a rival committing after the basis read refuses the publish, however early its write began") {
     val dir = freshDir()
     Sources.publishSnapshot(Seq(1).toDF("x"), dir)
-    // rival A claims version 2 (claim-before-write) and finishes its
-    // data write, but has NOT swapped yet
-    val vdirA = rivalClaim(dir, 2L, "rivala", 222)
-    // B takes its read basis now: committed already counts A's claim
-    // (2), but the pointer — the version B's content reads resolve —
-    // is still 1
+    // rival A has written version 2 in full but not claimed it yet
+    val vdirA = crashedWrite(dir, 2L, "rivala", 222)
+    // B takes its read basis now: the committed version is still 1, and
+    // B's content read resolves version 1
     val basis = Sources.snapshotReadBasis(spark, dir)
-    assert(basis.committed == 2L && basis.pointer == 1L,
-      s"test setup drifted: $basis")
+    assert(basis == 1L, s"test setup drifted: $basis")
     assert(Sources.readSnapshot(spark, dir).collect().map(_.getInt(0)).toSeq
-      == Seq(1), "B's content read must still resolve version 1")
-    // A swaps its fold live — inside B's claim-to-swap window
-    val (fs, uri, conf, root) = hadoopBits(dir)
-    Sources.swapSnapshotOrRefuse(fs, uri, conf, root, dir, vdirA, 2L, "rivala")
-    // pre-r18 this passed (committed == basis == 2), claimed 3 and
-    // silently replaced A's fold with content derived from version 1
+      == Seq(1), "B's content read must resolve version 1")
+    // A claims: its fold is live from this instant
+    Claims.plant(dir, 2L, Claims.snapshot(vdirA))
+    assert(Sources.readSnapshot(spark, dir).collect().map(_.getInt(0)).toSeq == Seq(222))
+    // B derived from version 1: it must refuse, not replace A's fold
     intercept[java.util.ConcurrentModificationException] {
       Sources.publishSnapshot(Seq(99).toDF("x"), dir, basis = Some(basis))
     }
@@ -267,72 +265,60 @@ class OccSnapshotSpec extends SparkSpec {
       == Seq(300))
   }
 
-  test("an in-flight rival claim blocks ALL publishes until swap or age-out; the aged-out zombie's swap refuses") {
+  test("an unclaimed rival write blocks no publish; the rival's late claim refuses") {
     val dir = freshDir()
-    Sources.publishSnapshot(Seq(1).toDF("x"), dir)
-    // rival A is mid-publish: claimed version 2, still writing
-    val vdirA = rivalClaim(dir, 2L, "inflight", 222)
-    // no publisher — pinned or not — may claim past a live in-flight
-    // rival: claiming 3 would let this publish (derived from version
-    // 1) swap over A's fold when A lands mid-write
-    val e = intercept[java.util.ConcurrentModificationException] {
-      Sources.publishSnapshot(Seq(99).toDF("x"), dir)
+    Sources.publishSnapshotGroup(Seq("a" -> Seq(1).toDF("x"), "b" -> Seq(1).toDF("x")), dir)
+    val basis = Sources.snapshotReadBasis(spark, dir)
+    // rival A is mid-publish at version 2: written, not claimed
+    val vdirA = crashedWrite(dir, 2L, "inflight", 222, Seq("a", "b"))
+    // no publish waits on it: B lands at once, at version 2
+    Sources.publishSnapshotGroup(Seq("a" -> Seq(3).toDF("x"), "b" -> Seq(3).toDF("x")), dir)
+    assert(group(dir) == (Seq(3), Seq(3)))
+    assert(!names(dir)(vdirA), "the dir no writer can commit any more was kept")
+    // A, however slow, finishes and claims on its basis: version 2 is
+    // taken, so it refuses loudly and leaves nothing behind
+    val before = names(dir)
+    intercept[java.util.ConcurrentModificationException] {
+      Sources.publishSnapshotGroup(Seq("a" -> Seq(222).toDF("x"), "b" -> Seq(222).toDF("x")),
+        dir, basis = Some(basis))
     }
-    assert(e.getMessage.contains("in-flight"), e.getMessage)
-    // A ages past the liveness grace → declared dead: publishes
-    // proceed (numbering past), and the prune reclaims A's litter
-    sys.props("graft.snapshot.graceMs") = "0"
-    try {
-      Sources.publishSnapshot(Seq(3).toDF("x"), dir)
-      assert(Sources.readSnapshot(spark, dir).collect().map(_.getInt(0)).toSeq
-        == Seq(3))
-      val (fs, uri, conf, root) = hadoopBits(dir)
-      assert(!fs.exists(new org.apache.hadoop.fs.Path(root, vdirA)),
-        "dead claimer's version dir was not reclaimed")
-      // the zombie writer (actually alive, just slower than the grace)
-      // now tries to land its swap: it must refuse loudly — its number
-      // was declared dead and its dir reclaimed; swapping would point
-      // readers at a deleted dir or replace the rival's fold
-      intercept[java.util.ConcurrentModificationException] {
-        Sources.swapSnapshotOrRefuse(fs, uri, conf, root, dir, vdirA, 2L,
-          "inflight")
-      }
-      assert(Sources.readSnapshot(spark, dir).collect().map(_.getInt(0)).toSeq
-        == Seq(3), "zombie swap landed")
-    } finally sys.props.remove("graft.snapshot.graceMs"): Unit
+    assert(names(dir) == before, s"the refused publish left ${names(dir) -- before}")
+    assert(group(dir) == (Seq(3), Seq(3)), "the late claim landed")
   }
 
-  test("crash-loop litter above live is bounded: aged claims + dirs are reclaimed by later publishes (VERDICT r17 #3)") {
+  test("a crash after the group claim: the claim is the commit, and publishing goes on at once") {
+    val dir = freshDir()
+    Sources.publishSnapshotGroup(Seq("a" -> Seq(1).toDF("x"), "b" -> Seq(1).toDF("x")), dir)
+    // the crashed publish wrote version 2, claimed it, and died before
+    // its prune
+    val vdir = crashedWrite(dir, 2L, "crashed1", 2, Seq("a", "b"))
+    Claims.plant(dir, 2L, Claims.snapshot(vdir))
+    assert(group(dir) == (Seq(2), Seq(2)), "a fresh reader missed the committed version")
+    for (v <- 3 to 5)
+      Sources.publishSnapshotGroup(Seq("a" -> Seq(v).toDF("x"), "b" -> Seq(v).toDF("x")), dir)
+    assert(group(dir) == (Seq(5), Seq(5)))
+    // the prune the crash skipped runs with the next publishes: below
+    // the two-publish window nothing is left
+    assert(Sources.snapshotVersions(spark, dir) == Seq(3L, 4L, 5L))
+    assert(names(dir).count(_.startsWith("v-")) == 3, s"${names(dir)}")
+  }
+
+  test("crash-loop litter is bounded: every crashed dir goes with the publish that takes its number") {
     val dir = freshDir()
     Sources.publishSnapshot(Seq(1).toDF("x"), dir)
-    // three crashed publish attempts: each claimed, wrote (some of)
-    // its version dir, and died before the swap
-    val crashDirs = (2L to 4L).map(n => rivalClaim(dir, n, s"crash$n", n.toInt))
-    val (fs, _, _, root) = hadoopBits(dir)
-    def names(): Set[String] =
-      fs.listStatus(root).toSeq.map(_.getPath.getName).toSet
-    // fresh litter is NEVER touched (it may be an in-flight write):
-    // within the grace a publish refuses rather than reclaims
-    intercept[java.util.ConcurrentModificationException] {
-      Sources.publishSnapshot(Seq(9).toDF("x"), dir)
-    }
-    assert(crashDirs.forall(names()), "fresh litter was touched")
-    sys.props("graft.snapshot.graceMs") = "0"
-    try {
-      // aged out → the next successful publish reclaims every crashed
-      // version DIR at claim time (the expensive half, reclaimed while
-      // provably never-live)
-      Sources.publishSnapshot(Seq(10).toDF("x"), dir)
-      assert(crashDirs.forall(d => !names().contains(d)),
-        s"crashed version dirs survived: ${names()}")
-      // the burned markers are tiny and die as the pointer passes them
-      // (below-live retention) — two more publishes collect all three
-      Sources.publishSnapshot(Seq(11).toDF("x"), dir)
-      Sources.publishSnapshot(Seq(12).toDF("x"), dir)
-      assert((2L to 4L).forall(n => !names().contains(f"commit-$n%012d")),
-        s"burned crash markers survived: ${names()}")
-      assert(Sources.readSnapshot(spark, dir).collect().map(_.getInt(0)).toSeq
-        == Seq(12))
-    } finally sys.props.remove("graft.snapshot.graceMs"): Unit
+    // a publisher crash-looping on basis 1: each attempt wrote version 2
+    // and died before claiming it
+    val crashDirs = Seq("crash1", "crash2", "crash3").map(crashedWrite(dir, 2L, _, 2))
+    // a dir above the highest claim may be an in-flight write: never
+    // touched, and no publish waits on any of them
+    Sources.publishSnapshot(Seq(10).toDF("x"), dir)
+    assert(crashDirs.forall(d => !names(dir)(d)), s"crashed version dirs survived: ${names(dir)}")
+    val ahead = crashedWrite(dir, 4L, "ahead", 4)
+    Sources.publishSnapshot(Seq(11).toDF("x"), dir)
+    assert(names(dir)(ahead), "a dir above the highest claim was touched")
+    Sources.publishSnapshot(Seq(12).toDF("x"), dir)
+    assert(!names(dir)(ahead), s"${names(dir)}")
+    assert(Sources.readSnapshot(spark, dir).collect().map(_.getInt(0)).toSeq == Seq(12))
+    assert(names(dir).count(_.startsWith("v-")) == 3, s"${names(dir)}")
   }
 }

@@ -38,7 +38,7 @@ class ReadSchemaSpec extends SparkSpec {
   /** The live manifest's entries: its lines after the format-version
     * line and the per-group schema lines. */
   private def liveEntries(dir: String): Seq[String] =
-    readText(s"$dir/${readText(s"$dir/_current")}").split("\n").toSeq
+    readText(s"$dir/${Claims.live(dir)}").split("\n").toSeq
       .filterNot(l => l.startsWith("version\t") || l.startsWith("schema\t"))
 
   /** The live manifest's dirs read per batch dir with inference. */
