@@ -27,7 +27,7 @@ object GraftSql {
     * ([[graft.operators.LexicalIndex]]) for SQL (round 16 — the index
     * layer joins the pure-SQL proof surface): `<prefix>_postings`
     * `(doc_id, dl, term, tf, _b)` and `<prefix>_stats`
-    * `(n_docs, tot)`, generation pointer resolved and tombstones
+    * `(n_docs, tot)`, index version resolved and tombstones
     * applied at registration (snapshot-isolation semantics —
     * re-register to pick up later applies).
     * Any lexical scoring is then plain SQL over the index tables,

@@ -18,7 +18,9 @@ import graft.sources.Sources
   * standard LSM one (RocksDB's compaction trigger on L0 file count,
   * Lucene's TieredMergePolicy segment budget): a LISTING-ONLY probe
   * cheap enough for every apply, and a fuller report (with the one
-  * delta-scale tombstone count job) for the maintenance decision. */
+  * delta-scale tombstone count job) for the maintenance decision.
+  * Superseded versions of a fully rebuilt index are not this module's
+  * concern: the rebuild that commits prunes them ([[IndexGenerations]]). */
 object IndexMaintenance {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
@@ -64,28 +66,7 @@ object IndexMaintenance {
   final case class MaintenancePolicy(
       maxGenerations: Int = 8,
       maxTombstoneSegments: Int = 8,
-      maxTombstoneRows: Long = 1000000L,
-      generationGraceMs: Long = 3600000L)
-
-  /** Automated reclamation of superseded index GENERATIONS (rebuild /
-    * retrain leftovers — [[IndexGenerations]]) and, once a pointer
-    * exists, the superseded plain-layout tables: an age-thresholded
-    * [[IndexGenerations.vacuum]] run from the same maintenance loop as
-    * the compaction trigger, so "vacuum sometimes" is code, not a
-    * runbook. `rootDir` is the LOGICAL index root (the dir holding the
-    * `genswap-*` claims), not the live generation. Listing-only; deletes
-    * nothing until the last swap is `generationGraceMs` old, so any
-    * reader that resolved before the swap has had the grace period to
-    * finish. Returns dirs reclaimed (0 on plain / freshly-swapped
-    * layouts). */
-  def vacuumSupersededGenerations(spark: SparkSession, rootDir: String,
-      policy: MaintenancePolicy): Int = {
-    val n = IndexGenerations.vacuum(spark, rootDir, policy.generationGraceMs)
-    if (n > 0)
-      log.info(s"index maintenance: vacuumed $n superseded generation dir(s) " +
-        s"under $rootDir (grace ${policy.generationGraceMs} ms)")
-    n
-  }
+      maxTombstoneRows: Long = 1000000L)
 
   /** Full health report. `tables` = (name, partitionCol) of each data
     * table under `indexDir`. One tiny Spark job (the tombstone count);

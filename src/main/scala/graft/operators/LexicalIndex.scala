@@ -55,13 +55,6 @@ object LexicalIndex {
   private val Bm25Tables =
     Seq("postings" -> "_b", "forward" -> "_db", "doclen" -> "_db")
 
-  /** Health report for a maintained BM25 index — see
-    * [[IndexMaintenance.health]]. */
-  def bm25IndexHealth(spark: SparkSession,
-      dir: String): IndexMaintenance.IndexHealth =
-    IndexMaintenance.health(spark,
-      IndexGenerations.resolve(spark, dir), Bm25Tables)
-
   /** The automated compaction trigger (VERDICT r14 #2): compact when
     * the index is past `policy`'s generation/tombstone thresholds,
     * no-op otherwise. Returns (pre-maintenance health, compacted?). */
@@ -69,13 +62,9 @@ object LexicalIndex {
       policy: IndexMaintenance.MaintenancePolicy =
         IndexMaintenance.MaintenancePolicy()):
       (IndexMaintenance.IndexHealth, Boolean) = {
-    val live = IndexGenerations.resolve(spark, dir)
-    val r = IndexMaintenance.maintainIfNeeded(spark, live, Bm25Tables, policy)(
+    val live = Sources.resolveSnapshot(spark, dir)
+    IndexMaintenance.maintainIfNeeded(spark, live, Bm25Tables, policy)(
       compactBm25Index(spark, live))
-    // same loop, other axis: reclaim generations an old rebuild
-    // superseded once they are past the reader grace period
-    IndexMaintenance.vacuumSupersededGenerations(spark, dir, policy): Unit
-    r
   }
 
   private val postingsCfg = TableConfig("bm25_postings", Seq("term", "doc_id"), Seq.empty)
@@ -170,10 +159,10 @@ object LexicalIndex {
   def applyBm25IndexChanges(spark: SparkSession, indexDir: String, changes: DataFrame,
       idCol: String = "doc_id", textCol: String = "text",
       changeCol: String = "_change", mode: String = "rewrite"): Bm25Maintenance = {
-    // resolve the live generation first: after a rebuild swap
+    // resolve the live version first: after a rebuild
     // ([[rebuildBm25Index]]) maintenance continues against the NEW
     // bucketing/tombstone log transparently
-    val dir = IndexGenerations.resolve(spark, indexDir)
+    val dir = Sources.resolveSnapshot(spark, indexDir)
     require(mode == "rewrite" || mode == "append",
       s"applyBm25IndexChanges: unknown mode '$mode' (rewrite|append)")
     // ONE materialization of the caller's feed (r19, guide §2.4): the
@@ -390,7 +379,7 @@ object LexicalIndex {
     * [[searchBm25Index]] does), and compaction requires exclusive
     * maintenance (no concurrent appliers — see [[LsmTombstones]]). */
   def compactBm25Index(spark: SparkSession, indexDir: String): Unit = {
-    val dir = IndexGenerations.resolve(spark, indexDir)
+    val dir = Sources.resolveSnapshot(spark, indexDir)
     if (!LsmTombstones.exists(spark, dir)) return
     val foldSeq = LsmTombstones.maxLiveSeq(spark, dir)
     def fold(table: String, partCol: String): Unit = {
@@ -430,7 +419,7 @@ object LexicalIndex {
     Sources.indexBatchKeys(spark, s"$dir/forward", "doc_id", fpp = Sources.BatchLookupFpp): Unit
   }
 
-  /** LIVE logical state of the postings table — generation pointer
+  /** LIVE logical state of the postings table — index version
     * resolved, tombstone kills applied: `(doc_id, dl, term, tf, _b)`.
     * This is the SQL read surface ([[graft.GraftSql.registerBm25Index]]
     * registers it as a view so any lexical scoring is expressible in
@@ -439,7 +428,7 @@ object LexicalIndex {
     * pruning stays on the [[searchBm25Index]] path, which plants the
     * `_b` literals the view cannot know. */
   def bm25PostingsLive(spark: SparkSession, indexDir: String): DataFrame = {
-    val dir = IndexGenerations.resolve(spark, indexDir)
+    val dir = Sources.resolveSnapshot(spark, indexDir)
     LsmTombstones.filterLive(spark, dir,
       Sources.readMergePartitioned(spark, s"$dir/postings", "_b"), "doc_id")
       .select("doc_id", "dl", "term", "tf", "_b")
@@ -449,7 +438,7 @@ object LexicalIndex {
     * generation-resolved — one snapshot row. */
   def bm25StatsLive(spark: SparkSession, indexDir: String): DataFrame =
     Sources.readSnapshot(spark,
-      s"${IndexGenerations.resolve(spark, indexDir)}/stats")
+      s"${Sources.resolveSnapshot(spark, indexDir)}/stats")
 
   /** BM25 top-k over the persisted index: the query terms' buckets
     * are the ONLY postings partitions read (static pruning via the
@@ -460,7 +449,7 @@ object LexicalIndex {
   def searchBm25Index(spark: SparkSession, indexDir: String, queryTerms: Seq[String],
       k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(queryTerms.nonEmpty, "empty query")
-    val dir = IndexGenerations.resolve(spark, indexDir)
+    val dir = Sources.resolveSnapshot(spark, indexDir)
     // liveTf: term-bucket pruned, tombstone-filtered (the kill join is
     // delta-scale and broadcasts; a clean index skips it entirely)
     val tf = liveTf(spark, indexDir, queryTerms)
@@ -547,7 +536,7 @@ object LexicalIndex {
     * unions; also the core of [[searchBm25Index]]. */
   private def liveTf(spark: SparkSession, indexDir: String,
       queryTerms: Seq[String]): DataFrame = {
-    val dir = IndexGenerations.resolve(spark, indexDir)
+    val dir = Sources.resolveSnapshot(spark, indexDir)
     val nBuckets = readNBuckets(spark, dir)
     import spark.implicits._
     val buckets = queryTerms.toDF("term")
@@ -583,35 +572,31 @@ object LexicalIndex {
     val tf = dirs.map(liveTf(spark, _, queryTerms)).reduce(_ unionByName _)
     val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val stats = dirs.map(d => Sources.readSnapshot(spark,
-        s"${IndexGenerations.resolve(spark, d)}/stats"))
+        s"${Sources.resolveSnapshot(spark, d)}/stats"))
       .reduce(_ unionByName _)
       .agg(sum(col("n_docs")).cast("long").as("n_docs"),
         sum(col("tot")).cast("long").as("tot"))
     TextAnalysis.bm25Rank(tf, dfreq, stats, k, k1, b)
   }
 
-  /** Full rebuild as an atomic GENERATION swap — for the maintenance
-    * moves the delta path cannot express: re-bucketing (`nBuckets`
-    * sized for a grown corpus), analyzer changes, or a retention purge
-    * that must drop documents from every bucket (pass the purged
-    * corpus). The new index (all three tables + stats + an empty
-    * tombstone log) is built complete and cold in a generation dir,
-    * then a generation swap claim names it ([[IndexGenerations]]) —
-    * in-place overwrite would tear concurrent searches between old
-    * postings and new stats; the swap never does. Readers mid-search
-    * keep the old generation (on disk until [[IndexGenerations.vacuum]]);
+  /** Full rebuild as a new snapshot version of the index root — for the
+    * maintenance moves the delta path cannot express: re-bucketing
+    * (`nBuckets` sized for a grown corpus), analyzer changes, or a
+    * retention purge that must drop documents from every bucket (pass
+    * the purged corpus). The new index (all three tables + stats + an
+    * empty tombstone log) is built complete and cold in a version dir,
+    * then one claim commits it ([[IndexGenerations.rebuild]]) — in-place
+    * overwrite would tear concurrent searches between old postings and
+    * new stats; the claim never does. Readers mid-search keep the old
+    * version (retained until two later rebuilds have committed);
     * subsequent applies/searches/compactions resolve the new one
     * transparently. Quiesce the incremental applier across the
     * cutover — an in-flight delta survives only in the outgoing
-    * generation (the moving-corpus lost update; the checkpointed
+    * version (the moving-corpus lost update; the checkpointed
     * change-feed consumer is naturally quiet between micro-batches).
-    * Returns the new generation dir. */
+    * Returns the new version dir. */
   def rebuildBm25Index(spark: SparkSession, dir: String, docs: DataFrame,
       idCol: String = "doc_id", textCol: String = "text",
-      nBuckets: Int = 32): String = {
-    val gen = IndexGenerations.next(spark, dir)
-    writeBm25Index(docs, gen, idCol, textCol, nBuckets)
-    IndexGenerations.swap(spark, dir, gen)
-    gen
-  }
+      nBuckets: Int = 32): String =
+    IndexGenerations.rebuild(spark, dir)(writeBm25Index(docs, _, idCol, textCol, nBuckets))
 }

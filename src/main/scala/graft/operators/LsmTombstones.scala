@@ -27,7 +27,10 @@ import org.apache.spark.sql.functions._
   * `_floor` control file so [[nextSeq]] never reissues a consumed
   * generation number (folded data rows are stamped AT the floor; see
   * the compaction-visibility note on
-  * [[LexicalIndex.compactBm25Index]]).
+  * [[LexicalIndex.compactBm25Index]]). The floor states its format
+  * version on its first line ([[graft.sources.Sources.readNumberFile]]):
+  * one in a format this engine does not read is refused by every apply,
+  * compaction and [[clear]].
   *
   * == Writer discipline ==
   * Kill-set appends are safe under overlapping writers (above), and
@@ -78,8 +81,8 @@ private[operators] object LsmTombstones {
   def floor(spark: SparkSession, indexDir: String): Long = {
     val d = dirOf(indexDir)
     val fs = fsOf(spark, d)
-    graft.sources.Sources.readControl(fs, new org.apache.hadoop.fs.Path(d, FloorName))
-      .fold(0L)(_.toLong)
+    graft.sources.Sources.readNumberFile(fs, new org.apache.hadoop.fs.Path(d, FloorName))
+      .getOrElse(0L)
   }
 
   /** True iff live (un-folded) tombstone segments exist. Listing-only
@@ -157,7 +160,8 @@ private[operators] object LsmTombstones {
     val newFloor = math.max(floor(spark, indexDir), upToSeq)
     graft.sources.Sources.atomicReplace(fs, new java.net.URI(d),
       spark.sparkContext.hadoopConfiguration, root, FloorName,
-      newFloor.toString, java.util.UUID.randomUUID().toString.take(8))
+      graft.sources.Sources.numberFileText(newFloor),
+      java.util.UUID.randomUUID().toString.take(8))
     segments(spark, indexDir).collect { case (s, p) if s <= upToSeq => p }
       .foreach(p => fs.delete(p, true))
     fs.listStatus(root).toSeq

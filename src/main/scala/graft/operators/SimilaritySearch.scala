@@ -456,7 +456,7 @@ object SimilaritySearch {
       idCol: String = "vec_id", vecCol: String = "embedding",
       allowedIds: Option[DataFrame] = None): DataFrame = {
     import spark.implicits._
-    val dir = IndexGenerations.resolve(spark, indexDir)
+    val dir = graft.sources.Sources.resolveSnapshot(spark, indexDir)
     val cents = spark.read.parquet(s"$dir/centroids").collect() // nLists tiny rows
       .map(r => r.getAs[Int]("_list") -> r.getSeq[Double](1))
       .sortBy(_._1).map(_._2.toSeq).toSeq
@@ -600,13 +600,6 @@ object SimilaritySearch {
 
   private val IvfPqTables = Seq("codes" -> "_list")
 
-  /** Health report for a maintained IVF-PQ index — see
-    * [[IndexMaintenance.health]]. */
-  def ivfPqIndexHealth(spark: org.apache.spark.sql.SparkSession,
-      dir: String): IndexMaintenance.IndexHealth =
-    IndexMaintenance.health(spark,
-      IndexGenerations.resolve(spark, dir), IvfPqTables)
-
   /** The automated compaction trigger (VERDICT r14 #2): compact when
     * the index is past `policy`'s generation/tombstone thresholds,
     * no-op otherwise. Returns (pre-maintenance health, compacted?). */
@@ -615,13 +608,9 @@ object SimilaritySearch {
       policy: IndexMaintenance.MaintenancePolicy =
         IndexMaintenance.MaintenancePolicy()):
       (IndexMaintenance.IndexHealth, Boolean) = {
-    val live = IndexGenerations.resolve(spark, dir)
-    val r = IndexMaintenance.maintainIfNeeded(spark, live, IvfPqTables, policy)(
+    val live = graft.sources.Sources.resolveSnapshot(spark, dir)
+    IndexMaintenance.maintainIfNeeded(spark, live, IvfPqTables, policy)(
       compactIvfPqIndex(spark, live))
-    // same loop, other axis: reclaim generations an old rebuild
-    // superseded once they are past the reader grace period
-    IndexMaintenance.vacuumSupersededGenerations(spark, dir, policy): Unit
-    r
   }
 
   /** Incremental maintenance of a persisted IVF-PQ index — apply a
@@ -691,10 +680,10 @@ object SimilaritySearch {
       indexDir: String, changes: DataFrame, idCol: String = "vec_id",
       vecCol: String = "embedding", changeCol: String = "_change",
       mode: String = "rewrite"): IvfPqMaintenance = {
-    // resolve the live generation first: after a retrain swap
+    // resolve the live version first: after a retrain
     // ([[retrainIvfPqIndex]]) maintenance continues against the NEW
     // quantizers/tombstone log transparently
-    val dir = IndexGenerations.resolve(spark, indexDir)
+    val dir = graft.sources.Sources.resolveSnapshot(spark, indexDir)
     val codesDir = s"$dir/codes"
     val cfg = graft.types.TableConfig("ivfpq_codes", Seq("_id"), Seq.empty)
     require(mode == "rewrite" || mode == "append",
@@ -802,7 +791,7 @@ object SimilaritySearch {
     * the full compaction-visibility contract; it is identical here. */
   def compactIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
       indexDir: String): Unit = {
-    val dir = IndexGenerations.resolve(spark, indexDir)
+    val dir = graft.sources.Sources.resolveSnapshot(spark, indexDir)
     if (!LsmTombstones.exists(spark, dir)) return
     val foldSeq = LsmTombstones.maxLiveSeq(spark, dir)
     val codesDir = s"$dir/codes"
@@ -828,37 +817,34 @@ object SimilaritySearch {
     * ([[IvfPqMaintenance.driftRatio]]) prescribes, as code. Builds a
     * complete NEW index (fresh coarse centroids + PQ codebooks trained
     * on `corpus`, every vector re-encoded, a new drift baseline, an
-    * empty tombstone log) as a cold generation dir and atomically
-    * swaps the index onto it with a generation claim
-    * ([[IndexGenerations]]) — readers are never torn between old codes
-    * and new codebooks, a reader mid-search keeps the old generation,
-    * and subsequent [[applyIvfPqIndexChanges]] / [[searchIvfPqIndex]] /
-    * [[compactIvfPqIndex]] calls resolve the new one transparently.
+    * empty tombstone log) as a cold version dir and commits it with one
+    * claim ([[IndexGenerations.rebuild]]) — readers are never torn
+    * between old codes and new codebooks, a reader mid-search keeps the
+    * old version, and subsequent [[applyIvfPqIndexChanges]] /
+    * [[searchIvfPqIndex]] / [[compactIvfPqIndex]] calls resolve the new
+    * one transparently.
     *
     * `corpus` is the CURRENT corpus (the index is derived state; at
     * 100 TB the corpus is the table of record) — quiesce the
     * incremental applier across the cutover or its in-flight delta is
     * lost to the rebuild input, the documented moving-corpus lost
     * update. Cost is one full [[writeIvfPqIndex]] build; the old
-    * generation stays on disk for in-flight readers until
-    * [[IndexGenerations.vacuum]]. Returns the new generation dir. */
+    * version stays on disk for in-flight readers until two later
+    * rebuilds have committed. Returns the new version dir. */
   def retrainIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, corpus: DataFrame, coarseIds: Seq[Long], pqIds: Seq[Long],
       m: Int = 4, idCol: String = "vec_id",
-      vecCol: String = "embedding"): String = {
-    val gen = IndexGenerations.next(spark, dir)
-    writeIvfPqIndex(corpus, gen, coarseIds, pqIds, m, idCol, vecCol)
-    IndexGenerations.swap(spark, dir, gen)
-    gen
-  }
+      vecCol: String = "embedding"): String =
+    IndexGenerations.rebuild(spark, dir)(
+      writeIvfPqIndex(corpus, _, coarseIds, pqIds, m, idCol, vecCol))
 
-  /** LIVE logical state of the code table — generation pointer
+  /** LIVE logical state of the code table — index version
     * resolved, tombstone kills applied: `(_id, codes, _list)`. The SQL
     * read surface ([[graft.GraftSql.registerIvfPqIndex]]); probed-list
     * static pruning stays on the [[searchIvfPqIndex]] path. */
   def ivfPqCodesLive(spark: org.apache.spark.sql.SparkSession,
       indexDir: String): DataFrame = {
-    val dir = IndexGenerations.resolve(spark, indexDir)
+    val dir = graft.sources.Sources.resolveSnapshot(spark, indexDir)
     LsmTombstones.filterLive(spark, dir,
       graft.sources.Sources.readMergePartitioned(spark, s"$dir/codes", "_list"),
       "_id")
@@ -870,14 +856,14 @@ object SimilaritySearch {
   def ivfPqCentroidsLive(spark: org.apache.spark.sql.SparkSession,
       indexDir: String): DataFrame =
     spark.read.parquet(
-      s"${IndexGenerations.resolve(spark, indexDir)}/centroids")
+      s"${graft.sources.Sources.resolveSnapshot(spark, indexDir)}/centroids")
 
   /** The index's PQ codebooks `(subspace, code, entry)`, generation-
     * resolved — m·k tiny rows. */
   def ivfPqCodebooksLive(spark: org.apache.spark.sql.SparkSession,
       indexDir: String): DataFrame =
     spark.read.parquet(
-      s"${IndexGenerations.resolve(spark, indexDir)}/codebooks")
+      s"${graft.sources.Sources.resolveSnapshot(spark, indexDir)}/codebooks")
 
   // ───────────── per-filter-partition indexes (round 16) ─────────────
 
@@ -922,7 +908,7 @@ object SimilaritySearch {
     * it from the corpus). A per-partition retrain would break that
     * equivalence AND cross-partition comparability — retrain is a
     * root-level operation here (rebuild all partitions, one
-    * [[IndexGenerations]] swap each).
+    * [[IndexGenerations.rebuild]] each).
     *
     * Layout: `rootDir/<filterCol>=<value>/` each a full standalone
     * index (own codes/centroids/codebooks/drift/tombstones), so every
@@ -1024,9 +1010,9 @@ object SimilaritySearch {
     * composition as [[ivfPqIndexSink]] (checkpoint + idempotent
     * append re-apply); the stream must be the family's single logical
     * writer. Offline per-family rebuilds (a retrain of every
-    * partition, one generation swap each) between micro-batches are
+    * partition, one committed version each) between micro-batches are
     * picked up transparently — each partition dir resolves its own
-    * live generation per apply. */
+    * live version per apply. */
   def partitionedIvfPqIndexSink(changes: DataFrame, rootDir: String,
       filterCol: String, checkpointDir: String, idCol: String = "vec_id",
       vecCol: String = "embedding", changeCol: String = "_change",

@@ -643,20 +643,13 @@ object Sources {
   /** The trimmed UTF-8 content of a small control file (a claim
     * marker, a checkpoint, a sidecar); None when it does not
     * exist. Any other I/O error propagates. */
-  private[graft] def readControl(fs: org.apache.hadoop.fs.FileSystem,
+  private def readControl(fs: org.apache.hadoop.fs.FileSystem,
       p: org.apache.hadoop.fs.Path): Option[String] =
     try {
       val in = fs.open(p)
       try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim)
       finally in.close()
     } catch { case _: java.io.FileNotFoundException => None }
-
-  /** [[readControl]] that maps every I/O error to "" (no valid
-    * content) — for claim markers a scan only classifies. */
-  private[graft] def readControlQuiet(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): String =
-    try readControl(fs, p).getOrElse("")
-    catch { case _: java.io.IOException => "" }
 
   // ─────────────── optimistic-concurrency commit (round 16) ───────────────
 
@@ -666,10 +659,11 @@ object Sources {
     new org.apache.hadoop.fs.Path(root, f"$CommitPrefix$n%012d")
 
   /** The numbers of a table root's `commit-<n>` claims, from one
-    * listing; none for an absent root. A root that holds a `_current`
-    * pointer but no claim is a layout from before claimed commits (a
-    * table's state is its highest claim, and such a root has none):
-    * refused, naming the root. */
+    * listing; none for an absent root. A root that holds a pointer or
+    * claim of an earlier layout but no claim (a table's `_current`, an
+    * index's `_gen` or `genswap-*`) is a layout from before claimed
+    * commits (a table's state is its highest claim, and such a root has
+    * none): refused, naming the root. */
   private def claimNumbers(fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path): Seq[Long] = {
     val listed =
@@ -679,10 +673,11 @@ object Sources {
       case st if st.isFile && st.getPath.getName.startsWith(CommitPrefix) =>
         numberOf(st.getPath.getName, CommitPrefix)
     }
-    if (claims.isEmpty && listed.exists(_.getPath.getName == "_current"))
-      throw new IllegalStateException(s"table $root holds a _current pointer but no " +
+    if (claims.isEmpty) listed.map(_.getPath.getName)
+      .find(n => n == "_current" || n == "_gen" || n.startsWith("genswap-"))
+      .foreach(n => throw new IllegalStateException(s"table $root holds $n but no " +
         "commit-<n> claim: a layout from before claimed commits, which this engine does " +
-        "not read (a table's state is the one its highest claim names) — refusing")
+        "not read (a table's state is the one its highest claim names) — refusing"))
     claims
   }
 
@@ -768,13 +763,6 @@ object Sources {
       won
     }
   }
-
-  /** [[createExclusive]] for claim protocols outside this file (the
-    * index generation swap's dense slots,
-    * [[graft.operators.IndexGenerations.swap]]). */
-  private[graft] def createExclusiveClaim(fs: org.apache.hadoop.fs.FileSystem,
-      uri: java.net.URI, path: org.apache.hadoop.fs.Path,
-      content: String): Boolean = createExclusive(fs, uri, path, content)
 
   /** Temp-file prefix for in-flight [[createExclusive]] claims. Deliberately
     * outside every control-file namespace (`commit-*`, `manifest-*`, `b-*`,
@@ -1397,9 +1385,11 @@ object Sources {
     *   - steady state: `f` gets [[readMergePartitionedChanges]]
     *     (current state of partitions rewritten since the checkpoint);
     *   - no publishes since the checkpoint: `f` is NOT called (None);
-    *   - consumer lagged past retention (checkpoint version pruned) or
-    *     an unreadable checkpoint file: documented degrade to a full
-    *     re-read, never a silent partial delta.
+    *   - consumer lagged past retention (checkpoint version pruned):
+    *     documented degrade to a full re-read, never a silent partial
+    *     delta;
+    *   - a checkpoint file in a format this engine does not read
+    *     ([[readNumberFile]]): refused, naming it, and `f` is not called.
     *
     * The checkpoint (`<checkpointDir>/_version`) is written AFTER `f`
     * returns, with an atomic rename-over ([[atomicReplace]]): a
@@ -1457,8 +1447,8 @@ object Sources {
     * receives the `orphaned` keys from the same row diff (keys
     * present in the checkpointed version, absent from the live state
     * of the rewritten partitions) and a `fullResync` flag for the
-    * documented degrade paths (first run / lagged past retention /
-    * unreadable checkpoint), where the delta is the FULL table and
+    * documented degrade paths (first run / lagged past retention),
+    * where the delta is the FULL table and
     * the orphan set cannot be derived from a diff — a consumer seeing
     * `fullResync` must rebuild its state from the delta alone, which
     * is exactly what makes those paths safe. Same at-least-once
@@ -1538,7 +1528,9 @@ object Sources {
     * resolve the committed version (the highest claim), read the
     * durable checkpoint, build the delta for the gap, run `f`, then
     * advance the checkpoint with an atomic rename-over (crash inside
-    * `f` ⇒ redelivery next run; `f` must be idempotent). */
+    * `f` ⇒ redelivery next run; `f` must be idempotent). The checkpoint
+    * `_version` is a [[readNumberFile]] file: absent means a first run,
+    * and one in a format this engine does not read is refused. */
   private def processCheckpointed[D, T](spark: SparkSession, tableDir: String,
       checkpointDir: String, f: (D, Long) => T)
       (deltaOf: Option[Long] => D): Option[T] = {
@@ -1550,12 +1542,12 @@ object Sources {
     val ckUri = new java.net.URI(checkpointDir)
     val ckFs = org.apache.hadoop.fs.FileSystem.get(ckUri, conf)
     val ckRoot = new org.apache.hadoop.fs.Path(checkpointDir)
-    // unreadable checkpoint → full re-read
-    val last: Option[Long] = readControl(ckFs,
-      new org.apache.hadoop.fs.Path(ckRoot, "_version")).flatMap(_.toLongOption)
+    // no checkpoint → first run, a full read; one this engine cannot
+    // read is refused, never taken for a first run
+    val last = readNumberFile(ckFs, new org.apache.hadoop.fs.Path(ckRoot, "_version"))
     if (last.contains(live)) return None
     val out = f(deltaOf(last), live)
-    atomicReplace(ckFs, ckUri, conf, ckRoot, "_version", live.toString,
+    atomicReplace(ckFs, ckUri, conf, ckRoot, "_version", numberFileText(live),
       java.util.UUID.randomUUID().toString.take(8))
     Some(out)
   }
@@ -2251,9 +2243,9 @@ object Sources {
   }
 
   /** The non-empty trimmed lines of a versioned control file (a merge
-    * manifest, a snapshot claim) after its first, format-version line;
-    * refuses, naming the file as `what`, content that states no format
-    * version or one other than `format`. */
+    * manifest, a snapshot claim, a [[readNumberFile]] file) after its
+    * first, format-version line; refuses, naming the file as `what`,
+    * content that states no format version or one other than `format`. */
   private def afterVersionLine(what: String, format: Int, content: String): Seq[String] = {
     val lines = content.split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
     def refuse(why: String) = throw new IllegalStateException(
@@ -2265,6 +2257,26 @@ object Sources {
       case None => refuse("states no format version")
     }
   }
+
+  /** The format version of a control file that holds one number: a
+    * change-feed checkpoint's `_version`, an LSM index's `_floor`. */
+  private val NumberFileFormat = 1
+
+  /** The content of a [[readNumberFile]] file holding `n`: the
+    * format-version line, then the number. */
+  private[graft] def numberFileText(n: Long): String = s"version\t$NumberFileFormat\n$n"
+
+  /** The number control file `p` holds ([[numberFileText]]), None when
+    * it does not exist. A file that states another format version, none,
+    * or no number is refused, naming it. */
+  private[graft] def readNumberFile(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path): Option[Long] =
+    readControl(fs, p).map { text =>
+      afterVersionLine(s"control file $p", NumberFileFormat, text) match {
+        case Seq(n) if n.toLongOption.isDefined => n.toLong
+        case _ => throw new IllegalStateException(s"control file $p holds no number — refusing")
+      }
+    }
 
   /** The live manifest ([[committedManifest]]); None when the table
     * holds no claim. */
@@ -2549,9 +2561,10 @@ object Sources {
     * format deletes the publish's own dir before the error propagates;
     * a crash leaves an unclaimed dir, which blocks no publish and which
     * the prune reclaims once another commit holds its number. Then the
-    * prune runs. */
-  private def commitSnapshot(spark: SparkSession, tableRoot: String, basis: Option[Long])(
-      write: String => Unit): Unit = {
+    * prune runs. Returns the committed version dir. An index rebuild
+    * commits through here too ([[graft.operators.IndexGenerations]]). */
+  private[graft] def commitSnapshot(spark: SparkSession, tableRoot: String, basis: Option[Long])(
+      write: String => Unit): String = {
     val conf = spark.sparkContext.hadoopConfiguration
     val uri = new java.net.URI(tableRoot)
     val fs = org.apache.hadoop.fs.FileSystem.get(uri, conf)
@@ -2582,6 +2595,7 @@ object Sources {
       throw lost()
     }
     pruneSnapshotVersions(fs, root)
+    s"$tableRoot/$vdir"
   }
 
   /** Claim-anchored retention for snapshot tables (and GROUPs): version
@@ -2660,7 +2674,7 @@ object Sources {
     * committed version at publish entry, which still serializes raced
     * publishers but cannot see a rival that landed before entry. */
   def publishSnapshot(df: DataFrame, tableRoot: String, basis: Option[Long] = None): Unit =
-    commitSnapshot(df.sparkSession, tableRoot, basis)(writeSnapshotMember(df, _))
+    commitSnapshot(df.sparkSession, tableRoot, basis)(writeSnapshotMember(df, _)): Unit
 
   /** Write one snapshot member into its still-unclaimed version dir.
     * A local relation under [[graft.operators.DriverPath.DriverStoreBytes]]
@@ -2797,7 +2811,7 @@ object Sources {
       graft.operators.IndexMaintenance.inParallel(frames) { case (member, df) =>
         writeSnapshotMember(df, s"$vdir/$member")
       }: Unit
-    }
+    }: Unit
   }
 
   /** Read one member frame of the live [[publishSnapshotGroup]]

@@ -6,15 +6,18 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.sources.{Claims, Sources}
 
-/** Generation-swapped full rebuilds of the maintained indexes:
-  * [[SimilaritySearch.retrainIvfPqIndex]] (the drift tripwire's remedy
-  * as code) and [[LexicalIndex.rebuildBm25Index]] (re-bucketing /
-  * retention purge). The swap must be atomic and complete — new
-  * quantizers with new codes, a fresh tombstone log — the old
-  * generation untouched until vacuum, and incremental maintenance must
-  * continue transparently against whichever generation the pointer
-  * names. */
+/** Full rebuilds of the maintained indexes as snapshot versions of the
+  * index root: [[SimilaritySearch.retrainIvfPqIndex]] (the drift
+  * tripwire's remedy as code) and [[LexicalIndex.rebuildBm25Index]]
+  * (re-bucketing / retention purge), each committed by one claim
+  * ([[IndexGenerations.rebuild]]). The commit must be atomic and
+  * complete — new quantizers with new codes, a fresh tombstone log —
+  * the old generation untouched while it is inside the retention
+  * window, and incremental maintenance must continue transparently
+  * against whichever generation the highest claim names. The crash and
+  * race points follow OccSnapshotSpec's. */
 class IndexGenerationsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -39,7 +42,7 @@ class IndexGenerationsSpec extends SparkSpec {
 
   private def codesOf(dir: String): Seq[(Long, Seq[Int], Int)] =
     graft.sources.Sources.readMergePartitioned(spark,
-        s"${IndexGenerations.resolve(spark, dir)}/codes", "_list")
+        s"${Sources.resolveSnapshot(spark, dir)}/codes", "_list")
       .select(col("_id").cast("long"), col("codes"), col("_list").cast("int"))
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Int](1).toSeq, r.getInt(2)))
@@ -62,7 +65,7 @@ class IndexGenerationsSpec extends SparkSpec {
     val newPq = Seq(14L, 15L, 16L, 17L)
     val gen = SimilaritySearch.retrainIvfPqIndex(spark, dir, finalCorpus,
       newCoarse, newPq, m = 4)
-    assert(IndexGenerations.resolve(spark, dir) == gen)
+    assert(Sources.resolveSnapshot(spark, dir) == gen)
 
     // bit-for-bit the fresh build over the same corpus and quantizer ids
     val fresh = Files.createTempDirectory("graft_gen_fresh").toString
@@ -107,60 +110,46 @@ class IndexGenerationsSpec extends SparkSpec {
       .select(col("_id").cast("long")).collect().map(_.getLong(0)).toSet
     assert(direct == baseIds.toSet)
 
-    // health and the compaction trigger resolve the live generation
-    val h = SimilaritySearch.ivfPqIndexHealth(spark, dir)
+    // health resolves the live generation
+    val h = IndexMaintenance.health(spark, Sources.resolveSnapshot(spark, dir),
+      Seq("codes" -> "_list"))
     assert(h.tombstoneRows == 1L)
 
-    // a second retrain supersedes the first; vacuum deletes the dead
-    // gen AND (r16) the superseded plain-layout table dirs at the root
-    // (codes/centroids/codebooks/drift — pre-r16 they leaked forever)
-    val gen2 = SimilaritySearch.retrainIvfPqIndex(spark, dir, finalCorpus,
+    // the superseded plain layout stays while it is inside the
+    // retention window: the second retrain keeps it, the third (version
+    // 3) reclaims its root-level table dirs, and gen, still inside the
+    // window, stays
+    def retrain() = SimilaritySearch.retrainIvfPqIndex(spark, dir, finalCorpus,
       Seq(8L, 9L, 10L, 11L), Seq(14L, 15L, 16L, 17L), m = 4)
-    assert(IndexGenerations.vacuum(spark, dir) == 5)
-    assert(IndexGenerations.resolve(spark, dir) == gen2)
+    retrain(): Unit
+    assert(Sources.readMergePartitioned(spark, s"$dir/codes", "_list")
+      .select(col("_id").cast("long")).collect().map(_.getLong(0)).toSet == baseIds.toSet)
+    val gen3 = retrain()
+    assert(Sources.resolveSnapshot(spark, dir) == gen3)
     assert(searchOf(dir).nonEmpty)
-    assert(!new java.io.File(dir, "codes").exists(),
-      "superseded plain-layout codes dir must be reclaimed")
+    Seq("codes", "centroids", "codebooks", "drift", "tombstones").foreach(t =>
+      assert(!new java.io.File(dir, t).exists(), s"superseded plain-layout $t dir kept"))
+    assert(new java.io.File(gen).exists(), "a generation inside the window was deleted")
   }
 
-  test("vacuum never deletes an in-flight build: gen dirs numbered at or above the live one survive any age (ADVICE r16)") {
+  test("the prune never deletes an in-flight build: a dir numbered above the top claim survives any age") {
     val dir = Files.createTempDirectory("graft_gen_inflight").toString
-    SimilaritySearch.writeIvfPqIndex(corpus(baseIds), dir,
-      0L until 4L, 0L until 4L, m = 4)
-    val gen1 = SimilaritySearch.retrainIvfPqIndex(spark, dir, corpus(baseIds),
-      0L until 4L, 0L until 4L, m = 4)
-    // an offline rebuild IN FLIGHT: next() allocated its dir (numbered
-    // above the live gen) and the builder is writing into it — the
-    // pointer's swap meanwhile is hours old, which is exactly when the
-    // maintenance tick's auto-vacuum used to delete it mid-write
-    val inflight = IndexGenerations.next(spark, dir)
-    assert(new java.io.File(inflight).mkdirs())
-    val aged = System.currentTimeMillis() - 2L * 3600 * 1000
-    IndexGenerationsSpec.ageLiveClaim(spark, dir, aged)
-    assert(new java.io.File(inflight).setLastModified(aged)) // even aged: number protects it
-    // superseded state (plain layout) is aged and reclaimed; the
-    // in-flight build and the live gen survive
-    Seq("codes", "centroids", "codebooks", "drift", "tombstones")
-      .map(new java.io.File(dir, _)).filter(_.exists())
-      .foreach(f => assert(f.setLastModified(aged)))
-    IndexGenerations.vacuum(spark, dir,
-      graceMs = 3600L * 1000): Unit
-    assert(new java.io.File(inflight).exists(),
-      "in-flight rebuild dir deleted by vacuum")
-    assert(new java.io.File(gen1).exists(), "live generation deleted")
-    assert(!new java.io.File(dir, "codes").exists(),
-      "aged superseded plain layout kept")
-    // a fresh-mtime superseded gen (someone still writing) also survives
-    // until it ages, even below the live number
-    assert(new java.io.File(inflight).delete()) // build abandoned
-    SimilaritySearch.retrainIvfPqIndex(spark, dir, corpus(baseIds),
-      0L until 4L, 0L until 4L, m = 4): Unit
-    IndexGenerationsSpec.ageLiveClaim(spark, dir, aged)
-    // gen1 is now superseded but its own mtime is fresh → spared
-    assert(IndexGenerations.vacuum(spark, dir,
-      graceMs = 3600L * 1000) == 0)
-    assert(new java.io.File(gen1).exists(),
-      "fresh-mtime superseded gen deleted inside its own grace")
+    def build(v: String): Unit = assert(new java.io.File(v, "codes").mkdirs())
+    val gen1 = IndexGenerations.rebuild(spark, dir)(build)
+    // a dir above the highest claim may be an in-flight rebuild (the
+    // prune cannot tell which basis its writer read): never touched,
+    // however old it looks
+    val inflight = s"$dir/v-000000000003-inflight"
+    build(inflight)
+    assert(new java.io.File(inflight).setLastModified(System.currentTimeMillis() - 2L * 3600 * 1000))
+    val gen2 = IndexGenerations.rebuild(spark, dir)(build)
+    assert(new java.io.File(inflight).exists(), "in-flight rebuild dir deleted by the prune")
+    assert(Seq(gen1, gen2).forall(new java.io.File(_).exists()), "a generation inside the window deleted")
+    // once a commit holds its number the dir can never commit: the
+    // prune of that commit takes it
+    val gen3 = IndexGenerations.rebuild(spark, dir)(build)
+    assert(!new java.io.File(inflight).exists(), "a dir that can never commit was kept")
+    assert(Sources.resolveSnapshot(spark, dir) == gen3)
   }
 
   test("retrain resets the drift baseline: a feed that tripped the old quantizers is quiet after") {
@@ -207,7 +196,7 @@ class IndexGenerationsSpec extends SparkSpec {
     val purged = docs.unionByName(Seq((7L, "a new spark doc")).toDF("doc_id", "text"))
       .filter(col("doc_id") =!= 4L)
     val gen = LexicalIndex.rebuildBm25Index(spark, dir, purged, nBuckets = 4)
-    assert(IndexGenerations.resolve(spark, dir) == gen)
+    assert(Sources.resolveSnapshot(spark, dir) == gen)
     assert(LsmTombstones.isEmpty(spark, gen))
 
     def search(d: String): Seq[Seq[Any]] =
@@ -227,127 +216,160 @@ class IndexGenerationsSpec extends SparkSpec {
       Seq("spark", "merge"), k = 10).collect().map(_.toSeq).toSeq
     assert(search(dir) == after)
 
-    // one live gen; the first vacuum reclaims the 6 superseded
-    // plain-layout dirs (postings/forward/doclen/stats/meta/tombstones)
-    assert(IndexGenerations.vacuum(spark, dir) == 6)
+    // the plain layout (version 0) stays inside the retention window;
+    // the rebuild that commits version 3 reclaims its 6 root-level dirs
+    // (postings/forward/doclen/stats/meta/tombstones)
+    val plain = Set("postings", "forward", "doclen", "stats", "meta", "tombstones")
+    def rootDirs() = new java.io.File(dir).listFiles().filter(_.isDirectory).map(_.getName).toSet
+    assert(plain.subsetOf(rootDirs()))
     val gen2 = LexicalIndex.rebuildBm25Index(spark, dir,
       purged.filter(col("doc_id") =!= 2L), nBuckets = 4)
-    assert(IndexGenerations.vacuum(spark, dir) == 1)
-    assert(IndexGenerations.resolve(spark, dir) == gen2)
+    assert(plain.subsetOf(rootDirs()))
+    val gen3 = LexicalIndex.rebuildBm25Index(spark, dir,
+      purged.filter(col("doc_id") =!= 2L), nBuckets = 4)
+    assert(rootDirs() == Set(gen, gen2, gen3).map(new java.io.File(_).getName))
+    assert(Sources.resolveSnapshot(spark, dir) == gen3)
     assert(search(dir) == after)
   }
 
+  // ──────────────── crash, race and retention points ────────────────
+
+  private def names(dir: String): Set[String] = new java.io.File(dir).list().toSet
+
+  private def docs(ids: Seq[Long], word: String): DataFrame =
+    ids.map(id => (id, s"spark $word doc$id merge")).toDF("doc_id", "text")
+
+  private def searchBm25(dir: String): Seq[Seq[Any]] =
+    LexicalIndex.searchBm25Index(spark, dir, Seq("spark", "vector"), k = 10)
+      .collect().map(_.toSeq).toSeq
+
+  private def bm25Oracle(d: DataFrame): Seq[Seq[Any]] =
+    TextAnalysis.bm25(d, "doc_id", "text", Seq("spark", "vector"), k = 10)
+      .collect().map(_.toSeq).toSeq
+
+  private val docsA = docs(1L to 6L, "alpha")
+  private val docsB = docs(3L to 9L, "vector")
+  private val docsC = docs(Seq(2L, 5L, 11L), "vector vector")
+
   test("generation plumbing fails loudly: bad swaps, dangling pointers") {
     val dir = Files.createTempDirectory("graft_gen_guard").toString
-    // swapping to a non-child or missing generation is refused
+    LexicalIndex.writeBm25Index(docsA, dir, nBuckets = 2)
+    // a plain layout is its own version 0: it resolves to itself, and
+    // maintenance there deletes nothing
+    assert(Sources.resolveSnapshot(spark, dir) == dir)
+    val plainNames = names(dir)
+    LexicalIndex.maintainBm25IfNeeded(spark, dir): Unit
+    assert(names(dir) == plainNames)
+    // rebuilding against the version dir a resolve returned is refused
+    // before anything is written
+    val gen = LexicalIndex.rebuildBm25Index(spark, dir, docsB, nBuckets = 2)
+    val inGen = names(gen)
     intercept[IllegalArgumentException] {
-      IndexGenerations.swap(spark, dir, "/somewhere/else/gen-1-x")
+      LexicalIndex.rebuildBm25Index(spark, Sources.resolveSnapshot(spark, dir), docsB, nBuckets = 2)
     }
-    intercept[IllegalArgumentException] {
-      IndexGenerations.swap(spark, dir, s"$dir/gen-1-missing")
-    }
-    // a pointer naming a vacuumed generation resolves loudly, not to garbage
-    val gen = IndexGenerations.next(spark, dir)
-    new java.io.File(gen).mkdirs()
-    IndexGenerations.swap(spark, dir, gen)
-    assert(IndexGenerations.resolve(spark, dir) == gen)
-    new java.io.File(gen).delete()
-    intercept[IllegalArgumentException] {
-      IndexGenerations.resolve(spark, dir)
-    }
-    // vacuum without a pointer is a no-op
-    val plain = Files.createTempDirectory("graft_gen_plain").toString
-    assert(IndexGenerations.vacuum(spark, plain) == 0)
-
-    // forward-only swap (r17): a slow rival rebuild whose swap lands
-    // after a newer generation's refuses loudly instead of REGRESSING
-    // readers to the older rebuild
-    val dir2 = Files.createTempDirectory("graft_gen_fwd").toString
-    val slow = IndexGenerations.next(spark, dir2) // gen-1, built slowly
-    new java.io.File(slow).mkdirs()
-    val fast = IndexGenerations.next(spark, dir2) // gen-2, finishes first
-    new java.io.File(fast).mkdirs()
-    IndexGenerations.swap(spark, dir2, fast)
-    intercept[java.util.ConcurrentModificationException] {
-      IndexGenerations.swap(spark, dir2, slow)
-    }
-    assert(IndexGenerations.resolve(spark, dir2) == fast)
-    // re-swapping the live generation itself stays legal (idempotent)
-    IndexGenerations.swap(spark, dir2, fast)
-    assert(IndexGenerations.resolve(spark, dir2) == fast)
+    assert(names(gen) == inGen)
+    // a claim naming a deleted generation fails the next search loudly,
+    // naming the missing dir, instead of serving an empty index
+    Files.walk(java.nio.file.Paths.get(gen)).sorted(java.util.Comparator.reverseOrder())
+      .forEach(p => Files.delete(p))
+    val e = intercept[Exception](searchBm25(dir))
+    assert(e.getMessage.contains(new java.io.File(gen).getName), e.getMessage)
   }
 
   test("a stale swap claim landing late can never shadow a newer generation (ADVICE r17: dense-claim swap)") {
     val dir = Files.createTempDirectory("graft_gen_cas").toString
-    val slow = IndexGenerations.next(spark, dir) // gen-1, built slowly
-    assert(new java.io.File(slow).mkdirs())
-    val fast = IndexGenerations.next(spark, dir) // gen-2, finishes first
-    assert(new java.io.File(fast).mkdirs())
-    IndexGenerations.swap(spark, dir, fast)
-    // the r17 hole: the slow builder passed its forward check BEFORE
-    // fast's swap landed, then renamed after it — with the rename
-    // pointer that REGRESSED readers to gen-1. Simulate the same
-    // interleaving against the claim set: the stale claim lands raw
-    // (no pre-check, as if the builder paused mid-swap), even with a
-    // HIGHER slot number than the winner's.
-    val slowName = new java.io.File(slow).getName
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(dir, f"genswap-${99L}%012d"),
-      slowName.getBytes("UTF-8")): Unit
-    // resolution is by generation number, not slot/rename order: the
-    // stale claim is inert
-    assert(IndexGenerations.resolve(spark, dir) == fast,
-      "stale swap claim shadowed the newer generation")
-    // and a stale swap through the API refuses loudly as before
+    LexicalIndex.writeBm25Index(docsA, dir, nBuckets = 4)
+    // the slow rebuild reads its basis (version 0) and writes its whole
+    // index; before it claims, a fast rebuild commits version 1, whose
+    // prune takes the slow dir: it can never commit now
+    var slow = ""
+    var fast = ""
     intercept[java.util.ConcurrentModificationException] {
-      IndexGenerations.swap(spark, dir, slow)
+      IndexGenerations.rebuild(spark, dir) { v =>
+        slow = v
+        LexicalIndex.writeBm25Index(docsB, v, nBuckets = 4)
+        fast = LexicalIndex.rebuildBm25Index(spark, dir, docsC, nBuckets = 4)
+      }
     }
-    // vacuum sweeps the inert claim (and the superseded gen dir), the
-    // live generation's claim survives
-    IndexGenerations.vacuum(spark, dir): Unit
-    val names = new java.io.File(dir).listFiles().map(_.getName).toSet
-    assert(!names.contains(f"genswap-${99L}%012d"), s"inert claim kept: $names")
-    assert(IndexGenerations.resolve(spark, dir) == fast)
+    // the stale claim never landed: readers resolve the fast rebuild
+    assert(Sources.resolveSnapshot(spark, dir) == fast)
+    assert(searchBm25(dir) == bm25Oracle(docsC))
+    // and the losing rebuild left no dir and no claim behind
+    assert(!new java.io.File(slow).exists(), "the losing rebuild's dir was kept")
+    assert(names(dir).filter(n => n.startsWith("v-") || n.startsWith("commit-")) ==
+      Set(new java.io.File(fast).getName, "commit-000000000001"))
+    // a rebuild from a fresh basis lands
+    val redo = LexicalIndex.rebuildBm25Index(spark, dir, docsB, nBuckets = 4)
+    assert(Sources.resolveSnapshot(spark, dir) == redo)
+    assert(searchBm25(dir) == bm25Oracle(docsB))
   }
 
-  test("swap refuses a gen-* root; resolve refuses a claimless _gen") {
-    val dir = Files.createTempDirectory("graft_gen_root").toString
-    val gen1 = IndexGenerations.next(spark, dir)
-    new java.io.File(gen1).mkdirs()
-    IndexGenerations.swap(spark, dir, gen1)
-    // rebuilding "against the index" with the GENERATION dir a resolve
-    // returned is refused by next() and swap() alike
-    intercept[IllegalArgumentException] {
-      IndexGenerations.next(spark, gen1)
+  test("resolve, maintenance and rebuild refuse a root of the earlier generation layout, naming it") {
+    // a root as the swap layout left it: the plain layout, a generation
+    // dir, and its `_gen` pointer or `genswap-*` claim — without the
+    // refusal it would resolve to the stale plain layout
+    for (marker <- Seq("_gen", "genswap-000000000001")) {
+      val dir = Files.createTempDirectory("graft_gen_preclaim").toString
+      LexicalIndex.writeBm25Index(docsA, dir, nBuckets = 2)
+      LexicalIndex.writeBm25Index(docsB, s"$dir/gen-1-x", nBuckets = 2)
+      Files.write(java.nio.file.Paths.get(dir, marker), "gen-1-x".getBytes("UTF-8")): Unit
+      val before = names(dir)
+      def refused(what: String)(f: => Any): Unit = {
+        val e = intercept[IllegalStateException](f)
+        assert(e.getMessage.contains(dir) && e.getMessage.contains(marker), s"$what: ${e.getMessage}")
+      }
+      refused("resolve")(Sources.resolveSnapshot(spark, dir))
+      refused("search")(searchBm25(dir))
+      refused("apply")(LexicalIndex.applyBm25IndexChanges(spark, dir,
+        Seq((7L, "a new spark doc", "new")).toDF("doc_id", "text", "_change"), mode = "append"))
+      refused("maintenance")(LexicalIndex.maintainBm25IfNeeded(spark, dir))
+      refused("rebuild")(LexicalIndex.rebuildBm25Index(spark, dir, docsB, nBuckets = 2))
+      assert(names(dir) == before, s"${names(dir) -- before}")
     }
-    val nested = new java.io.File(gen1, "gen-1-nested")
-    assert(nested.mkdirs())
-    intercept[IllegalArgumentException] {
-      IndexGenerations.swap(spark, gen1, nested.toString)
-    }
-    assert(IndexGenerations.resolve(spark, dir) == gen1)
-    // a root holding the pre-claim _gen pointer and no swap claim is
-    // refused loudly, not served as a plain layout
-    val old = Files.createTempDirectory("graft_gen_preclaim").toString
-    assert(new java.io.File(old, "gen-1-x").mkdirs())
-    Files.write(java.nio.file.Paths.get(old, "_gen"), "gen-1-x".getBytes("UTF-8")): Unit
-    val e = intercept[IllegalStateException] {
-      IndexGenerations.resolve(spark, old)
-    }
-    assert(e.getMessage.contains("_gen"), e.getMessage)
   }
-}
 
-object IndexGenerationsSpec {
-  /** Set the mtime of the swap claim(s) naming `dir`'s live generation
-    * — the swap time [[IndexGenerations.vacuum]] ages against. */
-  def ageLiveClaim(spark: org.apache.spark.sql.SparkSession, dir: String,
-      at: Long): Unit = {
-    val live = new java.io.File(IndexGenerations.resolve(spark, dir)).getName
-    val claims = new java.io.File(dir).listFiles().toSeq.filter(f =>
-      f.getName.startsWith("genswap-") &&
-        new String(Files.readAllBytes(f.toPath), "UTF-8").trim == live)
-    assert(claims.nonEmpty, s"no swap claim names $live under $dir")
-    claims.foreach(f => assert(f.setLastModified(at)))
+  test("a crash before the claim leaves the old generation live, one after it the new; the next rebuild lands either way") {
+    val dir = Files.createTempDirectory("graft_gen_crash").toString
+    LexicalIndex.writeBm25Index(docsA, dir, nBuckets = 4)
+    // crash before the claim: version 1 written whole, never claimed
+    val crashed = "v-000000000001-crashed0"
+    LexicalIndex.writeBm25Index(docsB, s"$dir/$crashed", nBuckets = 4)
+    assert(Sources.resolveSnapshot(spark, dir) == dir)
+    assert(searchBm25(dir) == bm25Oracle(docsA))
+    // the next rebuild lands at once, at the number the crash never
+    // took, and its prune takes the dir that can never commit
+    val gen1 = LexicalIndex.rebuildBm25Index(spark, dir, docsB, nBuckets = 4)
+    assert(new java.io.File(gen1).getName.startsWith("v-000000000001-"))
+    assert(Sources.resolveSnapshot(spark, dir) == gen1)
+    assert(!names(dir)(crashed), s"crashed dir survived: ${names(dir)}")
+    // crash after the claim: the claim is the commit
+    val claimed = "v-000000000002-crashed1"
+    LexicalIndex.writeBm25Index(docsC, s"$dir/$claimed", nBuckets = 4)
+    Claims.plant(dir, 2L, Claims.snapshot(claimed))
+    assert(Sources.resolveSnapshot(spark, dir) == s"$dir/$claimed")
+    assert(searchBm25(dir) == bm25Oracle(docsC))
+    val gen3 = LexicalIndex.rebuildBm25Index(spark, dir, docsA, nBuckets = 4)
+    assert(new java.io.File(gen3).getName.startsWith("v-000000000003-"))
+    assert(Sources.resolveSnapshot(spark, dir) == gen3)
+    assert(searchBm25(dir) == bm25Oracle(docsA))
+  }
+
+  test("a reader that resolved a generation reads it through two later rebuilds; the third removes it") {
+    val dir = Files.createTempDirectory("graft_gen_window").toString
+    LexicalIndex.writeBm25Index(docsA, dir, nBuckets = 4)
+    LexicalIndex.rebuildBm25Index(spark, dir, docsB, nBuckets = 4): Unit
+    // the reader resolves once and keeps reading what it resolved
+    val pinned = Sources.resolveSnapshot(spark, dir)
+    val seen = searchBm25(pinned)
+    assert(seen == bm25Oracle(docsB))
+    LexicalIndex.rebuildBm25Index(spark, dir, docsC, nBuckets = 4): Unit
+    LexicalIndex.rebuildBm25Index(spark, dir, docsA, nBuckets = 4): Unit
+    assert(searchBm25(pinned) == seen, "a generation inside the window changed under its reader")
+    LexicalIndex.rebuildBm25Index(spark, dir, docsC, nBuckets = 4): Unit
+    assert(!new java.io.File(pinned).exists(), "a generation below the window was kept")
+    assert(names(dir).filter(_.startsWith("commit-")) ==
+      Set(2L, 3L, 4L).map(n => f"commit-$n%012d"))
+    assert(names(dir).count(_.startsWith("v-")) == 3, s"${names(dir)}")
+    assert(searchBm25(dir) == bm25Oracle(docsC))
   }
 }

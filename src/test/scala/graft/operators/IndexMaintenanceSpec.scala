@@ -19,11 +19,17 @@ class IndexMaintenanceSpec extends SparkSpec {
 
   private def doc(i: Long) = (i, s"term$i spark merge vector doc$i")
 
+  private val bm25Tables = Seq("postings" -> "_b", "forward" -> "_db", "doclen" -> "_db")
+
+  /** The health of the index version `dir` resolves to. */
+  private def health(dir: String, tables: Seq[(String, String)] = bm25Tables) =
+    IndexMaintenance.health(spark, graft.sources.Sources.resolveSnapshot(spark, dir), tables)
+
   test("BM25: health tracks generations and tombstones; trigger fires past threshold") {
     val dir = freshDir()
     LexicalIndex.writeBm25Index((1L to 40L).map(doc).toDF("doc_id", "text"),
       dir, nBuckets = 4)
-    val h0 = LexicalIndex.bm25IndexHealth(spark, dir)
+    val h0 = health(dir)
     assert(h0.maxGenerations == 1 && h0.tombstoneSegments == 0 &&
       h0.tombstoneRows == 0L)
 
@@ -33,7 +39,7 @@ class IndexMaintenanceSpec extends SparkSpec {
         (r.toLong, "", "orphaned")).toDF("doc_id", "text", "_change")
       LexicalIndex.applyBm25IndexChanges(spark, dir, feed, mode = "append"): Unit
     }
-    val h1 = LexicalIndex.bm25IndexHealth(spark, dir)
+    val h1 = health(dir)
     assert(h1.maxGenerations == 4) // base + 3 applies
     assert(h1.tombstoneSegments == 3)
     assert(h1.tombstoneRows == 6L) // 2 ids per apply
@@ -55,7 +61,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     val (h2, ran) = LexicalIndex.maintainBm25IfNeeded(spark, dir, tight)
     assert(ran)
     assert(h2.breaches(tight).nonEmpty) // reported pre-maintenance state
-    val h3 = LexicalIndex.bm25IndexHealth(spark, dir)
+    val h3 = health(dir)
     assert(h3.maxGenerations == 1 && h3.tombstoneSegments == 0 &&
       h3.tombstoneRows == 0L)
 
@@ -89,12 +95,12 @@ class IndexMaintenanceSpec extends SparkSpec {
       SimilaritySearch.applyIvfPqIndexChanges(spark, dir, feed,
         mode = "append"): Unit
     }
-    val h = SimilaritySearch.ivfPqIndexHealth(spark, dir)
+    val h = health(dir, Seq("codes" -> "_list"))
     assert(h.tombstoneSegments == 3)
     val tight = IndexMaintenance.MaintenancePolicy(maxTombstoneSegments = 2)
     val (_, ran) = SimilaritySearch.maintainIvfPqIfNeeded(spark, dir, tight)
     assert(ran)
-    val h2 = SimilaritySearch.ivfPqIndexHealth(spark, dir)
+    val h2 = health(dir, Seq("codes" -> "_list"))
     assert(h2.maxGenerations == 1 && h2.tombstoneSegments == 0)
     // content equals a rebuild over the post-change corpus
     val reb = freshDir()
@@ -128,9 +134,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     assert(applied.keySet == Set("lang=en", "lang=de", "lang=fr"))
 
     // each partition's live generation: exact generations and tombstones
-    val h = segs.map(seg => seg -> IndexMaintenance.health(spark,
-      IndexGenerations.resolve(spark, s"$root/$seg"),
-      Seq("postings" -> "_b", "forward" -> "_db", "doclen" -> "_db"))).toMap
+    val h = segs.map(seg => seg -> health(s"$root/$seg")).toMap
     assert(h("lang=en").maxGenerations == 2) // base + 1 apply
     assert(h("lang=de").maxGenerations == 2)
     // fr's change was a pure retraction: tombstone only, no new postings
@@ -150,7 +154,7 @@ class IndexMaintenanceSpec extends SparkSpec {
         .collect().map(_.toSeq).toSeq)
   }
 
-  test("auto-vacuum from the maintenance loop: aged superseded generations reclaimed, young and live spared") {
+  test("later rebuilds reclaim superseded generations, not the maintenance loop; the live one and two below it are spared") {
     val dir = freshDir()
     val docs = (1L to 20L).map(doc).toDF("doc_id", "text")
     LexicalIndex.writeBm25Index(docs, dir, nBuckets = 4)
@@ -160,38 +164,36 @@ class IndexMaintenanceSpec extends SparkSpec {
       Seq("spark", "term7"), k = 5).collect().map(_.toSeq).toSeq
     def searchNow() = LexicalIndex.searchBm25Index(spark, dir,
       Seq("spark", "term7"), k = 5).collect().map(_.toSeq).toSeq
+    def names() = new java.io.File(dir).list().toSet
 
-    // swap just happened: the default grace (1 h) spares EVERYTHING —
-    // an in-flight reader of gen1 or the plain layout keeps its files
+    // the maintenance loop deletes nothing at the root: an in-flight
+    // reader of gen1 or of the plain layout keeps its files
+    val before = names()
     LexicalIndex.maintainBm25IfNeeded(spark, dir): Unit
-    assert(new java.io.File(gen1).exists(), "young superseded gen reclaimed")
+    assert(names() == before, s"${before -- names()}")
+    assert(new java.io.File(gen1).exists(), "superseded gen inside the window reclaimed")
     assert(new java.io.File(dir, "postings").exists(),
-      "young superseded plain layout reclaimed")
+      "plain layout reclaimed inside the window")
     assert(searchNow() == expected)
 
-    // age the last swap (the live generation's swap claim mtime IS the
-    // swap time) AND the superseded candidates themselves (r17: vacuum
-    // requires both — a fresh-mtime dir is someone's in-flight write):
-    // the same maintenance loop now reclaims gen1 and the plain-layout
-    // tables — and leaves the live generation serving identical results
-    val aged = System.currentTimeMillis() - 2L * 3600 * 1000
-    IndexGenerationsSpec.ageLiveClaim(spark, dir, aged)
-    assert(new java.io.File(gen1).setLastModified(aged))
-    Seq("postings", "forward", "doclen", "stats", "meta", "tombstones")
-      .map(new java.io.File(dir, _)).filter(_.exists())
-      .foreach(f => assert(f.setLastModified(aged)))
-    LexicalIndex.maintainBm25IfNeeded(spark, dir): Unit
-    assert(!new java.io.File(gen1).exists(), "aged superseded gen kept")
-    assert(!new java.io.File(dir, "postings").exists(),
-      "aged superseded plain layout kept")
-    assert(new java.io.File(gen2).exists(), "live generation deleted")
+    // version 3 moves the plain layout (version 0) out of the window,
+    // version 4 moves gen1 out: each goes with the rebuild that does so,
+    // and the live generation serves identical results
+    val gen3 = LexicalIndex.rebuildBm25Index(spark, dir, docs, nBuckets = 4)
+    assert(!new java.io.File(dir, "postings").exists(), "plain layout kept at version 3")
+    assert(new java.io.File(gen1).exists(), "gen1 reclaimed inside the window")
+    val gen4 = LexicalIndex.rebuildBm25Index(spark, dir, docs, nBuckets = 4)
+    assert(!new java.io.File(gen1).exists(), "gen1 kept below the window")
+    assert(Seq(gen2, gen3, gen4).forall(new java.io.File(_).exists()),
+      "a generation inside the window deleted")
+    assert(graft.sources.Sources.resolveSnapshot(spark, dir) == gen4)
     assert(searchNow() == expected)
 
-    // maintenance (incl. compaction trigger) still works post-vacuum
+    // maintenance (incl. compaction trigger) still works after the prune
     LexicalIndex.applyBm25IndexChanges(spark, dir,
       Seq((21L, "fresh spark doc", "new")).toDF("doc_id", "text", "_change"),
       mode = "append"): Unit
-    assert(LexicalIndex.bm25IndexHealth(spark, dir).maxGenerations == 2)
+    assert(health(dir).maxGenerations == 2)
   }
 
   test("family-pool items run under their caller's job description") {

@@ -122,7 +122,9 @@ class StreamingIndexSpec extends SparkSpec {
     val q = LexicalIndex.bm25IndexSink(stream, s"$root/index", s"$root/ckpt",
       maintain = Some(IndexMaintenance.MaintenancePolicy(maxGenerations = 1)))
     try q.processAllAvailable() finally q.stop()
-    val h = LexicalIndex.bm25IndexHealth(spark, s"$root/index")
+    val h = IndexMaintenance.health(spark,
+      graft.sources.Sources.resolveSnapshot(spark, s"$root/index"),
+      Seq("postings" -> "_b", "forward" -> "_db", "doclen" -> "_db"))
     assert(h.maxGenerations == 1 && h.tombstoneSegments == 0)
     val oracle = TextAnalysis.bm25(finalDocs, "doc_id", "text",
         Seq("spark", "merge", "vector"), k = 10)
