@@ -19,11 +19,45 @@ import graft.sources.Sources
   * Lucene's TieredMergePolicy segment budget): a LISTING-ONLY probe
   * cheap enough for every apply, and a fuller report (with the one
   * delta-scale tombstone count job) for the maintenance decision.
-  * Superseded versions of a fully rebuilt index are not this module's
-  * concern: the rebuild that commits prunes them ([[IndexGenerations]]). */
+  * Superseded versions of a fully rebuilt index are pruned by the build
+  * that commits ([[commitBuild]]). */
 object IndexMaintenance {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** Commit a full build of the index at `dir` as the next snapshot
+    * version of its root ([[Sources.commitSnapshot]]): `write` builds
+    * the whole layout (data tables, quantizers or stats, an empty
+    * tombstone log) complete and cold into the version dir
+    * `<dir>/v-<n>-<uid>` it is given, then one `commit-<n>` claim makes
+    * it live. An initial build is version 1; a rebuild (retrained
+    * quantizers, re-bucketed postings, a retention purge) is the same
+    * operation. Rebuilding IN PLACE would tear the index under
+    * concurrent readers — a searcher that read the new codes against
+    * the old codebooks computes garbage distances, silently — while
+    * every reader and maintenance entry point resolves the root with
+    * [[Sources.resolveSnapshot]], so a reader mid-search keeps the
+    * version it resolved and the next resolve gets the new one.
+    * Retention is the snapshot prune: the live version and the two below
+    * it stay.
+    *
+    * Writer discipline: a build writes only its own version dir, so it
+    * may overlap live SEARCHES freely, and two builds that race commit
+    * one and refuse the other (`ConcurrentModificationException`). A
+    * rebuild must not overlap incremental APPLIES of the outgoing
+    * version — their updates survive in the old dir but are not in the
+    * rebuild input (the documented lost update of rebuilding from a
+    * moving corpus); quiesce the applier across the cutover, as a
+    * checkpointed change-feed consumer naturally does between
+    * micro-batches. `dir` is the index root, never a version dir a
+    * resolve returned. Returns the committed version dir. */
+  private[graft] def commitBuild(spark: SparkSession, dir: String)(
+      write: String => Unit): String = {
+    require(!new org.apache.hadoop.fs.Path(dir).getName.matches("v-\\d+-.+"),
+      s"$dir is itself an index version dir — build against the index root " +
+        "(the dir holding the commit claims), not the version it resolves to")
+    Sources.commitSnapshot(spark, dir, None)(write)
+  }
 
   /** One data table of an index. `maxGenerations` = the most batch
     * dirs any single partition stitches together (its scan opens that

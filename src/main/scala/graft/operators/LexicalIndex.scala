@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sources.Sources
@@ -16,8 +16,9 @@ import graft.types.TableConfig
   * ingest batch touches the postings of ITS documents — never the
   * corpus.
   *
-  * Layout under `dir` (every table plain parquet + the engine's
-  * manifest/pointer discipline):
+  * Layout under the committed version dir of `dir` (every build is a
+  * snapshot version of the index root, [[IndexMaintenance.commitBuild]];
+  * every table is plain parquet under the engine's claimed commits):
   *  - `postings/` — (term, doc_id, tf, dl), hash-partitioned by
   *    `_b = pmod(xxhash64(term), nBuckets)`: the inverted file. A
   *    search reads only its query terms' buckets (static partition
@@ -39,8 +40,8 @@ import graft.types.TableConfig
   * Maintenance ([[applyBm25IndexChanges]]) is delete-first: the
   * changed documents' old postings/forward/doclen rows are retracted
   * via row-level DELETE publishes, then `new`/`updated` payloads are
-  * re-tokenized and merge-published. Each publish is an atomic
-  * pointer swap; re-applying a feed is idempotent. With a fixed
+  * re-tokenized and merge-published. Each publish is one atomic
+  * claim; re-applying a feed is idempotent. With a fixed
   * tokenizer the index content is a pure per-document function of the
   * corpus, so incremental ≡ rebuild bit-for-bit
   * (IncrementalBm25Spec), and the DuckDB gate replays the search from
@@ -89,30 +90,45 @@ object LexicalIndex {
     docs.select(col(idCol).as("doc_id"),
       TextAnalysis.tokenCount(col(textCol)).cast("long").as("dl"))
 
-  /** Build the index from a corpus. One tokenize pass feeds all three
-    * tables; stats is the same one-row aggregate [[TextAnalysis.bm25]]
-    * computes per run, persisted once instead. */
+  /** Build the index from a corpus as the next version of the index
+    * root `dir` ([[IndexMaintenance.commitBuild]]): the initial build is
+    * version 1, and a full rebuild — re-bucketing (`nBuckets` sized for
+    * a grown corpus), analyzer changes, or a retention purge that must
+    * drop documents from every bucket (pass the purged corpus) — is the
+    * same call. The new index is built complete and cold in a version
+    * dir, then one claim commits it: in-place overwrite would tear
+    * concurrent searches between old postings and new stats. Readers
+    * mid-search keep the old version (retained until two later builds
+    * have committed); applies, searches and compactions resolve the new
+    * one. Quiesce the incremental applier across a rebuild — an
+    * in-flight delta survives only in the outgoing version. Returns the
+    * committed version dir. */
   def writeBm25Index(docs: DataFrame, dir: String, idCol: String = "doc_id",
-      textCol: String = "text", nBuckets: Int = 32): Unit = {
+      textCol: String = "text", nBuckets: Int = 32): String = {
     require(nBuckets >= 1 && nBuckets <= Sources.MaxTouchedPartitions,
       s"nBuckets must be in [1, ${Sources.MaxTouchedPartitions}]")
+    IndexMaintenance.commitBuild(docs.sparkSession, dir)(
+      writeBm25Layout(docs, _, idCol, textCol, nBuckets))
+  }
+
+  /** The index layout [[writeBm25Index]] commits, written into `dir`.
+    * One tokenize pass feeds all three tables, each committed by its
+    * first append; stats is the same one-row aggregate
+    * [[TextAnalysis.bm25]] computes per run, persisted once instead. */
+  private[operators] def writeBm25Layout(docs: DataFrame, dir: String, idCol: String,
+      textCol: String, nBuckets: Int): Unit = {
     val spark = docs.sparkSession
     import spark.implicits._
     // `_seq = 0` is the LSM write-generation stamp (see LsmTombstones)
     val post = postingsOf(docs, idCol, textCol).withColumn("_seq", lit(0L))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // one file per bucket: without the repartition every write task
-    // emits a sliver into every bucket dir and the serial job-commit
-    // rename of T×nBuckets tiny files dominates the build wall
-    post.withColumn("_b", termBucket(nBuckets)).repartition(col("_b"))
-      .write.mode(SaveMode.Overwrite).partitionBy("_b").parquet(s"$dir/postings")
-    post.select("doc_id", "term", "_seq").withColumn("_db", docBucket(nBuckets))
-      .repartition(col("_db"))
-      .write.mode(SaveMode.Overwrite).partitionBy("_db").parquet(s"$dir/forward")
+    Sources.publishMergeAppend(spark, s"$dir/postings",
+      post.withColumn("_b", termBucket(nBuckets)), "_b")
+    Sources.publishMergeAppend(spark, s"$dir/forward",
+      post.select("doc_id", "term", "_seq").withColumn("_db", docBucket(nBuckets)), "_db")
     post.unpersist(): Unit
-    doclenOf(docs, idCol, textCol).withColumn("_seq", lit(0L))
-      .withColumn("_db", docBucket(nBuckets)).repartition(col("_db"))
-      .write.mode(SaveMode.Overwrite).partitionBy("_db").parquet(s"$dir/doclen")
+    Sources.publishMergeAppend(spark, s"$dir/doclen", doclenOf(docs, idCol, textCol)
+      .withColumn("_seq", lit(0L)).withColumn("_db", docBucket(nBuckets)), "_db")
     // doclen key-bloom sidecars at BUILD time (r19): the first
     // append-apply's oldLen keyed read otherwise scans every doclen
     // bucket AND pays the base dir's bloom build inside ITS wall (a
@@ -160,7 +176,7 @@ object LexicalIndex {
       idCol: String = "doc_id", textCol: String = "text",
       changeCol: String = "_change", mode: String = "rewrite"): Bm25Maintenance = {
     // resolve the live version first: after a rebuild
-    // ([[rebuildBm25Index]]) maintenance continues against the NEW
+    // ([[writeBm25Index]]) maintenance continues against the NEW
     // bucketing/tombstone log transparently
     val dir = Sources.resolveSnapshot(spark, indexDir)
     require(mode == "rewrite" || mode == "append",
@@ -179,9 +195,6 @@ object LexicalIndex {
       s"applyBm25IndexChanges: unknown $changeCol value(s) ${unknown.mkString(", ")} " +
         "(expected new/updated/orphaned)")
     val nBuckets = readNBuckets(spark, dir)
-    Sources.adoptMergePartitioned(spark, s"$dir/postings", "_b"): Unit
-    Sources.adoptMergePartitioned(spark, s"$dir/forward", "_db"): Unit
-    Sources.adoptMergePartitioned(spark, s"$dir/doclen", "_db"): Unit
 
     val ids = feed.select(col(idCol).as("doc_id")).distinct()
     val adds = feed.filter(col(changeCol).isin("new", "updated"))
@@ -501,7 +514,7 @@ object LexicalIndex {
     IndexMaintenance.inParallel(values.toSeq) { v =>
       val seg = partSeg(filterCol, v)
       writeBm25Index(docs.filter(col(filterCol) === lit(v)),
-        s"$rootDir/$seg", idCol, textCol, nBuckets)
+        s"$rootDir/$seg", idCol, textCol, nBuckets): Unit
       seg
     }
   }
@@ -578,25 +591,4 @@ object LexicalIndex {
         sum(col("tot")).cast("long").as("tot"))
     TextAnalysis.bm25Rank(tf, dfreq, stats, k, k1, b)
   }
-
-  /** Full rebuild as a new snapshot version of the index root — for the
-    * maintenance moves the delta path cannot express: re-bucketing
-    * (`nBuckets` sized for a grown corpus), analyzer changes, or a
-    * retention purge that must drop documents from every bucket (pass
-    * the purged corpus). The new index (all three tables + stats + an
-    * empty tombstone log) is built complete and cold in a version dir,
-    * then one claim commits it ([[IndexGenerations.rebuild]]) — in-place
-    * overwrite would tear concurrent searches between old postings and
-    * new stats; the claim never does. Readers mid-search keep the old
-    * version (retained until two later rebuilds have committed);
-    * subsequent applies/searches/compactions resolve the new one
-    * transparently. Quiesce the incremental applier across the
-    * cutover — an in-flight delta survives only in the outgoing
-    * version (the moving-corpus lost update; the checkpointed
-    * change-feed consumer is naturally quiet between micro-batches).
-    * Returns the new version dir. */
-  def rebuildBm25Index(spark: SparkSession, dir: String, docs: DataFrame,
-      idCol: String = "doc_id", textCol: String = "text",
-      nBuckets: Int = 32): String =
-    IndexGenerations.rebuild(spark, dir)(writeBm25Index(docs, _, idCol, textCol, nBuckets))
 }

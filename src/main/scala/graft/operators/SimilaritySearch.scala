@@ -386,29 +386,47 @@ object SimilaritySearch {
       .select("query_id", "rank", "neighbor_id", "sq_dist")
   }
 
-  /** Persist the IVF-PQ index: codes land in parquet PARTITIONED BY
-    * coarse list id (`dir/codes/_list=N/`), centroids and codebooks as
-    * tiny side tables — the on-disk inverted file. A search probing
-    * `nProbe` lists then scans ONLY those partitions (static partition
-    * pruning), which is what makes a billion-vector index serve
-    * point queries without touching the corpus: I/O per query is
-    * nProbe/nLists of the (already m-bytes-per-vector) code table. */
+  /** Persist the IVF-PQ index as the next version of the index root
+    * `dir` ([[IndexMaintenance.commitBuild]]): codes land in parquet
+    * PARTITIONED BY coarse list id (`codes/<batch dir>/_list=N/`),
+    * centroids and codebooks as tiny side tables — the on-disk inverted
+    * file. A search probing `nProbe` lists then scans ONLY those
+    * partitions (static partition pruning), which is what makes a
+    * billion-vector index serve point queries without touching the
+    * corpus: I/O per query is nProbe/nLists of the (already
+    * m-bytes-per-vector) code table.
+    *
+    * The initial build is version 1, and retraining the frozen
+    * quantizers — the remedy the drift tripwire
+    * ([[IvfPqMaintenance.driftRatio]]) prescribes — is the same call
+    * over the CURRENT corpus: fresh coarse centroids and PQ codebooks,
+    * every vector re-encoded, a new drift baseline and an empty
+    * tombstone log, built cold in a version dir and committed with one
+    * claim. Readers are never torn between old codes and new
+    * codebooks: a reader mid-search keeps the old version (on disk
+    * until two later builds have committed), and later applies,
+    * searches and compactions resolve the new one. Quiesce the
+    * incremental applier across a retrain, or its in-flight delta is
+    * lost to the rebuild input. Returns the committed version dir. */
   def writeIvfPqIndex(table: DataFrame, dir: String,
       coarseIds: Seq[Long], pqIds: Seq[Long], m: Int = 4,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    val cents = table.filter(col(idCol).isin(coarseIds: _*))
-      .select(col(idCol).cast("long"), col(vecCol)).collect() // nLists tiny rows
-      .sortBy(_.getLong(0))
-      .map(_.getSeq[Float](1).map(_.toDouble).toSeq).toSeq
-    val cbs = pqCodebooks(table, pqIds, m, idCol, vecCol)
-    writeIvfPqIndexWith(table, dir, cents, cbs, idCol, vecCol)
-  }
+      idCol: String = "vec_id", vecCol: String = "embedding"): String =
+    IndexMaintenance.commitBuild(table.sparkSession, dir) { v =>
+      val cents = table.filter(col(idCol).isin(coarseIds: _*))
+        .select(col(idCol).cast("long"), col(vecCol)).collect() // nLists tiny rows
+        .sortBy(_.getLong(0))
+        .map(_.getSeq[Float](1).map(_.toDouble).toSeq).toSeq
+      val cbs = pqCodebooks(table, pqIds, m, idCol, vecCol)
+      writeIvfPqIndexWith(table, v, cents, cbs, idCol, vecCol)
+    }
 
-  /** [[writeIvfPqIndex]] with PRECOMPUTED quantizers — the layout
-    * writer shared by the plain build and the per-filter-partition
-    * builds (which must all encode with the SAME centroids/codebooks
-    * so partition routing is provably equivalent to id-filtered
-    * search — see [[writePartitionedIvfPqIndex]]). */
+  /** The index layout [[writeIvfPqIndex]] commits, written into `dir`,
+    * with PRECOMPUTED quantizers — the layout writer shared by the
+    * single build and the per-filter-partition builds (which must all
+    * encode with the SAME centroids/codebooks so partition routing is
+    * provably equivalent to id-filtered search — see
+    * [[writePartitionedIvfPqIndex]]). The codes table is committed by
+    * its first append. */
   private def writeIvfPqIndexWith(table: DataFrame, dir: String,
       cents: Seq[Seq[Double]], cbs: Seq[Seq[Seq[Double]]],
       idCol: String, vecCol: String): Unit = {
@@ -416,16 +434,14 @@ object SimilaritySearch {
     import spark.implicits._
     // `_seq = 0` is the LSM write-generation stamp: append-mode
     // maintenance stamps later generations and tombstones kill
-    // strictly-older ones; compaction folds everything back to 0
-    // repartition → one file per list (see the small-file note in
-    // Sources.publishMergeAppend)
-    pqEncode(table, cbs, idCol, vecCol)
-      .select(col(idCol).as("_id"), col("codes"),
-        graft.functions.VectorKernels.nearestCentroidCol(col("_v"), cents)
-          .as("_list"))
-      .withColumn("_seq", lit(0L))
-      .repartition(col("_list"))
-      .write.mode("overwrite").partitionBy("_list").parquet(s"$dir/codes")
+    // strictly-older ones; compaction folds everything back to 0. One
+    // file per list (the append's repartition)
+    graft.sources.Sources.publishMergeAppend(spark, s"$dir/codes",
+      pqEncode(table, cbs, idCol, vecCol)
+        .select(col(idCol).as("_id"), col("codes"),
+          graft.functions.VectorKernels.nearestCentroidCol(col("_v"), cents)
+            .as("_list"))
+        .withColumn("_seq", lit(0L)), "_list")
     cents.zipWithIndex.map { case (c, i) => (i, c) }
       .toDF("_list", "centroid")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
@@ -485,10 +501,8 @@ object SimilaritySearch {
       .join(queries.select(col(idCol).cast("long").as("query_id"),
         col(vecCol).as("_qv")), "query_id")
 
-    // resolve through the manifest when the index has been
-    // incrementally maintained ([[applyIvfPqIndexChanges]]); a
-    // freshly-written plain layout reads identically (adoption
-    // fallback inside the merge reader). The probed-list filter still
+    // the codes table is a merge table from its first write: the
+    // reader resolves its manifest. The probed-list filter still
     // prunes statically: each manifest branch carries `_list` as a
     // partition column, so non-probed branches fold to empty scans.
     // append-maintained indexes carry live tombstones between
@@ -587,9 +601,9 @@ object SimilaritySearch {
     * frozen quantizers still encode exactly (incremental ≡ rebuild
     * holds per quantizer generation), but recall against such vectors
     * decays silently, and the remedy is the documented offline
-    * retrain-rebuild: [[writeIvfPqIndex]] over the current corpus with
-    * fresh centroids/codebooks, then resume incremental maintenance
-    * against the new generation. */
+    * retrain: [[writeIvfPqIndex]] over the current corpus with fresh
+    * centroids/codebooks into the same index root, then resume
+    * incremental maintenance against the new version. */
   final case class IvfPqMaintenance(removed: Long, added: Long,
       driftRatio: Option[Double] = None)
 
@@ -630,26 +644,23 @@ object SimilaritySearch {
     * [[writeIvfPqIndex]] over the post-change corpus would
     * (IncrementalIvfPqSpec pins this, and the DuckDB gate replays it).
     *
-    * Mechanics — the codes table IS a merge table:
-    *  1. a plain [[writeIvfPqIndex]] layout is adopted into the
-    *     manifest/pointer discipline in place
-    *     ([[graft.sources.Sources.adoptMergePartitioned]] — no data
-    *     rewrite);
-    *  2. every changed id's CURRENT rows are located with the
+    * Mechanics — the codes table IS a merge table, committed by the
+    * build's first write:
+    *  1. every changed id's CURRENT rows are located with the
     *     bloom/bulk keyed read
     *     ([[graft.sources.Sources.readMergePartitionedKeyedFrame]] —
     *     a column-pruned `(_id, _list)` lookup that never collects
     *     data-proportionally; run
     *     [[graft.sources.Sources.indexBatchKeys]] on the codes dir to
     *     give point lookups bloom-sidecar dir skipping);
-    *  3. they are retracted via a row-level DELETE publish — delete
+    *  2. they are retracted via a row-level DELETE publish — delete
     *     FIRST, so an updated vector whose new embedding lands in a
     *     different coarse list can never leave a stale code behind in
     *     its old one;
-    *  4. `new`/`updated` payloads are encoded with the frozen
+    *  3. `new`/`updated` payloads are encoded with the frozen
     *     quantizers and merge-published into their lists.
-    * Each publish is an atomic pointer swap; a reader between the two
-    * swaps sees a valid index temporarily missing the in-flight
+    * Each publish commits with one claim; a reader between the two
+    * commits sees a valid index temporarily missing the in-flight
     * vectors (the usual ANN freshness contract), never a torn
     * partition. Untouched list partitions keep their files
     * byte-identical; cost per batch is the touched lists' size, never
@@ -681,7 +692,7 @@ object SimilaritySearch {
       vecCol: String = "embedding", changeCol: String = "_change",
       mode: String = "rewrite"): IvfPqMaintenance = {
     // resolve the live version first: after a retrain
-    // ([[retrainIvfPqIndex]]) maintenance continues against the NEW
+    // ([[writeIvfPqIndex]]) maintenance continues against the NEW
     // quantizers/tombstone log transparently
     val dir = graft.sources.Sources.resolveSnapshot(spark, indexDir)
     val codesDir = s"$dir/codes"
@@ -694,8 +705,6 @@ object SimilaritySearch {
     require(unknown.isEmpty,
       s"applyIvfPqIndexChanges: unknown $changeCol value(s) ${unknown.mkString(", ")} " +
         "(expected new/updated/orphaned)")
-
-    graft.sources.Sources.adoptMergePartitioned(spark, codesDir, "_list"): Unit
 
     val ids = changes.select(col(idCol).as("_id")).distinct()
     val adds = changes.filter(col(changeCol).isin("new", "updated"))
@@ -736,8 +745,8 @@ object SimilaritySearch {
         f"IVF-PQ index $dir: apply drift ratio $ratio%.2f exceeds " +
           f"$DriftWarnRatio (delta mean own-centroid dist $m%.4g vs build " +
           f"$base%.4g) — the frozen quantizers no longer fit the feed; " +
-          "schedule an offline retrain-rebuild (writeIvfPqIndex over the " +
-          "current corpus)")
+          "schedule an offline retrain (writeIvfPqIndex over the current " +
+          "corpus into the index root)")
       Some(ratio)
     }
 
@@ -813,31 +822,6 @@ object SimilaritySearch {
     graft.sources.Sources.indexBatchKeys(spark, codesDir, "_id", fpp = graft.sources.Sources.BatchLookupFpp): Unit
   }
 
-  /** Retrain the frozen quantizers — the remedy the drift tripwire
-    * ([[IvfPqMaintenance.driftRatio]]) prescribes, as code. Builds a
-    * complete NEW index (fresh coarse centroids + PQ codebooks trained
-    * on `corpus`, every vector re-encoded, a new drift baseline, an
-    * empty tombstone log) as a cold version dir and commits it with one
-    * claim ([[IndexGenerations.rebuild]]) — readers are never torn
-    * between old codes and new codebooks, a reader mid-search keeps the
-    * old version, and subsequent [[applyIvfPqIndexChanges]] /
-    * [[searchIvfPqIndex]] / [[compactIvfPqIndex]] calls resolve the new
-    * one transparently.
-    *
-    * `corpus` is the CURRENT corpus (the index is derived state; at
-    * 100 TB the corpus is the table of record) — quiesce the
-    * incremental applier across the cutover or its in-flight delta is
-    * lost to the rebuild input, the documented moving-corpus lost
-    * update. Cost is one full [[writeIvfPqIndex]] build; the old
-    * version stays on disk for in-flight readers until two later
-    * rebuilds have committed. Returns the new version dir. */
-  def retrainIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String, corpus: DataFrame, coarseIds: Seq[Long], pqIds: Seq[Long],
-      m: Int = 4, idCol: String = "vec_id",
-      vecCol: String = "embedding"): String =
-    IndexGenerations.rebuild(spark, dir)(
-      writeIvfPqIndex(corpus, _, coarseIds, pqIds, m, idCol, vecCol))
-
   /** LIVE logical state of the code table — index version
     * resolved, tombstone kills applied: `(_id, codes, _list)`. The SQL
     * read surface ([[graft.GraftSql.registerIvfPqIndex]]); probed-list
@@ -907,11 +891,12 @@ object SimilaritySearch {
     * the equivalence; the q_vec_ivfpq_partitioned oracle re-derives
     * it from the corpus). A per-partition retrain would break that
     * equivalence AND cross-partition comparability — retrain is a
-    * root-level operation here (rebuild all partitions, one
-    * [[IndexGenerations.rebuild]] each).
+    * root-level operation here (rebuild all partitions, one committed
+    * version per partition root).
     *
     * Layout: `rootDir/<filterCol>=<value>/` each a full standalone
-    * index (own codes/centroids/codebooks/drift/tombstones), so every
+    * index root (its build committed as version 1, with its own
+    * codes/centroids/codebooks/drift/tombstones), so every
     * maintenance entry point — [[applyIvfPqIndexChanges]],
     * [[compactIvfPqIndex]], generations — works per partition
     * unchanged. Returns the partition values written. */
@@ -933,8 +918,9 @@ object SimilaritySearch {
     // disjoint per-partition builds → family pool (VERDICT r16 #5)
     IndexMaintenance.inParallel(values.toSeq) { v =>
       val seg = partSeg(filterCol, v)
-      writeIvfPqIndexWith(table.filter(col(filterCol) === lit(v)),
-        s"$rootDir/$seg", cents, cbs, idCol, vecCol)
+      IndexMaintenance.commitBuild(table.sparkSession, s"$rootDir/$seg")(
+        writeIvfPqIndexWith(table.filter(col(filterCol) === lit(v)), _, cents, cbs,
+          idCol, vecCol)): Unit
       seg
     }
   }
@@ -1055,8 +1041,9 @@ object SimilaritySearch {
     * REPLAY the failure mode, and an append-mode re-apply is logically
     * idempotent through the tombstone discipline (same ids re-killed
     * at the next generation, identical frozen-quantizer codes
-    * re-inserted). Generations resolve per micro-batch, so an offline
-    * [[retrainIvfPqIndex]] between batches is picked up transparently.
+    * re-inserted). Versions resolve per micro-batch, so an offline
+    * retrain ([[writeIvfPqIndex]] into the root) between batches is
+    * picked up transparently.
     * The stream must be the index's single logical writer
     * ([[LsmTombstones]]), which the checkpointed query naturally is. */
   def ivfPqIndexSink(changes: DataFrame, dir: String, checkpointDir: String,

@@ -14,16 +14,17 @@ object SourceQueries {
 
   import QueryDef.scratch
 
-  /** Merge-table SEED write with §6 file sizing (r19): rebalance by the
-    * partition column so the dynamic-partition write emits
-    * advisory-sized files instead of one file per (scan task ×
-    * partition) — the unbalanced seed left the sf10 table at ~1 MB/file
-    * (113 files), serialized the job commit (avg_par 1.3 of 32), and
-    * taxed every later scan of the seeded partitions with per-file
-    * opens. Rows identical; layout only. */
-  private def seedPartitioned(df: org.apache.spark.sql.DataFrame, dir: String): Unit =
-    df.hint("rebalance", "p").write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("p").parquet(dir)
+  /** Merge-table SEED: `df` committed as the first publish of a fresh
+    * table at `dir`, partitioned by `p`. The scratch dir is deleted
+    * first: a rep must never merge into the previous rep's table, and a
+    * table an older build left there may be in a layout this one
+    * refuses. */
+  private def seedPartitioned(s: org.apache.spark.sql.SparkSession,
+      df: org.apache.spark.sql.DataFrame, dir: String, cfg: graft.types.TableConfig): Unit = {
+    org.apache.hadoop.fs.FileSystem.get(new java.net.URI(dir), s.sparkContext.hadoopConfiguration)
+      .delete(new org.apache.hadoop.fs.Path(dir), true): Unit
+    Sources.publishMergePartitioned(s, dir, df, cfg, "p"): Unit
+  }
 
   /** `q_merge_keyed_lookup`'s BUILD phase — seed write + MERGE publish
     * + key-bloom sidecar build — split out (r18, VERDICT r17 #7) so
@@ -47,7 +48,7 @@ object SourceQueries {
           .otherwise(col("o_orderpriority")))
       .withColumn("o_orderdate", col("o_orderdate") + expr("INTERVAL 1 DAY"))
     val dir = scratch(d, "pmergek")
-    seedPartitioned(current, dir)
+    seedPartitioned(s, current, dir, cfg)
     Sources.publishMergePartitioned(s, dir, incoming, cfg, "p")
     Sources.indexBatchKeys(s, dir, "o_orderkey")
     dir
@@ -254,8 +255,7 @@ object SourceQueries {
             .otherwise(col("o_orderpriority")))
         .withColumn("o_orderdate", col("o_orderdate") + expr("INTERVAL 1 DAY"))
       val dir = scratch(d, "pmerge")
-      // static overwrite resets the table dir between runs
-      seedPartitioned(current, dir)
+      seedPartitioned(s, current, dir, cfg)
       Sources.publishMergePartitioned(s, dir, incoming, cfg, "p")
       Sources.readMergePartitioned(s, dir, "p")
         .select("o_orderkey", "o_totalprice", "o_orderstatus", "o_orderpriority",
@@ -375,7 +375,7 @@ object SourceQueries {
             .otherwise(col("o_orderpriority")))
         .withColumn("o_orderdate", col("o_orderdate") + expr("INTERVAL 1 DAY"))
       val dir = scratch(d, "pmergec")
-      seedPartitioned(current, dir)
+      seedPartitioned(s, current, dir, cfg)
       Sources.publishMergePartitioned(s, dir, incoming, cfg, "p")
       Sources.compactMergePartitioned(s, dir, "p")
       Sources.readMergePartitioned(s, dir, "p")
@@ -448,7 +448,7 @@ object SourceQueries {
             .otherwise(col("o_orderpriority")))
         .withColumn("o_orderdate", col("o_orderdate") + expr("INTERVAL 1 DAY"))
       val dir = scratch(d, "pmerger")
-      seedPartitioned(current, dir)
+      seedPartitioned(s, current, dir, cfg)
       Sources.publishMergePartitioned(s, dir, incoming, cfg, "p")
       Sources.indexBatchStats(s, dir, "o_orderkey")
       Sources.readMergePartitionedRange(s, dir, "p", "o_orderkey",
@@ -539,7 +539,7 @@ object SourceQueries {
           when(col("o_orderkey") % 10 === 1, col("o_totalprice") + 2.0)
             .otherwise(col("o_totalprice")))
       val dir = scratch(d, "pmergecf")
-      seedPartitioned(current, dir)
+      seedPartitioned(s, current, dir, cfg)
       Sources.publishMergePartitioned(s, dir, incoming1, cfg, "p")
       val since = Sources.mergeVersions(s, dir).max
       Sources.publishMergePartitioned(s, dir, incoming2, cfg, "p")
@@ -570,11 +570,7 @@ object SourceQueries {
         .select(col("o_orderkey"), col("o_totalprice"),
           (col("o_orderkey") % 4).cast("int").as("p"))
       val dir = scratch(d, "pmergedel")
-      // a fresh table per run, as the seeded merge queries get: a table
-      // left by an earlier build may be in a format this one refuses
-      org.apache.hadoop.fs.FileSystem.get(new java.net.URI(dir), s.sparkContext.hadoopConfiguration)
-        .delete(new org.apache.hadoop.fs.Path(dir), true): Unit
-      Sources.publishMergePartitioned(s, dir, base, cfg, "p")
+      seedPartitioned(s, base, dir, cfg)
       val since = Sources.mergeVersions(s, dir).max
       val dels = base.filter(col("o_orderkey") % 13 === 0).select("o_orderkey", "p")
       Sources.publishMergeDeletes(s, dir, dels, cfg, "p")

@@ -172,7 +172,8 @@ object TextQueries {
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** The REBUILT index: base build + append feed (left uncompacted,
-    * live tombstones), then [[graft.operators.LexicalIndex.rebuildBm25Index]]
+    * live tombstones), then a rebuild
+    * ([[graft.operators.LexicalIndex.writeBm25Index]] into the same root)
     * over the post-feed corpus WITH a retention purge
     * (doc_id % 23 == 11 dropped) and a re-bucketing (32 → 16) — an
     * atomic generation swap — then one more updated feed
@@ -198,7 +199,7 @@ object TextQueries {
       graft.operators.LexicalIndex.applyBm25IndexChanges(s,
         p.toString, bm25Feed(docs), mode = "append"): Unit
       val purged = postFeedDocs(docs).filter(col("doc_id") % 23 =!= 11)
-      graft.operators.LexicalIndex.rebuildBm25Index(s, p.toString, purged,
+      graft.operators.LexicalIndex.writeBm25Index(purged, p.toString,
         nBuckets = 16): Unit
       val feed2 = purged.filter(col("doc_id") % 17 === 9)
         .withColumn("text", concat(col("text"), lit(" vector")))
@@ -1282,7 +1283,7 @@ object TextQueries {
     },
 
     // REBUILT index under the hash gate: base build + append feed
-    // (live tombstones), then rebuildBm25Index over the post-feed
+    // (live tombstones), then a writeBm25Index rebuild over the post-feed
     // corpus with a retention purge (doc_id % 23 == 11 dropped) and a
     // 32 → 16 re-bucketing — an atomic generation swap — then one
     // more updated feed (doc_id % 17 == 9 gains ' vector') applied to

@@ -255,7 +255,8 @@ object VectorQueries {
 
   /** The RETRAINED index: base build + append-mode feed (left
     * uncompacted, live tombstones), then
-    * [[SimilaritySearch.retrainIvfPqIndex]] over the post-feed corpus
+    * a retrain ([[SimilaritySearch.writeIvfPqIndex]] into the same
+    * root) over the post-feed corpus
     * with DIFFERENT quantizer training ids (coarse 8-16, pq 17-20 —
     * the swap is detectable: searching through the old quantizers
     * breaks the hash), then one MORE append-mode feed (ids
@@ -281,7 +282,7 @@ object VectorQueries {
       SimilaritySearch.applyIvfPqIndexChanges(s, p.toString,
         incFeed(emb), mode = "append"): Unit
       val post1 = postFeedCorpus(emb)
-      SimilaritySearch.retrainIvfPqIndex(s, p.toString, post1,
+      SimilaritySearch.writeIvfPqIndex(post1, p.toString,
         coarseIds = Seq(8L, 9L, 10L, 11L, 12L, 14L, 15L, 16L),
         pqIds = Seq(17L, 18L, 19L, 20L), m = 4): Unit
       val feed2 = post1.filter(col("vec_id") % 19 === 7)
@@ -1140,7 +1141,7 @@ object VectorQueries {
     },
 
     // RETRAINED quantizers under the hash gate: base build + append
-    // feed (live tombstones), then retrainIvfPqIndex over the
+    // feed (live tombstones), then a writeIvfPqIndex retrain over the
     // post-feed corpus with NEW training ids (coarse 8-16, pq 17-20)
     // — an atomic generation swap — then one more orphan feed applied
     // to the new generation. The oracle derives everything from the

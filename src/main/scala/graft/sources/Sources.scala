@@ -74,8 +74,9 @@ object Sources {
     *
     * Layout (the Iceberg/Delta idea reduced to plain parquet + one
     * claim per commit): data lives in IMMUTABLE batch dirs
-    * `tableDir/b-<n>/<col>=<val>/…parquet` (one `partitionBy` write
-    * per publish, never rewritten in place); a MANIFEST file
+    * `tableDir/b-<n>-<uid>/<col>=<val>/…parquet` (one `partitionBy`
+    * write per publish, numbered after the commit its publish read,
+    * never rewritten in place); a MANIFEST file
     * `tableDir/manifest-<n>` states its format version, records the
     * schema each batch dir reads under (partition column typed as
     * written, so no read infers a type from a directory name) and lists
@@ -100,9 +101,11 @@ object Sources {
     * batch is never silently lost (the pre-r16 contract degraded
     * overlapping publishers to exactly that whole lost update).
     *
-    * A pre-manifest table (plain `tableDir/<col>=<val>` dirs) is
-    * adopted as the baseline manifest on first publish; its untouched
-    * partition dirs are left byte-identical in place.
+    * A table is committed by its first publish: an absent or empty
+    * root takes it. A root that holds `<col>=<val>` dirs but no claim
+    * (a plain partitioned write of an earlier build) is refused, naming
+    * it, by every publish and read ([[claimNumbers]]): a first commit
+    * over it would publish a manifest that omits those rows.
     *
     * A micro-batch runs on the driver, with no job but one bounded
     * collect of `incoming` (`DriverPath.batchRows`), when the batch is
@@ -255,8 +258,8 @@ object Sources {
     * incoming column's `pType` or is a float or double. Then Scala equality on
     * the two sides' values is Spark's equality; across types only the
     * distributed `isin` applies Spark's coercion (a long batch against
-    * an adopted dir inference typed as int), and on doubles Spark's
-    * equality and Scala's part on NaN. */
+    * a dir written as int), and on doubles Spark's equality and Scala's
+    * part on NaN. */
   private def touchedScans(groups: Seq[DataFrame], partitionCol: String, pType: DataType,
       touched: Seq[Any]): Option[Seq[Bridge.LocalParquetScan]] = {
     val keep = touched.filter(_ != null).toSet
@@ -303,41 +306,6 @@ object Sources {
       dir: String): Unit =
     df.hint("rebalance", partitionCol).write.mode(SaveMode.Overwrite)
       .partitionBy(partitionCol).parquet(dir)
-
-  /** Adopt a plain `<col>=<val>` partitioned parquet layout into the
-    * manifest/claim discipline WITHOUT rewriting any data: write a
-    * baseline manifest referencing the existing partition dirs, under
-    * the schema Spark's partition inference gives them (the one
-    * inference a merge table runs: every later read takes the schema
-    * the manifest records), and claim `commit-1` for it. This is the
-    * adoption step
-    * [[publishMergePartitioned]] performs implicitly on its first
-    * publish, exposed for callers that need a manifest table BEFORE
-    * their first merge — e.g. [[publishMergeDeletes]] (which refuses
-    * pre-manifest tables) when the first delta against a bulk-written
-    * table is a retraction. Idempotent: returns false (no-op) when the
-    * table already holds a claim (a rival adopting at the same time
-    * included) or has no partition dirs to adopt. The adopted dirs are
-    * left byte-identical in place. */
-  def adoptMergePartitioned(spark: SparkSession, tableDir: String,
-      partitionCol: String): Boolean = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val uri = new java.net.URI(tableDir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(uri, conf)
-    val root = new org.apache.hadoop.fs.Path(tableDir)
-    // any claim means the table is adopted: the first committed
-    // manifest embeds the baseline entries
-    if (claimNumbers(fs, root).nonEmpty) return false
-    val baseline = plainLayout(spark, tableDir, partitionCol)
-    if (baseline.entries.isEmpty) return false
-    val mfile = f"manifest-${1}%012d-${java.util.UUID.randomUUID().toString.take(8)}"
-    writeRaw(uri, conf, new org.apache.hadoop.fs.Path(root, mfile), baseline.text)
-    // adoption is a commit like any other: of two racing adopters one
-    // claims, and the other finds the table adopted
-    val won = claimNext(fs, uri, root, 0L, mfile)((_, _) => ())
-    if (!won) deleteQuiet(fs, new org.apache.hadoop.fs.Path(root, mfile), recursive = false)
-    won
-  }
 
   /** APPEND-ONLY publish for a [[publishMergePartitioned]] table: the
     * incoming rows land in a NEW batch dir and its partition segments
@@ -479,8 +447,8 @@ object Sources {
       s"deletes frame must carry the partition column '$partitionCol'")
     cfg.naturalKey.foreach(k => require(deletes.columns.contains(k),
       s"deletes frame must carry natural-key column '$k'"))
-    require(claimNumbers(fsOf(spark, tableDir), new org.apache.hadoop.fs.Path(tableDir)).nonEmpty,
-      s"publishMergeDeletes: '$tableDir' is not a manifest-published table")
+    require(claimNumbers(fsOf(spark, tableDir), new org.apache.hadoop.fs.Path(tableDir),
+      merge = true).nonEmpty, s"publishMergeDeletes: '$tableDir' is not a manifest-published table")
     commitMergeBatch(spark, tableDir, partitionCol) { basis =>
       // Bounded metadata collect: touched-partition cardinality is the
       // ONLY thing collected, and even that is probed with a limit first
@@ -659,13 +627,14 @@ object Sources {
     new org.apache.hadoop.fs.Path(root, f"$CommitPrefix$n%012d")
 
   /** The numbers of a table root's `commit-<n>` claims, from one
-    * listing; none for an absent root. A root that holds a pointer or
-    * claim of an earlier layout but no claim (a table's `_current`, an
-    * index's `_gen` or `genswap-*`) is a layout from before claimed
-    * commits (a table's state is its highest claim, and such a root has
-    * none): refused, naming the root. */
+    * listing; none for an absent root. A root that holds what a layout
+    * from before claimed commits left but no claim (a table's
+    * `_current`, an index's `_gen` or `genswap-*`, and for a `merge`
+    * table a plain `<col>=<val>` partition dir) is refused, naming the
+    * root: a table's state is its highest claim, and such a root has
+    * none. */
   private def claimNumbers(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Seq[Long] = {
+      root: org.apache.hadoop.fs.Path, merge: Boolean = false): Seq[Long] = {
     val listed =
       try fs.listStatus(root).toSeq
       catch { case _: java.io.FileNotFoundException => Seq.empty }
@@ -673,8 +642,9 @@ object Sources {
       case st if st.isFile && st.getPath.getName.startsWith(CommitPrefix) =>
         numberOf(st.getPath.getName, CommitPrefix)
     }
-    if (claims.isEmpty) listed.map(_.getPath.getName)
-      .find(n => n == "_current" || n == "_gen" || n.startsWith("genswap-"))
+    if (claims.isEmpty) listed.map(st => st.getPath.getName -> st.isDirectory)
+      .collectFirst { case (n, dir) if n == "_current" || n == "_gen" ||
+        n.startsWith("genswap-") || (merge && dir && n.contains("=")) => n }
       .foreach(n => throw new IllegalStateException(s"table $root holds $n but no " +
         "commit-<n> claim: a layout from before claimed commits, which this engine does " +
         "not read (a table's state is the one its highest claim names) — refusing"))
@@ -691,12 +661,12 @@ object Sources {
     * rivals committed past it: the resolve lists again, and fails loudly
     * when that keeps happening. */
   private def resolveClaim[T](fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, attempt: Int = 1)(
+      root: org.apache.hadoop.fs.Path, merge: Boolean, attempt: Int = 1)(
       named: (Long, String) => Option[T]): Option[(Long, T)] =
-    claimNumbers(fs, root).maxOption.flatMap { n =>
+    claimNumbers(fs, root, merge).maxOption.flatMap { n =>
       readControl(fs, claimPath(root, n)).flatMap(named(n, _)) match {
         case Some(t) => Some(n -> t)
-        case None if attempt < 3 => resolveClaim(fs, root, attempt + 1)(named)
+        case None if attempt < 3 => resolveClaim(fs, root, merge, attempt + 1)(named)
         case None => throw new IllegalStateException(
           s"claim $root/${claimPath(root, n).getName} or what it names no longer exists — " +
             "the reader lagged beyond the two-publish retention window")
@@ -779,10 +749,12 @@ object Sources {
     * the table holds no claim. Every read of the live table and every
     * publish basis resolves through here, so a publish sees exactly what
     * readers see and can never rebase past a claimed rival batch. A
-    * claim that names no manifest is refused, naming it. */
+    * claim that names no manifest, and a root of plain partition dirs
+    * with no claim, are refused, naming them. */
   private def committedManifest(fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path): Option[(Long, Manifest)] =
-    resolveClaim(fs, root)((n, m) => readManifestOpt(fs, root, requireManifestClaim(root, n, m)))
+    resolveClaim(fs, root, merge = true)((n, m) =>
+      readManifestOpt(fs, root, requireManifestClaim(root, n, m)))
 
   /** `content` of merge claim `n`, refused unless it names a manifest. */
   private def requireManifestClaim(root: org.apache.hadoop.fs.Path, n: Long,
@@ -946,10 +918,11 @@ object Sources {
       result: Seq[String] => T, appendOnly: Boolean = false,
       basisVersion: Option[Long] = None)
 
-  /** The one commit path of every merge-table write: adopt a plain
-    * layout, read the committed basis ([[latestCommitted]]), let `stage`
-    * derive the write from it (None: nothing to commit), name the batch
-    * dir, run the write, and claim the next manifest
+  /** The one commit path of every merge-table write: read the committed
+    * basis ([[latestCommitted]]), let `stage` derive the write from it
+    * (None: nothing to commit), name the batch dir after the commit it
+    * read (`b-<c+1>-<uid>`: without racing publishes, dir groups sort
+    * in commit order), run the write, and claim the next manifest
     * ([[claimMergeManifest]]), which records the batch dir's schema as
     * the dir reads it: the frame's columns with the partition column,
     * typed as written, last: the claim is the commit. Then the prune
@@ -963,12 +936,7 @@ object Sources {
     val uri = new java.net.URI(tableDir)
     val fs = org.apache.hadoop.fs.FileSystem.get(uri, conf)
     val root = new org.apache.hadoop.fs.Path(tableDir)
-    // adoption is durable before the first rewrite: the plain layout's
-    // dirs are then referenced by a retained manifest and get the same
-    // two-publish retention slack as any other version (the first
-    // publish cannot prune a dir a pre-manifest reader is scanning)
-    adoptMergePartitioned(spark, tableDir, partitionCol): Unit
-    val read @ (_, basis) = latestCommitted(fs, root)
+    val read @ (c, basis) = latestCommitted(fs, root)
     stage(basis).map { b =>
       val basisEntries = b.basisVersion.fold(basis.entries)(v =>
         committedAt(fs, root, v).getOrElse(throw new java.util.ConcurrentModificationException(
@@ -978,7 +946,7 @@ object Sources {
       // suffix: two concurrent publishers that read the same max number
       // then write DISTINCT files instead of clobbering each other's
       val uid = java.util.UUID.randomUUID().toString.take(8)
-      val bdir = f"b-${nextNumber(fs, root)}%012d-$uid"
+      val bdir = f"b-${c + 1}%012d-$uid"
       val dir = new org.apache.hadoop.fs.Path(root, bdir)
       val schema = org.apache.spark.sql.graftbridge.Bridge.nullable(StructType(
         b.frame.filterNot(_.name == partitionCol) :+ b.frame(partitionCol)))
@@ -1010,18 +978,13 @@ object Sources {
     * lists (one scan per batch dir under the schema the manifest
     * records for it, so the partition column comes back as written and
     * Catalyst partition pruning still prunes reader-side filters to the
-    * touched dirs). A pre-manifest `col=val` layout reads its partition
-    * dirs as inference types them; a plain parquet dir reads as-is. */
+    * touched dirs). A table with no claim, or whose manifest lists no
+    * dir, reads as an empty frame with no column. `partitionCol` is not
+    * read: the manifest records every dir's schema. */
   def readMergePartitioned(spark: SparkSession, tableDir: String,
-      partitionCol: String = ""): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(tableDir), conf)
-    liveManifest(fs, new org.apache.hadoop.fs.Path(tableDir)) match {
-      case Some(m) => assembleManifest(spark, tableDir, m).getOrElse(spark.emptyDataFrame)
-      case None => assembleManifest(spark, tableDir, plainLayout(spark, tableDir, partitionCol))
-        .getOrElse(spark.read.parquet(tableDir))
-    }
-  }
+      partitionCol: String = ""): DataFrame =
+    assembleManifest(spark, tableDir, readableManifest(spark, tableDir))
+      .getOrElse(spark.emptyDataFrame)
 
   /** Per-partition live GENERATION counts of a merge table: partition
     * dir segment (`col=value`) → number of distinct batch dirs the
@@ -1032,29 +995,16 @@ object Sources {
     * ([[graft.operators.IndexMaintenance]]). Listing-only: resolves
     * the highest claim, no Spark job. */
   def mergeGenerations(spark: SparkSession, tableDir: String,
-      partitionCol: String): Map[String, Int] = {
-    val fs = fsOf(spark, tableDir)
-    val root = new org.apache.hadoop.fs.Path(tableDir)
-    // pre-adoption plain layout: one top-level dir per partition = one
-    // generation each
-    liveManifest(fs, root).map(_.entries).getOrElse(plainDirs(fs, root, partitionCol))
-      .groupBy(segmentOf)
+      partitionCol: String): Map[String, Int] =
+    readableManifest(spark, tableDir).entries.groupBy(segmentOf)
       .view.mapValues(_.map(topSegmentOf).distinct.size).toMap
-  }
 
   /** Distinct live top-level batch dirs of a merge table — the
     * table-wide commit/bookkeeping cost companion to
     * [[mergeGenerations]]. Listing-only. */
   def mergeBatchDirCount(spark: SparkSession, tableDir: String,
-      partitionCol: String): Int = {
-    val fs = fsOf(spark, tableDir)
-    val root = new org.apache.hadoop.fs.Path(tableDir)
-    liveManifest(fs, root) match {
-      case Some(m) => m.entries.map(topSegmentOf).distinct.size
-      // pre-adoption plain layout: the table root is the one batch
-      case None => if (plainDirs(fs, root, partitionCol).isEmpty) 0 else 1
-    }
-  }
+      partitionCol: String): Int =
+    readableManifest(spark, tableDir).entries.map(topSegmentOf).distinct.size
 
   /** Retained manifest versions of a [[publishMergePartitioned]]
     * table, ascending — the highest claim's number and the two-publish
@@ -1110,8 +1060,8 @@ object Sources {
     * fallback is a full re-read, never a silent whole-table "delta". */
   def readMergePartitionedChanges(spark: SparkSession, tableDir: String,
       sinceVersion: Long, partitionCol: String = ""): DataFrame = {
+    val live = readableManifest(spark, tableDir)
     val from = retainedManifest(spark, tableDir, sinceVersion).entries.toSet
-    val live = readableManifest(spark, tableDir, "")
     assembleManifest(spark, tableDir, live.withEntries(live.entries.filterNot(from)))
       .getOrElse(spark.emptyDataFrame)
   }
@@ -1158,8 +1108,8 @@ object Sources {
     * `orphaned`). */
   private def changeDirSets(spark: SparkSession, tableDir: String,
       sinceVersion: Long): ChangeDirs = {
+    val live = readableManifest(spark, tableDir)
     val from = retainedManifest(spark, tableDir, sinceVersion)
-    val live = readableManifest(spark, tableDir, "")
     val changed = live.entries.filterNot(from.entries.toSet)
     val changedSegs = changed.map(segmentOf).toSet
     val liveSegs = live.entries.map(segmentOf).toSet
@@ -1536,7 +1486,7 @@ object Sources {
       (deltaOf: Option[Long] => D): Option[T] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val tFs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(tableDir), conf)
-    val claims = claimNumbers(tFs, new org.apache.hadoop.fs.Path(tableDir))
+    val claims = claimNumbers(tFs, new org.apache.hadoop.fs.Path(tableDir), merge = true)
     if (claims.isEmpty) return None // nothing published yet
     val live = claims.max
     val ckUri = new java.net.URI(checkpointDir)
@@ -1563,12 +1513,12 @@ object Sources {
   val BatchLookupFpp: Double = 1e-4
 
   /** Build per-dir Bloom key filters for a
-    * [[publishMergePartitioned]] table: every immutable top-level dir
-    * (`b-*` batch dirs AND adopted `col=val` partition dirs — round
-    * 15) lacking one gets a `_keybloom-<keyCol>` sidecar built
+    * [[publishMergePartitioned]] table: every batch dir the live
+    * manifest references lacking one gets a `_keybloom-<keyCol>`
+    * sidecar built
     * from a scan of ONLY the key column (column-pruned parquet read).
     * Idempotent and safe to run any time — referenced dirs never
-    * change after publish/adoption, so a sidecar is built once and
+    * change after publish, so a sidecar is built once and
     * stays valid for the dir's lifetime; the prune/vacuum deletes it
     * with its dir.
     * Underscore-prefixed sidecars are invisible to Spark's file
@@ -1597,7 +1547,6 @@ object Sources {
       fpp: Double, mayUseDriver: Boolean): Int = {
     val fs = fsOf(spark, tableDir)
     val root = new org.apache.hadoop.fs.Path(tableDir)
-    if (!fs.exists(root)) return 0
     val todo = unindexedBatchDirs(fs, root, s"_keybloom-$keyCol")
     if (todo.isEmpty) return 0
     // sizing WITHOUT a count job: parquet footer row counts, read
@@ -1711,7 +1660,7 @@ object Sources {
     val referenced = liveManifest(fs, root).map(_.entries.map(topSegmentOf).toSet)
     var built = 0
     fs.listStatus(root).foreach { st =>
-      if (st.isDirectory && indexableDir(st.getPath.getName) &&
+      if (st.isDirectory && st.getPath.getName.startsWith("b-") &&
           referenced.forall(_.contains(st.getPath.getName))) {
         val sidecar = new org.apache.hadoop.fs.Path(st.getPath, s"_keybloom-$keyCol")
         if (!fs.exists(sidecar)) {
@@ -1726,33 +1675,16 @@ object Sources {
     built
   }
 
-  /** True for top-level dirs the key index covers: `b-*` batch dirs
-    * AND adopted plain partition dirs (`col=val`). Both are immutable
-    * under the manifest discipline — every mutation writes a NEW
-    * batch dir and at most drops entries; nothing rewrites a
-    * referenced dir in place — so a sidecar built once stays valid
-    * for the dir's lifetime. Covering the adopted dirs is what lets a
-    * keyed lookup of NEW keys skip the (usually dominant) base table
-    * entirely, not just the delta generations (round 15). */
-  private def indexableDir(name: String): Boolean =
-    name.startsWith("b-") || (name.contains("=") && !name.startsWith("."))
-
-  /** Un-indexed batch/adopted dirs under `root` (no `sidecarName`),
-    * restricted to dirs the LIVE manifest references when one exists —
-    * a replaced/retired dir awaiting prune is unreachable to readers,
-    * so a sidecar for it is a wasted full scan (a compaction that
-    * re-sidecared the just-dropped base measured 72 s vs 23 s). A
-    * pre-manifest plain layout indexes all its partition dirs. */
+  /** The batch dirs the live manifest references that lack
+    * `sidecarName`, sorted; none for a table with no claim. Only
+    * referenced dirs: a replaced/retired dir awaiting prune is
+    * unreachable to readers, so a sidecar for it is a wasted full scan
+    * (a compaction that re-sidecared the just-dropped base measured
+    * 72 s vs 23 s). */
   private def unindexedBatchDirs(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, sidecarName: String): Seq[String] = {
-    val referenced = liveManifest(fs, root).map(_.entries.map(topSegmentOf).toSet)
-    fs.listStatus(root).toSeq.collect {
-      case st if st.isDirectory && indexableDir(st.getPath.getName) &&
-        referenced.forall(_.contains(st.getPath.getName)) &&
-        !fs.exists(new org.apache.hadoop.fs.Path(st.getPath, sidecarName)) =>
-        st.getPath.getName
-    }.sorted
-  }
+      root: org.apache.hadoop.fs.Path, sidecarName: String): Seq[String] =
+    liveManifest(fs, root).toSeq.flatMap(_.entries.map(topSegmentOf)).distinct.sorted
+      .filterNot(d => fs.exists(new org.apache.hadoop.fs.Path(root, s"$d/$sidecarName")))
 
   /** Exact row count (and EVERY file's parquet schema) of every
     * parquet file under `dir` (recursive, hidden/sidecar files
@@ -1813,8 +1745,7 @@ object Sources {
     // tag = which of `dirs` the file lives under. An alternation of
     // the QUOTED dir names (leftmost path match wins, so a b-dir's
     // nested `col=val` subdir can never shadow its batch dir; the
-    // trailing '/' stops prefix-name shadowing) — works for both b-*
-    // batch dirs and adopted `col=val` partition dirs.
+    // trailing '/' stops prefix-name shadowing).
     val dirAlt = dirs.map(java.util.regex.Pattern.quote).mkString("|")
     withSchema.parquet(dirs.map(d => s"$tableDir/$d"): _*)
       .select(regexp_extract(input_file_name(), s"/($dirAlt)/", 1).as("_bdir"),
@@ -1979,7 +1910,6 @@ object Sources {
     import org.apache.spark.sql.functions.{max => fmax, min => fmin, col}
     val fs = fsOf(spark, tableDir)
     val root = new org.apache.hadoop.fs.Path(tableDir)
-    if (!fs.exists(root)) return 0
     val todo = unindexedBatchDirs(fs, root, s"_zonemap-$statCol")
     if (todo.isEmpty) return 0
     // ONE map-side-combined job over all un-indexed dirs (vs the old
@@ -2060,25 +1990,23 @@ object Sources {
     import org.apache.spark.sql.functions.{col, lit}
     val fs = fsOf(spark, tableDir)
     val root = new org.apache.hadoop.fs.Path(tableDir)
-    val m = readableManifest(spark, tableDir, partitionCol)
+    val m = readableManifest(spark, tableDir)
     val lo = lower.map(zoneKey)
     val hi = upper.map(zoneKey)
     val kept = m.entries.groupBy(topSegmentOf).toSeq.sortBy(_._1).flatMap {
       case (top, es) =>
         val sidecar = new org.apache.hadoop.fs.Path(root, s"$top/_zonemap-$statCol")
-        val overlaps =
-          if (!top.startsWith("b-")) true
-          else readControl(fs, sidecar) match {
-            case None => true // unindexed: read
-            case Some("empty") => false
-            case Some(body) =>
-              val Array(tag, minS, maxS) = body.split("\n", 3)
-              val dirLo = zoneParse(tag, minS)
-              val dirHi = zoneParse(tag, maxS)
-              // no overlap iff dirHi < lower or upper < dirLo
-              lo.forall { case (_, l) => zoneLeq(l, dirHi) } &&
-                hi.forall { case (_, u) => zoneLeq(dirLo, u) }
-          }
+        val overlaps = readControl(fs, sidecar) match {
+          case None => true // unindexed: read
+          case Some("empty") => false
+          case Some(body) =>
+            val Array(tag, minS, maxS) = body.split("\n", 3)
+            val dirLo = zoneParse(tag, minS)
+            val dirHi = zoneParse(tag, maxS)
+            // no overlap iff dirHi < lower or upper < dirLo
+            lo.forall { case (_, l) => zoneLeq(l, dirHi) } &&
+              hi.forall { case (_, u) => zoneLeq(dirLo, u) }
+        }
         if (overlaps) es else Nil
     }
     val bounded = (df: DataFrame) => {
@@ -2105,13 +2033,12 @@ object Sources {
     import org.apache.spark.sql.functions.col
     val fs = fsOf(spark, tableDir)
     val root = new org.apache.hadoop.fs.Path(tableDir)
-    val m = readableManifest(spark, tableDir, partitionCol)
+    val m = readableManifest(spark, tableDir)
     val kept = m.entries.groupBy(topSegmentOf).toSeq.sortBy(_._1).flatMap {
       case (top, es) =>
         val sidecar = new org.apache.hadoop.fs.Path(root, s"$top/_keybloom-$keyCol")
         val mayContain =
-          // any indexed top dir (b-* batch or adopted partition dir)
-          // skip-tests; unindexed dirs always read
+          // an indexed batch dir skip-tests; unindexed dirs always read
           if (!fs.exists(sidecar)) true
           else {
             val in = fs.open(sidecar)
@@ -2208,9 +2135,8 @@ object Sources {
   private val ManifestFormat = 1
 
   /** One merge-table manifest: its file name, the schema each dir group
-    * reads under (by group dir: a batch dir, or "" for adopted
-    * root-level `col=val` dirs), and its entries, the live partition
-    * dirs relative to the table root. */
+    * (batch dir) reads under, and its entries, the live partition dirs
+    * relative to the table root (`b-<n>-<uid>/<col>=<val>`). */
   private final case class Manifest(name: String, schemas: Map[String, StructType],
       entries: Seq[String]) {
     def withEntries(es: Seq[String]): Manifest = copy(entries = es)
@@ -2231,11 +2157,16 @@ object Sources {
   }
 
   /** Parse manifest `name`'s content; refuses, naming the manifest, one
-    * that states no format version or one this engine does not read. */
+    * that states no format version or one this engine does not read,
+    * and one that lists a root-level dir (a plain layout an earlier
+    * build adopted in place). */
   private def parseManifest(root: org.apache.hadoop.fs.Path, name: String,
       content: String): Manifest = {
     val (schemas, entries) = afterVersionLine(s"merge manifest $root/$name", ManifestFormat,
       content).partition(_.startsWith("schema\t"))
+    entries.find(!_.contains('/')).foreach(e => throw new IllegalStateException(
+      s"merge manifest $root/$name lists root-level dir '$e', a layout adopted by an " +
+        "earlier build that this engine does not read — refusing"))
     Manifest(name, schemas.map { line =>
       val Array(_, group, json) = line.split("\t", 3)
       group -> org.apache.spark.sql.types.DataType.fromJson(json).asInstanceOf[StructType]
@@ -2284,34 +2215,9 @@ object Sources {
       root: org.apache.hadoop.fs.Path): Option[Manifest] =
     committedManifest(fs, root).map(_._2)
 
-  /** The root-level `col=val` dirs of a plain partitioned layout (of
-    * `partitionCol` when it is given). */
-  private def plainDirs(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, partitionCol: String): Seq[String] =
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq.collect {
-      case st if st.isDirectory && st.getPath.getName.contains("=") &&
-        (partitionCol.isEmpty || st.getPath.getName.startsWith(s"$partitionCol=")) =>
-        st.getPath.getName
-    }
-
-  /** A plain partitioned layout as the manifest its adoption writes: its
-    * `col=val` dirs under the schema Spark's inference gives them (a
-    * Spark job), the one read of a merge table that infers a type. */
-  private def plainLayout(spark: SparkSession, tableDir: String,
-      partitionCol: String): Manifest = {
-    val dirs = plainDirs(fsOf(spark, tableDir), new org.apache.hadoop.fs.Path(tableDir), partitionCol)
-    if (dirs.isEmpty) Manifest.Empty
-    else Manifest("", Map("" -> spark.read.option("basePath", tableDir)
-      .parquet(dirs.map(d => s"$tableDir/$d"): _*).schema), dirs)
-  }
-
-  /** The live manifest, or for a table not adopted yet its
-    * [[plainLayout]]. */
-  private def readableManifest(spark: SparkSession, tableDir: String,
-      partitionCol: String): Manifest =
-    liveManifest(fsOf(spark, tableDir), new org.apache.hadoop.fs.Path(tableDir))
-      .getOrElse(plainLayout(spark, tableDir, partitionCol))
+  /** The live manifest; the empty one for a table with no claim. */
+  private def readableManifest(spark: SparkSession, tableDir: String): Manifest =
+    latestCommitted(fsOf(spark, tableDir), new org.apache.hadoop.fs.Path(tableDir))._2
 
   /** A manifest, or None if it vanished (a concurrent pruner deleted it
     * mid-pass). Callers must distinguish the two: for a PROTECTED
@@ -2345,10 +2251,8 @@ object Sources {
   private def manifestGroups(entries: Seq[String]): Seq[(String, Seq[String])] =
     entries.groupBy(groupOf).toSeq.sortBy(_._1)
 
-  /** The dir group of a manifest entry: its batch dir, "" for an adopted
-    * root-level dir. */
-  private def groupOf(entry: String): String =
-    entry.substring(0, math.max(entry.lastIndexOf('/'), 0))
+  /** The dir group of a manifest entry: its batch dir. */
+  private def groupOf(entry: String): String = entry.substring(0, entry.lastIndexOf('/'))
 
   /** One dir group's scan, under the schema `m` records for it: no
     * footer read, no inference, and the partition column comes back as
@@ -2356,7 +2260,7 @@ object Sources {
   private def readManifestGroup(spark: SparkSession, tableDir: String, m: Manifest,
       group: (String, Seq[String])): DataFrame = {
     val (dir, es) = group
-    spark.read.option("basePath", if (dir.isEmpty) tableDir else s"$tableDir/$dir")
+    spark.read.option("basePath", s"$tableDir/$dir")
       .schema(recordedSchema(tableDir, m, dir)).parquet(es.map(e => s"$tableDir/$e"): _*)
   }
 
@@ -2415,23 +2319,6 @@ object Sources {
     val digits = name.stripPrefix(prefix).takeWhile(_.isDigit)
     if (digits.isEmpty) 0L else java.lang.Long.parseLong(digits)
   }
-  /** One above every number a merge table's root holds — manifests,
-    * batch dirs and commit markers — from one listing: the number a
-    * new batch dir takes. */
-  private def nextNumber(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Long = {
-    val listed =
-      try fs.listStatus(root).toSeq
-      catch { case _: java.io.FileNotFoundException => Seq.empty }
-    (listed.map { st =>
-      val name = st.getPath.getName
-      if (st.isFile && name.startsWith("manifest-")) numberOf(name, "manifest-")
-      else if (st.isDirectory && name.startsWith("b-")) numberOf(name, "b-")
-      else if (st.isFile && name.startsWith(CommitPrefix)) numberOf(name, CommitPrefix)
-      else 0L
-    } :+ 0L).max + 1
-  }
-
   /** Sidecar-free small-file write (create or overwrite, parents
     * created). On file:// it goes through java.nio: Hadoop's local
     * FileContext is a ChecksumFs, which writes a `.<name>.crc` beside
@@ -2526,7 +2413,7 @@ object Sources {
     * ([[resolveClaim]]); None when the root holds no claim. */
   private def committedSnapshot(fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path): Option[(Long, String)] =
-    resolveClaim(fs, root)((n, content) => Some(claimedDir(root, n, content)))
+    resolveClaim(fs, root, merge = false)((n, content) => Some(claimedDir(root, n, content)))
 
   /** The transactional READ BASIS of a snapshot table (or GROUP): its
     * committed version, the number of its highest claim (0 = never
@@ -2561,8 +2448,8 @@ object Sources {
     * format deletes the publish's own dir before the error propagates;
     * a crash leaves an unclaimed dir, which blocks no publish and which
     * the prune reclaims once another commit holds its number. Then the
-    * prune runs. Returns the committed version dir. An index rebuild
-    * commits through here too ([[graft.operators.IndexGenerations]]). */
+    * prune runs. Returns the committed version dir. Every index build
+    * commits through here too ([[graft.operators.IndexMaintenance.commitBuild]]). */
   private[graft] def commitSnapshot(spark: SparkSession, tableRoot: String, basis: Option[Long])(
       write: String => Unit): String = {
     val conf = spark.sparkContext.hadoopConfiguration

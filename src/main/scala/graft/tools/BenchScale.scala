@@ -183,10 +183,10 @@ object BenchScale {
       out += "x_bm25_compact" -> measure {
         LexicalIndex.compactBm25Index(spark, bmDir); 1L }
       out += "x_bm25_search_compacted" -> measure(bmSearch())
-      // full rebuild as an atomic generation swap (r15): the
-      // re-bucketing/retention move — cost ≈ one build + pointer swap
+      // full rebuild as the next committed version (r15): the
+      // re-bucketing/retention move — cost ≈ one build + one claim
       out += "x_bm25_rebuild_swap" -> measure {
-        LexicalIndex.rebuildBm25Index(spark, bmDir, bmPost, nBuckets = 64); 1L }
+        LexicalIndex.writeBm25Index(bmPost, bmDir, nBuckets = 64); 1L }
       out += "x_bm25_search_rebuilt" -> measure(bmSearch())
       out += "x_ivfpq_build" -> measure {
         SimilaritySearch.writeIvfPqIndex(vBase, ivDir,
@@ -200,10 +200,10 @@ object BenchScale {
       out += "x_ivfpq_compact" -> measure {
         SimilaritySearch.compactIvfPqIndex(spark, ivDir); 1L }
       out += "x_ivfpq_search_compacted" -> measure(ivSearch())
-      // quantizer retrain as an atomic generation swap (r15): the
-      // drift remedy — cost ≈ one build + pointer swap
+      // quantizer retrain as the next committed version (r15): the
+      // drift remedy — cost ≈ one build + one claim
       out += "x_ivfpq_retrain_swap" -> measure {
-        SimilaritySearch.retrainIvfPqIndex(spark, ivDir, vPost,
+        SimilaritySearch.writeIvfPqIndex(vPost, ivDir,
           coarseIds = 0L until 64L, pqIds = 0L until 8L, m = 4); 1L }
       out += "x_ivfpq_search_retrained" -> measure(ivSearch())
       Seq(bmDir, ivDir).foreach { d =>

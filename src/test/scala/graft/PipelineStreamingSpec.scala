@@ -166,24 +166,27 @@ class SourcesSpec extends SparkSpec {
   test("partitioned MERGE publish rewrites only touched partitions") {
     import graft.types.TableConfig
     val dir = Files.createTempDirectory("graft_pmerge").toString + "/table"
-    Seq((1L, "c1", 10.0), (2L, "c1", 20.0), (3L, "c2", 30.0), (4L, "c3", 40.0))
-      .toDF("id", "center", "v")
-      .write.partitionBy("center").parquet(dir)
-    val untouchedFiles = new java.io.File(s"$dir/center=c3").listFiles()
+    val cfg = TableConfig("t", Seq("id"), Seq.empty)
+    // the seed is the table's first publish: one batch dir
+    Sources.publishMergePartitioned(spark, dir,
+      Seq((1L, "c1", 10.0), (2L, "c1", 20.0), (3L, "c2", 30.0), (4L, "c3", 40.0))
+        .toDF("id", "center", "v"), cfg, "center")
+    val Seq(seed) = new java.io.File(dir).list().filter(_.startsWith("b-")).toSeq
+    val untouchedFiles = new java.io.File(s"$dir/$seed/center=c3").listFiles()
       .map(f => f.getName -> f.lastModified).toMap
 
     // incoming touches c1 only: update id=1, insert id=5
     val incoming = Seq((1L, "c1", 11.0), (5L, "c1", 50.0)).toDF("id", "center", "v")
-    Sources.publishMergePartitioned(spark, dir, incoming,
-      TableConfig("t", Seq("id"), Seq.empty), "center")
+    Sources.publishMergePartitioned(spark, dir, incoming, cfg, "center")
 
     val back = Sources.readMergePartitioned(spark, dir, "center").collect()
       .map(r => r.getAs[Long]("id") -> (r.getAs[String]("center"), r.getAs[Double]("v"))).toMap
     assert(back == Map(
       1L -> ("c1", 11.0), 2L -> ("c1", 20.0), 5L -> ("c1", 50.0),
       3L -> ("c2", 30.0), 4L -> ("c3", 40.0)))
-    // untouched partition directory kept its exact files
-    val afterFiles = new java.io.File(s"$dir/center=c3").listFiles()
+    // untouched partition directory, in the seed batch dir, kept its
+    // exact files
+    val afterFiles = new java.io.File(s"$dir/$seed/center=c3").listFiles()
       .map(f => f.getName -> f.lastModified).toMap
     assert(afterFiles == untouchedFiles)
   }
@@ -192,9 +195,9 @@ class SourcesSpec extends SparkSpec {
     import graft.types.TableConfig
     val dir = Files.createTempDirectory("graft_pmerge_cf").toString + "/table"
     val cfg = TableConfig("t", Seq("id"), Seq.empty)
-    Seq((1L, "c1", 10.0), (2L, "c1", 20.0), (3L, "c2", 30.0), (4L, "c3", 40.0))
-      .toDF("id", "center", "v")
-      .write.partitionBy("center").parquet(dir)
+    Sources.publishMergePartitioned(spark, dir,
+      Seq((1L, "c1", 10.0), (2L, "c1", 20.0), (3L, "c2", 30.0), (4L, "c3", 40.0))
+        .toDF("id", "center", "v"), cfg, "center")
     val incoming1 = Seq((1L, "c1", 11.0), (5L, "c2", 50.0)).toDF("id", "center", "v")
     Sources.publishMergePartitioned(spark, dir, incoming1, cfg, "center")
     val since = Sources.mergeVersions(spark, dir).max
@@ -244,8 +247,8 @@ class SourcesSpec extends SparkSpec {
 
     // nothing published yet
     assert(run().isEmpty)
-    Seq((1L, "c1", 10.0), (2L, "c2", 20.0)).toDF("id", "center", "v")
-      .write.partitionBy("center").parquet(dir)
+    Sources.publishMergePartitioned(spark, dir,
+      Seq((1L, "c1", 10.0), (2L, "c2", 20.0)).toDF("id", "center", "v"), cfg, "center")
     Sources.publishMergePartitioned(spark, dir,
       Seq((3L, "c1", 30.0)).toDF("id", "center", "v"), cfg, "center")
 
@@ -320,8 +323,8 @@ class SourcesSpec extends SparkSpec {
     def batch(v: Double, ps: Seq[Int]): org.apache.spark.sql.DataFrame =
       ps.flatMap(p => (0 until 25).map(i => (p * 100L + i, p, v)))
         .toDF("id", "p", "v")
-    batch(0.0, Seq(0, 1, 2, 3)).write.partitionBy("p").parquet(dir)
     val cfg = TableConfig("t", Seq("id"), Seq.empty)
+    Sources.publishMergePartitioned(spark, dir, batch(0.0, Seq(0, 1, 2, 3)), cfg, "p")
     @volatile var failure: Option[String] = None
     @volatile var stop = false
     def liveManifest(): Long = graft.sources.Claims.top(dir)
@@ -382,8 +385,8 @@ class SourcesSpec extends SparkSpec {
     def batch(v: Double, ps: Seq[Int]): org.apache.spark.sql.DataFrame =
       ps.flatMap(p => (0 until 25).map(i => (p * 100L + i, p, v)))
         .toDF("id", "p", "v")
-    batch(0.0, Seq(0, 1, 2, 3)).write.partitionBy("p").parquet(dir)
     val cfg = TableConfig("t", Seq("id"), Seq.empty)
+    Sources.publishMergePartitioned(spark, dir, batch(0.0, Seq(0, 1, 2, 3)), cfg, "p")
     @volatile var failure: Option[String] = None
     @volatile var stop = false
     def liveManifest(): Long = graft.sources.Claims.top(dir)

@@ -678,8 +678,11 @@ class VectorSpec extends SparkSpec {
 
   test("IVF-PQ index on disk: search matches in-memory, scan prunes to probed lists") {
     val dir = java.nio.file.Files.createTempDirectory("ivfpq").toString
-    SimilaritySearch.writeIvfPqIndex(vecs, dir,
+    val v = SimilaritySearch.writeIvfPqIndex(vecs, dir,
       coarseIds = Seq(0L, 3L), pqIds = Seq(0L, 3L), m = 2)
+    // the codes table's one batch dir: the build's first append
+    val codes = new java.io.File(v, "codes").listFiles().filter(_.getName.startsWith("b-"))
+      .toSeq match { case Seq(b) => b.toString }
     val fromIndex = SimilaritySearch.searchIvfPqIndex(spark, dir,
         vecs.filter($"vec_id" === 0), k = 4, nProbe = 2)
       .collect().map(r => (r.getAs[Int]("rank"), r.getAs[Long]("neighbor_id"),
@@ -699,12 +702,12 @@ class VectorSpec extends SparkSpec {
     assert(one.collect().map(_.getAs[Long]("neighbor_id")).toSet == Set(1L, 2L))
     // the same static IN predicate, in isolation (no AQE wrapper):
     // exactly ONE of the two list partitions' files survives pruning
-    val pruned = spark.read.parquet(s"$dir/codes").filter($"_list".isin(0))
+    val pruned = spark.read.parquet(codes).filter($"_list".isin(0))
     val scan = pruned.queryExecution.executedPlan.collectLeaves()
       .collectFirst { case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
       .get
     assert(scan.partitionFilters.nonEmpty, scan.toString)
-    val all = spark.read.parquet(s"$dir/codes").queryExecution.executedPlan
+    val all = spark.read.parquet(codes).queryExecution.executedPlan
       .collectLeaves()
       .collectFirst { case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
       .get.relation.location.inputFiles.length

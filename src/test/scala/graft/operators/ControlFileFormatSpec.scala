@@ -48,28 +48,28 @@ class ControlFileFormatSpec extends SparkSpec {
 
     test(s"an LSM _floor with $tag is refused by every apply, compaction and tombstone read") {
       val dir = fresh(s"floor_$slug")
-      LexicalIndex.writeBm25Index(docs, dir, nBuckets = 2)
+      val v = LexicalIndex.writeBm25Index(docs, dir, nBuckets = 2)
       LexicalIndex.applyBm25IndexChanges(spark, dir, feed(9), mode = "append"): Unit
       LexicalIndex.compactBm25Index(spark, dir)
-      val floor = s"$dir/tombstones/_floor"
+      val floor = s"$v/tombstones/_floor"
       assert(Files.readString(Paths.get(floor)).startsWith("version\t1\n"),
         "the floor states no format version")
       LexicalIndex.applyBm25IndexChanges(spark, dir, feed(10), mode = "append"): Unit
       val text = rewrite(floor)(plant)
-      val before = names(s"$dir/tombstones")
+      val before = names(s"$v/tombstones")
       refused(floor, "apply")(LexicalIndex.applyBm25IndexChanges(spark, dir, feed(11),
         mode = "append"))
       refused(floor, "compaction")(LexicalIndex.compactBm25Index(spark, dir))
-      refused(floor, "next seq")(LsmTombstones.nextSeq(spark, dir))
-      refused(floor, "fold seq")(LsmTombstones.maxLiveSeq(spark, dir))
-      refused(floor, "clear")(LsmTombstones.clear(spark, dir, 99L))
-      assert(names(s"$dir/tombstones") == before)
+      refused(floor, "next seq")(LsmTombstones.nextSeq(spark, v))
+      refused(floor, "fold seq")(LsmTombstones.maxLiveSeq(spark, v))
+      refused(floor, "clear")(LsmTombstones.clear(spark, v, 99L))
+      assert(names(s"$v/tombstones") == before)
       assert(Files.readString(Paths.get(floor)) == plant(text), "a refused writer rewrote the floor")
       // restored, the same apply and compaction go through
       rewrite(floor)(_ => text): Unit
       LexicalIndex.applyBm25IndexChanges(spark, dir, feed(11), mode = "append"): Unit
       LexicalIndex.compactBm25Index(spark, dir)
-      assert(LsmTombstones.isEmpty(spark, dir))
+      assert(LsmTombstones.isEmpty(spark, v))
     }
 
     test(s"a change-feed checkpoint with $tag is refused by every consumer, and nothing advances") {
@@ -101,8 +101,7 @@ class ControlFileFormatSpec extends SparkSpec {
 
     test(s"an index claim with $tag is refused by every read, apply, maintenance and rebuild") {
       val dir = fresh(s"idx_$slug")
-      LexicalIndex.writeBm25Index(docs, dir, nBuckets = 2)
-      LexicalIndex.rebuildBm25Index(spark, dir, docs, nBuckets = 2): Unit
+      LexicalIndex.writeBm25Index(docs, dir, nBuckets = 2): Unit
       val claim = s"$dir/commit-000000000001"
       rewrite(claim)(plant): Unit
       val before = names(dir)
@@ -111,7 +110,7 @@ class ControlFileFormatSpec extends SparkSpec {
       refused(claim, "apply")(LexicalIndex.applyBm25IndexChanges(spark, dir, feed(9),
         mode = "append"))
       refused(claim, "maintenance")(LexicalIndex.maintainBm25IfNeeded(spark, dir))
-      refused(claim, "rebuild")(LexicalIndex.rebuildBm25Index(spark, dir, docs, nBuckets = 2))
+      refused(claim, "rebuild")(LexicalIndex.writeBm25Index(docs, dir, nBuckets = 2))
       assert(names(dir) == before, s"${names(dir) -- before} / ${before -- names(dir)}")
     }
   }

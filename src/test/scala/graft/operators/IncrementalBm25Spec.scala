@@ -51,19 +51,22 @@ class IncrementalBm25Spec extends SparkSpec {
     dir
   }
 
+  /** The committed version dir of index root `dir`. */
+  private def resolved(dir: String): String = graft.sources.Sources.resolveSnapshot(spark, dir)
+
   private def postings(dir: String): Seq[(String, Long, Long, Long)] =
-    graft.sources.Sources.readMergePartitioned(spark, s"$dir/postings", "_b")
+    graft.sources.Sources.readMergePartitioned(spark, s"${resolved(dir)}/postings", "_b")
       .select("term", "doc_id", "tf", "dl").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .sortBy(x => (x._1, x._2)).toSeq
 
   private def doclen(dir: String): Seq[(Long, Long)] =
-    graft.sources.Sources.readMergePartitioned(spark, s"$dir/doclen", "_db")
+    graft.sources.Sources.readMergePartitioned(spark, s"${resolved(dir)}/doclen", "_db")
       .select("doc_id", "dl").collect()
       .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
 
   private def stats(dir: String): (Long, Long) = {
-    val r = graft.sources.Sources.readSnapshot(spark, s"$dir/stats").first()
+    val r = graft.sources.Sources.readSnapshot(spark, s"${resolved(dir)}/stats").first()
     (r.getLong(0), r.getLong(1))
   }
 
@@ -78,7 +81,8 @@ class IncrementalBm25Spec extends SparkSpec {
 
   test("the maintained stats row equals a doclen re-aggregation") {
     val dir = builtAndApplied()
-    val derived = graft.sources.Sources.readMergePartitioned(spark, s"$dir/doclen", "_db")
+    val derived = graft.sources.Sources.readMergePartitioned(spark, s"${resolved(dir)}/doclen",
+        "_db")
       .agg(count(lit(1)).cast("long"), coalesce(sum("dl"), lit(0L))).first()
     assert(stats(dir) == ((derived.getLong(0), derived.getLong(1))))
     // the zero-token deletion was accounted: 7 base - 2 erased + 1 new
@@ -117,8 +121,8 @@ class IncrementalBm25Spec extends SparkSpec {
     val reb = freshDir()
     LexicalIndex.writeBm25Index(finalDocs, reb, nBuckets = 8)
     def live(table: String, pc: String) =
-      LsmTombstones.filterLive(spark, dir,
-          graft.sources.Sources.readMergePartitioned(spark, s"$dir/$table", pc),
+      LsmTombstones.filterLive(spark, resolved(dir),
+          graft.sources.Sources.readMergePartitioned(spark, s"${resolved(dir)}/$table", pc),
           "doc_id")
     assert(live("postings", "_b").select("term", "doc_id", "tf", "dl").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
@@ -146,7 +150,7 @@ class IncrementalBm25Spec extends SparkSpec {
     assert(postings(dir) == postings(reb)) // raw reads: no tombstones left
     assert(doclen(dir) == doclen(reb))
     assert(stats(dir) == stats(reb))
-    assert(LsmTombstones.isEmpty(spark, dir))
+    assert(LsmTombstones.isEmpty(spark, resolved(dir)))
     // rewrite-mode maintenance works again on the compacted index
     LexicalIndex.applyBm25IndexChanges(spark, dir,
       Seq((8L, "", "orphaned")).toDF("doc_id", "text", "_change")): Unit

@@ -50,8 +50,11 @@ class IncrementalIvfPqSpec extends SparkSpec {
     }.toDF("vec_id", "embedding")
   }
 
+  /** The committed version dir of index root `dir`. */
+  private def resolved(dir: String): String = graft.sources.Sources.resolveSnapshot(spark, dir)
+
   private def codesOf(dir: String): Seq[(Long, Seq[Int], Int)] =
-    graft.sources.Sources.readMergePartitioned(spark, s"$dir/codes", "_list")
+    graft.sources.Sources.readMergePartitioned(spark, s"${resolved(dir)}/codes", "_list")
       .select(col("_id").cast("long"), col("codes"), col("_list").cast("int"))
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Int](1).toSeq, r.getInt(2)))
@@ -98,9 +101,11 @@ class IncrementalIvfPqSpec extends SparkSpec {
 
   test("untouched list partitions keep their original files byte-identical") {
     val dir = freshDir()
-    SimilaritySearch.writeIvfPqIndex(corpus(baseIds), dir, coarse, pqSeeds, m = 4)
-    // snapshot the pre-manifest partition files
-    val root = java.nio.file.Paths.get(dir, "codes")
+    val v = SimilaritySearch.writeIvfPqIndex(corpus(baseIds), dir, coarse, pqSeeds, m = 4)
+    // snapshot the initial build's partition files, inside the one batch
+    // dir its first append committed
+    val root = java.nio.file.Files.list(java.nio.file.Paths.get(v, "codes")).iterator().asScala
+      .toSeq.filter(_.getFileName.toString.startsWith("b-")) match { case Seq(b) => b }
     def files(): Map[String, Seq[(String, Long)]] =
       java.nio.file.Files.list(root).iterator().asScala.toSeq
         .filter(p => java.nio.file.Files.isDirectory(p) &&
@@ -134,8 +139,8 @@ class IncrementalIvfPqSpec extends SparkSpec {
   }
 
   private def liveCodesOf(dir: String): Seq[(Long, Seq[Int], Int)] =
-    LsmTombstones.filterLive(spark, dir,
-        graft.sources.Sources.readMergePartitioned(spark, s"$dir/codes", "_list"),
+    LsmTombstones.filterLive(spark, resolved(dir),
+        graft.sources.Sources.readMergePartitioned(spark, s"${resolved(dir)}/codes", "_list"),
         "_id")
       .select(col("_id").cast("long"), col("codes"), col("_list").cast("int"))
       .collect()
@@ -172,12 +177,12 @@ class IncrementalIvfPqSpec extends SparkSpec {
     // tombstone clear keeps every compacted row live: _seq >= _ts_max),
     // and the floor guarantees future generations stay strictly above
     val seqs = graft.sources.Sources
-      .readMergePartitioned(spark, s"$dir/codes", "_list")
+      .readMergePartitioned(spark, s"${resolved(dir)}/codes", "_list")
       .select("_seq").distinct().collect().map(_.getLong(0)).toSeq
     assert(seqs.size == 1)
-    assert(seqs.head == LsmTombstones.floor(spark, dir))
-    assert(LsmTombstones.nextSeq(spark, dir) > seqs.head)
-    assert(LsmTombstones.isEmpty(spark, dir))
+    assert(seqs.head == LsmTombstones.floor(spark, resolved(dir)))
+    assert(LsmTombstones.nextSeq(spark, resolved(dir)) > seqs.head)
+    assert(LsmTombstones.isEmpty(spark, resolved(dir)))
     // and the index is clean for rewrite-mode maintenance again
     SimilaritySearch.applyIvfPqIndexChanges(spark, dir,
       corpus(Seq(23L)).withColumn("_change", lit("orphaned"))): Unit

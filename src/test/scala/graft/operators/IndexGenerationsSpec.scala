@@ -8,11 +8,12 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.sources.{Claims, Sources}
 
-/** Full rebuilds of the maintained indexes as snapshot versions of the
-  * index root: [[SimilaritySearch.retrainIvfPqIndex]] (the drift
-  * tripwire's remedy as code) and [[LexicalIndex.rebuildBm25Index]]
-  * (re-bucketing / retention purge), each committed by one claim
-  * ([[IndexGenerations.rebuild]]). The commit must be atomic and
+/** Every build of a maintained index is a snapshot version of the index
+  * root: the initial build is version 1, and a quantizer retrain (the
+  * drift tripwire's remedy as code, [[SimilaritySearch.writeIvfPqIndex]])
+  * or a re-bucketing / retention purge ([[LexicalIndex.writeBm25Index]])
+  * is the next version, each committed by one claim
+  * ([[IndexMaintenance.commitBuild]]). The commit must be atomic and
   * complete — new quantizers with new codes, a fresh tombstone log —
   * the old generation untouched while it is inside the retention
   * window, and incremental maintenance must continue transparently
@@ -55,7 +56,7 @@ class IndexGenerationsSpec extends SparkSpec {
 
   test("retrain swaps to new quantizers atomically; equals a fresh build, bit for bit") {
     val dir = Files.createTempDirectory("graft_gen_retrain").toString
-    SimilaritySearch.writeIvfPqIndex(corpus(baseIds), dir,
+    val v1 = SimilaritySearch.writeIvfPqIndex(corpus(baseIds), dir,
       0L until 4L, 0L until 4L, m = 4)
     // append-mode feed: retrain must start from a live-tombstone state
     SimilaritySearch.applyIvfPqIndexChanges(spark, dir, changes,
@@ -63,8 +64,7 @@ class IndexGenerationsSpec extends SparkSpec {
 
     val newCoarse = Seq(8L, 9L, 10L, 11L)
     val newPq = Seq(14L, 15L, 16L, 17L)
-    val gen = SimilaritySearch.retrainIvfPqIndex(spark, dir, finalCorpus,
-      newCoarse, newPq, m = 4)
+    val gen = SimilaritySearch.writeIvfPqIndex(finalCorpus, dir, newCoarse, newPq, m = 4)
     assert(Sources.resolveSnapshot(spark, dir) == gen)
 
     // bit-for-bit the fresh build over the same corpus and quantizer ids
@@ -76,16 +76,16 @@ class IndexGenerationsSpec extends SparkSpec {
     // the new generation starts with a clean tombstone log even though
     // the outgoing one still carries live kills
     assert(LsmTombstones.isEmpty(spark, gen))
-    assert(!LsmTombstones.isEmpty(spark, dir.toString))
+    assert(!LsmTombstones.isEmpty(spark, v1))
   }
 
   test("maintenance continues against the new generation; the old one is untouched until vacuum") {
     val dir = Files.createTempDirectory("graft_gen_cont").toString
-    SimilaritySearch.writeIvfPqIndex(corpus(baseIds), dir,
+    val v1 = SimilaritySearch.writeIvfPqIndex(corpus(baseIds), dir,
       0L until 4L, 0L until 4L, m = 4)
-    val oldCodes = codesOf(dir)
-    val gen = SimilaritySearch.retrainIvfPqIndex(spark, dir, finalCorpus,
+    def retrain() = SimilaritySearch.writeIvfPqIndex(finalCorpus, dir,
       Seq(8L, 9L, 10L, 11L), Seq(14L, 15L, 16L, 17L), m = 4)
+    val gen = retrain()
 
     // a post-retrain delta lands in the NEW generation's tables/log
     val kill = corpus(Seq(3L)).withColumn("_change", lit("orphaned"))
@@ -102,11 +102,11 @@ class IndexGenerationsSpec extends SparkSpec {
     assert(!live.contains(3L))
     assert(!searchOf(dir).exists(_(2) == 3L))
 
-    // the superseded generation (the original plain layout) is intact:
-    // its codes still read identically through a direct (non-pointer)
-    // path — in-flight readers of the old generation are safe
+    // the superseded generation (the initial build, version 1) is
+    // intact: its codes still read identically through its version dir
+    // — in-flight readers of the old generation are safe
     val direct = graft.sources.Sources
-      .readMergePartitioned(spark, s"$dir/codes", "_list")
+      .readMergePartitioned(spark, s"$v1/codes", "_list")
       .select(col("_id").cast("long")).collect().map(_.getLong(0)).toSet
     assert(direct == baseIds.toSet)
 
@@ -115,39 +115,36 @@ class IndexGenerationsSpec extends SparkSpec {
       Seq("codes" -> "_list"))
     assert(h.tombstoneRows == 1L)
 
-    // the superseded plain layout stays while it is inside the
-    // retention window: the second retrain keeps it, the third (version
-    // 3) reclaims its root-level table dirs, and gen, still inside the
-    // window, stays
-    def retrain() = SimilaritySearch.retrainIvfPqIndex(spark, dir, finalCorpus,
-      Seq(8L, 9L, 10L, 11L), Seq(14L, 15L, 16L, 17L), m = 4)
+    // the superseded initial build stays while it is inside the
+    // retention window: the second retrain (version 3) keeps it, the
+    // third (version 4) removes it, and gen, still inside the window,
+    // stays
     retrain(): Unit
-    assert(Sources.readMergePartitioned(spark, s"$dir/codes", "_list")
+    assert(Sources.readMergePartitioned(spark, s"$v1/codes", "_list")
       .select(col("_id").cast("long")).collect().map(_.getLong(0)).toSet == baseIds.toSet)
-    val gen3 = retrain()
-    assert(Sources.resolveSnapshot(spark, dir) == gen3)
+    val gen4 = retrain()
+    assert(Sources.resolveSnapshot(spark, dir) == gen4)
     assert(searchOf(dir).nonEmpty)
-    Seq("codes", "centroids", "codebooks", "drift", "tombstones").foreach(t =>
-      assert(!new java.io.File(dir, t).exists(), s"superseded plain-layout $t dir kept"))
+    assert(!new java.io.File(v1).exists(), "the superseded initial build was kept")
     assert(new java.io.File(gen).exists(), "a generation inside the window was deleted")
   }
 
   test("the prune never deletes an in-flight build: a dir numbered above the top claim survives any age") {
     val dir = Files.createTempDirectory("graft_gen_inflight").toString
     def build(v: String): Unit = assert(new java.io.File(v, "codes").mkdirs())
-    val gen1 = IndexGenerations.rebuild(spark, dir)(build)
+    val gen1 = IndexMaintenance.commitBuild(spark, dir)(build)
     // a dir above the highest claim may be an in-flight rebuild (the
     // prune cannot tell which basis its writer read): never touched,
     // however old it looks
     val inflight = s"$dir/v-000000000003-inflight"
     build(inflight)
     assert(new java.io.File(inflight).setLastModified(System.currentTimeMillis() - 2L * 3600 * 1000))
-    val gen2 = IndexGenerations.rebuild(spark, dir)(build)
+    val gen2 = IndexMaintenance.commitBuild(spark, dir)(build)
     assert(new java.io.File(inflight).exists(), "in-flight rebuild dir deleted by the prune")
     assert(Seq(gen1, gen2).forall(new java.io.File(_).exists()), "a generation inside the window deleted")
     // once a commit holds its number the dir can never commit: the
     // prune of that commit takes it
-    val gen3 = IndexGenerations.rebuild(spark, dir)(build)
+    val gen3 = IndexMaintenance.commitBuild(spark, dir)(build)
     assert(!new java.io.File(inflight).exists(), "a dir that can never commit was kept")
     assert(Sources.resolveSnapshot(spark, dir) == gen3)
   }
@@ -170,7 +167,7 @@ class IndexGenerationsSpec extends SparkSpec {
     // rows) with medoids FROM the drifted region too
     val cur = finalCorpus.unionByName(
       drifted(Seq(100L, 101L)).drop("_change"))
-    SimilaritySearch.retrainIvfPqIndex(spark, dir, cur,
+    SimilaritySearch.writeIvfPqIndex(cur, dir,
       Seq(0L, 1L, 8L, 100L), Seq(9L, 10L, 11L, 101L), m = 4): Unit
     val r2 = SimilaritySearch.applyIvfPqIndexChanges(spark, dir,
       drifted(Seq(102L, 103L)), mode = "append")
@@ -186,7 +183,7 @@ class IndexGenerationsSpec extends SparkSpec {
       (5L, "spark spark spark"),
       (6L, "the vector merge")).toDF("doc_id", "text")
     val dir = Files.createTempDirectory("graft_gen_bm25").toString
-    LexicalIndex.writeBm25Index(docs, dir, nBuckets = 8)
+    val v1 = LexicalIndex.writeBm25Index(docs, dir, nBuckets = 8)
     // live tombstones before the rebuild
     LexicalIndex.applyBm25IndexChanges(spark, dir,
       Seq((7L, "a new spark doc", "new")).toDF("doc_id", "text", "_change"),
@@ -195,7 +192,7 @@ class IndexGenerationsSpec extends SparkSpec {
     // rebuild = retention purge (doc 4 must vanish) + 8 → 4 buckets
     val purged = docs.unionByName(Seq((7L, "a new spark doc")).toDF("doc_id", "text"))
       .filter(col("doc_id") =!= 4L)
-    val gen = LexicalIndex.rebuildBm25Index(spark, dir, purged, nBuckets = 4)
+    val gen = LexicalIndex.writeBm25Index(purged, dir, nBuckets = 4)
     assert(Sources.resolveSnapshot(spark, dir) == gen)
     assert(LsmTombstones.isEmpty(spark, gen))
 
@@ -216,19 +213,14 @@ class IndexGenerationsSpec extends SparkSpec {
       Seq("spark", "merge"), k = 10).collect().map(_.toSeq).toSeq
     assert(search(dir) == after)
 
-    // the plain layout (version 0) stays inside the retention window;
-    // the rebuild that commits version 3 reclaims its 6 root-level dirs
-    // (postings/forward/doclen/stats/meta/tombstones)
-    val plain = Set("postings", "forward", "doclen", "stats", "meta", "tombstones")
+    // the initial build (version 1) stays inside the retention window;
+    // the rebuild that commits version 4 removes it
     def rootDirs() = new java.io.File(dir).listFiles().filter(_.isDirectory).map(_.getName).toSet
-    assert(plain.subsetOf(rootDirs()))
-    val gen2 = LexicalIndex.rebuildBm25Index(spark, dir,
-      purged.filter(col("doc_id") =!= 2L), nBuckets = 4)
-    assert(plain.subsetOf(rootDirs()))
-    val gen3 = LexicalIndex.rebuildBm25Index(spark, dir,
-      purged.filter(col("doc_id") =!= 2L), nBuckets = 4)
-    assert(rootDirs() == Set(gen, gen2, gen3).map(new java.io.File(_).getName))
-    assert(Sources.resolveSnapshot(spark, dir) == gen3)
+    val gen3 = LexicalIndex.writeBm25Index(purged.filter(col("doc_id") =!= 2L), dir, nBuckets = 4)
+    assert(rootDirs() == Set(v1, gen, gen3).map(new java.io.File(_).getName))
+    val gen4 = LexicalIndex.writeBm25Index(purged.filter(col("doc_id") =!= 2L), dir, nBuckets = 4)
+    assert(rootDirs() == Set(gen, gen3, gen4).map(new java.io.File(_).getName))
+    assert(Sources.resolveSnapshot(spark, dir) == gen4)
     assert(search(dir) == after)
   }
 
@@ -253,19 +245,20 @@ class IndexGenerationsSpec extends SparkSpec {
 
   test("generation plumbing fails loudly: bad swaps, dangling pointers") {
     val dir = Files.createTempDirectory("graft_gen_guard").toString
-    LexicalIndex.writeBm25Index(docsA, dir, nBuckets = 2)
-    // a plain layout is its own version 0: it resolves to itself, and
+    // the initial build is version 1: the root resolves to it, and
     // maintenance there deletes nothing
-    assert(Sources.resolveSnapshot(spark, dir) == dir)
-    val plainNames = names(dir)
+    val v1 = LexicalIndex.writeBm25Index(docsA, dir, nBuckets = 2)
+    assert(new java.io.File(v1).getName.startsWith("v-000000000001-"))
+    assert(Sources.resolveSnapshot(spark, dir) == v1)
+    val builtNames = names(dir)
     LexicalIndex.maintainBm25IfNeeded(spark, dir): Unit
-    assert(names(dir) == plainNames)
-    // rebuilding against the version dir a resolve returned is refused
+    assert(names(dir) == builtNames)
+    // building into the version dir a resolve returned is refused
     // before anything is written
-    val gen = LexicalIndex.rebuildBm25Index(spark, dir, docsB, nBuckets = 2)
+    val gen = LexicalIndex.writeBm25Index(docsB, dir, nBuckets = 2)
     val inGen = names(gen)
     intercept[IllegalArgumentException] {
-      LexicalIndex.rebuildBm25Index(spark, Sources.resolveSnapshot(spark, dir), docsB, nBuckets = 2)
+      LexicalIndex.writeBm25Index(docsB, Sources.resolveSnapshot(spark, dir), nBuckets = 2)
     }
     assert(names(gen) == inGen)
     // a claim naming a deleted generation fails the next search loudly,
@@ -278,17 +271,17 @@ class IndexGenerationsSpec extends SparkSpec {
 
   test("a stale swap claim landing late can never shadow a newer generation (ADVICE r17: dense-claim swap)") {
     val dir = Files.createTempDirectory("graft_gen_cas").toString
-    LexicalIndex.writeBm25Index(docsA, dir, nBuckets = 4)
-    // the slow rebuild reads its basis (version 0) and writes its whole
-    // index; before it claims, a fast rebuild commits version 1, whose
+    val v1 = LexicalIndex.writeBm25Index(docsA, dir, nBuckets = 4)
+    // the slow rebuild reads its basis (version 1) and writes its whole
+    // index; before it claims, a fast rebuild commits version 2, whose
     // prune takes the slow dir: it can never commit now
     var slow = ""
     var fast = ""
     intercept[java.util.ConcurrentModificationException] {
-      IndexGenerations.rebuild(spark, dir) { v =>
+      IndexMaintenance.commitBuild(spark, dir) { v =>
         slow = v
-        LexicalIndex.writeBm25Index(docsB, v, nBuckets = 4)
-        fast = LexicalIndex.rebuildBm25Index(spark, dir, docsC, nBuckets = 4)
+        LexicalIndex.writeBm25Layout(docsB, v, "doc_id", "text", nBuckets = 4)
+        fast = LexicalIndex.writeBm25Index(docsC, dir, nBuckets = 4)
       }
     }
     // the stale claim never landed: readers resolve the fast rebuild
@@ -297,21 +290,22 @@ class IndexGenerationsSpec extends SparkSpec {
     // and the losing rebuild left no dir and no claim behind
     assert(!new java.io.File(slow).exists(), "the losing rebuild's dir was kept")
     assert(names(dir).filter(n => n.startsWith("v-") || n.startsWith("commit-")) ==
-      Set(new java.io.File(fast).getName, "commit-000000000001"))
+      Set(v1, fast).map(new java.io.File(_).getName) ++
+        Set("commit-000000000001", "commit-000000000002"))
     // a rebuild from a fresh basis lands
-    val redo = LexicalIndex.rebuildBm25Index(spark, dir, docsB, nBuckets = 4)
+    val redo = LexicalIndex.writeBm25Index(docsB, dir, nBuckets = 4)
     assert(Sources.resolveSnapshot(spark, dir) == redo)
     assert(searchBm25(dir) == bm25Oracle(docsB))
   }
 
   test("resolve, maintenance and rebuild refuse a root of the earlier generation layout, naming it") {
-    // a root as the swap layout left it: the plain layout, a generation
-    // dir, and its `_gen` pointer or `genswap-*` claim — without the
-    // refusal it would resolve to the stale plain layout
+    // a root as the swap layout left it: an index layout at the root, a
+    // generation dir, and its `_gen` pointer or `genswap-*` claim —
+    // without the refusal it would resolve to the stale root layout
     for (marker <- Seq("_gen", "genswap-000000000001")) {
       val dir = Files.createTempDirectory("graft_gen_preclaim").toString
-      LexicalIndex.writeBm25Index(docsA, dir, nBuckets = 2)
-      LexicalIndex.writeBm25Index(docsB, s"$dir/gen-1-x", nBuckets = 2)
+      LexicalIndex.writeBm25Layout(docsA, dir, "doc_id", "text", nBuckets = 2)
+      LexicalIndex.writeBm25Layout(docsB, s"$dir/gen-1-x", "doc_id", "text", nBuckets = 2)
       Files.write(java.nio.file.Paths.get(dir, marker), "gen-1-x".getBytes("UTF-8")): Unit
       val before = names(dir)
       def refused(what: String)(f: => Any): Unit = {
@@ -323,52 +317,52 @@ class IndexGenerationsSpec extends SparkSpec {
       refused("apply")(LexicalIndex.applyBm25IndexChanges(spark, dir,
         Seq((7L, "a new spark doc", "new")).toDF("doc_id", "text", "_change"), mode = "append"))
       refused("maintenance")(LexicalIndex.maintainBm25IfNeeded(spark, dir))
-      refused("rebuild")(LexicalIndex.rebuildBm25Index(spark, dir, docsB, nBuckets = 2))
+      refused("rebuild")(LexicalIndex.writeBm25Index(docsB, dir, nBuckets = 2))
       assert(names(dir) == before, s"${names(dir) -- before}")
     }
   }
 
   test("a crash before the claim leaves the old generation live, one after it the new; the next rebuild lands either way") {
     val dir = Files.createTempDirectory("graft_gen_crash").toString
-    LexicalIndex.writeBm25Index(docsA, dir, nBuckets = 4)
-    // crash before the claim: version 1 written whole, never claimed
-    val crashed = "v-000000000001-crashed0"
-    LexicalIndex.writeBm25Index(docsB, s"$dir/$crashed", nBuckets = 4)
-    assert(Sources.resolveSnapshot(spark, dir) == dir)
+    val v1 = LexicalIndex.writeBm25Index(docsA, dir, nBuckets = 4)
+    // crash before the claim: version 2 written whole, never claimed
+    val crashed = "v-000000000002-crashed0"
+    LexicalIndex.writeBm25Layout(docsB, s"$dir/$crashed", "doc_id", "text", nBuckets = 4)
+    assert(Sources.resolveSnapshot(spark, dir) == v1)
     assert(searchBm25(dir) == bm25Oracle(docsA))
     // the next rebuild lands at once, at the number the crash never
     // took, and its prune takes the dir that can never commit
-    val gen1 = LexicalIndex.rebuildBm25Index(spark, dir, docsB, nBuckets = 4)
-    assert(new java.io.File(gen1).getName.startsWith("v-000000000001-"))
-    assert(Sources.resolveSnapshot(spark, dir) == gen1)
+    val gen2 = LexicalIndex.writeBm25Index(docsB, dir, nBuckets = 4)
+    assert(new java.io.File(gen2).getName.startsWith("v-000000000002-"))
+    assert(Sources.resolveSnapshot(spark, dir) == gen2)
     assert(!names(dir)(crashed), s"crashed dir survived: ${names(dir)}")
     // crash after the claim: the claim is the commit
-    val claimed = "v-000000000002-crashed1"
-    LexicalIndex.writeBm25Index(docsC, s"$dir/$claimed", nBuckets = 4)
-    Claims.plant(dir, 2L, Claims.snapshot(claimed))
+    val claimed = "v-000000000003-crashed1"
+    LexicalIndex.writeBm25Layout(docsC, s"$dir/$claimed", "doc_id", "text", nBuckets = 4)
+    Claims.plant(dir, 3L, Claims.snapshot(claimed))
     assert(Sources.resolveSnapshot(spark, dir) == s"$dir/$claimed")
     assert(searchBm25(dir) == bm25Oracle(docsC))
-    val gen3 = LexicalIndex.rebuildBm25Index(spark, dir, docsA, nBuckets = 4)
-    assert(new java.io.File(gen3).getName.startsWith("v-000000000003-"))
-    assert(Sources.resolveSnapshot(spark, dir) == gen3)
+    val gen4 = LexicalIndex.writeBm25Index(docsA, dir, nBuckets = 4)
+    assert(new java.io.File(gen4).getName.startsWith("v-000000000004-"))
+    assert(Sources.resolveSnapshot(spark, dir) == gen4)
     assert(searchBm25(dir) == bm25Oracle(docsA))
   }
 
   test("a reader that resolved a generation reads it through two later rebuilds; the third removes it") {
     val dir = Files.createTempDirectory("graft_gen_window").toString
-    LexicalIndex.writeBm25Index(docsA, dir, nBuckets = 4)
-    LexicalIndex.rebuildBm25Index(spark, dir, docsB, nBuckets = 4): Unit
+    LexicalIndex.writeBm25Index(docsA, dir, nBuckets = 4): Unit
+    LexicalIndex.writeBm25Index(docsB, dir, nBuckets = 4): Unit
     // the reader resolves once and keeps reading what it resolved
     val pinned = Sources.resolveSnapshot(spark, dir)
     val seen = searchBm25(pinned)
     assert(seen == bm25Oracle(docsB))
-    LexicalIndex.rebuildBm25Index(spark, dir, docsC, nBuckets = 4): Unit
-    LexicalIndex.rebuildBm25Index(spark, dir, docsA, nBuckets = 4): Unit
+    LexicalIndex.writeBm25Index(docsC, dir, nBuckets = 4): Unit
+    LexicalIndex.writeBm25Index(docsA, dir, nBuckets = 4): Unit
     assert(searchBm25(pinned) == seen, "a generation inside the window changed under its reader")
-    LexicalIndex.rebuildBm25Index(spark, dir, docsC, nBuckets = 4): Unit
+    LexicalIndex.writeBm25Index(docsC, dir, nBuckets = 4): Unit
     assert(!new java.io.File(pinned).exists(), "a generation below the window was kept")
     assert(names(dir).filter(_.startsWith("commit-")) ==
-      Set(2L, 3L, 4L).map(n => f"commit-$n%012d"))
+      Set(3L, 4L, 5L).map(n => f"commit-$n%012d"))
     assert(names(dir).count(_.startsWith("v-")) == 3, s"${names(dir)}")
     assert(searchBm25(dir) == bm25Oracle(docsC))
   }

@@ -27,7 +27,7 @@ class IndexMaintenanceSpec extends SparkSpec {
 
   test("BM25: health tracks generations and tombstones; trigger fires past threshold") {
     val dir = freshDir()
-    LexicalIndex.writeBm25Index((1L to 40L).map(doc).toDF("doc_id", "text"),
+    val v = LexicalIndex.writeBm25Index((1L to 40L).map(doc).toDF("doc_id", "text"),
       dir, nBuckets = 4)
     val h0 = health(dir)
     assert(h0.maxGenerations == 1 && h0.tombstoneSegments == 0 &&
@@ -47,13 +47,13 @@ class IndexMaintenanceSpec extends SparkSpec {
 
     // below threshold (default policy allows 8): PURE no-op
     val preVersions = graft.sources.Sources
-      .mergeVersions(spark, s"$dir/postings")
+      .mergeVersions(spark, s"$v/postings")
     val (hc, ranDefault) = LexicalIndex.maintainBm25IfNeeded(spark, dir)
     assert(!ranDefault)
     assert(hc.maxGenerations == 4)
-    assert(graft.sources.Sources.mergeVersions(spark, s"$dir/postings")
+    assert(graft.sources.Sources.mergeVersions(spark, s"$v/postings")
       == preVersions)
-    assert(LsmTombstones.exists(spark, dir))
+    assert(LsmTombstones.exists(spark, v))
 
     // tight policy: the trigger fires and the index folds to one
     // generation with the kill set cleared
@@ -108,7 +108,8 @@ class IndexMaintenanceSpec extends SparkSpec {
       (0L until 19L).map(id => (id, vec(id))).toDF("vec_id", "embedding"),
       reb, 0L until 4L, 0L until 4L, m = 4)
     def codes(d: String) = graft.sources.Sources
-      .readMergePartitioned(spark, s"$d/codes", "_list")
+      .readMergePartitioned(spark, s"${graft.sources.Sources.resolveSnapshot(spark, d)}/codes",
+        "_list")
       .select(col("_id").cast("long"), col("codes"), col("_list").cast("int"))
       .collect().map(r => (r.getLong(0), r.getSeq[Int](1).toSeq, r.getInt(2)))
       .sortBy(x => (x._1, x._3)).toSeq
@@ -157,9 +158,9 @@ class IndexMaintenanceSpec extends SparkSpec {
   test("later rebuilds reclaim superseded generations, not the maintenance loop; the live one and two below it are spared") {
     val dir = freshDir()
     val docs = (1L to 20L).map(doc).toDF("doc_id", "text")
-    LexicalIndex.writeBm25Index(docs, dir, nBuckets = 4)
-    val gen1 = LexicalIndex.rebuildBm25Index(spark, dir, docs, nBuckets = 4)
-    val gen2 = LexicalIndex.rebuildBm25Index(spark, dir, docs, nBuckets = 4)
+    val gen1 = LexicalIndex.writeBm25Index(docs, dir, nBuckets = 4)
+    val gen2 = LexicalIndex.writeBm25Index(docs, dir, nBuckets = 4)
+    val gen3 = LexicalIndex.writeBm25Index(docs, dir, nBuckets = 4)
     val expected = TextAnalysis.bm25(docs, "doc_id", "text",
       Seq("spark", "term7"), k = 5).collect().map(_.toSeq).toSeq
     def searchNow() = LexicalIndex.searchBm25Index(spark, dir,
@@ -167,26 +168,25 @@ class IndexMaintenanceSpec extends SparkSpec {
     def names() = new java.io.File(dir).list().toSet
 
     // the maintenance loop deletes nothing at the root: an in-flight
-    // reader of gen1 or of the plain layout keeps its files
+    // reader of gen1 (the initial build) or gen2 keeps its files
     val before = names()
     LexicalIndex.maintainBm25IfNeeded(spark, dir): Unit
     assert(names() == before, s"${before -- names()}")
-    assert(new java.io.File(gen1).exists(), "superseded gen inside the window reclaimed")
-    assert(new java.io.File(dir, "postings").exists(),
-      "plain layout reclaimed inside the window")
+    assert(Seq(gen1, gen2).forall(new java.io.File(_).exists()),
+      "superseded gen inside the window reclaimed")
     assert(searchNow() == expected)
 
-    // version 3 moves the plain layout (version 0) out of the window,
-    // version 4 moves gen1 out: each goes with the rebuild that does so,
-    // and the live generation serves identical results
-    val gen3 = LexicalIndex.rebuildBm25Index(spark, dir, docs, nBuckets = 4)
-    assert(!new java.io.File(dir, "postings").exists(), "plain layout kept at version 3")
-    assert(new java.io.File(gen1).exists(), "gen1 reclaimed inside the window")
-    val gen4 = LexicalIndex.rebuildBm25Index(spark, dir, docs, nBuckets = 4)
-    assert(!new java.io.File(gen1).exists(), "gen1 kept below the window")
-    assert(Seq(gen2, gen3, gen4).forall(new java.io.File(_).exists()),
+    // version 4 moves the initial build out of the window, version 5
+    // moves gen2 out: each goes with the rebuild that does so, and the
+    // live generation serves identical results
+    val gen4 = LexicalIndex.writeBm25Index(docs, dir, nBuckets = 4)
+    assert(!new java.io.File(gen1).exists(), "the initial build kept at version 4")
+    assert(new java.io.File(gen2).exists(), "gen2 reclaimed inside the window")
+    val gen5 = LexicalIndex.writeBm25Index(docs, dir, nBuckets = 4)
+    assert(!new java.io.File(gen2).exists(), "gen2 kept below the window")
+    assert(Seq(gen3, gen4, gen5).forall(new java.io.File(_).exists()),
       "a generation inside the window deleted")
-    assert(graft.sources.Sources.resolveSnapshot(spark, dir) == gen4)
+    assert(graft.sources.Sources.resolveSnapshot(spark, dir) == gen5)
     assert(searchNow() == expected)
 
     // maintenance (incl. compaction trigger) still works after the prune

@@ -110,8 +110,8 @@ class LsmConcurrencySpec extends SparkSpec {
     // the fold publishes). Search must equal the rebuild either way.
     val docs = Seq((1L, "spark merge"), (2L, "vector search"),
       (3L, "merge vector spark")).toDF("doc_id", "text")
-    val dir = freshDir()
-    LexicalIndex.writeBm25Index(docs, dir, nBuckets = 4)
+    // the committed version dir: the tombstone log lives there
+    val dir = LexicalIndex.writeBm25Index(docs, freshDir(), nBuckets = 4)
     val changes = Seq((2L, "", "orphaned"),
       (3L, "spark only now", "updated"),
       (4L, "fresh vector doc", "new")).toDF("doc_id", "text", "_change")

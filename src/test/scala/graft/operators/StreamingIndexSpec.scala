@@ -42,9 +42,14 @@ class StreamingIndexSpec extends SparkSpec {
     (9L, "second new doc mentioning spark and merge")).toDF("doc_id", "text")
 
   private def stats(dir: String): (Long, Long) = {
-    val r = graft.sources.Sources.readSnapshot(spark, s"$dir/stats").first()
+    val r = graft.sources.Sources.readSnapshot(spark,
+      s"${graft.sources.Sources.resolveSnapshot(spark, dir)}/stats").first()
     (r.getLong(0), r.getLong(1))
   }
+
+  /** Tombstone segment stats of the version index root `index` resolves to. */
+  private def tombstoneSegs(index: String): (Int, Long) =
+    LsmTombstones.segmentStats(spark, graft.sources.Sources.resolveSnapshot(spark, index))
 
   private def search(dir: String): Seq[Seq[Any]] =
     LexicalIndex.searchBm25Index(spark, dir,
@@ -80,16 +85,16 @@ class StreamingIndexSpec extends SparkSpec {
 
     // the stream really ran multiple micro-batch applies: one
     // tombstone generation per non-empty micro-batch
-    val (segs, _) = LsmTombstones.segmentStats(spark, s"$root/index")
+    val (segs, _) = tombstoneSegs(s"$root/index")
     assert(segs == 3)
 
     // RESTART against the same checkpoint with no new files: the
     // committed batches must not reprocess (state bit-unchanged)
     val statsBefore = stats(s"$root/index")
-    val segsBefore = LsmTombstones.segmentStats(spark, s"$root/index")
+    val segsBefore = tombstoneSegs(s"$root/index")
     runStream()
     assert(stats(s"$root/index") == statsBefore)
-    assert(LsmTombstones.segmentStats(spark, s"$root/index") == segsBefore)
+    assert(tombstoneSegs(s"$root/index") == segsBefore)
     assert(search(s"$root/index") == oracle)
 
     // CRASH-REDELIVERY: a batch replayed after a crash-before-commit
@@ -214,8 +219,8 @@ class StreamingIndexSpec extends SparkSpec {
       // the sink is idle between micro-batches: retrain offline over
       // the post-batch-1 corpus with DIFFERENT quantizer medoids
       val post1 = vecs(baseIds ++ Seq(16L, 17L))
-      val gen = SimilaritySearch.retrainIvfPqIndex(spark, s"$root/index",
-        post1, coarseIds = Seq(8L, 9L, 10L, 11L),
+      val gen = SimilaritySearch.writeIvfPqIndex(post1, s"$root/index",
+        coarseIds = Seq(8L, 9L, 10L, 11L),
         pqIds = Seq(12L, 13L, 14L, 15L), m = 4)
       // batch 2 (a kill + an insert) arrives after the swap
       vecs(Seq(3L)).withColumn("_change", lit("orphaned"))

@@ -43,10 +43,10 @@ class ChecksumSidecarSpec extends SparkSpec {
     assert(Sources.compactMergePartitioned(spark, s"$root/merge", "p") == 2)
     Sources.publishMergePartitioned(spark, s"$root/merge",
       Seq((9, "v9", 1)).toDF("k", "v", "p"), cfg, "p")
-    // index rebuilds past version 3, where the prune also takes the
-    // plain layout's root-level dirs
+    // index builds past version 4, where the prune takes the initial
+    // build (version 1)
     for (_ <- 1 to 4)
-      graft.operators.IndexGenerations.rebuild(spark, s"$root/index")(v =>
+      graft.operators.IndexMaintenance.commitBuild(spark, s"$root/index")(v =>
         assert(new java.io.File(v).mkdirs())): Unit
     assert(orphanedChecksums(root).isEmpty, orphanedChecksums(root).mkString("\n"))
   }

@@ -56,21 +56,23 @@ class IndexBulkSpec extends DriverPathHarness {
     }.toMap
   }
 
-  /** A plain (pre-manifest) `p=<v>` layout whose `p=9` dir holds one
-    * zero-row parquet file: every `p=` dir is indexed, the empty one
-    * from a footer count of 0. */
-  private def mkPlainWithEmptyDir(tag: String): String = {
+  /** A committed table of three batch dirs whose last one's `p=9`
+    * partition holds one zero-row parquet file: every batch dir is
+    * indexed, the empty one from a footer count of 0. */
+  private def mkWithEmptyDir(tag: String): String = {
     val dir = Files.createTempDirectory(s"graft_idx_$tag").toString + "/t"
     val rows = (1L to 30L).map(i => (i, s"name-$i", (i * 7).toInt, (i % 2).toInt))
       .toDF("k", "name", "ki", "p")
-    rows.write.partitionBy("p").parquet(dir)
-    rows.drop("p").limit(0).coalesce(1).write.parquet(s"$dir/p=9")
+    Sources.publishMergeAppend(spark, dir, rows.filter(col("p") === 0), "p")
+    Sources.publishMergeAppend(spark, dir, rows.filter(col("p") === 1), "p")
+    Sources.publishMergeAppend(spark, dir, rows.limit(1).withColumn("p", col("p") * 0 + 9), "p")
+    // the last batch dir (numbered after commit 2) keeps its p=9
+    // segment, now holding zero rows
+    val empty = new java.io.File(dir).listFiles()
+      .filter(_.getName.startsWith("b-000000000003-")).head.toString + "/p=9"
+    rows.drop("p").limit(0).coalesce(1).write.mode("overwrite").parquet(empty)
     dir
   }
-
-  private def plainSidecars(dir: String, name: String): Seq[Array[Byte]] =
-    new java.io.File(dir).listFiles().filter(_.getName.startsWith("p=")).sortBy(_.getName)
-      .map(d => Files.readAllBytes(new java.io.File(d, name).toPath)).toSeq
 
   test("bulk bloom build is byte-identical to the serial build (long and string keys)") {
     // serial per-dir jobs, the one-job build and the driver build, over
@@ -96,14 +98,15 @@ class IndexBulkSpec extends DriverPathHarness {
       })
       // the serial build cannot size a zero-row dir (its aggregate
       // returns null): the one-job and driver builds must agree there
-      val (pb, pc) = (mkPlainWithEmptyDir(s"pblk_$keyCol"), mkPlainWithEmptyDir(s"pdrv_$keyCol"))
-      assert(Sources.indexBatchKeys(spark, pb, keyCol, 0.01, mayUseDriver = false) == 3)
-      val (plainBuilt, plainRep) = measured(Sources.indexBatchKeys(spark, pc, keyCol))
-      assert(plainBuilt == 3 && plainRep.jobs == 0, plainRep.jobSites.mkString("\n"))
-      val (sb, sc) = (plainSidecars(pb, s"_keybloom-$keyCol"), plainSidecars(pc, s"_keybloom-$keyCol"))
+      val (eb, ec) = (mkWithEmptyDir(s"eblk_$keyCol"), mkWithEmptyDir(s"edrv_$keyCol"))
+      assert(Sources.indexBatchKeys(spark, eb, keyCol, 0.01, mayUseDriver = false) == 3)
+      val (emptyBuilt, emptyRep) = measured(Sources.indexBatchKeys(spark, ec, keyCol))
+      assert(emptyBuilt == 3 && emptyRep.jobs == 0, emptyRep.jobSites.mkString("\n"))
+      val Seq(sb, sc) = Seq(eb, ec).map(t =>
+        sidecars(t, s"_keybloom-$keyCol").toSeq.sortBy(_._1).map(_._2))
       assert(sb.size == 3)
       sb.zip(sc).foreach { case (x, y) =>
-        assert(java.util.Arrays.equals(x, y), s"bloom bytes differ for keyCol=$keyCol (plain)")
+        assert(java.util.Arrays.equals(x, y), s"bloom bytes differ for keyCol=$keyCol (empty dir)")
       }
     }
   }

@@ -10,7 +10,11 @@ import graft.types.TableConfig
   * layout this engine does not know: every read, publish, compaction,
   * time-travel read, change feed and vacuum refuses it with an error
   * that names it, and the prune that runs after a commit deletes
-  * nothing rather than guess what such a manifest references. */
+  * nothing rather than guess what such a manifest references. A table
+  * is committed by its first write, so a root that holds plain
+  * `<col>=<val>` dirs but no claim (an earlier build's partitioned
+  * write) is refused the same way, as is an index whose postings or
+  * codes are laid out so. */
 class ManifestFormatSpec extends SparkSpec {
   import spark.implicits._
 
@@ -98,5 +102,82 @@ class ManifestFormatSpec extends SparkSpec {
         assert(Sources.readMergePartitioned(spark, dir, "p").count() == 7)
       }
     }
+  }
+
+  /** Refusals of a plain layout: `f` throws naming `root` and the
+    * planted `p=1`-style dir `seg`. */
+  private def refusedPlain(root: String, seg: String, what: String)(f: => Any): Unit = {
+    val e = intercept[IllegalStateException](f)
+    assert(e.getMessage.contains(root) && e.getMessage.contains(seg), s"$what: ${e.getMessage}")
+  }
+
+  /** Replaces merge table `table` by the plain `partitionCol=<val>`
+    * layout of its rows, with no claim: what an earlier build wrote. */
+  private def plainOver(table: String, partitionCol: String): Unit = {
+    val df = Sources.readMergePartitioned(spark, table, partitionCol)
+    val rows = spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(table))
+    rows.write.partitionBy(partitionCol).parquet(table)
+  }
+
+  test("a root of plain col=val dirs and no claim is refused by every read and write; an absent root takes a first publish") {
+    val dir = Files.createTempDirectory("graft_mfmt_plain").toString + "/t"
+    Seq((1L, "v1")).toDF("k", "v").write.parquet(s"$dir/p=1")
+    val before = names(dir)
+    val ck = Files.createTempDirectory("graft_mfmt_plain_ck").toString
+    def refused(what: String)(f: => Any): Unit = refusedPlain(dir, "p=1", what)(f)
+    val batch = Seq((9L, "x", 1)).toDF("k", "v", "p")
+    refused("merge")(Sources.publishMergePartitioned(spark, dir, batch, cfg, "p"))
+    refused("append")(Sources.publishMergeAppend(spark, dir, batch, "p"))
+    refused("delete")(
+      Sources.publishMergeDeletes(spark, dir, Seq((1L, 1)).toDF("k", "p"), cfg, "p"))
+    refused("replace")(Sources.publishMergeReplace(spark, dir, batch, "p", Seq(1)))
+    refused("compaction")(Sources.compactMergePartitioned(spark, dir, "p"))
+    refused("key index")(Sources.indexBatchKeys(spark, dir, "k"))
+    refused("read")(Sources.readMergePartitioned(spark, dir, "p"))
+    refused("keyed read")(Sources.readMergePartitionedKeyed(spark, dir, "p", "k", Seq(1L)))
+    refused("range read")(
+      Sources.readMergePartitionedRange(spark, dir, "p", "k", Some(1L), None))
+    refused("row feed")(Sources.mergeRowChangesSince(spark, dir, 1L, Seq("k"), "p"))
+    refused("consumer")(
+      Sources.processMergeRowChanges(spark, dir, ck, Seq("k"), "p")((d, _) => d.count()))
+    // the refused writes wrote nothing, and no consumer checkpoint
+    assert(names(dir) == before)
+    assert(names(ck).isEmpty)
+    // an absent root, and an empty one, each take a first publish
+    val empty = Files.createTempDirectory("graft_mfmt_empty").toString
+    for (root <- Seq(s"$dir-absent", empty)) {
+      Sources.publishMergePartitioned(spark, root, batch, cfg, "p")
+      assert(Sources.readMergePartitioned(spark, root, "p").count() == 1)
+    }
+  }
+
+  test("an index whose postings or codes are plain col=val dirs with no claim is refused by search and apply") {
+    import graft.operators.{LexicalIndex, SimilaritySearch}
+    val docs = (1L to 6L).map(i => (i, s"spark merge doc$i")).toDF("doc_id", "text")
+    val bm25 = Files.createTempDirectory("graft_mfmt_bm25").toString
+    val postings = s"${LexicalIndex.writeBm25Index(docs, bm25, nBuckets = 2)}/postings"
+    plainOver(postings, "_b")
+    val inPostings = names(postings)
+    val bm25Feed = Seq((2L, "", "orphaned")).toDF("doc_id", "text", "_change")
+    refusedPlain(postings, "_b=", "bm25 search")(
+      LexicalIndex.searchBm25Index(spark, bm25, Seq("spark"), k = 3))
+    refusedPlain(postings, "_b=", "bm25 apply")(
+      LexicalIndex.applyBm25IndexChanges(spark, bm25, bm25Feed))
+    assert(names(postings) == inPostings)
+
+    def vec(id: Long): Seq[Float] = Seq.tabulate(4)(i => ((id * 7 + i * 3) % 13).toFloat)
+    val corpus = (0L until 12L).map(id => (id, vec(id))).toDF("vec_id", "embedding")
+    val ivf = Files.createTempDirectory("graft_mfmt_ivfpq").toString
+    val codes = s"${SimilaritySearch.writeIvfPqIndex(corpus, ivf, 0L until 2L, 0L until 2L,
+      m = 2)}/codes"
+    plainOver(codes, "_list")
+    val inCodes = names(codes)
+    refusedPlain(codes, "_list=", "ivf-pq search")(
+      SimilaritySearch.searchIvfPqIndex(spark, ivf, corpus.filter($"vec_id" === 0L), k = 2))
+    refusedPlain(codes, "_list=", "ivf-pq apply")(SimilaritySearch.applyIvfPqIndexChanges(
+      spark, ivf, corpus.filter($"vec_id" === 3L).withColumn("_change",
+        org.apache.spark.sql.functions.lit("orphaned"))))
+    assert(names(codes) == inCodes)
   }
 }

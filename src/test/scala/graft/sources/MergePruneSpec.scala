@@ -285,33 +285,32 @@ class MergePruneSpec extends SparkSpec {
     assert(frameBulk == full, s"$frameBulk vs $full")
   }
 
-  test("bloom key index covers ADOPTED partition dirs: new-key lookups skip the base (r15)") {
+  test("bloom key index covers the seed batch dir: new-key lookups skip the base (r15)") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val dir = Files.createTempDirectory("graft_kidx_adopt").toString + "/t"
+    val dir = Files.createTempDirectory("graft_kidx_seed").toString + "/t"
     val cfg = graft.types.TableConfig("t", Seq("k"), Seq.empty)
-    // plain partitioned layout adopted in place — no b-* dirs at all;
-    // this is every maintained index's base table between build and
+    // the table's first publish: one seed batch dir holding every
+    // partition — every maintained index's base table between build and
     // first compaction, usually the dominant read
-    (0L until 60L).map(k => (k, (k % 4).toInt, s"a$k")).toDF("k", "p", "v")
-      .repartition(col("p")).write.partitionBy("p").parquet(dir)
-    assert(Sources.adoptMergePartitioned(spark, dir, "p"))
-    assert(Sources.indexBatchKeys(spark, dir, "k") == 4) // the 4 adopted p= dirs
+    Sources.publishMergePartitioned(spark, dir,
+      (0L until 60L).map(k => (k, (k % 4).toInt, s"a$k")).toDF("k", "p", "v"), cfg, "p")
+    assert(Sources.indexBatchKeys(spark, dir, "k") == 1) // the seed batch dir
     assert(Sources.indexBatchKeys(spark, dir, "k") == 0) // idempotent
-    // a key every adopted sidecar excludes: ZERO data dirs opened
+    // a key the seed's sidecar excludes: ZERO data dirs opened
     val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(dir),
       spark.sparkContext.hadoopConfiguration)
     def bloomOf(top: String) = {
       val in = fs.open(new org.apache.hadoop.fs.Path(dir, s"$top/_keybloom-k"))
       try org.apache.spark.util.sketch.BloomFilter.readFrom(in) finally in.close()
     }
-    val adoptedBlooms = (0 to 3).map(p => bloomOf(s"p=$p"))
-    val probe = (1000L until 2000L)
-      .find(k => adoptedBlooms.forall(!_.mightContainLong(k))).get
+    val Seq(seed) = new java.io.File(dir).list().filter(_.startsWith("b-")).toSeq
+    val seedBloom = bloomOf(seed)
+    val probe = (1000L until 2000L).find(k => !seedBloom.mightContainLong(k)).get
     val none = Sources.readMergePartitionedKeyed(spark, dir, "p", "k", Seq(probe))
     assert(none.count() == 0 && none.inputFiles.isEmpty)
-    // mixed adopted + batch: a later publish lands in a b-dir; a key
-    // only it holds reads ONLY it — the adopted base is dir-skipped
+    // seed + a later batch: a later publish lands in its own b-dir; a
+    // key only it holds reads ONLY it — the seed is dir-skipped
     Sources.publishMergePartitioned(spark, dir,
       Seq((probe, 9, "fresh")).toDF("k", "p", "v"), cfg, "p")
     assert(Sources.indexBatchKeys(spark, dir, "k") == 1) // just the new b-dir
@@ -320,8 +319,8 @@ class MergePruneSpec extends SparkSpec {
       == Seq((probe, "fresh")))
     val touched = hit.inputFiles.map(f =>
       f.split("/").dropWhile(_ != "t").drop(1).head).toSet
-    assert(touched.forall(_.startsWith("b-")), s"read adopted dirs: $touched")
-    // result-identical to scan-then-filter across both dir kinds
+    assert(touched.nonEmpty && !touched(seed), s"read the seed dir: $touched")
+    // result-identical to scan-then-filter across both batch dirs
     val keys: Seq[Any] = Seq(10L, probe, 999999L)
     val keyed = Sources.readMergePartitionedKeyed(spark, dir, "p", "k", keys)
       .select("k", "p", "v").orderBy("k").collect().toSeq

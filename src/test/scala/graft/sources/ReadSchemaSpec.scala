@@ -108,19 +108,6 @@ class ReadSchemaSpec extends SparkSpec {
     assert(b.columns.toSeq == Seq("k", "v", "extra", "p"))
   }
 
-  test("adopted col=val layout reads under its recorded schema, no job") {
-    val dir = fresh("adopted")
-    (1L to 12L).map(i => (i, s"v$i")).toDF("k", "v")
-      .withColumn("p", (col("k") % 3).cast("int"))
-      .write.partitionBy("p").parquet(dir)
-    // one publish: the live manifest mixes adopted p=0/p=2 with a b-* dir
-    Sources.publishMergePartitioned(spark, dir,
-      Seq((4L, "new")).toDF("k", "v").withColumn("p", lit(1)), cfg, "p")
-    val (all, jobs) = jobsToBuild(Sources.readMergePartitioned(spark, dir, "p"))
-    assert(jobs == 0)
-    assertSame(all, inferredMerge(dir))
-  }
-
   test("snapshot, snapshot group and version reads: no inference job, same frame") {
     val one = Seq((1, "a", Seq(1.5, 2.5), java.sql.Timestamp.valueOf("2024-01-02 03:04:05"),
         BigDecimal("12.34")), (2, null, Seq.empty[Double], null, null))
